@@ -16,7 +16,7 @@ Two implementations with IDENTICAL results:
     Spark engine should prefer for the batch/backfill path.
   * ``travel_time_stateful``: per-key ``applyInPandas`` carrying regression
     state across ordered rows -- the shape that generalizes to
-    ``transformWithStateInPandas`` in streaming (streaming/stateful.py).
+    ``applyInPandasWithState`` in streaming (streaming/stateful.py).
 
 Exactness: the regression sufficient statistics are accumulated as INTEGERS
 (distance floored to 1e-3 units, travel time in whole ms), so Sxx/Sxy are

@@ -13,8 +13,9 @@ S4              read_edge_list -- tab-separated (src, dst, weight)
                 (PageRankWithEdgeWeights.java:70-74).
 Testdata        load_table / load_tables over /root/testdata parquet.
 
-All loaders return DataFrames with explicit schemas -- no runtime inference,
-so plans are stable and parquet scans prune/push down.
+The file loaders (taxi CSV, mail records, edge lists) declare explicit
+schemas -- no runtime inference. ``load_table`` passes no schema: parquet
+carries its own, so every call lists the file and reads its footer.
 """
 
 from __future__ import annotations

@@ -115,69 +115,6 @@ def streaming_travel_time(rides: DataFrame) -> DataFrame:
     )
 
 
-def streaming_travel_time_tws(rides: DataFrame) -> DataFrame:
-    """Same operator on the Spark 4 ``transformWithStateInPandas`` API --
-    the closest structural analogue to the reference's
-    ``RichFlatMapFunction`` + ``ValueState`` (TravelTimePrediction.java:
-    120-164): a StatefulProcessor holding one ValueState per key. Requires
-    the RocksDB state store provider (set by tests/callers via
-    ``spark.sql.streaming.stateStore.providerClass``) AND the
-    ``google.protobuf`` package for the state-server protocol -- absent in
-    this container, so applyInPandasWithState is the exercised path and
-    this variant is covered by a protobuf-gated test."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TravelTimeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("model", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            if self._state.exists():
-                stored = self._state.get()
-                sxx, sxy = list(stored[0]), list(stored[1])
-            else:
-                sxx, sxy = [0] * N_BUCKETS, [0] * N_BUCKETS
-            out_ids: list[int] = []
-            out_preds: list[int] = []
-            chunks = list(rows)
-            pdf = (
-                pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-            )
-            if len(pdf):
-                pdf = pdf.sort_values(
-                    ["ev_ms", "ride_id", "is_start"], kind="mergesort"
-                )
-                for ride_id, is_start, bucket, x_m, y_ms in zip(
-                    pdf["ride_id"], pdf["is_start"], pdf["bucket"], pdf["x_m"], pdf["y_ms"]
-                ):
-                    b, x = int(bucket), int(x_m)
-                    if is_start:
-                        out_ids.append(int(ride_id))
-                        out_preds.append(_predict(sxx[b], sxy[b], x))
-                    else:
-                        sxx[b] += x * x
-                        sxy[b] += x * int(y_ms)
-            self._state.update((sxx, sxy))
-            yield pd.DataFrame({"ride_id": out_ids, "predicted_minutes": out_preds})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        _features(rides)
-        .groupBy("cell")
-        .transformWithStateInPandas(
-            TravelTimeProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming rolling z-score anomalies (keyed trailing-window ValueState)
 # ---------------------------------------------------------------------------

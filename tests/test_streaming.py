@@ -241,40 +241,6 @@ def test_streaming_exact_dedup(spark, sf_small):
     assert keys == batch_keys  # every key represented
 
 
-def test_transform_with_state_matches_batch(spark, sf_small):
-    """W5 on the Spark 4 transformWithStateInPandas API (ValueState per key
-    -- the closest analogue to the reference's keyed ValueState)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas needs google.protobuf (absent here)")
-    from flink_training_exercises_spark.streaming.stateful import (
-        streaming_travel_time_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        name = f"tw_{uuid.uuid4().hex[:8]}"
-        got = _drain(streaming_travel_time_tws(rides_stream(spark, sf_small)), name)
-        s = {(r["ride_id"], r["predicted_minutes"]) for r in got.collect()}
-        b = {
-            (r["ride_id"], r["predicted_minutes"])
-            for r in travel_time_window(rides_view(spark, sf_small)).collect()
-        }
-        assert s == b and len(s) > 100
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_streaming_distinct_users_matches_batch(spark, sf_small):
     """dedup->windowed-count stateful chain == batch COUNT(DISTINCT) cut at
     the final watermark."""
