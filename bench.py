@@ -26,7 +26,7 @@ analysis; set SPARK_GRAFT_RECORD=1 to update the committed
 BENCH_local.json record instead.
 
 Cache hygiene: persisted minhash signature tables and any per-query cache
-are dropped after each query (release_persisted_signatures + clearCache),
+are dropped after each query (dedup.release_persisted + clearCache),
 so no query's wall is inflated by memory pressure from an earlier one --
 the suspected cause of r2's 6.5x contamination_ngram_overlap outlier.
 Each query pays its own materialization cost; timings are independent of
@@ -47,48 +47,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from flink_training_exercises_spark.operators import dedup  # noqa: E402
 from flink_training_exercises_spark.plans.catalog import CATALOG  # noqa: E402
 from flink_training_exercises_spark.session import get_spark  # noqa: E402
-
-# PROPOSED headline basket v2 (VERDICT r3 #7) -- NOT active; ``value`` stays
-# the round-1 twelve for cross-round comparability. Rationale: the r1 basket
-# predates the scale-path ANN family, so its only ANN entry is
-# ann_topk_bruteforce -- the documented all-pairs oracle twin that VERDICT
-# r2/r3 rule "keep out of any future headline basket". v2 keeps the
-# reference-core seven + sessionize + the two TPC-H anchors + LSH dedup,
-# swaps the brute-force cartesian for the four gated ANN scale paths
-# (pandas block-matmul, sign-LSH, IVF, PQ), and adds the two composed
-# LLM-pipeline anchors (contamination, curation funnel) so the headline
-# tracks the 100 TB-relevant paths. Adopt only on a driver/judge re-base of
-# BASELINE; until then bench.py reports its total as
-# ``value_v2_proposed`` alongside the frozen ``value``.
-#
-# DECISION (round 5, VERDICT r4 #5): the driver/judge demonstrably keys
-# bench_vs_baseline on ``value`` vs the round-1 BASELINE of these same
-# twelve (r4 verdict: "29.928 s vs 38.97 s round-1 baseline -> 0.77x"),
-# so re-flagging would sever the only cross-round comparable series.
-# ``value`` therefore STAYS the frozen r1 twelve for the project's
-# lifetime unless the driver re-bases BASELINE itself;
-# ``value_v2_proposed`` remains the published sidecar tracking the
-# scale-path basket. bench=True flags unchanged.
-HEADLINE_V2_PROPOSAL = [
-    "ride_cleansing",
-    "popular_places",
-    "mail_count",
-    "reply_graph",
-    "mail_tfidf",
-    "pagerank_weighted",
-    "travel_time_prediction",
-    "sessionize_events",
-    "tpch_q1_pricing_summary",
-    "tpch_q5_local_supplier",
-    "dedup_minhash_lsh",
-    "ann_topk_bruteforce_pandas",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
-    "ann_topk_pq",
-    "contamination_ngram_overlap",
-    "curation_pipeline",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -123,8 +81,7 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
         if spec.bench:
             headline_total += timings[name]
-        dedup.release_persisted_signatures()
-        dedup.release_persisted_cluster_maps()
+        dedup.release_persisted()
         spark.catalog.clearCache()
         # drop Python refs to per-query localCheckpoint RDDs (CC/kcore/
         # sssp/bpe loops) promptly so the JVM ContextCleaner can unpersist
@@ -140,10 +97,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "total_all_queries_wall": round(sum(timings.values()), 3),
-        "value_v2_proposed": round(
-            sum(timings.get(n, 0.0) for n in HEADLINE_V2_PROPOSAL), 3
-        ),
-        "headline_v2_proposal": HEADLINE_V2_PROPOSAL,
     }
     short = {
         "metric": "headline_queries_total_wall",

@@ -128,8 +128,8 @@ def persisted_signatures(
     """MEMORY_AND_DISK-persisted (id, hs, s0..s{k-1}) signature table,
     memoized on the input plan -- repeated invocations in one session
     (oracle gate + bench + tests) REUSE one persisted copy instead of
-    stacking new ones (the round-1 leak). release_persisted_signatures()
-    drops them all. At cluster scale this is the standard 'materialize
+    stacking new ones (the round-1 leak). release_persisted() drops
+    them all. At cluster scale this is the standard 'materialize
     signatures once' table a 100 TB dedup writes before banding."""
     from pyspark.storagelevel import StorageLevel
 
@@ -138,12 +138,6 @@ def persisted_signatures(
     if key not in _SIG_PERSISTED:
         _SIG_PERSISTED[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
     return _SIG_PERSISTED[key]
-
-
-def release_persisted_signatures() -> None:
-    for df in _SIG_PERSISTED.values():
-        df.unpersist()
-    _SIG_PERSISTED.clear()
 
 
 _CLUSTER_PERSISTED: dict[int, DataFrame] = {}
@@ -156,8 +150,8 @@ def persisted_cluster_map(pairs: DataFrame) -> DataFrame:
     and embedding_dedup_clusters all consume the SAME closure, so one
     session computes MinHash/LSH + the CC loop once and every later
     consumer reads the persisted (id -> component) map instead of
-    re-running the whole subtree. release_persisted_cluster_maps() drops
-    them (bench.py / check_oracle.py call it between queries, keeping
+    re-running the whole subtree. release_persisted() drops them
+    (bench.py / check_oracle.py call it between queries, keeping
     per-query timings order-independent). At 100 TB this is the
     materialized cluster-assignment table a dedup pipeline writes once
     and joins everywhere downstream (survivor selection, audit trails,
@@ -173,10 +167,12 @@ def persisted_cluster_map(pairs: DataFrame) -> DataFrame:
     return _CLUSTER_PERSISTED[key]
 
 
-def release_persisted_cluster_maps() -> None:
-    for df in _CLUSTER_PERSISTED.values():
-        df.unpersist()
-    _CLUSTER_PERSISTED.clear()
+def release_persisted() -> None:
+    """Unpersist and forget every memoized signature table and cluster map."""
+    for memo in (_SIG_PERSISTED, _CLUSTER_PERSISTED):
+        for df in memo.values():
+            df.unpersist()
+        memo.clear()
 
 
 def signatures_from_hashes(hs_df: DataFrame, k: int = MINHASH_K) -> DataFrame:

@@ -879,9 +879,7 @@ def rfm_segments(
     corpus-sized), a cumulative window over that bounded frame (the
     length_batches offset precedent) with the 1-row count broadcast
     into it, and a broadcast join back. No corpus-sized window, no
-    per-user global rank, no corpus-wide scalar projection.
-
-    STAGED (gate-ready; registered when a gate-window slot opens)."""
+    per-user global rank, no corpus-wide scalar projection."""
     d_col = F.floor(epoch_ms(ts_col) / F.lit(RFM_DAY_MS)).cast("bigint")
     cents = F.coalesce(
         F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint"),

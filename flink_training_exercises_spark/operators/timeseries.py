@@ -1208,8 +1208,6 @@ def ks_two_sample_drift(
     The sup over the reals is attained at a sample point of either
     half, so maxing over the union of observed values is exact.
 
-    STAGED (gate-ready; registered when a gate-window slot opens).
-
     Determinism: cents = floor(value*100 + 0.5) exact BIGINT (repo
     fixed-point rule); the time midpoint is (min_ms + max_ms) DIV 2
     over one 1-row broadcast -- PRECONDITION epoch_ms >= 0 (post-1970,
@@ -1417,8 +1415,6 @@ def value_acf_lags(
     the gapfill operator is the regularization path if a filled series
     is wanted).
 
-    STAGED (gate-ready; registered when a gate-window slot opens).
-
     Determinism: hourly buckets are pure epoch-ms arithmetic
     (session-TZ independent); the series value is the exact per-bucket
     BIGINT cents sum re-origined per type by its window minimum (the
@@ -1595,8 +1591,6 @@ def mann_kendall_trend(
     (S - sign(S)) / sqrt(var_s_x18 / 18) -- NULL when var_s_x18 = 0
     (all daily values tied). Types need >= 2 distinct days to appear
     (no pairs otherwise -- the theil_sen_trend contract).
-
-    STAGED (gate-ready; registered when a gate-window slot opens).
 
     Determinism: daily sums are exact BIGINT cents (the theil_sen
     bucket frame); S and the variance are pure integer arithmetic, and

@@ -6,6 +6,9 @@ Contract (driver harness, __spark_entry__.py):
   * oracle: ANSI SQL over pre-registered DuckDB views (region nation customer
     supplier part orders lineitem events documents embeddings), or None for
     non-SQL-expressible operators (weaker rows-only check).
+  * queries() and oracle_sql() yield CATALOG in registration order: the
+    import order of the q_* family modules below, then each module's
+    @register order.
 
 Cross-engine determinism rules used throughout (see plans/rides.py and
 functions/hashing.py):
@@ -52,13 +55,13 @@ def register(name: str, oracle: str | None, doc: str = "", bench: bool = False):
 
 
 def queries() -> dict[str, SparkBuilder]:
-    return {name: spec.spark for name, spec in _ordered_catalog().items()}
+    return {name: spec.spark for name, spec in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
-        for name, spec in _ordered_catalog().items()
+        for name, spec in CATALOG.items()
         if spec.oracle is not None
     }
 
@@ -87,276 +90,3 @@ def entry_query(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> 
     sf0.001 smoke check returns rows."""
     r = rides_plan.rides_view(spark, sf_dir)
     return windows.popular_places(r, window="1 day", slide="6 hours", threshold=2)
-
-# ---------------------------------------------------------------------------
-# Gate ordering. The driver's correctness gate records only the FIRST 50
-# entries of queries() (CORRECTNESS_r02 proved it: registration positions
-# >= 50 -- all 11 round-2 TPC-H queries, the round-1 relational family and
-# both canaries -- got no gate row at all). queries() therefore yields the
-# catalog in an explicit priority order, independent of registration order:
-#
-#   1. never-driver-gated queries and everything changed/added this round
-#      (these NEED a fresh CORRECTNESS row);
-#   2. both canaries (CLAUDE.md: check canary results before relying on
-#      driver tolerance);
-#   3. the rest of the gated surface, round-robin; long-stable round-1 rows
-#      (gated green in r01 AND r02) cede their slots last.
-#
-# Rule for future rounds: any NEW or CHANGED query goes at the TOP of this
-# list; rotate previously-listed stable rows downward. bench.py is
-# order-independent (runs all non-canary queries; headline = bench flags).
-_GATE_PRIORITY = [
-    # ======================= ROUND-14 WINDOW (50) ======================
-    # tests/test_catalog.py::test_gate_priority_window_snapshot pins the
-    # EXACT window contents -- adding a query above the cutoff must go
-    # with a conscious ejection there, never a silent one.
-    # Window math (VERDICT r13 #1 / ADVICE r13 medium): the FIVE queries
-    # rewritten by the round-13 optimization session that never got a
-    # driver gate row (the optimizer froze the window at build close)
-    # ride as CHANGED rows -- output-identical rewrites, locally
-    # verified in r13 at sf0.01 + sf0.1 + double-hostile, now
-    # driver-attested. + 2 canaries + the 3 r9-evidence leftovers (the
-    # stalest rows in the catalog) + the first 40 rows of the
-    # r10-evidence block (label_propagation_communities regrouped up
-    # from that block as CHANGED). 5 + 2 + 3 + 40 = 50 exactly; the 5
-    # remaining r10 rows (streaming_sessionize..streaming_popular_places)
-    # lead the round-15 rotation.
-    # -- CHANGED in the round-13 optimization session (output-identical
-    #    rewrites: C5 pagerank join elimination, C4 LPA inline
-    #    early-exit, C3 CC-loop distinct drop, C9 minhash
-    #    aggregate-before-explode, C7 stateful per-key trim) --
-    "personalized_pagerank",
-    "label_propagation_communities",
-    "entity_resolution_clusters",
-    "streaming_windowed_minhash",
-    "streaming_travel_time_stateful",
-    # -- CHANGED in round 14 (output-identical plan cuts; each ejected
-    #    one fill tail row [dpp_partition_pruning,
-    #    streaming_incremental_rollup -- they lead the r15 rotation]):
-    #    BPE encode reuses the trainer's final vocabulary state instead
-    #    of re-exploding the corpus + replaying merges; fertility joins
-    #    per-doc counts LEFT onto its segment frame (OPTIMIZATION_r14 C2) --
-    "tokenizer_fertility",
-    "bpe_encode_corpus",
-    # -- CHANGED in round 14, second batch (OPTIMIZATION_r14 C3/C4;
-    #    output-identical: sssp stops re-checkpointing the growing
-    #    settled union [plan now unions the checkpointed frontier legs],
-    #    k_truss swaps the per-round anti-join convergence test for the
-    #    carried-count idiom [returned plan checkpoint-truncated,
-    #    unchanged]; ejecting fill tail rows histogram_merge_shards +
-    #    collocation_pmi_topk -- they join the r15 leaders) --
-    "sssp_event_graph",
-    "k_truss_edges",
-    # -- canaries: must always be inside the window --
-    "canary_timestamp_schema",
-    "canary_float_hash",
-    # -- the 3 r9-evidence leftovers (ejected by the r13 continuation
-    #    CHANGED block; stalest evidence in the catalog) --
-    "mail_tfidf",
-    "reply_graph",
-    "member_of_the_month",
-    # -- r10-evidence rotation: the first 40 rows of the r10 block --
-    "contrastive_negatives",
-    "curation_pipeline",
-    "triangle_count_edges",
-    "value_outliers_mad",
-    "dedup_lsh_recall",
-    "streaming_windowed_quantile",
-    "index_staleness_audit",
-    "skew_profile",
-    "quota_sample",
-    "temporal_reachability",
-    "source_scorecard",
-    "hll_intersection_estimate",
-    "random_walks",
-    "mail_count",
-    "popular_places",
-    "ride_cleansing",
-    "dedup_ngram_jaccard",
-    "text_quality_score",
-    "text_fingerprint",
-    "distinct_users_per_type",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier",
-    "ann_topk_lsh",
-    "text_lang_id",
-    "member_of_the_month_joinback",
-    "travel_time_prediction_stateful",
-    "ann_topk_bruteforce",
-    "neardup_embedding_cosine",
-    "dedup_sorted_neighborhood",
-    "dedup_prefix_filter_jaccard",
-    "session_concurrency_profile",
-    "streaming_windowed_topk",
-    "pii_kanonymity_profile",
-    "streaming_pit_enrichment",
-    "bm25_topk_retrieval",
-    "streaming_snapshot_diff",
-    # ===================== CUTOFF: 50 entries above =====================
-    # Everything below is OUTSIDE the round-14 window, stalest-first for
-    # the round-15 rotation.
-    # -- the 4 fill rows ejected by the r14 CHANGED blocks + the 5
-    #    remaining r10-evidence rows (FIRST in line for round 15) --
-    "collocation_pmi_topk",
-    "histogram_merge_shards",
-    "dpp_partition_pruning",
-    "streaming_incremental_rollup",
-    "streaming_sessionize",
-    "streaming_exact_dedup",
-    "streaming_interval_join",
-    "streaming_interval_join_outer",
-    "streaming_popular_places",
-    # -- the r11-evidence block (minus personalized_pagerank +
-    #    streaming_travel_time_stateful, moved up as CHANGED) --
-    "streaming_windowed_cms",
-    # (k_truss_edges moved up as r14 CHANGED)
-    "bloom_skipping_audit",
-    "clustering_coefficients",
-    "edge_jaccard_similarity",
-    "downsample_lttb",
-    "attribution_credit",
-    "streaming_distinct_users",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_priority",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q18_large_volume",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_excess_inventory",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales",
-    "range_join_downtime_events",
-    "set_ops_clean_purchase_days",
-    "scd2_user_history",
-    "user_inactive_days",
-    "pivot_user_activity",
-    "value_percentiles",
-    "corpus_bigram_counts",
-    "text_token_count",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "embedding_random_projection",
-    "bpe_pair_counts",
-    "contamination_ngram_overlap",
-    "domain_cap_documents",
-    "multimodal_frame_sample",
-    "hilbert_pruning_audit",
-    "streaming_windowed_hll",
-    "streaming_concurrency_profile",
-    "pii_tcloseness_audit",
-    "length_bucket_batches",
-    "asof_purchase_attribution",
-    "window_analytics",
-    "rollup_counts",
-    "multimodal_decode_meta",
-    "bpe_train_merges",
-    "embedding_quantize_int8",
-    # -- the r12-evidence block (minus streaming_windowed_minhash +
-    #    entity_resolution_clusters, moved up as CHANGED) --
-    "heaps_vocab_growth",
-    "join_cardinality_estimate",
-    "approx_topk_shard_union",
-    "degree_assortativity",
-    "user_behavior_gini",
-    "session_cooccurrence_lift",
-    "value_histogram",
-    "bloom_semijoin_orders",
-    "dq_audit_relational",
-    "dedup_repeated_ngrams",
-    "hll_distinct_users",
-    "countmin_token_freq",
-    "zorder_layout_documents",
-    "multimodal_resize",
-    "inverted_index_postings",
-    "doc_typicality_bigrams",
-    "frequent_tokens_topk",
-    "ann_topk_pq",
-    "ann_topk_ivf_pq",
-    "ann_recall_at_k",
-    "ann_topk_ivf",
-    "dedup_incremental_minhash",
-    "multimodal_feature_extract",
-    "ann_topk_bruteforce_pandas",
-    "neardup_embedding_cosine_lsh",
-    "text_repetition",
-    "pii_scrub_mails",
-    "sample_stratified_documents",
-    "pack_sequences_4k",
-    "mixture_expand_weighted",
-    "skew_salted_event_counts",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_items",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q17_small_quantity",
-    "streaming_windowed_histogram",
-    "record_linkage_scores",
-    "quantile_merge_shards",
-    "props_json_profile",
-    "weighted_sample",
-    "bloom_contamination_screen",
-    # -- the r13-evidence block (freshest, last in line: the 48
-    #    non-canary rows of the round-13 window, in window order) --
-    "benford_value_audit",
-    "chi_squared_independence",
-    "embedding_centroid_drift",
-    "feature_hashing_profile",
-    "vocab_drift_halves",
-    "streaming_windowed_bloom",
-    "rake_keywords",
-    "theil_sen_trend",
-    "value_trend_ols",
-    "cusum_level_shift",
-    "value_hour_correlation",
-    # (tokenizer_fertility + bpe_encode_corpus moved up as r14 CHANGED)
-    "streaming_scd2_maintenance",
-    "cdc_merge_user_state",
-    # (sssp_event_graph moved up as r14 CHANGED)
-    "vocab_oov_rate",
-    "timeseries_gapfill_hourly",
-    "dedup_editdistance_blocked",
-    "hll_merge_shards",
-    "scd2_point_in_time_join",
-    "cube_user_type_day",
-    "snapshot_diff_documents",
-    "skew_salted_join_events",
-    "session_path_topk",
-    "zonemap_pruning_audit",
-    "streaming_anomaly_zscore",
-    "event_transitions_markov",
-    "anomaly_rolling_zscore",
-    "gopher_quality_flags",
-    "segment_dedup_keepfirst",
-    "chunk_sliding_windows",
-    "split_leakage_neardup",
-    "funnel_user_stages",
-    "retention_cohorts",
-    "streaming_enrich_static",
-    "incremental_corpus_roundtrip",
-    "dedup_clusters_minhash",
-    "dedup_keep_best",
-    "embedding_dedup_clusters",
-    "kcore_interactions",
-    "streaming_cdc_merge",
-    "shuffle_shard_layout",
-    "sessionize_events",
-    "dedup_simhash",
-    "tpch_q1_pricing_summary",
-    "pagerank_weighted",
-    "travel_time_prediction",
-]
-
-
-
-
-def _ordered_catalog() -> dict[str, QuerySpec]:
-    """CATALOG in gate-priority order; unlisted names (future additions that
-    forgot the list) go FIRST so they can't silently miss the gate window."""
-    unlisted = [n for n in CATALOG if n not in _GATE_PRIORITY]
-    ordered = unlisted + [n for n in _GATE_PRIORITY if n in CATALOG]
-    return {n: CATALOG[n] for n in ordered}

@@ -1,7 +1,7 @@
 """Dedup family (exact/MinHash-LSH/SimHash/Jaccard/clusters) and embedding similarity search (brute force, LSH, IVF, PQ, recall gate).
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

@@ -1,7 +1,7 @@
 """Round-4/5 pipeline operators: CDC merge (batch+streaming), SSSP/label propagation, BPE train/encode, funnel/retention, incremental corpus round-trip.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

@@ -1,7 +1,7 @@
 """Reference-exercise queries (rides, popular places, mails, TF-IDF, PageRank, travel-time prediction).
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

@@ -1,7 +1,7 @@
 """Relational/temporal breadth (as-of, windows, range join, set ops, SCD2, rollup/pivot/percentiles) and corpus indexing (inverted index, BM25, typicality, heavy hitters).
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

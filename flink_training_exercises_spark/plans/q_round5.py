@@ -1,7 +1,7 @@
-"""Quality flags, segment dedup, chunking, Markov transitions, z-score anomalies, layout/skipping audits (zonemap, Hilbert, Bloom point-predicate), PIT joins, CUBE, snapshot diffs (batch+streaming), salted join, skew profile, and the value-series screens (OLS/CUSUM/Theil-Sen trends, LTOB downsampling).
+"""Quality flags, segment dedup, chunking, Markov transitions, z-score anomalies, layout/skipping audits (zonemap, Hilbert, Bloom point-predicate), PIT joins, CUBE, snapshot diffs (batch+streaming), salted join, skew profile, the value-series screens (OLS/CUSUM/Theil-Sen trends, LTOB downsampling), and the distribution, autocorrelation, Mann-Kendall and RFM screens.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 
@@ -624,3 +624,66 @@ def q_benford_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chi_squared_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     return timeseries.chi_squared_independence(ev)
+
+
+@register(
+    "ks_two_sample_drift",
+    oracle=timeseries.ks_two_sample_drift_sql(),
+    doc="Kolmogorov-Smirnov two-sample drift screen of the cents series "
+    "per type, first time-half vs second time-half: ks_num = max over "
+    "sample points of |n2*F1cum(v) - n1*F2cum(v)| is an exact BIGINT "
+    "(the statistic scaled by n1*n2), ks_ppm its ppm share and "
+    "ks_at_cents the smallest value attaining the max -- no floats. "
+    "100 TB: one 1-row min/max scan, then one hash aggregate to the "
+    "(type, distinct-cents) relation; ECDFs and the max are windows "
+    "over that bounded frame.",
+)
+def q_ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, "events", sf_dir)
+    return timeseries.ks_two_sample_drift(ev)
+
+
+@register(
+    "value_acf_lags",
+    oracle=timeseries.value_acf_lags_sql(),
+    doc="Autocorrelation screen per type: Pearson r of the hourly "
+    "cents-volume series with itself at lags 1..6 hours (Box-Jenkins "
+    "model-order diagnostic). Each lag's five sufficient statistics "
+    "are exact BIGINT sums over the present bucket pairs and r is one "
+    "closed form in correctly-rounded double (the value_hour_correlation "
+    "recipe); NULL when either side is constant. 100 TB: one "
+    "bucket-aggregate shuffle, then lag joins over the bucketed series.",
+)
+def q_value_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, "events", sf_dir)
+    return timeseries.value_acf_lags(ev)
+
+
+@register(
+    "mann_kendall_trend",
+    oracle=timeseries.mann_kendall_trend_sql(),
+    doc="Mann-Kendall monotone-trend test per type over the daily cents "
+    "series: s_stat (sum of pairwise signs) and the tie-corrected "
+    "var_s_x18 are exact BIGINTs; z_mk is the continuity-corrected "
+    "normal score over identical expression trees, NULL when every day "
+    "ties. 100 TB: the pairwise self-join is quadratic in distinct "
+    "days per type (span-bounded), after one bucket-aggregate shuffle.",
+)
+def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, "events", sf_dir)
+    return timeseries.mann_kendall_trend(ev)
+
+
+@register(
+    "rfm_segments",
+    oracle=sessions.rfm_segments_sql(),
+    doc="RFM (recency / frequency / monetary) quartile segmentation: "
+    "each user scored 0..3 on last-active day, event count and total "
+    "cents with value-collapsed quantiles, then counted per (r_q, f_q, "
+    "m_q) cell -- all exact BIGINTs. 100 TB: one hash aggregate to the "
+    "per-user frame, quantile maps over histograms bounded by distinct "
+    "metric values, broadcast joins back.",
+)
+def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, "events", sf_dir)
+    return sessions.rfm_segments(ev)

@@ -1,7 +1,7 @@
 """Sessionization (+ attribution, concurrency) and the watermarked streaming family (sessionize, exact dedup, interval joins, distinct users, windowed top-k/HLL/histogram/quantile/CMS/MinHash/Bloom, SCD2 maintenance).
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

@@ -1,7 +1,7 @@
 """Training-data shaping: stratified sampling, domain caps, length bucketing, sequence packing, mixtures, shard layout, salted aggregation.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

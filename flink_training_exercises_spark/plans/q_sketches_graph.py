@@ -1,7 +1,7 @@
 """Sketches (HLL + intersection, Count-Min, Bloom, z-order/zone maps), robust stats, graph breadth (k-core, k-truss, triangles, clustering coefficients, edge Jaccard, temporal reachability, random walks), canaries, and the curation funnel.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

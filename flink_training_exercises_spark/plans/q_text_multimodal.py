@@ -1,7 +1,7 @@
 """Text-analysis scalars (tokens/quality/lang/fingerprint/repetition), PII scrub, decontamination, and multimodal plumbing.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

@@ -1,7 +1,7 @@
 """TPC-H analytical suite (all 22 shapes) over the testdata relational tables.
 
 Registration module: imported by plans.catalog for its @register side
-effects; the shared QuerySpec registry, gate ordering and determinism
+effects; the shared QuerySpec registry, query order and determinism
 rules live in plans/catalog.py.
 """
 

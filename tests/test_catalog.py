@@ -7,7 +7,12 @@ import os
 import duckdb
 import pytest
 
-from flink_training_exercises_spark.plans.catalog import CATALOG, entry_query
+from flink_training_exercises_spark.plans.catalog import (
+    CATALOG,
+    entry_query,
+    oracle_sql,
+    queries,
+)
 from flink_training_exercises_spark.schemas import TESTDATA_TABLES
 
 
@@ -39,93 +44,16 @@ def test_oracle_is_valid_duckdb(duck, name):
     duck.execute(f"SELECT * FROM ({CATALOG[name].oracle}) LIMIT 5").fetchall()
 
 
-# The EXACT round-5 gate window, in order (ADVICE r3: snapshot the full
-# window so an insertion that silently ejects the tail fails loudly).
-# Changing _GATE_PRIORITY requires updating this list in the same commit --
-# that edit is the explicit record of which row was ejected and why.
-EXPECTED_GATE_WINDOW = [
-    # round-14 CHANGED (the five r13-optimization rewrites that missed
-    # the frozen r13 window -- VERDICT r13 #1: C5 pagerank join
-    # elimination, C4 LPA inline early-exit, C3 CC-loop distinct drop,
-    # C9 minhash aggregate-before-explode, C7 stateful per-key trim;
-    # all output-identical)
-    "personalized_pagerank",
-    "label_propagation_communities",
-    "entity_resolution_clusters",
-    "streaming_windowed_minhash",
-    "streaming_travel_time_stateful",
-    # round-14 CHANGED (BPE encode reuses the trainer's final vocab
-    # state; fertility left-joins per-doc counts onto its segment frame
-    # -- OPTIMIZATION_r14 C2; output-identical, ejecting the 2 fill
-    # tail rows dpp_partition_pruning + streaming_incremental_rollup)
-    "tokenizer_fertility",
-    "bpe_encode_corpus",
-    # round-14 CHANGED, second batch (OPTIMIZATION_r14 C3/C4: sssp's
-    # settled union un-checkpointed, k_truss's anti-join convergence
-    # test -> carried count; output-identical, ejecting fill tail rows
-    # histogram_merge_shards + collocation_pmi_topk)
-    "sssp_event_graph",
-    "k_truss_edges",
-    # canaries
-    "canary_timestamp_schema",
-    "canary_float_hash",
-    # the 3 r9-evidence leftovers
-    "mail_tfidf",
-    "reply_graph",
-    "member_of_the_month",
-    # r10-evidence rotation (first 40 of the r10 block;
-    # label_propagation_communities regrouped up as CHANGED)
-    "contrastive_negatives",
-    "curation_pipeline",
-    "triangle_count_edges",
-    "value_outliers_mad",
-    "dedup_lsh_recall",
-    "streaming_windowed_quantile",
-    "index_staleness_audit",
-    "skew_profile",
-    "quota_sample",
-    "temporal_reachability",
-    "source_scorecard",
-    "hll_intersection_estimate",
-    "random_walks",
-    "mail_count",
-    "popular_places",
-    "ride_cleansing",
-    "dedup_ngram_jaccard",
-    "text_quality_score",
-    "text_fingerprint",
-    "distinct_users_per_type",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier",
-    "ann_topk_lsh",
-    "text_lang_id",
-    "member_of_the_month_joinback",
-    "travel_time_prediction_stateful",
-    "ann_topk_bruteforce",
-    "neardup_embedding_cosine",
-    "dedup_sorted_neighborhood",
-    "dedup_prefix_filter_jaccard",
-    "session_concurrency_profile",
-    "streaming_windowed_topk",
-    "pii_kanonymity_profile",
-    "streaming_pit_enrichment",
-    "bm25_topk_retrieval",
-    "streaming_snapshot_diff",
-]
-# (mail_tfidf, reply_graph, member_of_the_month -- ejected by the
-# continuation CHANGED block; they lead the round-14 rotation)
+def test_queries_follow_registration_order():
+    assert list(queries()) == list(CATALOG)
+    assert list(oracle_sql()) == [
+        n for n in CATALOG if CATALOG[n].oracle is not None
+    ]
 
 
-
-
-def test_headline_v2_proposal_names_resolve():
-    """The proposed v2 headline basket (bench.py, VERDICT r3 #7) must name
-    real catalog queries and must NOT change the active basket: the
-    bench=True flags stay the round-1 twelve."""
-    import bench
-
-    missing = [n for n in bench.HEADLINE_V2_PROPOSAL if n not in CATALOG]
-    assert not missing, missing
+def test_bench_headline_is_round1_twelve():
+    """bench.py's headline basket is the bench=True flags: the round-1
+    twelve."""
     active = sorted(n for n in CATALOG if CATALOG[n].bench)
     assert active == sorted(
         [
@@ -145,29 +73,6 @@ def test_headline_v2_proposal_names_resolve():
     )
 
 
-def test_gate_priority_list_is_consistent():
-    """_GATE_PRIORITY drives the driver's 50-entry correctness window: every
-    listed name must exist, no duplicates, every registered query must be
-    listed (unlisted names sort FIRST by design, but that's a safety net for
-    forgotten additions, not a steady state), and the window must match the
-    EXPECTED_GATE_WINDOW snapshot exactly -- including order."""
-    from flink_training_exercises_spark.plans.catalog import _GATE_PRIORITY, queries
-
-    unknown = [n for n in _GATE_PRIORITY if n not in CATALOG]
-    assert not unknown, f"priority list names not in CATALOG: {unknown}"
-    dupes = {n for n in _GATE_PRIORITY if _GATE_PRIORITY.count(n) > 1}
-    assert not dupes, f"duplicate priority entries: {dupes}"
-    unlisted = [n for n in CATALOG if n not in _GATE_PRIORITY]
-    assert not unlisted, f"queries missing from _GATE_PRIORITY: {unlisted}"
-    assert len(EXPECTED_GATE_WINDOW) == 50
-    window = list(queries())[:50]
-    assert window == EXPECTED_GATE_WINDOW, (
-        "gate window drifted from snapshot; "
-        f"ejected={sorted(set(EXPECTED_GATE_WINDOW) - set(window))} "
-        f"entered={sorted(set(window) - set(EXPECTED_GATE_WINDOW))}"
-    )
-
-
 def test_no_stacked_registrations():
     """Two catalog names bound to the same builder function = a @register
     block inserted between another entry's decorator and its def (the
@@ -177,33 +82,3 @@ def test_no_stacked_registrations():
     fns = [spec.spark for spec in CATALOG.values()]
     dupes = {f.__name__ for f in fns if fns.count(f) > 1}
     assert not dupes, f"stacked @register decorators on: {dupes}"
-
-
-def test_evidence_ages_tool_runs_clean():
-    """tools/evidence_ages.py: every query's LATEST driver row must be
-    green (exit 0), and its never-gated set must be exactly the catalog
-    entries the driver has not yet seen (i.e. the current round's new
-    queries, all inside the gate window so they get their first row)."""
-    import subprocess
-    import sys
-
-    from flink_training_exercises_spark.plans.catalog import queries
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    res = subprocess.run(
-        [sys.executable, os.path.join(repo_root, "tools", "evidence_ages.py")],
-        capture_output=True,
-        text=True,
-        cwd=repo_root,
-    )
-    assert res.returncode == 0, res.stdout + res.stderr
-    never = {
-        line.split()[1]
-        for line in res.stdout.splitlines()
-        if line.strip().startswith("never")
-    }
-    window = set(list(queries())[:50])
-    assert never <= window, (
-        f"never-gated queries outside the gate window (would stay "
-        f"evidence-less after this round): {sorted(never - window)}"
-    )

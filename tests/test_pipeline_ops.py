@@ -9,8 +9,10 @@ from flink_training_exercises_spark.operators import (
     indexing,
     multimodal,
     pii,
+    sessions,
     similarity,
     textstats,
+    timeseries,
 )
 
 DOCS = [
@@ -70,12 +72,12 @@ def test_simhash_near_duplicate(spark):
 def test_persisted_signatures_memoized_and_releasable(spark, docs):
     """Repeated invocations reuse ONE persisted signature table (no storage
     stacking across oracle gate + bench + tests) and release drops it."""
-    dedup.release_persisted_signatures()
+    dedup.release_persisted()
     a = dedup.persisted_signatures(docs, "doc_id", "text")
     b = dedup.persisted_signatures(docs, "doc_id", "text")
     assert a is b
     assert len(dedup._SIG_PERSISTED) == 1
-    dedup.release_persisted_signatures()
+    dedup.release_persisted()
     assert len(dedup._SIG_PERSISTED) == 0
 
 
@@ -411,7 +413,7 @@ def test_incremental_minhash_matches_directionality(spark):
     for r in out:
         assert r["new_id"] in new_ids and r["corpus_id"] in corpus_ids
         assert 0.0 < r["jaccard"] <= 1.0
-    dedup.release_persisted_signatures()
+    dedup.release_persisted()
 
 
 def test_random_projection_shape_and_linearity(spark):
@@ -549,7 +551,7 @@ def test_lsh_recall_audit_matches_banding_curve(spark):
     assert row["n_exact"] > 0
     assert row["n_hits"] == row["n_lsh"]  # verified pairs are never false
     assert 0 <= row["n_hits"] / row["n_exact"] <= 0.2
-    dedup.release_persisted_signatures()
+    dedup.release_persisted()
 
 
 # ---------------------------------------------------------------------------
@@ -774,7 +776,7 @@ def test_dedup_keep_best_invariants(spark, sf_small):
     try:
         rows = CATALOG["dedup_keep_best"].spark(spark, sf_small).collect()
     finally:
-        dedup.release_persisted_signatures()
+        dedup.release_persisted()
     assert rows
     by_cluster = {}
     for r in rows:
@@ -3127,26 +3129,6 @@ def test_ks_two_sample_drift_contracts(spark, sf_small):
     assert ks_two_sample_drift(single.where("event_id = 0")).count() == 0
 
 
-def test_ks_two_sample_drift_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        ks_two_sample_drift,
-        ks_two_sample_drift_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, ks_two_sample_drift(load_table(spark, "events", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(ks_two_sample_drift_sql()).fetchall())
-    assert got == want and got
-
-
 def test_value_acf_lags_hand_computed(spark):
     """Perfectly linear hourly series 100,200,300,400 cents: every lag
     with >= 2 pairs correlates exactly 1.0 (the closed form divides
@@ -3211,27 +3193,6 @@ def test_value_acf_lags_contracts(spark, sf_small):
     )
     out = {r["lag"]: r["n_pairs"] for r in value_acf_lags(df).collect()}
     assert out == {1: 1, 2: 1, 3: 1}
-
-
-def test_value_acf_lags_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        value_acf_lags,
-        value_acf_lags_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, value_acf_lags(load_table(spark, "events", sf_small)).collect()),
-        key=repr,
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(value_acf_lags_sql()).fetchall(), key=repr)
-    assert got == want and got
 
 
 def test_mann_kendall_trend_hand_computed(spark):
@@ -3325,26 +3286,6 @@ def test_mann_kendall_trend_contracts(spark, sf_small):
     assert mann_kendall_trend(single).count() == 0
 
 
-def test_mann_kendall_trend_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        mann_kendall_trend,
-        mann_kendall_trend_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, mann_kendall_trend(load_table(spark, "events", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(mann_kendall_trend_sql()).fetchall())
-    assert got == want and got
-
-
 def test_rfm_segments_hand_computed(spark):
     """Four single-event users with distinct days and values: recency
     quantiles ascend with days-since-last (r_q = 0 is most recent),
@@ -3412,24 +3353,44 @@ def test_rfm_segments_contracts(spark, sf_small):
         assert 0 in seen and 3 in seen
 
 
-def test_rfm_segments_matches_duckdb_twin(spark, sf_small):
+_EVENTS_TWINS = [
+    (timeseries.ks_two_sample_drift, timeseries.ks_two_sample_drift_sql),
+    (timeseries.value_acf_lags, timeseries.value_acf_lags_sql),
+    (timeseries.mann_kendall_trend, timeseries.mann_kendall_trend_sql),
+    (sessions.rfm_segments, sessions.rfm_segments_sql),
+]
+
+
+@pytest.mark.parametrize(
+    "op, twin", _EVENTS_TWINS, ids=[op.__name__ for op, _ in _EVENTS_TWINS]
+)
+def test_events_op_matches_duckdb_twin(spark, sf_small, op, twin):
+    """Column names, pandas dtypes and sorted values against the DuckDB
+    twin: a tuple compare alone passes an int-vs-float skew (1 == 1.0).
+    A NULL cell reaches pandas as NaN, so NaN and None both read as
+    None on each side."""
     import duckdb
 
-    from flink_training_exercises_spark.operators.sessions import (
-        rfm_segments,
-        rfm_segments_sql,
-    )
     from flink_training_exercises_spark.sources import load_table
 
-    got = sorted(
-        map(tuple, rfm_segments(load_table(spark, "events", sf_small)).collect())
-    )
+    sp = op(load_table(spark, "events", sf_small)).toPandas()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
     )
-    want = sorted(con.execute(rfm_segments_sql()).fetchall())
-    assert got == want and got
+    du = con.execute(twin()).df()
+    assert list(sp.columns) == list(du.columns)
+    assert [str(t) for t in sp.dtypes] == [str(t) for t in du.dtypes]
+
+    def rows(df):
+        return sorted(
+            (tuple(None if v != v else v for v in t)
+             for t in df.itertuples(index=False)),
+            key=repr,
+        )
+
+    got = rows(sp)
+    assert got == rows(du) and got
 
 
 def test_trend_family_null_value_invariance(spark):

@@ -20,10 +20,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flink_training_exercises_spark.operators.dedup import (  # noqa: E402
-    release_persisted_cluster_maps,
-    release_persisted_signatures,
-)
+from flink_training_exercises_spark.operators.dedup import release_persisted  # noqa: E402
 from flink_training_exercises_spark.plans.catalog import CATALOG, entry_query  # noqa: E402
 from flink_training_exercises_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from flink_training_exercises_spark.session import get_spark  # noqa: E402
@@ -149,8 +146,7 @@ def main() -> int:
         # (CC/kcore/SSSP/BPE loops) so the ContextCleaner unpersists them
         # instead of letting executor pressure slow later queries
         sdf = odf = None
-        release_persisted_signatures()
-        release_persisted_cluster_maps()
+        release_persisted()
         spark.catalog.clearCache()
         gc.collect()
     print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")

@@ -57,8 +57,7 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"wrote {path}")
-            dedup.release_persisted_signatures()
-            dedup.release_persisted_cluster_maps()
+            dedup.release_persisted()
             spark.catalog.clearCache()
         return
 
@@ -78,8 +77,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             walls.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-            dedup.release_persisted_signatures()
-            dedup.release_persisted_cluster_maps()
+            dedup.release_persisted()
             spark.catalog.clearCache()
             df = None
             gc.collect()
