@@ -33,5 +33,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twins for every SQL-expressible query in ``queries()``."""
+    """The DuckDB twin of every query in ``queries()``."""
     return catalog.oracle_sql()

@@ -26,7 +26,7 @@ analysis; set SPARK_GRAFT_RECORD=1 to update the committed
 BENCH_local.json record instead.
 
 Cache hygiene: persisted minhash signature tables and any per-query cache
-are dropped after each query (dedup.release_persisted + clearCache),
+are dropped after each query (catalog.release_query_state),
 so no query's wall is inflated by memory pressure from an earlier one --
 the suspected cause of r2's 6.5x contamination_ngram_overlap outlier.
 Each query pays its own materialization cost; timings are independent of
@@ -35,7 +35,6 @@ catalog order.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
@@ -44,9 +43,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from flink_training_exercises_spark.operators import dedup  # noqa: E402
-from flink_training_exercises_spark.plans.catalog import CATALOG  # noqa: E402
-from flink_training_exercises_spark.session import get_spark  # noqa: E402
+from flink_training_exercises_spark.plans.catalog import (  # noqa: E402
+    CATALOG,
+    release_query_state,
+)
+from flink_training_exercises_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -81,14 +82,8 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
         if spec.bench:
             headline_total += timings[name]
-        dedup.release_persisted()
-        spark.catalog.clearCache()
-        # drop Python refs to per-query localCheckpoint RDDs (CC/kcore/
-        # sssp/bpe loops) promptly so the JVM ContextCleaner can unpersist
-        # them between queries instead of letting executor memory pressure
-        # bleed into later timings
         df = None
-        gc.collect()
+        release_query_state(spark)
 
     full = {
         "metric": "headline_queries_total_wall",
@@ -131,13 +126,12 @@ def main() -> None:
     names = list(timings)
     chunk = 40
     n_parts = (len(names) + chunk - 1) // chunk
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     for i in range(n_parts):
         part = {
             "per_query_part": i + 1,
             "n_parts": n_parts,
             "sf": sf,
-            "cpus": cpus,
+            "cpus": DEFAULT_CPUS,
             "queries": {n: timings[n] for n in names[i * chunk : (i + 1) * chunk]},
         }
         print(json.dumps(part))

@@ -4,8 +4,8 @@
 Contract (driver harness, __spark_entry__.py):
   * spark builder: (spark, sf_dir) -> DataFrame
   * oracle: ANSI SQL over pre-registered DuckDB views (region nation customer
-    supplier part orders lineitem events documents embeddings), or None for
-    non-SQL-expressible operators (weaker rows-only check).
+    supplier part orders lineitem events documents embeddings); every
+    query has one, and plans/differential.compare defines "equal".
   * queries() and oracle_sql() yield CATALOG in registration order: the
     import order of the q_* family modules below, then each module's
     @register order.
@@ -23,12 +23,13 @@ functions/hashing.py):
 
 from __future__ import annotations
 
+import gc
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import windows
+from ..operators import dedup, windows
 from . import rides as rides_plan
 
 SparkBuilder = Callable[[SparkSession, str], DataFrame]
@@ -38,7 +39,7 @@ SparkBuilder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     spark: SparkBuilder
-    oracle: str | None
+    oracle: str
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
 
@@ -46,7 +47,7 @@ class QuerySpec:
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, doc: str = "", bench: bool = False):
+def register(name: str, oracle: str, doc: str = "", bench: bool = False):
     def deco(fn: SparkBuilder) -> SparkBuilder:
         CATALOG[name] = QuerySpec(name, fn, oracle, doc, bench)
         return fn
@@ -59,11 +60,18 @@ def queries() -> dict[str, SparkBuilder]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in CATALOG.items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in CATALOG.items()}
+
+
+def release_query_state(spark: SparkSession) -> None:
+    """Drop what one query left behind before the next one runs: dedup's
+    persisted memos, cached frames, and -- once the caller has dropped its
+    own references -- the localCheckpoint RDDs of the driver loops
+    (CC/kcore/SSSP/BPE), so the ContextCleaner unpersists them instead of
+    letting executor memory pressure slow later queries."""
+    dedup.release_persisted()
+    spark.catalog.clearCache()
+    gc.collect()
 
 
 # Family registration modules -- imported for their @register side effects.

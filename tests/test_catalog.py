@@ -1,10 +1,12 @@
-"""Catalog contract: every query runs at sf0.001 with a stable schema, and
-every oracle is valid DuckDB SQL over the same tables. (The full value-level
-differential runs via tools/check_oracle.py at sf0.01.)"""
+"""Catalog contract: every query equals its DuckDB oracle at sf0.001
+under plans/differential.compare -- row count, column names in order,
+dtypes and order-insensitive exact values -- and returns rows unless it is
+one of the queries measured empty on both sides at this scale. Each side
+runs once (conftest's CatalogRuns): test_query_runs and
+test_oracle_is_valid_duckdb check the Spark and the DuckDB side on their
+own, test_query_matches_oracle compares them. tools/check_oracle.py runs the same compare at sf0.01 and under hostile
+time zones and partition counts."""
 
-import os
-
-import duckdb
 import pytest
 
 from flink_training_exercises_spark.plans.catalog import (
@@ -13,17 +15,17 @@ from flink_training_exercises_spark.plans.catalog import (
     oracle_sql,
     queries,
 )
-from flink_training_exercises_spark.schemas import TESTDATA_TABLES
 
-
-@pytest.fixture(scope="module")
-def duck(sf_small):
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_small, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
+# Empty on both engines at sf0.001 (too few rows to pass their filters);
+# non-empty at sf0.01.
+EMPTY_AT_SF0001 = frozenset(
+    {
+        "tpch_q7_volume_shipping",
+        "tpch_q11_important_stock",
+        "tpch_q20_excess_inventory",
+        "tpch_q21_waiting_suppliers",
+    }
+)
 
 
 def test_entry_returns_rows(spark):
@@ -31,24 +33,27 @@ def test_entry_returns_rows(spark):
 
 
 @pytest.mark.parametrize("name", sorted(CATALOG))
-def test_query_runs(spark, sf_small, name):
-    df = CATALOG[name].spark(spark, sf_small)
-    assert df.columns, name
-    df.limit(5).collect()
+def test_query_runs(catalog_runs, name):
+    sdf = catalog_runs.query(name)
+    assert list(sdf.columns), name
+    assert (len(sdf) == 0) == (name in EMPTY_AT_SF0001)
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n in CATALOG if CATALOG[n].oracle is not None)
-)
-def test_oracle_is_valid_duckdb(duck, name):
-    duck.execute(f"SELECT * FROM ({CATALOG[name].oracle}) LIMIT 5").fetchall()
+@pytest.mark.parametrize("name", sorted(CATALOG))
+def test_oracle_is_valid_duckdb(catalog_runs, name):
+    odf = catalog_runs.oracle(name)
+    assert list(odf.columns), name
+    assert (len(odf) == 0) == (name in EMPTY_AT_SF0001)
+
+
+@pytest.mark.parametrize("name", sorted(CATALOG))
+def test_query_matches_oracle(catalog_runs, name):
+    assert catalog_runs.problems(name) == []
 
 
 def test_queries_follow_registration_order():
     assert list(queries()) == list(CATALOG)
-    assert list(oracle_sql()) == [
-        n for n in CATALOG if CATALOG[n].oracle is not None
-    ]
+    assert list(oracle_sql()) == list(CATALOG)
 
 
 def test_bench_headline_is_round1_twelve():

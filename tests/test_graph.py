@@ -302,34 +302,6 @@ def test_clustering_coefficients_hand_computed(spark):
     }
 
 
-def test_clustering_coefficients_match_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        clustering_coefficients,
-        clustering_coefficients_sql,
-    )
-    from flink_training_exercises_spark.plans import graphs as graphs_plan
-
-    got = sorted(
-        map(
-            tuple,
-            clustering_coefficients(
-                graphs_plan.edges_view(spark, sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    sql = clustering_coefficients_sql(
-        graphs_plan.EDGES_SQL.format(events="events")
-    )
-    want = sorted(con.execute(sql).fetchall())
-    assert got == want and got
-
-
 def test_personalized_pagerank_python_reference(spark):
     """The exact-integer PPR recurrence vs an independent python replay on
     a tiny weighted graph (seeds fixed by the same md5 predicate)."""
@@ -364,28 +336,15 @@ def test_personalized_pagerank_python_reference(spark):
     assert any(seed.values()) and not all(seed.values())  # both classes hit
 
 
-def test_personalized_pagerank_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
+def test_personalized_pagerank_matches_duckdb_twin(spark, sf_small, catalog_runs):
     from flink_training_exercises_spark.operators.graph import (
         personalized_pagerank,
     )
     from flink_training_exercises_spark.plans import graphs as graphs_plan
 
-    got = sorted(
-        map(
-            tuple,
-            personalized_pagerank(
-                graphs_plan.edges_view(spark, sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(graphs_plan.ppr_oracle()).fetchall())
-    assert got == want and got
+    assert catalog_runs.problems("personalized_pagerank") == []
+    got = personalized_pagerank(graphs_plan.edges_view(spark, sf_small)).collect()
+    assert got
     # the seed teleport concentrates mass: ranks are nonnegative and NOT
     # uniform (this graph is connected enough that nothing ranks exactly 0)
     ranks = [r for _, r in got]
@@ -425,33 +384,6 @@ def test_random_walks_python_reference(spark):
     assert got == want and any(s == "z" and t == 0 for s, t, _ in got)
 
 
-def test_random_walks_match_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        random_walks,
-        random_walks_sql,
-    )
-    from flink_training_exercises_spark.plans import graphs as graphs_plan
-
-    got = sorted(
-        map(
-            tuple,
-            random_walks(graphs_plan.edges_view(spark, sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(
-        con.execute(
-            random_walks_sql(graphs_plan.EDGES_SQL.format(events="events"))
-        ).fetchall()
-    )
-    assert got == want and got
-
-
 def test_degree_assortativity_hand_computed(spark):
     """a->b(1), a->c(2), b->c(1), c->b(3): out-strengths a=3,b=1,c=3;
     in-strengths b=4,c=3; edge pairs (3,4),(3,3),(1,3),(3,4) ->
@@ -487,29 +419,6 @@ def test_degree_assortativity_degenerate_is_null(spark):
     [r] = degree_assortativity(edges).collect()
     assert r["assortativity_r"] is None
 
-
-def test_degree_assortativity_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        degree_assortativity,
-        degree_assortativity_sql,
-    )
-    from flink_training_exercises_spark.plans import graphs as graphs_plan
-
-    got = sorted(
-        map(tuple, degree_assortativity(graphs_plan.edges_view(spark, sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(
-        con.execute(
-            degree_assortativity_sql(graphs_plan.EDGES_SQL.format(events="events"))
-        ).fetchall()
-    )
-    assert got == want and got
 
 def test_edge_jaccard_similarity_hand_computed(spark):
     from flink_training_exercises_spark.operators.graph import (
@@ -565,33 +474,6 @@ def test_edge_jaccard_similarity_contracts(spark, sf_small):
         assert 0 <= r["common_neighbors"] <= min(r["degree_a"], r["degree_b"]) - 1
         assert 0 <= r["jaccard_ppm"] <= 1000000
 
-
-def test_edge_jaccard_similarity_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        edge_jaccard_similarity,
-        edge_jaccard_similarity_sql,
-    )
-    from flink_training_exercises_spark.plans import graphs as graphs_plan
-
-    got = sorted(
-        map(
-            tuple,
-            edge_jaccard_similarity(
-                graphs_plan.edges_view(spark, sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    sql = edge_jaccard_similarity_sql(
-        graphs_plan.EDGES_SQL.format(events="events")
-    )
-    want = sorted(con.execute(sql).fetchall())
-    assert got == want and got
 
 def _md5mod(name, mod=10):
     import hashlib
@@ -662,25 +544,6 @@ def test_temporal_reachability_matches_python_replay(spark, sf_small):
     assert got == arr and got
 
 
-def test_temporal_reachability_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        temporal_reachability,
-    )
-    from flink_training_exercises_spark.plans import graphs as gp
-
-    got = sorted(
-        map(tuple, temporal_reachability(gp.timed_edges_view(spark, sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(gp.temporal_reachability_oracle()).fetchall())
-    assert got == want and got
-
-
 def test_k_truss_hand_computed(spark):
     """K4 + a pendant triangle: every K4 edge sits in 2 triangles, the
     pendant triangle's edges in 1. At k=4 (threshold 2) round one peels
@@ -697,29 +560,6 @@ def test_k_truss_hand_computed(spark):
     }
     assert got == {(a, b): 2 for a, b in k4}
     assert k_truss_edges(edges, k=5).count() == 0
-
-
-def test_k_truss_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.graph import (
-        k_truss_edges,
-        k_truss_sql,
-    )
-    from flink_training_exercises_spark.plans.graphs import (
-        truss_edges_sql,
-        truss_edges_view,
-    )
-
-    got = sorted(
-        map(tuple, k_truss_edges(truss_edges_view(spark, sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(k_truss_sql(truss_edges_sql())).fetchall())
-    assert got == want and got
 
 
 def test_k_truss_contracts(spark, sf_small):
@@ -741,3 +581,31 @@ def test_k_truss_contracts(spark, sf_small):
         for r in k_truss_edges(e, k=4, max_rounds=12).collect()
     }
     assert t4 == t4_long
+
+
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
+
+
+def test_clustering_coefficients_match_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("clustering_coefficients") == []
+
+
+def test_random_walks_match_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("random_walks") == []
+
+
+def test_degree_assortativity_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("degree_assortativity") == []
+
+
+def test_edge_jaccard_similarity_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("edge_jaccard_similarity") == []
+
+
+def test_temporal_reachability_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("temporal_reachability") == []
+
+
+def test_k_truss_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("k_truss_edges") == []

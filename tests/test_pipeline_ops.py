@@ -9,10 +9,8 @@ from flink_training_exercises_spark.operators import (
     indexing,
     multimodal,
     pii,
-    sessions,
     similarity,
     textstats,
-    timeseries,
 )
 
 DOCS = [
@@ -1478,27 +1476,6 @@ def test_sorted_neighborhood_window_reaches_past_one(spark):
     assert w2 == {(1, 2), (2, 3), (1, 3)}
 
 
-def test_sorted_neighborhood_matches_duckdb_twin(spark, sf_small):
-    # full differential on the real documents table -- the exact check the
-    # round-7 gate will run
-    import duckdb
-
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = {
-        tuple(r) for r in dedup.sorted_neighborhood_pairs(docs).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = set(
-        con.execute(dedup.sorted_neighborhood_pairs_sql()).fetchall()
-    )
-    assert got == want and got
-
-
 def test_prefix_filter_jaccard_hand_computed(spark):
     # word-3-gram sets of "a b c d e f": {abc, bcd, cde, def} (4 grams).
     # doc1 == doc2 (J=1); doc3 swaps the last word (inter 3 / union 5 ->
@@ -1586,25 +1563,6 @@ def test_prefix_filter_jaccard_superset_of_shard_scoped(spark, sf_small):
     assert confined and confined <= full
 
 
-def test_prefix_filter_jaccard_matches_duckdb_twin(spark, sf_small):
-    # full differential on the real documents table -- the exact check the
-    # round-7 gate will run
-    import duckdb
-
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = {
-        tuple(r) for r in dedup.prefix_filter_jaccard_pairs(docs).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = set(con.execute(dedup.prefix_filter_jaccard_sql()).fetchall())
-    assert got == want and got
-
-
 def test_kanonymity_profile_hand_computed(spark):
     from flink_training_exercises_spark.operators import pii
 
@@ -1632,22 +1590,6 @@ def test_kanonymity_profile_hand_computed(spark):
         ("en", "s", 0): (3, 2, 0),
         ("fr", "s", 1): (1, 1, 1),
     }
-
-
-def test_kanonymity_profile_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators import pii
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, pii.kanonymity_profile(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(pii.kanonymity_profile_sql()).fetchall())
-    assert got == want and got
 
 
 def test_t_closeness_audit_hand_computed(spark):
@@ -1691,22 +1633,6 @@ def test_t_closeness_audit_single_bin_degenerate(spark):
     )
     [r] = pii.t_closeness_audit(docs).collect()
     assert (r["emd_num"], r["emd_den"], r["t_risk"]) == (0, 0, 0)
-
-
-def test_t_closeness_audit_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators import pii
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, pii.t_closeness_audit(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(pii.t_closeness_audit_sql()).fetchall())
-    assert got == want and got
 
 
 def test_heaps_vocab_growth_hand_computed(spark):
@@ -1754,22 +1680,6 @@ def test_heaps_vocab_growth_conservation_and_id_zero(spark):
     assert len(out) == 10 and out[0]["docs_cum"] >= 1
     last = out[-1]
     assert (last["docs_cum"], last["tokens_cum"], last["vocab_cum"]) == (8, 16, 4)
-
-
-def test_heaps_vocab_growth_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators import textstats
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, textstats.heaps_vocab_growth(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(textstats.heaps_vocab_growth_sql()).fetchall())
-    assert got == want and got
 
 
 def test_downsample_lttb_hand_computed(spark):
@@ -1839,25 +1749,6 @@ def test_downsample_lttb_points_are_input_points(spark, sf_small):
     assert all(v == 7 for v in per_key.values()), per_key
 
 
-def test_downsample_lttb_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        downsample_lttb,
-        downsample_lttb_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, downsample_lttb(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(downsample_lttb_sql()).fetchall())
-    assert got == want and got
-
-
 def test_value_trend_ols_hand_computed(spark):
     from datetime import datetime
 
@@ -1893,26 +1784,6 @@ def test_value_trend_ols_hand_computed(spark):
     assert got2["a"]["intercept_cents"] == 100.0
 
 
-def test_value_trend_ols_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        value_trend_ols,
-        value_trend_ols_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, value_trend_ols(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(value_trend_ols_sql()).fetchall())
-    # bit-identical doubles expected (identical IEEE expression trees)
-    assert got == want and got
-
-
 def test_cusum_level_shift_hand_computed(spark):
     from datetime import datetime
 
@@ -1945,23 +1816,21 @@ def test_cusum_level_shift_hand_computed(spark):
     assert (r["peak_down_bucket_ms"], r["peak_down_scaled"]) == (base + 1 * h, 2400)
 
 
-def test_cusum_level_shift_matches_recurrence_and_duckdb(spark, sf_small):
+def test_cusum_level_shift_matches_recurrence_and_duckdb(spark, sf_small, catalog_runs):
     import duckdb
 
     from flink_training_exercises_spark.operators.timeseries import (
         cusum_level_shift,
-        cusum_level_shift_sql,
     )
     from flink_training_exercises_spark.sources import load_table
 
     ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, cusum_level_shift(ev).collect()))
+    got = list(map(tuple, cusum_level_shift(ev).collect()))
+    assert catalog_runs.problems("cusum_level_shift") == []
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
     )
-    want = sorted(con.execute(cusum_level_shift_sql()).fetchall())
-    assert got == want and got
     # literal-recurrence cross-check on one type: S_i = max(0, S_{i-1}+d_i)
     series = con.execute("""
         SELECT epoch_ms(ts) - epoch_ms(ts) % 3600000 AS b,
@@ -2016,22 +1885,6 @@ def test_contrastive_negatives_contract(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_contrastive_negatives_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators import sampling
-    from flink_training_exercises_spark.sources import load_table
-
-    emb = load_table(spark, "embeddings", sf_small)
-    got = sorted(map(tuple, sampling.contrastive_negatives(emb).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_small}/embeddings.parquet'"
-    )
-    want = sorted(con.execute(sampling.contrastive_negatives_sql()).fetchall())
-    assert got == want and got
-
-
 def test_source_scorecard_hand_computed(spark):
     from flink_training_exercises_spark.operators.textstats import (
         source_scorecard,
@@ -2057,25 +1910,6 @@ def test_source_scorecard_hand_computed(spark):
     assert s1["top_lang"] == "en" and s1["mean_chars_x100"] == 500
     s2 = got["s2"]
     assert (s2["n_docs"], s2["dup_ppm"], s2["top_lang"]) == (1, 0, "de")
-
-
-def test_source_scorecard_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.textstats import (
-        source_scorecard,
-        source_scorecard_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, source_scorecard(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(source_scorecard_sql()).fetchall())
-    assert got == want and got
 
 
 def test_theil_sen_hand_computed(spark):
@@ -2105,25 +1939,6 @@ def test_theil_sen_hand_computed(spark):
     b = got["b"]
     assert (b["n_days"], b["n_pairs"]) == (4, 6)
     assert b["slope_cents_per_day"] == (200.0 / 3.0 + 100.0) / 2.0
-
-
-def test_theil_sen_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        theil_sen_trend,
-        theil_sen_trend_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, theil_sen_trend(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(theil_sen_trend_sql()).fetchall())
-    assert got == want and got
 
 
 def test_record_linkage_scores_hand_computed(spark):
@@ -2178,25 +1993,6 @@ def test_record_linkage_scores_conservation(spark, sf_small):
     assert got == want and got
 
 
-def test_record_linkage_scores_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.dedup import (
-        record_linkage_scores,
-        record_linkage_scores_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, record_linkage_scores(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(record_linkage_scores_sql()).fetchall())
-    assert got == want and got
-
-
 def test_rake_keywords_hand_computed(spark):
     """'the quick fox the lazy dog', one statistical stopword ('the',
     the most frequent token): phrases 'quick fox' / 'lazy dog', every
@@ -2231,25 +2027,6 @@ def test_rake_keywords_rank_contract(spark, sf_small):
     assert [r for r, _ in rows] == list(range(1, len(rows) + 1)) and rows
     scores = [s for _, s in rows]
     assert scores == sorted(scores, reverse=True)
-
-
-def test_rake_keywords_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.textstats import (
-        rake_keywords,
-        rake_keywords_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, rake_keywords(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(rake_keywords_sql()).fetchall())
-    assert got == want and got
 
 
 def test_rake_keywords_all_stopword_doc_is_empty(spark):
@@ -2356,24 +2133,6 @@ def test_weighted_sample_weight_monotonicity_in_expectation(spark, sf_small):
     assert all(r["weight"] == wmap[r["doc_id"]] for r in out)
 
 
-def test_weighted_sample_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, weighted_sample(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(weighted_sample_sql()).fetchall())
-    assert got == want and got
-
 def _er_docs(spark):
     # one (en, web) block: d1/d2 full agreement (score 13, match),
     # d3 links to both at the possible level (4 - 2 + 3 = 5),
@@ -2455,30 +2214,6 @@ def test_entity_resolution_clusters_conservation(spark, sf_small):
     assert all(ent == mn for ent, mn in mins.items())
 
 
-def test_entity_resolution_clusters_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.dedup import (
-        entity_resolution_clusters,
-        entity_resolution_clusters_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            entity_resolution_clusters(
-                load_table(spark, "documents", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(entity_resolution_clusters_sql()).fetchall())
-    assert got == want and got
-
 def test_tokenizer_fertility_consistent_with_bpe_encode(spark, sf_small):
     """The segment profile is exactly the python fold of the gated
     bpe_encode per-doc counts over (lang, source)."""
@@ -2521,28 +2256,6 @@ def test_tokenizer_fertility_consistent_with_bpe_encode(spark, sf_small):
     }
     assert got == want and got
 
-
-def test_tokenizer_fertility_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.textstats import (
-        tokenizer_fertility,
-        tokenizer_fertility_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            tokenizer_fertility(load_table(spark, "documents", sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(tokenizer_fertility_sql()).fetchall())
-    assert got == want and got
 
 def test_feature_hashing_profile_python_replay(spark):
     """Buckets, signs, and counts replayed with hashlib on a tiny corpus."""
@@ -2593,30 +2306,6 @@ def test_feature_hashing_profile_conservation(spark, sf_small):
         assert 1 <= r["distinct_tokens"] <= r["total_count"]
 
 
-def test_feature_hashing_profile_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.textstats import (
-        feature_hashing_profile,
-        feature_hashing_profile_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            feature_hashing_profile(
-                load_table(spark, "documents", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(feature_hashing_profile_sql()).fetchall())
-    assert got == want and got
-
 def test_vocab_drift_halves_hand_computed(spark):
     from flink_training_exercises_spark.operators.textstats import (
         vocab_drift_halves,
@@ -2662,28 +2351,6 @@ def test_vocab_drift_halves_contracts(spark, sf_small):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_vocab_drift_halves_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.textstats import (
-        vocab_drift_halves,
-        vocab_drift_halves_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            vocab_drift_halves(load_table(spark, "documents", sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(vocab_drift_halves_sql()).fetchall())
-    assert got == want and got
-
 def test_bloom_contamination_screen_contracts(spark, sf_small):
     """The Bloom guarantee and the grade: candidates >= true (no false
     negatives -- every truly contaminated gram is flagged), and the
@@ -2717,30 +2384,6 @@ def test_bloom_contamination_screen_contracts(spark, sf_small):
     assert r["n_probe_keys"] == len(corpus)
     assert r["n_true"] == len(corpus & bench)
 
-
-def test_bloom_contamination_screen_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.contamination import (
-        bloom_contamination_screen,
-        bloom_contamination_screen_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            bloom_contamination_screen(
-                load_table(spark, "documents", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(bloom_contamination_screen_sql()).fetchall())
-    assert got == want and got
 
 def test_quota_sample_python_replay(spark):
     """Exactly min(k, stratum size) rows per stratum, picked by the md5
@@ -2804,26 +2447,6 @@ def test_quota_sample_quota_exactness(spark, sf_small):
         assert sorted(rks) == list(range(1, len(rks) + 1))
 
 
-def test_quota_sample_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sampling import (
-        quota_sample,
-        quota_sample_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, quota_sample(load_table(spark, "documents", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(quota_sample_sql()).fetchall())
-    assert got == want and got
-
-
 def test_bloom_skipping_audit_hand_and_contracts(spark):
     """STAGED-FOR-ROUND-10 point-predicate skipping audit: structural
     contracts on a tiny crafted frame -- no false negatives for EITHER
@@ -2855,29 +2478,6 @@ def test_bloom_skipping_audit_hand_and_contracts(spark):
         assert fp == bl - true >= 0
     # clustered layout places each key wholly inside ONE shard
     assert got["clustered"][1] == 5
-
-
-def test_bloom_skipping_audit_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.bloom import (
-        bloom_skipping_audit,
-        bloom_skipping_audit_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            bloom_skipping_audit(load_table(spark, "events", sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(bloom_skipping_audit_sql()).fetchall())
-    assert got == want and got
 
 
 def test_benford_value_audit_hand_computed(spark):
@@ -2937,26 +2537,6 @@ def test_benford_value_audit_contracts(spark, sf_small):
         by_type.setdefault(r["event_type"], []).append(r["obs_ppm"])
     for t, ppms in by_type.items():
         assert 1_000_000 - 8 <= sum(ppms) <= 1_000_000, t
-
-
-def test_benford_value_audit_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        benford_value_audit,
-        benford_value_audit_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, benford_value_audit(load_table(spark, "events", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(benford_value_audit_sql()).fetchall())
-    assert got == want and got
 
 
 def test_chi_squared_independence_hand_computed(spark):
@@ -3027,26 +2607,6 @@ def test_chi_squared_independence_contracts(spark, sf_small):
         ev.where(ev.event_type == "view")
     ).collect()
     assert one and all(r["chi2_contrib"] == 0.0 for r in one)
-
-
-def test_chi_squared_independence_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        chi_squared_independence,
-        chi_squared_independence_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(tuple, chi_squared_independence(load_table(spark, "events", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(chi_squared_independence_sql()).fetchall())
-    assert got == want and got
 
 
 def test_ks_two_sample_drift_hand_computed(spark):
@@ -3353,46 +2913,6 @@ def test_rfm_segments_contracts(spark, sf_small):
         assert 0 in seen and 3 in seen
 
 
-_EVENTS_TWINS = [
-    (timeseries.ks_two_sample_drift, timeseries.ks_two_sample_drift_sql),
-    (timeseries.value_acf_lags, timeseries.value_acf_lags_sql),
-    (timeseries.mann_kendall_trend, timeseries.mann_kendall_trend_sql),
-    (sessions.rfm_segments, sessions.rfm_segments_sql),
-]
-
-
-@pytest.mark.parametrize(
-    "op, twin", _EVENTS_TWINS, ids=[op.__name__ for op, _ in _EVENTS_TWINS]
-)
-def test_events_op_matches_duckdb_twin(spark, sf_small, op, twin):
-    """Column names, pandas dtypes and sorted values against the DuckDB
-    twin: a tuple compare alone passes an int-vs-float skew (1 == 1.0).
-    A NULL cell reaches pandas as NaN, so NaN and None both read as
-    None on each side."""
-    import duckdb
-
-    from flink_training_exercises_spark.sources import load_table
-
-    sp = op(load_table(spark, "events", sf_small)).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    du = con.execute(twin()).df()
-    assert list(sp.columns) == list(du.columns)
-    assert [str(t) for t in sp.dtypes] == [str(t) for t in du.dtypes]
-
-    def rows(df):
-        return sorted(
-            (tuple(None if v != v else v for v in t)
-             for t in df.itertuples(index=False)),
-            key=repr,
-        )
-
-    got = rows(sp)
-    assert got == rows(du) and got
-
-
 def test_trend_family_null_value_invariance(spark):
     """Structural NULL-value exclusion across the trend/correlation
     family: adding NULL-value rows -- including a day/hour bucket that
@@ -3511,3 +3031,103 @@ def test_trend_family_null_value_twins_agree_on_null_data(spark):
         want = sorted(con.execute(twin()).fetchall(), key=repr)
         assert got == want, op.__name__
         assert got, op.__name__  # type "a" must survive the NULL cuts
+
+
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
+
+
+def test_sorted_neighborhood_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("dedup_sorted_neighborhood") == []
+
+
+def test_prefix_filter_jaccard_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("dedup_prefix_filter_jaccard") == []
+
+
+def test_kanonymity_profile_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("pii_kanonymity_profile") == []
+
+
+def test_t_closeness_audit_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("pii_tcloseness_audit") == []
+
+
+def test_heaps_vocab_growth_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("heaps_vocab_growth") == []
+
+
+def test_downsample_lttb_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("downsample_lttb") == []
+
+
+def test_value_trend_ols_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("value_trend_ols") == []
+
+
+def test_contrastive_negatives_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("contrastive_negatives") == []
+
+
+def test_source_scorecard_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("source_scorecard") == []
+
+
+def test_theil_sen_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("theil_sen_trend") == []
+
+
+def test_record_linkage_scores_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("record_linkage_scores") == []
+
+
+def test_rake_keywords_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("rake_keywords") == []
+
+
+def test_weighted_sample_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("weighted_sample") == []
+
+
+def test_entity_resolution_clusters_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("entity_resolution_clusters") == []
+
+
+def test_tokenizer_fertility_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("tokenizer_fertility") == []
+
+
+def test_feature_hashing_profile_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("feature_hashing_profile") == []
+
+
+def test_vocab_drift_halves_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("vocab_drift_halves") == []
+
+
+def test_bloom_contamination_screen_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("bloom_contamination_screen") == []
+
+
+def test_quota_sample_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("quota_sample") == []
+
+
+def test_bloom_skipping_audit_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("bloom_skipping_audit") == []
+
+
+def test_benford_value_audit_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("benford_value_audit") == []
+
+
+def test_chi_squared_independence_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("chi_squared_independence") == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["ks_two_sample_drift", "value_acf_lags", "mann_kendall_trend", "rfm_segments"],
+)
+def test_events_op_matches_duckdb_twin(catalog_runs, name):
+    assert catalog_runs.problems(name) == []

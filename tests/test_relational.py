@@ -348,28 +348,6 @@ def test_props_json_profile_hand_computed(spark):
     }
 
 
-def test_props_json_profile_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.relational import (
-        props_json_profile,
-        props_json_profile_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            props_json_profile(load_table(spark, "events", sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(props_json_profile_sql()).fetchall())
-    assert got == want and got
-
 def test_props_json_profile_twin_numeric_format_parity():
     """The DuckDB twin must NULL non-integer-formatted JSON numbers the
     way Spark's try_cast does (DuckDB's bare TRY_CAST would parse 1.5 /
@@ -395,3 +373,11 @@ def test_props_json_profile_twin_numeric_format_parity():
     # the \A..\z anchors (RE2 $ would too, but Java $ would NOT -- the
     # anchors keep the two engines' admitted sets identical)
     assert rows == [("view", 10, 2, 3, -7, 10, 2)]
+
+
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
+
+
+def test_props_json_profile_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("props_json_profile") == []

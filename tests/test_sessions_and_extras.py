@@ -226,24 +226,6 @@ def test_concurrency_profile_conservation_and_bucket_invariance(spark, sf_small)
     assert base == tiny == huge
 
 
-def test_concurrency_profile_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sessions import (
-        concurrency_profile,
-        concurrency_profile_sql,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, concurrency_profile(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(map(tuple, con.execute(concurrency_profile_sql()).fetchall()))
-    assert got == want and got
-
-
 def test_attribution_credit_hand_computed(spark):
     """n=5 touch chain v,c,v,c,v before one purchase: first 400000, three
     middles 66666 each, last 400000 + remainder 2 -> view 866668 over 3
@@ -341,24 +323,6 @@ def test_attribution_credit_conservation(spark, sf_small):
     assert total == 1_000_000 * attributed and attributed > 0
 
 
-def test_attribution_credit_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sessions import (
-        attribution_credit,
-        attribution_credit_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, attribution_credit(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(attribution_credit_sql()).fetchall())
-    assert got == want and got
-
 def test_user_behavior_gini_hand_computed(spark):
     from flink_training_exercises_spark.operators.sessions import (
         user_behavior_gini,
@@ -401,28 +365,6 @@ def test_user_behavior_gini_bounds(spark, sf_small):
             assert r["gini_ppm"] == 0
         assert r["gini_ppm"] <= 1000000 * (r["n_types"] - 1) // r["n_types"]
 
-
-def test_user_behavior_gini_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sessions import (
-        user_behavior_gini,
-        user_behavior_gini_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    got = sorted(
-        map(
-            tuple,
-            user_behavior_gini(load_table(spark, "events", sf_small)).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(user_behavior_gini_sql()).fetchall())
-    assert got == want and got
 
 def test_session_cooccurrence_lift_hand_computed(spark):
     from datetime import datetime
@@ -476,26 +418,21 @@ def test_session_cooccurrence_lift_contracts(spark, sf_small):
         )
 
 
-def test_session_cooccurrence_lift_matches_duckdb_twin(spark, sf_small):
-    import duckdb
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
 
-    from flink_training_exercises_spark.operators.sessions import (
-        session_cooccurrence_lift,
-        session_cooccurrence_lift_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
 
-    got = sorted(
-        map(
-            tuple,
-            session_cooccurrence_lift(
-                load_table(spark, "events", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(session_cooccurrence_lift_sql()).fetchall())
-    assert got == want and got
+def test_concurrency_profile_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("session_concurrency_profile") == []
+
+
+def test_attribution_credit_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("attribution_credit") == []
+
+
+def test_user_behavior_gini_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("user_behavior_gini") == []
+
+
+def test_session_cooccurrence_lift_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("session_cooccurrence_lift") == []

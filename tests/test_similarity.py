@@ -65,26 +65,9 @@ def test_embedding_centroid_drift_single_label_is_zero(spark):
     assert r["l1_drift_micro"] == 0 and r["max_dim_drift_micro"] == 0
 
 
-def test_embedding_centroid_drift_matches_duckdb_twin(spark, sf_small):
-    import duckdb
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
 
-    from flink_training_exercises_spark.operators.similarity import (
-        embedding_centroid_drift,
-        embedding_centroid_drift_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
 
-    got = sorted(
-        map(
-            tuple,
-            embedding_centroid_drift(
-                load_table(spark, "embeddings", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_small}/embeddings.parquet'"
-    )
-    want = sorted(con.execute(embedding_centroid_drift_sql()).fetchall())
-    assert got == want and got
+def test_embedding_centroid_drift_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("embedding_centroid_drift") == []

@@ -1,9 +1,10 @@
 """Sketch family + z-order layout: hand-computed invariants.
 
-The cross-engine value parity is proven by the gate (tools/check_oracle.py);
-these tests pin the SEMANTICS against independently-computed expectations --
-a pure-Python HLL/CMS/Morton reimplementation over tiny inputs -- so an
-operator edit that keeps both engines in (wrong) agreement still fails.
+The cross-engine value parity is proven by test_catalog.py's oracle
+differential (and tools/check_oracle.py at sf0.01); these tests pin the
+SEMANTICS against independently-computed expectations -- a pure-Python
+HLL/CMS/Morton reimplementation over tiny inputs -- so an operator edit
+that keeps both engines in (wrong) agreement still fails.
 """
 
 import hashlib
@@ -291,33 +292,6 @@ def test_join_cardinality_estimate_properties(spark):
     assert row["n_est"] == min(dots.values())
 
 
-def test_join_cardinality_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sketches import (
-        join_cardinality_estimate,
-        join_cardinality_estimate_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    r = ev.where(F.col("event_type") == "view").groupBy("user_id").count()
-    s = ev.where(F.col("event_type") == "click").groupBy("user_id").count()
-    got = sorted(map(tuple, join_cardinality_estimate(r, s).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    sql = join_cardinality_estimate_sql(
-        "SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt FROM events "
-        "WHERE event_type = 'view' GROUP BY 1",
-        "SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt FROM events "
-        "WHERE event_type = 'click' GROUP BY 1",
-    )
-    want = sorted(con.execute(sql).fetchall())
-    assert got == want and got
-
-
 def test_approx_topk_shard_union_hand_computed(spark):
     """Single shard makes the local cut global: top-2 of {a:5, b:3, c:2}
     survives with exact counts; c is cut (est 0 -> filtered)."""
@@ -352,25 +326,6 @@ def test_approx_topk_shard_union_one_sided_and_saturating(spark, sf_small):
     assert rows and all(r["est_count"] <= r["exact_count"] for r in rows)
     sat = approx_topk_shard_union(docs, per_shard=100000).collect()
     assert sat and all(r["undercount"] == 0 for r in sat)
-
-
-def test_approx_topk_shard_union_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sketches import (
-        approx_topk_shard_union,
-        approx_topk_shard_union_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, approx_topk_shard_union(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(approx_topk_shard_union_sql()).fetchall())
-    assert got == want and got
 
 
 def _hilbert_xy2d_reference(n, x, y):
@@ -444,25 +399,6 @@ def test_hilbert_audit_layout_invariants(spark, sf_small):
         assert r["shards_scanned_box"] <= min(
             r["shards_scanned_len"], r["shards_scanned_cat"]
         )
-
-
-def test_hilbert_audit_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sketches import (
-        hilbert_pruning_audit,
-        hilbert_pruning_audit_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    got = sorted(map(tuple, hilbert_pruning_audit(docs).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(hilbert_pruning_audit_sql()).fetchall())
-    assert got == want and got
 
 
 def test_hilbert_index_consecutive_addresses_are_grid_neighbors():
@@ -557,25 +493,6 @@ def test_quantile_merge_shards_exactness_and_monotonicity(spark, sf_small):
     assert ests == sorted(ests) and exacts == sorted(exacts)
 
 
-def test_quantile_merge_shards_matches_duckdb_twin(spark, sf_small):
-    import duckdb
-
-    from flink_training_exercises_spark.operators.sketches import (
-        quantile_merge_shards,
-        quantile_merge_shards_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    got = sorted(map(tuple, quantile_merge_shards(ev).collect()))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(quantile_merge_shards_sql()).fetchall())
-    assert got == want and got
-
-
 def test_hilbert_index_production_bitwidth_matches_reference(spark):
     """Sampled check at the PRODUCTION bit width (16, the audit's
     config): 128 seeded-random grid points through the Spark chain and
@@ -666,26 +583,25 @@ def test_hll_intersection_estimate_degenerate_sets(spark):
     assert r["est_a"] == r["est_b"] == r["est_union"] == r["est_intersection"]
 
 
-def test_hll_intersection_estimate_matches_duckdb_twin(spark, sf_small):
-    import duckdb
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
 
-    from flink_training_exercises_spark.operators.sketches import (
-        hll_intersection_estimate,
-        hll_intersection_estimate_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
 
-    got = sorted(
-        map(
-            tuple,
-            hll_intersection_estimate(
-                load_table(spark, "documents", sf_small)
-            ).collect(),
-        )
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
-    )
-    want = sorted(con.execute(hll_intersection_estimate_sql()).fetchall())
-    assert got == want and got
+def test_join_cardinality_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("join_cardinality_estimate") == []
+
+
+def test_approx_topk_shard_union_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("approx_topk_shard_union") == []
+
+
+def test_hilbert_audit_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("hilbert_pruning_audit") == []
+
+
+def test_quantile_merge_shards_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("quantile_merge_shards") == []
+
+
+def test_hll_intersection_estimate_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("hll_intersection_estimate") == []

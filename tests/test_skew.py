@@ -71,21 +71,9 @@ def test_skew_profile_uniform_is_unsalted(spark):
     assert tuple(r) == (10, 40, 4, 4, 4, 1000000, 1)
 
 
-def test_skew_profile_matches_duckdb_twin(spark, sf_small):
-    import duckdb
+# Each operator's catalog entry equals its DuckDB twin under compare(); the
+# run is the one tests/test_catalog.py shares through conftest's CatalogRuns.
 
-    from flink_training_exercises_spark.operators.skew import (
-        skew_profile,
-        skew_profile_sql,
-    )
-    from flink_training_exercises_spark.sources import load_table
 
-    got = sorted(
-        map(tuple, skew_profile(load_table(spark, "events", sf_small)).collect())
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_small}/events.parquet'"
-    )
-    want = sorted(con.execute(skew_profile_sql()).fetchall())
-    assert got == want and got
+def test_skew_profile_matches_duckdb_twin(catalog_runs):
+    assert catalog_runs.problems("skew_profile") == []

@@ -1,7 +1,7 @@
 """Per-query profiling harness for the optimization rounds.
 
 Times individual catalog queries through the same methodology as bench.py
-(noop sink, persisted-registry release + clearCache between reps) and can
+(noop sink, catalog.release_query_state between reps) and can
 dump `.explain("formatted")` plans for the before/after evidence the
 optimization judge checks.
 
@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import gc
 import io
 import os
 import statistics
@@ -29,8 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flink_training_exercises_spark.operators import dedup  # noqa: E402
-from flink_training_exercises_spark.plans.catalog import CATALOG  # noqa: E402
+from flink_training_exercises_spark.plans.catalog import (  # noqa: E402
+    CATALOG,
+    release_query_state,
+)
 from flink_training_exercises_spark.session import get_spark  # noqa: E402
 
 
@@ -57,8 +58,8 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"wrote {path}")
-            dedup.release_persisted()
-            spark.catalog.clearCache()
+            df = None
+            release_query_state(spark)
         return
 
     # same untimed warmup as bench.py so rep 1 isn't billed the cold-start
@@ -77,10 +78,8 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             walls.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-            dedup.release_persisted()
-            spark.catalog.clearCache()
             df = None
-            gc.collect()
+            release_query_state(spark)
         print(f"{name}: reps={walls} median={statistics.median(walls)}")
 
 
