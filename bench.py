@@ -25,12 +25,12 @@ result is also written to BENCH_local_last.json (gitignored) for local
 analysis; set SPARK_GRAFT_RECORD=1 to update the committed
 BENCH_local.json record instead.
 
-Cache hygiene: persisted minhash signature tables and any per-query cache
-are dropped after each query (catalog.release_query_state),
+Cache hygiene: cached frames and the localCheckpoint blocks a query
+leaves behind are dropped after each query (catalog.release_query_state),
 so no query's wall is inflated by memory pressure from an earlier one --
 the suspected cause of r2's 6.5x contamination_ngram_overlap outlier.
-Each query pays its own materialization cost; timings are independent of
-catalog order.
+No operator memoizes across queries, so each query pays its own
+materialization cost and timings are independent of catalog order.
 """
 
 from __future__ import annotations

@@ -119,60 +119,20 @@ def shingle_hashes_df(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-_SIG_PERSISTED: dict[tuple, DataFrame] = {}
-
-
 def persisted_signatures(
     docs: DataFrame, id_col: str, text_col: str, k: int = MINHASH_K
 ) -> DataFrame:
-    """MEMORY_AND_DISK-persisted (id, hs, s0..s{k-1}) signature table,
-    memoized on the input plan -- repeated invocations in one session
-    (oracle gate + bench + tests) REUSE one persisted copy instead of
-    stacking new ones (the round-1 leak). release_persisted() drops
-    them all. At cluster scale this is the standard 'materialize
-    signatures once' table a 100 TB dedup writes before banding."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = signatures_from_hashes(shingle_hashes_df(docs, id_col, text_col), k)
-    key = (df.semanticHash(), id_col, text_col, k)
-    if key not in _SIG_PERSISTED:
-        _SIG_PERSISTED[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return _SIG_PERSISTED[key]
-
-
-_CLUSTER_PERSISTED: dict[int, DataFrame] = {}
-
-
-def persisted_cluster_map(pairs: DataFrame) -> DataFrame:
-    """MEMORY_AND_DISK-persisted (id, comp) connected-components closure of
-    a near-dup pair relation, memoized on the pair plan (same pattern as
-    :func:`persisted_signatures`). dedup_clusters_minhash, dedup_keep_best
-    and embedding_dedup_clusters all consume the SAME closure, so one
-    session computes MinHash/LSH + the CC loop once and every later
-    consumer reads the persisted (id -> component) map instead of
-    re-running the whole subtree. release_persisted() drops them
-    (bench.py / check_oracle.py call it between queries, keeping
-    per-query timings order-independent). At 100 TB this is the
-    materialized cluster-assignment table a dedup pipeline writes once
-    and joins everywhere downstream (survivor selection, audit trails,
-    shard layout)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from . import graph
-
-    key = pairs.semanticHash()
-    if key not in _CLUSTER_PERSISTED:
-        cc = graph.connected_components(pairs)
-        _CLUSTER_PERSISTED[key] = cc.persist(StorageLevel.MEMORY_AND_DISK)
-    return _CLUSTER_PERSISTED[key]
-
-
-def release_persisted() -> None:
-    """Unpersist and forget every memoized signature table and cluster map."""
-    for memo in (_SIG_PERSISTED, _CLUSTER_PERSISTED):
-        for df in memo.values():
-            df.unpersist()
-        memo.clear()
+    """(id, hs, s0..s{k-1}) signature table, materialized per call with an
+    eager localCheckpoint so banding and both verify probes read one copy
+    instead of re-hashing the corpus. Nothing is memoized: the copy lives
+    as long as the caller's frame (the ContextCleaner frees it once that
+    is dropped), matches no other plan, and is rebuilt from the current
+    input on every call. At cluster scale this is the standard
+    'materialize signatures once' table a 100 TB dedup writes before
+    banding."""
+    return signatures_from_hashes(
+        shingle_hashes_df(docs, id_col, text_col), k
+    ).localCheckpoint()
 
 
 def signatures_from_hashes(hs_df: DataFrame, k: int = MINHASH_K) -> DataFrame:
@@ -187,16 +147,6 @@ def signatures_from_hashes(hs_df: DataFrame, k: int = MINHASH_K) -> DataFrame:
         for i, (a, b) in enumerate(_MINHASH_PARAMS[:k])
     ]
     return hs_df.select("id", F.col("hs"), *sig_cols)
-
-
-def minhash_signature_df(
-    docs: DataFrame, id_col: str, text_col: str, k: int = MINHASH_K
-) -> DataFrame:
-    """(id, hs, s0..s{k-1}): shingle-hash array + k permuted min-hashes.
-
-    The md5 hash array is computed once (shingle_hashes_df) and the k
-    permutation passes share it instead of re-hashing k times."""
-    return signatures_from_hashes(shingle_hashes_df(docs, id_col, text_col), k)
 
 
 BAND_KEY_P = 2147483647  # 2^31-1: keeps the fold's products under 2^62
@@ -258,13 +208,12 @@ def minhash_lsh_pairs(
     pathological buckets (an all-identical-boilerplate flood) before this
     operator.
 
-    The signature table -- the one input every stage shares -- is persisted
-    once per distinct input (MEMORY_AND_DISK, memoized; see
-    persisted_signatures) so banding and both verify probes read it instead
-    of re-hashing the corpus; the verify joins broadcast the candidate-pair
-    set against it, so shingle arrays are never shuffled corpus-wide. At
-    cluster scale the persisted table is a one-time signature
-    materialization, the idiom a 100 TB dedup would use anyway.
+    The signature table -- the one input every stage shares -- is
+    materialized once per call (see persisted_signatures) so banding and
+    both verify probes read it instead of re-hashing the corpus; the verify
+    joins broadcast the candidate-pair set against it, so shingle arrays
+    are never shuffled corpus-wide. At cluster scale this is a one-time
+    signature materialization, the idiom a 100 TB dedup would use anyway.
     """
     r = k // bands
     sig_df = persisted_signatures(docs, id_col, text_col, k)
@@ -376,7 +325,7 @@ def incremental_minhash_matches(
     band key -- NO corpus shuffle, no all-pairs anything. Verification
     fetches only the matched candidates' shingle sets. Signature pipeline,
     band keys, and Jaccard verify are shared with minhash_lsh_pairs
-    (persisted once via persisted_signatures)."""
+    (materialized once per call via persisted_signatures)."""
     r = k // bands
     sig_df = persisted_signatures(docs, id_col, text_col, k)
     is_new = _md5_long_c(F.col("id").cast("string")) % 10000 < batch_bp

@@ -29,7 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import dedup, windows
+from ..operators import windows
 from . import rides as rides_plan
 
 SparkBuilder = Callable[[SparkSession, str], DataFrame]
@@ -64,12 +64,12 @@ def oracle_sql() -> dict[str, str]:
 
 
 def release_query_state(spark: SparkSession) -> None:
-    """Drop what one query left behind before the next one runs: dedup's
-    persisted memos, cached frames, and -- once the caller has dropped its
-    own references -- the localCheckpoint RDDs of the driver loops
-    (CC/kcore/SSSP/BPE), so the ContextCleaner unpersists them instead of
-    letting executor memory pressure slow later queries."""
-    dedup.release_persisted()
+    """Drop what one query left behind before the next one runs: frames
+    cached by graph operators and -- once the caller has dropped its own
+    references -- the localCheckpoint RDDs of the driver loops and dedup's
+    signature tables (CC/kcore/SSSP/BPE/MinHash), so the ContextCleaner
+    frees them instead of letting executor memory pressure slow later
+    queries. No result depends on this call; it only returns memory."""
     spark.catalog.clearCache()
     gc.collect()
 

@@ -13,6 +13,7 @@ from ..sources import load_table
 from .catalog import CATALOG, register
 from ..operators import (
     dedup,
+    graph,
     ivf,
     similarity,
 )
@@ -59,7 +60,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2).select("id_a", "id_b")
-    return dedup.persisted_cluster_map(pairs).select(
+    return graph.connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
@@ -291,7 +292,7 @@ FROM walk GROUP BY id
 def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     pairs = similarity.cosine_neardup_pairs_lsh(emb, threshold=0.35).select("id_a", "id_b")
-    return dedup.persisted_cluster_map(pairs).select(
+    return graph.connected_components(pairs).select(
         F.col("id").alias("vec_id"), F.col("comp").alias("cluster_id")
     )
 

@@ -279,7 +279,7 @@ FROM lab GROUP BY 1, 2
     "split_b) bucket. Off-diagonal buckets are evaluation contamination "
     "that exact-match decontamination (contamination_ngram_overlap) "
     "cannot see -- the near-dup leakage audit from the dedup literature. "
-    "Shares the persisted signature/cluster machinery; one extra "
+    "Reuses the MinHash signature/pair machinery; one extra "
     "map-only labeling + a 6-bucket aggregate on top of the pair join.",
 )
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,7 +509,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2).select("id_a", "id_b")
-    cl = dedup.persisted_cluster_map(pairs).select(
+    cl = graph.connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cl_id")
     )
     q = textstats.quality_score(docs).select("doc_id", "quality_score")

@@ -68,15 +68,105 @@ def test_simhash_near_duplicate(spark):
 
 
 def test_persisted_signatures_memoized_and_releasable(spark, docs):
-    """Repeated invocations reuse ONE persisted signature table (no storage
-    stacking across oracle gate + bench + tests) and release drops it."""
-    dedup.release_persisted()
+    """Each call materializes its own signature table: repeated calls give
+    equal rows, and none of them lands in the session cache, so repeated
+    calls stack nothing and nothing needs releasing."""
+    from pyspark.storagelevel import StorageLevel
+
     a = dedup.persisted_signatures(docs, "doc_id", "text")
     b = dedup.persisted_signatures(docs, "doc_id", "text")
-    assert a is b
-    assert len(dedup._SIG_PERSISTED) == 1
-    dedup.release_persisted()
-    assert len(dedup._SIG_PERSISTED) == 0
+    assert sorted(a.collect()) == sorted(b.collect())
+    assert a.storageLevel == StorageLevel.NONE
+    assert b.storageLevel == StorageLevel.NONE
+
+
+def _write_docs(path, rows):
+    import pandas as pd
+
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(path, index=False)
+
+
+def test_dedup_rereads_input_rewritten_at_same_path(spark, tmp_path):
+    """A documents file rewritten at the same path is read again by the
+    next dedup run in the same session: with no release in between, the
+    new near-duplicate shows up in both the pair set and the cluster map
+    (no result depends on process-global memo state)."""
+    from flink_training_exercises_spark.plans.catalog import CATALOG
+    from flink_training_exercises_spark.sources import load_table
+
+    def run():
+        docs = load_table(spark, "documents", str(tmp_path))
+        pairs = {
+            (r["id_a"], r["id_b"])
+            for r in dedup.minhash_lsh_pairs(docs, threshold=0.2).collect()
+        }
+        clusters = {
+            (r["doc_id"], r["cluster_id"])
+            for r in CATALOG["dedup_clusters_minhash"].spark(spark, str(tmp_path)).collect()
+        }
+        return pairs, clusters
+
+    rows = [(i, t) for i, t, _, _ in DOCS]
+    _write_docs(tmp_path / "documents.parquet", rows)
+    pairs1, clusters1 = run()
+    assert (1, 2) in pairs1 and all(d != 3 for d, _ in clusters1)
+    _write_docs(
+        tmp_path / "documents.parquet",
+        rows + [(6, DOCS[2][1] + " again")],  # near-dup of doc 3
+    )
+    pairs2, clusters2 = run()
+    assert pairs2 == pairs1 | {(3, 6)}
+    assert clusters2 == clusters1 | {(3, 3), (6, 3)}
+
+
+_SECOND_SESSION_SCRIPT = """
+import sys
+import pandas as pd
+from flink_training_exercises_spark.plans.catalog import CATALOG
+from flink_training_exercises_spark.session import get_spark
+
+sf_dir = sys.argv[1]
+pd.DataFrame(
+    {"doc_id": [1, 2, 3], "text": [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        "completely different words entirely unrelated content here",
+    ]}
+).to_parquet(sf_dir + "/documents.parquet", index=False)
+
+def run():
+    spark = get_spark("second-session", cpus=2)
+    rows = CATALOG["dedup_clusters_minhash"].spark(spark, sf_dir).collect()
+    return spark, sorted((r["doc_id"], r["cluster_id"]) for r in rows)
+
+spark, first = run()
+spark.stop()
+spark, second = run()
+spark.stop()
+assert first == second == [(1, 1), (2, 1)], (first, second)
+print("OK")
+"""
+
+
+def test_dedup_builder_survives_second_session(tmp_path):
+    """A dedup builder run again after ``spark.stop()`` and a new session
+    in the same process returns the same rows (no frame from the stopped
+    session is reused). Runs in a subprocess so the shared ``spark``
+    fixture is untouched."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ, PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _SECOND_SESSION_SCRIPT, str(tmp_path)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert out.stdout.strip().endswith("OK")
 
 
 def test_ngram_jaccard_partition_scoped(spark, docs):
@@ -411,7 +501,6 @@ def test_incremental_minhash_matches_directionality(spark):
     for r in out:
         assert r["new_id"] in new_ids and r["corpus_id"] in corpus_ids
         assert 0.0 < r["jaccard"] <= 1.0
-    dedup.release_persisted()
 
 
 def test_random_projection_shape_and_linearity(spark):
@@ -549,7 +638,6 @@ def test_lsh_recall_audit_matches_banding_curve(spark):
     assert row["n_exact"] > 0
     assert row["n_hits"] == row["n_lsh"]  # verified pairs are never false
     assert 0 <= row["n_hits"] / row["n_exact"] <= 0.2
-    dedup.release_persisted()
 
 
 # ---------------------------------------------------------------------------
@@ -768,13 +856,9 @@ def test_editdistance_pairs_blocking_and_threshold(spark):
 
 
 def test_dedup_keep_best_invariants(spark, sf_small):
-    from flink_training_exercises_spark.operators import dedup
     from flink_training_exercises_spark.plans.catalog import CATALOG
 
-    try:
-        rows = CATALOG["dedup_keep_best"].spark(spark, sf_small).collect()
-    finally:
-        dedup.release_persisted()
+    rows = CATALOG["dedup_keep_best"].spark(spark, sf_small).collect()
     assert rows
     by_cluster = {}
     for r in rows:

@@ -1,7 +1,8 @@
 """Per-query profiling harness for the optimization rounds.
 
 Times individual catalog queries through the same methodology as bench.py
-(noop sink, catalog.release_query_state between reps) and can
+(noop sink, catalog.release_query_state between reps, which returns
+cached and checkpointed memory; no operator memoizes across reps) and can
 dump `.explain("formatted")` plans for the before/after evidence the
 optimization judge checks.
 
