@@ -241,8 +241,8 @@ FROM events GROUP BY 1
     "are associative+commutative per key, so any chunking lands on the "
     "same rollup (chunked-replay invariance pytest-pinned). An additive "
     "fold is not naturally idempotent under at-least-once foreachBatch, "
-    "so the state carries the last folded batch_id and replayed batches "
-    "are skipped -- the transactional-sink recipe.",
+    "so a batch whose versioned state directory is already committed is "
+    "skipped (streaming.queries.fold_availablenow).",
 )
 def q_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_rollup_merge_availablenow

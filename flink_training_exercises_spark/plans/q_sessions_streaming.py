@@ -318,8 +318,8 @@ def q_streaming_windowed_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     "exactly the global next-event timestamp (chunked-replay invariance "
     "pinned). Ordering contract: per-user rows arrive in (ts, event_id) "
     "order -- the CDC-log commit-order contract. At-least-once "
-    "idempotence via the rollup recipe (folded-batch_id marker, replays "
-    "skipped; state localCheckpoint'd before the overwrite). Oracle "
+    "idempotence via fold_availablenow (one versioned state directory "
+    "per committed batch; replayed batches skipped). Oracle "
     "shared verbatim with the batch gate. 100 TB: per-batch window is "
     "batch-sized, the dimension join is user-keyed (bucketed layout "
     "makes the state side Exchange-free), full-table rewrite is the "

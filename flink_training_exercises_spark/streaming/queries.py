@@ -10,6 +10,7 @@ reference's EventTime windows (PopularPlaces.java:71-97).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -139,6 +140,87 @@ def drain_availablenow(stream: DataFrame, query_name: str) -> DataFrame:
     )
     q.awaitTermination()
     return stream.sparkSession.table(query_name)
+
+
+def fold_availablenow(
+    stream: DataFrame,
+    fold,
+    query_name: str,
+    root: str | None = None,
+) -> DataFrame:
+    """Drain ``stream`` (availableNow, foreachBatch) through
+    ``fold(state, batch) -> new_state`` onto a parquet state table and
+    return the final state, materialized. ``state`` is the table after the
+    previous batch, or None before the first one.
+
+    Layout under ``root``: ``ck`` is the streaming checkpoint and
+    ``state/v-<batch_id>`` is the state after that batch. A batch writes
+    its fold to ``state/tmp-<batch_id>``, renames it to ``v-<batch_id>``
+    and only then deletes the older versions, so a version directory
+    exists only once it is complete and no batch reads and writes the same
+    path: a crash during the write leaves the previous version standing,
+    and the re-run batch folds onto it again.
+
+    foreachBatch is at-least-once: a restart re-runs the last batch whose
+    commit-log entry is missing, even when its state version was already
+    written. A batch whose id is not above the newest version is
+    therefore skipped. The state version is the commit that counts, so
+    folds that are not idempotent (additive counts, interval closing) stay
+    exact under replay, and the check is a directory listing, not a Spark
+    job.
+
+    Zero batches (empty source) return ``fold(None, <empty batch>)``, so
+    an empty drain has exactly the columns and types of a real one. Pass a
+    persistent ``root`` to resume an interrupted drain (the checkpoint
+    skips committed batches, new ones fold onto the newest version); when
+    ``root`` is None a scratch directory is made and removed once the
+    result is pinned."""
+    spark = stream.sparkSession
+    own_root = root is None
+    if own_root:
+        root = mkscratch(prefix=f"fte_{query_name}_")
+    state_root = os.path.join(root, "state")
+
+    def versions() -> list[int]:
+        if not os.path.isdir(state_root):
+            return []
+        return sorted(int(d[2:]) for d in os.listdir(state_root) if d.startswith("v-"))
+
+    def version_dir(batch_id: int) -> str:
+        return os.path.join(state_root, f"v-{batch_id}")
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        done = versions()
+        if done and done[-1] >= batch_id:
+            return  # at-least-once replay of an already-folded batch
+        state = spark.read.parquet(version_dir(done[-1])) if done else None
+        tmp = os.path.join(state_root, f"tmp-{batch_id}")
+        fold(state, batch_df).write.mode("overwrite").parquet(tmp)
+        os.rename(tmp, version_dir(batch_id))
+        for d in os.listdir(state_root):
+            if d != f"v-{batch_id}":
+                shutil.rmtree(os.path.join(state_root, d))
+
+    try:
+        q = (
+            stream.writeStream.foreachBatch(apply_batch)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(root, "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        done = versions()
+        if done:
+            final = spark.read.parquet(version_dir(done[-1]))
+        else:
+            final = fold(None, spark.createDataFrame([], stream.schema))
+        # pin the drained values NOW: the lazy parquet read would otherwise
+        # track a later resume folding more batches under `root`
+        return final.localCheckpoint()
+    finally:
+        if own_root:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def streaming_distinct_users(
@@ -363,8 +445,7 @@ def run_cdc_merge_availablenow(
     seq_cols: list[str],
     query_name: str,
     delete_col: str = "is_delete",
-    checkpoint_dir: str | None = None,
-    state_dir: str | None = None,
+    root: str | None = None,
 ) -> DataFrame:
     """Streaming MERGE (the foreachBatch upsert-sink pattern, the
     Delta/Hudi streaming-materialized-view shape): each micro-batch is
@@ -384,55 +465,23 @@ def run_cdc_merge_availablenow(
     Scale shape: per batch, one hash shuffle on the merge key of
     |state| + |batch| rows -- exactly what a Delta MERGE pays; the state
     table would be bucketed by key in a real layout, reducing it to the
-    batch side only. State is materialized per batch (localCheckpoint)
-    before the overwrite so the lazy parquet read never races its own
-    rewrite.
+    batch side only.
 
-    Pass a persistent ``checkpoint_dir`` + ``state_dir`` pair to resume an
-    interrupted run: the WAL skips already-committed batches and new ones
-    fold onto the standing state (and because LWW merge is idempotent,
-    even an at-least-once replay of a committed batch cannot corrupt it --
-    tests/test_streaming.py::test_streaming_cdc_merge_checkpoint_resume).
+    The state table, replay skipping and the empty drain follow
+    :func:`fold_availablenow`; pass a persistent ``root`` to resume an
+    interrupted run
+    (tests/test_streaming.py::test_streaming_cdc_merge_checkpoint_resume).
     """
     from ..operators.cdc import merge_latest
 
-    spark = changes.sparkSession
-    if state_dir is None:
-        state_dir = mkscratch(prefix=f"fte_{query_name}_state_") + "/state"
-    if checkpoint_dir is None:
-        checkpoint_dir = mkscratch(prefix=f"fte_{query_name}_ck_")
+    def fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+        # first batch: no standing state yet -- reduce the batch alone
+        return merge_latest(
+            batch.limit(0) if state is None else state, batch, keys, seq_cols
+        )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # existence check, NOT try/except: a transient read error on batch
-        # N>1 must FAIL the query, never silently reset the merge state
-        # (tombstones included) to empty
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-        else:
-            # first batch: no standing state yet -- reduce the batch alone
-            state = batch_df.limit(0)
-        new_state = merge_latest(state, batch_df, keys, seq_cols)
-        new_state = new_state.localCheckpoint()  # cut lineage BEFORE overwrite
-        new_state.write.mode("overwrite").parquet(state_dir)
-
-    writer = changes.writeStream.foreachBatch(apply_batch).outputMode("update").option(
-        "checkpointLocation", checkpoint_dir
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    if not os.path.isdir(state_dir):
-        # zero micro-batches ran (empty source): apply_batch never fired, so
-        # no state table exists -- return an empty BATCH frame with the
-        # change schema (minus the delete marker) instead of a read error
-        out_fields = [f for f in changes.schema.fields if f.name != delete_col]
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType(out_fields))
-    final = spark.read.parquet(state_dir)
-    # localCheckpoint: pin the drained values NOW -- the lazy parquet read
-    # would otherwise track any later mutation of state_dir (e.g. a resumed
-    # run folding more batches before the caller consumes this result)
-    return final.where(~F.col(delete_col)).drop(delete_col).localCheckpoint()
+    final = fold_availablenow(changes, fold, query_name, root)
+    return final.where(~F.col(delete_col)).drop(delete_col)
 
 
 def run_snapshot_diff_availablenow(
@@ -573,13 +622,8 @@ def run_rollup_merge_availablenow(
 
     Unlike the LWW cdc merge, an additive fold is NOT naturally
     idempotent: foreachBatch is at-least-once, and re-folding a replayed
-    batch would double-count. The standard transactional-sink recipe is
-    applied: the state records the last folded batch_id and apply_batch
-    skips any batch_id it has already folded (marker column riding the
-    state table -- one read it already pays; the marker-vs-state write is
-    not atomic here, which is exactly the gap a transactional table
-    format's commit log closes in production, and why this runner
-    materializes state BEFORE the overwrite like the cdc merge).
+    batch would double-count. :func:`fold_availablenow` skips any batch
+    whose state version is already committed, so a replay cannot.
 
     Scale shape (100 TB/day of events): the per-batch fold shuffles ONE
     partial-aggregate row per active user in the batch (map-side combined
@@ -596,48 +640,26 @@ def run_rollup_merge_availablenow(
         F.round(F.col("value") * 100).cast("bigint").alias("cents_v"),
         epoch_ms("ts").alias("ms"),
     )
-    root = mkscratch(prefix=f"fte_{query_name}_")
-    state_dir = os.path.join(root, "state")
-    ck = os.path.join(root, "ck")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("user_id").agg(
+    def fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+        partial = batch.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("cents_v").alias("cents"),
             F.max("ms").alias("last_ms"),
         )
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            if state.agg(F.max("folded_batch")).first()[0] >= batch_id:
-                return  # at-least-once replay of an already-folded batch
-            merged = (
-                state.drop("folded_batch")
-                .unionByName(partial)
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("cents").alias("cents"),
-                    F.max("last_ms").alias("last_ms"),
-                )
+        if state is None:
+            return partial
+        return (
+            state.unionByName(partial)
+            .groupBy("user_id")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("cents").alias("cents"),
+                F.max("last_ms").alias("last_ms"),
             )
-        else:
-            merged = partial
-        merged = merged.withColumn("folded_batch", F.lit(batch_id)).localCheckpoint()
-        merged.write.mode("overwrite").parquet(state_dir)
-
-    q = (
-        rows.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(state_dir):
-        return spark.createDataFrame(
-            [], "user_id bigint, n_events bigint, cents bigint, last_ms bigint"
         )
-    return spark.read.parquet(state_dir).drop("folded_batch").localCheckpoint()
+
+    return fold_availablenow(rows, fold, query_name)
 
 
 def streaming_windowed_topk(
@@ -1061,10 +1083,8 @@ def run_scd2_maintenance_availablenow(
 
     Idempotence under at-least-once foreachBatch: interval assignment is
     NOT naturally idempotent (re-closing with a replayed batch would
-    re-append duplicate rows), so the rollup recipe applies verbatim --
-    the state carries the last folded batch_id and replayed batch ids
-    are skipped; state is localCheckpoint-ed BEFORE overwriting the
-    parquet dir it was read from (the cdc-merge lesson).
+    re-append duplicate rows); :func:`fold_availablenow` skips any batch
+    whose state version is already committed.
 
     Scale shape (100 TB/day of changes): the per-batch work is one
     window over the BATCH (small), one hash join of the standing
@@ -1091,65 +1111,33 @@ def run_scd2_maintenance_availablenow(
         epoch_ms("ts").alias("ms"),
         epoch_us("ts").alias("us"),
     )
-    root = mkscratch(prefix=f"fte_{query_name}_")
-    state_dir = os.path.join(root, "state")
-    ck = os.path.join(root, "ck")
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy("us", "event_id")
-        new_rows = batch_df.select(
+    def fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
+        new_rows = batch.select(
             "user_id",
             "event_id",
             F.col("ms").alias("valid_from_ms"),
             F.lead("ms").over(w).alias("valid_to_ms"),
         )
-        if os.path.isdir(state_dir):
-            state = spark.read.parquet(state_dir)
-            last = state.agg(F.max("folded_batch")).first()[0]
-            # None-guard: an all-empty first batch writes a zero-row state
-            # whose max(folded_batch) is NULL -- treat as nothing folded
-            if last is not None and last >= batch_id:
-                return  # at-least-once replay of an already-folded batch
-            # min(ms) needs no tie-break: ms is monotone nondecreasing in
-            # us, so min over the batch equals the ms of the
-            # (us, event_id)-first row -- the exact close bound
-            firsts = batch_df.groupBy("user_id").agg(
-                F.min("ms").alias("first_ms")
-            )
-            closed = state.drop("folded_batch").join(
-                firsts, "user_id", "left"
-            ).select(
-                "user_id",
-                "event_id",
-                "valid_from_ms",
-                # closed rows keep their bound; open rows close at the
-                # user's first new event; users absent from the batch
-                # stay open (first_ms NULL)
-                F.coalesce("valid_to_ms", "first_ms").alias("valid_to_ms"),
-            )
-            merged = closed.unionByName(new_rows)
-        else:
-            merged = new_rows
-        merged = merged.withColumn(
-            "folded_batch", F.lit(batch_id)
-        ).localCheckpoint()
-        merged.write.mode("overwrite").parquet(state_dir)
-
-    q = (
-        rows.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(state_dir):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, event_id bigint, "
-            "valid_from_ms bigint, valid_to_ms bigint",
+        if state is None:
+            return new_rows
+        # min(ms) needs no tie-break: ms is monotone nondecreasing in
+        # us, so min over the batch equals the ms of the
+        # (us, event_id)-first row -- the exact close bound
+        firsts = batch.groupBy("user_id").agg(F.min("ms").alias("first_ms"))
+        closed = state.join(firsts, "user_id", "left").select(
+            "user_id",
+            "event_id",
+            "valid_from_ms",
+            # closed rows keep their bound; open rows close at the
+            # user's first new event; users absent from the batch
+            # stay open (first_ms NULL)
+            F.coalesce("valid_to_ms", "first_ms").alias("valid_to_ms"),
         )
-    return spark.read.parquet(state_dir).drop("folded_batch").localCheckpoint()
+        return closed.unionByName(new_rows)
+
+    return fold_availablenow(rows, fold, query_name)
 
 
 def quantile_from_binned(

@@ -3,6 +3,7 @@ dropping at the watermark, checkpoint-resume (S2), stateful streaming (W5)."""
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_training_exercises_spark.operators.stateful import travel_time_window
@@ -459,13 +460,12 @@ def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path):
             .parquet(live)
         )
 
-    ck = str(tmp_path / "ck")
-    state = str(tmp_path / "state")
+    root = str(tmp_path / "fold")
     name = f"cdc_resume_{_uuid.uuid4().hex[:8]}"
     # run 1: only the first two chunks exist; drains and terminates
     partial = run_cdc_merge_availablenow(
         stream(), ["user_id"], ["state_ms", "event_id"], name + "_a",
-        checkpoint_dir=ck, state_dir=state,
+        root=root,
     ).count()
     assert partial > 0
     # the rest of the stream arrives; resume from the same checkpoint
@@ -475,7 +475,7 @@ def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path):
         tuple(r)
         for r in run_cdc_merge_availablenow(
             stream(), ["user_id"], ["state_ms", "event_id"], name + "_b",
-            checkpoint_dir=ck, state_dir=state,
+            root=root,
         ).collect()
     }
     w = W.partitionBy("user_id").orderBy(F.desc("state_ms"), F.desc("event_id"))
@@ -528,11 +528,171 @@ def test_cdc_merge_empty_source_returns_empty_batch_df(spark, tmp_path):
         keys=["user_id"],
         seq_cols=["state_ms"],
         query_name="cdc_empty_gate_test",
-        checkpoint_dir=str(tmp_path / "ck"),
-        state_dir=str(tmp_path / "state"),
+        root=str(tmp_path / "fold"),
     )
     assert out.columns == ["user_id", "state_ms"]
     assert out.count() == 0
+
+
+_EVENTS_SCHEMA = (
+    "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
+    "value DOUBLE, props STRING"
+)
+
+
+def _fold_runner_case(name, ev):
+    """(run(stream, query_name), one-shot batch result) for each
+    foreachBatch fold runner, over the same events."""
+    from pyspark.sql import Window as W
+
+    from flink_training_exercises_spark.functions.time import epoch_ms
+    from flink_training_exercises_spark.streaming import queries as Q
+
+    if name == "cdc":
+        def project(df):
+            return df.select(
+                "user_id",
+                "event_type",
+                "value",
+                epoch_ms("ts").alias("state_ms"),
+                "event_id",
+                (F.col("event_type") == "error").alias("is_delete"),
+            )
+
+        w = W.partitionBy("user_id").orderBy(F.desc("state_ms"), F.desc("event_id"))
+        want = (
+            project(ev)
+            .withColumn("rk", F.row_number().over(w))
+            .where((F.col("rk") == 1) & (~F.col("is_delete")))
+            .drop("rk", "is_delete")
+        )
+        return (
+            lambda stream, q: Q.run_cdc_merge_availablenow(
+                project(stream), ["user_id"], ["state_ms", "event_id"], q
+            ),
+            want,
+        )
+    if name == "rollup":
+        want = ev.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+            F.max(epoch_ms("ts")).alias("last_ms"),
+        )
+        return (
+            lambda stream, q: Q.run_rollup_merge_availablenow(
+                stream.sparkSession, "unused", q, b_stream=stream
+            ),
+            want,
+        )
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    want = ev.select(
+        "user_id",
+        "event_id",
+        epoch_ms("ts").alias("valid_from_ms"),
+        epoch_ms(F.lead("ts").over(w)).alias("valid_to_ms"),
+    )
+    return (
+        lambda stream, q: Q.run_scd2_maintenance_availablenow(
+            stream.sparkSession, "unused", q, b_stream=stream
+        ),
+        want,
+    )
+
+
+@pytest.mark.parametrize("runner", ["cdc", "rollup", "scd2"])
+def test_fold_runner_empty_first_batch_matches_batch(spark, sf_small, tmp_path, runner):
+    """A stream whose first file has 0 rows, followed by 3 chronological
+    chunks: the first micro-batch folds nothing, and each foreachBatch fold
+    runner must still land on its one-shot batch result. The drain made
+    its own scratch root, so none may be left behind."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    from flink_training_exercises_spark.scratch import scratch_root
+    from flink_training_exercises_spark.sources import load_table
+
+    ev = load_table(spark, "events", sf_small)
+    empty = str(tmp_path / "empty")
+    ev.limit(0).coalesce(1).write.parquet(empty)
+    d = str(tmp_path / "chunks")
+    os.makedirs(d)
+    first = os.path.join(d, "chunk-0000.parquet")
+    part = [f for f in os.listdir(empty) if f.endswith(".parquet")]
+    assert len(part) == 1
+    shutil.move(os.path.join(empty, part[0]), first)
+    # the file source replays in mtime order: the empty file goes first
+    mt = time.time() - 60
+    os.utime(first, (mt, mt))
+    replay_to_files(ev, "ts", d, n_chunks=3, start_index=1)
+
+    run, want = _fold_runner_case(runner, ev)
+    stream = spark.readStream.schema(_EVENTS_SCHEMA).option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(d)
+    name = f"fold_empty_first_{runner}_{uuid.uuid4().hex[:8]}"
+    got = {tuple(r) for r in run(stream, name).collect()}
+    assert got == {tuple(r) for r in want.collect()} and got
+    assert glob.glob(os.path.join(scratch_root(), f"fte_{name}_*")) == []
+
+
+def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
+    spark, sf_small, tmp_path
+):
+    """Restart and replay for the fold protocol (an additive per-user
+    count, which a re-folded batch would double): drain 2 of 4 chunks,
+    add the rest and resume on the same root, then delete the newest
+    commit-log entry so Spark re-runs that batch. Every result must equal
+    the one-shot count over the chunks present."""
+    import os
+    import shutil
+
+    from flink_training_exercises_spark.sources import load_table
+    from flink_training_exercises_spark.streaming.queries import fold_availablenow
+
+    ev = load_table(spark, "events", sf_small)
+    staged = str(tmp_path / "staged")
+    chunks = replay_to_files(ev, "ts", staged, n_chunks=4)
+    live = str(tmp_path / "live")
+    os.makedirs(live)
+    root = str(tmp_path / "fold")
+
+    def arrive(paths):
+        for c in paths:
+            shutil.copy2(c, os.path.join(live, os.path.basename(c)))
+
+    def fold(state, batch):
+        counts = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+        if state is None:
+            return counts
+        return state.unionByName(counts).groupBy("user_id").agg(F.sum("n").alias("n"))
+
+    def drain(tag):
+        stream = spark.readStream.schema(_EVENTS_SCHEMA).option(
+            "maxFilesPerTrigger", "1"
+        ).parquet(live)
+        out = fold_availablenow(stream, fold, f"fold_replay_{tag}", root)
+        return {tuple(r) for r in out.collect()}
+
+    def one_shot(paths):
+        batch = spark.read.schema(_EVENTS_SCHEMA).parquet(*paths)
+        return {
+            tuple(r)
+            for r in batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+
+    arrive(chunks[:2])
+    assert drain("a") == one_shot(chunks[:2])
+    arrive(chunks[2:])
+    assert drain("b") == one_shot(chunks)
+    commits = os.path.join(root, "ck", "commits")
+    newest = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert newest == 3
+    for f in (str(newest), f".{newest}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    assert drain("c") == one_shot(chunks)
 
 
 def test_streaming_zscore_invariant_under_chunked_replay(spark, sf_small, tmp_path):
