@@ -5,7 +5,7 @@ The reference is Gelly's vertex-centric PageRank over transition
 probabilities weight/sum(out-weights) (PageRankWithEdgeWeights.java:77-104).
 Catalyst has no iteration operator, so the loop lives on the driver; each
 step is one join + one aggregation over the *invariant* transition table,
-which is computed once and cached. Follows the Java semantics (true
+which is computed once and pinned. Follows the Java semantics (true
 out-weight sums); the Scala twin's divergences (first-edge-value instead of
 sum, hardcoded 2 iterations -- SURVEY.md §2.4 A9) are deliberately NOT
 reproduced.
@@ -19,16 +19,21 @@ Two arithmetic modes:
 
 Scale notes: the transition table and the vertex set are iteration
 invariants, so both are hash-repartitioned on their join key ONCE (same
-partition count) and cached; every per-iteration join then reads an
+partition count) and pinned with localCheckpoint, which keeps that
+partitioning; every per-iteration join then reads an
 already-co-partitioned side and the only recurring shuffle is the
 groupBy(dst) contribution aggregation -- the data movement PageRank
 inherently requires (1 exchange/iteration instead of 2). The rank state
 itself exits each iteration partitioned by vertex, so it re-enters the
 next join exchange-free as well. ``checkpoint_every`` truncates lineage
 for long loops (localCheckpoint -- no HDFS needed, and it preserves the
-partitioning); at cluster scale use a real checkpoint dir. Requires every
-vertex to have >= 1 out-edge (same precondition as the reference,
-PageRankWithEdgeWeights.java:38-41).
+partitioning); at cluster scale use a real checkpoint dir. The
+iteration invariants are pinned with localCheckpoint rather than
+``cache()``: a cached plan stays registered in the session and would be
+served to a later run over an input rewritten at the same path
+(tests/test_graph.py::test_pagerank_rereads_edges_rewritten_at_same_path).
+Requires every vertex to have >= 1 out-edge (same precondition as the
+reference, PageRankWithEdgeWeights.java:38-41).
 """
 
 from __future__ import annotations
@@ -78,8 +83,8 @@ def weighted_pagerank(
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # Consumed once for the initial ranks and once per iteration as the
-    # zero-contribution leg (below) -- multi-consumer, so cached.
-    vertices = vertices_from_edges(edges).cache()
+    # zero-contribution leg (below) -- multi-consumer, so pinned.
+    vertices = vertices_from_edges(edges).localCheckpoint()
 
     # r13 optimization (guide §2.4): the per-iteration "vertices LEFT JOIN
     # contribs" -- which only re-attached vertices with no inbound
@@ -104,7 +109,7 @@ def weighted_pagerank(
                 "src",
             )
             .repartition(n_part, "src")
-            .cache()
+            .localCheckpoint()
         )
         zeros = vertices.select(
             F.col("vertex").alias("dst"), F.lit(0).cast("bigint").alias("c")
@@ -134,7 +139,7 @@ def weighted_pagerank(
         transition_probabilities(edges)
         .select("src", "dst", "prob")
         .repartition(n_part, "src")
-        .cache()
+        .localCheckpoint()
     )
     zeros = vertices.select(F.col("vertex").alias("dst"), F.lit(0.0).alias("c"))
     ranks = vertices.select("vertex", F.lit(1.0).alias("rank"))
@@ -710,14 +715,14 @@ def personalized_pagerank(
 
     Gated since round 8 (catalog name personalized_pagerank).
 
-    Scale shape: identical to weighted_pagerank -- one cached transition
+    Scale shape: identical to weighted_pagerank -- one pinned transition
     table hash-partitioned on src, per-iteration join + aggregate on the
     same keys, periodic localCheckpoint to cut the iterative lineage."""
     from ..functions.hashing import md5_long
 
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    vertices = vertices_from_edges(edges).cache()
+    vertices = vertices_from_edges(edges).localCheckpoint()
 
     def is_seed(c):
         return (md5_long(c.cast("string")) % seed_mod == 0).cast("bigint")
@@ -733,7 +738,7 @@ def personalized_pagerank(
             "src",
         )
         .repartition(n_part, "src")
-        .cache()
+        .localCheckpoint()
     )
     # r13 optimization (guide §2.4, the weighted_pagerank rewrite): the
     # per-iteration "verts LEFT JOIN contribs" is gone -- a zero
@@ -792,7 +797,7 @@ def random_walks(
     Gated since round 10 (catalog name random_walks).
 
     Scale shape (100 TB edges): the ranked adjacency (row_number per
-    source + out-degree) is ONE window shuffle on src, cached and reused
+    source + out-degree) is ONE window shuffle on src, pinned and reused
     by every step; each step is one equi-join of the walk frontier
     against it on (cur, rank) -- ``steps`` joins total, frontier never
     exceeds |V|. No collect, no python in the path."""
@@ -813,7 +818,7 @@ def random_walks(
             ),
         )
         .repartition(n_part, "s")
-        .cache()
+        .localCheckpoint()
     )
     verts = vertices_from_edges(edges)
     state = verts.select(

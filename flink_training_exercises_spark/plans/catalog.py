@@ -2,7 +2,11 @@
 (SURVEY.md §2 coverage checklist) with a DuckDB oracle twin.
 
 Contract (driver harness, __spark_entry__.py):
-  * spark builder: (spark, sf_dir) -> DataFrame
+  * spark builder: (spark, sf_dir) -> DataFrame. A streaming entry
+    registers with ``source=`` and is written as fn(stream, sf_dir); its
+    builder opens that source and calls fn, so a test can replay the same
+    function over a chunked stream (tests/test_streaming.py::
+    test_streaming_query_replays_to_oracle).
   * oracle: ANSI SQL over pre-registered DuckDB views (region nation customer
     supplier part orders lineitem events documents embeddings); every
     query has one, and plans/differential.compare defines "equal".
@@ -23,6 +27,7 @@ functions/hashing.py):
 
 from __future__ import annotations
 
+import functools
 import gc
 from dataclasses import dataclass
 from typing import Callable
@@ -42,14 +47,28 @@ class QuerySpec:
     oracle: str
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
+    # table the entry reads as a stream (a key of
+    # streaming.sources.STREAM_SCHEMAS); None for batch entries
+    source: str | None = None
 
 
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str, doc: str = "", bench: bool = False):
-    def deco(fn: SparkBuilder) -> SparkBuilder:
-        CATALOG[name] = QuerySpec(name, fn, oracle, doc, bench)
+def register(
+    name: str, oracle: str, doc: str = "", bench: bool = False, source: str | None = None
+):
+    def deco(fn):
+        builder = fn
+        if source is not None:
+
+            @functools.wraps(fn)  # builder.__wrapped__ is fn(stream, sf_dir)
+            def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+                from ..streaming.sources import table_stream
+
+                return fn(table_stream(spark, sf_dir, source), sf_dir)
+
+        CATALOG[name] = QuerySpec(name, builder, oracle, doc, bench, source)
         return fn
 
     return deco

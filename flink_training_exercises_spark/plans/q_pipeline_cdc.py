@@ -203,14 +203,14 @@ FROM r WHERE rk = 1 AND event_type != 'error'
     "later batches can't resurrect deleted keys); final drained state = "
     "the one-shot batch LWW result because the merge is associative by "
     "key. Batch-boundary invariance pinned by "
-    "tests/test_streaming.py::test_streaming_cdc_merge_chunked.",
+    "tests/test_streaming.py::test_streaming_query_replays_to_oracle.",
+    source="events",
 )
-def q_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_cdc_merge(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..functions.time import epoch_ms
     from ..streaming.queries import run_cdc_merge_availablenow
-    from ..streaming.sources import events_stream
 
-    changes = events_stream(spark, sf_dir).select(
+    changes = events.select(
         "user_id",
         "event_type",
         "value",
@@ -243,13 +243,12 @@ FROM events GROUP BY 1
     "fold is not naturally idempotent under at-least-once foreachBatch, "
     "so a batch whose versioned state directory is already committed is "
     "skipped (streaming.queries.fold_availablenow).",
+    source="events",
 )
-def q_streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_incremental_rollup(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_rollup_merge_availablenow
 
-    return run_rollup_merge_availablenow(
-        spark, sf_dir, "streaming_incremental_rollup_gate"
-    )
+    return run_rollup_merge_availablenow(events, "streaming_incremental_rollup_gate")
 
 def _split_case_sql(id_expr: str) -> str:
     """80/10/10 deterministic split label for a doc-id expression."""
@@ -455,12 +454,13 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
     "processing, no watermark state -- so the availableNow drain equals "
     "the plain batch join and the oracle needs no horizon cut. The "
     "canonical star-schema enrichment every event pipeline runs.",
+    source="events",
 )
-def q_streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_enrich_static(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_enrich_static_availablenow
 
     return run_enrich_static_availablenow(
-        spark, sf_dir, "streaming_enrich_static_gate"
+        events, sf_dir, "streaming_enrich_static_gate"
     )
 
 @register(

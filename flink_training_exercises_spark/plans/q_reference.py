@@ -130,11 +130,16 @@ SELECT res.* FROM res, mx WHERE res.window_end_ms <= mx.m - 60000
     "the final watermark (max event ts - 60 s), mirroring Spark's "
     "window.end <= watermark emission (PopularPlaces.java:71-97 event-time "
     "fire-once contract).",
+    source="events",
 )
-def q_streaming_popular_places(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import run_popular_places_availablenow
+def q_streaming_popular_places(events: DataFrame, sf_dir: str) -> DataFrame:
+    from ..streaming.queries import drain_availablenow, streaming_popular_places
+    from ..streaming.sources import rides_stream
 
-    return run_popular_places_availablenow(spark, sf_dir, threshold=_PP_THRESHOLD)
+    places = streaming_popular_places(
+        rides_stream(events), window="6 hours", slide="1 hour", threshold=_PP_THRESHOLD
+    )
+    return drain_availablenow(places, "streaming_popular_places_gate")
 
 # ---------------------------------------------------------------------------
 # Mail-family batch exercises (SURVEY §2 A1-A6, J2/J3, P3/P6/P7) on the
@@ -343,13 +348,13 @@ def q_travel_time_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events by time within each key exactly like the batch twin, so the "
     "emission set equals the batch result and the SAME oracle applies -- "
     "the stateful streaming path is driver-gated, not just pytest'd.",
+    source="events",
 )
-def q_streaming_travel_time(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_travel_time(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import drain_availablenow
     from ..streaming.sources import rides_stream
     from ..streaming.stateful import streaming_travel_time
 
     return drain_availablenow(
-        streaming_travel_time(rides_stream(spark, sf_dir)),
-        "streaming_travel_time_gate",
+        streaming_travel_time(rides_stream(events)), "streaming_travel_time_gate"
     )

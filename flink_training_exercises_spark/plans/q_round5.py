@@ -115,15 +115,13 @@ def q_anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pure integer arithmetic, so the emission set equals the batch twin "
     "and the SAME oracle applies (the streaming_travel_time_stateful "
     "gating pattern).",
+    source="events",
 )
-def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_anomaly_zscore(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import drain_availablenow
-    from ..streaming.sources import events_stream
     from ..streaming.stateful import streaming_zscore
 
-    return drain_availablenow(
-        streaming_zscore(events_stream(spark, sf_dir)), "streaming_zscore_gate"
-    )
+    return drain_availablenow(streaming_zscore(events), "streaming_zscore_gate")
 
 @register(
     "zonemap_pruning_audit",
@@ -246,12 +244,13 @@ def q_scd2_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no horizon cut. Boundary semantics carried through the engine: a "
     "purchase exactly on a version boundary takes the NEW version, "
     "zero-width versions never match.",
+    source="events",
 )
-def q_streaming_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_pit_enrichment(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_pit_enrichment_availablenow
 
     return run_pit_enrichment_availablenow(
-        spark, sf_dir, "streaming_pit_enrichment_gate"
+        events, sf_dir, "streaming_pit_enrichment_gate"
     )
 
 @register(
@@ -295,7 +294,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 # Shared by snapshot_diff_documents (batch full-outer diff) and
-# streaming_snapshot_diff (its incremental foreachBatch twin): chunking
+# streaming_snapshot_diff (its incremental stream-static twin): chunking
 # invariance makes both equal this one-shot SQL.
 _SNAPSHOT_DIFF_SQL = """
 WITH snap_a AS (
@@ -361,19 +360,20 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_SNAPSHOT_DIFF_SQL,
     doc="Snapshot diff through the real engine -- the incremental ingest "
     "shape: snapshot A is the standing batch corpus, snapshot B ARRIVES "
-    "as a document stream; each micro-batch classifies its rows against A "
-    "on the spot (left join on doc_id: added / changed, unchanged "
-    "dropped) into batch-id-keyed overwrite outputs (idempotent under "
-    "foreachBatch retries), 'removed' = one final anti-join of A vs the "
-    "seen-key set. doc_ids unique within B + static A => any chunking "
-    "folds to the one-shot batch diff (chunked-replay invariance "
-    "pytest-pinned), so the oracle is the same full-outer SQL.",
+    "as a document stream; a stream-static left join on doc_id classifies "
+    "each B row against A as it lands (added / changed / unchanged) and "
+    "is drained in append mode; 'removed' = one final anti-join of A vs "
+    "the drained keys, and unchanged rows are dropped from the result. "
+    "doc_ids unique within B + static A => any chunking drains to the "
+    "one-shot batch diff (chunked-replay invariance pytest-pinned), so "
+    "the oracle is the same full-outer SQL.",
+    source="documents",
 )
-def q_streaming_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_streaming_snapshot_diff(documents: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_snapshot_diff_availablenow
 
     return run_snapshot_diff_availablenow(
-        spark, sf_dir, "streaming_snapshot_diff_gate"
+        documents, sf_dir, "streaming_snapshot_diff_gate"
     )
 
 _SALTED_JOIN_DIM = [(t, len(t)) for t in ("click", "error", "purchase", "signup", "view")]

@@ -13,16 +13,23 @@ from ..sources import load_table
 from .catalog import register
 from ..operators import cdc as cdc_ops
 from ..streaming.queries import (
+    bloom_window_membership,
+    cms_window_estimates,
     concurrency_profile_oracle,
-    run_concurrency_profile_availablenow,
+    drain_availablenow,
+    hll_estimate_per_window,
+    minhash_window_similarity,
+    quantile_from_binned,
+    rank_topk_per_window,
     run_scd2_maintenance_availablenow,
-    run_windowed_bloom_availablenow,
-    run_windowed_cms_availablenow,
-    run_windowed_histogram_availablenow,
-    run_windowed_hll_availablenow,
-    run_windowed_minhash_availablenow,
-    run_windowed_quantile_availablenow,
-    run_windowed_topk_availablenow,
+    streaming_distinct_users,
+    streaming_interval_join,
+    streaming_windowed_bloom,
+    streaming_windowed_cms,
+    streaming_windowed_histogram,
+    streaming_windowed_hll,
+    streaming_windowed_minhash,
+    streaming_windowed_topk,
     windowed_bloom_oracle,
     windowed_cms_oracle,
     windowed_histogram_oracle,
@@ -71,12 +78,13 @@ WHERE session_end_ms + {sessions.DEFAULT_GAP_MS} <= m - 60000
     "last-event + gap) and cut at the final watermark. The two forms' "
     "merge semantics differ only for events spaced EXACTLY at the gap "
     "(batch: gap > g merges; session_window: >= g breaks) -- equal on "
-    "this data, see run_sessionize_availablenow.",
+    "this data (9542 = 9542 sessions at sf0.01).",
+    source="events",
 )
-def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import run_sessionize_availablenow
-
-    return run_sessionize_availablenow(spark, sf_dir)
+def q_streaming_sessionize(events: DataFrame, sf_dir: str) -> DataFrame:
+    return drain_availablenow(
+        sessions.streaming_sessionize(events), "streaming_sessionize_gate"
+    )
 
 @register(
     "streaming_exact_dedup",
@@ -93,7 +101,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(tests/test_streaming.py::test_streaming_exact_dedup).",
 )
 def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import drain_availablenow, streaming_exact_dedup
+    from ..streaming.queries import streaming_exact_dedup
     from ..streaming.sources import events_stream
 
     deduped = streaming_exact_dedup(
@@ -118,17 +126,13 @@ WHERE p.event_type = 'purchase' AND c.event_type = 'click'
     "the third stateful operator class (join state, watermark-bounded "
     "buffer eviction). Inner-join rows emit on match, so the availableNow "
     "drain equals the plain batch interval join with no horizon cut.",
+    source="events",
 )
-def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import drain_availablenow, streaming_interval_join
-    from ..streaming.sources import events_stream
-
-    ev = events_stream(spark, sf_dir)
-    ev2 = events_stream(spark, sf_dir)
+def q_streaming_interval_join(events: DataFrame, sf_dir: str) -> DataFrame:
     return drain_availablenow(
         streaming_interval_join(
-            ev.where(F.col("event_type") == "click"),
-            ev2.where(F.col("event_type") == "purchase"),
+            events.where(F.col("event_type") == "click"),
+            events.where(F.col("event_type") == "purchase"),
         ),
         "streaming_interval_join_gate",
     )
@@ -161,17 +165,13 @@ WHERE c.click_id NOT IN (SELECT click_id FROM matched)
     "ts_click + max_gap -- i.e. when state eviction proves no future match "
     "can arrive. The oracle reproduces that exact eviction horizon, so the "
     "watermark-driven outer-emission contract itself is hash-checked.",
+    source="events",
 )
-def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import drain_availablenow, streaming_interval_join
-    from ..streaming.sources import events_stream
-
-    ev = events_stream(spark, sf_dir)
-    ev2 = events_stream(spark, sf_dir)
+def q_streaming_interval_join_outer(events: DataFrame, sf_dir: str) -> DataFrame:
     return drain_availablenow(
         streaming_interval_join(
-            ev.where(F.col("event_type") == "click"),
-            ev2.where(F.col("event_type") == "purchase"),
+            events.where(F.col("event_type") == "click"),
+            events.where(F.col("event_type") == "purchase"),
             how="leftOuter",
         ),
         "streaming_interval_join_outer_gate",
@@ -196,14 +196,11 @@ HAVING hour_ms + 3600000 <= m - 60000
     "(hour, event_type, user_id) feeding a windowed count (append mode, "
     "fire-once). Counts are survivor-independent, so the batch "
     "COUNT(DISTINCT) oracle cut at the final watermark matches exactly.",
+    source="events",
 )
-def q_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.queries import drain_availablenow, streaming_distinct_users
-    from ..streaming.sources import events_stream
-
+def q_streaming_distinct_users(events: DataFrame, sf_dir: str) -> DataFrame:
     return drain_availablenow(
-        streaming_distinct_users(events_stream(spark, sf_dir)),
-        "streaming_distinct_users_gate",
+        streaming_distinct_users(events), "streaming_distinct_users_gate"
     )
 
 @register(
@@ -235,10 +232,13 @@ def q_session_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     "BATCH window over the drained aggregate (|windows| x |types| rows). "
     "100 TB: one stateful shuffle keyed on (window, type), "
     "watermark-bounded state; the rank input is aggregate-sized.",
+    source="events",
 )
-def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_topk_availablenow(
-        spark, sf_dir, "streaming_windowed_topk_gate"
+def q_streaming_windowed_topk(events: DataFrame, sf_dir: str) -> DataFrame:
+    return rank_topk_per_window(
+        drain_availablenow(
+            streaming_windowed_topk(events), "streaming_windowed_topk_gate"
+        )
     )
 
 @register(
@@ -254,10 +254,13 @@ def q_streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final watermark, folded with identical single-literal float "
     "arithmetic. 100 TB: one stateful shuffle keyed on "
     "(window, bucket), watermark-bounded state.",
+    source="events",
 )
-def q_streaming_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_hll_availablenow(
-        spark, sf_dir, "streaming_windowed_hll_gate"
+def q_streaming_windowed_hll(events: DataFrame, sf_dir: str) -> DataFrame:
+    return hll_estimate_per_window(
+        drain_availablenow(
+            streaming_windowed_hll(events), "streaming_windowed_hll_gate"
+        )
     )
 
 @register(
@@ -272,10 +275,18 @@ def q_streaming_windowed_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     "session-sized, never raw events). Oracle = batch gap sessions "
     "shifted by the gap, cut at the final watermark, through the shared "
     "sweep SQL.",
+    source="events",
 )
-def q_streaming_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_concurrency_profile_availablenow(
-        spark, sf_dir, "streaming_concurrency_profile_gate"
+def q_streaming_concurrency_profile(events: DataFrame, sf_dir: str) -> DataFrame:
+    # session_window ends already carry the gap, so the drained intervals
+    # feed the sweep directly
+    sess = drain_availablenow(
+        sessions.streaming_sessionize(events), "streaming_concurrency_profile_gate"
+    )
+    return sessions.concurrency_from_intervals(
+        sess.select(
+            F.col("session_start_ms").alias("s"), F.col("session_end_ms").alias("e")
+        )
     )
 
 
@@ -297,10 +308,11 @@ def q_streaming_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFra
     "final watermark. 100 TB: one stateful shuffle keyed on "
     "(window, bin); state bounded by value range over bin width per "
     "window, watermark-evicted.",
+    source="events",
 )
-def q_streaming_windowed_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_histogram_availablenow(
-        spark, sf_dir, "streaming_windowed_histogram_gate"
+def q_streaming_windowed_histogram(events: DataFrame, sf_dir: str) -> DataFrame:
+    return drain_availablenow(
+        streaming_windowed_histogram(events), "streaming_windowed_histogram_gate"
     )
 
 
@@ -324,11 +336,10 @@ def q_streaming_windowed_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     "batch-sized, the dimension join is user-keyed (bucketed layout "
     "makes the state side Exchange-free), full-table rewrite is the "
     "transactional-format trade the cdc merge already adjudicated.",
+    source="events",
 )
-def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_scd2_maintenance_availablenow(
-        spark, sf_dir, "streaming_scd2_maintenance_gate"
-    )
+def q_streaming_scd2_maintenance(events: DataFrame, sf_dir: str) -> DataFrame:
+    return run_scd2_maintenance_availablenow(events, "streaming_scd2_maintenance_gate")
 
 
 @register(
@@ -350,10 +361,13 @@ def q_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identical integer arithmetic. 100 TB: state bounded by value "
     "range over bin width per open window, watermark-evicted; the walk "
     "input is bins-per-window-sized, never raw events.",
+    source="events",
 )
-def q_streaming_windowed_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_quantile_availablenow(
-        spark, sf_dir, "streaming_windowed_quantile_gate"
+def q_streaming_windowed_quantile(events: DataFrame, sf_dir: str) -> DataFrame:
+    return quantile_from_binned(
+        drain_availablenow(
+            streaming_windowed_histogram(events), "streaming_windowed_quantile_gate"
+        )
     )
 
 
@@ -400,10 +414,14 @@ def q_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "horizon. 100 TB: one stateful shuffle keyed (window, r, bucket), "
     "watermark-evicted bounded state; the panel walk touches "
     "cells-per-window rows, never raw events.",
+    source="events",
 )
-def q_streaming_windowed_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_cms_availablenow(
-        spark, sf_dir, "streaming_windowed_cms_gate"
+def q_streaming_windowed_cms(events: DataFrame, sf_dir: str) -> DataFrame:
+    cells = drain_availablenow(
+        streaming_windowed_cms(events), "streaming_windowed_cms_gate"
+    )
+    return cms_window_estimates(
+        cells, load_table(events.sparkSession, "events", sf_dir)
     )
 
 
@@ -473,10 +491,14 @@ def q_session_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "k BIGINT cells per open window REGARDLESS of key cardinality; "
     "the similarity walk touches |windows| x k rows, never raw "
     "events.",
+    source="events",
 )
-def q_streaming_windowed_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_minhash_availablenow(
-        spark, sf_dir, "streaming_windowed_minhash_gate"
+def q_streaming_windowed_minhash(events: DataFrame, sf_dir: str) -> DataFrame:
+    sigs = drain_availablenow(
+        streaming_windowed_minhash(events), "streaming_windowed_minhash_gate"
+    )
+    return minhash_window_similarity(
+        sigs, load_table(events.sparkSession, "events", sf_dir)
     )
 
 
@@ -503,8 +525,12 @@ def q_streaming_windowed_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state capped at 8 BIGINT cells per open window REGARDLESS of key "
     "cardinality; the membership walk touches |windows| x panel x K "
     "rows, never raw events.",
+    source="events",
 )
-def q_streaming_windowed_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_windowed_bloom_availablenow(
-        spark, sf_dir, "streaming_windowed_bloom_gate"
+def q_streaming_windowed_bloom(events: DataFrame, sf_dir: str) -> DataFrame:
+    words = drain_availablenow(
+        streaming_windowed_bloom(events), "streaming_windowed_bloom_gate"
+    )
+    return bloom_window_membership(
+        words, load_table(events.sparkSession, "events", sf_dir)
     )

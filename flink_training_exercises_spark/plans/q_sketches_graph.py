@@ -268,16 +268,26 @@ GROUP BY 1
     "gate checks the aggregate through the partitioned round-trip.",
 )
 def q_dpp_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+
     from ..scratch import mkscratch
     from ..sources import bucketing
 
     ev = load_table(spark, "events", sf_dir)
-    path = mkscratch(prefix="fte_dpp_") + "/events_part"
-    bucketing.write_partitioned(ev, path, "event_type")
-    dim = spark.createDataFrame(
-        _DPP_DIM, "d_type string, type_weight int"
-    ).where(F.length("d_type") <= 5)
-    return bucketing.dpp_join_agg(spark, path, dim, "event_type", "d_type")
+    root = mkscratch(prefix="fte_dpp_")
+    try:
+        path = root + "/events_part"
+        bucketing.write_partitioned(ev, path, "event_type")
+        dim = spark.createDataFrame(
+            _DPP_DIM, "d_type string, type_weight int"
+        ).where(F.length("d_type") <= 5)
+        # the aggregate is one row per surviving event type: pin it so the
+        # partitioned copy can go
+        return bucketing.dpp_join_agg(
+            spark, path, dim, "event_type", "d_type"
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 @register(
     "value_histogram",
@@ -589,7 +599,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Exact-integer mode only (pagerank_weighted's determinism recipe): "
     "BIGINT ranks at RANK_SCALE, integer-div contributions, oracle "
     "unrolls the identical recurrence. Unreachable vertices rank "
-    "exactly 0. 100 TB: one cached transition table hash-partitioned "
+    "exactly 0. 100 TB: one pinned transition table hash-partitioned "
     "on src, per-iteration join+agg on the same keys, periodic "
     "localCheckpoint lineage cuts.",
 )

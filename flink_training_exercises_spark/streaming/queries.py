@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
@@ -98,47 +98,24 @@ def streaming_popular_places(
     )
 
 
-def run_popular_places_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = "6 hours",
-    slide: str = "1 hour",
-    threshold: int = DEFAULT_THRESHOLD,
-    query_name: str = "streaming_popular_places_gate",
-) -> DataFrame:
-    """Drive streaming_popular_places through the REAL streaming engine
-    (file micro-batches -> watermarked window state -> append-mode memory
-    sink, availableNow trigger) and return the materialized result.
-
-    Append mode is Flink's fire-once contract (W2): a (cell, window) row is
-    emitted exactly once, when the watermark -- max event time minus the
-    60 s delay -- passes the window end; windows still open when the stream
-    drains are NOT emitted. The batch oracle therefore gains the cutoff
-    ``window_end_ms <= max(event ts) - 60000``, which mirrors Spark's
-    ``window.end <= watermark`` state eviction exactly (verified equal at
-    sf0.01: 1143 of the batch's 1171 rows). A fresh checkpoint dir per call
-    means each invocation replays the full input deterministically."""
-    from .sources import rides_stream
-
-    stream = streaming_popular_places(
-        rides_stream(spark, sf_dir), window=window, slide=slide, threshold=threshold
-    )
-    return drain_availablenow(stream, query_name)
-
-
 def drain_availablenow(stream: DataFrame, query_name: str) -> DataFrame:
     """Run an append-mode streaming DataFrame to completion (availableNow,
     memory sink, fresh checkpoint -> full deterministic replay) and return
-    the materialized table."""
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", mkscratch(prefix=f"fte_{query_name}_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    the materialized table. The memory sink's rows do not live in the
+    checkpoint, so the checkpoint is removed once the drain ends."""
+    checkpoint = mkscratch(prefix=f"fte_{query_name}_ck_")
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return stream.sparkSession.table(query_name)
 
 
@@ -316,29 +293,8 @@ def streaming_interval_join(
     )
 
 
-def run_sessionize_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_sessionize_gate",
-) -> DataFrame:
-    """Drive the native session_window sessionization through the real
-    streaming engine in append mode (fire-once per merged session). The
-    batch lag-gap oracle maps onto it exactly: session_window's end is
-    last-event + gap (vs the batch form's last-event), and append mode
-    emits a session only once the watermark (max event ts - 60 s) passes
-    that end -- so oracle = batch sessions with end shifted by the gap and
-    cut at the horizon. Note the two forms' merge semantics differ only
-    for events spaced EXACTLY at the gap (batch merges on gap > g,
-    session_window breaks on next - last >= g); verified equal on the
-    testdata (9542 = 9542 sessions at sf0.01)."""
-    from ..operators.sessions import streaming_sessionize
-    from .sources import events_stream
-
-    return drain_availablenow(streaming_sessionize(events_stream(spark, sf_dir)), query_name)
-
-
 def run_enrich_static_availablenow(
-    spark: SparkSession, sf_dir: str, query_name: str
+    events: DataFrame, sf_dir: str, query_name: str
 ) -> DataFrame:
     """Stream-static dimension enrichment -- the canonical Structured
     Streaming join shape a real event pipeline runs on every record:
@@ -356,9 +312,8 @@ def run_enrich_static_availablenow(
     is exactly how a star-schema enrichment should land on a cluster."""
     from ..functions.time import epoch_ms
     from ..sources.loaders import load_table
-    from .sources import events_stream
 
-    ev = events_stream(spark, sf_dir)
+    spark = events.sparkSession
     cust = load_table(spark, "customer", sf_dir)
     nat = load_table(spark, "nation", sf_dir)
     dim = F.broadcast(
@@ -368,7 +323,7 @@ def run_enrich_static_availablenow(
             F.col("n_name").alias("nation"),
         )
     )
-    joined = ev.join(dim, ev["user_id"] == dim["dim_key"]).select(
+    joined = events.join(dim, events["user_id"] == dim["dim_key"]).select(
         "event_id",
         "user_id",
         "event_type",
@@ -380,10 +335,7 @@ def run_enrich_static_availablenow(
 
 
 def run_pit_enrichment_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str,
-    b_stream: DataFrame | None = None,
+    events: DataFrame, sf_dir: str, query_name: str
 ) -> DataFrame:
     """Stream-static POINT-IN-TIME enrichment: the purchase stream joined
     per micro-batch to the batch-built SCD2 version dimension (view events
@@ -409,9 +361,8 @@ def run_pit_enrichment_availablenow(
 
     from ..functions.time import epoch_ms
     from ..sources.loaders import load_table
-    from .sources import events_stream
 
-    ev = load_table(spark, "events", sf_dir)
+    ev = load_table(events.sparkSession, "events", sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     dim = F.broadcast(
         ev.where(F.col("event_type") == "view").select(
@@ -421,9 +372,7 @@ def run_pit_enrichment_availablenow(
             epoch_ms(F.lead("ts").over(w)).alias("valid_to_ms"),
         )
     )
-    if b_stream is None:
-        b_stream = events_stream(spark, sf_dir)
-    stream = b_stream.where(F.col("event_type") == "purchase")
+    stream = events.where(F.col("event_type") == "purchase")
     facts = stream.select(
         "event_id",
         "user_id",
@@ -485,49 +434,42 @@ def run_cdc_merge_availablenow(
 
 
 def run_snapshot_diff_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str,
-    b_stream: DataFrame | None = None,
+    documents: DataFrame, sf_dir: str, query_name: str
 ) -> DataFrame:
     """Streaming snapshot diff (the incremental twin of the batch
     snapshot_diff_documents query): snapshot A is the standing corpus
-    (batch-built, static); snapshot B ARRIVES as a document stream. Each
-    micro-batch classifies its B rows against A immediately -- left join on
-    doc_id: no A row => 'added', hash differs => 'changed', equal =>
-    dropped -- and records the B keys it has seen; after the drain,
-    'removed' = A anti-joined against the seen-key set. This is the actual
-    100 TB ingest shape: the delta emits as the crawl lands, the full-outer
-    join never materializes over both whole snapshots at once.
+    (batch-built, static); snapshot B ARRIVES as the ``documents`` stream.
+    The stream-static left join classifies each B row against A as it
+    lands -- no A row => 'added', hash differs => 'changed', else
+    'unchanged' -- and is drained in append mode; after the drain,
+    'removed' = A anti-joined against the drained keys, and the unchanged
+    rows are dropped from the result. This is the actual 100 TB ingest
+    shape: the delta emits as the crawl lands, the full-outer join never
+    materializes over both whole snapshots at once.
 
-    Chunking invariance (the cdc-merge contract): doc_ids are unique
-    within snapshot B and A is static, so each B row's classification is
-    independent of batch boundaries, and 'removed' depends only on the
-    seen-key SET -- any chunking folds to the one-shot batch diff
-    row-for-row (pinned by tests/test_streaming.py::
-    test_streaming_snapshot_diff_chunked_matches_batch). foreachBatch is
-    at-least-once, so per-batch outputs land in batch-id-keyed directories
-    written with overwrite -- a retried batch replaces itself instead of
-    duplicating rows.
+    Chunking invariance: doc_ids are unique within snapshot B and A is
+    static, so each B row's classification is independent of batch
+    boundaries, and 'removed' depends only on the drained key SET -- any
+    chunking drains to the one-shot batch diff row-for-row (pinned by
+    tests/test_streaming.py::test_streaming_query_replays_to_oracle).
+    Keeping the unchanged rows in the drain is what lets the key set come
+    from the drain itself.
 
     Scale shape: per batch, one hash join of the (small) arriving chunk
     against A on doc_id -- with A bucketed by doc_id at write time the
     probe is Exchange-free on A's side (the proven bucketed batch-diff
     layout, commit 9033a4d); comparison is on 16-byte md5 hashes, never
     raw text movement; the final anti-join runs once over A and the
-    accumulated key set."""
+    drained keys."""
     from ..sources.loaders import load_table
-    from .sources import documents_stream
 
-    docs = load_table(spark, "documents", sf_dir)
+    docs = load_table(documents.sparkSession, "documents", sf_dir)
     snap_a = (
         docs.where(F.col("doc_id") % 10 != 0)
         .select(F.col("doc_id").alias("a_id"), F.md5("text").alias("old_hash"))
         .localCheckpoint()
     )
-    if b_stream is None:
-        b_stream = documents_stream(spark, sf_dir)
-    b = b_stream.where(F.col("doc_id") % 7 != 0).select(
+    b = documents.where(F.col("doc_id") % 7 != 0).select(
         F.col("doc_id").alias("b_id"),
         F.md5(
             F.when(
@@ -535,82 +477,28 @@ def run_snapshot_diff_availablenow(
             ).otherwise(F.col("text"))
         ).alias("new_hash"),
     )
-    root = mkscratch(prefix=f"fte_{query_name}_")
-    emit_root = os.path.join(root, "emit")
-    seen_root = os.path.join(root, "seen")
-    ck = os.path.join(root, "ck")
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        classified = (
-            batch_df.join(snap_a, batch_df["b_id"] == snap_a["a_id"], "left")
-            .where(F.col("a_id").isNull() | (F.col("old_hash") != F.col("new_hash")))
-            .select(
-                F.col("b_id").alias("doc_id"),
-                F.when(F.col("a_id").isNull(), "added").otherwise("changed").alias(
-                    "status"
-                ),
-                "old_hash",
-                "new_hash",
-            )
-        )
-        # batch-id-keyed overwrite => idempotent under foreachBatch retries
-        classified.write.mode("overwrite").parquet(
-            os.path.join(emit_root, f"batch-{batch_id}")
-        )
-        batch_df.select(F.col("b_id").alias("seen_id")).write.mode("overwrite").parquet(
-            os.path.join(seen_root, f"batch-{batch_id}")
-        )
-
-    q = (
-        b.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    classified = b.join(snap_a, b["b_id"] == snap_a["a_id"], "left").select(
+        F.col("b_id").alias("doc_id"),
+        F.when(F.col("a_id").isNull(), "added")
+        .when(F.col("old_hash") != F.col("new_hash"), "changed")
+        .otherwise("unchanged")
+        .alias("status"),
+        "old_hash",
+        "new_hash",
     )
-    q.awaitTermination()
-
-    # enumerate batch dirs explicitly: a "batch-*" glob path would route
-    # through FileStreamSink.hasMetadata and log a spurious full stack
-    # trace per read on the non-existent literal path
-    def _batch_dirs(root: str) -> list[str]:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            os.path.join(root, d)
-            for d in os.listdir(root)
-            if d.startswith("batch-")
-        )
-
-    removed_from = snap_a
-    seen_dirs = _batch_dirs(seen_root)
-    if seen_dirs:
-        seen = spark.read.parquet(*seen_dirs)
-        removed_from = snap_a.join(
-            seen, snap_a["a_id"] == seen["seen_id"], "left_anti"
-        )
-    removed = removed_from.select(
+    drained = drain_availablenow(classified, query_name)
+    removed = snap_a.join(
+        drained, snap_a["a_id"] == drained["doc_id"], "left_anti"
+    ).select(
         F.col("a_id").alias("doc_id"),
         F.lit("removed").alias("status"),
         "old_hash",
         F.lit(None).cast("string").alias("new_hash"),
     )
-    emit_dirs = _batch_dirs(emit_root)
-    if emit_dirs:
-        emitted = spark.read.parquet(*emit_dirs)
-        out = emitted.unionByName(removed)
-    else:
-        out = removed
-    # pin the drained values before the temp dirs can change underneath
-    return out.localCheckpoint()
+    return drained.where(F.col("status") != "unchanged").unionByName(removed)
 
 
-def run_rollup_merge_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str,
-    b_stream: DataFrame | None = None,
-) -> DataFrame:
+def run_rollup_merge_availablenow(events: DataFrame, query_name: str) -> DataFrame:
     """Streaming incremental ROLLUP -- materialized-view maintenance, the
     most common production streaming job: each micro-batch is reduced to
     per-user partial aggregates (count, integer-cents sum, max event ms --
@@ -618,7 +506,7 @@ def run_rollup_merge_availablenow(
     drained state must equal the one-shot batch aggregate because the
     folds are associative and commutative per key (count/sum add, max
     maxes), so ANY chunking lands on the same rollup -- pinned by
-    tests/test_streaming.py::test_streaming_rollup_chunked_matches_batch.
+    tests/test_streaming.py::test_streaming_query_replays_to_oracle.
 
     Unlike the LWW cdc merge, an additive fold is NOT naturally
     idempotent: foreachBatch is at-least-once, and re-folding a replayed
@@ -631,11 +519,8 @@ def run_rollup_merge_availablenow(
     the same -- the rollup table would be bucketed by user_id in a real
     layout, making the fold's state side Exchange-free."""
     from ..functions.time import epoch_ms
-    from .sources import events_stream
 
-    if b_stream is None:
-        b_stream = events_stream(spark, sf_dir)
-    rows = b_stream.select(
+    rows = events.select(
         "user_id",
         F.round(F.col("value") * 100).cast("bigint").alias("cents_v"),
         epoch_ms("ts").alias("ms"),
@@ -806,29 +691,10 @@ def hll_estimate_per_window(regs: DataFrame, p: int = None) -> DataFrame:
     )
 
 
-def run_windowed_topk_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_topk_gate",
-) -> DataFrame:
-    """Gate wrapper for the gated windowed heavy hitters: drain the
-    streaming windowed counts (append mode, availableNow, fresh
-    checkpoint) and rank top-k per window in the bounded batch stage.
-    Oracle = :func:`windowed_topk_oracle` (batch counts cut at the final
-    watermark, ranked the same)."""
-    from .sources import events_stream
-
-    return rank_topk_per_window(
-        drain_availablenow(
-            streaming_windowed_topk(events_stream(spark, sf_dir)), query_name
-        )
-    )
-
-
 def windowed_topk_oracle(
     window_ms: int = SKETCH_WINDOW_MS, k: int = 3, delay_ms: int = 60000
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_topk_availablenow`: tumbling
+    """DuckDB oracle for the streaming_windowed_topk catalog entry: tumbling
     epoch-aligned windows over events, cut at max(ts) - delay (the
     append-mode fire-once horizon), top-k per window (count desc, type
     asc)."""
@@ -851,27 +717,10 @@ SELECT window_end_ms, rank, event_type, cnt FROM (
 """
 
 
-def run_windowed_hll_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_hll_gate",
-) -> DataFrame:
-    """Gate wrapper for the gated windowed HLL distinct: drain the
-    streaming register maxes and fold the estimate in the bounded batch
-    stage. Oracle = :func:`windowed_hll_oracle`."""
-    from .sources import events_stream
-
-    return hll_estimate_per_window(
-        drain_availablenow(
-            streaming_windowed_hll(events_stream(spark, sf_dir)), query_name
-        )
-    )
-
-
 def windowed_hll_oracle(
     window_ms: int = SKETCH_WINDOW_MS, delay_ms: int = 60000
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_hll_availablenow`: the batch
+    """DuckDB oracle for the streaming_windowed_hll catalog entry: the batch
     HLL register build per epoch-aligned window, cut at the final
     watermark, folded with the same single-literal float arithmetic as
     the batch hll_distinct oracle."""
@@ -913,38 +762,8 @@ SELECT window_end_ms,
 FROM regs GROUP BY 1
 """
 
-def run_concurrency_profile_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_concurrency_profile_gate",
-) -> DataFrame:
-    """Streaming twin of the batch concurrency profile: the stateful
-    session_window sessionization rides the stream (fire-once per merged
-    session at watermark passage), and the sweep-line level computation
-    runs as a bounded batch stage over the DRAINED session intervals --
-    the windowed_topk composition pattern (the stream pays one stateful
-    shuffle; the profile input is session-sized, never raw events).
-
-    Gated since round 8 (catalog name streaming_concurrency_profile).
-
-    Session_window ends already carry the gap, so the drained intervals
-    feed :func:`~..operators.sessions.concurrency_from_intervals`
-    directly. The profile is a deterministic function of the session
-    SET, so chunked-replay invariance is inherited from the pinned
-    sessionize drain. Oracle = :func:`concurrency_profile_oracle` (batch
-    gap sessions shifted by the gap, cut at the final watermark, same
-    sweep SQL)."""
-    from ..operators.sessions import concurrency_from_intervals
-
-    sess = run_sessionize_availablenow(spark, sf_dir, query_name)
-    iv = sess.select(
-        F.col("session_start_ms").alias("s"), F.col("session_end_ms").alias("e")
-    )
-    return concurrency_from_intervals(iv)
-
-
 def concurrency_profile_oracle(delay_ms: int = 60000) -> str:
-    """DuckDB oracle for :func:`run_concurrency_profile_availablenow`:
+    """DuckDB oracle for the streaming_concurrency_profile catalog entry:
     the streaming_sessionize oracle's session set (batch sessions, end
     shifted by the gap, cut at the final watermark) through the shared
     sweep SQL."""
@@ -1008,27 +827,12 @@ def streaming_windowed_histogram(
     )
 
 
-def run_windowed_histogram_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_histogram_gate",
-) -> DataFrame:
-    """Gate wrapper for the gated windowed histogram: append mode,
-    availableNow drain, fresh checkpoint. Oracle =
-    :func:`windowed_histogram_oracle`."""
-    from .sources import events_stream
-
-    return drain_availablenow(
-        streaming_windowed_histogram(events_stream(spark, sf_dir)), query_name
-    )
-
-
 def windowed_histogram_oracle(
     window_ms: int = SKETCH_WINDOW_MS,
     delay_ms: int = 60000,
     bin_cents: int = 1000,
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_histogram_availablenow`:
+    """DuckDB oracle for the streaming_windowed_histogram catalog entry:
     batch per-window fixed-width bin counts over epoch-aligned tumbling
     windows, cut at max(ts) - delay (the append-mode fire-once
     horizon)."""
@@ -1046,12 +850,7 @@ GROUP BY window_end_ms, bin
 """
 
 
-def run_scd2_maintenance_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str,
-    b_stream: DataFrame | None = None,
-) -> DataFrame:
+def run_scd2_maintenance_availablenow(events: DataFrame, query_name: str) -> DataFrame:
     """Streaming SCD2 HISTORY MAINTENANCE -- the third leg of the SCD2
     family: the batch scd2_user_history derives validity intervals in one
     shot, streaming_pit_enrichment CONSUMES a standing SCD2 dimension,
@@ -1067,7 +866,7 @@ def run_scd2_maintenance_availablenow(
     rows keep their bound, open rows of absent users stay open). The
     drained table equals the one-shot batch lead window under ANY
     chunking (pinned by
-    tests/test_streaming.py::test_streaming_scd2_chunked_matches_batch)
+    tests/test_streaming.py::test_streaming_query_replays_to_oracle)
     because the close bound a row receives is exactly the global
     next-event timestamp: intra-batch rows get it from the batch lead,
     and the batch-boundary row gets it from the next batch the user
@@ -1096,16 +895,13 @@ def run_scd2_maintenance_availablenow(
     incremental rollup."""
     from pyspark.sql import Window
     from ..functions.time import epoch_ms, epoch_us
-    from .sources import events_stream
 
-    if b_stream is None:
-        b_stream = events_stream(spark, sf_dir)
     # ms is the OUTPUT value (the oracle emits epoch_ms); us is the ORDERING
     # key at the timestamp's full microsecond resolution -- ordering by the
     # truncated ms would tie same-millisecond events that the oracle's
     # ORDER BY ts distinguishes (review catch; latent on this perfectly
     # ordered testdata, real on any same-ms feed)
-    rows = b_stream.select(
+    rows = events.select(
         "user_id",
         "event_id",
         epoch_ms("ts").alias("ms"),
@@ -1192,40 +988,13 @@ def quantile_from_binned(
     )
 
 
-def run_windowed_quantile_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_quantile_gate",
-) -> DataFrame:
-    """Streaming windowed quantiles -- per event-time window, discrete
-    percentile estimates at fixed-bin resolution. The stream pays exactly
-    what the gated windowed histogram pays (one stateful shuffle keyed on
-    (window, bin), watermark-bounded state: fixed-width bin counts are
-    the parameter-free mergeable fold); the quantile walk runs as a
-    bounded batch stage over the DRAIN -- the windowed_topk/concurrency
-    composition pattern. Completes the quantile family on-stream next to
-    quantile_merge_shards' shard axis: same estimate-vs-sketch trade,
-    windows instead of shards. Oracle = :func:`windowed_quantile_oracle`
-    (the batch histogram cut at the final watermark, walked with
-    identical integer arithmetic).
-
-    Gated since round 10 (catalog name streaming_windowed_quantile).
-    """
-    from .sources import events_stream
-
-    bins = drain_availablenow(
-        streaming_windowed_histogram(events_stream(spark, sf_dir)), query_name
-    )
-    return quantile_from_binned(bins)
-
-
 def windowed_quantile_oracle(
     window_ms: int = SKETCH_WINDOW_MS,
     delay_ms: int = 60000,
     bin_cents: int = 1000,
     pcts: tuple = (25, 50, 75, 90),
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_quantile_availablenow`: the
+    """DuckDB oracle for the streaming_windowed_quantile catalog entry: the
     windowed-histogram oracle as a CTE (nested WITH -- the
     ann_recall_at_k precedent), the same integer cross-multiplied
     cumulative walk, BIGINT casts on the DuckDB sum() outputs (HUGEINT
@@ -1452,30 +1221,12 @@ def cms_window_estimates(
     )
 
 
-def run_windowed_cms_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_cms_gate",
-) -> DataFrame:
-    """Gate wrapper for the gated windowed CMS: append mode, availableNow
-    drain of the (window, r, bucket) cells, fresh checkpoint; then the
-    bounded panel-estimate batch stage. Oracle =
-    :func:`windowed_cms_oracle`."""
-    from ..sources import load_table
-    from .sources import events_stream
-
-    cells = drain_availablenow(
-        streaming_windowed_cms(events_stream(spark, sf_dir)), query_name
-    )
-    return cms_window_estimates(cells, load_table(spark, "events", sf_dir))
-
-
 def windowed_cms_oracle(
     window_ms: int = SKETCH_WINDOW_MS,
     delay_ms: int = 60000,
     width: int = CMS_STREAM_WIDTH,
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_cms_availablenow`: the same
+    """DuckDB oracle for the streaming_windowed_cms catalog entry: the same
     per-(window, r, bucket) CMS fold over epoch-aligned tumbling windows
     cut at max(ts) - delay (the append-mode fire-once horizon), the same
     md5-panel probe, min-over-rows estimate with absent cells read as 0,
@@ -1713,30 +1464,12 @@ def minhash_window_similarity(
     )
 
 
-def run_windowed_minhash_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_minhash_gate",
-) -> DataFrame:
-    """Gate wrapper for the staged windowed MinHash: append mode,
-    availableNow drain of the (window, r) signature cells, fresh
-    checkpoint; then the bounded consecutive-window similarity batch
-    stage. Oracle = :func:`windowed_minhash_oracle`."""
-    from ..sources import load_table
-    from .sources import events_stream
-
-    cells = drain_availablenow(
-        streaming_windowed_minhash(events_stream(spark, sf_dir)), query_name
-    )
-    return minhash_window_similarity(cells, load_table(spark, "events", sf_dir))
-
-
 def windowed_minhash_oracle(
     window_ms: int = SKETCH_WINDOW_MS,
     delay_ms: int = 60000,
     k: int = MH_STREAM_K,
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_minhash_availablenow`: the
+    """DuckDB oracle for the streaming_windowed_minhash catalog entry: the
     same per-(window, r) min fold over epoch-aligned tumbling windows
     cut at max(ts) - delay (the append-mode fire-once horizon), the
     same consecutive-window pairing, signature-match count and exact
@@ -1951,30 +1684,12 @@ def bloom_window_membership(
     )
 
 
-def run_windowed_bloom_availablenow(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "streaming_windowed_bloom_gate",
-) -> DataFrame:
-    """Gate wrapper for the staged windowed Bloom: append mode,
-    availableNow drain of the (window, word) bit vectors, fresh
-    checkpoint; then the bounded panel-membership batch stage. Oracle =
-    :func:`windowed_bloom_oracle`."""
-    from ..sources import load_table
-    from .sources import events_stream
-
-    words = drain_availablenow(
-        streaming_windowed_bloom(events_stream(spark, sf_dir)), query_name
-    )
-    return bloom_window_membership(words, load_table(spark, "events", sf_dir))
-
-
 def windowed_bloom_oracle(
     window_ms: int = SKETCH_WINDOW_MS,
     delay_ms: int = 60000,
     n_words: int = BLOOM_STREAM_WORDS,
 ) -> str:
-    """DuckDB oracle for :func:`run_windowed_bloom_availablenow`: the same
+    """DuckDB oracle for the streaming_windowed_bloom catalog entry: the same
     per-(window, word) bit_or fold over epoch-aligned tumbling windows cut
     at max(ts) - delay (the append-mode fire-once horizon), the same
     md5-panel probe cells, min-over-cells membership with absent words

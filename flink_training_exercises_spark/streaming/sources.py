@@ -30,6 +30,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# Stream schema of each table a catalog entry can declare as its source
+# (plans.catalog.register(source=...)).
+STREAM_SCHEMAS = {
+    "events": (
+        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
+}
+
+
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``table`` (a key of STREAM_SCHEMAS) as a file-source stream. Each
+    table is a single parquet FILE; the file stream source needs a
+    directory basePath, so the glob filter picks the file within the sf
+    dir."""
+    return (
+        spark.readStream.schema(STREAM_SCHEMAS[table])
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file-source stream, `ts` as TIMESTAMP_NTZ with
     the same instants as the batch loader.
@@ -41,38 +64,17 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos-assuming `div 1000`, which put the watermark in 1970 and emitted 0
     session rows. tests/test_streaming.py::test_stream_batch_ts_parity pins
     stream == batch max(ts) so any unit drift fails fast.)"""
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    # the events table is a single parquet FILE; the file stream source needs
-    # a directory basePath, so glob-filter within the sf dir
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    return table_stream(spark, sf_dir, "events")
 
 
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table as a file-source stream (same glob-within-dir
-    shape as events_stream) -- the arriving-corpus side of incremental
-    ingest twins (streaming snapshot diff)."""
-    schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def rides_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of plans.rides.rides_view (same shared SQL, applied to
-    a streaming relation -- Catalyst treats it identically)."""
-    events_stream(spark, sf_dir).createOrReplaceTempView("__fte_events_stream")
+def rides_stream(events: DataFrame) -> DataFrame:
+    """Streaming twin of plans.rides.rides_view: the same shared SQL
+    applied to an events stream (Catalyst treats a streaming relation
+    identically)."""
     from ..plans.rides import _fill, _spark_ms_to_ts
 
-    return spark.sql(_fill("__fte_events_stream", _spark_ms_to_ts))
+    events.createOrReplaceTempView("__fte_events_stream")
+    return events.sparkSession.sql(_fill("__fte_events_stream", _spark_ms_to_ts))
 
 
 def _stage_chunks(df: DataFrame, time_col: str, n_chunks: int) -> tuple[str, list[str]]:

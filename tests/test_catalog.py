@@ -83,7 +83,8 @@ def test_no_stacked_registrations():
     block inserted between another entry's decorator and its def (the
     value_histogram/value_outliers_mad round-4 bug: both names silently
     served the histogram). Every registered name must own a distinct
-    function."""
-    fns = [spec.spark for spec in CATALOG.values()]
+    function; for a streaming entry that is the decorated fn(stream,
+    sf_dir) its builder wraps."""
+    fns = [getattr(spec.spark, "__wrapped__", spec.spark) for spec in CATALOG.values()]
     dupes = {f.__name__ for f in fns if fns.count(f) > 1}
     assert not dupes, f"stacked @register decorators on: {dupes}"

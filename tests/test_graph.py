@@ -38,9 +38,12 @@ def test_transition_probabilities(spark):
     assert got[("c", "a")] == 1.0
 
 
-def _expected_ranks(iters, d=0.85):
-    ranks = {"a": 1.0, "b": 1.0, "c": 1.0}
-    probs = {("a", "b"): 0.25, ("a", "c"): 0.75, ("b", "c"): 1.0, ("c", "a"): 1.0}
+def _expected_ranks(iters, d=0.85, edges=EDGES):
+    out = {}
+    for s_, _t, w in edges:
+        out[s_] = out.get(s_, 0.0) + w
+    probs = {(s_, t): w / out[s_] for s_, t, w in edges}
+    ranks = {v: 1.0 for e in edges for v in e[:2]}
     for _ in range(iters):
         new = {}
         for v in ranks:
@@ -72,6 +75,28 @@ def test_pagerank_exact_mode_close_to_float(spark):
     }
     for v in f:
         assert e[v] == pytest.approx(f[v], abs=1e-6)
+
+
+@pytest.mark.parametrize("exact", [False, True])
+def test_pagerank_rereads_edges_rewritten_at_same_path(spark, tmp_path, exact):
+    """An edge file rewritten at the same path is read again by the next
+    PageRank run in the same session, with no clearCache in between: the
+    frames the operator materializes for its iterations must not be served
+    from the first run."""
+    import pandas as pd
+
+    path = str(tmp_path / "edges.parquet")
+    rewired = [("a", "b", 2.0), ("b", "d", 1.0), ("d", "a", 1.0), ("c", "a", 1.0)]
+    for edges in (EDGES, rewired):
+        pd.DataFrame(edges, columns=["src", "dst", "weight"]).to_parquet(path, index=False)
+        got = {
+            r["vertex"]: r["rank"]
+            for r in weighted_pagerank(
+                spark.read.parquet(path), iterations=3, exact=exact
+            ).collect()
+        }
+        want = _expected_ranks(3, edges=edges)
+        assert got == pytest.approx(want, abs=1e-6)
 
 
 def test_connected_components_chain_clique_and_singleton_pair(spark):

@@ -1189,6 +1189,7 @@ def test_scd2_fold_equals_batch_lead_for_any_event_set(spark, data, rows):
         run_scd2_maintenance_availablenow,
     )
     from flink_training_exercises_spark.streaming.sources import (
+        STREAM_SCHEMAS,
         replay_to_files,
     )
 
@@ -1208,12 +1209,8 @@ def test_scd2_fold_equals_batch_lead_for_any_event_set(spark, data, rows):
     d = _tempfile.mkdtemp(prefix="scd2_prop_")
     try:
         replay_to_files(df, "ts", d, n_chunks=n_chunks)
-        schema = (
-            "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-            "value DOUBLE, props STRING"
-        )
         chunked = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(STREAM_SCHEMAS["events"])
             .option("maxFilesPerTrigger", "1")
             .parquet(d)
         )
@@ -1221,8 +1218,7 @@ def test_scd2_fold_equals_batch_lead_for_any_event_set(spark, data, rows):
             map(
                 tuple,
                 run_scd2_maintenance_availablenow(
-                    spark, "unused", f"scd2_prop_{_uuid.uuid4().hex[:8]}",
-                    b_stream=chunked,
+                    chunked, f"scd2_prop_{_uuid.uuid4().hex[:8]}"
                 ).collect(),
             )
         )

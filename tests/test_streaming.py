@@ -1,6 +1,11 @@
 """Streaming semantics: stream/batch parity, fire-once windows, late-data
-dropping at the watermark, checkpoint-resume (S2), stateful streaming (W5)."""
+dropping at the watermark, checkpoint-resume (S2), stateful streaming (W5),
+and the replay differential: every streaming catalog entry, fed its source
+as chronological micro-batches, equals its oracle."""
 
+import os
+import shutil
+import tempfile
 import uuid
 
 import pytest
@@ -8,29 +13,123 @@ from pyspark.sql import functions as F
 
 from flink_training_exercises_spark.operators.stateful import travel_time_window
 from flink_training_exercises_spark.operators.windows import popular_places
+from flink_training_exercises_spark.plans.catalog import CATALOG, release_query_state
+from flink_training_exercises_spark.plans.differential import compare
 from flink_training_exercises_spark.plans.rides import rides_view
+from flink_training_exercises_spark.scratch import scratch_root
+from flink_training_exercises_spark.sources import load_table
 from flink_training_exercises_spark.streaming.queries import (
+    drain_availablenow,
     streaming_popular_places,
     streaming_ride_cleansing,
 )
 from flink_training_exercises_spark.streaming.sources import (
+    STREAM_SCHEMAS,
     events_stream,
     replay_to_files,
     rides_stream,
 )
 from flink_training_exercises_spark.streaming.stateful import streaming_travel_time
 
+_EVENTS_SCHEMA = STREAM_SCHEMAS["events"]
 
-def _drain(df, name, output_mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return df.sparkSession.sql(f"SELECT * FROM {name}")
+
+def _chunked_stream(spark, chunk_dir, schema=_EVENTS_SCHEMA):
+    """The replay chunks in ``chunk_dir`` as a stream, one file per
+    micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(chunk_dir)
+
+
+def _arrive(chunks, live):
+    """Copy replay chunks into the live source dir; copy2 keeps their
+    increasing mtimes, so the file source still reads them in order."""
+    for c in chunks:
+        shutil.copy2(c, os.path.join(live, os.path.basename(c)))
+
+
+def _with_own_scratch(run):
+    """``run()`` with mkscratch pointed at an empty scratch root of its
+    own, so other processes sharing the scratch root cannot show up;
+    returns its result and the ``fte_*`` entries it left there."""
+    root = tempfile.mkdtemp(prefix="own_scratch_", dir=scratch_root())
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_SCRATCH", root)
+            out = run()
+        return out, {e for e in os.listdir(root) if e.startswith("fte_")}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# The column each source's replay chunks are chronological in.
+_REPLAY_ORDER = {"events": "ts", "documents": "doc_id"}
+
+
+class ReplayRuns:
+    """Each streaming catalog entry run at most once per session on its
+    source table replayed as 4 chronological chunks, one per micro-batch
+    (chunks staged once per source). The differential below and the
+    entry-specific invariants read the same run."""
+
+    def __init__(self, catalog_runs, root):
+        self.catalog_runs, self.root = catalog_runs, root
+        self._chunks, self._runs = {}, {}
+        self.leaked = {}  # entry -> fte_* scratch entries its run left behind
+
+    def stream(self, source):
+        if source not in self._chunks:
+            runs = self.catalog_runs
+            d = os.path.join(self.root, source)
+            table = load_table(runs.spark, source, runs.sf_dir)
+            replay_to_files(table, _REPLAY_ORDER[source], d, n_chunks=4)
+            self._chunks[source] = d
+        return _chunked_stream(self.catalog_runs.spark, self._chunks[source], STREAM_SCHEMAS[source])
+
+    def query(self, name):
+        if name not in self._runs:
+            spec, runs = CATALOG[name], self.catalog_runs
+            stream = self.stream(spec.source)
+            try:
+                self._runs[name], self.leaked[name] = _with_own_scratch(
+                    lambda: spec.spark.__wrapped__(stream, runs.sf_dir).toPandas()
+                )
+            finally:
+                release_query_state(runs.spark)
+        return self._runs[name]
+
+    def problems(self, name):
+        """compare()'s problems for the replayed entry against its oracle."""
+        return compare(name, self.query(name), self.catalog_runs.oracle(name))
+
+
+@pytest.fixture(scope="session")
+def replay_runs(catalog_runs, tmp_path_factory):
+    return ReplayRuns(catalog_runs, str(tmp_path_factory.mktemp("replay")))
+
+
+REPLAYED = sorted(n for n, spec in CATALOG.items() if spec.source)
+# A ride's END event sits next to its START in events.ts order but is
+# stamped 1-60 min later, so a chronological replay of events delivers
+# rides out of ride-time order, and the keyed model state of the travel
+# time predictor is folded in a different order than the one-batch drain.
+_REPLAY_XFAIL = {
+    "streaming_travel_time_stateful": pytest.mark.xfail(
+        strict=True, reason="events replay is not in ride-time order"
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "name", [pytest.param(n, marks=_REPLAY_XFAIL.get(n, ())) for n in REPLAYED]
+)
+def test_streaming_query_replays_to_oracle(replay_runs, name):
+    """Chunked == single-batch for every streaming entry that declares a
+    source: fed 4 chronological micro-batches instead of one, with the
+    watermark advancing between them, it still equals its oracle (which
+    its single-batch drain equals in test_catalog), and its drain leaves
+    no scratch directory behind."""
+    assert replay_runs.problems(name) == []
+    assert replay_runs.leaked[name] == set()
 
 
 def test_stream_batch_ts_parity(spark, sf_small):
@@ -43,7 +142,7 @@ def test_stream_batch_ts_parity(spark, sf_small):
     from flink_training_exercises_spark.sources import load_table
 
     name = f"ts_parity_{_uuid.uuid4().hex[:8]}"
-    got = _drain(events_stream(spark, sf_small).select("ts"), name)
+    got = drain_availablenow(events_stream(spark, sf_small).select("ts"), name)
     assert dict(got.dtypes)["ts"] == "timestamp_ntz"
     s_min, s_max = got.agg(F.min("ts"), F.max("ts")).first()
     b_min, b_max = (
@@ -58,10 +157,10 @@ def test_stream_batch_parity_popular_places(spark, sf_small):
     horizon is unflushed by design -- Flink would equally still be waiting)."""
     name = f"pp_{uuid.uuid4().hex[:8]}"
     stream = streaming_popular_places(
-        rides_stream(spark, sf_small), watermark="60 seconds",
+        rides_stream(events_stream(spark, sf_small)), watermark="60 seconds",
         window="1 day", slide="6 hours", threshold=2,
     )
-    got = _drain(stream, name)
+    got = drain_availablenow(stream, name)
     batch = popular_places(
         rides_view(spark, sf_small), window="1 day", slide="6 hours", threshold=2
     )
@@ -76,16 +175,16 @@ def test_stream_batch_parity_popular_places(spark, sf_small):
 
 
 def test_run_availablenow_is_exact_horizon_cut(spark, sf_small):
-    """The gate runner's output is EXACTLY the batch result cut at the final
+    """The drained stream is EXACTLY the batch result cut at the final
     watermark: nothing extra (no window emitted early / twice), nothing
     missing below the horizon -- the fire-once contract the oracle checks."""
-    from flink_training_exercises_spark.streaming.queries import (
-        run_popular_places_availablenow,
-    )
-
     name = f"ppgate_{uuid.uuid4().hex[:8]}"
-    got = run_popular_places_availablenow(
-        spark, sf_small, window="1 day", slide="6 hours", threshold=2, query_name=name
+    got = drain_availablenow(
+        streaming_popular_places(
+            rides_stream(events_stream(spark, sf_small)),
+            window="1 day", slide="6 hours", threshold=2,
+        ),
+        name,
     )
     batch = popular_places(
         rides_view(spark, sf_small), window="1 day", slide="6 hours", threshold=2
@@ -110,7 +209,7 @@ def test_run_availablenow_is_exact_horizon_cut(spark, sf_small):
 
 def test_streaming_ride_cleansing_stateless_parity(spark, sf_small):
     name = f"rc_{uuid.uuid4().hex[:8]}"
-    got = _drain(streaming_ride_cleansing(rides_stream(spark, sf_small)), name)
+    got = drain_availablenow(streaming_ride_cleansing(rides_stream(events_stream(spark, sf_small))), name)
     batch_n = streaming_ride_cleansing(rides_view(spark, sf_small)).count()
     assert got.count() == batch_n > 0
 
@@ -207,7 +306,7 @@ def test_streaming_stateful_travel_time_matches_batch(spark, sf_small):
     """W5 streaming (applyInPandasWithState) == batch window form when the
     full history arrives chronologically."""
     name = f"tt_{uuid.uuid4().hex[:8]}"
-    got = _drain(streaming_travel_time(rides_stream(spark, sf_small)), name)
+    got = drain_availablenow(streaming_travel_time(rides_stream(events_stream(spark, sf_small))), name)
     s = {(r["ride_id"], r["predicted_minutes"]) for r in got.collect()}
     b = {
         (r["ride_id"], r["predicted_minutes"])
@@ -223,7 +322,7 @@ def test_streaming_exact_dedup(spark, sf_small):
     from flink_training_exercises_spark.streaming.sources import events_stream
 
     name = f"dd_{uuid.uuid4().hex[:8]}"
-    got = _drain(
+    got = drain_availablenow(
         streaming_exact_dedup(events_stream(spark, sf_small), ["user_id", "event_type"]),
         name,
     )
@@ -253,7 +352,7 @@ def test_streaming_distinct_users_matches_batch(spark, sf_small):
     name = f"sdu_{_uuid.uuid4().hex[:8]}"
     got = {
         (r["window_end_ms"], r["event_type"]): r["distinct_users"]
-        for r in _drain(streaming_distinct_users(events_stream(spark, sf_small)), name).collect()
+        for r in drain_availablenow(streaming_distinct_users(events_stream(spark, sf_small)), name).collect()
     }
     ev = load_table(spark, "events", sf_small).select(
         F.unix_millis(F.date_trunc("hour", "ts").cast("timestamp")).alias("hour_ms"),
@@ -284,7 +383,7 @@ def test_streaming_interval_join_matches_batch(spark, sf_small):
     name = f"sij_{_uuid.uuid4().hex[:8]}"
     got = {
         (r["purchase_id"], r["click_id"])
-        for r in _drain(
+        for r in drain_availablenow(
             streaming_interval_join(
                 events_stream(spark, sf_small).where(F.col("event_type") == "click"),
                 events_stream(spark, sf_small).where(F.col("event_type") == "purchase"),
@@ -311,140 +410,53 @@ def test_streaming_interval_join_matches_batch(spark, sf_small):
     assert got == expect and len(got) > 0
 
 
-def test_sessionize_emissions_invariant_under_chunked_replay(spark, sf_small, tmp_path):
-    """The gated streaming queries drain a single-file source in ONE
-    micro-batch; this pins that the emitted session set is IDENTICAL when
-    the same events arrive as 4 chronological micro-batches with the
-    watermark advancing between them -- emission-set invariance under
-    micro-batch partitioning, the property that makes the single-batch
-    oracle valid for a real incremental stream."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.operators.sessions import streaming_sessionize
-    from flink_training_exercises_spark.sources import load_table
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "chunks")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    name_c = f"chunked_{_uuid.uuid4().hex[:8]}"
-    got_chunked = {
-        tuple(r) for r in _drain(streaming_sessionize(chunked), name_c).collect()
-    }
-    name_s = f"single_{_uuid.uuid4().hex[:8]}"
-    got_single = {
-        tuple(r)
-        for r in _drain(streaming_sessionize(events_stream(spark, sf_small)), name_s).collect()
-    }
-    assert len(got_single) > 100
-    assert got_chunked == got_single
+def test_sessionize_emissions_invariant_under_chunked_replay(replay_runs):
+    """The emitted session set is IDENTICAL when the events arrive as 4
+    chronological micro-batches with the watermark advancing between them
+    -- emission-set invariance under micro-batch partitioning, the
+    property that makes the single-batch oracle valid for a real
+    incremental stream."""
+    assert replay_runs.problems("streaming_sessionize") == []
+    assert len(replay_runs.query("streaming_sessionize")) > 100
 
 
-def test_streaming_cdc_merge_chunked(spark, sf_small, tmp_path):
+def test_streaming_cdc_merge_chunked(replay_runs, catalog_runs):
     """Batch-boundary invariance of the foreachBatch MERGE: folding the
     change stream in 4 chronological micro-batches must land on exactly
     the one-shot batch LWW state -- including deletes applied across
     batch boundaries (tombstones in state)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_cdc_merge_availablenow,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "chunks")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-
-    def project(df):
-        return df.select(
-            "user_id",
-            "event_type",
-            "value",
-            epoch_ms("ts").alias("state_ms"),
-            "event_id",
-            (F.col("event_type") == "error").alias("is_delete"),
-        )
-
-    chunked = project(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in run_cdc_merge_availablenow(
-            chunked,
-            keys=["user_id"],
-            seq_cols=["state_ms", "event_id"],
-            query_name=f"cdc_chunked_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.desc("state_ms"), F.desc("event_id"))
-    want = {
-        tuple(r)
-        for r in project(ev)
-        .withColumn("rk", F.row_number().over(w))
-        .where((F.col("rk") == 1) & (~F.col("is_delete")))
-        .drop("rk", "is_delete")
-        .collect()
-    }
-    assert got == want and got
+    assert replay_runs.problems("streaming_cdc_merge") == []
     # deletes must actually occur in the final window for the tombstone
     # path to be exercised
-    assert project(ev).withColumn("rk", F.row_number().over(w)).where(
-        (F.col("rk") == 1) & F.col("is_delete")
-    ).count() > 0
+    (n_deleted,) = catalog_runs.duck.execute(
+        """SELECT count(*) FROM (
+             SELECT event_type, row_number() OVER (
+               PARTITION BY user_id ORDER BY epoch_ms(ts) DESC, event_id DESC) AS rk
+             FROM events)
+           WHERE rk = 1 AND event_type = 'error'"""
+    ).fetchone()
+    assert n_deleted > 0
 
 
-def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path):
+def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path, catalog_runs):
     """W6 for the foreachBatch MERGE: drain the first half of the change
     stream, 'crash' (query ends), then resume with the SAME checkpoint and
     state dirs after the second half arrives -- the WAL skips committed
     batches, new ones fold onto the standing parquet state (tombstones
     included), and the final state equals the one-shot batch LWW."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
     from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.sources import load_table
     from flink_training_exercises_spark.streaming.queries import (
         run_cdc_merge_availablenow,
     )
 
     ev = load_table(spark, "events", sf_small)
-    staged = str(tmp_path / "staged")
-    replay_to_files(ev, "ts", staged, n_chunks=4)
-    chunks = sorted(os.listdir(staged))
+    chunks = replay_to_files(ev, "ts", str(tmp_path / "staged"), n_chunks=4)
     live = str(tmp_path / "live")
     os.makedirs(live)
-    for c in chunks[:2]:
-        shutil.copy2(os.path.join(staged, c), os.path.join(live, c))
+    root = str(tmp_path / "fold")
 
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-
-    def project(df):
-        return df.select(
+    def drain(tag):
+        changes = _chunked_stream(spark, live).select(
             "user_id",
             "event_type",
             "value",
@@ -452,42 +464,17 @@ def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path):
             "event_id",
             (F.col("event_type") == "error").alias("is_delete"),
         )
-
-    def stream():
-        return project(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(live)
+        return run_cdc_merge_availablenow(
+            changes, ["user_id"], ["state_ms", "event_id"], f"cdc_resume_{tag}", root=root
         )
 
-    root = str(tmp_path / "fold")
-    name = f"cdc_resume_{_uuid.uuid4().hex[:8]}"
     # run 1: only the first two chunks exist; drains and terminates
-    partial = run_cdc_merge_availablenow(
-        stream(), ["user_id"], ["state_ms", "event_id"], name + "_a",
-        root=root,
-    ).count()
-    assert partial > 0
+    _arrive(chunks[:2], live)
+    assert drain("a").count() > 0
     # the rest of the stream arrives; resume from the same checkpoint
-    for c in chunks[2:]:
-        shutil.copy2(os.path.join(staged, c), os.path.join(live, c))
-    got = {
-        tuple(r)
-        for r in run_cdc_merge_availablenow(
-            stream(), ["user_id"], ["state_ms", "event_id"], name + "_b",
-            root=root,
-        ).collect()
-    }
-    w = W.partitionBy("user_id").orderBy(F.desc("state_ms"), F.desc("event_id"))
-    want = {
-        tuple(r)
-        for r in project(ev)
-        .withColumn("rk", F.row_number().over(w))
-        .where((F.col("rk") == 1) & (~F.col("is_delete")))
-        .drop("rk", "is_delete")
-        .collect()
-    }
-    assert got == want and got
+    _arrive(chunks[2:], live)
+    got = drain("b").toPandas()
+    assert compare("streaming_cdc_merge", got, catalog_runs.oracle("streaming_cdc_merge")) == []
 
 
 def test_es_sink_batch_fn_is_distributed():
@@ -511,8 +498,6 @@ def test_cdc_merge_empty_source_returns_empty_batch_df(spark, tmp_path):
     written -- the runner must return an empty batch DataFrame with the
     change schema minus the delete marker, not raise path-not-found
     (ADVICE r4)."""
-    import os
-
     from flink_training_exercises_spark.streaming.queries import (
         run_cdc_merge_availablenow,
     )
@@ -534,85 +519,21 @@ def test_cdc_merge_empty_source_returns_empty_batch_df(spark, tmp_path):
     assert out.count() == 0
 
 
-_EVENTS_SCHEMA = (
-    "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-    "value DOUBLE, props STRING"
-)
-
-
-def _fold_runner_case(name, ev):
-    """(run(stream, query_name), one-shot batch result) for each
-    foreachBatch fold runner, over the same events."""
-    from pyspark.sql import Window as W
-
-    from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.streaming import queries as Q
-
-    if name == "cdc":
-        def project(df):
-            return df.select(
-                "user_id",
-                "event_type",
-                "value",
-                epoch_ms("ts").alias("state_ms"),
-                "event_id",
-                (F.col("event_type") == "error").alias("is_delete"),
-            )
-
-        w = W.partitionBy("user_id").orderBy(F.desc("state_ms"), F.desc("event_id"))
-        want = (
-            project(ev)
-            .withColumn("rk", F.row_number().over(w))
-            .where((F.col("rk") == 1) & (~F.col("is_delete")))
-            .drop("rk", "is_delete")
-        )
-        return (
-            lambda stream, q: Q.run_cdc_merge_availablenow(
-                project(stream), ["user_id"], ["state_ms", "event_id"], q
-            ),
-            want,
-        )
-    if name == "rollup":
-        want = ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-            F.max(epoch_ms("ts")).alias("last_ms"),
-        )
-        return (
-            lambda stream, q: Q.run_rollup_merge_availablenow(
-                stream.sparkSession, "unused", q, b_stream=stream
-            ),
-            want,
-        )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    want = ev.select(
-        "user_id",
-        "event_id",
-        epoch_ms("ts").alias("valid_from_ms"),
-        epoch_ms(F.lead("ts").over(w)).alias("valid_to_ms"),
-    )
-    return (
-        lambda stream, q: Q.run_scd2_maintenance_availablenow(
-            stream.sparkSession, "unused", q, b_stream=stream
-        ),
-        want,
-    )
-
-
 @pytest.mark.parametrize("runner", ["cdc", "rollup", "scd2"])
-def test_fold_runner_empty_first_batch_matches_batch(spark, sf_small, tmp_path, runner):
+def test_fold_runner_empty_first_batch_matches_batch(
+    spark, sf_small, tmp_path, catalog_runs, runner
+):
     """A stream whose first file has 0 rows, followed by 3 chronological
     chunks: the first micro-batch folds nothing, and each foreachBatch fold
-    runner must still land on its one-shot batch result. The drain made
-    its own scratch root, so none may be left behind."""
-    import glob
-    import os
-    import shutil
+    entry must still land on its oracle. The drain made its own scratch
+    root, so none may be left behind."""
     import time
 
-    from flink_training_exercises_spark.scratch import scratch_root
-    from flink_training_exercises_spark.sources import load_table
-
+    name = {
+        "cdc": "streaming_cdc_merge",
+        "rollup": "streaming_incremental_rollup",
+        "scd2": "streaming_scd2_maintenance",
+    }[runner]
     ev = load_table(spark, "events", sf_small)
     empty = str(tmp_path / "empty")
     ev.limit(0).coalesce(1).write.parquet(empty)
@@ -627,14 +548,11 @@ def test_fold_runner_empty_first_batch_matches_batch(spark, sf_small, tmp_path, 
     os.utime(first, (mt, mt))
     replay_to_files(ev, "ts", d, n_chunks=3, start_index=1)
 
-    run, want = _fold_runner_case(runner, ev)
-    stream = spark.readStream.schema(_EVENTS_SCHEMA).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(d)
-    name = f"fold_empty_first_{runner}_{uuid.uuid4().hex[:8]}"
-    got = {tuple(r) for r in run(stream, name).collect()}
-    assert got == {tuple(r) for r in want.collect()} and got
-    assert glob.glob(os.path.join(scratch_root(), f"fte_{name}_*")) == []
+    got, leaked = _with_own_scratch(
+        lambda: CATALOG[name].spark.__wrapped__(_chunked_stream(spark, d), sf_small).toPandas()
+    )
+    assert compare(name, got, catalog_runs.oracle(name)) == []
+    assert leaked == set()
 
 
 def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
@@ -645,10 +563,6 @@ def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
     add the rest and resume on the same root, then delete the newest
     commit-log entry so Spark re-runs that batch. Every result must equal
     the one-shot count over the chunks present."""
-    import os
-    import shutil
-
-    from flink_training_exercises_spark.sources import load_table
     from flink_training_exercises_spark.streaming.queries import fold_availablenow
 
     ev = load_table(spark, "events", sf_small)
@@ -658,10 +572,6 @@ def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
     os.makedirs(live)
     root = str(tmp_path / "fold")
 
-    def arrive(paths):
-        for c in paths:
-            shutil.copy2(c, os.path.join(live, os.path.basename(c)))
-
     def fold(state, batch):
         counts = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
         if state is None:
@@ -669,10 +579,7 @@ def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
         return state.unionByName(counts).groupBy("user_id").agg(F.sum("n").alias("n"))
 
     def drain(tag):
-        stream = spark.readStream.schema(_EVENTS_SCHEMA).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(live)
-        out = fold_availablenow(stream, fold, f"fold_replay_{tag}", root)
+        out = fold_availablenow(_chunked_stream(spark, live), fold, f"fold_replay_{tag}", root)
         return {tuple(r) for r in out.collect()}
 
     def one_shot(paths):
@@ -682,9 +589,9 @@ def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
             for r in batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
         }
 
-    arrive(chunks[:2])
+    _arrive(chunks[:2], live)
     assert drain("a") == one_shot(chunks[:2])
-    arrive(chunks[2:])
+    _arrive(chunks[2:], live)
     assert drain("b") == one_shot(chunks)
     commits = os.path.join(root, "ck", "commits")
     newest = max(int(f) for f in os.listdir(commits) if f.isdigit())
@@ -695,34 +602,13 @@ def test_fold_availablenow_resume_and_replay_fold_each_batch_once(
     assert drain("c") == one_shot(chunks)
 
 
-def test_streaming_zscore_invariant_under_chunked_replay(spark, sf_small, tmp_path):
+def test_streaming_zscore_invariant_under_chunked_replay(replay_runs):
     """The gated streaming z-score drains a single-file source in one
     micro-batch; this pins that per-key ValueState carries the trailing
     window ACROSS micro-batches: the same events arriving as 4
     chronological chunks must emit exactly the batch operator's rows."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.operators.timeseries import (
-        rolling_zscore_anomalies,
-    )
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.stateful import streaming_zscore
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "zchunks")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    name = f"zchunked_{_uuid.uuid4().hex[:8]}"
-    got_chunked = {tuple(r) for r in _drain(streaming_zscore(chunked), name).collect()}
-    want = {tuple(r) for r in rolling_zscore_anomalies(ev).collect()}
-    assert len(want) > 500
-    assert got_chunked == want
+    assert replay_runs.problems("streaming_anomaly_zscore") == []
+    assert len(replay_runs.query("streaming_anomaly_zscore")) > 500
 
 
 def test_streaming_zscore_invariant_under_tiny_arrow_chunks(spark, sf_small):
@@ -746,7 +632,7 @@ def test_streaming_zscore_invariant_under_tiny_arrow_chunks(spark, sf_small):
         name = f"ztiny_{_uuid.uuid4().hex[:8]}"
         got = {
             tuple(r)
-            for r in _drain(
+            for r in drain_availablenow(
                 streaming_zscore(events_stream(spark, sf_small)), name
             ).collect()
         }
@@ -766,42 +652,22 @@ def test_streaming_zscore_checkpoint_resume(spark, sf_small, tmp_path):
     after the rest arrives -- the state store restores every user's
     trailing-cents tail, so the union of emissions equals the batch
     operator exactly once (no gaps, no duplicates)."""
-    import os
-    import shutil
-
     from flink_training_exercises_spark.operators.timeseries import (
         rolling_zscore_anomalies,
     )
-    from flink_training_exercises_spark.sources import load_table
     from flink_training_exercises_spark.streaming.stateful import streaming_zscore
 
     ev = load_table(spark, "events", sf_small)
-    staged = str(tmp_path / "staged")
-    replay_to_files(ev, "ts", staged, n_chunks=4)
-    chunks = sorted(os.listdir(staged))
+    chunks = replay_to_files(ev, "ts", str(tmp_path / "staged"), n_chunks=4)
     live = str(tmp_path / "live")
     os.makedirs(live)
-    for c in chunks[:2]:
-        shutil.copy2(os.path.join(staged, c), os.path.join(live, c))
-
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-
-    def stream():
-        return streaming_zscore(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(live)
-        )
 
     sink = str(tmp_path / "sink")
     ck = str(tmp_path / "ck")
 
     def drain_once():
         q = (
-            stream()
+            streaming_zscore(_chunked_stream(spark, live))
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)
@@ -811,11 +677,11 @@ def test_streaming_zscore_checkpoint_resume(spark, sf_small, tmp_path):
         )
         q.awaitTermination(300)
 
+    _arrive(chunks[:2], live)
     drain_once()
     n_partial = spark.read.parquet(sink).count()
     assert 0 < n_partial < ev.count()
-    for c in chunks[2:]:
-        shutil.copy2(os.path.join(staged, c), os.path.join(live, c))
+    _arrive(chunks[2:], live)
     drain_once()
 
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
@@ -829,38 +695,15 @@ def test_streaming_pit_enrichment_matches_batch(spark, sf_small):
     interval residual. Stateless inner stream-static join => the availableNow
     drain must equal the batch scd2_point_in_time_join catalog query
     row-for-row (including boundary and zero-width-version semantics)."""
-    from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.plans.catalog import CATALOG
-    from flink_training_exercises_spark.sources import load_table
-
-    from pyspark.sql import Window as W
-
-    ev = load_table(spark, "events", sf_small)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    dim = F.broadcast(
-        ev.where(F.col("event_type") == "view").select(
-            F.col("user_id").alias("d_user_id"),
-            F.col("event_id").alias("version_id"),
-            epoch_ms("ts").alias("valid_from_ms"),
-            epoch_ms(F.lead("ts").over(w)).alias("valid_to_ms"),
-        )
+    from flink_training_exercises_spark.streaming.queries import (
+        run_pit_enrichment_availablenow,
     )
-    stream = events_stream(spark, sf_small).where(F.col("event_type") == "purchase")
-    facts = stream.select(
-        "event_id",
-        "user_id",
-        epoch_ms("ts").alias("ts_ms"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    joined = facts.join(
-        dim,
-        (facts["user_id"] == dim["d_user_id"])
-        & (dim["valid_from_ms"] <= facts["ts_ms"])
-        & (dim["valid_to_ms"].isNull() | (facts["ts_ms"] < dim["valid_to_ms"])),
-    ).select("event_id", "user_id", "ts_ms", "cents", "version_id", "valid_from_ms")
+
     got = {
         tuple(r)
-        for r in _drain(joined, f"pit_enrich_{uuid.uuid4().hex[:8]}").collect()
+        for r in run_pit_enrichment_availablenow(
+            events_stream(spark, sf_small), sf_small, f"pit_enrich_{uuid.uuid4().hex[:8]}"
+        ).collect()
     }
     expected = {
         tuple(r)
@@ -869,127 +712,29 @@ def test_streaming_pit_enrichment_matches_batch(spark, sf_small):
     assert got == expected and expected
 
 
-def test_streaming_snapshot_diff_chunked_matches_batch(spark, sf_small, tmp_path):
+def test_streaming_snapshot_diff_chunked_matches_batch(replay_runs):
     """Batch-boundary invariance of the incremental snapshot diff: snapshot
     B arriving in 4 chunks must classify to exactly the one-shot batch
-    full-outer diff -- added/changed emitted per batch, removed computed
-    once against the accumulated seen-key set."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.plans.catalog import CATALOG
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_snapshot_diff_availablenow,
-    )
-
-    docs = load_table(spark, "documents", sf_small)
-    d = str(tmp_path / "doc_chunks")
-    replay_to_files(docs, "doc_id", d, n_chunks=4)
-    schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in run_snapshot_diff_availablenow(
-            spark,
-            sf_small,
-            f"snapdiff_chunked_{_uuid.uuid4().hex[:8]}",
-            b_stream=chunked,
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in CATALOG["snapshot_diff_documents"].spark(spark, sf_small).collect()
-    }
-    assert got == want and got
+    full-outer diff -- added/changed/unchanged drained per batch, removed
+    computed once against the drained key set."""
+    assert replay_runs.problems("streaming_snapshot_diff") == []
     # all three classes must occur for the test to mean anything
-    statuses = {t[1] for t in got}
+    statuses = set(replay_runs.query("streaming_snapshot_diff")["status"])
     assert statuses == {"added", "removed", "changed"}
 
 
-def test_streaming_pit_enrichment_chunked_matches_batch(spark, sf_small, tmp_path):
-    """Chunked-replay invariance for the stream-static PIT join: the
-    purchase stream arriving in 4 chronological chunks must enrich to
-    exactly the batch scd2_point_in_time_join rows -- stateless inner
-    stream-static joins emit per micro-batch with no watermark state, so
-    batch boundaries cannot change the result."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.plans.catalog import CATALOG
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_pit_enrichment_availablenow,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in run_pit_enrichment_availablenow(
-            spark,
-            sf_small,
-            f"pit_chunked_{_uuid.uuid4().hex[:8]}",
-            b_stream=chunked,
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in CATALOG["scd2_point_in_time_join"].spark(spark, sf_small).collect()
-    }
-    assert got == want and got
+def test_streaming_pit_enrichment_chunked_matches_batch(replay_runs):
+    """Chunked-replay invariance for the stream-static PIT join: stateless
+    inner stream-static joins emit per micro-batch with no watermark
+    state, so batch boundaries cannot change the result."""
+    assert replay_runs.problems("streaming_pit_enrichment") == []
 
 
-def test_streaming_rollup_chunked_matches_batch(spark, sf_small, tmp_path):
+def test_streaming_rollup_chunked_matches_batch(replay_runs):
     """Batch-boundary invariance of the incremental rollup: folding 4
     chronological chunks of partial aggregates must land on exactly the
     one-shot batch aggregate -- count/sum add, max maxes, per key."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_rollup_merge_availablenow,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in run_rollup_merge_availablenow(
-            spark,
-            sf_small,
-            f"rollup_chunked_{_uuid.uuid4().hex[:8]}",
-            b_stream=chunked,
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-            F.max(epoch_ms("ts")).alias("last_ms"),
-        )
-        .collect()
-    }
-    assert got == want and got
+    assert replay_runs.problems("streaming_incremental_rollup") == []
 
 
 def test_streaming_windowed_topk_matches_batch(spark, sf_small):
@@ -1082,95 +827,24 @@ def test_streaming_windowed_hll_matches_batch(spark, sf_small):
     assert got == want and got
 
 
-def test_streaming_windowed_topk_chunked_matches_unchunked(spark, sf_small, tmp_path):
-    """Chunked-replay invariance for the staged windowed heavy hitters:
-    4 chronological chunks through maxFilesPerTrigger=1 must drain to the
-    same ranked rows as the single-batch drain (which the parity test
-    pins against batch) -- watermark advancement across micro-batches
-    cannot change fire-once window emissions."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        rank_topk_per_window,
-        streaming_windowed_topk,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_topk")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in rank_topk_per_window(
-            drain_availablenow(
-                streaming_windowed_topk(chunked),
-                f"wtopk_chunked_{_uuid.uuid4().hex[:8]}",
-            )
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in rank_topk_per_window(
-            drain_availablenow(
-                streaming_windowed_topk(events_stream(spark, sf_small)),
-                f"wtopk_one_{_uuid.uuid4().hex[:8]}",
-            )
-        ).collect()
-    }
-    assert got == want and got
+def test_streaming_windowed_topk_chunked_matches_unchunked(replay_runs):
+    """Chunked-replay invariance for the windowed heavy hitters: watermark
+    advancement across micro-batches cannot change fire-once window
+    emissions."""
+    assert replay_runs.problems("streaming_windowed_topk") == []
 
 
-def test_streaming_windowed_hll_chunked_matches_unchunked(spark, sf_small, tmp_path):
-    """Chunked-replay invariance for the staged windowed HLL: register
-    maxes are associative+commutative, so micro-batch boundaries cannot
-    change the drained registers."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        streaming_windowed_hll,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_hll")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_hll(chunked), f"whll_chunked_{_uuid.uuid4().hex[:8]}"
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_hll(events_stream(spark, sf_small)),
-            f"whll_one_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    assert got == want and got
+def test_streaming_windowed_hll_chunked_matches_unchunked(replay_runs):
+    """Chunked-replay invariance for the windowed HLL: register maxes are
+    associative+commutative, so micro-batch boundaries cannot change the
+    drained registers."""
+    assert replay_runs.problems("streaming_windowed_hll") == []
 
 
-def test_streaming_concurrency_profile_matches_cut_batch(spark, sf_small):
-    """STAGED-FOR-ROUND-8 streaming concurrency profile: the sweep over
-    the drained session_window intervals must equal the sweep over the
-    batch gap sessions (ends shifted by the gap) cut at the final
-    watermark -- i.e. the profile is a pure function of the emitted
+def test_streaming_concurrency_profile_matches_cut_batch(spark, sf_small, catalog_runs):
+    """The sweep over the drained session_window intervals must equal the
+    sweep over the batch gap sessions (ends shifted by the gap) cut at the
+    final watermark -- i.e. the profile is a pure function of the emitted
     session set."""
     from flink_training_exercises_spark.functions.time import epoch_ms
     from flink_training_exercises_spark.operators.sessions import (
@@ -1178,19 +852,8 @@ def test_streaming_concurrency_profile_matches_cut_batch(spark, sf_small):
         concurrency_from_intervals,
         sessionize,
     )
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_concurrency_profile_availablenow,
-    )
 
-    name = f"sconc_{uuid.uuid4().hex[:8]}"
-    got = {
-        tuple(r)
-        for r in run_concurrency_profile_availablenow(
-            spark, sf_small, name
-        ).collect()
-    }
-
+    got = set(catalog_runs.query("streaming_concurrency_profile").itertuples(index=False))
     ev = load_table(spark, "events", sf_small)
     max_ms = ev.agg(F.max(epoch_ms("ts"))).first()[0]
     iv = (
@@ -1203,6 +866,7 @@ def test_streaming_concurrency_profile_matches_cut_batch(spark, sf_small):
     )
     want = {tuple(r) for r in concurrency_from_intervals(iv).collect()}
     assert got == want and got
+
 
 def test_streaming_windowed_histogram_matches_batch(spark, sf_small):
     """STAGED (round-9 backlog) windowed fixed-width histogram: the
@@ -1245,44 +909,11 @@ def test_streaming_windowed_histogram_matches_batch(spark, sf_small):
     assert got == want and got
 
 
-def test_streaming_windowed_histogram_chunked_matches_unchunked(
-    spark, sf_small, tmp_path
-):
+def test_streaming_windowed_histogram_chunked_matches_unchunked(replay_runs):
     """Chunked-replay invariance: per-bin counts are associative and
     commutative, so micro-batch boundaries cannot change the drain."""
-    import uuid as _uuid
+    assert replay_runs.problems("streaming_windowed_histogram") == []
 
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        streaming_windowed_histogram,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_hist")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_histogram(chunked),
-            f"whist_chunked_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_histogram(events_stream(spark, sf_small)),
-            f"whist_one_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    assert got == want and got
 
 def test_es_bulk_payloads_shape():
     """S8 bulk-request SHAPE without the env: documents carry the
@@ -1329,11 +960,10 @@ def test_es_bulk_payloads_shape():
 
 
 def test_streaming_scd2_maintenance_matches_batch(spark, sf_small):
-    """STAGED-FOR-ROUND-9 streaming SCD2 maintenance: the one-shot drain
-    must equal the batch lead-window validity intervals exactly (same
-    (ts, event_id) ordering contract, NULL = current row)."""
+    """The one-shot drain must equal the batch lead-window validity
+    intervals exactly (same (ts, event_id) ordering contract, NULL =
+    current row)."""
     from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.sources import load_table
     from flink_training_exercises_spark.streaming.queries import (
         run_scd2_maintenance_availablenow,
     )
@@ -1343,7 +973,7 @@ def test_streaming_scd2_maintenance_matches_batch(spark, sf_small):
         map(
             tuple,
             run_scd2_maintenance_availablenow(
-                spark, sf_small, f"scd2_one_{uuid.uuid4().hex[:8]}"
+                events_stream(spark, sf_small), f"scd2_one_{uuid.uuid4().hex[:8]}"
             ).collect(),
         )
     )
@@ -1363,56 +993,14 @@ def test_streaming_scd2_maintenance_matches_batch(spark, sf_small):
     assert got == want and got
 
 
-def test_streaming_scd2_chunked_matches_batch(spark, sf_small, tmp_path):
+def test_streaming_scd2_chunked_matches_batch(replay_runs):
     """Batch-boundary invariance of the SCD2 maintenance fold: open rows
     closed across 4 chronological chunk boundaries must receive exactly
     the global next-event bound the one-shot lead window assigns."""
-    from flink_training_exercises_spark.functions.time import epoch_ms
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        run_scd2_maintenance_availablenow,
-    )
-    from pyspark.sql import Window as W
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_scd2")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = sorted(
-        map(
-            tuple,
-            run_scd2_maintenance_availablenow(
-                spark,
-                sf_small,
-                f"scd2_chunked_{uuid.uuid4().hex[:8]}",
-                b_stream=chunked,
-            ).collect(),
-        )
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    want = sorted(
-        map(
-            tuple,
-            ev.select(
-                "user_id",
-                "event_id",
-                epoch_ms("ts").alias("valid_from_ms"),
-                epoch_ms(F.lead("ts").over(w)).alias("valid_to_ms"),
-            ).collect(),
-        )
-    )
-    assert got == want and got
+    assert replay_runs.problems("streaming_scd2_maintenance") == []
     # every user has exactly ONE open (current) row -- the SCD2 shape
-    by_user = {}
-    for u, _e, _f, t in got:
-        by_user.setdefault(u, []).append(t)
-    assert all(sum(t is None for t in ts) == 1 for ts in by_user.values())
+    got = replay_runs.query("streaming_scd2_maintenance")
+    assert (got["valid_to_ms"].isna().groupby(got["user_id"]).sum() == 1).all()
 
 
 def test_quantile_from_binned_hand_computed(spark):
@@ -1448,25 +1036,16 @@ def test_quantile_from_binned_hand_computed(spark):
     }
 
 
-def test_streaming_windowed_quantile_matches_oracle(spark, sf_small, catalog_runs):
+def test_streaming_windowed_quantile_matches_oracle(catalog_runs):
     """Streaming windowed quantile equals its catalog oracle, and the
     estimates the batch stage walks from the drained histogram are
     monotone in pct per window."""
     assert catalog_runs.problems("streaming_windowed_quantile") == []
-    from flink_training_exercises_spark.streaming.queries import (
-        run_windowed_quantile_availablenow,
-    )
-
-    got = run_windowed_quantile_availablenow(
-        spark, sf_small, f"wquant_{uuid.uuid4().hex[:8]}"
-    ).collect()
-    assert got
+    got = catalog_runs.query("streaming_windowed_quantile")
+    assert len(got)
     # monotone in pct within each window (cumulative walk contract)
-    by_w = {}
-    for w, pct, est, _n in got:
-        by_w.setdefault(w, []).append((pct, est))
-    for rows in by_w.values():
-        ests = [e for _p, e in sorted(rows)]
+    for _w, rows in got.sort_values(["window_end_ms", "pct"]).groupby("window_end_ms"):
+        ests = list(rows["est_floor_cents"])
         assert ests == sorted(ests)
 
 
@@ -1495,15 +1074,10 @@ def test_streaming_scd2_same_millisecond_orders_by_microsecond(spark, tmp_path):
     )
     d = str(tmp_path / "same_ms")
     replay_to_files(df, "ts", d, n_chunks=1)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    stream = spark.readStream.schema(schema).parquet(d)
     got = {
         r["event_id"]: (r["valid_from_ms"], r["valid_to_ms"])
         for r in run_scd2_maintenance_availablenow(
-            spark, "unused", f"scd2_us_{uuid.uuid4().hex[:8]}", b_stream=stream
+            _chunked_stream(spark, d), f"scd2_us_{uuid.uuid4().hex[:8]}"
         ).collect()
     }
     base = 1704103200000  # 2024-01-01T10:00:00Z in epoch ms
@@ -1512,62 +1086,22 @@ def test_streaming_scd2_same_millisecond_orders_by_microsecond(spark, tmp_path):
     assert got == {9: (base, base), 5: (base, None), 7: (base + 1000, None)}
 
 
-def test_streaming_windowed_cms_matches_oracle(spark, sf_small, catalog_runs):
+def test_streaming_windowed_cms_matches_oracle(catalog_runs):
     """Streaming windowed Count-Min sketch equals its catalog oracle;
     est >= exact row-wise (the one-sided CMS contract) and overcount is
     their difference."""
     assert catalog_runs.problems("streaming_windowed_cms") == []
-    from flink_training_exercises_spark.streaming.queries import (
-        run_windowed_cms_availablenow,
-    )
-
-    rows = run_windowed_cms_availablenow(
-        spark, sf_small, f"wcms_{uuid.uuid4().hex[:8]}"
-    ).collect()
+    rows = catalog_runs.query("streaming_windowed_cms").to_dict("records")
     assert rows
     assert all(r["est_cnt"] >= r["exact_cnt"] for r in rows)
     assert all(r["overcount"] == r["est_cnt"] - r["exact_cnt"] for r in rows)
 
 
-def test_streaming_windowed_cms_chunked_matches_unchunked(
-    spark, sf_small, tmp_path
-):
+def test_streaming_windowed_cms_chunked_matches_unchunked(replay_runs):
     """Chunked-replay invariance: per-cell counts are associative and
     commutative, so micro-batch boundaries cannot change the drained
     sketch."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        streaming_windowed_cms,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_cms")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_cms(chunked),
-            f"wcms_chunked_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_cms(events_stream(spark, sf_small)),
-            f"wcms_one_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    assert got == want and got
+    assert replay_runs.problems("streaming_windowed_cms") == []
 
 
 def test_cms_window_estimates_width1_degenerate(spark):
@@ -1634,18 +1168,12 @@ def test_cms_window_estimates_width1_degenerate(spark):
     }
 
 
-def test_streaming_windowed_minhash_matches_oracle(spark, sf_small, catalog_runs):
+def test_streaming_windowed_minhash_matches_oracle(catalog_runs):
     """Streaming windowed MinHash equals its catalog oracle; signature
     matches stay within the permutation count, the estimate is their
     integer ppm, and the exact Jaccard stays in [0, 1e6]."""
     assert catalog_runs.problems("streaming_windowed_minhash") == []
-    from flink_training_exercises_spark.streaming.queries import (
-        run_windowed_minhash_availablenow,
-    )
-
-    rows = run_windowed_minhash_availablenow(
-        spark, sf_small, f"wmh_{uuid.uuid4().hex[:8]}"
-    ).collect()
+    rows = catalog_runs.query("streaming_windowed_minhash").to_dict("records")
     assert rows
     for r in rows:
         assert 0 <= r["sig_matches"] <= r["n_perms"]
@@ -1676,45 +1204,11 @@ def test_streaming_windowed_minhash_k_guard(spark, sf_small):
             windowed_minhash_oracle(k=bad_k)
 
 
-def test_streaming_windowed_minhash_chunked_matches_unchunked(
-    spark, sf_small, tmp_path
-):
+def test_streaming_windowed_minhash_chunked_matches_unchunked(replay_runs):
     """Chunked-replay invariance: min is associative, commutative AND
     idempotent, so micro-batch boundaries (and any re-delivery inside
     one) cannot change the drained signatures."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        streaming_windowed_minhash,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_mh")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_minhash(chunked),
-            f"wmh_chunked_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_minhash(events_stream(spark, sf_small)),
-            f"wmh_one_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    assert got == want and got
+    assert replay_runs.problems("streaming_windowed_minhash") == []
 
 
 def test_minhash_window_similarity_hand_computed(spark):
@@ -1764,19 +1258,13 @@ def test_minhash_window_similarity_hand_computed(spark):
     ]
 
 
-def test_streaming_windowed_bloom_matches_oracle(spark, sf_small, catalog_runs):
+def test_streaming_windowed_bloom_matches_oracle(catalog_runs):
     """Streaming windowed Bloom equals its catalog oracle; row-wise the
     one-sided contract holds (bloom_hit >= present, no false negatives
     structurally) and a false positive is exactly a hit on an absent
     word."""
     assert catalog_runs.problems("streaming_windowed_bloom") == []
-    from flink_training_exercises_spark.streaming.queries import (
-        run_windowed_bloom_availablenow,
-    )
-
-    rows = run_windowed_bloom_availablenow(
-        spark, sf_small, f"wbl_{uuid.uuid4().hex[:8]}"
-    ).collect()
+    rows = catalog_runs.query("streaming_windowed_bloom").to_dict("records")
     assert rows
     for r in rows:
         assert r["bloom_hit"] >= r["present"]  # no false negatives
@@ -1787,45 +1275,11 @@ def test_streaming_windowed_bloom_matches_oracle(spark, sf_small, catalog_runs):
     # sizing note, contracts in the test
 
 
-def test_streaming_windowed_bloom_chunked_matches_unchunked(
-    spark, sf_small, tmp_path
-):
+def test_streaming_windowed_bloom_chunked_matches_unchunked(replay_runs):
     """Chunked-replay invariance: bit_or is associative, commutative AND
     idempotent (the MinHash min argument), so micro-batch boundaries and
     any duplicate delivery inside one cannot change the drained words."""
-    import uuid as _uuid
-
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.queries import (
-        drain_availablenow,
-        streaming_windowed_bloom,
-    )
-
-    ev = load_table(spark, "events", sf_small)
-    d = str(tmp_path / "ev_chunks_bl")
-    replay_to_files(ev, "ts", d, n_chunks=4)
-    schema = (
-        "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    chunked = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-    )
-    got = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_bloom(chunked),
-            f"wbl_chunked_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in drain_availablenow(
-            streaming_windowed_bloom(events_stream(spark, sf_small)),
-            f"wbl_one_{_uuid.uuid4().hex[:8]}",
-        ).collect()
-    }
-    assert got == want and got
+    assert replay_runs.problems("streaming_windowed_bloom") == []
 
 
 def test_bloom_window_membership_hand_computed(spark):
