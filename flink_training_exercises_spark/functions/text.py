@@ -36,6 +36,18 @@ def email_address(sender) -> Column:
     return F.when(extracted != "", extracted).otherwise(s)
 
 
+def words(text) -> Column:
+    """The engine's plain tokenizer: lowercase, split on whitespace runs,
+    drop empty tokens (a leading/trailing run splits off one ''). The
+    DuckDB twin is :func:`words_sql`."""
+    return F.filter(F.split(F.lower(_c(text)), r"\s+"), lambda w: w != "")
+
+
+def words_sql(text_expr: str) -> str:
+    """DuckDB twin of :func:`words`."""
+    return f"[x for x in string_split_regex(lower({text_expr}), '\\s+') if x != '']"
+
+
 def tokenize_words(body, *, distinct: bool = False, stop_words=STOP_WORDS) -> Column:
     """P9 -- whitespace-tokenize, lowercase, keep alphabetic-only tokens,
     drop stop words (MailTFIDF.java:103-149). Returns an array column;

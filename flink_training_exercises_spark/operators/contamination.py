@@ -22,13 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.text import words, words_sql
 
 NGRAM_N = 8
 BENCH_MOD = 50  # doc_id % BENCH_MOD == 0 marks the held-out benchmark docs
-
-
-def _words(text_col: str) -> Column:
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
 
 
 def _gram_strings(w: Column, n: int) -> Column:
@@ -68,7 +65,7 @@ def ngram_contamination(
     g = widen_scan(docs).select(
         F.col(id_col),
         (F.col(id_col) % bench_mod == 0).alias("is_bench"),
-        F.explode(_gram_strings(_words(text_col), n)).alias("gs"),
+        F.explode(_gram_strings(words(text_col), n)).alias("gs"),
     ).select(id_col, "is_bench", md5_long("gs").alias("gh"))
     corpus = g.where(~F.col("is_bench")).select(id_col, "gh")
     bench = (
@@ -99,8 +96,8 @@ def _grams_sql(
     strings -> md5 hashes, bench flag) under ngram_contamination_sql AND
     bloom_contamination_screen_sql -- one source of truth so the
     documented \\x0B tokenizer contingency (CLAUDE.md) edits exactly one
-    SQL site next to the shared Spark-side _words/_gram_strings."""
-    w = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
+    SQL site next to the shared Spark-side words/_gram_strings."""
+    w = words_sql(text_col)
     slots = ", ".join("w[i]" if j == 0 else f"w[i+{j}]" for j in range(n))
     gram = f"concat_ws(' ', {slots})"
     gram_list = (
@@ -154,7 +151,7 @@ def bloom_contamination_screen(
     remainder), where the gated ngram_contamination is the exact
     single-stage form. Composes :func:`~.bloom.bloom_semijoin_audit`
     over the SAME gram pipeline as ngram_contamination (shared
-    _words/_gram_strings, md5 after the explode). Output is ONE row
+    words/_gram_strings, md5 after the explode). Output is ONE row
     (n_probe_keys, n_candidates, n_true, n_false_pos): candidates >=
     true always (no false negatives -- the screen can only over-flag),
     and n_false_pos is the price of the 260-word broadcast filter vs
@@ -175,7 +172,7 @@ def bloom_contamination_screen(
 
     g = widen_scan(docs).select(
         (F.col(id_col) % bench_mod == 0).alias("is_bench"),
-        F.explode(_gram_strings(_words(text_col), n)).alias("gs"),
+        F.explode(_gram_strings(words(text_col), n)).alias("gs"),
     ).select("is_bench", md5_long("gs").alias("gh"))
     bench = (
         g.where(F.col("is_bench")).select("gh").distinct().localCheckpoint()

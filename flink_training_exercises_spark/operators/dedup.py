@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_P, hash_params, md5_long_sql
+from ..functions.text import words, words_sql
 
 SHINGLE_WIDTH = 5
 # 8 bands x 4 rows: candidate probability 1-(1-j^4)^8 -- near-certain at
@@ -69,14 +70,12 @@ def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
 
 def normalized_prefix_key(text_col: str, n_words: int = 5) -> Column:
     """Normalization key: first n words of lower/whitespace-collapsed text."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-    return F.concat_ws(" ", F.slice(words, 1, n_words))
+    return F.concat_ws(" ", F.slice(words(text_col), 1, n_words))
 
 
 def normalized_prefix_key_sql(text_expr: str, n_words: int = 5) -> str:
     return (
-        f"array_to_string(([x for x in string_split_regex(lower({text_expr}), '\\s+') "
-        f"if x != ''])[1:{n_words}], ' ')"
+        f"array_to_string(({words_sql(text_expr)})[1:{n_words}], ' ')"
     )
 
 
@@ -420,13 +419,11 @@ def simhash_pairs(
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    words = docs.select(
+    toks = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("w"),
+        F.explode(words(text_col)).alias("w"),
     ).select("id", _md5_long_c(F.col("w")).alias("h"))
-    bit_sums = words.groupBy("id").agg(
+    bit_sums = toks.groupBy("id").agg(
         *[
             F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{j}")
             for j in range(SIMHASH_BITS)
@@ -495,7 +492,7 @@ def simhash_sql(
     )
     return f"""
 WITH words AS (
-  SELECT {id_col} AS id, unnest([x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']) AS w
+  SELECT {id_col} AS id, unnest({words_sql(text_col)}) AS w
   FROM {table}
 ),
 bit_sums AS (SELECT id, {bit_sum_cols} FROM words GROUP BY id),
@@ -536,11 +533,11 @@ def ngram_jaccard_pairs(
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
+    ws = words(text_col)
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+            F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
         )
     )
     hashed = F.array_distinct(F.transform(grams, _md5_long_c))
@@ -573,7 +570,6 @@ def ngram_jaccard_sql(
     n: int = 3,
     threshold: float = 0.5,
 ) -> str:
-    words = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
     return f"""
 WITH g AS (
   SELECT id, part, list_distinct([{md5_long_sql('x')} for x in gs]) AS g
@@ -581,7 +577,7 @@ WITH g AS (
     SELECT {id_col} AS id, {partition_col} AS part,
            list_distinct([array_to_string(w[i:i+{n - 1}], ' ')
                           for i in generate_series(1, greatest(len(w) - {n - 1}, 1))]) AS gs
-    FROM (SELECT {id_col}, {partition_col}, {words} AS w FROM {table})
+    FROM (SELECT {id_col}, {partition_col}, {words_sql(text_col)} AS w FROM {table})
   )
 ),
 pairs AS (
@@ -762,13 +758,13 @@ def repeated_ngram_coverage(
     suffix-array-based exact-substring dedup's shard-and-count phase, with
     n-gram granularity standing in for full suffix automata."""
     from ..sources.loaders import widen_scan
-    from .contamination import _gram_strings, _words
+    from .contamination import _gram_strings
 
     grams = (
         widen_scan(docs)
         .select(
             F.col(id_col).alias("doc_id"),
-            F.explode(_gram_strings(_words(text_col), n)).alias("gram"),
+            F.explode(_gram_strings(words(text_col), n)).alias("gram"),
         )
         .select("doc_id", _md5_long_c(F.col("gram")).alias("gh"))
     )
@@ -804,7 +800,7 @@ def repeated_ngram_coverage_sql(
 ) -> str:
     """DuckDB twin of :func:`repeated_ngram_coverage` (same tokenizer, same
     string-level distinct, same post-explode md5 fold)."""
-    w = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
+    w = words_sql(text_col)
     slots = ", ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(n))
     return f"""
 WITH w AS (
@@ -945,7 +941,7 @@ def segment_dedup_keepfirst(
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    w = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
+    w = words(text_col)
     n_seg = F.floor((F.size(w) - F.lit(1)) / F.lit(SEGMENT_WORDS)).cast("int") + F.lit(1)
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - F.lit(1)),
@@ -997,7 +993,7 @@ def segment_dedup_keepfirst_sql(
 ) -> str:
     """DuckDB twin of :func:`segment_dedup_keepfirst` (same tokenizer, same
     fixed-width grid, same packed-min keep-first rule)."""
-    w = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
+    w = words_sql(text_col)
     n = SEGMENT_WORDS
     return f"""
 WITH w AS (
@@ -1195,11 +1191,11 @@ def prefix_filter_jaccard_pairs(
     from ..sources.loaders import widen_scan
 
     tn, td = threshold_num, threshold_den
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
+    ws = words(text_col)
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+            F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
         )
     )
     hashed = F.array_distinct(F.transform(grams, _md5_long_c))
@@ -1266,7 +1262,6 @@ def prefix_filter_jaccard_sql(
     frequency-ordered prefixes, candidate join, and integer-exact verify.
     (`//` is DuckDB's integer division where Spark spells it DIV.)"""
     tn, td = threshold_num, threshold_den
-    words = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
     return f"""
 WITH sh AS MATERIALIZED (
   SELECT id, list_distinct([{md5_long_sql('x')} for x in gs]) AS hs
@@ -1274,7 +1269,7 @@ WITH sh AS MATERIALIZED (
     SELECT {id_col} AS id,
            list_distinct([array_to_string(w[i:i+{n - 1}], ' ')
                           for i in generate_series(1, greatest(len(w) - {n - 1}, 1))]) AS gs
-    FROM (SELECT {id_col}, {words} AS w FROM {table})
+    FROM (SELECT {id_col}, {words_sql(text_col)} AS w FROM {table})
   )
 ),
 expl AS (
@@ -1341,7 +1336,6 @@ def fs_pair_scores(
     la, ld, ltol = FS_WEIGHTS["len"]
     pa, pd_, plen = FS_WEIGHTS["prefix"]
     ta, td, ttol = FS_WEIGHTS["tokens"]
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
     feats = (
         widen_scan(docs)
         .select(
@@ -1349,7 +1343,7 @@ def fs_pair_scores(
             F.col(id_col).alias("id"),
             F.col(length_col).cast("bigint").alias("len"),
             F.lower(F.substring(F.col(text_col), 1, plen)).alias("pfx"),
-            F.size(words).cast("bigint").alias("ntok"),
+            F.size(words(text_col)).cast("bigint").alias("ntok"),
         )
         .localCheckpoint()
     )
@@ -1435,12 +1429,9 @@ def _fs_sql_parts(
     pa, pd_, plen = FS_WEIGHTS["prefix"]
     ta, td, ttol = FS_WEIGHTS["tokens"]
     blk = ", ".join(block_cols)
-    words = (
-        f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
-    )
     feats = f"""SELECT {blk}, {id_col} AS id, CAST({length_col} AS BIGINT) AS len,
          lower(substr({text_col}, 1, {plen})) AS pfx,
-         CAST(len({words}) AS BIGINT) AS ntok
+         CAST(len({words_sql(text_col)}) AS BIGINT) AS ntok
   FROM {table}"""
     score = f"""CAST(CASE WHEN abs(a.len - b.len) <= {ltol} THEN {la} ELSE {ld} END
             + CASE WHEN a.pfx = b.pfx THEN {pa} ELSE {pd_} END

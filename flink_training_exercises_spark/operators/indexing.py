@@ -14,7 +14,7 @@ runs over its corpus (task brief: text analysis as first-class components):
     language): the vocabulary-audit staple, two-phase aggregation with a
     bounded top-k so no group's output is unbounded.
 
-Shared tokenizer: the package-wide lower + ``\\s+`` split (textstats._words)
+Shared tokenizer: the package-wide lower + ``\\s+`` split (functions/text.words)
 so Spark and DuckDB agree byte-for-byte (CLAUDE.md regex note).
 """
 
@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import _widened, _words, _words_sql
+from ..functions.text import words, words_sql
+from .textstats import _widened
 
 
 def inverted_index(
@@ -49,7 +50,7 @@ def inverted_index(
     full chain."""
     tokens = _widened(docs).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_words(text_col))).alias("token"),
+        F.explode(F.array_distinct(words(text_col))).alias("token"),
     )
     w_rank = Window.partitionBy("token").orderBy(F.asc("doc_id"))
     w_all = Window.partitionBy("token")
@@ -76,7 +77,7 @@ def inverted_index_sql(
     text_col: str = "text",
     max_postings: int = 20,
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH tokens AS (
   SELECT DISTINCT {id_col} AS doc_id, unnest({w}) AS token FROM {table}
@@ -112,14 +113,14 @@ def doc_typicality(
     both sides shuffle on the same key; no driver-side state. Empty docs
     guard the division explicitly (ANSI)."""
     base = _widened(docs)
-    words = _words(text_col)
+    ws = words(text_col)
     grams = F.when(
-        F.size(words) >= 2,
+        F.size(ws) >= 2,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.size(words) - 1),
+                F.sequence(F.lit(1), F.size(ws) - 1),
                 lambda i: F.concat_ws(
-                    " ", F.element_at(words, i), F.element_at(words, i + 1)
+                    " ", F.element_at(ws, i), F.element_at(ws, i + 1)
                 ),
             )
         ),
@@ -157,7 +158,7 @@ def doc_typicality_sql(
     text_col: str = "text",
     min_count: int = 5,
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH ws AS (
   SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
@@ -203,7 +204,7 @@ def frequent_tokens_topk(
     (group, token) counts -- already |vocab|-bounded, orders of magnitude
     smaller than the corpus -- and every group emits exactly <= k rows."""
     toks = _widened(docs).select(
-        F.col(group_col).alias("grp"), F.explode(_words(text_col)).alias("token")
+        F.col(group_col).alias("grp"), F.explode(words(text_col)).alias("token")
     )
     counts = toks.groupBy("grp", "token").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("grp").orderBy(F.desc("cnt"), F.asc("token"))
@@ -220,7 +221,7 @@ def frequent_tokens_topk_sql(
     text_col: str = "text",
     k: int = 25,
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH toks AS (
   SELECT {group_col} AS grp, unnest({w}) AS token FROM {table}
@@ -293,7 +294,7 @@ def bm25_topk(
     terms = sorted({t for _, t1, t2 in qs for t in (t1, t2)})
     spark = docs.sparkSession
     base = _widened(docs).select(
-        F.col(id_col).alias("doc_id"), _words(text_col).alias("ws")
+        F.col(id_col).alias("doc_id"), words(text_col).alias("ws")
     )
     totals = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -376,7 +377,7 @@ def bm25_topk_sql(
         for qid, t1, t2 in qs
         for pos, t in ((1, t1), (2, t2))
     )
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
@@ -460,7 +461,7 @@ def collocation_pmi_topk(
     heap per partition, k rows to the driver plan -- never a
     single-partition sort of the vocab-bounded pair table); the final
     row_number window runs over exactly k rows by construction."""
-    base = _widened(docs).select(_words(text_col).alias("ws"))
+    base = _widened(docs).select(words(text_col).alias("ws"))
     pairs = base.select(
         F.explode(
             F.when(
@@ -539,7 +540,7 @@ def collocation_pmi_topk_sql(
 ) -> str:
     """DuckDB twin of :func:`collocation_pmi_topk` -- identical BIGINT
     counts and an identical scalar-by-scalar double expression tree."""
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {w} AS ws FROM {table}

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.text import words, words_sql
 
 SAMPLE_MOD = 10000  # rates are expressed in basis points
 
@@ -71,7 +72,7 @@ def pack_sequences(
     whose PRECEDING cumulative token count is in [i*budget, (i+1)*budget).
     Output one row per bin: (shard, bin_id, n_docs, total_tokens,
     first_doc_id, last_doc_id)."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
+    ws = words(text_col)
     run = (
         Window.partitionBy("shard")
         .orderBy("id")
@@ -80,7 +81,7 @@ def pack_sequences(
     base = docs.select(
         F.col(shard_col).alias("shard"),
         F.col(id_col).alias("id"),
-        F.size(words).cast("bigint").alias("n_tokens"),
+        F.size(ws).cast("bigint").alias("n_tokens"),
     )
     binned = base.withColumn(
         "cum_before", F.coalesce(F.sum("n_tokens").over(run), F.lit(0))
@@ -107,11 +108,10 @@ def pack_sequences_sql(
     shard_col: str = "source",
     token_budget: int = 4096,
 ) -> str:
-    words = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
     return f"""
 WITH base AS (
   SELECT {shard_col} AS shard, {id_col} AS id,
-         CAST(len({words}) AS BIGINT) AS n_tokens
+         CAST(len({words_sql(text_col)}) AS BIGINT) AS n_tokens
   FROM {table}
 ),
 binned AS (
@@ -355,8 +355,8 @@ def length_batches(
     bit-identical to the single-window form at any partition count.
 
     Output (batch_id, n_docs, max_tokens, total_tokens, padding_frac)."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-    base = docs.select(F.col(id_col).alias("id"), F.size(words).alias("n_tok"))
+    ws = words(text_col)
+    base = docs.select(F.col(id_col).alias("id"), F.size(ws).alias("n_tok"))
     wk = Window.partitionBy("n_tok").orderBy("id")
     hist = base.groupBy("n_tok").agg(F.count(F.lit(1)).alias("c"))
     woff = Window.orderBy("n_tok").rowsBetween(Window.unboundedPreceding, -1)
@@ -399,7 +399,7 @@ def length_batches_sql(
     text_col: str = "text",
     batch_size: int = 32,
 ) -> str:
-    w = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
+    w = words_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col} AS id, len({w}) AS n_tok FROM {table}

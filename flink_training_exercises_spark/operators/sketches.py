@@ -1,4 +1,4 @@
-"""Mergeable sketches + space-filling-curve layout (round-4 breadth).
+"""Mergeable sketches + space-filling-curve layout.
 
 The reference's aggregations are all exact; at 100 TB the first thing an
 analytics engine adds is the sketch family -- fixed-size, mergeable
@@ -17,6 +17,14 @@ aggregation ships kilobytes per task instead of re-shuffling raw keys:
     dimensions; the data-layout primitive behind multi-column file
     skipping (interleaved bits keep both dimensions' range predicates
     selective over z-ranges).
+
+One kernel per sketch decision, each next to its DuckDB SQL twin:
+``hll_cells`` (the register cell: md5 bucket + 32-bit rho), ``hll_fold``
+(registers to the exact BIGINT sum S), ``hll_numerator_lit`` (the float
+numerator for any p) and ``cms_cells`` (the Count-Min (row, bucket)
+cells). Every batch HLL/CMS query here and the windowed streaming
+sketches (streaming/queries.py) call them; Bloom's cells are
+``operators/bloom._cells``.
 
 Cross-engine determinism: every randomized step goes through the md5-based
 hash family (functions/hashing.py) and every sketch register / counter /
@@ -50,6 +58,7 @@ from ..functions.hashing import (
     permuted_hash,
     permuted_hash_sql,
 )
+from ..functions.text import words, words_sql
 
 # ---------------------------------------------------------------------------
 # HyperLogLog
@@ -63,7 +72,86 @@ _HLL_RHO_CAP = _HLL_W + 1  # 33
 _HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 # the whole float numerator as ONE literal: alpha * m^2 * 2^33
 HLL_NUMERATOR = _HLL_ALPHA * (HLL_M**2) * float(1 << _HLL_RHO_CAP)
-HLL_NUMERATOR_LIT = f"{HLL_NUMERATOR:.17e}"  # E-notation: DOUBLE in both engines
+
+
+def hll_numerator_lit(p: int = HLL_P) -> str:
+    """The family numerator alpha_512 * m^2 * 2^33 rescaled to m = 2**p, as
+    one E-notation literal (DOUBLE in both engines). Scaling by powers of
+    two is exact, so p = HLL_P gives HLL_NUMERATOR's own digits."""
+    m = 1 << p
+    return f"{(HLL_NUMERATOR / (HLL_M * HLL_M)) * m * m:.17e}"
+
+
+HLL_NUMERATOR_LIT = hll_numerator_lit()
+
+
+def hll_cells(df: DataFrame, key: str, *keep: str, p: int = HLL_P) -> DataFrame:
+    """The HLL register cell of every row: (keep..., bucket, rho) with
+    h = md5_long(key), bucket = h mod 2**p and rho = the 1-based position
+    of the first set bit of the 32-bit sub-hash (h div 2**p) mod 2**32,
+    capped at 33 for a zero sub-hash. A register is max(rho) per bucket;
+    :func:`hll_cells_sql` is the DuckDB twin."""
+    m = 1 << p
+    rho = F.when(F.col("w32") == 0, F.lit(_HLL_RHO_CAP)).otherwise(
+        F.lit(_HLL_RHO_CAP) - F.length(F.bin(F.col("w32")))
+    )
+    # integer division via Spark SQL `div` (engine-exact; `/` would be float)
+    return (
+        df.select(*keep, md5_long(F.col(key).cast("string")).alias("h"))
+        .select(
+            *keep,
+            (F.col("h") % m).alias("bucket"),
+            F.expr(f"(h div {m}) % {1 << _HLL_W}").alias("w32"),
+        )
+        .select(*keep, "bucket", rho.alias("rho"))
+    )
+
+
+def hll_cells_sql(source: str, key: str, *keep: str, p: int = HLL_P) -> str:
+    """DuckDB twin of :func:`hll_cells` over the relation ``source``."""
+    m = 1 << p
+    cols = "".join(f"{c}, " for c in keep)
+    w32 = f"(h // {m}) % {1 << _HLL_W}"
+    return (
+        f"SELECT {cols}h % {m} AS bucket, "
+        f"CASE WHEN {w32} = 0 THEN {_HLL_RHO_CAP} "
+        f"ELSE {_HLL_RHO_CAP} - length(bin({w32})) END AS rho "
+        f"FROM (SELECT {cols}{md5_long_sql(f'CAST({key} AS VARCHAR)')} AS h "
+        f"FROM {source})"
+    )
+
+
+def hll_fold(regs: DataFrame, *group: str, p: int = HLL_P) -> DataFrame:
+    """Fold registers (group..., bucket, m_j) to (group..., n_buckets, s):
+    s = sum_nonempty 2**(33 - m_j) + (m - n_buckets) * 2**33 is the exact
+    BIGINT harmonic sum scaled by 2**33, so the raw estimate is
+    ``hll_numerator_lit(p) / s``. :func:`hll_fold_sql` is the twin."""
+    folded = regs.groupBy(*group).agg(
+        # python-api shiftleft wants a literal int for numBits; the SQL
+        # function takes an expression on both engines
+        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")).alias(
+            "s_nonempty"
+        ),
+        F.count(F.lit(1)).alias("n_buckets"),
+    )
+    return folded.select(
+        *group,
+        "n_buckets",
+        (
+            F.col("s_nonempty")
+            + (F.lit(1 << p) - F.col("n_buckets"))
+            * F.lit(1 << _HLL_RHO_CAP).cast("bigint")
+        ).alias("s"),
+    )
+
+
+def hll_fold_sql(p: int = HLL_P) -> str:
+    """DuckDB twin of :func:`hll_fold`'s ``s``: an aggregate expression over
+    a register relation with column ``m_j``."""
+    return (
+        f"CAST(sum(1::BIGINT << ({_HLL_RHO_CAP} - m_j)) AS BIGINT)"
+        f" + ({1 << p} - count(*)) * (1::BIGINT << {_HLL_RHO_CAP})"
+    )
 
 
 def hll_distinct(
@@ -82,48 +170,18 @@ def hll_distinct(
     Fixed-size state: 512 registers * n_groups; the final fold to S is a
     512-row-per-group aggregation, negligible at any corpus size.
     """
-    m = 1 << p
-    h = md5_long(F.col(key_col).cast("string"))
-    # integer division via Spark SQL `div` (engine-exact; `/` would be float)
-    df2 = df.select(
-        F.col(group_col).alias("grp"),
-        h.alias("h"),
-    ).select(
-        "grp",
-        (F.col("h") % m).alias("bucket"),
-        F.expr(f"(h div {m}) % {1 << _HLL_W}").alias("w32"),
-    )
-    rho = F.when(F.col("w32") == 0, F.lit(_HLL_RHO_CAP)).otherwise(
-        F.lit(_HLL_RHO_CAP) - F.length(F.bin(F.col("w32")))
-    )
-    regs = (
-        df2.select("grp", "bucket", rho.alias("rho"))
-        .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
-    folded = regs.groupBy("grp").agg(
-        # python-api shiftleft wants a literal int for numBits; the SQL
-        # function takes an expression on both engines
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")).alias(
-            "s_nonempty"
-        ),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
+    cells = hll_cells(df.select(F.col(group_col).alias("grp"), key_col), key_col, "grp", p=p)
+    regs = cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j"))
     exact = (
         df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("k"))
         .groupBy("grp")
         .agg(F.count_distinct("k").alias("n_exact"))
     )
-    # float(HLL_NUMERATOR_LIT) round-trips to the identical double the
+    # float(hll_numerator_lit(p)) round-trips to the identical double the
     # oracle parses from the same E-notation literal
-    est = F.lit(float(HLL_NUMERATOR_LIT)) / F.col("s")
+    est = F.lit(float(hll_numerator_lit(p))) / F.col("s")
     return (
-        folded.withColumn("v_empty", F.lit(m) - F.col("n_buckets"))
-        .withColumn(
-            "s",
-            F.col("s_nonempty")
-            + F.col("v_empty") * F.lit(1 << _HLL_RHO_CAP).cast("bigint"),
-        )
+        hll_fold(regs, "grp", p=p)
         .join(F.broadcast(exact), "grp")
         .select(
             F.col("grp").alias(group_col),
@@ -132,7 +190,7 @@ def hll_distinct(
             F.round(F.abs(est - F.col("n_exact")) / F.col("n_exact"), 6).alias(
                 "rel_err"
             ),
-            F.col("v_empty").alias("n_empty_buckets"),
+            (F.lit(1 << p) - F.col("n_buckets")).alias("n_empty_buckets"),
         )
     )
 
@@ -140,22 +198,13 @@ def hll_distinct(
 def hll_distinct_oracle(table: str, key_col: str, group_col: str, p: int = HLL_P) -> str:
     """DuckDB twin of :func:`hll_distinct`, bit-for-bit (same md5 hash,
     same integer registers, same single-literal float fold)."""
-    m = 1 << p
-    h = md5_long_sql(f"CAST({key_col} AS VARCHAR)")
+    num = hll_numerator_lit(p)
     return f"""
-WITH hashed AS (
-  SELECT {group_col} AS grp, {h} AS h FROM {table}
-), buckets AS (
-  SELECT grp, h % {m} AS bucket, (h // {m}) % {1 << _HLL_W} AS w32 FROM hashed
-), regs AS (
-  SELECT grp, bucket,
-         max(CASE WHEN w32 = 0 THEN {_HLL_RHO_CAP}
-                  ELSE {_HLL_RHO_CAP} - length(bin(w32)) END) AS m_j
-  FROM buckets GROUP BY 1, 2
+WITH regs AS (
+  SELECT {group_col} AS grp, bucket, max(rho) AS m_j
+  FROM ({hll_cells_sql(table, key_col, group_col, p=p)}) GROUP BY 1, 2
 ), folded AS (
-  SELECT grp,
-         CAST(sum(1::BIGINT << ({_HLL_RHO_CAP} - m_j)) AS BIGINT) AS s_nonempty,
-         count(*) AS n_buckets
+  SELECT grp, {hll_fold_sql(p)} AS s, count(*) AS n_buckets
   FROM regs GROUP BY 1
 ), exact AS (
   SELECT {group_col} AS grp, count(DISTINCT {key_col}) AS n_exact
@@ -163,9 +212,9 @@ WITH hashed AS (
 )
 SELECT f.grp AS {group_col},
        e.n_exact,
-       round({HLL_NUMERATOR_LIT} / (s_nonempty + ({m} - n_buckets) * (1::BIGINT << {_HLL_RHO_CAP})), 4) AS hll_estimate,
-       round(abs({HLL_NUMERATOR_LIT} / (s_nonempty + ({m} - n_buckets) * (1::BIGINT << {_HLL_RHO_CAP})) - e.n_exact) / e.n_exact, 6) AS rel_err,
-       {m} - n_buckets AS n_empty_buckets
+       round({num} / s, 4) AS hll_estimate,
+       round(abs({num} / s - e.n_exact) / e.n_exact, 6) AS rel_err,
+       {1 << p} - n_buckets AS n_empty_buckets
 FROM folded f JOIN exact e USING (grp)
 """
 
@@ -179,12 +228,42 @@ CMS_WIDTH = 1024
 _CMS_PARAMS = hash_params(CMS_DEPTH, seed=0xC0FFEE)
 
 
+def cms_cells(df: DataFrame, key: str, *keep: str, width: int = CMS_WIDTH) -> DataFrame:
+    """The Count-Min cells of every row: one (keep..., r, bucket) row per
+    hash row r of ``_CMS_PARAMS``, bucket = permuted md5(key) mod width.
+    A cell's count is the sum over the rows landing in it;
+    :func:`cms_cells_sql` is the DuckDB twin."""
+    base = md5_long(F.col(key).cast("string"))
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(r).cast("bigint").alias("r"),
+                (permuted_hash(base, a, b) % width).alias("bucket"),
+            )
+            for r, (a, b) in enumerate(_CMS_PARAMS)
+        ]
+    )
+    return df.select(*keep, F.explode(cells).alias("cell")).select(
+        *keep, "cell.r", "cell.bucket"
+    )
+
+
+def cms_cells_sql(source: str, key: str, *keep: str, width: int = CMS_WIDTH) -> str:
+    """DuckDB twin of :func:`cms_cells` over the relation ``source``."""
+    base = md5_long_sql(f"CAST({key} AS VARCHAR)")
+    cols = "".join(f"{c}, " for c in keep)
+    return " UNION ALL ".join(
+        f"SELECT {cols}CAST({r} AS BIGINT) AS r, "
+        f"({permuted_hash_sql(base, a, b)}) % {width} AS bucket FROM {source}"
+        for r, (a, b) in enumerate(_CMS_PARAMS)
+    )
+
+
 def countmin_freq(
     counts: DataFrame,
     key_col: str,
     count_col: str,
     top_k: int = 20,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Count-Min frequency estimates for the ``top_k`` exact heavy hitters,
@@ -203,55 +282,23 @@ def countmin_freq(
     map-side-combined shuffle (the corpus scan), and everything after is
     constant-size. The exact top-k probe set is the audit twin.
     """
-    base = md5_long(F.col(key_col).cast("string"))
-    cells = []
-    for r, (a, b) in enumerate(_CMS_PARAMS):
-        cells.append(
-            F.struct(
-                F.lit(r).alias("r"),
-                (permuted_hash(base, a, b) % width).alias("bucket"),
-            )
-        )
-    exploded = counts.select(
-        F.col(key_col).alias("k"),
-        F.col(count_col).alias("cnt"),
-        F.explode(F.array(*cells)).alias("cell"),
-    ).select("k", "cnt", F.col("cell.r").alias("r"), F.col("cell.bucket").alias("bucket"))
-    sketch = exploded.groupBy("r", "bucket").agg(F.sum("cnt").alias("cell_sum"))
-
-    from pyspark.sql import Window
-
+    kc = counts.select(F.col(key_col).alias("k"), F.col(count_col).alias("cnt"))
+    sketch = (
+        cms_cells(kc, "k", "cnt", width=width)
+        .groupBy("r", "bucket")
+        .agg(F.sum("cnt").alias("cell_sum"))
+    )
     # top-k FIRST via orderBy+limit (TakeOrderedAndProject: per-partition
     # partial top-k + driver merge -- never a global single-partition
     # window over the whole vocabulary), then rank the top_k survivors;
     # the window's single partition holds top_k rows, not the vocab
-    top = counts.select(
-        F.col(key_col).alias("k"), F.col(count_col).alias("cnt")
-    ).orderBy(F.desc("cnt"), F.asc("k")).limit(top_k)
+    top = kc.orderBy(F.desc("cnt"), F.asc("k")).limit(top_k)
     probes = top.withColumn(
         "rk", F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("k")))
     )
-    probe_cells = probes.select(
-        "k",
-        "cnt",
-        "rk",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        (
-                            permuted_hash(md5_long(F.col("k").cast("string")), a, b)
-                            % width
-                        ).alias("bucket"),
-                    )
-                    for r, (a, b) in enumerate(_CMS_PARAMS)
-                ]
-            )
-        ).alias("cell"),
-    ).select("k", "cnt", "rk", F.col("cell.r").alias("r"), F.col("cell.bucket").alias("bucket"))
     est = (
-        probe_cells.join(F.broadcast(sketch), ["r", "bucket"])
+        cms_cells(probes, "k", "k", "cnt", "rk", width=width)
+        .join(F.broadcast(sketch), ["r", "bucket"])
         .groupBy("k", "cnt", "rk")
         .agg(F.min("cell_sum").alias("est_cnt"))
     )
@@ -275,21 +322,16 @@ def countmin_freq_oracle(
 ) -> str:
     """DuckDB twin of :func:`countmin_freq` over a ``counts`` CTE named by
     ``counts_cte`` (must expose ``{key_col}``, ``{count_col}``)."""
-    base = md5_long_sql(f"CAST({key_col} AS VARCHAR)")
-    cell_rows = " UNION ALL ".join(
-        f"SELECT {key_col} AS k, {count_col} AS cnt, {r} AS r, "
-        f"({permuted_hash_sql(base, a, b)}) % {width} AS bucket FROM {counts_cte}"
-        for r, (a, b) in enumerate(_CMS_PARAMS)
-    )
     return f"""
-cells AS (
-  {cell_rows}
+kc AS (
+  SELECT {key_col} AS k, {count_col} AS cnt FROM {counts_cte}
+), cells AS (
+  {cms_cells_sql("kc", "k", "k", "cnt", width=width)}
 ), sketch AS (
   SELECT r, bucket, sum(cnt) AS cell_sum FROM cells GROUP BY 1, 2
 ), probes AS (
-  SELECT {key_col} AS k, {count_col} AS cnt,
-         row_number() OVER (ORDER BY {count_col} DESC, {key_col} ASC) AS rk
-  FROM {counts_cte}
+  SELECT k, cnt, row_number() OVER (ORDER BY cnt DESC, k ASC) AS rk
+  FROM kc
   QUALIFY rk <= {top_k}
 ), probe_cells AS (
   SELECT p.k, p.cnt, p.rk, c.r, c.bucket
@@ -432,44 +474,19 @@ def hll_merge_demo(
 
     Output: (n_shards, merged_estimate, direct_estimate, est_equal,
     n_exact)."""
-    m = 1 << p
-    h = md5_long(F.col(key_col).cast("string"))
-    rows = df.select(
-        (F.col(shard_col) % n_shards).alias("shard"),
-        h.alias("h"),
-    ).select(
+    cells = hll_cells(
+        df.select((F.col(shard_col) % n_shards).alias("shard"), key_col),
+        key_col,
         "shard",
-        (F.col("h") % m).alias("bucket"),
-        F.expr(f"(h div {m}) % {1 << _HLL_W}").alias("w32"),
+        p=p,
     )
-    rho = F.when(F.col("w32") == 0, F.lit(_HLL_RHO_CAP)).otherwise(
-        F.lit(_HLL_RHO_CAP) - F.length(F.bin(F.col("w32")))
-    )
-    per_shard = (
-        rows.select("shard", "bucket", rho.alias("rho"))
-        .groupBy("shard", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
+    per_shard = cells.groupBy("shard", "bucket").agg(F.max("rho").alias("m_j"))
     merged = per_shard.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
-    direct = (
-        rows.select("bucket", rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
+    direct = cells.groupBy("bucket").agg(F.max("rho").alias("m_j"))
+    num = F.lit(float(hll_numerator_lit(p)))
 
     def fold(regs: DataFrame, alias: str) -> DataFrame:
-        f = regs.agg(
-            F.sum(
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-            ).alias("s_nonempty"),
-            F.count(F.lit(1)).alias("n_buckets"),
-        )
-        s = F.col("s_nonempty") + (F.lit(m) - F.col("n_buckets")) * F.lit(
-            1 << _HLL_RHO_CAP
-        ).cast("bigint")
-        return f.select(
-            F.round(F.lit(float(HLL_NUMERATOR_LIT)) / s, 4).alias(alias)
-        )
+        return hll_fold(regs, p=p).select(F.round(num / F.col("s"), 4).alias(alias))
 
     exact = df.agg(F.count_distinct(F.col(key_col)).alias("n_exact"))
     return (
@@ -490,23 +507,11 @@ def hll_merge_demo_oracle(
     table: str, key_col: str, shard_col: str, n_shards: int = 4, p: int = HLL_P
 ) -> str:
     """DuckDB twin of :func:`hll_merge_demo`."""
-    m = 1 << p
-    h = md5_long_sql(f"CAST({key_col} AS VARCHAR)")
-    fold = (
-        f"round({HLL_NUMERATOR_LIT} / (CAST(sum(1::BIGINT << ({_HLL_RHO_CAP} - m_j)) AS BIGINT)"
-        f" + ({m} - count(*)) * (1::BIGINT << {_HLL_RHO_CAP})), 4)"
-    )
+    fold = f"round({hll_numerator_lit(p)} / ({hll_fold_sql(p)}), 4)"
     return f"""
 WITH rows_ AS (
-  SELECT {shard_col} % {n_shards} AS shard,
-         {h} % {m} AS bucket,
-         ({h} // {m}) % {1 << _HLL_W} AS w32
-  FROM {table}
-), rho AS (
-  SELECT shard, bucket,
-         CASE WHEN w32 = 0 THEN {_HLL_RHO_CAP}
-              ELSE {_HLL_RHO_CAP} - length(bin(w32)) END AS rho
-  FROM rows_
+  SELECT {shard_col} % {n_shards} AS shard, {key_col} FROM {table}
+), rho AS ({hll_cells_sql("rows_", key_col, "shard", p=p)}
 ), per_shard AS (
   SELECT shard, bucket, max(rho) AS m_j FROM rho GROUP BY 1, 2
 ), merged AS (
@@ -841,7 +846,6 @@ FROM eq CROSS JOIN est CROSS JOIN exact
 def join_cardinality_estimate(
     r_counts: DataFrame,
     s_counts: DataFrame,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Join-size estimation via the Count-Min INNER PRODUCT -- the
@@ -861,7 +865,7 @@ def join_cardinality_estimate(
     sketch cells -- constant-size work however large the inputs. The
     exact side is the audit's deliberate full computation. Both count
     relations feed two consumers (their sketch and the exact join), so
-    they are localCheckpoint-ed (round-6 twice-consumed rule) -- they
+    they are localCheckpoint-ed (the twice-consumed rule) -- they
     are key-vocabulary-sized, not corpus-sized."""
     r_counts = r_counts.select(
         F.col(r_counts.columns[0]).alias("k"),
@@ -873,17 +877,8 @@ def join_cardinality_estimate(
     ).localCheckpoint()
 
     def sketch(counts):
-        base = md5_long(F.col("k").cast("string"))
-        cells = [
-            F.struct(
-                F.lit(r).alias("r"),
-                (permuted_hash(base, a, b) % width).alias("bucket"),
-            )
-            for r, (a, b) in enumerate(_CMS_PARAMS[:depth])
-        ]
         return (
-            counts.select("cnt", F.explode(F.array(*cells)).alias("cell"))
-            .select("cnt", F.col("cell.r").alias("r"), F.col("cell.bucket").alias("bucket"))
+            cms_cells(counts, "k", "cnt", width=width)
             .groupBy("r", "bucket")
             .agg(F.sum("cnt").alias("cell_sum"))
         )
@@ -909,22 +904,15 @@ def join_cardinality_estimate(
 def join_cardinality_estimate_sql(
     r_sql: str,
     s_sql: str,
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> str:
     """DuckDB twin of :func:`join_cardinality_estimate`; ``r_sql`` /
     ``s_sql`` must each select (k, cnt)."""
-    base = md5_long_sql("CAST(k AS VARCHAR)")
-    rows = " UNION ALL ".join(
-        f"SELECT cnt, {r} AS r, ({permuted_hash_sql(base, a, b)}) % {width} AS bucket "
-        f"FROM {{side}}"
-        for r, (a, b) in enumerate(_CMS_PARAMS[:depth])
-    )
     return f"""
 WITH rc AS MATERIALIZED ({r_sql}),
 sc AS MATERIALIZED ({s_sql}),
-r_cells AS ({rows.format(side='rc')}),
-s_cells AS ({rows.format(side='sc')}),
+r_cells AS ({cms_cells_sql('rc', 'k', 'cnt', width=width)}),
+s_cells AS ({cms_cells_sql('sc', 'k', 'cnt', width=width)}),
 r_sketch AS (
   SELECT r, bucket, CAST(sum(cnt) AS BIGINT) AS ra FROM r_cells GROUP BY 1, 2
 ),
@@ -980,12 +968,12 @@ def approx_topk_shard_union(
     single-partition window -- the audit's exact column is
     vocabulary-bounded only because the audit wants ground truth; the
     production form drops it and the bounded union is all that moves)."""
-    from .textstats import _widened, _words
+    from .textstats import _widened
 
     shard = md5_long(F.col(id_col).cast("string")) % n_shards
     toks = (
         _widened(docs)
-        .select(shard.alias("shard"), F.explode(_words(text_col)).alias("w"))
+        .select(shard.alias("shard"), F.explode(words(text_col)).alias("w"))
         .groupBy("shard", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
@@ -1026,13 +1014,11 @@ def approx_topk_shard_union_sql(
 ) -> str:
     """DuckDB twin of :func:`approx_topk_shard_union`: same md5 shards,
     same per-shard cut, same conditional aggregate and final rank."""
-    from .textstats import _words_sql
-
     shard = f"{md5_long_sql(f'CAST({id_col} AS VARCHAR)')} % {n_shards}"
     return f"""
 WITH toks AS (
   SELECT shard, w, CAST(count(*) AS BIGINT) AS cnt FROM (
-    SELECT {shard} AS shard, unnest({_words_sql(text_col)}) AS w FROM {table}
+    SELECT {shard} AS shard, unnest({words_sql(text_col)}) AS w FROM {table}
   ) GROUP BY 1, 2
 ),
 ranked AS (
@@ -1057,7 +1043,7 @@ FROM (
 """
 
 # ---------------------------------------------------------------------------
-# Hilbert curve layout (round-8 backlog). The classic xy2d walk is a
+# Hilbert curve layout. The classic xy2d walk is a
 # per-bit state recurrence -- (x, y, d) rewritten at every level -- so
 # unlike Morton it cannot be one flat interleave expression (inlining
 # would double the tree per level: 2^bits terms). It IS a fixed
@@ -1160,8 +1146,6 @@ def hilbert_pruning_audit(
     dimensions, same two probe predicates, same accounting as
     zonemap_pruning_audit -- only the shard placement differs, which is
     exactly the variable a layout decision controls.
-
-    Gated since round 8 (catalog name hilbert_pruning_audit).
 
     Scale shape (100 TB): TWO corpus passes (the 1-row min/max scaling
     scalar, then one scan computing BOTH addresses in a single lineage
@@ -1312,8 +1296,6 @@ def quantile_merge_shards(
     ceil(p*n), computed by the histogram cumulative walk). Output per
     requested percentile: (pct, est_cents, exact_cents, abs_err), all
     BIGINT.
-
-    GATED ROUND 9 (promoted from the staged backlog).
 
     Determinism: values are integer cents; boundary picks are integer
     rank arithmetic over the (cents, key) total order; the pooled
@@ -1493,44 +1475,32 @@ def hll_intersection_estimate(
     (~0.709) differs slightly from alpha_512's base -- a constant-factor
     bias tolerated BY DESIGN in this graded audit, and irrelevant to
     parity because both engines fold the identical literal."""
-    m = 1 << p
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
+    ws = words(text_col)
     flagged = (
         docs.select(
             F.col(id_col).alias("id"),
-            F.array_contains(words, term_a).alias("in_a"),
-            F.array_contains(words, term_b).alias("in_b"),
+            F.array_contains(ws, term_a).alias("in_a"),
+            F.array_contains(ws, term_b).alias("in_b"),
         )
         .where(F.col("in_a") | F.col("in_b"))
         # posting-bounded; feeds the register build AND the exact grade
         # -- localCheckpoint so the scan + tokenize runs once
         .localCheckpoint()
     )
-    h = md5_long(F.col("id").cast("string"))
-    sided = (
-        flagged.select(
-            F.explode(
-                F.filter(
-                    F.array(
-                        F.when(F.col("in_a"), F.lit("a")),
-                        F.when(F.col("in_b"), F.lit("b")),
-                    ),
-                    lambda x: x.isNotNull(),
-                )
-            ).alias("side"),
-            h.alias("h"),
-        )
-        .select(
-            "side",
-            (F.col("h") % m).alias("bucket"),
-            F.expr(f"(h div {m}) % {1 << _HLL_W}").alias("w32"),
-        )
-    )
-    rho = F.when(F.col("w32") == 0, F.lit(_HLL_RHO_CAP)).otherwise(
-        F.lit(_HLL_RHO_CAP) - F.length(F.bin(F.col("w32")))
+    sided = flagged.select(
+        F.explode(
+            F.filter(
+                F.array(
+                    F.when(F.col("in_a"), F.lit("a")),
+                    F.when(F.col("in_b"), F.lit("b")),
+                ),
+                lambda x: x.isNotNull(),
+            )
+        ).alias("side"),
+        "id",
     )
     regs = (
-        sided.select("side", "bucket", rho.alias("rho"))
+        hll_cells(sided, "id", "side", p=p)
         .groupBy("side", "bucket")
         .agg(F.max("rho").alias("m_j"))
         .localCheckpoint()  # <= 2m rows; feeds side folds + union fold
@@ -1539,17 +1509,7 @@ def hll_intersection_estimate(
 
     def fold(frame, side=None):
         f = frame if side is None else frame.where(F.col("side") == side)
-        return f.agg(
-            F.sum(
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-            ).alias("s_ne"),
-            F.count(F.lit(1)).alias("nb"),
-        ).select(
-            (
-                F.col("s_ne")
-                + (F.lit(m) - F.col("nb")) * F.lit(1 << _HLL_RHO_CAP).cast("bigint")
-            ).alias("s")
-        )
+        return hll_fold(f, p=p).select("s")
 
     sa = fold(regs, "a").select(F.col("s").alias("s_a"))
     sb = fold(regs, "b").select(F.col("s").alias("s_b"))
@@ -1561,9 +1521,7 @@ def hll_intersection_estimate(
         .cast("bigint")
         .alias("n_exact_both"),
     )
-    # rescale the family numerator (alpha * m^2) from m = 512 to this m
-    num_lit = f"{(HLL_NUMERATOR / (HLL_M * HLL_M)) * m * m:.17e}"
-    num = F.lit(float(num_lit))
+    num = F.lit(float(hll_numerator_lit(p)))
     return (
         exact.join(F.broadcast(sa))
         .join(F.broadcast(sb))
@@ -1593,49 +1551,31 @@ def hll_intersection_estimate_sql(
     """DuckDB twin of :func:`hll_intersection_estimate`: same posting
     flags, register build, max-of-maxes union merge, single-literal
     float folds, and one-round inclusion-exclusion."""
-    m = 1 << p
-    h = md5_long_sql(f"CAST(id AS VARCHAR)")
-    cap = _HLL_RHO_CAP
-    num_lit = f"{(HLL_NUMERATOR / (HLL_M * HLL_M)) * m * m:.17e}"
-    words = f"[x for x in string_split_regex(lower({text_col}), '\\s+') if x != '']"
+    num = hll_numerator_lit(p)
+    ws = words_sql(text_col)
+    s_expr = hll_fold_sql(p)
     return f"""
 WITH flagged AS (
   SELECT {id_col} AS id,
-         len([x for x in {words} if x = '{term_a}']) > 0 AS in_a,
-         len([x for x in {words} if x = '{term_b}']) > 0 AS in_b
+         len([x for x in {ws} if x = '{term_a}']) > 0 AS in_a,
+         len([x for x in {ws} if x = '{term_b}']) > 0 AS in_b
   FROM {table}
 ),
 fl AS (SELECT * FROM flagged WHERE in_a OR in_b),
 sided AS (
-  SELECT s.side AS side, {h} % {m} AS bucket, ({h} // {m}) % {1 << _HLL_W} AS w32
-  FROM (
-    SELECT id, unnest([x for x in [
-      CASE WHEN in_a THEN 'a' END,
-      CASE WHEN in_b THEN 'b' END] if x IS NOT NULL]) AS side
-    FROM fl
-  ) s
+  SELECT id, unnest([x for x in [
+    CASE WHEN in_a THEN 'a' END,
+    CASE WHEN in_b THEN 'b' END] if x IS NOT NULL]) AS side
+  FROM fl
 ),
 regs AS (
-  SELECT side, bucket,
-         max(CASE WHEN w32 = 0 THEN {cap} ELSE {cap} - length(bin(w32)) END) AS m_j
-  FROM sided GROUP BY 1, 2
+  SELECT side, bucket, max(rho) AS m_j
+  FROM ({hll_cells_sql("sided", "id", "side", p=p)}) GROUP BY 1, 2
 ),
 uregs AS (SELECT bucket, max(m_j) AS m_j FROM regs GROUP BY 1),
-sa AS (
-  SELECT CAST(sum(1::BIGINT << ({cap} - m_j)) AS BIGINT)
-       + ({m} - count(*)) * (1::BIGINT << {cap}) AS s
-  FROM regs WHERE side = 'a'
-),
-sb AS (
-  SELECT CAST(sum(1::BIGINT << ({cap} - m_j)) AS BIGINT)
-       + ({m} - count(*)) * (1::BIGINT << {cap}) AS s
-  FROM regs WHERE side = 'b'
-),
-su AS (
-  SELECT CAST(sum(1::BIGINT << ({cap} - m_j)) AS BIGINT)
-       + ({m} - count(*)) * (1::BIGINT << {cap}) AS s
-  FROM uregs
-),
+sa AS (SELECT {s_expr} AS s FROM regs WHERE side = 'a'),
+sb AS (SELECT {s_expr} AS s FROM regs WHERE side = 'b'),
+su AS (SELECT {s_expr} AS s FROM uregs),
 exact AS (
   SELECT CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_a,
          CAST(sum(CASE WHEN in_b THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_b,
@@ -1644,10 +1584,10 @@ exact AS (
   FROM fl
 )
 SELECT n_exact_a, n_exact_b, n_exact_both,
-       round({num_lit} / sa.s, 4) AS est_a,
-       round({num_lit} / sb.s, 4) AS est_b,
-       round({num_lit} / su.s, 4) AS est_union,
-       round({num_lit} / sa.s + {num_lit} / sb.s - {num_lit} / su.s, 4)
+       round({num} / sa.s, 4) AS est_a,
+       round({num} / sb.s, 4) AS est_b,
+       round({num} / su.s, 4) AS est_union,
+       round({num} / sa.s + {num} / sb.s - {num} / su.s, 4)
          AS est_intersection
 FROM exact, sa, sb, su
 """

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
-from ..functions.text import STOP_WORDS
+from ..functions.text import STOP_WORDS, words, words_sql
 
 # Tiny per-language marker lists for the n-gram/stopword-hit heuristic.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -32,14 +32,6 @@ def _widened(docs: DataFrame) -> DataFrame:
     return widen_scan(docs)
 
 
-def _words(text_col: str) -> Column:
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-
-
-def _words_sql(text_expr: str) -> str:
-    return f"[x for x in string_split_regex(lower({text_expr}), '\\s+') if x != '']"
-
-
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-alnum symbol
 # (the GPT-2 pattern's skeleton). Explicit char classes, NOT \s/\w: Java
 # regex and RE2 disagree on \s (vertical tab) -- see CLAUDE.md.
@@ -53,7 +45,7 @@ def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     (letter runs / digit runs / single symbols -- the GPT-2 pattern's
     skeleton, identical semantics in Java regex and RE2)."""
     docs = _widened(docs)
-    w = _words(text_col)
+    w = words(text_col)
     return docs.select(
         F.col(id_col),
         # bigint casts: width-align with the oracle's int64 (driver
@@ -74,7 +66,7 @@ def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def token_count_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 SELECT {id_col},
        len(w) AS n_tokens,
@@ -91,7 +83,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     word length (x1000, floored -- integer-exact), plus a 0-100 composite."""
     docs = _widened(docs)
     text = F.col(text_col)
-    w = _words(text_col)
+    w = words(text_col)
     n_chars = F.length(text)
     n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
     stop_arr = F.array(*[F.lit(s) for s in dict.fromkeys(STOP_WORDS)])
@@ -119,7 +111,7 @@ def quality_score_sql(
     table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
     stop_list = ", ".join(f"'{s}'" for s in dict.fromkeys(STOP_WORDS))
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col},
@@ -153,7 +145,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     swaps in fastText/CLD3 via mapInPandas; the heuristic IS the operator
     contract here so the oracle can replicate it."""
     docs = _widened(docs)
-    w = _words(text_col)
+    w = words(text_col)
 
     def contains(markers):
         return lambda x: F.array_contains(markers, x)
@@ -175,7 +167,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
 
 def lang_id_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     hit_exprs = ", ".join(
         "len([x for x in w if x IN ({m})]) AS hits_{lang}".format(
             m=", ".join(f"'{m}'" for m in LANG_MARKERS[lang]), lang=lang
@@ -227,7 +219,7 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     hash, so the negligible collision behavior is differential-safe); ratios
     are int/int divisions -- bit-identical cross-engine."""
     docs = _widened(docs)
-    w = _words(text_col)
+    w = words(text_col)
     levels = [
         docs.select(
             F.col(id_col),
@@ -279,7 +271,7 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
 def repetition_metrics_sql(
     table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     gram2 = "list_transform(range(1, len(w)), i -> concat_ws(' ', w[i], w[i+1]))"
     gram5 = (
         "list_transform(range(1, len(w) - 3), "
@@ -357,8 +349,8 @@ def bpe_pair_counts(
     vocab weighted by frequency, never over the corpus. This is the
     standard trick that makes BPE training corpus-size-independent after
     one counting pass."""
-    words = _widened(docs).select(F.explode(_words(text_col)).alias("word"))
-    freq = words.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
+    toks = _widened(docs).select(F.explode(words(text_col)).alias("word"))
+    freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
     pairs = freq.where(F.length("word") >= 2).select(
         F.explode(
             F.transform(
@@ -378,7 +370,7 @@ def bpe_pair_counts(
 def bpe_pair_counts_sql(
     table: str = "documents", text_col: str = "text", min_weight: int = 5
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH words AS (
   SELECT unnest({w}) AS word FROM {table}
@@ -418,7 +410,7 @@ def vocab_oov_rate(
     oov_rate NULL, keep=false). Ratio = single division of exact BIGINTs
     (bit-identical across engines); no float aggregation anywhere."""
     base = _widened(docs)
-    toks = base.select(F.col(id_col), F.explode(_words(text_col)).alias("token"))
+    toks = base.select(F.col(id_col), F.explode(words(text_col)).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -462,7 +454,7 @@ def vocab_oov_rate_sql(
     vocab_size: int = 1000,
     max_oov_rate_sql: str = "2e-1",
 ) -> str:
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH toks AS MATERIALIZED (
   SELECT {id_col}, unnest({w}) AS token FROM {table}
@@ -546,9 +538,9 @@ def _bpe_train(
     encoder's second corpus explode + distinct (the vocab rebuild) and its
     n_merges replay projections (r14 optimization, guide §2.4: the vocab
     frame was computed twice -- once by the trainer, once by the encoder)."""
-    words = _widened(docs).select(F.explode(_words(text_col)).alias("word"))
-    words = words.where(F.col("word").rlike("^[a-z]+$"))
-    freq = words.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
+    toks = _widened(docs).select(F.explode(words(text_col)).alias("word"))
+    toks = toks.where(F.col("word").rlike("^[a-z]+$"))
+    freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
     state = freq.select(
         F.concat(
             F.lit("|"), F.regexp_replace("word", "(.)", "|$1|"), F.lit("|")
@@ -642,7 +634,7 @@ def _bpe_encode_counts(
     left-joins its segment frame and coalesces, saving a corpus scan)."""
     _, state = _bpe_train(docs, text_col, n_merges)
     base = _widened(docs)
-    toks = base.select(F.col(id_col), F.explode(_words(text_col)).alias("word"))
+    toks = base.select(F.col(id_col), F.explode(words(text_col)).alias("word"))
     alpha = toks.where(F.col("word").rlike("^[a-z]+$"))
     word_tokens = state.select(
         F.replace(F.col("sym"), F.lit("|"), F.lit("")).alias("word"),
@@ -670,7 +662,7 @@ def bpe_encode_sql(
     """DuckDB twin of :func:`bpe_encode`: the trainer's unrolled CTE chain
     (shared with bpe_train_merges_sql) replayed over the distinct word
     vocabulary via scalar-subquery literal replaces."""
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     train = bpe_train_merges_sql(table, text_col, n_merges)
     parts = [
         f"WITH merges AS MATERIALIZED ({train})",
@@ -727,7 +719,7 @@ def bpe_train_merges_sql(
     """DuckDB twin of :func:`bpe_train_merges`: the full induction loop
     unrolled as CTE rounds, the argmax pair threaded through scalar
     subqueries into each round's literal replace."""
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     parts = [
         f"""WITH words AS (
   SELECT unnest({w}) AS word FROM {table}
@@ -798,7 +790,7 @@ def gopher_quality_flags(
     HOFs + comparisons). Composes with curation_pipeline as a pushed-down
     predicate."""
     docs = _widened(docs)
-    w = _words(text_col)
+    w = words(text_col)
     n_words = F.size(w).cast("bigint")
     sum_len = F.aggregate(w, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x))
     stop_arr = F.array(*[F.lit(s) for s in GOPHER_STOP_WORDS])
@@ -832,7 +824,7 @@ def gopher_quality_flags_sql(
     table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
     stop_list = ", ".join(f"'{s}'" for s in GOPHER_STOP_WORDS)
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH base AS (
   SELECT {id_col}, {w} AS w FROM {table}
@@ -897,7 +889,7 @@ def chunk_sliding_windows(
             "between consecutive windows would be silently dropped"
         )
     docs = _widened(docs)
-    w = _words(text_col)
+    w = words(text_col)
     n = F.size(w)
     n_chunks = F.when(n <= width, F.lit(1)).otherwise(
         F.floor((n - F.lit(width) + F.lit(stride - 1)) / F.lit(stride)).cast("int")
@@ -941,7 +933,7 @@ def chunk_sliding_windows_sql(
             "chunk stride must satisfy 0 < stride <= width, or tokens "
             "between consecutive windows would be silently dropped"
         )
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH w AS (
   SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
@@ -1125,7 +1117,7 @@ def heaps_vocab_growth(
     row numbering -- the checkpoint grid replaces both."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col(id_col).alias("id"), _words(text_col).alias("ws"))
+    d = _widened(docs).select(F.col(id_col).alias("id"), words(text_col).alias("ws"))
     # 1-row frame consumed by the broadcast under BOTH with_q consumers
     # (per_doc + firsts) -- broadcast builds re-evaluate the subtree per
     # consumer (r2 rule), so without the checkpoint the max(id) corpus
@@ -1184,7 +1176,7 @@ def heaps_vocab_growth_sql(
     (`//` = integer division; range() is the literal checkpoint grid)."""
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, {_words_sql(text_col)} AS ws FROM {table}
+  SELECT {id_col} AS id, {words_sql(text_col)} AS ws FROM {table}
 ),
 mx AS (SELECT max(id) AS max_id FROM d),
 wq AS (
@@ -1253,7 +1245,7 @@ def rake_keywords(
     phrases -- with ranks assigned on the k-row result."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col(id_col).alias("id"), _words(text_col).alias("ws"))
+    d = _widened(docs).select(F.col(id_col).alias("id"), words(text_col).alias("ws"))
     toks = d.select("id", F.posexplode("ws").alias("pos", "w"))
     freq_all = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # stopword cut as a distributed TakeOrdered (orderBy().limit --
@@ -1344,7 +1336,7 @@ def rake_keywords_sql(
     same integer scoring, string_agg ORDER BY phrase assembly."""
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, {_words_sql(text_col)} AS ws FROM {table}
+  SELECT {id_col} AS id, {words_sql(text_col)} AS ws FROM {table}
 ),
 toks AS (
   SELECT id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w FROM d
@@ -1516,7 +1508,7 @@ def feature_hashing_profile(
     n_buckets (16) sits below this corpus's ~31-token vocabulary ON
     PURPOSE: the audit exists to SHOW collisions and sign cancellation;
     a production dimension would be 2^18+."""
-    toks = _widened(docs).select(F.explode(_words(text_col)).alias("tok"))
+    toks = _widened(docs).select(F.explode(words(text_col)).alias("tok"))
     h = md5_long(F.col("tok"))
     keyed = toks.select(F.col("tok"), h.alias("h")).select(
         "tok",
@@ -1547,7 +1539,7 @@ def feature_hashing_profile_sql(
     h = md5_long_sql("tok")
     return f"""
 WITH toks AS (
-  SELECT unnest({_words_sql(text_col)}) AS tok FROM {table}
+  SELECT unnest({words_sql(text_col)}) AS tok FROM {table}
 ),
 keyed AS (
   SELECT tok, {h} % {n_buckets} AS bucket,
@@ -1591,7 +1583,7 @@ def vocab_drift_halves(
     vocab-bounded counts -- no unpartitioned window, no full sort; the
     union (<= 2k rows) broadcasts back onto the counts frame."""
     toks = _widened(docs).select(
-        F.col(id_col).alias("id"), F.explode(_words(text_col)).alias("tok")
+        F.col(id_col).alias("id"), F.explode(words(text_col)).alias("tok")
     )
     bounds = docs.agg(
         F.expr(f"(min({id_col}) + max({id_col})) DIV 2").alias("mid")
@@ -1644,7 +1636,7 @@ def vocab_drift_halves_sql(
 ) -> str:
     """DuckDB twin of :func:`vocab_drift_halves`: same midpoint split,
     conditional counts, ORDER BY/LIMIT top-k unions, and guarded ppm."""
-    w = _words_sql(text_col)
+    w = words_sql(text_col)
     return f"""
 WITH toks AS (
   SELECT {id_col} AS id, unnest({w}) AS tok FROM {table}

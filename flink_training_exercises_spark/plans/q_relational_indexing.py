@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..sources import load_table
 from .catalog import register
+from ..functions.text import words, words_sql
 from ..operators import (
     asof,
     cdc,
@@ -154,9 +155,9 @@ def q_inactive_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_bigram_counts",
-    oracle="""
+    oracle=f"""
 WITH w AS (
-  SELECT doc_id, [x for x in string_split_regex(lower(text), '\\s+') if x != ''] AS ws
+  SELECT doc_id, {words_sql("text")} AS ws
   FROM documents
 ),
 grams AS (
@@ -174,14 +175,14 @@ def q_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(load_table(spark, "documents", sf_dir))
-    words = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != "")
+    ws = words("text")
     # guard: F.sequence(1, 0) DESCENDS in Spark (DuckDB's generate_series is
     # empty) -- single-word docs must yield no bigrams, not an index error
     grams = F.when(
-        F.size(words) >= 2,
+        F.size(ws) >= 2,
         F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(words, i), F.element_at(words, i + 1)),
+            F.sequence(F.lit(1), F.size(ws) - 1),
+            lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     exploded = docs.select("doc_id", F.explode(grams).alias("bigram"))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ..sources import load_table
 from . import graphs as graphs_plan
 from .catalog import register
+from ..functions.text import words
 from ..operators import (
     bloom,
     dedup,
@@ -226,7 +227,7 @@ _CMS_COUNTS_SQL = """
 def q_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     counts = (
-        docs.select(F.explode(textstats._words("text")).alias("token"))
+        docs.select(F.explode(words("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -250,7 +250,7 @@ def q_pii_tcloseness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Bloom screen ahead of the scan, exact verify only on the flagged "
     "remainder), where the gated contamination_ngram_overlap is the "
     "exact single-stage form. Composes bloom_semijoin_audit over the "
-    "SAME gram pipeline (shared _words/_gram_strings fragments on both "
+    "SAME gram pipeline (shared words/_gram_strings fragments on both "
     "engines). One output row (n_probe_keys, n_candidates, n_true, "
     "n_false_pos); candidates >= true always -- the screen can only "
     "over-flag, never miss. 100 TB: the bench-side filter is "

@@ -21,13 +21,14 @@ from ..functions.time import ntz_as_utc_instant
 from ..operators.windows import DEFAULT_SLIDE, DEFAULT_THRESHOLD, DEFAULT_WINDOW
 
 DEFAULT_WATERMARK = "60 seconds"  # = maxEventDelay (RideCleansing.java:45)
+# the oracles' fire horizon (window end <= max instant - delay), in ms
+_WATERMARK_MS = int(DEFAULT_WATERMARK.removesuffix(" seconds")) * 1000
 
-# ONE source of truth for the windowed-sketch pairs' default window (ADVICE
-# r12): every streaming fold's `window` duration string and its batch
-# stage's / oracle's epoch-ms width MUST agree -- a mismatch silently
-# zeroes the est-vs-truth join (the _window_end_expr hazard). Deriving
-# both from SKETCH_WINDOW_MS enforces the invariant by construction;
-# never write the literal "6 hours" / 21600000 in a sketch-pair default.
+# ONE source of truth for the windowed sketches' window: the streaming
+# fold's duration string and the batch stages' / oracles' epoch-ms width
+# MUST agree -- a mismatch silently zeroes the est-vs-truth join (the
+# _window_end_expr hazard). Both derive from SKETCH_WINDOW_MS, and the
+# windowed sketches take no window parameter of their own.
 SKETCH_WINDOW_MS = 6 * 3600 * 1000
 SKETCH_WINDOW = f"{SKETCH_WINDOW_MS // (3600 * 1000)} hours"
 assert SKETCH_WINDOW_MS % (3600 * 1000) == 0  # the derivation above is hour-exact
@@ -547,42 +548,66 @@ def run_rollup_merge_availablenow(events: DataFrame, query_name: str) -> DataFra
     return fold_availablenow(rows, fold, query_name)
 
 
-def streaming_windowed_topk(
-    events: DataFrame,
-    window: str = SKETCH_WINDOW,
-    k: int = 3,
-    watermark: str = "60 seconds",
+def _sketch_windows(
+    events: DataFrame, cols: list, keys: list[str], aggs: list, cells=None
 ) -> DataFrame:
+    """The one window frame of the windowed sketches -- the reference's
+    fire-once-at-watermark window: the instant ``ts`` next to ``cols``,
+    watermarked by DEFAULT_WATERMARK, mapped to the sketch's rows by
+    ``cells`` (a frame function that keeps ``ts``), grouped by the
+    SKETCH_WINDOW tumbling window plus ``keys`` and folded by ``aggs``.
+    Output (window_end_ms, keys..., aggs...); a (window, keys) row is
+    emitted once, when the watermark passes the window end (the
+    popular_places contract), and its state is evicted then.
+    :func:`_window_ctes` is the oracles' twin of this frame."""
+    ev = events.select(ntz_as_utc_instant("ts").alias("ts"), *cols).withWatermark(
+        "ts", DEFAULT_WATERMARK
+    )
+    if cells is not None:
+        ev = cells(ev)
+    folded = ev.groupBy(F.window("ts", SKETCH_WINDOW).alias("w"), *keys).agg(*aggs)
+    return folded.select(
+        F.unix_millis(F.col("w.end")).alias("window_end_ms"), *folded.columns[1:]
+    )
+
+
+def _window_ctes(**cols: str) -> str:
+    """DuckDB twin of :func:`_sketch_windows`' frame, as the leading CTEs
+    of a windowed-sketch oracle: ``ev`` (ms, cols...) over events, its
+    final instant ``mx``, ``evw`` (each event's epoch-aligned
+    SKETCH_WINDOW end next to cols...) and ``wins``, the windows the final
+    watermark has fired (end <= max - the DEFAULT_WATERMARK delay). An
+    oracle folds ``evw JOIN wins USING (window_end_ms)``."""
+    w = SKETCH_WINDOW_MS
+    exprs = ", ".join(f"{e} AS {name}" for name, e in cols.items())
+    names = ", ".join(cols)
+    return f"""WITH ev AS (SELECT epoch_ms(ts) AS ms, {exprs} FROM events),
+mx AS (SELECT max(ms) AS m FROM ev),
+evw AS (SELECT ms - ms % {w} + {w} AS window_end_ms, {names} FROM ev),
+wins AS (
+  SELECT DISTINCT window_end_ms FROM evw, mx
+  WHERE window_end_ms <= m - {_WATERMARK_MS}
+)"""
+
+
+def streaming_windowed_topk(events: DataFrame) -> DataFrame:
     """Windowed heavy hitters through the real engine: per event-time
     window, the k most frequent event types (count desc, type asc).
-
-    Gated since round 7 (catalog name streaming_windowed_topk).
 
     Append-mode streaming forbids window functions over an aggregated
     stream, so the ranking CANNOT ride the stream -- and it doesn't need
     to: the stateful windowed count fires once per (window, type) when
-    the watermark passes the window end (the popular_places contract),
-    and the drained aggregate is |windows| x |types| rows, so the top-k
-    rank is a bounded BATCH window over the drain result. The caller
-    composes ``rank_topk_per_window(drain_availablenow(...))``; oracle =
-    batch windowed counts cut at the final watermark, ranked the same.
+    the watermark passes the window end, and the drained aggregate is
+    |windows| x |types| rows, so the top-k rank is a bounded BATCH window
+    over the drain result. The caller composes
+    ``rank_topk_per_window(drain_availablenow(...))``; oracle = batch
+    windowed counts cut at the final watermark, ranked the same.
 
     Scale shape: the stream pays one stateful shuffle keyed on
     (window, type) with watermark-bounded state; the ranking input is
     aggregate-sized (never raw events), partitioned by window."""
-    from ..functions.time import ntz_as_utc_instant
-
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"), "event_type"
-    ).withWatermark("ts", watermark)
-    return (
-        ev.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            "event_type",
-            "cnt",
-        )
+    return _sketch_windows(
+        events, ["event_type"], ["event_type"], [F.count(F.lit(1)).alias("cnt")]
     )
 
 
@@ -599,113 +624,62 @@ def rank_topk_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def streaming_windowed_hll(
-    events: DataFrame,
-    window: str = SKETCH_WINDOW,
-    watermark: str = "60 seconds",
-    p: int = None,
-) -> DataFrame:
+def streaming_windowed_hll(events: DataFrame) -> DataFrame:
     """Mergeable sketch ON the stream: per event-time window, HyperLogLog
     register maxes for the distinct-user estimate -- the streaming twin of
     the batch ``hll_distinct`` family, composed from the SAME register
-    pipeline (md5 bucket/rho split, ``operators/sketches.py``).
-
-    Gated since round 8 (catalog name streaming_windowed_hll).
+    kernel (``operators/sketches.hll_cells``; the batch stage folds with
+    ``hll_fold``).
 
     Why this shape: a register max is an associative+commutative fold, so
     it rides the watermarked windowed aggregation natively (fire-once per
-    (window, bucket) at watermark passage -- the popular_places
-    contract), and the per-window state is CAPPED at m = 2**p registers
-    no matter how many events the window sees: the defining sketch
-    property, which is exactly what makes unbounded-cardinality distinct
-    counting safe inside streaming state. The float estimate fold CANNOT
-    ride along (append mode forbids re-aggregating the aggregate), and
-    doesn't need to: the drain is <= |windows| x m rows, so
-    :func:`hll_estimate_per_window` folds it as a bounded batch stage --
-    same composition as ``streaming_windowed_topk`` + its ranking stage.
+    (window, bucket) at watermark passage), and the per-window state is
+    CAPPED at m = 2**HLL_P registers no matter how many events the window
+    sees: the defining sketch property, which is exactly what makes
+    unbounded-cardinality distinct counting safe inside streaming state.
+    The float estimate fold CANNOT ride along (append mode forbids
+    re-aggregating the aggregate), and doesn't need to: the drain is
+    <= |windows| x m rows, so :func:`hll_estimate_per_window` folds it as
+    a bounded batch stage -- same composition as
+    ``streaming_windowed_topk`` + its ranking stage.
 
     Scale shape: one stateful shuffle keyed on (window, bucket);
     watermark-bounded state, m-bounded per window."""
-    from ..functions.hashing import md5_long
-    from ..functions.time import ntz_as_utc_instant
-    from ..operators.sketches import _HLL_RHO_CAP, _HLL_W, HLL_P
+    from ..operators.sketches import hll_cells
 
-    p = HLL_P if p is None else p
-    m = 1 << p
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"), "user_id"
-    ).withWatermark("ts", watermark)
-    h = md5_long(F.col("user_id").cast("string"))
-    keyed = ev.select("ts", h.alias("h")).select(
-        "ts",
-        (F.col("h") % m).alias("bucket"),
-        F.expr(f"(h div {m}) % {1 << _HLL_W}").alias("w32"),
-    )
-    rho = F.when(F.col("w32") == 0, F.lit(_HLL_RHO_CAP)).otherwise(
-        F.lit(_HLL_RHO_CAP) - F.length(F.bin(F.col("w32")))
-    )
-    return (
-        keyed.select("ts", "bucket", rho.alias("rho"))
-        .groupBy(F.window("ts", window).alias("w"), "bucket")
-        .agg(F.max("rho").alias("m_j"))
-        .select(
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            "bucket",
-            "m_j",
-        )
+    return _sketch_windows(
+        events,
+        ["user_id"],
+        ["bucket"],
+        [F.max("rho").alias("m_j")],
+        cells=lambda ev: hll_cells(ev, "user_id", "ts"),
     )
 
 
-def hll_estimate_per_window(regs: DataFrame, p: int = None) -> DataFrame:
+def hll_estimate_per_window(regs: DataFrame) -> DataFrame:
     """Batch fold stage for :func:`streaming_windowed_hll`'s drained
-    registers: the raw-estimator fold per window (same single-literal
-    float arithmetic as the batch HLL -- raw estimator by design, no
-    linear-counting correction; CLAUDE.md round-4 note)."""
-    from ..operators.sketches import (
-        _HLL_RHO_CAP,
-        HLL_NUMERATOR_LIT,
-        HLL_P,
-    )
+    registers: the raw-estimator fold per window (``hll_fold`` and the
+    same single-literal float arithmetic as the batch HLL -- raw
+    estimator by design, no linear-counting correction)."""
+    from ..operators.sketches import hll_fold, hll_numerator_lit
 
-    p = HLL_P if p is None else p
-    m = 1 << p
-    folded = regs.groupBy("window_end_ms").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-        ).alias("s_nonempty"),
-        F.count(F.lit(1)).alias("n_buckets"),
-    )
-    est = F.lit(float(HLL_NUMERATOR_LIT)) / F.col("s")
-    return (
-        folded.withColumn("v_empty", F.lit(m) - F.col("n_buckets"))
-        .withColumn(
-            "s",
-            F.col("s_nonempty")
-            + F.col("v_empty") * F.lit(1 << _HLL_RHO_CAP).cast("bigint"),
-        )
-        .select(
-            "window_end_ms",
-            F.col("n_buckets").alias("n_nonempty_buckets"),
-            F.round(est, 4).alias("hll_estimate"),
-        )
+    est = F.lit(float(hll_numerator_lit())) / F.col("s")
+    return hll_fold(regs, "window_end_ms").select(
+        "window_end_ms",
+        F.col("n_buckets").alias("n_nonempty_buckets"),
+        F.round(est, 4).alias("hll_estimate"),
     )
 
 
-def windowed_topk_oracle(
-    window_ms: int = SKETCH_WINDOW_MS, k: int = 3, delay_ms: int = 60000
-) -> str:
-    """DuckDB oracle for the streaming_windowed_topk catalog entry: tumbling
-    epoch-aligned windows over events, cut at max(ts) - delay (the
-    append-mode fire-once horizon), top-k per window (count desc, type
+def windowed_topk_oracle(k: int = 3) -> str:
+    """DuckDB oracle for the streaming_windowed_topk catalog entry: the
+    fired windows' event-type counts, top-k per window (count desc, type
     asc)."""
     return f"""
-WITH ev AS (SELECT epoch_ms(ts) AS ms, event_type FROM events),
-mx AS (SELECT max(ms) AS m FROM ev),
+{_window_ctes(event_type="event_type")},
 counts AS (
   SELECT window_end_ms, event_type, CAST(count(*) AS BIGINT) AS cnt
-  FROM (SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, event_type
-        FROM ev), mx
-  WHERE window_end_ms <= m - {delay_ms}
+  FROM evw JOIN wins USING (window_end_ms)
   GROUP BY 1, 2
 )
 SELECT window_end_ms, rank, event_type, cnt FROM (
@@ -717,52 +691,26 @@ SELECT window_end_ms, rank, event_type, cnt FROM (
 """
 
 
-def windowed_hll_oracle(
-    window_ms: int = SKETCH_WINDOW_MS, delay_ms: int = 60000
-) -> str:
-    """DuckDB oracle for the streaming_windowed_hll catalog entry: the batch
-    HLL register build per epoch-aligned window, cut at the final
-    watermark, folded with the same single-literal float arithmetic as
-    the batch hll_distinct oracle."""
-    from ..functions.hashing import md5_long_sql
-    from ..operators.sketches import (
-        _HLL_RHO_CAP,
-        _HLL_W,
-        HLL_M,
-        HLL_NUMERATOR_LIT,
-    )
+def windowed_hll_oracle() -> str:
+    """DuckDB oracle for the streaming_windowed_hll catalog entry: the
+    register kernel's SQL twin over each fired window, folded with the
+    same single-literal float arithmetic as the batch hll_distinct
+    oracle."""
+    from ..operators.sketches import hll_cells_sql, hll_fold_sql, hll_numerator_lit
 
-    h = md5_long_sql("CAST(user_id AS VARCHAR)")
+    cells = hll_cells_sql("evw JOIN wins USING (window_end_ms)", "user_id", "window_end_ms")
     return f"""
-WITH ev AS (SELECT epoch_ms(ts) AS ms, user_id FROM events),
-mx AS (SELECT max(ms) AS m FROM ev),
-hashed AS (
-  SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, {h} AS h FROM ev
-),
-cut AS (
-  SELECT window_end_ms, h FROM hashed, mx WHERE window_end_ms <= m - {delay_ms}
-),
-buckets AS (
-  SELECT window_end_ms, h % {HLL_M} AS bucket,
-         (h // {HLL_M}) % {1 << _HLL_W} AS w32
-  FROM cut
-),
+{_window_ctes(user_id="user_id")},
 regs AS (
-  SELECT window_end_ms, bucket,
-         max(CASE WHEN w32 = 0 THEN {_HLL_RHO_CAP}
-                  ELSE {_HLL_RHO_CAP} - length(bin(w32)) END) AS m_j
-  FROM buckets GROUP BY 1, 2
+  SELECT window_end_ms, bucket, max(rho) AS m_j FROM ({cells}) GROUP BY 1, 2
 )
 SELECT window_end_ms,
        CAST(count(*) AS BIGINT) AS n_nonempty_buckets,
-       round({HLL_NUMERATOR_LIT} /
-             (CAST(sum(1::BIGINT << ({_HLL_RHO_CAP} - m_j)) AS BIGINT)
-              + ({HLL_M} - count(*)) * (1::BIGINT << {_HLL_RHO_CAP})), 4)
-         AS hll_estimate
+       round({hll_numerator_lit()} / ({hll_fold_sql()}), 4) AS hll_estimate
 FROM regs GROUP BY 1
 """
 
-def concurrency_profile_oracle(delay_ms: int = 60000) -> str:
+def concurrency_profile_oracle() -> str:
     """DuckDB oracle for the streaming_concurrency_profile catalog entry:
     the streaming_sessionize oracle's session set (batch sessions, end
     shifted by the gap, cut at the final watermark) through the shared
@@ -777,75 +725,49 @@ def concurrency_profile_oracle(delay_ms: int = 60000) -> str:
 mx AS (SELECT max(epoch_ms(ts)) AS m FROM events)
 SELECT session_start_ms AS s, session_end_ms + {DEFAULT_GAP_MS} AS e
 FROM s, mx
-WHERE session_end_ms + {DEFAULT_GAP_MS} <= m - {delay_ms}"""
+WHERE session_end_ms + {DEFAULT_GAP_MS} <= m - {_WATERMARK_MS}"""
     return concurrency_sweep_sql(sessions_sql)
 
-def streaming_windowed_histogram(
-    events: DataFrame,
-    window: str = SKETCH_WINDOW,
-    watermark: str = "60 seconds",
-    bin_cents: int = 1000,
-) -> DataFrame:
+def streaming_windowed_histogram(events: DataFrame, bin_cents: int = 1000) -> DataFrame:
     """Fixed-width value histogram ON the stream: per event-time window,
     counts per bin_cents-wide value bucket -- the streaming twin of the
     batch histogram family (value_histogram / histogram_merge_shards)
     and the third mergeable sketch riding the watermarked windowed
     aggregation after top-k counts and HLL registers.
 
-    GATED ROUND 9 (promoted from the staged backlog).
-
     Why FIXED-width bins: the batch histogram derives equi-width edges
     from the global min/max, which a stream cannot know ahead of time; a
     fixed bin width makes the per-bin count an associative+commutative
     fold with no data-dependent parameters, so it rides the stream
-    natively (fire-once per (window, bin) at watermark passage, the
-    popular_places contract) and per-window state is bounded by the
-    value range over the bin width. bin = cents DIV bin_cents over
-    NONNEGATIVE cents (events.value >= 0; Spark DIV truncates toward
-    zero while DuckDB // floors, so the nonnegativity is what keeps the
-    two spellings equal -- the CLAUDE.md per-engine-division rule).
+    natively (fire-once per (window, bin) at watermark passage) and
+    per-window state is bounded by the value range over the bin width.
+    bin = cents DIV bin_cents over NONNEGATIVE cents (events.value >= 0;
+    Spark DIV truncates toward zero while DuckDB // floors, so the
+    nonnegativity is what keeps the two spellings equal -- the CLAUDE.md
+    per-engine-division rule).
 
     Scale shape: one stateful shuffle keyed on (window, bin),
     watermark-bounded state; the drain is |windows| x |occupied bins|
     rows, never raw events."""
-    from ..functions.time import ntz_as_utc_instant
-
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"), "value"
-    ).withWatermark("ts", watermark)
     cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
-    return (
-        ev.select("ts", cents.alias("c"))
-        .select("ts", F.expr(f"c div {bin_cents}").alias("bin"))
-        .groupBy(F.window("ts", window).alias("w"), "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            F.col("bin").cast("bigint").alias("bin"),
-            F.col("cnt").cast("bigint").alias("cnt"),
-        )
+    return _sketch_windows(
+        events,
+        ["value"],
+        ["bin"],
+        [F.count(F.lit(1)).alias("cnt")],
+        cells=lambda ev: ev.select("ts", cents.alias("c")).select(
+            "ts", F.expr(f"c div {bin_cents}").alias("bin")
+        ),
     )
 
 
-def windowed_histogram_oracle(
-    window_ms: int = SKETCH_WINDOW_MS,
-    delay_ms: int = 60000,
-    bin_cents: int = 1000,
-) -> str:
+def windowed_histogram_oracle(bin_cents: int = 1000) -> str:
     """DuckDB oracle for the streaming_windowed_histogram catalog entry:
-    batch per-window fixed-width bin counts over epoch-aligned tumbling
-    windows, cut at max(ts) - delay (the append-mode fire-once
-    horizon)."""
+    per fired window, the fixed-width bin counts."""
     return f"""
-WITH ev AS (
-  SELECT epoch_ms(ts) AS ms,
-         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) // {bin_cents} AS bin
-  FROM events
-),
-mx AS (SELECT max(ms) AS m FROM ev)
+{_window_ctes(bin=f"CAST(floor(value * 1e2 + 5e-1) AS BIGINT) // {bin_cents}")}
 SELECT window_end_ms, bin, CAST(count(*) AS BIGINT) AS cnt
-FROM (SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, bin FROM ev), mx
-WHERE window_end_ms <= m - {delay_ms}
+FROM evw JOIN wins USING (window_end_ms)
 GROUP BY window_end_ms, bin
 """
 
@@ -989,8 +911,6 @@ def quantile_from_binned(
 
 
 def windowed_quantile_oracle(
-    window_ms: int = SKETCH_WINDOW_MS,
-    delay_ms: int = 60000,
     bin_cents: int = 1000,
     pcts: tuple = (25, 50, 75, 90),
 ) -> str:
@@ -1001,7 +921,7 @@ def windowed_quantile_oracle(
     -> float64 dtype skew otherwise)."""
     vals = ", ".join(f"({x})" for x in pcts)
     return f"""
-WITH h AS ({windowed_histogram_oracle(window_ms, delay_ms, bin_cents)}),
+WITH h AS ({windowed_histogram_oracle(bin_cents)}),
 c AS (
   SELECT window_end_ms, bin, cnt,
          sum(cnt) OVER (PARTITION BY window_end_ms ORDER BY bin
@@ -1039,7 +959,7 @@ CMS_STREAM_WIDTH = 64
 def _md5_panel(events: DataFrame, key_col: str) -> DataFrame:
     """The deterministic md5 audit-key panel (md5(key) % CMS_PANEL_MOD
     == 0) shared by the CMS and Bloom est-vs-truth batch stages -- ONE
-    definition so the two audits cannot drift (r12 review catch)."""
+    definition so the two audits cannot drift."""
     from ..functions.hashing import md5_long
 
     return (
@@ -1060,29 +980,24 @@ def _panel_sql() -> str:
     )
 
 
-def _window_end_expr(window_ms: int):
+def _window_end_expr(window_ms: int = SKETCH_WINDOW_MS):
     """The epoch-aligned tumbling-window END expression every exact-side
     batch stage must share with the streaming fold. window_ms MUST match
     the streaming side's window, or the exact-side buckets miss the
     drained window keys and every exact count/presence/overlap silently
-    coalesces to 0 (the cms review-pass catch, enforced in ONE place:
-    the CMS/Bloom panel stages route through _panel_window_events, the
-    MinHash similarity stage uses this expression directly -- its exact
-    side walks ALL keys, not the panel)."""
+    coalesces to 0; only minhash_window_similarity takes it as a
+    parameter (its tests drive hand-built second-wide windows)."""
     from ..functions.time import epoch_ms
 
     em = epoch_ms("ts")
     return em - em % window_ms + window_ms
 
 
-def _panel_window_events(
-    events: DataFrame, key_col: str, window_ms: int, panel: DataFrame
-) -> DataFrame:
+def _panel_window_events(events: DataFrame, key_col: str, panel: DataFrame) -> DataFrame:
     """Exact-side (window_end_ms, k) rows of panel keys for the CMS and
-    Bloom est-vs-truth stages (see :func:`_window_end_expr` for the
-    window_ms-must-match hazard this centralizes)."""
+    Bloom est-vs-truth stages."""
     return events.select(
-        _window_end_expr(window_ms).alias("window_end_ms"),
+        _window_end_expr().alias("window_end_ms"),
         F.col(key_col).cast("string").alias("k"),
     ).join(panel, "k")
 
@@ -1090,8 +1005,6 @@ def _panel_window_events(
 def streaming_windowed_cms(
     events: DataFrame,
     key_col: str = "user_id",
-    window: str = SKETCH_WINDOW,
-    watermark: str = "60 seconds",
     width: int = CMS_STREAM_WIDTH,
 ) -> DataFrame:
     """Count-Min sketch ON the stream: per event-time window, the d x w
@@ -1106,43 +1019,21 @@ def streaming_windowed_cms(
     The per-cell count is an associative+commutative fold with no
     data-dependent parameters (the fixed-width-histogram argument), so
     it streams natively: each event explodes to d (row, bucket) cells
-    using the SAME _CMS_PARAMS permuted-md5 family as the gated batch
-    countmin_token_freq, and the windowed count fires once per
-    (window, r, bucket) at watermark passage (the popular_places
-    contract).
+    through the SAME cell kernel as the gated batch countmin_token_freq
+    (``operators/sketches.cms_cells``), and the windowed count fires once
+    per (window, r, bucket) at watermark passage.
 
     Scale shape: one stateful shuffle keyed on (window, r, bucket);
     state bounded at d x w cells per open window, watermark-evicted;
     the drain is |windows| x occupied-cells rows, never raw events."""
-    from ..functions.hashing import md5_long, permuted_hash
-    from ..functions.time import ntz_as_utc_instant
-    from ..operators.sketches import _CMS_PARAMS
+    from ..operators.sketches import cms_cells
 
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"),
-        F.col(key_col).cast("string").alias("k"),
-    ).withWatermark("ts", watermark)
-    base = md5_long(F.col("k"))
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).cast("bigint").alias("r"),
-                (permuted_hash(base, a, b) % width).alias("bucket"),
-            )
-            for r, (a, b) in enumerate(_CMS_PARAMS)
-        ]
-    )
-    return (
-        ev.select("ts", F.explode(cells).alias("cell"))
-        .select("ts", F.col("cell.r").alias("r"), F.col("cell.bucket").alias("bucket"))
-        .groupBy(F.window("ts", window).alias("w"), "r", "bucket")
-        .agg(F.count(F.lit(1)).alias("cell_sum"))
-        .select(
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            "r",
-            F.col("bucket").cast("bigint").alias("bucket"),
-            F.col("cell_sum").cast("bigint").alias("cell_sum"),
-        )
+    return _sketch_windows(
+        events,
+        [F.col(key_col).cast("string").alias("k")],
+        ["r", "bucket"],
+        [F.count(F.lit(1)).alias("cell_sum")],
+        cells=lambda ev: cms_cells(ev, "k", "ts", width=width),
     )
 
 
@@ -1151,7 +1042,6 @@ def cms_window_estimates(
     events: DataFrame,
     key_col: str = "user_id",
     width: int = CMS_STREAM_WIDTH,
-    window_ms: int = SKETCH_WINDOW_MS,
 ) -> DataFrame:
     """Bounded batch stage over the DRAINED cells (the windowed_topk /
     quantile composition pattern): estimate each fired window's activity
@@ -1171,8 +1061,7 @@ def cms_window_estimates(
     never a corpus pass; the exact twin is one hash aggregate over the
     panel-filtered batch scan (the audit's deliberate exact pass, the
     index_staleness policy)."""
-    from ..functions.hashing import md5_long, permuted_hash
-    from ..operators.sketches import _CMS_PARAMS
+    from ..operators.sketches import cms_cells
 
     # drain-sized and consumed TWICE (the fired-window list and the
     # estimate join) -- localCheckpoint once (the multi-consumer rule;
@@ -1180,21 +1069,7 @@ def cms_window_estimates(
     # memory-sink relation against its own projection)
     cells = cells.localCheckpoint()
     panel = _md5_panel(events, key_col)
-    base = md5_long(F.col("k"))
-    probe_cells = panel.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("bigint").alias("r"),
-                        (permuted_hash(base, a, b) % width).alias("bucket"),
-                    )
-                    for r, (a, b) in enumerate(_CMS_PARAMS)
-                ]
-            )
-        ).alias("cell"),
-    ).select("k", F.col("cell.r").alias("r"), F.col("cell.bucket").alias("bucket"))
+    probe_cells = cms_cells(panel, "k", "k", width=width)
     wins = cells.select("window_end_ms").distinct()
     est = (
         wins.crossJoin(probe_cells)
@@ -1203,7 +1078,7 @@ def cms_window_estimates(
         .agg(F.min(F.coalesce(F.col("cell_sum"), F.lit(0))).alias("est_cnt"))
     )
     exact = (
-        _panel_window_events(events, key_col, window_ms, panel)
+        _panel_window_events(events, key_col, panel)
         .groupBy("window_end_ms", "k")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
@@ -1221,49 +1096,28 @@ def cms_window_estimates(
     )
 
 
-def windowed_cms_oracle(
-    window_ms: int = SKETCH_WINDOW_MS,
-    delay_ms: int = 60000,
-    width: int = CMS_STREAM_WIDTH,
-) -> str:
-    """DuckDB oracle for the streaming_windowed_cms catalog entry: the same
-    per-(window, r, bucket) CMS fold over epoch-aligned tumbling windows
-    cut at max(ts) - delay (the append-mode fire-once horizon), the same
-    md5-panel probe, min-over-rows estimate with absent cells read as 0,
-    and the exact panel counts -- all integer arithmetic, BIGINT casts
-    on the DuckDB count() outputs (HUGEINT dtype-skew rule)."""
-    from ..functions.hashing import md5_long_sql, permuted_hash_sql
-    from ..operators.sketches import _CMS_PARAMS
+def windowed_cms_oracle(width: int = CMS_STREAM_WIDTH) -> str:
+    """DuckDB oracle for the streaming_windowed_cms catalog entry: the
+    cell kernel's SQL twin folded per (window, r, bucket) over the fired
+    windows, the same md5-panel probe, min-over-rows estimate with absent
+    cells read as 0, and the exact panel counts -- all integer
+    arithmetic, BIGINT casts on the DuckDB count() outputs (HUGEINT
+    dtype-skew rule)."""
+    from ..operators.sketches import cms_cells_sql
 
-    base = md5_long_sql("CAST(k AS VARCHAR)")
-    cell_rows = " UNION ALL ".join(
-        f"SELECT window_end_ms, CAST({r} AS BIGINT) AS r, "
-        f"({permuted_hash_sql(base, a, b)}) % {width} AS bucket FROM evw "
-        f"JOIN wins USING (window_end_ms)"
-        for r, (a, b) in enumerate(_CMS_PARAMS)
-    )
-    probe_rows = " UNION ALL ".join(
-        f"SELECT k, CAST({r} AS BIGINT) AS r, "
-        f"({permuted_hash_sql(base, a, b)}) % {width} AS bucket FROM panel"
-        for r, (a, b) in enumerate(_CMS_PARAMS)
+    cells = cms_cells_sql(
+        "evw JOIN wins USING (window_end_ms)", "k", "window_end_ms", width=width
     )
     return f"""
-WITH ev AS (
-  SELECT epoch_ms(ts) AS ms, CAST(user_id AS VARCHAR) AS k FROM events
-),
-mx AS (SELECT max(ms) AS m FROM ev),
-evw AS (SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, k FROM ev),
-wins AS (
-  SELECT DISTINCT window_end_ms FROM evw, mx WHERE window_end_ms <= m - {delay_ms}
-),
+{_window_ctes(k="CAST(user_id AS VARCHAR)")},
 cells AS (
   SELECT window_end_ms, r, bucket, CAST(count(*) AS BIGINT) AS cell_sum
-  FROM ({cell_rows}) GROUP BY 1, 2, 3
+  FROM ({cells}) GROUP BY 1, 2, 3
 ),
 panel AS (
   {_panel_sql()}
 ),
-probe_cells AS ({probe_rows}),
+probe_cells AS ({cms_cells_sql("panel", "k", "k", width=width)}),
 est AS (
   SELECT w.window_end_ms, p.k,
          CAST(min(coalesce(c.cell_sum, 0)) AS BIGINT) AS est_cnt
@@ -1299,8 +1153,6 @@ MH_STREAM_K = 16  # permutations: estimator granularity 1/16 = 62500 ppm,
 def streaming_windowed_minhash(
     events: DataFrame,
     key_col: str = "user_id",
-    window: str = SKETCH_WINDOW,
-    watermark: str = "60 seconds",
     k: int = MH_STREAM_K,
 ) -> DataFrame:
     """MinHash signatures ON the stream: per event-time window, the
@@ -1318,44 +1170,32 @@ def streaming_windowed_minhash(
     gated batch dedup's ``_MINHASH_PARAMS`` universal-hash family over
     the shared md5 base -- identical literals in the DuckDB oracle.
 
-    Scale shape: one stateful shuffle keyed on (window, r); state
-    capped at k BIGINT cells per open window REGARDLESS of key
-    cardinality (the CMS argument, 16 cells vs its d x 64); the drain
-    is |windows| x k rows, never raw events."""
+    Scale shape: one stateful shuffle keyed on the window; state capped
+    at k BIGINT cells per open window REGARDLESS of key cardinality (the
+    CMS argument, 16 cells vs its d x 64); the drain is |windows| x k
+    rows, never raw events."""
     from ..functions.hashing import md5_long, permuted_hash
-    from ..functions.time import ntz_as_utc_instant
     from ..operators.dedup import _MINHASH_PARAMS
 
-    # ADVICE r13: the r13 column-per-permutation rewrite turned a k >
-    # len(_MINHASH_PARAMS) call from silent truncation into an unresolved-
-    # column AnalysisException -- guard explicitly (the value_acf_lags
-    # parameter-guard convention), mirrored in the oracle twin.
+    # a k beyond the family would surface as an unresolved h{r} column;
+    # guard explicitly (the value_acf_lags parameter-guard convention),
+    # mirrored in the oracle twin
     if not 1 <= k <= len(_MINHASH_PARAMS):
         raise ValueError(
             f"k must be in 1..{len(_MINHASH_PARAMS)} "
             f"(the universal-hash family size), got {k}"
         )
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"),
-        F.col(key_col).cast("string").alias("k"),
-    ).withWatermark("ts", watermark)
     base = md5_long(F.col("k"))
-    # r13 optimization (guide §2.3 "aggregate before you shuffle"): the
-    # k-permutation signature used to EXPLODE every event into k (r, h)
-    # rows before the windowed aggregation -- k x |events| rows through
-    # the partial aggregate and generator machinery per row. The k mins
-    # are instead computed as k aggregate COLUMNS of one window-keyed
-    # aggregation (each min folds the same permuted hash expression), and
-    # the (r, sig) rows are exploded AFTER aggregation from the
-    # |windows|-bounded frame. State stays k BIGINT cells per open window
-    # (one state row of k columns instead of k rows of 1); min per column
-    # is the same associative+commutative idempotent fold, so output rows
-    # are identical under any arrival order or chunking.
+    # the k mins are k aggregate COLUMNS of one window-keyed aggregation
+    # (aggregate before you shuffle: no k-fold explode of every event),
+    # and the (r, sig) rows are exploded AFTER aggregation from the
+    # |windows|-bounded frame; min per column is the same idempotent
+    # fold, so rows are identical under any arrival order or chunking
     mins = [
         F.min(permuted_hash(base, a, b).cast("bigint")).alias(f"h{r}")
         for r, (a, b) in enumerate(_MINHASH_PARAMS[:k])
     ]
-    agg = ev.groupBy(F.window("ts", window).alias("w")).agg(*mins)
+    agg = _sketch_windows(events, [F.col(key_col).cast("string").alias("k")], [], mins)
     cells = F.array(
         *[
             F.struct(
@@ -1365,10 +1205,7 @@ def streaming_windowed_minhash(
             for r in range(k)
         ]
     )
-    return agg.select(
-        F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-        F.explode(cells).alias("c"),
-    ).select(
+    return agg.select("window_end_ms", F.explode(cells).alias("c")).select(
         "window_end_ms",
         F.col("c.r").alias("r"),
         F.col("c.sig").cast("bigint").alias("sig"),
@@ -1464,15 +1301,10 @@ def minhash_window_similarity(
     )
 
 
-def windowed_minhash_oracle(
-    window_ms: int = SKETCH_WINDOW_MS,
-    delay_ms: int = 60000,
-    k: int = MH_STREAM_K,
-) -> str:
+def windowed_minhash_oracle(k: int = MH_STREAM_K) -> str:
     """DuckDB oracle for the streaming_windowed_minhash catalog entry: the
-    same per-(window, r) min fold over epoch-aligned tumbling windows
-    cut at max(ts) - delay (the append-mode fire-once horizon), the
-    same consecutive-window pairing, signature-match count and exact
+    same per-(window, r) min fold over the fired windows, the same
+    consecutive-window pairing, signature-match count and exact
     distinct-key Jaccard -- all integer arithmetic, BIGINT casts on the
     DuckDB count()/sum() outputs (HUGEINT dtype-skew rule)."""
     from ..functions.hashing import md5_long_sql, permuted_hash_sql
@@ -1490,15 +1322,9 @@ def windowed_minhash_oracle(
         f"FROM evw JOIN wins USING (window_end_ms) GROUP BY 1"
         for r, (a, b) in enumerate(_MINHASH_PARAMS[:k])
     )
+    w = SKETCH_WINDOW_MS
     return f"""
-WITH ev AS (
-  SELECT epoch_ms(ts) AS ms, CAST(user_id AS VARCHAR) AS k FROM events
-),
-mx AS (SELECT max(ms) AS m FROM ev),
-evw AS (SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, k FROM ev),
-wins AS (
-  SELECT DISTINCT window_end_ms FROM evw, mx WHERE window_end_ms <= m - {delay_ms}
-),
+{_window_ctes(k="CAST(user_id AS VARCHAR)")},
 sig AS ({sig_rows}),
 du AS (SELECT DISTINCT window_end_ms, k FROM evw JOIN wins USING (window_end_ms)),
 cnt AS (
@@ -1506,7 +1332,7 @@ cnt AS (
 ),
 pairs AS (
   SELECT a.window_end_ms AS wa, b.window_end_ms AS wb
-  FROM wins a JOIN wins b ON b.window_end_ms = a.window_end_ms + {window_ms}
+  FROM wins a JOIN wins b ON b.window_end_ms = a.window_end_ms + {w}
 ),
 m2 AS (
   SELECT p.wa, p.wb,
@@ -1558,8 +1384,6 @@ BLOOM_STREAM_WORDS = 8  # 63 bits/word = 504 bits; sized so the one-sided
 def streaming_windowed_bloom(
     events: DataFrame,
     key_col: str = "user_id",
-    window: str = SKETCH_WINDOW,
-    watermark: str = "60 seconds",
     n_words: int = BLOOM_STREAM_WORDS,
 ) -> DataFrame:
     """Bloom filter ON the stream: per event-time window, the bit_or-folded
@@ -1572,40 +1396,30 @@ def streaming_windowed_bloom(
     bit_or is associative + commutative + IDEMPOTENT (the MinHash min
     argument), so the drained words are a pure function of each window's
     DISTINCT key set under any arrival order, chunking, or duplicate
-    delivery. Cells reuse the gated batch Bloom's ``_BLOOM_PARAMS``
-    universal-hash family over the shared md5 base (identical literals in
-    the DuckDB oracle); the one-sided contract is NO FALSE NEGATIVES --
-    a present key always hits, an absent key hits with the documented
-    collision probability.
-
-    Gated since round 13 (catalog name streaming_windowed_bloom).
+    delivery. Cells come from the gated batch Bloom's cell kernel
+    (``operators/bloom._cells``, the ``_BLOOM_PARAMS`` universal-hash
+    family over the shared md5 base; identical literals in the DuckDB
+    oracle); the one-sided contract is NO FALSE NEGATIVES -- a present
+    key always hits, an absent key hits with the documented collision
+    probability.
 
     Scale shape (100 TB): one stateful shuffle keyed on (window, word);
     state capped at n_words BIGINT cells per open window REGARDLESS of
     key cardinality; the membership walk in the batch stage touches
     |windows| x panel x K rows, never raw events."""
-    from ..functions.time import ntz_as_utc_instant
     from ..operators.bloom import _cells
 
-    ev = events.select(
-        ntz_as_utc_instant("ts").alias("ts"),
-        F.col(key_col).cast("string").alias("k"),
-    ).withWatermark("ts", watermark)
-    cells = F.array(*_cells(F.col("k"), n_words))
-    return (
-        ev.select("ts", F.explode(cells).alias("c"))
-        .select("ts", F.col("c.word").alias("word"), F.col("c.bit").alias("bit"))
-        .groupBy(F.window("ts", window).alias("w"), "word")
-        .agg(
-            F.bit_or(
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))")
-            ).alias("bits")
-        )
-        .select(
-            F.unix_millis(F.col("w.end")).alias("window_end_ms"),
-            F.col("word").cast("bigint").alias("word"),
-            F.col("bits").cast("bigint").alias("bits"),
-        )
+    def cells(ev: DataFrame) -> DataFrame:
+        return ev.select(
+            "ts", F.explode(F.array(*_cells(F.col("k"), n_words))).alias("c")
+        ).select("ts", F.col("c.word").alias("word"), F.col("c.bit").alias("bit"))
+
+    return _sketch_windows(
+        events,
+        [F.col(key_col).cast("string").alias("k")],
+        ["word"],
+        [F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))")).alias("bits")],
+        cells=cells,
     )
 
 
@@ -1614,7 +1428,6 @@ def bloom_window_membership(
     events: DataFrame,
     key_col: str = "user_id",
     n_words: int = BLOOM_STREAM_WORDS,
-    window_ms: int = SKETCH_WINDOW_MS,
 ) -> DataFrame:
     """Bounded batch stage over the DRAINED per-window Bloom words (the
     cms_window_estimates composition): probe every fired window's filter
@@ -1663,7 +1476,7 @@ def bloom_window_membership(
         )
     )
     exact = (
-        _panel_window_events(events, key_col, window_ms, panel)
+        _panel_window_events(events, key_col, panel)
         .groupBy("window_end_ms", "k")
         .agg(F.lit(1).alias("present"))
     )
@@ -1684,14 +1497,9 @@ def bloom_window_membership(
     )
 
 
-def windowed_bloom_oracle(
-    window_ms: int = SKETCH_WINDOW_MS,
-    delay_ms: int = 60000,
-    n_words: int = BLOOM_STREAM_WORDS,
-) -> str:
+def windowed_bloom_oracle(n_words: int = BLOOM_STREAM_WORDS) -> str:
     """DuckDB oracle for the streaming_windowed_bloom catalog entry: the same
-    per-(window, word) bit_or fold over epoch-aligned tumbling windows cut
-    at max(ts) - delay (the append-mode fire-once horizon), the same
+    per-(window, word) bit_or fold over the fired windows, the same
     md5-panel probe cells, min-over-cells membership with absent words
     read as 0 -- all integer arithmetic, BIGINT casts on DuckDB
     aggregate outputs (HUGEINT dtype-skew rule)."""
@@ -1717,14 +1525,7 @@ def windowed_bloom_oracle(
         for a, b in _BLOOM_PARAMS
     )
     return f"""
-WITH ev AS (
-  SELECT epoch_ms(ts) AS ms, CAST(user_id AS VARCHAR) AS k FROM events
-),
-mx AS (SELECT max(ms) AS m FROM ev),
-evw AS (SELECT ms - ms % {window_ms} + {window_ms} AS window_end_ms, k FROM ev),
-wins AS (
-  SELECT DISTINCT window_end_ms FROM evw, mx WHERE window_end_ms <= m - {delay_ms}
-),
+{_window_ctes(k="CAST(user_id AS VARCHAR)")},
 words AS (
   SELECT window_end_ms, word,
          CAST(bit_or(1::BIGINT << CAST(bit AS INT)) AS BIGINT) AS bits

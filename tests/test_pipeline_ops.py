@@ -2444,11 +2444,11 @@ def test_bloom_contamination_screen_contracts(spark, sf_small):
     contamination_ngram_overlap's job)."""
     from pyspark.sql import functions as F
 
+    from flink_training_exercises_spark.functions.text import words
     from flink_training_exercises_spark.operators.contamination import (
         BENCH_MOD,
         NGRAM_N,
         _gram_strings,
-        _words,
         bloom_contamination_screen,
     )
     from flink_training_exercises_spark.functions.hashing import md5_long
@@ -2461,7 +2461,7 @@ def test_bloom_contamination_screen_contracts(spark, sf_small):
 
     g = docs.select(
         (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
-        F.explode(_gram_strings(_words("text"), NGRAM_N)).alias("gs"),
+        F.explode(_gram_strings(words("text"), NGRAM_N)).alias("gs"),
     ).select("is_bench", md5_long("gs").alias("gh"))
     bench = {x["gh"] for x in g.where("is_bench").select("gh").distinct().collect()}
     corpus = {x["gh"] for x in g.where("NOT is_bench").select("gh").distinct().collect()}

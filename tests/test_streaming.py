@@ -477,6 +477,59 @@ def test_streaming_cdc_merge_checkpoint_resume(spark, sf_small, tmp_path, catalo
     assert compare("streaming_cdc_merge", got, catalog_runs.oracle("streaming_cdc_merge")) == []
 
 
+def test_cdc_merge_keeps_keys_only_in_first_batch(spark, sf_small, tmp_path):
+    """Standing state must carry keys the later batches never touch. In
+    the test data every user has events in every replay chunk, so a fold
+    that dropped its state would still match there; here one extra user
+    has a single change, in the first chunk only, and the drained merge
+    must keep it and equal the one-shot batch merge_latest."""
+    from flink_training_exercises_spark.functions.time import epoch_ms
+    from flink_training_exercises_spark.operators.cdc import merge_latest
+    from flink_training_exercises_spark.streaming.queries import (
+        run_cdc_merge_availablenow,
+    )
+
+    ev = load_table(spark, "events", sf_small)
+    lone_user = ev.agg(F.max("user_id")).first()[0] + 1
+    first = (
+        ev.orderBy("ts", "event_id")
+        .limit(1)
+        .withColumn("user_id", F.lit(lone_user).cast("long"))
+        .withColumn("event_id", F.col("event_id") + 10**9)
+        .withColumn("event_type", F.lit("view"))
+    )
+    chunks = replay_to_files(ev.unionByName(first), "ts", str(tmp_path / "staged"), n_chunks=4)
+    lone_rows = [spark.read.parquet(c).where(F.col("user_id") == lone_user).count() for c in chunks]
+    assert lone_rows == [1, 0, 0, 0]
+    live = str(tmp_path / "live")
+    os.makedirs(live)
+    _arrive(chunks, live)
+
+    def changes(df):
+        return df.select(
+            "user_id",
+            "event_type",
+            "value",
+            epoch_ms("ts").alias("state_ms"),
+            "event_id",
+            (F.col("event_type") == "error").alias("is_delete"),
+        )
+
+    keys, seq = ["user_id"], ["state_ms", "event_id"]
+    got = run_cdc_merge_availablenow(
+        changes(_chunked_stream(spark, live)), keys, seq, "cdc_lone_key", root=str(tmp_path / "fold")
+    ).toPandas()
+    batch = changes(spark.read.schema(_EVENTS_SCHEMA).parquet(*chunks))
+    want = (
+        merge_latest(batch.limit(0), batch, keys, seq)
+        .where(~F.col("is_delete"))
+        .drop("is_delete")
+        .toPandas()
+    )
+    assert lone_user in set(got["user_id"])
+    assert compare("streaming_cdc_merge", got, want) == []
+
+
 def test_es_sink_batch_fn_is_distributed():
     """S8 adapter keeps the 100 TB shape even while env-gated: the
     foreachBatch function must ship per-partition bulk requests
