@@ -14,4 +14,4 @@ from .text import (  # noqa: F401
     month_key,
     tokenize_words,
 )
-from .time import epoch_ms, event_time, travel_time_minutes  # noqa: F401
+from .time import epoch_ms  # noqa: F401

@@ -25,7 +25,6 @@ LAT_SOUTH = 40.5
 DELTA_LON = 0.0014
 DELTA_LAT = 0.00125
 NUMBER_OF_GRID_X = 250
-NUMBER_OF_GRID_Y = 400
 
 
 def _c(x) -> Column:
@@ -89,91 +88,3 @@ def direction_bucket(angle) -> Column:
     """F9 -- direction bucket 0..7 = floor(angle/45)
     (TravelTimePredictionModel.java:85-87)."""
     return F.floor(_c(angle) / F.lit(45)).cast("int")
-
-
-def grid_cells_on_way(lon1, lat1, lon2, lat2) -> Column:
-    """F7 -- GeoUtils.mapToGridCellsOnWay (GeoUtils.java:106-161): the grid
-    cells a straight path crosses, walked exactly as the reference does --
-    start at the lower-x endpoint, one step per loop iteration choosing
-    x-step / y-step / diagonal by comparing the ideal midpoint-y of the
-    NEXT column against the current row (+-0.05 corner window), including
-    the reference's asymmetric negative-slope branch (its corner case falls
-    THROUGH to a second test against the already-updated row -- an if
-    without else at GeoUtils.java:146-152 -- which we reproduce verbatim
-    for bit parity). Pure Column expressions: a fold over a bounded step
-    sequence (dx+dy steps is an upper bound; finished state no-ops), so the
-    walk stays row-local and codegen-friendly. Returns ARRAY<INT> of cell
-    ids in travel order (duplicates impossible: every step moves).
-
-    Unused by any reference exercise (SURVEY.md §2.8) but part of the
-    public GeoUtils surface."""
-    lon1, lat1, lon2, lat2 = _c(lon1), _c(lat1), _c(lon2), _c(lat2)
-
-    def xy(lon, lat):
-        x = F.floor((F.abs(F.lit(LON_WEST)) - F.abs(lon)) / F.lit(DELTA_LON)).cast("int")
-        y = F.floor((F.lit(LAT_NORTH) - lat) / F.lit(DELTA_LAT)).cast("int")
-        return x, y
-
-    x1, y1 = xy(lon1, lat1)
-    x2, y2 = xy(lon2, lat2)
-    swap = x1 <= x2
-    start_x = F.when(swap, x1).otherwise(x2)
-    start_y = F.when(swap, y1).otherwise(y2)
-    end_x = F.when(swap, x2).otherwise(x1)
-    end_y = F.when(swap, y2).otherwise(y1)
-    slope = (end_y - start_y).cast("double") / ((end_x - start_x).cast("double") + F.lit(1e-8))
-
-    n_steps = F.greatest(
-        (end_x - start_x) + F.abs(end_y - start_y), F.lit(0)
-    ).cast("int")
-    init = F.struct(
-        start_x.alias("x"),
-        start_y.alias("y"),
-        F.array((start_x + start_y * F.lit(NUMBER_OF_GRID_X)).cast("int")).alias("cells"),
-    )
-
-    def step(acc, _i):
-        ax, ay = acc["x"], acc["y"]
-        done = (ax >= end_x) & (ay == end_y)
-        # slope > 0: midpoint test against y - 0.5 (GeoUtils.java:131-144)
-        y_pos = (ax - start_x + F.lit(0.5)) * slope + start_y - F.lit(0.5)
-        corner_p = (y_pos > ay - F.lit(0.05)) & (y_pos < ay + F.lit(0.05))
-        px = F.when(corner_p | (y_pos < ay), ax + 1).otherwise(ax)
-        py = F.when(corner_p, ay + 1).otherwise(F.when(y_pos < ay, ay).otherwise(ay + 1))
-        # slope <= 0: corner case falls THROUGH to the second test with the
-        # updated y (GeoUtils.java:146-157 -- if, not else-if)
-        y_neg = (ax - start_x + F.lit(0.5)) * slope + start_y + F.lit(0.5)
-        corner_n = (y_neg > ay - F.lit(0.05)) & (y_neg < ay + F.lit(0.05))
-        nx1 = F.when(corner_n, ax + 1).otherwise(ax)
-        ny1 = F.when(corner_n, ay - 1).otherwise(ay)
-        nx = F.when(y_neg > ny1, nx1 + 1).otherwise(nx1)
-        ny = F.when(y_neg > ny1, ny1).otherwise(ny1 - 1)
-        new_x = F.when(slope > 0, px).otherwise(nx)
-        new_y = F.when(slope > 0, py).otherwise(ny)
-        return F.when(done, acc).otherwise(
-            F.struct(
-                new_x.alias("x"),
-                new_y.alias("y"),
-                F.concat(
-                    acc["cells"],
-                    F.array((new_x + new_y * F.lit(NUMBER_OF_GRID_X)).cast("int")),
-                ).alias("cells"),
-            )
-        )
-
-    walked = F.aggregate(
-        F.sequence(F.lit(1), n_steps),
-        init,
-        step,
-        lambda acc: acc["cells"],
-    )
-    # n_steps == 0 (same cell, or pure-corner paths) still yields the start cell
-    return F.when(n_steps > 0, walked).otherwise(init["cells"])
-
-
-def random_nyc_point(seed: int = 42) -> tuple[Column, Column]:
-    """F8 -- uniform (lon, lat) inside the NYC bbox (GeoUtils.java:199-211);
-    fixture generation only."""
-    lon = F.lit(LON_WEST) + F.rand(seed) * F.lit(LON_EAST - LON_WEST)
-    lat = F.lit(LAT_SOUTH) + F.rand(seed + 1) * F.lit(LAT_NORTH - LAT_SOUTH)
-    return lon, lat

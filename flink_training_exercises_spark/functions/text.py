@@ -48,14 +48,14 @@ def words_sql(text_expr: str) -> str:
     return f"[x for x in string_split_regex(lower({text_expr}), '\\s+') if x != '']"
 
 
-def tokenize_words(body, *, distinct: bool = False, stop_words=STOP_WORDS) -> Column:
+def tokenize_words(body, *, distinct: bool = False) -> Column:
     """P9 -- whitespace-tokenize, lowercase, keep alphabetic-only tokens,
     drop stop words (MailTFIDF.java:103-149). Returns an array column;
     ``distinct=True`` gives the unique-words variant used for document
     frequency. Entirely JVM-side: split + filter + array_distinct.
     """
     words = F.split(F.lower(_c(body)), r"\s+")
-    stop_arr = F.array(*[F.lit(w) for w in dict.fromkeys(stop_words)])
+    stop_arr = F.array(*[F.lit(w) for w in dict.fromkeys(STOP_WORDS)])
     kept = F.filter(
         words,
         lambda w: w.rlike("^[a-z]+$") & ~F.array_contains(stop_arr, w),

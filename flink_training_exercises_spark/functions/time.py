@@ -5,6 +5,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# The one watermark delay, maxEventDelay (RideCleansing.java:45): streaming
+# queries watermark by WATERMARK, and the oracles cut at the same horizon
+# (window end <= max event time - WATERMARK_MS).
+WATERMARK_MS = 60 * 1000
+WATERMARK = f"{WATERMARK_MS // 1000} seconds"
+
 
 def _c(x) -> Column:
     return F.col(x) if isinstance(x, str) else x
@@ -40,16 +46,3 @@ def ntz_as_utc_instant(ts) -> Column:
     ``withWatermark`` only accepts TIMESTAMP event-time columns."""
     return F.timestamp_micros(F.timestamp_diff("MICROSECOND", ntz_epoch(), _c(ts)))
 
-
-def travel_time_minutes(start_ts, end_ts) -> Column:
-    """F12 -- (endTime - startTime) / 60000.0 in minutes
-    (TravelTimePrediction.java:143)."""
-    return F.timestamp_diff("MILLISECOND", _c(start_ts), _c(end_ts)).cast("double") / F.lit(
-        60000.0
-    )
-
-
-def event_time(is_start, start_ts, end_ts) -> Column:
-    """Per-ride event time: startTime for START events, endTime for END
-    (TaxiRideSource.java:222-229)."""
-    return F.when(_c(is_start), _c(start_ts)).otherwise(_c(end_ts))

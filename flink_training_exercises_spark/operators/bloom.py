@@ -155,15 +155,11 @@ def bloom_semijoin_audit(
     )
 
 
-def bloom_semijoin_audit_sql(
-    build_sql: str,
-    probe_sql: str,
-    n_words: int = BLOOM_WORDS,
-) -> str:
+def bloom_semijoin_audit_sql(build_sql: str, probe_sql: str) -> str:
     """DuckDB twin of :func:`bloom_semijoin_audit`. ``build_sql`` /
     ``probe_sql`` must each select one column named ``k``."""
     base = md5_long_sql("CAST(k AS VARCHAR)")
-    m_bits = 63 * n_words
+    m_bits = 63 * BLOOM_WORDS
     cell_rows = " UNION ALL ".join(
         f"SELECT k, ({permuted_hash_sql(base, a, b)}) % {m_bits} AS pos FROM bkeys"
         for a, b in _BLOOM_PARAMS
@@ -202,13 +198,14 @@ SKIP_WORDS = 8  # 63 * 8 = 504 bits per shard -- deliberately small so the
                 # hash layout's crowded shards exhibit false positives
 
 
+BLOOM_SKIPPING_AUDIT_PROBE_MOD = 7
+
+
 def bloom_skipping_audit(
     events: DataFrame,
-    id_col: str = "event_id",
-    key_col: str = "user_id",
     n_shards: int = SKIP_SHARDS,
     n_words: int = SKIP_WORDS,
-    probe_mod: int = 7,
+    probe_mod: int = BLOOM_SKIPPING_AUDIT_PROBE_MOD,
 ) -> DataFrame:
     """Per-shard Bloom-filter data skipping vs zonemaps for POINT
     predicates -- the parquet-bloom-filter technique, completing the
@@ -245,8 +242,8 @@ def bloom_skipping_audit(
     are a bounded md5-selected key set, also localCheckpoint'd (four
     consumers). The probe joins touch index-sized relations only."""
     ev = events.select(
-        F.col(id_col).cast("string").alias("rid"),
-        F.col(key_col).alias("k"),
+        F.col("event_id").cast("string").alias("rid"),
+        F.col("user_id").alias("k"),
     )
     su = (
         ev.select(
@@ -342,18 +339,11 @@ def bloom_skipping_audit(
     )
 
 
-def bloom_skipping_audit_sql(
-    table: str = "events",
-    id_col: str = "event_id",
-    key_col: str = "user_id",
-    n_shards: int = SKIP_SHARDS,
-    n_words: int = SKIP_WORDS,
-    probe_mod: int = 7,
-) -> str:
+def bloom_skipping_audit_sql() -> str:
     """DuckDB twin of :func:`bloom_skipping_audit`: the same md5 shard
     assignment, per-shard zonemaps + bit_or blooms (per-engine `<<`/`//`
     spellings), and the identical probe accounting."""
-    m_bits = 63 * n_words
+    m_bits = 63 * SKIP_WORDS
     k_md5 = md5_long_sql("CAST(k AS VARCHAR)")
     cell_rows = " UNION ALL ".join(
         f"SELECT layout, shard, ({permuted_hash_sql(k_md5, a, b)}) % {m_bits} AS pos FROM su"
@@ -364,12 +354,12 @@ def bloom_skipping_audit_sql(
         for a, b in _BLOOM_PARAMS
     )
     return f"""
-WITH ev AS (SELECT CAST({id_col} AS VARCHAR) AS rid, {key_col} AS k FROM {table}),
+WITH ev AS (SELECT CAST(event_id AS VARCHAR) AS rid, user_id AS k FROM events),
 su AS MATERIALIZED (
   SELECT DISTINCT layout, shard, k FROM (
-    SELECT 'hash' AS layout, ({md5_long_sql("rid")}) % {n_shards} AS shard, k FROM ev
+    SELECT 'hash' AS layout, ({md5_long_sql("rid")}) % {SKIP_SHARDS} AS shard, k FROM ev
     UNION ALL
-    SELECT 'clustered', ({md5_long_sql("CAST(k AS VARCHAR)")}) % {n_shards}, k FROM ev
+    SELECT 'clustered', ({md5_long_sql("CAST(k AS VARCHAR)")}) % {SKIP_SHARDS}, k FROM ev
   )
 ),
 zmap AS (SELECT layout, shard, min(k) AS min_k, max(k) AS max_k FROM su GROUP BY 1, 2),
@@ -380,7 +370,7 @@ blooms AS (
   FROM cells GROUP BY 1, 2, 3
 ),
 probes AS MATERIALIZED (
-  SELECT DISTINCT k FROM ev WHERE ({md5_long_sql("CAST(k AS VARCHAR)")}) % {probe_mod} = 0
+  SELECT DISTINCT k FROM ev WHERE ({md5_long_sql("CAST(k AS VARCHAR)")}) % {BLOOM_SKIPPING_AUDIT_PROBE_MOD} = 0
 ),
 pcells AS ({probe_rows}),
 bhits AS (

@@ -50,11 +50,7 @@ def merge_latest(
 
 
 def merge_upsert(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    seq_cols: list[str],
-    delete_col: str = "is_delete",
+    snapshot: DataFrame, changes: DataFrame, keys: list[str], seq_cols: list[str]
 ) -> DataFrame:
     """Apply a CDC change batch onto a snapshot with MERGE semantics.
 
@@ -69,12 +65,12 @@ def merge_upsert(
     """
     return (
         merge_latest(snapshot, changes, keys, seq_cols)
-        .where(~F.col(delete_col))
-        .drop(delete_col)
+        .where(~F.col("is_delete"))
+        .drop("is_delete")
     )
 
 
-def merge_upsert_user_state_sql(cutoff_ms: int, delete_type: str = "error") -> str:
+def merge_upsert_user_state_sql(cutoff_ms: int) -> str:
     """DuckDB twin of the gated ``cdc_merge_user_state`` query: snapshot =
     latest pre-cutoff event per user, change batch = post-cutoff events
     with ``delete_type`` rows as delete markers, merged last-writer-wins
@@ -91,7 +87,7 @@ WITH snap AS (
 ),
 chg AS (
   SELECT user_id, event_type, value, epoch_ms(ts) AS state_ms, event_id,
-         (event_type = '{delete_type}') AS is_delete, 1 AS src
+         (event_type = 'error') AS is_delete, 1 AS src
   FROM events WHERE epoch_ms(ts) >= {cutoff_ms}
 ),
 u AS (SELECT * FROM snap UNION ALL SELECT * FROM chg),

@@ -49,13 +49,7 @@ def _gram_strings(w: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_contamination(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = NGRAM_N,
-    bench_mod: int = BENCH_MOD,
-) -> DataFrame:
+def ngram_contamination(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
     """Per corpus doc: distinct n-gram count, how many of those n-grams occur
     anywhere in the benchmark subset (doc_id % bench_mod == 0), and the
     contamination fraction. Corpus docs with no grams (< n words) drop out on
@@ -63,23 +57,23 @@ def ngram_contamination(
     from ..sources.loaders import widen_scan
 
     g = widen_scan(docs).select(
-        F.col(id_col),
-        (F.col(id_col) % bench_mod == 0).alias("is_bench"),
-        F.explode(_gram_strings(words(text_col), n)).alias("gs"),
-    ).select(id_col, "is_bench", md5_long("gs").alias("gh"))
-    corpus = g.where(~F.col("is_bench")).select(id_col, "gh")
+        F.col("doc_id"),
+        (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
+        F.explode(_gram_strings(words("text"), n)).alias("gs"),
+    ).select("doc_id", "is_bench", md5_long("gs").alias("gh"))
+    corpus = g.where(~F.col("is_bench")).select("doc_id", "gh")
     bench = (
         g.where(F.col("is_bench")).select("gh").distinct()
     ).withColumn("hit", F.lit(1))
     marked = corpus.join(F.broadcast(bench), "gh", "left")
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.count("hit").alias("n_contaminated"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_contaminated",
             (F.col("n_contaminated").cast("double") / F.col("n_grams")).alias(
@@ -110,39 +104,27 @@ def _grams_sql(
     )
 
 
-def ngram_contamination_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = NGRAM_N,
-    bench_mod: int = BENCH_MOD,
-) -> str:
+def ngram_contamination_sql() -> str:
     # distinct at the STRING level, then hash -- mirrors the Spark side
     # (array_distinct of gram strings, md5 after the explode); the gram
     # pipeline itself is the shared _grams_sql fragment
     return f"""
 WITH grams AS (
-  {_grams_sql(table, id_col, text_col, n, bench_mod)}
+  {_grams_sql('documents', 'doc_id', 'text', NGRAM_N, BENCH_MOD)}
 ),
-corpus AS (SELECT {id_col}, unnest(g) AS gh FROM grams WHERE NOT is_bench),
+corpus AS (SELECT doc_id, unnest(g) AS gh FROM grams WHERE NOT is_bench),
 bench AS (SELECT DISTINCT unnest(g) AS gh FROM grams WHERE is_bench),
 marked AS (
-  SELECT c.{id_col}, b.gh IS NOT NULL AS hit
+  SELECT c.doc_id, b.gh IS NOT NULL AS hit
   FROM corpus c LEFT JOIN bench b USING (gh)
 )
-SELECT {id_col}, count(*) AS n_grams,
+SELECT doc_id, count(*) AS n_grams,
        count(*) FILTER (WHERE hit) AS n_contaminated,
        CAST(count(*) FILTER (WHERE hit) AS DOUBLE) / count(*) AS contam_frac
 FROM marked GROUP BY 1
 """
 
-def bloom_contamination_screen(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = NGRAM_N,
-    bench_mod: int = BENCH_MOD,
-) -> DataFrame:
+def bloom_contamination_screen(docs: DataFrame) -> DataFrame:
     """The SCALE PATH for decontamination: a Bloom filter over the
     benchmark subset's n-gram set screens the training corpus's grams
     map-only, graded against the exact distinct semi-join -- the
@@ -171,8 +153,8 @@ def bloom_contamination_screen(
     from .bloom import bloom_semijoin_audit
 
     g = widen_scan(docs).select(
-        (F.col(id_col) % bench_mod == 0).alias("is_bench"),
-        F.explode(_gram_strings(words(text_col), n)).alias("gs"),
+        (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
+        F.explode(_gram_strings(words("text"), NGRAM_N)).alias("gs"),
     ).select("is_bench", md5_long("gs").alias("gh"))
     bench = (
         g.where(F.col("is_bench")).select("gh").distinct().localCheckpoint()
@@ -181,19 +163,13 @@ def bloom_contamination_screen(
     return bloom_semijoin_audit(bench, corpus, "gh", "gh")
 
 
-def bloom_contamination_screen_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = NGRAM_N,
-    bench_mod: int = BENCH_MOD,
-) -> str:
+def bloom_contamination_screen_sql() -> str:
     """DuckDB twin of :func:`bloom_contamination_screen`: the
     ngram_contamination gram CTE feeding bloom_semijoin_audit_sql's
     build/probe slots (each must select one column named ``k``)."""
     from .bloom import bloom_semijoin_audit_sql
 
-    grams = f"({_grams_sql(table, id_col, text_col, n, bench_mod)})"
+    grams = f"({_grams_sql('documents', 'doc_id', 'text', NGRAM_N, BENCH_MOD)})"
     build_sql = f"SELECT unnest(g) AS k FROM {grams} WHERE is_bench"
     probe_sql = f"SELECT unnest(g) AS k FROM {grams} WHERE NOT is_bench"
     return bloom_semijoin_audit_sql(build_sql, probe_sql)

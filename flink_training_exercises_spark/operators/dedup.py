@@ -40,7 +40,7 @@ def _md5_long_c(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def _jaccard_c(inter: str = "inter", tot: str = "tot") -> Column:
+def _jaccard_c() -> Column:
     """Guarded Jaccard |A∩B| / |A∪B| from inter=|A∩B|, tot=|A|+|B|.
 
     The denominator (tot - inter) is 0 only when two empty-shingle docs
@@ -48,8 +48,8 @@ def _jaccard_c(inter: str = "inter", tot: str = "tot") -> Column:
     rather than relying on NaN/NULL both failing the >= threshold filter.
     NULL on zero matches the SQL twins' NULLIF -- dropped by the filter on
     both engines, so gated output is unchanged."""
-    denom = F.col(tot) - F.col(inter)
-    return F.when(denom > 0, F.col(inter).cast("double") / denom)
+    denom = F.col("tot") - F.col("inter")
+    return F.when(denom > 0, F.col("inter").cast("double") / denom)
 
 
 # ---------------------------------------------------------------------------
@@ -68,14 +68,17 @@ def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
     )
 
 
-def normalized_prefix_key(text_col: str, n_words: int = 5) -> Column:
+NORMALIZED_PREFIX_KEY_N_WORDS = 5
+
+
+def normalized_prefix_key(text_col: str, n_words: int = NORMALIZED_PREFIX_KEY_N_WORDS) -> Column:
     """Normalization key: first n words of lower/whitespace-collapsed text."""
     return F.concat_ws(" ", F.slice(words(text_col), 1, n_words))
 
 
-def normalized_prefix_key_sql(text_expr: str, n_words: int = 5) -> str:
+def normalized_prefix_key_sql(text_expr: str) -> str:
     return (
-        f"array_to_string(({words_sql(text_expr)})[1:{n_words}], ' ')"
+        f"array_to_string(({words_sql(text_expr)})[1:{NORMALIZED_PREFIX_KEY_N_WORDS}], ' ')"
     )
 
 
@@ -84,18 +87,18 @@ def normalized_prefix_key_sql(text_expr: str, n_words: int = 5) -> str:
 # ---------------------------------------------------------------------------
 
 
-def char_shingles(text_col: str, width: int = SHINGLE_WIDTH) -> Column:
+def char_shingles(text_col: str) -> Column:
     """Distinct character w-grams of a text column, as an array -- computed
     per row, no explosion."""
     text = F.col(text_col)
-    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - (width - 1), F.lit(1)))
-    return F.array_distinct(F.transform(positions, lambda i: text.substr(i, F.lit(width))))
+    positions = F.sequence(F.lit(1), F.greatest(F.length(text) - (SHINGLE_WIDTH - 1), F.lit(1)))
+    return F.array_distinct(F.transform(positions, lambda i: text.substr(i, F.lit(SHINGLE_WIDTH))))
 
 
-def char_shingles_sql(text_expr: str, width: int = SHINGLE_WIDTH) -> str:
+def char_shingles_sql(text_expr: str) -> str:
     return (
-        f"list_distinct([substr({text_expr}, i, {width}) "
-        f"for i in generate_series(1, greatest(length({text_expr}) - {width - 1}, 1))])"
+        f"list_distinct([substr({text_expr}, i, {SHINGLE_WIDTH}) "
+        f"for i in generate_series(1, greatest(length({text_expr}) - {SHINGLE_WIDTH - 1}, 1))])"
     )
 
 
@@ -118,9 +121,7 @@ def shingle_hashes_df(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def persisted_signatures(
-    docs: DataFrame, id_col: str, text_col: str, k: int = MINHASH_K
-) -> DataFrame:
+def persisted_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, hs, s0..s{k-1}) signature table, materialized per call with an
     eager localCheckpoint so banding and both verify probes read one copy
     instead of re-hashing the corpus. Nothing is memoized: the copy lives
@@ -130,11 +131,11 @@ def persisted_signatures(
     'materialize signatures once' table a 100 TB dedup writes before
     banding."""
     return signatures_from_hashes(
-        shingle_hashes_df(docs, id_col, text_col), k
+        shingle_hashes_df(docs, id_col, text_col)
     ).localCheckpoint()
 
 
-def signatures_from_hashes(hs_df: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def signatures_from_hashes(hs_df: DataFrame) -> DataFrame:
     """k permuted min-hashes over an (id, hs) table -> (id, hs, s0..s{k-1})."""
     def perm(a: int, b: int):
         # real 1-arg lambda: a default-arg closure would make Spark treat it
@@ -143,7 +144,7 @@ def signatures_from_hashes(hs_df: DataFrame, k: int = MINHASH_K) -> DataFrame:
 
     sig_cols = [
         F.array_min(F.transform(F.col("hs"), perm(a, b))).alias(f"s{i}")
-        for i, (a, b) in enumerate(_MINHASH_PARAMS[:k])
+        for i, (a, b) in enumerate(_MINHASH_PARAMS[:MINHASH_K])
     ]
     return hs_df.select("id", F.col("hs"), *sig_cols)
 
@@ -169,22 +170,15 @@ def _band_key_fold_sql(sig_exprs: list[str], band: int) -> str:
     return acc
 
 
-def minhash_signature_sql(shingles_expr: str, k: int = MINHASH_K) -> list[str]:
+def minhash_signature_sql(shingles_expr: str) -> list[str]:
     hs = f"[{md5_long_sql('s')} for s in {shingles_expr}]"
     return [
         f"list_min([({a} * (h % {MERSENNE_P}) + {b}) % {MERSENNE_P} for h in {hs}])"
-        for a, b in _MINHASH_PARAMS[:k]
+        for a, b in _MINHASH_PARAMS[:MINHASH_K]
     ]
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
     Pipeline: per-doc signature (no shuffle) -> explode to `bands` rows ->
@@ -214,11 +208,11 @@ def minhash_lsh_pairs(
     are never shuffled corpus-wide. At cluster scale this is a one-time
     signature materialization, the idiom a 100 TB dedup would use anyway.
     """
-    r = k // bands
-    sig_df = persisted_signatures(docs, id_col, text_col, k)
+    r = MINHASH_K // MINHASH_BANDS
+    sig_df = persisted_signatures(docs, "doc_id", "text")
     hs_tbl = sig_df.select("id", "hs")
     band_keys = [
-        _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(bands)
+        _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(MINHASH_BANDS)
     ]
     banded = sig_df.select("id", F.explode(F.array(*band_keys)).alias("key"))
     buckets = (
@@ -261,26 +255,19 @@ def minhash_lsh_pairs(
     return verified.where(F.col("jaccard") >= threshold)
 
 
-def minhash_lsh_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-) -> str:
-    r = k // bands
-    sigs = minhash_signature_sql(char_shingles_sql(text_col), k)
+def minhash_lsh_sql(threshold: float = 0.2) -> str:
+    r = MINHASH_K // MINHASH_BANDS
+    sigs = minhash_signature_sql(char_shingles_sql("text"))
     sig_cols = ", ".join(f"{s} AS s{i}" for i, s in enumerate(sigs))
     band_keys = ", ".join(
-        _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(bands)
+        _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(MINHASH_BANDS)
     )
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql(text_col)}])"
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
     return f"""
 WITH shingled AS (
-  SELECT {id_col} AS id, {hs} AS sh FROM {table}
+  SELECT doc_id AS id, {hs} AS sh FROM documents
 ),
-sigs AS (SELECT {id_col} AS id, {sig_cols} FROM {table}),
+sigs AS (SELECT doc_id AS id, {sig_cols} FROM documents),
 banded AS (
   SELECT id, CAST(unnest([{band_keys}]) AS BIGINT) AS key FROM sigs
 ),
@@ -299,14 +286,11 @@ FROM verified WHERE CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) >= {threshold
 """
 
 
+INCREMENTAL_THRESHOLD, INCREMENTAL_BATCH_BP = 0.2, 2000
+
+
 def incremental_minhash_matches(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-    batch_bp: int = 2000,
+    docs: DataFrame, threshold: float = INCREMENTAL_THRESHOLD, batch_bp: int = INCREMENTAL_BATCH_BP
 ) -> DataFrame:
     """Incremental dedup: match a NEW batch of documents against an existing
     corpus -- the continuous-crawl shape, where each day's shard is deduped
@@ -325,11 +309,11 @@ def incremental_minhash_matches(
     fetches only the matched candidates' shingle sets. Signature pipeline,
     band keys, and Jaccard verify are shared with minhash_lsh_pairs
     (materialized once per call via persisted_signatures)."""
-    r = k // bands
-    sig_df = persisted_signatures(docs, id_col, text_col, k)
+    r = MINHASH_K // MINHASH_BANDS
+    sig_df = persisted_signatures(docs, "doc_id", "text")
     is_new = _md5_long_c(F.col("id").cast("string")) % 10000 < batch_bp
     band_keys = [
-        _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(bands)
+        _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(MINHASH_BANDS)
     ]
     banded = sig_df.select("id", F.explode(F.array(*band_keys)).alias("key"))
     new_b = banded.where(is_new).select(F.col("id").alias("new_id"), "key")
@@ -357,29 +341,21 @@ def incremental_minhash_matches(
     return verified.where(F.col("jaccard") >= threshold)
 
 
-def incremental_minhash_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-    batch_bp: int = 2000,
-) -> str:
-    r = k // bands
-    sigs = minhash_signature_sql(char_shingles_sql(text_col), k)
+def incremental_minhash_sql() -> str:
+    r = MINHASH_K // MINHASH_BANDS
+    sigs = minhash_signature_sql(char_shingles_sql("text"))
     sig_cols = ", ".join(f"{s} AS s{i}" for i, s in enumerate(sigs))
     band_keys = ", ".join(
-        _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(bands)
+        _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(MINHASH_BANDS)
     )
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql(text_col)}])"
-    is_new_n = f"{md5_long_sql('CAST(n.id AS VARCHAR)')} % 10000 < {batch_bp}"
-    is_new_c = f"{md5_long_sql('CAST(c.id AS VARCHAR)')} % 10000 < {batch_bp}"
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
+    is_new_n = f"{md5_long_sql('CAST(n.id AS VARCHAR)')} % 10000 < {INCREMENTAL_BATCH_BP}"
+    is_new_c = f"{md5_long_sql('CAST(c.id AS VARCHAR)')} % 10000 < {INCREMENTAL_BATCH_BP}"
     return f"""
 WITH shingled AS (
-  SELECT {id_col} AS id, {hs} AS sh FROM {table}
+  SELECT doc_id AS id, {hs} AS sh FROM documents
 ),
-sigs AS (SELECT {id_col} AS id, {sig_cols} FROM {table}),
+sigs AS (SELECT doc_id AS id, {sig_cols} FROM documents),
 banded AS (
   SELECT id, CAST(unnest([{band_keys}]) AS BIGINT) AS key FROM sigs
 ),
@@ -395,7 +371,7 @@ verified AS (
   FROM pairs JOIN shingled sn ON new_id = sn.id JOIN shingled sc ON corpus_id = sc.id
 )
 SELECT new_id, corpus_id, CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) AS jaccard
-FROM verified WHERE CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) >= {threshold}
+FROM verified WHERE CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) >= {INCREMENTAL_THRESHOLD}
 """
 
 
@@ -404,12 +380,7 @@ FROM verified WHERE CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) >= {threshold
 # ---------------------------------------------------------------------------
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs via 32-bit SimHash over word tokens, banded into
     4 bytes for candidate generation, verified by Hamming distance.
 
@@ -420,8 +391,8 @@ def simhash_pairs(
 
     docs = widen_scan(docs)
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(words(text_col)).alias("w"),
+        F.col("doc_id").alias("id"),
+        F.explode(words("text")).alias("w"),
     ).select("id", _md5_long_c(F.col("w")).alias("h"))
     bit_sums = toks.groupBy("id").agg(
         *[
@@ -472,12 +443,7 @@ def simhash_pairs(
     return pairs.where(F.col("hamming") <= max_hamming)
 
 
-def simhash_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> str:
+def simhash_sql() -> str:
     h = md5_long_sql("w")
     bit_sum_cols = ", ".join(
         f"sum((({h} >> {j}) & 1) * 2 - 1) AS b{j}" for j in range(SIMHASH_BITS)
@@ -492,8 +458,8 @@ def simhash_sql(
     )
     return f"""
 WITH words AS (
-  SELECT {id_col} AS id, unnest({words_sql(text_col)}) AS w
-  FROM {table}
+  SELECT doc_id AS id, unnest({words_sql('text')}) AS w
+  FROM documents
 ),
 bit_sums AS (SELECT id, {bit_sum_cols} FROM words GROUP BY id),
 sims AS (SELECT id, {sim} AS sim FROM bit_sums),
@@ -503,7 +469,7 @@ pairs AS (
          CAST(bit_count(xor(a.sim, b.sim)) AS BIGINT) AS hamming
   FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key AND a.id < b.id
 )
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
+SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3
 """
 
 
@@ -512,14 +478,10 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    partition_col: str = "source",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+WORD_NGRAM_N = 3  # word n-gram size of the Jaccard and prefix-filter joins
+
+
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact word n-gram Jaccard pairs within a partition column (the
     shard-scoped dedup a corpus pipeline runs; cross-shard pairs are the
     MinHash operator's job). The pair join is an equi-join on the partition
@@ -533,16 +495,16 @@ def ngram_jaccard_pairs(
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    ws = words(text_col)
+    ws = words("text")
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
+            F.sequence(F.lit(1), F.greatest(F.size(ws) - (WORD_NGRAM_N - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(ws, i, WORD_NGRAM_N)),
         )
     )
     hashed = F.array_distinct(F.transform(grams, _md5_long_c))
     g = docs.select(
-        F.col(id_col).alias("id"), F.col(partition_col).alias("part"), hashed.alias("g")
+        F.col("doc_id").alias("id"), F.col("source").alias("part"), hashed.alias("g")
     )
     a, b = g.alias("a"), g.alias("b")
     return (
@@ -562,22 +524,15 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_jaccard_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    partition_col: str = "source",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> str:
+def ngram_jaccard_sql(threshold: float = 0.5) -> str:
     return f"""
 WITH g AS (
   SELECT id, part, list_distinct([{md5_long_sql('x')} for x in gs]) AS g
   FROM (
-    SELECT {id_col} AS id, {partition_col} AS part,
-           list_distinct([array_to_string(w[i:i+{n - 1}], ' ')
-                          for i in generate_series(1, greatest(len(w) - {n - 1}, 1))]) AS gs
-    FROM (SELECT {id_col}, {partition_col}, {words_sql(text_col)} AS w FROM {table})
+    SELECT doc_id AS id, source AS part,
+           list_distinct([array_to_string(w[i:i+{WORD_NGRAM_N - 1}], ' ')
+                          for i in generate_series(1, greatest(len(w) - {WORD_NGRAM_N - 1}, 1))]) AS gs
+    FROM (SELECT doc_id, source, {words_sql('text')} AS w FROM documents)
   )
 ),
 pairs AS (
@@ -591,21 +546,14 @@ FROM pairs WHERE CAST(inter AS DOUBLE) / NULLIF(tot - inter, 0) >= {threshold}
 """
 
 
-def minhash_clusters_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-) -> str:
+def minhash_clusters_sql() -> str:
     """Oracle twin of pairs -> connected components -> (doc, cluster-min).
 
     DuckDB computes the transitive closure with a recursive CTE (fine at
     oracle scale; the Spark side uses the O(log n)-round alternating
     star algorithm instead -- a recursive closure is exactly what does NOT
     scale, see graph.connected_components)."""
-    pairs_sql = minhash_lsh_sql(table, id_col, text_col, k, bands, threshold)
+    pairs_sql = minhash_lsh_sql()
     return f"""
 WITH RECURSIVE pairs AS ({pairs_sql}),
 edges AS (
@@ -623,15 +571,11 @@ FROM walk GROUP BY id
 """
 
 
-def minhash_lsh_recall(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-    sample_bp: int = 1000,
-) -> DataFrame:
+MINHASH_LSH_RECALL_THRESHOLD = 0.2
+MINHASH_LSH_RECALL_SAMPLE_BP = 1000
+
+
+def minhash_lsh_recall(docs: DataFrame) -> DataFrame:
     """Quality bar for the LSH dedup path, the dedup analogue of
     ann_recall_at_k: on a deterministic md5 sample of documents, compare
     the banded-LSH pair set against EXACT all-pairs Jaccard ground truth.
@@ -648,12 +592,12 @@ def minhash_lsh_recall(
     The exact all-pairs side is quadratic BY DESIGN and restricted to the
     bounded sample (~sample_bp/10000 of the corpus) -- ground truth is a
     sampled audit at any scale, never a full computation."""
-    in_sample = _md5_long_c(F.col("id").cast("string")) % 10000 < sample_bp
+    in_sample = _md5_long_c(F.col("id").cast("string")) % 10000 < MINHASH_LSH_RECALL_SAMPLE_BP
     # the sampled shingle frame feeds BOTH sides of the all-pairs join
     # (a bare self-join evaluates the expensive shingling subtree once
     # per side -- the CLAUDE.md round-2 rule); the materialization is
     # sample-bounded by design
-    hs = shingle_hashes_df(docs, id_col, text_col).where(in_sample).localCheckpoint()
+    hs = shingle_hashes_df(docs, "doc_id", "text").where(in_sample).localCheckpoint()
     a = hs.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a"))
     b = hs.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b"))
     exact = (
@@ -666,12 +610,12 @@ def minhash_lsh_recall(
             (F.size("sh_a") + F.size("sh_b")).alias("tot"),
         )
         .select("id_a", "id_b", _jaccard_c().alias("j"))
-        .where(F.col("j") >= threshold)
+        .where(F.col("j") >= MINHASH_LSH_RECALL_THRESHOLD)
         .select("id_a", "id_b")
     )
-    lsh = minhash_lsh_pairs(docs, id_col, text_col, k, bands, threshold).where(
-        (_md5_long_c(F.col("id_a").cast("string")) % 10000 < sample_bp)
-        & (_md5_long_c(F.col("id_b").cast("string")) % 10000 < sample_bp)
+    lsh = minhash_lsh_pairs(docs, threshold=MINHASH_LSH_RECALL_THRESHOLD).where(
+        (_md5_long_c(F.col("id_a").cast("string")) % 10000 < MINHASH_LSH_RECALL_SAMPLE_BP)
+        & (_md5_long_c(F.col("id_b").cast("string")) % 10000 < MINHASH_LSH_RECALL_SAMPLE_BP)
     ).select("id_a", "id_b")
     # single pass: full-outer-join the two pair sets and count conditionally,
     # so the quadratic `exact` subtree and the LSH pipeline are each
@@ -689,30 +633,22 @@ def minhash_lsh_recall(
     )
 
 
-def minhash_lsh_recall_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    threshold: float = 0.2,
-    sample_bp: int = 1000,
-) -> str:
-    lsh_sql = minhash_lsh_sql(table, id_col, text_col, k, bands, threshold)
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql(text_col)}])"
-    in_a = f"{md5_long_sql('CAST(id_a AS VARCHAR)')} % 10000 < {sample_bp}"
-    in_b = f"{md5_long_sql('CAST(id_b AS VARCHAR)')} % 10000 < {sample_bp}"
-    in_s = f"{md5_long_sql(f'CAST({id_col} AS VARCHAR)')} % 10000 < {sample_bp}"
+def minhash_lsh_recall_sql() -> str:
+    lsh_sql = minhash_lsh_sql(threshold=MINHASH_LSH_RECALL_THRESHOLD)
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
+    in_a = f"{md5_long_sql('CAST(id_a AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
+    in_b = f"{md5_long_sql('CAST(id_b AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
+    in_s = f"{md5_long_sql('CAST(doc_id AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
     return f"""
 WITH sampled AS (
-  SELECT {id_col} AS id, {hs} AS sh FROM {table} WHERE {in_s}
+  SELECT doc_id AS id, {hs} AS sh FROM documents WHERE {in_s}
 ),
 exact AS (
   SELECT a.id AS id_a, b.id AS id_b
   FROM sampled a JOIN sampled b ON a.id < b.id
   WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
         / NULLIF(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 0)
-        >= {threshold}
+        >= {MINHASH_LSH_RECALL_THRESHOLD}
 ),
 lsh AS (
   SELECT id_a, id_b FROM ({lsh_sql}) WHERE ({in_a}) AND ({in_b})
@@ -733,12 +669,7 @@ FROM ne CROSS JOIN nl CROSS JOIN nh
 REPEAT_NGRAM_N = 8
 
 
-def repeated_ngram_coverage(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = REPEAT_NGRAM_N,
-) -> DataFrame:
+def repeated_ngram_coverage(docs: DataFrame, n: int = REPEAT_NGRAM_N) -> DataFrame:
     """Per-document repeated-n-gram statistics against the whole corpus --
     the measurement half of exact-substring deduplication (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better"): a doc
@@ -763,8 +694,8 @@ def repeated_ngram_coverage(
     grams = (
         widen_scan(docs)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_gram_strings(words(text_col), n)).alias("gram"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(_gram_strings(words("text"), n)).alias("gram"),
         )
         .select("doc_id", _md5_long_c(F.col("gram")).alias("gh"))
     )
@@ -792,26 +723,21 @@ def repeated_ngram_coverage(
     )
 
 
-def repeated_ngram_coverage_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = REPEAT_NGRAM_N,
-) -> str:
+def repeated_ngram_coverage_sql() -> str:
     """DuckDB twin of :func:`repeated_ngram_coverage` (same tokenizer, same
     string-level distinct, same post-explode md5 fold)."""
-    w = words_sql(text_col)
-    slots = ", ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(n))
+    w = words_sql("text")
+    slots = ", ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(REPEAT_NGRAM_N))
     return f"""
 WITH w AS (
-  SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
+  SELECT doc_id AS doc_id, {w} AS ws FROM documents
 ), grams AS (
   SELECT doc_id,
          {md5_long_sql('g')} AS gh
   FROM (
     SELECT doc_id,
            unnest(list_distinct([concat_ws(' ', {slots})
-                   for i in generate_series(1, greatest(len(ws) - {n - 1}, 0))])) AS g
+                   for i in generate_series(1, greatest(len(ws) - {REPEAT_NGRAM_N - 1}, 0))])) AS g
     FROM w
   )
 ), dfreq AS (
@@ -833,14 +759,12 @@ FROM per_doc
 # ---------------------------------------------------------------------------
 
 
-def editdistance_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    prefix_len: int = 40,
-    max_dist: int = 25,
-) -> DataFrame:
+EDITDISTANCE_PAIRS_BLOCK_COLS = ("lang", "source")
+EDITDISTANCE_PAIRS_PREFIX_LEN = 40
+EDITDISTANCE_PAIRS_MAX_DIST = 25
+
+
+def editdistance_pairs(docs: DataFrame, max_dist: int = EDITDISTANCE_PAIRS_MAX_DIST) -> DataFrame:
     """Near-duplicate pairs by Levenshtein distance over a normalized
     header prefix (lower + first ``prefix_len`` chars), compared only
     WITHIN blocking keys -- the record-linkage staple for short-text /
@@ -856,12 +780,12 @@ def editdistance_pairs(
     is the classic Wagner-Fischer DP, identical semantics in Spark and
     DuckDB."""
     d = docs.select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id"),
-        F.lower(F.substring(F.col(text_col), 1, prefix_len)).alias("t"),
+        *[F.col(c) for c in EDITDISTANCE_PAIRS_BLOCK_COLS],
+        F.col("doc_id").alias("id"),
+        F.lower(F.substring(F.col("text"), 1, EDITDISTANCE_PAIRS_PREFIX_LEN)).alias("t"),
     )
     a, b = d.alias("a"), d.alias("b")
-    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols] + [
+    cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in EDITDISTANCE_PAIRS_BLOCK_COLS] + [
         F.col("a.id") < F.col("b.id")
     ]
     # r13 optimization (guide §1.2 per-task work): the thresholded
@@ -882,25 +806,18 @@ def editdistance_pairs(
     )
 
 
-def editdistance_pairs_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    prefix_len: int = 40,
-    max_dist: int = 25,
-) -> str:
-    blocks = " AND ".join(f"a.{c} = b.{c}" for c in block_cols)
+def editdistance_pairs_sql() -> str:
+    blocks = " AND ".join(f"a.{c} = b.{c}" for c in EDITDISTANCE_PAIRS_BLOCK_COLS)
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, {", ".join(block_cols)},
-         lower(substr({text_col}, 1, {prefix_len})) AS t
-  FROM {table}
+  SELECT doc_id AS id, {", ".join(EDITDISTANCE_PAIRS_BLOCK_COLS)},
+         lower(substr(text, 1, {EDITDISTANCE_PAIRS_PREFIX_LEN})) AS t
+  FROM documents
 )
 SELECT a.id AS id_a, b.id AS id_b,
        CAST(levenshtein(a.t, b.t) AS BIGINT) AS dist
 FROM d a JOIN d b ON {blocks} AND a.id < b.id
-WHERE levenshtein(a.t, b.t) <= {max_dist}
+WHERE levenshtein(a.t, b.t) <= {EDITDISTANCE_PAIRS_MAX_DIST}
 """
 
 
@@ -912,9 +829,7 @@ SEGMENT_WORDS = 3  # non-overlapping segment width, in tokens
 _SEG_PACK = 1 << 20  # seg_idx packing radix: supports docs up to ~3M tokens
 
 
-def segment_dedup_keepfirst(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def segment_dedup_keepfirst(docs: DataFrame) -> DataFrame:
     """CCNet-style segment-hash dedup (Wenzek et al. 2020 dedup stage): cut
     each document into non-overlapping ``SEGMENT_WORDS``-token segments, hash
     them, and keep only the FIRST occurrence of every distinct segment across
@@ -941,7 +856,7 @@ def segment_dedup_keepfirst(
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    w = words(text_col)
+    w = words("text")
     n_seg = F.floor((F.size(w) - F.lit(1)) / F.lit(SEGMENT_WORDS)).cast("int") + F.lit(1)
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - F.lit(1)),
@@ -957,7 +872,7 @@ def segment_dedup_keepfirst(
     )
     exploded = (
         docs.where(F.size(w) > 0)
-        .select(F.col(id_col).alias("doc_id"), F.explode(segs).alias("s"))
+        .select(F.col("doc_id").alias("doc_id"), F.explode(segs).alias("s"))
         .select(
             "doc_id",
             F.col("s.seg_idx").alias("seg_idx"),
@@ -988,16 +903,14 @@ def segment_dedup_keepfirst(
     )
 
 
-def segment_dedup_keepfirst_sql(
-    table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
-) -> str:
+def segment_dedup_keepfirst_sql() -> str:
     """DuckDB twin of :func:`segment_dedup_keepfirst` (same tokenizer, same
     fixed-width grid, same packed-min keep-first rule)."""
-    w = words_sql(text_col)
+    w = words_sql("text")
     n = SEGMENT_WORDS
     return f"""
 WITH w AS (
-  SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
+  SELECT doc_id AS doc_id, {w} AS ws FROM documents
 ), seg AS (
   SELECT doc_id, s.seg_idx AS seg_idx, s.nw AS nw,
          {md5_long_sql('s.seg')} AS gh
@@ -1030,14 +943,17 @@ FROM marked GROUP BY doc_id
 """
 
 
+SORTED_NEIGHBORHOOD_PAIRS_PREFIX_LEN = 40
+SORTED_NEIGHBORHOOD_PAIRS_BLOCK_LEN = 8
+SORTED_NEIGHBORHOOD_PAIRS_WINDOW = 2
+SORTED_NEIGHBORHOOD_PAIRS_MAX_DIST = 25
+
+
 def sorted_neighborhood_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    prefix_len: int = 40,
-    block_len: int = 8,
-    window: int = 2,
-    max_dist: int = 25,
+    block_len: int = SORTED_NEIGHBORHOOD_PAIRS_BLOCK_LEN,
+    window: int = SORTED_NEIGHBORHOOD_PAIRS_WINDOW,
+    max_dist: int = SORTED_NEIGHBORHOOD_PAIRS_MAX_DIST,
 ) -> DataFrame:
     """Sorted-neighborhood near-dup candidate pairs (Hernandez & Stolfo's
     SNM) -- the LINEAR-scan companion to the quadratic
@@ -1058,8 +974,8 @@ def sorted_neighborhood_pairs(
     blocks; production runs multiple passes with varied keys. Exact dups
     share the full key, hence the block, so they are never missed."""
     d = docs.select(
-        F.col(id_col).alias("id"),
-        F.lower(F.substring(F.col(text_col), 1, prefix_len)).alias("k"),
+        F.col("doc_id").alias("id"),
+        F.lower(F.substring(F.col("text"), 1, SORTED_NEIGHBORHOOD_PAIRS_PREFIX_LEN)).alias("k"),
     ).withColumn("blk", F.substring(F.col("k"), 1, block_len))
     w = Window.partitionBy("blk").orderBy("k", "id")
     # ONE window pass computing every offset's lag, predecessors exploded
@@ -1103,32 +1019,24 @@ def sorted_neighborhood_pairs(
     return out.distinct()
 
 
-def sorted_neighborhood_pairs_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    prefix_len: int = 40,
-    block_len: int = 8,
-    window: int = 2,
-    max_dist: int = 25,
-) -> str:
+def sorted_neighborhood_pairs_sql() -> str:
     """DuckDB twin of :func:`sorted_neighborhood_pairs`: the same lag
     windows over the same blocked sort order."""
     offs = ", ".join(
         f"lag(id, {o}) OVER w AS p_id_{o}, lag(k, {o}) OVER w AS p_k_{o}"
-        for o in range(1, window + 1)
+        for o in range(1, SORTED_NEIGHBORHOOD_PAIRS_WINDOW + 1)
     )
     arms = "\nUNION ALL\n".join(
         f"""SELECT least(id, p_id_{o}) AS id_a, greatest(id, p_id_{o}) AS id_b,
        CAST(levenshtein(k, p_k_{o}) AS BIGINT) AS dist
-FROM lagged WHERE p_id_{o} IS NOT NULL AND levenshtein(k, p_k_{o}) <= {max_dist}"""
-        for o in range(1, window + 1)
+FROM lagged WHERE p_id_{o} IS NOT NULL AND levenshtein(k, p_k_{o}) <= {SORTED_NEIGHBORHOOD_PAIRS_MAX_DIST}"""
+        for o in range(1, SORTED_NEIGHBORHOOD_PAIRS_WINDOW + 1)
     )
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, lower(substr({text_col}, 1, {prefix_len})) AS k,
-         substr(lower(substr({text_col}, 1, {prefix_len})), 1, {block_len}) AS blk
-  FROM {table}
+  SELECT doc_id AS id, lower(substr(text, 1, {SORTED_NEIGHBORHOOD_PAIRS_PREFIX_LEN})) AS k,
+         substr(lower(substr(text, 1, {SORTED_NEIGHBORHOOD_PAIRS_PREFIX_LEN})), 1, {SORTED_NEIGHBORHOOD_PAIRS_BLOCK_LEN}) AS blk
+  FROM documents
 ),
 lagged AS (
   SELECT id, k, {offs}
@@ -1139,13 +1047,13 @@ SELECT DISTINCT id_a, id_b, dist FROM (
 )
 """
 
+PREFIX_FILTER_T_NUM, PREFIX_FILTER_T_DEN = 1, 2
+
+
 def prefix_filter_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
+    threshold_num: int = PREFIX_FILTER_T_NUM,
+    threshold_den: int = PREFIX_FILTER_T_DEN,
 ) -> DataFrame:
     """EXACT set-similarity self-join with prefix filtering (Bayardo et
     al.'s AllPairs / Xiao et al.'s PPJoin) over the md5-hashed word
@@ -1191,17 +1099,17 @@ def prefix_filter_jaccard_pairs(
     from ..sources.loaders import widen_scan
 
     tn, td = threshold_num, threshold_den
-    ws = words(text_col)
+    ws = words("text")
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
+            F.sequence(F.lit(1), F.greatest(F.size(ws) - (WORD_NGRAM_N - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(ws, i, WORD_NGRAM_N)),
         )
     )
     hashed = F.array_distinct(F.transform(grams, _md5_long_c))
     hs_tbl = (
         widen_scan(docs)
-        .select(F.col(id_col).alias("id"), hashed.alias("hs"))
+        .select(F.col("doc_id").alias("id"), hashed.alias("hs"))
         .localCheckpoint()
     )
     exploded = hs_tbl.select(
@@ -1250,26 +1158,19 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def prefix_filter_jaccard_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-) -> str:
+def prefix_filter_jaccard_sql() -> str:
     """DuckDB twin of :func:`prefix_filter_jaccard_pairs`: the same
     frequency-ordered prefixes, candidate join, and integer-exact verify.
     (`//` is DuckDB's integer division where Spark spells it DIV.)"""
-    tn, td = threshold_num, threshold_den
+    tn, td = PREFIX_FILTER_T_NUM, PREFIX_FILTER_T_DEN
     return f"""
 WITH sh AS MATERIALIZED (
   SELECT id, list_distinct([{md5_long_sql('x')} for x in gs]) AS hs
   FROM (
-    SELECT {id_col} AS id,
-           list_distinct([array_to_string(w[i:i+{n - 1}], ' ')
-                          for i in generate_series(1, greatest(len(w) - {n - 1}, 1))]) AS gs
-    FROM (SELECT {id_col}, {words_sql(text_col)} AS w FROM {table})
+    SELECT doc_id AS id,
+           list_distinct([array_to_string(w[i:i+{WORD_NGRAM_N - 1}], ' ')
+                          for i in generate_series(1, greatest(len(w) - {WORD_NGRAM_N - 1}, 1))]) AS gs
+    FROM (SELECT doc_id, {words_sql('text')} AS w FROM documents)
   )
 ),
 expl AS (
@@ -1312,13 +1213,7 @@ FS_MATCH_T = 10
 FS_POSSIBLE_T = 4
 
 
-def fs_pair_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    length_col: str = "n_chars",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-) -> DataFrame:
+def fs_pair_scores(docs: DataFrame, block_cols: tuple[str, ...] = ("lang", "source")) -> DataFrame:
     """Blocked Fellegi-Sunter pair scores -- the shared pair stage under
     :func:`record_linkage_scores` (per-block decision profile) and
     :func:`entity_resolution_clusters` (linked-entity closure). Output
@@ -1340,10 +1235,10 @@ def fs_pair_scores(
         widen_scan(docs)
         .select(
             *[F.col(c) for c in block_cols],
-            F.col(id_col).alias("id"),
-            F.col(length_col).cast("bigint").alias("len"),
-            F.lower(F.substring(F.col(text_col), 1, plen)).alias("pfx"),
-            F.size(words(text_col)).cast("bigint").alias("ntok"),
+            F.col("doc_id").alias("id"),
+            F.col("n_chars").cast("bigint").alias("len"),
+            F.lower(F.substring(F.col("text"), 1, plen)).alias("pfx"),
+            F.size(words("text")).cast("bigint").alias("ntok"),
         )
         .localCheckpoint()
     )
@@ -1368,13 +1263,10 @@ def fs_pair_scores(
     )
 
 
-def record_linkage_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    length_col: str = "n_chars",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-) -> DataFrame:
+RECORD_LINKAGE_SCORES_BLOCK_COLS = ("lang", "source")
+
+
+def record_linkage_scores(docs: DataFrame) -> DataFrame:
     """Fellegi-Sunter-style probabilistic record linkage over blocked
     candidate pairs: per pair, each comparison field (length band, text
     prefix, token count) contributes an agreement/disagreement weight,
@@ -1403,9 +1295,9 @@ def record_linkage_scores(
         .otherwise(F.lit("non_match"))
     )
     return (
-        fs_pair_scores(docs, id_col, text_col, length_col, block_cols)
-        .select(*block_cols, "score", decision.alias("decision"))
-        .groupBy(*block_cols, "decision")
+        fs_pair_scores(docs, block_cols=RECORD_LINKAGE_SCORES_BLOCK_COLS)
+        .select(*RECORD_LINKAGE_SCORES_BLOCK_COLS, "score", decision.alias("decision"))
+        .groupBy(*RECORD_LINKAGE_SCORES_BLOCK_COLS, "decision")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.sum("score").cast("bigint").alias("sum_score"),
@@ -1441,19 +1333,15 @@ def _fs_sql_parts(
     return {"feats": feats, "score": score, "join_on": join_on}
 
 
-def record_linkage_scores_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    length_col: str = "n_chars",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-) -> str:
+def record_linkage_scores_sql() -> str:
     """DuckDB twin of :func:`record_linkage_scores`: same blocked
     self-join, same integer weights and thresholds (shared fragments:
     :func:`_fs_sql_parts`)."""
-    parts = _fs_sql_parts(table, id_col, text_col, length_col, block_cols)
-    blk = ", ".join(block_cols)
-    blk_a = ", ".join(f"a.{c} AS {c}" for c in block_cols)
+    parts = _fs_sql_parts(
+        "documents", "doc_id", "text", "n_chars", RECORD_LINKAGE_SCORES_BLOCK_COLS
+    )
+    blk = ", ".join(RECORD_LINKAGE_SCORES_BLOCK_COLS)
+    blk_a = ", ".join(f"a.{c} AS {c}" for c in RECORD_LINKAGE_SCORES_BLOCK_COLS)
     return f"""
 WITH feats AS (
   {parts["feats"]}
@@ -1473,14 +1361,10 @@ FROM scored GROUP BY {blk}, decision
 """
 
 
-def entity_resolution_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    length_col: str = "n_chars",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    link_threshold: int | None = None,
-) -> DataFrame:
+ENTITY_RESOLUTION_CLUSTERS_BLOCK_COLS = ("lang", "source")
+
+
+def entity_resolution_clusters(docs: DataFrame, link_threshold: int | None = None) -> DataFrame:
     """Entity resolution: the Fellegi-Sunter pair stage closed into
     canonical entities -- link every blocked pair scoring at or above
     ``link_threshold`` (default FS_POSSIBLE_T: the optimistic
@@ -1505,40 +1389,34 @@ def entity_resolution_clusters(
 
     thr = FS_POSSIBLE_T if link_threshold is None else link_threshold
     pairs = (
-        fs_pair_scores(docs, id_col, text_col, length_col, block_cols)
+        fs_pair_scores(docs, block_cols=ENTITY_RESOLUTION_CLUSTERS_BLOCK_COLS)
         .where(F.col("score") >= thr)
         .select("id_a", "id_b")
     )
     comp = graph.connected_components(pairs)
     ent = (
-        docs.select(F.col(id_col).cast("bigint").alias("id"))
+        docs.select(F.col("doc_id").cast("bigint").alias("id"))
         .join(comp, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce(F.col("comp"), F.col("id")).cast("bigint").alias("entity_id"),
         )
     )
     sizes = ent.groupBy("entity_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("entity_size")
     )
-    return ent.join(sizes, "entity_id").select(id_col, "entity_id", "entity_size")
+    return ent.join(sizes, "entity_id").select("doc_id", "entity_id", "entity_size")
 
 
-def entity_resolution_clusters_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    length_col: str = "n_chars",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    link_threshold: int | None = None,
-) -> str:
+def entity_resolution_clusters_sql() -> str:
     """DuckDB twin of :func:`entity_resolution_clusters`: the shared
     record_linkage feature/score fragments (:func:`_fs_sql_parts`),
     links at the same threshold, recursive-CTE closure (the
     minhash_clusters_sql precedent), same min-id canonicalization and
     singleton attach."""
-    thr = FS_POSSIBLE_T if link_threshold is None else link_threshold
-    parts = _fs_sql_parts(table, id_col, text_col, length_col, block_cols)
+    parts = _fs_sql_parts(
+        "documents", "doc_id", "text", "n_chars", ENTITY_RESOLUTION_CLUSTERS_BLOCK_COLS
+    )
     return f"""
 WITH RECURSIVE feats AS (
   {parts["feats"]}
@@ -1546,7 +1424,7 @@ WITH RECURSIVE feats AS (
 pairs AS (
   SELECT a.id AS id_a, b.id AS id_b
   FROM feats a JOIN feats b ON {parts["join_on"]} AND a.id < b.id
-  WHERE {parts["score"]} >= {thr}
+  WHERE {parts["score"]} >= {FS_POSSIBLE_T}
 ),
 edges AS (
   SELECT id_a AS u, id_b AS v FROM pairs
@@ -1560,14 +1438,14 @@ walk(id, comp) AS (
 ),
 cmap AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
 ent AS (
-  SELECT d.{id_col} AS {id_col},
-         CAST(COALESCE(c.comp, d.{id_col}) AS BIGINT) AS entity_id
-  FROM {table} d LEFT JOIN cmap c ON c.id = d.{id_col}
+  SELECT d.doc_id AS doc_id,
+         CAST(COALESCE(c.comp, d.doc_id) AS BIGINT) AS entity_id
+  FROM documents d LEFT JOIN cmap c ON c.id = d.doc_id
 ),
 sizes AS (
   SELECT entity_id, CAST(count(*) AS BIGINT) AS entity_size
   FROM ent GROUP BY 1
 )
-SELECT ent.{id_col}, ent.entity_id, sizes.entity_size
+SELECT ent.doc_id, ent.entity_id, sizes.entity_size
 FROM ent JOIN sizes USING (entity_id)
 """

@@ -43,6 +43,13 @@ from pyspark.sql import functions as F
 
 RANK_SCALE = 10**12
 
+# Iteration parameters shared by the Spark operators below and their DuckDB
+# oracles (operators' *_sql twins and plans/graphs.py).
+PAGERANK_DAMPING, PAGERANK_ITERATIONS, PPR_SEED_MOD = 0.85, 10, 10
+SSSP_MAX_HOPS = 8
+TEMPORAL_REACH_SEED_MOD, TEMPORAL_REACH_ROUNDS = 10, 4
+K_TRUSS_K, K_TRUSS_ROUNDS = 4, 6
+
 
 def out_weight_sums(edges: DataFrame) -> DataFrame:
     """G2/A9 -- reduceOnEdges(OUT) sum of outgoing weights
@@ -70,8 +77,7 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
 
 def weighted_pagerank(
     edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
+    iterations: int = PAGERANK_ITERATIONS,
     exact: bool = False,
     checkpoint_every: int = 0,
 ) -> DataFrame:
@@ -96,7 +102,7 @@ def weighted_pagerank(
     # becomes plain s (never NULL: every vertex owns >= 1 grouped row).
 
     if exact:
-        d100 = int(round(damping * 100))
+        d100 = int(round(PAGERANK_DAMPING * 100))
         base = (100 - d100) * (RANK_SCALE // 100)
         trans = (
             edges.select(
@@ -153,11 +159,10 @@ def weighted_pagerank(
         )
         ranks = contribs.select(
             F.col("dst").alias("vertex"),
-            (F.lit(1.0 - damping) + F.lit(damping) * F.col("s")).alias("rank"),
+            (F.lit(1.0 - PAGERANK_DAMPING) + F.lit(PAGERANK_DAMPING) * F.col("s")).alias("rank"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             ranks = ranks.localCheckpoint()
-    _ = spark  # session retained for future checkpoint-dir support
     return ranks
 
 
@@ -168,12 +173,7 @@ def weighted_pagerank(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, comp) for every node of the undirected edge set; comp = the
     minimum node id in the node's connected component.
 
@@ -196,8 +196,8 @@ def connected_components(
     """
     e = (
         edges.select(
-            F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
-            F.least(F.col(a_col), F.col(b_col)).alias("v"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("u"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -247,7 +247,7 @@ def connected_components(
     return e.select(F.col("u").alias("id"), F.col("v").alias("comp")).union(centers)
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over the undirected simple graph of an edge
     list. The classic node-ordering join: canonicalize each edge to
     (a < b), then a triangle is counted exactly once as a < b < c via
@@ -257,7 +257,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     follows the degree distribution, so at web scale pre-split high-degree
     hubs (the standard node-iterator+ optimization, same salting idiom as
     operators/skew); no cartesian anywhere. Output: 1 row (n_triangles)."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    a, b = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
     # the canonical edge frame feeds THREE consumers (two wedge sides +
     # the closing join): without the cut the upstream derivation and the
     # distinct's shuffle re-run once per consumer (the multi-consumer
@@ -270,7 +270,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # algorithm holds it at least once per join side); see SCALE.md's
     # k-truss discussion for the same trade at peeling depth.
     e = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("src") != F.col("dst"))
         .select(a.alias("a"), b.alias("b"))
         .distinct()
         .localCheckpoint()
@@ -284,13 +284,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 4,
-    max_rounds: int = 12,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = 4, max_rounds: int = 12) -> DataFrame:
     """k-core of the undirected simple graph: the maximal subgraph where
     every node keeps degree >= k. Standard peeling -- repeatedly drop
     nodes of degree < k -- run to fixpoint with a ``max_rounds`` cap.
@@ -320,10 +314,10 @@ def kcore(
     action per round drives the fixpoint test. The cap bounds the gate's
     plan size, not the algorithm."""
     e = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("src") != F.col("dst"))
         .select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .distinct()
     )
@@ -403,13 +397,7 @@ def kcore_sql(edges_sql: str, k: int = 4, rounds: int = 12) -> str:
     return ",\n".join(parts) + "\nSELECT u AS node, core_degree FROM fin"
 
 
-def sssp_hops(
-    edges: DataFrame,
-    source: int,
-    max_hops: int = 8,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def sssp_hops(edges: DataFrame, source: int, max_hops: int = SSSP_MAX_HOPS) -> DataFrame:
     """Single-source shortest paths (unweighted -- BFS hop counts) on the
     directed graph, the Gelly SSSP exercise shape re-expressed as an
     iterative frontier expansion (Flink's iterate() on the reference's
@@ -430,7 +418,7 @@ def sssp_hops(
     drives the exit. The edge list is deduplicated once up front --
     parallel edges change nothing in BFS but multiply the join fan-out."""
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
@@ -467,7 +455,7 @@ def sssp_hops(
     return dist
 
 
-def sssp_hops_sql(edges_sql: str, source: int, max_hops: int = 8) -> str:
+def sssp_hops_sql(edges_sql: str, source: int) -> str:
     """DuckDB twin of :func:`sssp_hops`: exactly ``max_hops`` BFS rounds
     unrolled as materialized CTEs. Each round re-expands the WHOLE settled
     set (not just the frontier) and re-minimizes -- algebraically equal to
@@ -480,22 +468,17 @@ def sssp_hops_sql(edges_sql: str, source: int, max_hops: int = 8) -> str:
         f"r0 AS MATERIALIZED (SELECT CAST({source} AS BIGINT) AS node, "
         "CAST(0 AS BIGINT) AS hops)",
     ]
-    for i in range(max_hops):
+    for i in range(SSSP_MAX_HOPS):
         parts.append(
             f"r{i + 1} AS MATERIALIZED (SELECT node, CAST(min(hops) AS BIGINT) AS hops "
             f"FROM (SELECT node, hops FROM r{i} "
             f"UNION ALL SELECT e.dst, r{i}.hops + 1 FROM e JOIN r{i} ON e.src = r{i}.node "
-            f"WHERE r{i}.hops + 1 <= {max_hops}) GROUP BY node)"
+            f"WHERE r{i}.hops + 1 <= {SSSP_MAX_HOPS}) GROUP BY node)"
         )
-    return ",\n".join(parts) + f"\nSELECT node, hops FROM r{max_hops}"
+    return ",\n".join(parts) + f"\nSELECT node, hops FROM r{SSSP_MAX_HOPS}"
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 6) -> DataFrame:
     """Synchronous min-label propagation on the UNDIRECTED graph -- the
     deterministic community-labeling iteration on the reference's Gelly
     iteration surface (PageRankWithEdgeWeights.java:102-104's iterate()),
@@ -521,7 +504,7 @@ def label_propagation(
     front; label state is ~|V| rows regardless of round. The early-exit
     probe is one isEmpty() on the changed-label diff per round."""
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
     und = (
@@ -588,9 +571,7 @@ def label_propagation_sql(edges_sql: str, rounds: int = 6) -> str:
     return ",\n".join(parts) + f"\nSELECT node, label FROM l{rounds}"
 
 
-def clustering_coefficients(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient over the undirected simple
     graph: c(v) = 2*tri(v) / (deg(v)*(deg(v)-1)) -- how close each node's
     neighborhood is to a clique, the standard cohesion metric next to the
@@ -605,13 +586,13 @@ def clustering_coefficients(
     corners via one explode), plus one degree aggregation -- two vertex-
     keyed equi-joins and two groupBys, no cartesian; the same hub-salting
     note as the global count applies at web scale."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    a, b = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
     # the canonical edge frame feeds FIVE consumers (degree union x2, two
     # wedge sides, closing join): cut once or the derivation + distinct
     # shuffle re-run per consumer (the triangle_count idiom; same
     # edge-set-sized materialization trade, documented there)
     e = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("src") != F.col("dst"))
         .select(a.alias("a"), b.alias("b"))
         .distinct()
         .localCheckpoint()
@@ -692,11 +673,7 @@ FROM deg d LEFT JOIN tri t USING (node)
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
-    seed_mod: int = 10,
-    checkpoint_every: int = 4,
+    edges: DataFrame, iterations: int = PAGERANK_ITERATIONS, seed_mod: int = PPR_SEED_MOD
 ) -> DataFrame:
     """Personalized PageRank: the teleport mass goes to a SEED set instead
     of every vertex -- the graph-proximity ranking behind recommendation
@@ -727,7 +704,7 @@ def personalized_pagerank(
     def is_seed(c):
         return (md5_long(c.cast("string")) % seed_mod == 0).cast("bigint")
 
-    d100 = int(round(damping * 100))
+    d100 = int(round(PAGERANK_DAMPING * 100))
     base = (100 - d100) * (RANK_SCALE // 100)
     trans = (
         edges.select("src", "dst", F.col("weight").cast("bigint").alias("w"))
@@ -769,7 +746,7 @@ def personalized_pagerank(
             .cast("bigint")
             .alias("r"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if 4 and (i + 1) % 4 == 0:
             ranks = ranks.localCheckpoint()
     return ranks.select(
         "vertex",
@@ -777,12 +754,10 @@ def personalized_pagerank(
     )
 
 
-def random_walks(
-    edges: DataFrame,
-    steps: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+RANDOM_WALKS_STEPS = 4
+
+
+def random_walks(edges: DataFrame, steps: int = RANDOM_WALKS_STEPS) -> DataFrame:
     """Deterministic random-walk corpus over the directed graph -- the
     walk-generation stage of DeepWalk/node2vec-style graph-embedding
     training data, with the reproducibility contract a training pipeline
@@ -807,7 +782,7 @@ def random_walks(
 
     w = Window.partitionBy("s").orderBy("d")
     adj = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .select(
             "s",
@@ -867,7 +842,7 @@ def random_walks(
     return res
 
 
-def random_walks_sql(edges_sql: str, steps: int = 4) -> str:
+def random_walks_sql(edges_sql: str) -> str:
     """DuckDB twin of :func:`random_walks`; ``edges_sql`` must select
     (src, dst)."""
     from ..functions.hashing import md5_long_sql
@@ -885,7 +860,7 @@ def random_walks_sql(edges_sql: str, steps: int = 4) -> str:
         "(SELECT src AS vertex FROM edges UNION ALL SELECT dst FROM edges))",
         "w0 AS (SELECT vertex AS start_node, vertex AS cur FROM verts)",
     ]
-    for t in range(1, steps + 1):
+    for t in range(1, RANDOM_WALKS_STEPS + 1):
         h = md5_long_sql(
             f"CAST(start_node AS VARCHAR) || ':{t}:' || CAST(cur AS VARCHAR)"
         )
@@ -898,7 +873,7 @@ def random_walks_sql(edges_sql: str, steps: int = 4) -> str:
         )
     steps_union = "\nUNION ALL\n".join(
         f"SELECT start_node, CAST({t} AS BIGINT) AS step, cur AS node FROM w{t}"
-        for t in range(0, steps + 1)
+        for t in range(0, RANDOM_WALKS_STEPS + 1)
     )
     return ",\n".join(parts) + "\n" + steps_union
 
@@ -990,9 +965,7 @@ SELECT n AS n_edges, sx AS sum_out_strength, sy AS sum_in_strength,
 FROM agg
 """
 
-def edge_jaccard_similarity(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def edge_jaccard_similarity(edges: DataFrame) -> DataFrame:
     """Per-edge common-neighbor Jaccard over the undirected simple graph:
     for each canonical edge (a < b), jac = |N(a) ∩ N(b)| / |N(a) ∪ N(b)|
     -- the classic link-prediction / edge-strength feature (Liben-Nowell
@@ -1013,12 +986,12 @@ def edge_jaccard_similarity(
     credits edges via one 3-struct explode, then two vertex-keyed degree
     joins -- no cartesian; the hub-salting note from the global triangle
     count applies to the wedge join's degree skew at web scale."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    a, b = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
     # SIX consumers of the canonical edge frame (degree union x2, two
     # wedge sides, closing join, the output join chain) -- cut once (the
     # triangle_count idiom; edge-set-sized, the documented trade)
     e = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("src") != F.col("dst"))
         .select(a.alias("a"), b.alias("b"))
         .distinct()
         .localCheckpoint()
@@ -1114,14 +1087,7 @@ JOIN deg db ON db.node = e.b
 LEFT JOIN common c ON c.a = e.a AND c.b = e.b
 """
 
-def temporal_reachability(
-    tedges: DataFrame,
-    seed_mod: int = 10,
-    rounds: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    t_col: str = "t",
-) -> DataFrame:
+def temporal_reachability(tedges: DataFrame, rounds: int = TEMPORAL_REACH_ROUNDS) -> DataFrame:
     """Earliest-arrival TIME-RESPECTING reachability over a temporal edge
     list (Wu et al., "Path Problems in Temporal Graphs", VLDB 2014): a
     path is valid only if edge timestamps are non-decreasing along it,
@@ -1147,16 +1113,16 @@ def temporal_reachability(
 
     e = (
         tedges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(t_col).cast("bigint").alias("t"),
+            F.col("src").alias("src"),
+            F.col("dst").alias("dst"),
+            F.col("t").cast("bigint").alias("t"),
         )
         .where(F.col("src") != F.col("dst"))
         .localCheckpoint()
     )
     verts = vertices_from_edges(e)
     arr = (
-        verts.where(md5_long(F.col("vertex")) % seed_mod == 0)
+        verts.where(md5_long(F.col("vertex")) % TEMPORAL_REACH_SEED_MOD == 0)
         .select("vertex", F.lit(0).cast("bigint").alias("arrival_ms"))
         .localCheckpoint()
     )
@@ -1204,11 +1170,7 @@ def _edge_support(e: DataFrame) -> DataFrame:
 
 
 def k_truss_edges(
-    edges: DataFrame,
-    k: int = 4,
-    max_rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
+    edges: DataFrame, k: int = K_TRUSS_K, max_rounds: int = K_TRUSS_ROUNDS
 ) -> DataFrame:
     """k-truss of the undirected simple graph -- the EDGE analog of the
     gated k-core: the maximal subgraph where every edge participates in
@@ -1242,10 +1204,10 @@ def k_truss_edges(
     round for that bookkeeping, the adjudicated-simple choice at
     max_rounds <= 6."""
     e = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("src") != F.col("dst"))
         .select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .distinct()
         .localCheckpoint()
@@ -1280,20 +1242,20 @@ def k_truss_edges(
     )
 
 
-def k_truss_sql(edges_sql: str, k: int = 4, rounds: int = 6) -> str:
+def k_truss_sql(edges_sql: str) -> str:
     """DuckDB twin of :func:`k_truss_edges`: exactly ``rounds`` peeling
     rounds unrolled as CTEs (fixpoint rounds are identity -- the kcore
     contract). AS MATERIALIZED is load-bearing: each round's survivor
     set is referenced three times by the next wedge+closing join, and
     un-materialized CTEs re-expand the whole chain 3^rounds times (the
     kcore_sql lesson)."""
-    thr = k - 2
+    thr = K_TRUSS_K - 2
     parts = [
         f"WITH edges AS MATERIALIZED ({edges_sql})",
         "s0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, "
         "greatest(src, dst) AS b FROM edges WHERE src != dst)",
     ]
-    for i in range(rounds):
+    for i in range(K_TRUSS_ROUNDS):
         parts.append(
             f"t{i} AS MATERIALIZED (SELECT e1.a AS x, e1.b AS y, e2.b AS z "
             f"FROM s{i} e1 JOIN s{i} e2 ON e1.b = e2.a "
@@ -1307,9 +1269,9 @@ def k_truss_sql(edges_sql: str, k: int = 4, rounds: int = 6) -> str:
             f") GROUP BY a, b HAVING count(*) >= {thr})"
         )
     parts.append(
-        f"tf AS MATERIALIZED (SELECT e1.a AS x, e1.b AS y, e2.b AS z "
-        f"FROM s{rounds} e1 JOIN s{rounds} e2 ON e1.b = e2.a "
-        f"JOIN s{rounds} e3 ON e3.a = e1.a AND e3.b = e2.b)"
+        "tf AS MATERIALIZED (SELECT e1.a AS x, e1.b AS y, e2.b AS z "
+        "FROM s6 e1 JOIN s6 e2 ON e1.b = e2.a "
+        "JOIN s6 e3 ON e3.a = e1.a AND e3.b = e2.b)"
     )
     return (
         ",\n".join(parts)

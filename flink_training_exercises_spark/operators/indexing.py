@@ -27,12 +27,10 @@ from ..functions.text import words, words_sql
 from .textstats import _widened
 
 
-def inverted_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings: int = 20,
-) -> DataFrame:
+INVERTED_INDEX_MAX_POSTINGS = 20
+
+
+def inverted_index(docs: DataFrame, max_postings: int = INVERTED_INDEX_MAX_POSTINGS) -> DataFrame:
     """Inverted index over the corpus: one row per distinct token with its
     document frequency and the first ``max_postings`` doc ids (ascending,
     comma-joined -- strings hash identically across engines; raw arrays
@@ -49,8 +47,8 @@ def inverted_index(
     filter: a skewed token like 'the' emits max_postings rows, never its
     full chain."""
     tokens = _widened(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(words(text_col))).alias("token"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(F.array_distinct(words("text"))).alias("token"),
     )
     w_rank = Window.partitionBy("token").orderBy(F.asc("doc_id"))
     w_all = Window.partitionBy("token")
@@ -71,16 +69,11 @@ def inverted_index(
     )
 
 
-def inverted_index_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings: int = 20,
-) -> str:
-    w = words_sql(text_col)
+def inverted_index_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH tokens AS (
-  SELECT DISTINCT {id_col} AS doc_id, unnest({w}) AS token FROM {table}
+  SELECT DISTINCT doc_id AS doc_id, unnest({w}) AS token FROM documents
 ),
 ranked AS (
   SELECT token, doc_id,
@@ -90,16 +83,14 @@ ranked AS (
 )
 SELECT token, CAST(max(df) AS BIGINT) AS df,
        array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-FROM ranked WHERE rn <= {max_postings} GROUP BY token
+FROM ranked WHERE rn <= {INVERTED_INDEX_MAX_POSTINGS} GROUP BY token
 """
 
 
-def doc_typicality(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 5,
-) -> DataFrame:
+DOC_TYPICALITY_MIN_COUNT = 5
+
+
+def doc_typicality(docs: DataFrame, min_count: int = DOC_TYPICALITY_MIN_COUNT) -> DataFrame:
     """Per-document corpus-typicality in exact integers: how much corpus
     bigram mass the doc's distinct bigrams carry. Output (doc_id,
     n_bigrams, n_known, freq_sum, typicality_x1000) where freq_sum is the
@@ -113,7 +104,7 @@ def doc_typicality(
     both sides shuffle on the same key; no driver-side state. Empty docs
     guard the division explicitly (ANSI)."""
     base = _widened(docs)
-    ws = words(text_col)
+    ws = words("text")
     grams = F.when(
         F.size(ws) >= 2,
         F.array_distinct(
@@ -125,7 +116,7 @@ def doc_typicality(
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-    doc_grams = base.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("bigram"))
+    doc_grams = base.select(F.col("doc_id").alias("doc_id"), F.explode(grams).alias("bigram"))
     counts = (
         doc_grams.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -152,16 +143,11 @@ def doc_typicality(
     )
 
 
-def doc_typicality_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 5,
-) -> str:
-    w = words_sql(text_col)
+def doc_typicality_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH ws AS (
-  SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
+  SELECT doc_id AS doc_id, {w} AS ws FROM documents
 ),
 doc_grams AS (
   SELECT DISTINCT doc_id, bigram FROM (
@@ -172,7 +158,7 @@ doc_grams AS (
 ),
 counts AS (
   SELECT bigram, count(*) AS cnt FROM doc_grams
-  GROUP BY 1 HAVING count(*) >= {min_count}
+  GROUP BY 1 HAVING count(*) >= {DOC_TYPICALITY_MIN_COUNT}
 ),
 agg AS (
   SELECT g.doc_id, count(*) AS n_bigrams, count(c.cnt) AS n_known,
@@ -188,12 +174,10 @@ FROM agg
 """
 
 
-def frequent_tokens_topk(
-    docs: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    k: int = 25,
-) -> DataFrame:
+FREQUENT_TOKENS_TOPK_K = 25
+
+
+def frequent_tokens_topk(docs: DataFrame, k: int = FREQUENT_TOKENS_TOPK_K) -> DataFrame:
     """Grouped heavy hitters: the k most frequent tokens per group (total
     occurrences, ties broken by token ascending) -- the vocabulary-audit /
     stop-word-discovery staple. Output (group, token, cnt, rank).
@@ -204,7 +188,7 @@ def frequent_tokens_topk(
     (group, token) counts -- already |vocab|-bounded, orders of magnitude
     smaller than the corpus -- and every group emits exactly <= k rows."""
     toks = _widened(docs).select(
-        F.col(group_col).alias("grp"), F.explode(words(text_col)).alias("token")
+        F.col("lang").alias("grp"), F.explode(words("text")).alias("token")
     )
     counts = toks.groupBy("grp", "token").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("grp").orderBy(F.desc("cnt"), F.asc("token"))
@@ -215,16 +199,11 @@ def frequent_tokens_topk(
     )
 
 
-def frequent_tokens_topk_sql(
-    table: str = "documents",
-    group_col: str = "lang",
-    text_col: str = "text",
-    k: int = 25,
-) -> str:
-    w = words_sql(text_col)
+def frequent_tokens_topk_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH toks AS (
-  SELECT {group_col} AS grp, unnest({w}) AS token FROM {table}
+  SELECT lang AS grp, unnest({w}) AS token FROM documents
 ),
 counts AS (
   SELECT grp, token, count(*) AS cnt FROM toks GROUP BY 1, 2
@@ -234,7 +213,7 @@ SELECT grp, token, cnt, rank FROM (
          CAST(row_number() OVER (PARTITION BY grp ORDER BY cnt DESC, token) AS INT)
            AS rank
   FROM counts
-) WHERE rank <= {k}
+) WHERE rank <= {FREQUENT_TOKENS_TOPK_K}
 """
 
 
@@ -247,12 +226,11 @@ BM25_QUERIES: list[tuple[str, str, str]] = [
 ]
 
 
+BM25_TOPK_K = 10
+
+
 def bm25_topk(
-    docs: DataFrame,
-    queries: list[tuple[str, str, str]] | None = None,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, queries: list[tuple[str, str, str]] | None = None, k: int = BM25_TOPK_K
 ) -> DataFrame:
     """BM25 top-k retrieval -- the ranked-retrieval consumer of the
     ``inverted_index`` build (and the RAG-pipeline staple): score every
@@ -294,7 +272,7 @@ def bm25_topk(
     terms = sorted({t for _, t1, t2 in qs for t in (t1, t2)})
     spark = docs.sparkSession
     base = _widened(docs).select(
-        F.col(id_col).alias("doc_id"), words(text_col).alias("ws")
+        F.col("doc_id").alias("doc_id"), words("text").alias("ws")
     )
     totals = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -359,28 +337,21 @@ def bm25_topk(
     )
 
 
-def bm25_topk_sql(
-    table: str = "documents",
-    queries: list[tuple[str, str, str]] | None = None,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def bm25_topk_sql() -> str:
     """DuckDB twin of :func:`bm25_topk` -- identical integer operands and
     identical float expression tree (two divisions, one multiply, one
     fixed-order add), so scores are bit-equal and floor(1e6*score) agrees."""
-    qs = BM25_QUERIES if queries is None else queries
-    terms = sorted({t for _, t1, t2 in qs for t in (t1, t2)})
+    terms = sorted({t for _, t1, t2 in BM25_QUERIES for t in (t1, t2)})
     in_list = ", ".join(f"'{t}'" for t in terms)
     q_vals = ", ".join(
         f"('{qid}', {pos}, '{t}')"
-        for qid, t1, t2 in qs
+        for qid, t1, t2 in BM25_QUERIES
         for pos, t in ((1, t1), (2, t2))
     )
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
+  SELECT doc_id AS doc_id, {w} AS ws FROM documents
 ),
 tot AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs,
@@ -427,15 +398,18 @@ SELECT query_id, rank, doc_id, n_matched, score_x1e6 FROM (
          CAST(row_number() OVER (PARTITION BY query_id
                                  ORDER BY score_x1e6 DESC, doc_id) AS INT) AS rank
   FROM ranked
-) WHERE rank <= {k}
+) WHERE rank <= {BM25_TOPK_K}
 """
+
+
+COLLOCATION_PMI_TOPK_K = 25
+COLLOCATION_PMI_TOPK_MIN_COUNT = 5
 
 
 def collocation_pmi_topk(
     docs: DataFrame,
-    k: int = 25,
-    min_count: int = 5,
-    text_col: str = "text",
+    k: int = COLLOCATION_PMI_TOPK_K,
+    min_count: int = COLLOCATION_PMI_TOPK_MIN_COUNT,
 ) -> DataFrame:
     """Top-k collocations by pointwise mutual information -- the
     word-embedding / tokenizer-merit staple ("which adjacent pairs occur
@@ -461,7 +435,7 @@ def collocation_pmi_topk(
     heap per partition, k rows to the driver plan -- never a
     single-partition sort of the vocab-bounded pair table); the final
     row_number window runs over exactly k rows by construction."""
-    base = _widened(docs).select(words(text_col).alias("ws"))
+    base = _widened(docs).select(words("text").alias("ws"))
     pairs = base.select(
         F.explode(
             F.when(
@@ -532,18 +506,13 @@ def collocation_pmi_topk(
     )
 
 
-def collocation_pmi_topk_sql(
-    table: str = "documents",
-    k: int = 25,
-    min_count: int = 5,
-    text_col: str = "text",
-) -> str:
+def collocation_pmi_topk_sql() -> str:
     """DuckDB twin of :func:`collocation_pmi_topk` -- identical BIGINT
     counts and an identical scalar-by-scalar double expression tree."""
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT {w} AS ws FROM {table}
+  SELECT {w} AS ws FROM documents
 ),
 pairs AS (
   SELECT p.w1 AS w1, p.w2 AS w2 FROM (
@@ -554,7 +523,7 @@ pairs AS (
 ),
 pair_counts AS (
   SELECT w1, w2, CAST(count(*) AS BIGINT) AS pair_count
-  FROM pairs GROUP BY 1, 2 HAVING count(*) >= {min_count}
+  FROM pairs GROUP BY 1, 2 HAVING count(*) >= {COLLOCATION_PMI_TOPK_MIN_COUNT}
 ),
 uni AS (
   SELECT w, CAST(count(*) AS BIGINT) AS c
@@ -581,5 +550,5 @@ SELECT CAST(row_number() OVER (ORDER BY pmi_x1e3 DESC, w1, w2) AS INT) AS rank,
        w1, w2, pair_count, pmi_x1e3
 FROM scored
 ORDER BY pmi_x1e3 DESC, w1, w2
-LIMIT {k}
+LIMIT {COLLOCATION_PMI_TOPK_K}
 """

@@ -142,30 +142,6 @@ def _lloyd(train_rows, k: int, iters: int) -> list[tuple[int, list[float]]]:
     return cents
 
 
-def kmeans_assignments(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-    train_n: int = TRAIN_N,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (assigned, centroids): exact Lloyd over the md5-sampled
-    training set (driver-side, bounded), then ONE map-only nearest-centroid
-    assignment of the full corpus. assigned: (id, v, nn, cid);
-    centroids: (cid, c).
-
-    The training sample is a TakeOrdered (per-partition top-n + merge -- no
-    full sort, no corpus shuffle). The corpus is scanned exactly twice at
-    any scale: sample extraction + final assignment."""
-    base = _with_int_vec(emb, id_col, vec_col)
-    cents = _train_quantizer(base, n_centroids, iters, train_n)
-    cents_df = emb.sparkSession.createDataFrame(
-        [(cid, c) for cid, c in cents], schema="cid INT, c ARRAY<DOUBLE>"
-    )
-    return _assign(base, cents), cents_df
-
-
 def _collect_train(base: DataFrame, train_n: int) -> list:
     """The md5-deterministic bounded training sample (TakeOrdered), collected
     once -- coarse quantizer and PQ codebooks share the same rows."""
@@ -187,18 +163,7 @@ def _train_quantizer(
     return _lloyd(train_rows, n_centroids, iters)
 
 
-def ivf_topk(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-    nprobe: int = NPROBE,
-    topk: int = 5,
-    query_mod: int = 25,
-    train_n: int = TRAIN_N,
-    train_rows=None,
-) -> DataFrame:
+def ivf_topk(emb: DataFrame, topk: int = 5, query_mod: int = 25, train_rows=None) -> DataFrame:
     """IVF search: rank candidates from the nprobe nearest buckets by exact
     cosine. Output (query_id, neighbor_id, rank, cosine) -- same shape as
     the brute-force and LSH variants (whose ``k`` is this function's
@@ -209,8 +174,8 @@ def ivf_topk(
     and the candidate join BROADCASTS the probed queries against the
     assigned corpus on centroid id, so the corpus is never shuffled: one
     map-only assignment scan, one broadcast-join scan."""
-    base = _with_int_vec(emb, id_col, vec_col)
-    cents = _train_quantizer(base, n_centroids, iters, train_n, train_rows)
+    base = _with_int_vec(emb, "vec_id", "embedding")
+    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N, train_rows)
     assigned = _assign(base, cents)
     queries = base.where(F.col("id") % query_mod == 0).select(
         F.col("id").alias("qid"), F.col("v").alias("qv"), F.col("nn").alias("qnn")
@@ -219,7 +184,7 @@ def ivf_topk(
         "qid",
         "qv",
         "qnn",
-        F.explode(_probe_structs("qv", cents, nprobe)).alias("p"),
+        F.explode(_probe_structs("qv", cents, NPROBE)).alias("p"),
     ).select("qid", "qv", "qnn", F.col("p.cid").alias("cid"))
     cand = assigned.join(F.broadcast(probes), "cid").where(F.col("id") != F.col("qid"))
     scored = cand.select(
@@ -241,44 +206,31 @@ def _dist_sql(v: str, c: str, dim: int) -> str:
     )
 
 
-def ivf_topk_oracle(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-    nprobe: int = NPROBE,
-    topk: int = 5,
-    query_mod: int = 25,
-    dim: int = DIM,
-    train_n: int = TRAIN_N,
-    train_where: str = "",
-) -> str:
-    k = n_centroids
-    dist_bc = _dist_sql("b.v", "c.c", dim)
+def ivf_topk_oracle(topk: int = 5, query_mod: int = 25, train_where: str = "") -> str:
+    dist_bc = _dist_sql("b.v", "c.c", DIM)
     # train_where restricts only the QUANTIZER SAMPLE (the staleness
     # audit trains on the standing corpus while searching the merged
     # one); empty = sample from the full base, the gated-oracle behavior
     tw = f"WHERE {train_where}" if train_where else ""
     parts = [
         f"""WITH base AS (
-  SELECT {id_col} AS id,
-         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in {vec_col}] AS v
-  FROM {table}
+  SELECT vec_id AS id,
+         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in embedding] AS v
+  FROM embeddings
 ), basenn AS (
   SELECT id, v, list_sum([y * y for y in v]) AS nn FROM base
 ), train AS (
   SELECT id, v FROM (
     SELECT id, v, {md5_long_sql(f"CAST(id AS VARCHAR)")} AS bucket FROM base {tw}
-    ORDER BY bucket, id LIMIT {train_n}
+    ORDER BY bucket, id LIMIT {TRAIN_N}
   )
 ), c0 AS (
   SELECT row_number() OVER (ORDER BY id) - 1 AS cid,
          [CAST(y AS DOUBLE) for y in v] AS c
-  FROM (SELECT id, v FROM train ORDER BY id LIMIT {k})
+  FROM (SELECT id, v FROM train ORDER BY id LIMIT {K_CENTROIDS})
 )"""
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, KMEANS_ITERS + 1):
         parts.append(
             f"""a{t} AS (
   SELECT id, v, cid FROM (
@@ -308,20 +260,20 @@ def ivf_topk_oracle(
   SELECT id, v, cid FROM (
     SELECT b.id, b.v, c.cid,
            row_number() OVER (PARTITION BY b.id ORDER BY {dist_bc}, c.cid) AS rn
-    FROM base b CROSS JOIN c{iters} c
+    FROM base b CROSS JOIN c{KMEANS_ITERS} c
   ) WHERE rn = 1
 ), afin_nn AS (
   SELECT a.id, a.v, a.cid, n.nn FROM afin a JOIN basenn n USING (id)
 )"""
-    dist_qc = _dist_sql("q.qv", "c.c", dim)
-    dot_qa = f"list_sum([q.qv[i] * a.v[i] for i in generate_series(1, {dim})])"
+    dist_qc = _dist_sql("q.qv", "c.c", DIM)
+    dot_qa = f"list_sum([q.qv[i] * a.v[i] for i in generate_series(1, {DIM})])"
     search = f"""probes AS (
   SELECT qid, qv, qnn, cid FROM (
     SELECT q.qid, q.qv, q.qnn, c.cid,
            row_number() OVER (PARTITION BY q.qid ORDER BY {dist_qc}, c.cid) AS rn
     FROM (SELECT id AS qid, v AS qv, nn AS qnn FROM afin_nn WHERE id % {query_mod} = 0) q
-    CROSS JOIN c{iters} c
-  ) WHERE rn <= {nprobe}
+    CROSS JOIN c{KMEANS_ITERS} c
+  ) WHERE rn <= {NPROBE}
 ), scored AS (
   SELECT q.qid AS query_id, a.id AS neighbor_id,
          (CASE WHEN q.qnn = 0 OR a.nn = 0 THEN 0e0
@@ -343,62 +295,6 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 # ---------------------------------------------------------------------------
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-    train_n: int = TRAIN_N,
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF index as a parquet table PARTITIONED BY centroid
-    id -- the build-once shape: at 100 TB the index is written one time and
-    every search after that reads ONLY its nprobe partitions (partition
-    pruning at the file listing level; verified by
-    tests/test_ivf.py::test_index_search_prunes_partitions). Returns the
-    trained centroids (tiny; the caller keeps them driver-side, like a
-    FAISS index header)."""
-    base = _with_int_vec(emb, id_col, vec_col)
-    cents = _train_quantizer(base, n_centroids, iters, train_n)
-    _assign(base, cents).write.mode("overwrite").partitionBy("cid").parquet(path)
-    return cents
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    cents: list[tuple[int, list[float]]],
-    queries: DataFrame,
-    nprobe: int = NPROBE,
-    topk: int = 5,
-) -> DataFrame:
-    """Search a persisted IVF index: probe selection is driver-side (the
-    centroid table is in memory, like a FAISS index header), and the union
-    of probed cids is collected (tiny: |queries| x nprobe ints) and applied
-    as a STATIC ``cid IN (...)`` filter on the index scan -- guaranteed
-    file-listing partition pruning, no reliance on runtime dynamic pruning
-    through the broadcast join (verified by
-    tests/test_ivf.py::test_index_search_prunes_partitions).
-    queries: (qid, qv bigint-vec, qnn)."""
-    probed = queries.select(
-        "qid",
-        "qv",
-        "qnn",
-        F.explode(_probe_structs("qv", cents, nprobe)).alias("p"),
-    ).select("qid", "qv", "qnn", F.col("p.cid").alias("cid"))
-    # qid x nprobe ints -- bounded by the query batch, never the corpus
-    probed_cids = sorted({r["cid"] for r in probed.select("cid").distinct().collect()})
-    index = spark.read.parquet(path).where(F.col("cid").isin(probed_cids))
-    cand = index.join(F.broadcast(probed), "cid").where(F.col("id") != F.col("qid"))
-    scored = cand.select(
-        F.col("qid").alias("query_id"),
-        F.col("id").alias("neighbor_id"),
-        _cosine(_dot(F.col("qv"), F.col("v")), F.col("qnn"), F.col("nn")).alias("cosine"),
-    )
-    return rank_topk(scored, topk)
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (ADC): the compression half of the FAISS pair.
 # IVF prunes WHICH vectors to score; PQ compresses HOW each is scored --
@@ -413,20 +309,17 @@ PQ_K = 16
 PQ_ITERS = 2
 
 
-def pq_codebooks(
-    base: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = PQ_ITERS,
-    train_n: int = TRAIN_N, dim: int = DIM, train_rows=None,
-) -> list[list[tuple[int, list[float]]]]:
+def pq_codebooks(base: DataFrame, train_rows=None) -> list[list[tuple[int, list[float]]]]:
     """One exact codebook per subspace, trained driver-side on the shared
     md5 TakeOrdered sample (ONE corpus-side sample extraction; Lloyd runs
     m times over d-dim slices of the same collected rows)."""
-    d = dim // m
+    d = DIM // PQ_M
     if train_rows is None:
-        train_rows = _collect_train(base, train_n)
+        train_rows = _collect_train(base, TRAIN_N)
     books = []
-    for j in range(m):
+    for j in range(PQ_M):
         sub_rows = [{"id": r["id"], "v": list(r["v"])[j * d : (j + 1) * d]} for r in train_rows]
-        books.append(_lloyd(sub_rows, k, iters))
+        books.append(_lloyd(sub_rows, PQ_K, PQ_ITERS))
     return books
 
 
@@ -477,13 +370,13 @@ def _adc_score(lut_col: Column, m: int, k_cent: int) -> Column:
     return score
 
 
-def pq_encode(base: DataFrame, books: list[list[tuple[int, list[float]]]], dim: int = DIM) -> DataFrame:
+def pq_encode(base: DataFrame, books: list[list[tuple[int, list[float]]]]) -> DataFrame:
     """Map-only encoding: per subspace argmin over literal centroids ->
     (id, c0..c{m-1}). 64 dims x 8 bytes collapse to m single-byte codes --
     the 8x-64x memory compression that lets a scan stay in cache/RAM at
     corpus scale."""
     m = len(books)
-    d = dim // m
+    d = DIM // m
     code_cols = [
         _argmin_cid(f"slice(v, {j * d + 1}, {d})", books[j]).alias(f"c{j}")
         for j in range(m)
@@ -491,19 +384,11 @@ def pq_encode(base: DataFrame, books: list[list[tuple[int, list[float]]]], dim: 
     return base.select("id", *code_cols)
 
 
-def pq_topk(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k_cent: int = PQ_K,
-    iters: int = PQ_ITERS,
-    topk: int = 5,
-    query_mod: int = 25,
-    train_n: int = TRAIN_N,
-    dim: int = DIM,
-    train_rows=None,
-) -> DataFrame:
+PQ_TOPK_TOPK = 5
+PQ_TOPK_QUERY_MOD = 25
+
+
+def pq_topk(emb: DataFrame, train_rows=None) -> DataFrame:
     """PQ-ADC top-k: queries scored against the COMPRESSED corpus. Each
     query's per-subspace distances to the k centroids are precomputed
     driver-side into a flat m*k LUT (the asymmetric-distance table FAISS
@@ -513,22 +398,22 @@ def pq_topk(
 
     The scan is deliberately linear over the code table (that is PQ's
     contract: compressed-domain bandwidth); at 100 TB compose with the IVF
-    partition index (build_ivf_index) so only probed buckets are ADC-
+    cid partitioning (ivf_topk's probe) so only probed buckets are ADC-
     scanned. Output (query_id, neighbor_id, rank, approx_sqdist) ranked
     ascending with neighbor-id tie-break -- exact-arithmetic deterministic,
     DuckDB-replayable (driver LUT values are bit-identical to the oracle's
     per-row subspace sums: same sequential dimension-order double folds)."""
-    d = dim // m
-    base = _with_int_vec(emb, id_col, vec_col)
-    books = pq_codebooks(base, m, k_cent, iters, train_n, dim, train_rows)
-    codes = pq_encode(base, books, dim)
-    q_rows = _collect_queries(base, query_mod)
+    d = DIM // PQ_M
+    base = _with_int_vec(emb, "vec_id", "embedding")
+    books = pq_codebooks(base, train_rows=train_rows)
+    codes = pq_encode(base, books)
+    q_rows = _collect_queries(base, PQ_TOPK_QUERY_MOD)
     lut_df = base.sparkSession.createDataFrame(
         [(qid, _adc_lut(qv, books, d)) for qid, qv in q_rows],
         schema="qid BIGINT, lut ARRAY<DOUBLE>",
     )
     pairs = codes.join(F.broadcast(lut_df), F.col("id") != F.col("qid"))
-    score = _adc_score(F.col("lut"), m, k_cent)
+    score = _adc_score(F.col("lut"), PQ_M, PQ_K)
     scored = pairs.select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
@@ -537,27 +422,16 @@ def pq_topk(
     w = Window.partitionBy("query_id").orderBy(F.asc("approx_sqdist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= topk)
+        .where(F.col("rank") <= PQ_TOPK_TOPK)
         .select("query_id", "neighbor_id", "rank", "approx_sqdist")
     )
 
 
-def pq_topk_oracle(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k_cent: int = PQ_K,
-    iters: int = PQ_ITERS,
-    topk: int = 5,
-    query_mod: int = 25,
-    train_n: int = TRAIN_N,
-    dim: int = DIM,
-) -> str:
+def pq_topk_oracle() -> str:
     """DuckDB twin of pq_topk: per-subspace Lloyd unrolled as CTE chains
     (the IVF oracle pattern, m times over list slices), then encode +
     ADC scoring with the same fixed-order subspace sum."""
-    d = dim // m
+    d = DIM // PQ_M
 
     def sub(expr: str, j: int) -> str:
         return f"{expr}[{j * d + 1}:{j * d + d}]"
@@ -570,26 +444,26 @@ def pq_topk_oracle(
 
     parts = [
         f"""WITH base AS (
-  SELECT {id_col} AS id,
-         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in {vec_col}] AS v
-  FROM {table}
+  SELECT vec_id AS id,
+         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in embedding] AS v
+  FROM embeddings
 ), train AS (
   SELECT id, v FROM (
     SELECT id, v, {md5_long_sql("CAST(id AS VARCHAR)")} AS bucket FROM base
-    ORDER BY bucket, id LIMIT {train_n}
+    ORDER BY bucket, id LIMIT {TRAIN_N}
   )
 )"""
     ]
-    for j in range(m):
+    for j in range(PQ_M):
         parts.append(
             f"""t{j} AS (SELECT id, {sub('v', j)} AS s FROM train),
 b{j}_0 AS (
   SELECT row_number() OVER (ORDER BY id) - 1 AS cid,
          [CAST(y AS DOUBLE) for y in s] AS c
-  FROM (SELECT id, s FROM t{j} ORDER BY id LIMIT {k_cent})
+  FROM (SELECT id, s FROM t{j} ORDER BY id LIMIT {PQ_K})
 )"""
         )
-        for t in range(1, iters + 1):
+        for t in range(1, PQ_ITERS + 1):
             parts.append(
                 f"""a{j}_{t} AS (
   SELECT id, s, cid FROM (
@@ -614,23 +488,23 @@ b{j}_0 AS (
   SELECT id, cid AS c{j} FROM (
     SELECT x.id, c.cid,
            row_number() OVER (PARTITION BY x.id ORDER BY {dist(sub('x.v', j), 'c.c')}, c.cid) AS rn
-    FROM base x CROSS JOIN b{j}_{iters} c
+    FROM base x CROSS JOIN b{j}_{PQ_ITERS} c
   ) WHERE rn = 1
 )"""
         )
-    enc_joins = " ".join(f"JOIN enc{j} USING (id)" for j in range(1, m))
+    enc_joins = " ".join(f"JOIN enc{j} USING (id)" for j in range(1, PQ_M))
     score_terms = " + ".join(
-        f"({dist(sub('q.v', j), f'k{j}.c')})" for j in range(m)
+        f"({dist(sub('q.v', j), f'k{j}.c')})" for j in range(PQ_M)
     )
     book_joins = " ".join(
-        f"JOIN b{j}_{iters} k{j} ON k{j}.cid = e.c{j}" for j in range(m)
+        f"JOIN b{j}_{PQ_ITERS} k{j} ON k{j}.cid = e.c{j}" for j in range(PQ_M)
     )
     parts.append(
         f"""enc AS (
-  SELECT enc0.id, {", ".join(f"c{j}" for j in range(m))}
+  SELECT enc0.id, {", ".join(f"c{j}" for j in range(PQ_M))}
   FROM enc0 {enc_joins}
 ), queries AS (
-  SELECT id AS qid, v FROM base WHERE id % {query_mod} = 0
+  SELECT id AS qid, v FROM base WHERE id % {PQ_TOPK_QUERY_MOD} = 0
 ), scored AS (
   SELECT q.qid AS query_id, e.id AS neighbor_id,
          {score_terms} AS approx_sqdist
@@ -641,26 +515,16 @@ SELECT query_id, neighbor_id, rank, approx_sqdist FROM (
   SELECT *, CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY approx_sqdist, neighbor_id) AS INT) AS rank
   FROM scored
-) WHERE rank <= {topk}"""
+) WHERE rank <= {PQ_TOPK_TOPK}"""
     )
     return ",\n".join(parts)
 
 
-def ivf_pq_topk(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    coarse_iters: int = KMEANS_ITERS,
-    nprobe: int = NPROBE,
-    m: int = PQ_M,
-    k_cent: int = PQ_K,
-    pq_iters: int = PQ_ITERS,
-    topk: int = 5,
-    query_mod: int = 25,
-    train_n: int = TRAIN_N,
-    dim: int = DIM,
-) -> DataFrame:
+IVF_PQ_TOPK_TOPK = 5
+IVF_PQ_TOPK_QUERY_MOD = 25
+
+
+def ivf_pq_topk(emb: DataFrame) -> DataFrame:
     """The composed FAISS architecture: IVF coarse quantizer prunes WHICH
     vectors each query scores (nprobe buckets), PQ codes compress HOW each
     candidate is scored (ADC lookups, no full-vector arithmetic). One
@@ -671,14 +535,14 @@ def ivf_pq_topk(
     element_at lookups + a fixed-order sum per row. Corpus cost at any
     scale: one sample extraction + one combined assignment/encode scan +
     one broadcast-join scan of the probed fraction."""
-    d = dim // m
-    base = _with_int_vec(emb, id_col, vec_col)
-    train_rows = _collect_train(base, train_n)
-    cents = _train_quantizer(base, n_centroids, coarse_iters, train_n, train_rows)
-    books = pq_codebooks(base, m, k_cent, pq_iters, train_n, dim, train_rows)
+    d = DIM // PQ_M
+    base = _with_int_vec(emb, "vec_id", "embedding")
+    train_rows = _collect_train(base, TRAIN_N)
+    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N, train_rows)
+    books = pq_codebooks(base, train_rows=train_rows)
     code_cols = [
         _argmin_cid(f"slice(v, {j * d + 1}, {d})", books[j]).alias(f"c{j}")
-        for j in range(m)
+        for j in range(PQ_M)
     ]
     index = base.select(
         "id",
@@ -686,16 +550,16 @@ def ivf_pq_topk(
         *code_cols,
     )
     probe_rows = []
-    for qid, qv in _collect_queries(base, query_mod):
+    for qid, qv in _collect_queries(base, IVF_PQ_TOPK_QUERY_MOD):
         lut = _adc_lut(qv, books, d)
         # same (distance, cid) ordering as the oracle's row_number ORDER BY
-        near = sorted((_sq_dist_py(qv, c), cid) for cid, c in cents)[:nprobe]
+        near = sorted((_sq_dist_py(qv, c), cid) for cid, c in cents)[:NPROBE]
         probe_rows.extend((qid, cid, lut) for _, cid in near)
     probes = base.sparkSession.createDataFrame(
         probe_rows, schema="qid BIGINT, bucket INT, lut ARRAY<DOUBLE>"
     )
     cand = index.join(F.broadcast(probes), "bucket").where(F.col("id") != F.col("qid"))
-    score = _adc_score(F.col("lut"), m, k_cent)
+    score = _adc_score(F.col("lut"), PQ_M, PQ_K)
     scored = cand.select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
@@ -704,30 +568,16 @@ def ivf_pq_topk(
     w = Window.partitionBy("query_id").orderBy(F.asc("approx_sqdist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= topk)
+        .where(F.col("rank") <= IVF_PQ_TOPK_TOPK)
         .select("query_id", "neighbor_id", "rank", "approx_sqdist")
     )
 
 
-def ivf_pq_topk_oracle(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = K_CENTROIDS,
-    coarse_iters: int = KMEANS_ITERS,
-    nprobe: int = NPROBE,
-    m: int = PQ_M,
-    k_cent: int = PQ_K,
-    pq_iters: int = PQ_ITERS,
-    topk: int = 5,
-    query_mod: int = 25,
-    train_n: int = TRAIN_N,
-    dim: int = DIM,
-) -> str:
+def ivf_pq_topk_oracle() -> str:
     """DuckDB twin of ivf_pq_topk: the coarse Lloyd chain + the m
     per-subspace Lloyd chains + bucket assignment + encoding + probe
     selection + ADC scoring, all unrolled as CTEs."""
-    d = dim // m
+    d = DIM // PQ_M
 
     def sub(expr: str, j: int) -> str:
         return f"{expr}[{j * d + 1}:{j * d + d}]"
@@ -740,26 +590,26 @@ def ivf_pq_topk_oracle(
 
     parts = [
         f"""WITH base AS (
-  SELECT {id_col} AS id,
-         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in {vec_col}] AS v
-  FROM {table}
+  SELECT vec_id AS id,
+         [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT) for x in embedding] AS v
+  FROM embeddings
 ), train AS (
   SELECT id, v FROM (
     SELECT id, v, {md5_long_sql("CAST(id AS VARCHAR)")} AS bucket FROM base
-    ORDER BY bucket, id LIMIT {train_n}
+    ORDER BY bucket, id LIMIT {TRAIN_N}
   )
 ), co0 AS (
   SELECT row_number() OVER (ORDER BY id) - 1 AS cid,
          [CAST(y AS DOUBLE) for y in v] AS c
-  FROM (SELECT id, v FROM train ORDER BY id LIMIT {n_centroids})
+  FROM (SELECT id, v FROM train ORDER BY id LIMIT {K_CENTROIDS})
 )"""
     ]
-    for t in range(1, coarse_iters + 1):
+    for t in range(1, KMEANS_ITERS + 1):
         parts.append(
             f"""ca{t} AS (
   SELECT id, v, cid FROM (
     SELECT x.id, x.v, c.cid,
-           row_number() OVER (PARTITION BY x.id ORDER BY {dist_d('x.v', 'c.c', dim)}, c.cid) AS rn
+           row_number() OVER (PARTITION BY x.id ORDER BY {dist_d('x.v', 'c.c', DIM)}, c.cid) AS rn
     FROM train x CROSS JOIN co{t - 1} c
   ) WHERE rn = 1
 ), co{t}_new AS (
@@ -778,21 +628,21 @@ def ivf_pq_topk_oracle(
         f"""buckets AS (
   SELECT id, cid AS bucket FROM (
     SELECT x.id, c.cid,
-           row_number() OVER (PARTITION BY x.id ORDER BY {dist_d('x.v', 'c.c', dim)}, c.cid) AS rn
-    FROM base x CROSS JOIN co{coarse_iters} c
+           row_number() OVER (PARTITION BY x.id ORDER BY {dist_d('x.v', 'c.c', DIM)}, c.cid) AS rn
+    FROM base x CROSS JOIN co{KMEANS_ITERS} c
   ) WHERE rn = 1
 )"""
     )
-    for j in range(m):
+    for j in range(PQ_M):
         parts.append(
             f"""t{j} AS (SELECT id, {sub('v', j)} AS s FROM train),
 b{j}_0 AS (
   SELECT row_number() OVER (ORDER BY id) - 1 AS cid,
          [CAST(y AS DOUBLE) for y in s] AS c
-  FROM (SELECT id, s FROM t{j} ORDER BY id LIMIT {k_cent})
+  FROM (SELECT id, s FROM t{j} ORDER BY id LIMIT {PQ_K})
 )"""
         )
-        for t in range(1, pq_iters + 1):
+        for t in range(1, PQ_ITERS + 1):
             parts.append(
                 f"""a{j}_{t} AS (
   SELECT id, s, cid FROM (
@@ -817,27 +667,27 @@ b{j}_0 AS (
   SELECT id, cid AS c{j} FROM (
     SELECT x.id, c.cid,
            row_number() OVER (PARTITION BY x.id ORDER BY {dist_d(sub('x.v', j), 'c.c', d)}, c.cid) AS rn
-    FROM base x CROSS JOIN b{j}_{pq_iters} c
+    FROM base x CROSS JOIN b{j}_{PQ_ITERS} c
   ) WHERE rn = 1
 )"""
         )
-    enc_joins = " ".join(f"JOIN enc{j} USING (id)" for j in range(1, m))
-    score_terms = " + ".join(f"({dist_d(sub('q.v', j), f'k{j}.c', d)})" for j in range(m))
+    enc_joins = " ".join(f"JOIN enc{j} USING (id)" for j in range(1, PQ_M))
+    score_terms = " + ".join(f"({dist_d(sub('q.v', j), f'k{j}.c', d)})" for j in range(PQ_M))
     book_joins = " ".join(
-        f"JOIN b{j}_{pq_iters} k{j} ON k{j}.cid = e.c{j}" for j in range(m)
+        f"JOIN b{j}_{PQ_ITERS} k{j} ON k{j}.cid = e.c{j}" for j in range(PQ_M)
     )
     parts.append(
         f"""enc AS (
-  SELECT enc0.id, b.bucket, {", ".join(f"c{j}" for j in range(m))}
+  SELECT enc0.id, b.bucket, {", ".join(f"c{j}" for j in range(PQ_M))}
   FROM enc0 {enc_joins} JOIN buckets b USING (id)
 ), queries AS (
-  SELECT id AS qid, v FROM base WHERE id % {query_mod} = 0
+  SELECT id AS qid, v FROM base WHERE id % {IVF_PQ_TOPK_QUERY_MOD} = 0
 ), probes AS (
   SELECT qid, v, cid AS bucket FROM (
     SELECT q.qid, q.v, c.cid,
-           row_number() OVER (PARTITION BY q.qid ORDER BY {dist_d('q.v', 'c.c', dim)}, c.cid) AS rn
-    FROM queries q CROSS JOIN co{coarse_iters} c
-  ) WHERE rn <= {nprobe}
+           row_number() OVER (PARTITION BY q.qid ORDER BY {dist_d('q.v', 'c.c', DIM)}, c.cid) AS rn
+    FROM queries q CROSS JOIN co{KMEANS_ITERS} c
+  ) WHERE rn <= {NPROBE}
 ), scored AS (
   SELECT q.qid AS query_id, e.id AS neighbor_id,
          {score_terms} AS approx_sqdist
@@ -849,19 +699,17 @@ SELECT query_id, neighbor_id, rank, approx_sqdist FROM (
   SELECT *, CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY approx_sqdist, neighbor_id) AS INT) AS rank
   FROM scored
-) WHERE rank <= {topk}"""
+) WHERE rank <= {IVF_PQ_TOPK_TOPK}"""
     )
     return ",\n".join(parts)
 
 
-def index_staleness_audit(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    new_bp: int = 2000,
-    topk: int = 5,
-    query_mod: int = 25,
-) -> DataFrame:
+INDEX_STALENESS_AUDIT_NEW_BP = 2000
+INDEX_STALENESS_AUDIT_TOPK = 5
+INDEX_STALENESS_AUDIT_QUERY_MOD = 25
+
+
+def index_staleness_audit(emb: DataFrame) -> DataFrame:
     """ANN index-staleness audit for the continuous-ingest shape: a new
     embedding batch (md5(id) % 10000 < new_bp -- the incremental-minhash
     split convention) lands on a standing corpus whose IVF quantizer was
@@ -885,24 +733,32 @@ def index_staleness_audit(
     from ..functions.hashing import md5_long
     from .similarity import topk_bruteforce
 
-    base = _with_int_vec(emb, id_col, vec_col)
-    is_new = md5_long(F.col(id_col).cast("string")) % 10000 < new_bp
-    standing = _with_int_vec(emb.where(~is_new), id_col, vec_col)
+    base = _with_int_vec(emb, "vec_id", "embedding")
+    is_new = md5_long(F.col("vec_id").cast("string")) % 10000 < INDEX_STALENESS_AUDIT_NEW_BP
+    standing = _with_int_vec(emb.where(~is_new), "vec_id", "embedding")
     stale_rows = _collect_train(standing, TRAIN_N)
     fresh_rows = _collect_train(base, TRAIN_N)
-    flt = F.col(id_col) % query_mod == 0
+    flt = F.col("vec_id") % INDEX_STALENESS_AUDIT_QUERY_MOD == 0
     bf = (
-        topk_bruteforce(emb, k=topk, query_filter=flt)
+        topk_bruteforce(emb, k=INDEX_STALENESS_AUDIT_TOPK, query_filter=flt)
         .select("query_id", "neighbor_id")
         .localCheckpoint()
     )
     approx = (
-        ivf_topk(emb, id_col, vec_col, topk=topk, query_mod=query_mod,
-                 train_rows=stale_rows)
+        ivf_topk(
+            emb,
+            topk=INDEX_STALENESS_AUDIT_TOPK,
+            query_mod=INDEX_STALENESS_AUDIT_QUERY_MOD,
+            train_rows=stale_rows,
+        )
         .select(F.lit("stale").alias("method"), "query_id", "neighbor_id")
         .unionByName(
-            ivf_topk(emb, id_col, vec_col, topk=topk, query_mod=query_mod,
-                     train_rows=fresh_rows)
+            ivf_topk(
+                emb,
+                topk=INDEX_STALENESS_AUDIT_TOPK,
+                query_mod=INDEX_STALENESS_AUDIT_QUERY_MOD,
+                train_rows=fresh_rows,
+            )
             .select(F.lit("fresh").alias("method"), "query_id", "neighbor_id")
         )
     )
@@ -915,15 +771,7 @@ def index_staleness_audit(
     return hits.crossJoin(F.broadcast(total))
 
 
-def index_staleness_audit_sql(
-    bf_oracle: str,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    new_bp: int = 2000,
-    topk: int = 5,
-    query_mod: int = 25,
-) -> str:
+def index_staleness_audit_sql(bf_oracle: str) -> str:
     """DuckDB twin of :func:`index_staleness_audit`, composed from the
     ivf oracle twice (once with the training sample restricted to the
     standing corpus via ``train_where``) plus the caller-supplied
@@ -932,14 +780,16 @@ def index_staleness_audit_sql(
     from ..functions.hashing import md5_long_sql
 
     standing = (
-        f"({md5_long_sql('CAST(id AS VARCHAR)')}) % 10000 >= {new_bp}"
+        f"({md5_long_sql('CAST(id AS VARCHAR)')}) % 10000 >= {INDEX_STALENESS_AUDIT_NEW_BP}"
     )
     stale = ivf_topk_oracle(
-        table, id_col, vec_col, topk=topk, query_mod=query_mod,
+        topk=INDEX_STALENESS_AUDIT_TOPK,
+        query_mod=INDEX_STALENESS_AUDIT_QUERY_MOD,
         train_where=standing,
     )
     fresh = ivf_topk_oracle(
-        table, id_col, vec_col, topk=topk, query_mod=query_mod
+        topk=INDEX_STALENESS_AUDIT_TOPK,
+        query_mod=INDEX_STALENESS_AUDIT_QUERY_MOD,
     )
     return f"""
 WITH bf AS ({bf_oracle}),

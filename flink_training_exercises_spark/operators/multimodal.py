@@ -27,10 +27,7 @@ def decoded_schema(id_col: str = "doc_id") -> str:
     return f"{id_col} long, byte_len int, format string, width int, height int, n_frames int"
 
 
-DECODED_SCHEMA = decoded_schema()
-
-
-def attach_binary_payload(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """Testdata adapter: treat the utf8 text bytes as an opaque payload
     column (binary) with source metadata -- the shape a real multimodal
     table has (payload BINARY, media_type STRING, meta...). widen_scan so
@@ -40,24 +37,9 @@ def attach_binary_payload(docs: DataFrame, id_col: str = "doc_id", text_col: str
 
     docs = widen_scan(docs)
     return docs.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.col("doc_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
-    )
-
-
-def payload_metadata(docs_bin: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Columnar metadata over binary payloads -- no Python involved:
-    byte length, first-byte tag, and a deterministic pseudo-format."""
-    b = F.col("payload")
-    first = F.expr("CAST(conv(hex(substring(payload, 1, 1)), 16, 10) AS INT)")
-    return docs_bin.select(
-        F.col(id_col),
-        F.octet_length(b).alias("byte_len"),
-        first.alias("first_byte"),
-        F.when(F.octet_length(b) % 2 == 0, F.lit("fake/even"))
-        .otherwise(F.lit("fake/odd"))
-        .alias("format"),
     )
 
 
@@ -116,9 +98,7 @@ def frame_sample(decoded: DataFrame, every_n: int = 2) -> DataFrame:
 FEATURE_BUCKETS = 16
 
 
-def extract_features(
-    docs_bin: DataFrame, id_col: str = "doc_id", buckets: int = FEATURE_BUCKETS
-) -> DataFrame:
+def extract_features(docs_bin: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Byte-histogram feature extraction over binary payloads -- unlike the
     decode step this is REAL (no codec needed): numpy over Arrow record
     batches, the exact plumbing a CLIP/whisper embedding UDF uses (swap the
@@ -126,7 +106,7 @@ def extract_features(
     (doc_id, bucket, cnt), only non-zero buckets."""
     import numpy as np
 
-    div = 256 // buckets
+    div = 256 // FEATURE_BUCKETS
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -135,7 +115,7 @@ def extract_features(
             cnts: list = []
             for i, p in zip(pdf[id_col], pdf["payload"]):
                 arr = np.frombuffer(bytes(p), dtype=np.uint8) // div
-                hist = np.bincount(arr, minlength=buckets)
+                hist = np.bincount(arr, minlength=FEATURE_BUCKETS)
                 nz = np.nonzero(hist)[0]
                 ids.extend([i] * len(nz))
                 bks.extend(int(b) for b in nz)

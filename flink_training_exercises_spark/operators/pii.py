@@ -71,14 +71,12 @@ FROM {table_expr}
 """
 
 
-def kanonymity_profile(
-    docs: DataFrame,
-    qi_cols: tuple = ("lang", "source"),
-    length_col: str = "n_chars",
-    length_bucket: int = 100,
-    sensitive_col: str = "text",
-    k_risk: int = 5,
-) -> DataFrame:
+KANONYMITY_PROFILE_QI_COLS = ("lang", "source")
+KANONYMITY_PROFILE_LENGTH_BUCKET = 100
+KANONYMITY_PROFILE_K_RISK = 5
+
+
+def kanonymity_profile(docs: DataFrame, k_risk: int = KANONYMITY_PROFILE_K_RISK) -> DataFrame:
     """k-anonymity / l-diversity audit over quasi-identifier classes --
     the re-identification-risk profile a privacy review runs before a
     corpus ships (Sweeney's k-anonymity; Machanavajjhala's l-diversity).
@@ -98,19 +96,19 @@ def kanonymity_profile(
     part and Spark plans it as the standard two-phase expand. Output
     cardinality is vocabulary-bounded (|lang| x |source| x length
     buckets), never data-sized."""
-    bucket = F.floor(F.col(length_col) / F.lit(length_bucket)).cast("bigint")
+    bucket = F.floor(F.col("n_chars") / F.lit(KANONYMITY_PROFILE_LENGTH_BUCKET)).cast("bigint")
     # distinct over the md5 of the sensitive value, not the value: moves
     # 16-byte hashes through the count-distinct expand instead of full
     # document texts (deterministic + collision-negligible on both
     # engines, the repo's standard trick)
     return (
-        docs.groupBy(*qi_cols, bucket.alias("len_bucket"))
+        docs.groupBy(*KANONYMITY_PROFILE_QI_COLS, bucket.alias("len_bucket"))
         .agg(
             F.count(F.lit(1)).alias("class_size"),
-            F.countDistinct(F.md5(F.col(sensitive_col))).alias("l_diversity"),
+            F.countDistinct(F.md5(F.col("text"))).alias("l_diversity"),
         )
         .select(
-            *qi_cols,
+            *KANONYMITY_PROFILE_QI_COLS,
             "len_bucket",
             "class_size",
             "l_diversity",
@@ -122,36 +120,28 @@ def kanonymity_profile(
     )
 
 
-def kanonymity_profile_sql(
-    table: str = "documents",
-    qi_cols: tuple = ("lang", "source"),
-    length_col: str = "n_chars",
-    length_bucket: int = 100,
-    sensitive_col: str = "text",
-    k_risk: int = 5,
-) -> str:
+def kanonymity_profile_sql() -> str:
     """DuckDB twin of :func:`kanonymity_profile` (`//` = integer division
     where Spark uses FLOOR of the exact double quotient -- equal on
     nonnegative lengths)."""
-    qi = ", ".join(qi_cols)
+    qi = ", ".join(KANONYMITY_PROFILE_QI_COLS)
     return f"""
 SELECT {qi},
-       CAST({length_col} // {length_bucket} AS BIGINT) AS len_bucket,
+       CAST(n_chars // {KANONYMITY_PROFILE_LENGTH_BUCKET} AS BIGINT) AS len_bucket,
        CAST(count(*) AS BIGINT) AS class_size,
-       CAST(count(DISTINCT md5({sensitive_col})) AS BIGINT) AS l_diversity,
-       CAST(CASE WHEN count(*) < {k_risk} THEN 1 ELSE 0 END AS BIGINT) AS at_risk
-FROM {table}
-GROUP BY {qi}, CAST({length_col} // {length_bucket} AS BIGINT)
+       CAST(count(DISTINCT md5(text)) AS BIGINT) AS l_diversity,
+       CAST(CASE WHEN count(*) < {KANONYMITY_PROFILE_K_RISK} THEN 1 ELSE 0 END AS BIGINT) AS at_risk
+FROM documents
+GROUP BY {qi}, CAST(n_chars // {KANONYMITY_PROFILE_LENGTH_BUCKET} AS BIGINT)
 """
 
-def t_closeness_audit(
-    docs: DataFrame,
-    qi_cols: tuple = ("lang", "source"),
-    length_col: str = "n_chars",
-    length_bucket: int = 100,
-    t_num: int = 3,
-    t_den: int = 20,
-) -> DataFrame:
+T_CLOSENESS_AUDIT_QI_COLS = ("lang", "source")
+T_CLOSENESS_AUDIT_LENGTH_BUCKET = 100
+T_CLOSENESS_AUDIT_T_NUM = 3
+T_CLOSENESS_AUDIT_T_DEN = 20
+
+
+def t_closeness_audit(docs: DataFrame) -> DataFrame:
     """t-closeness audit (Li, Li & Venkatasubramanian) -- the third leg of
     the privacy-audit family after k-anonymity and l-diversity: per
     quasi-identifier class, the Earth Mover's Distance between the
@@ -180,14 +170,14 @@ def t_closeness_audit(
     Window.partitionBy(class), parallel across classes."""
     from pyspark.sql import Window
 
-    b = F.floor(F.col(length_col) / F.lit(length_bucket)).cast("bigint")
-    base = docs.select(*qi_cols, b.alias("bin"))
+    b = F.floor(F.col("n_chars") / F.lit(T_CLOSENESS_AUDIT_LENGTH_BUCKET)).cast("bigint")
+    base = docs.select(*T_CLOSENESS_AUDIT_QI_COLS, b.alias("bin"))
     # (class, bin) counts feed THREE branches (global CDF, class sizes,
     # the grid join) -- vocabulary-bounded, so localCheckpoint once
     # instead of re-evaluating the corpus scan per consumer (CLAUDE.md
     # multi-consumer rule; collocation/histogram/bm25 precedent)
     cls_bin = (
-        base.groupBy(*qi_cols, "bin")
+        base.groupBy(*T_CLOSENESS_AUDIT_QI_COLS, "bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .localCheckpoint()
     )
@@ -198,22 +188,22 @@ def t_closeness_audit(
     totals = glob.agg(
         F.sum("g").alias("n_total"), F.count(F.lit(1)).alias("m_bins")
     )
-    classes = cls_bin.groupBy(*qi_cols).agg(F.sum("c").alias("k"))
+    classes = cls_bin.groupBy(*T_CLOSENESS_AUDIT_QI_COLS).agg(F.sum("c").alias("k"))
     grid = classes.crossJoin(F.broadcast(gcum.select("bin"))).join(
-        cls_bin, [*qi_cols, "bin"], "left"
+        cls_bin, [*T_CLOSENESS_AUDIT_QI_COLS, "bin"], "left"
     )
-    cw = Window.partitionBy(*qi_cols).orderBy("bin").rowsBetween(
+    cw = Window.partitionBy(*T_CLOSENESS_AUDIT_QI_COLS).orderBy("bin").rowsBetween(
         Window.unboundedPreceding, 0
     )
     cdf = grid.select(
-        *qi_cols,
+        *T_CLOSENESS_AUDIT_QI_COLS,
         "k",
         "bin",
         F.sum(F.coalesce(F.col("c"), F.lit(0))).over(cw).alias("c_cum"),
     ).join(F.broadcast(gcum), "bin")
     return (
         cdf.crossJoin(F.broadcast(totals))
-        .groupBy(*qi_cols)
+        .groupBy(*T_CLOSENESS_AUDIT_QI_COLS)
         .agg(
             F.max("k").alias("class_size"),
             F.sum(
@@ -224,12 +214,14 @@ def t_closeness_audit(
             .alias("emd_den"),
         )
         .select(
-            *qi_cols,
+            *T_CLOSENESS_AUDIT_QI_COLS,
             "class_size",
             "emd_num",
             "emd_den",
             F.when(
-                F.col("emd_num") * t_den > t_num * F.col("emd_den"), F.lit(1)
+                F.col("emd_num") * T_CLOSENESS_AUDIT_T_DEN
+                > T_CLOSENESS_AUDIT_T_NUM * F.col("emd_den"),
+                F.lit(1),
             )
             .otherwise(F.lit(0))
             .cast("bigint")
@@ -238,23 +230,16 @@ def t_closeness_audit(
     )
 
 
-def t_closeness_audit_sql(
-    table: str = "documents",
-    qi_cols: tuple = ("lang", "source"),
-    length_col: str = "n_chars",
-    length_bucket: int = 100,
-    t_num: int = 3,
-    t_den: int = 20,
-) -> str:
+def t_closeness_audit_sql() -> str:
     """DuckDB twin of :func:`t_closeness_audit`: the same zero-filled
     class x bin grid, cumulative counts, and integer EMD rational
     (`//` = integer division on the nonnegative lengths)."""
-    qi = ", ".join(qi_cols)
-    qi_c = ", ".join(f"c.{col}" for col in qi_cols)
+    qi = ", ".join(T_CLOSENESS_AUDIT_QI_COLS)
+    qi_c = ", ".join(f"c.{col}" for col in T_CLOSENESS_AUDIT_QI_COLS)
     return f"""
 WITH base AS (
-  SELECT {qi}, CAST({length_col} // {length_bucket} AS BIGINT) AS bin
-  FROM {table}
+  SELECT {qi}, CAST(n_chars // {T_CLOSENESS_AUDIT_LENGTH_BUCKET} AS BIGINT) AS bin
+  FROM documents
 ),
 cls_bin AS (
   SELECT {qi}, bin, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY {qi}, bin
@@ -286,8 +271,8 @@ SELECT {qi},
        CAST(max(k) AS BIGINT) AS class_size,
        CAST(sum(abs(t.n_total * c_cum - k * g.g_cum)) AS BIGINT) AS emd_num,
        CAST(max(k) * max(t.n_total) * (max(t.m_bins) - 1) AS BIGINT) AS emd_den,
-       CAST(CASE WHEN sum(abs(t.n_total * c_cum - k * g.g_cum)) * {t_den}
-                      > {t_num} * (max(k) * max(t.n_total) * (max(t.m_bins) - 1))
+       CAST(CASE WHEN sum(abs(t.n_total * c_cum - k * g.g_cum)) * {T_CLOSENESS_AUDIT_T_DEN}
+                      > {T_CLOSENESS_AUDIT_T_NUM} * (max(k) * max(t.n_total) * (max(t.m_bins) - 1))
                  THEN 1 ELSE 0 END AS BIGINT) AS t_risk
 FROM cdf JOIN gcum g USING (bin) CROSS JOIN totals t
 GROUP BY {qi}

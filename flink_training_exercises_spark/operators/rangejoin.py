@@ -78,14 +78,14 @@ def downtime_intervals(events: DataFrame) -> DataFrame:
     )
 
 
-def events_in_downtime(events: DataFrame, bucket_width_ms: int = 3600000) -> DataFrame:
+def events_in_downtime(events: DataFrame) -> DataFrame:
     """Query: which events fell inside a downtime window (range join on
     hour buckets). Output (event_id, interval_id, offset_ms)."""
     from ..functions.time import epoch_ms
 
     pts = events.select("event_id", epoch_ms("ts").alias("ev_ms"))
     ivs = downtime_intervals(events)
-    joined = range_join_bucketed(pts, ivs, "ev_ms", "start_ms", "end_ms", bucket_width_ms)
+    joined = range_join_bucketed(pts, ivs, "ev_ms", "start_ms", "end_ms", 3600000)
     return joined.select(
         "event_id", "interval_id", (F.col("ev_ms") - F.col("start_ms")).alias("offset_ms")
     )

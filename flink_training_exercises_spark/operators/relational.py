@@ -30,9 +30,7 @@ def mail_count(mails: DataFrame) -> DataFrame:
     )
 
 
-def member_of_the_month(
-    mails: DataFrame, bots=BOT_ADDRESSES, strategy: str = "window"
-) -> DataFrame:
+def member_of_the_month(mails: DataFrame, strategy: str = "window") -> DataFrame:
     """A5/A6/J3/P3 -- per month, the sender(s) with the most mails, bots
     excluded; ties produce multiple rows (MemberOTMonth.java:48-81).
 
@@ -47,7 +45,7 @@ def member_of_the_month(
             month_key("time").alias("month"),
             email_address("sender").alias("sender"),
         )
-        .where(~F.col("sender").isin(*bots))
+        .where(~F.col("sender").isin(*BOT_ADDRESSES))
         .groupBy("month", "sender")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -65,7 +63,7 @@ def member_of_the_month(
     ).select(F.col("c.month").alias("month"), F.col("c.sender").alias("sender"))
 
 
-def reply_graph(mails: DataFrame, bots=BOT_ADDRESSES) -> DataFrame:
+def reply_graph(mails: DataFrame) -> DataFrame:
     """J2/A2/P3/P7 -- reply connections: self-join replies to their original
     mails on reply_to == message_id, count per (replier, original sender)
     (ReplyGraph.java:50-71).
@@ -77,7 +75,7 @@ def reply_graph(mails: DataFrame, bots=BOT_ADDRESSES) -> DataFrame:
         F.col("message_id"),
         email_address("sender").alias("sender"),
         F.col("reply_to"),
-    ).where(~email_address("sender").isin(*bots))
+    ).where(~email_address("sender").isin(*BOT_ADDRESSES))
     replies = addressed.alias("r")
     originals = addressed.alias("o")
     return (
@@ -88,7 +86,7 @@ def reply_graph(mails: DataFrame, bots=BOT_ADDRESSES) -> DataFrame:
     )
 
 
-def tf_idf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def tf_idf(docs: DataFrame) -> DataFrame:
     """P9/P10/A3/A4/J1/F13 -- the reference's (nonstandard, no-log) TF-IDF:
     tfidf = tf * (N / df) (MailTFIDF.java:63-96,214-233).
 
@@ -100,12 +98,12 @@ def tf_idf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     The word->df join is a broadcast join at any realistic vocabulary size.
     """
     words = docs.select(
-        F.col(id_col),
-        F.explode(tokenize_words(text_col)).alias("word"),
+        F.col("doc_id"),
+        F.explode(tokenize_words("text")).alias("word"),
     )
-    tf = words.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
+    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     df_ = (
-        words.select(id_col, "word")
+        words.select("doc_id", "word")
         .distinct()
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -115,18 +113,16 @@ def tf_idf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
         tf.join(F.broadcast(df_), "word")
         .crossJoin(F.broadcast(n))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("word"),
             (F.col("tf") * (F.col("n_docs").cast("double") / F.col("df"))).alias("tfidf"),
         )
     )
 
-def props_json_profile(
-    events: DataFrame,
-    json_col: str = "props",
-    type_col: str = "event_type",
-    path: str = "$.k",
-) -> DataFrame:
+PROPS_JSON_PROFILE_PATH = "$.k"
+
+
+def props_json_profile(events: DataFrame) -> DataFrame:
     """Semi-structured column profiling: extract an integer field from a
     JSON string column (the schema-on-read shape every event pipeline
     has -- a `props` bag next to the typed columns) and profile it per
@@ -170,10 +166,10 @@ def props_json_profile(
     projection, one hash groupBy with map-side partials (the
     count-distinct expands to the standard two-level aggregate);
     output is vocabulary-bounded (event types)."""
-    vs = F.expr(f"get_json_object({json_col}, '{path}')")
+    vs = F.expr(f"get_json_object(props, '{PROPS_JSON_PROFILE_PATH}')")
     v = F.when(vs.rlike(r"\A[+-]?[0-9]+\z"), vs.try_cast("bigint"))
     return (
-        events.select(F.col(type_col).alias("event_type"), v.alias("v"))
+        events.select(F.col("event_type").alias("event_type"), v.alias("v"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -186,12 +182,7 @@ def props_json_profile(
     )
 
 
-def props_json_profile_sql(
-    table: str = "events",
-    json_col: str = "props",
-    type_col: str = "event_type",
-    path: str = "$.k",
-) -> str:
+def props_json_profile_sql() -> str:
     """DuckDB twin of :func:`props_json_profile`: json_valid-guarded
     json_extract_string (Spark's get_json_object NULLs malformed rows;
     DuckDB would error without the guard), then the SAME explicit
@@ -204,11 +195,11 @@ def props_json_profile_sql(
     Spark's try_cast instead of erroring."""
     return f"""
 WITH raw AS (
-  SELECT {type_col} AS event_type,
-         CASE WHEN json_valid({json_col})
-              THEN json_extract_string({json_col}, '{path}')
+  SELECT event_type AS event_type,
+         CASE WHEN json_valid(props)
+              THEN json_extract_string(props, '{PROPS_JSON_PROFILE_PATH}')
          END AS vs
-  FROM {table}
+  FROM events
 ),
 ex AS (
   SELECT event_type,

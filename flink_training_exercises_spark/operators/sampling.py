@@ -32,55 +32,39 @@ SAMPLE_MOD = 10000  # rates are expressed in basis points
 
 
 def stratified_sample(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    rates_bp: dict[str, int] | None = None,
-    default_bp: int = 1000,
+    df: DataFrame, rates_bp: dict[str, int] | None = None, default_bp: int = 1000
 ) -> DataFrame:
     """Keep a row iff md5(id) % 10000 < its stratum's basis-point rate.
     Deterministic, engine-independent, scan-only (no shuffle, no RNG)."""
-    bucket = md5_long(F.col(id_col).cast("string")) % SAMPLE_MOD
+    bucket = md5_long(F.col("doc_id").cast("string")) % SAMPLE_MOD
     rate = F.lit(default_bp)
     for stratum, bp in sorted((rates_bp or {}).items()):
-        rate = F.when(F.col(stratum_col) == stratum, F.lit(bp)).otherwise(rate)
+        rate = F.when(F.col("source") == stratum, F.lit(bp)).otherwise(rate)
     return df.where(bucket < rate)
 
 
-def stratified_sample_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    rates_bp: dict[str, int] | None = None,
-    default_bp: int = 1000,
-) -> str:
+def stratified_sample_sql(rates_bp: dict[str, int] | None = None, default_bp: int = 1000) -> str:
     rate = str(default_bp)
     for stratum, bp in sorted((rates_bp or {}).items(), reverse=True):
-        rate = f"CASE WHEN {stratum_col} = '{stratum}' THEN {bp} ELSE {rate} END"
-    bucket = md5_long_sql(f"CAST({id_col} AS VARCHAR)")
-    return f"SELECT * FROM {table} WHERE {bucket} % {SAMPLE_MOD} < {rate}"
+        rate = f"CASE WHEN source = '{stratum}' THEN {bp} ELSE {rate} END"
+    bucket = md5_long_sql("CAST(doc_id AS VARCHAR)")
+    return f"SELECT * FROM documents WHERE {bucket} % {SAMPLE_MOD} < {rate}"
 
 
-def pack_sequences(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str = "source",
-    token_budget: int = 4096,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, token_budget: int = 4096) -> DataFrame:
     """Greedy sequence packing: per shard, in id order, bin i holds the docs
     whose PRECEDING cumulative token count is in [i*budget, (i+1)*budget).
     Output one row per bin: (shard, bin_id, n_docs, total_tokens,
     first_doc_id, last_doc_id)."""
-    ws = words(text_col)
+    ws = words("text")
     run = (
         Window.partitionBy("shard")
         .orderBy("id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     base = docs.select(
-        F.col(shard_col).alias("shard"),
-        F.col(id_col).alias("id"),
+        F.col("source").alias("shard"),
+        F.col("doc_id").alias("id"),
         F.size(ws).cast("bigint").alias("n_tokens"),
     )
     binned = base.withColumn(
@@ -101,23 +85,17 @@ def pack_sequences(
     )
 
 
-def pack_sequences_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str = "source",
-    token_budget: int = 4096,
-) -> str:
+def pack_sequences_sql() -> str:
     return f"""
 WITH base AS (
-  SELECT {shard_col} AS shard, {id_col} AS id,
-         CAST(len({words_sql(text_col)}) AS BIGINT) AS n_tokens
-  FROM {table}
+  SELECT source AS shard, doc_id AS id,
+         CAST(len({words_sql('text')}) AS BIGINT) AS n_tokens
+  FROM documents
 ),
 binned AS (
   SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY id
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              // {token_budget} AS BIGINT) AS bin_id
+              // 4096 AS BIGINT) AS bin_id
   FROM base
 )
 SELECT shard, bin_id, count(*) AS n_docs,
@@ -133,11 +111,7 @@ FROM binned GROUP BY 1, 2
 
 
 def mixture_expand(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    weights_ce: dict[str, int] | None = None,
-    default_ce: int = 100,
+    docs: DataFrame, weights_ce: dict[str, int] | None = None, default_ce: int = 100
 ) -> DataFrame:
     """Source-weighted epoch mixing with fractional repetition: a doc whose
     stratum has weight w centi-epochs (100 = 1.0) is emitted floor(w/100)
@@ -150,12 +124,12 @@ def mixture_expand(
     """
     w = F.lit(default_ce)
     for stratum, ce in sorted((weights_ce or {}).items()):
-        w = F.when(F.col(stratum_col) == stratum, F.lit(ce)).otherwise(w)
-    frac_bucket = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":mix"))) % 100
+        w = F.when(F.col("source") == stratum, F.lit(ce)).otherwise(w)
+    frac_bucket = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":mix"))) % 100
     return (
         docs.select(
-            F.col(id_col).alias("id"),
-            F.col(stratum_col).alias("stratum"),
+            F.col("doc_id").alias("id"),
+            F.col("source").alias("stratum"),
             (w.cast("bigint")).alias("w_ce"),
             frac_bucket.alias("fb"),
         )
@@ -171,24 +145,18 @@ def mixture_expand(
     )
 
 
-def mixture_expand_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-    weights_ce: dict[str, int] | None = None,
-    default_ce: int = 100,
-) -> str:
-    w = str(default_ce)
+def mixture_expand_sql(weights_ce: dict[str, int] | None = None) -> str:
+    w = str(100)
     for stratum, ce in sorted((weights_ce or {}).items(), reverse=True):
-        w = f"CASE WHEN {stratum_col} = '{stratum}' THEN {ce} ELSE {w} END"
-    mix_expr = f"CAST({id_col} AS VARCHAR) || ':mix'"
+        w = f"CASE WHEN source = '{stratum}' THEN {ce} ELSE {w} END"
+    mix_expr = "CAST(doc_id AS VARCHAR) || ':mix'"
     fb = f"{md5_long_sql(mix_expr)} % 100"
     return f"""
 WITH counted AS (
-  SELECT {id_col} AS id, {stratum_col} AS stratum,
+  SELECT doc_id AS id, source AS stratum,
          CAST(({w}) // 100
               + CASE WHEN {fb} < ({w}) % 100 THEN 1 ELSE 0 END AS BIGINT) AS n_copies
-  FROM {table}
+  FROM documents
 )
 SELECT id, stratum, CAST(unnest(generate_series(0, n_copies - 1)) AS BIGINT) AS copy_idx
 FROM counted WHERE n_copies > 0
@@ -196,10 +164,7 @@ FROM counted WHERE n_copies > 0
 
 
 def shuffle_shard(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-    extra_cols: list[str] | None = None,
+    docs: DataFrame, n_shards: int = 8, extra_cols: list[str] | None = None
 ) -> DataFrame:
     """Deterministic global training shuffle + shard layout: shard =
     md5(id) % n_shards, position within shard = rank by an INDEPENDENT
@@ -213,15 +178,15 @@ def shuffle_shard(
     layout so composed pipelines don't need a join-back (which would
     re-evaluate the input subtree on both sides)."""
     extra = list(extra_cols or [])
-    reserved = {"id", "shard_id", "sort_key", "pos", id_col}
+    reserved = {"id", "shard_id", "sort_key", "pos", "doc_id"}
     clash = reserved.intersection(extra)
     assert not clash, f"extra_cols collide with layout columns: {sorted(clash)}"
-    sid = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":shard"))) % n_shards
-    sort_key = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":ord")))
+    sid = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))) % n_shards
+    sort_key = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":ord")))
     win = Window.partitionBy("shard_id").orderBy("sort_key", "id")
     return (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             sid.alias("shard_id"),
             sort_key.alias("sort_key"),
             *[F.col(c) for c in extra],
@@ -231,16 +196,14 @@ def shuffle_shard(
     )
 
 
-def shuffle_shard_sql(
-    table: str = "documents", id_col: str = "doc_id", n_shards: int = 8
-) -> str:
-    shard_expr = f"CAST({id_col} AS VARCHAR) || ':shard'"
-    sid = f"{md5_long_sql(shard_expr)} % {n_shards}"
-    key = md5_long_sql(f"CAST({id_col} AS VARCHAR) || ':ord'")
+def shuffle_shard_sql() -> str:
+    shard_expr = "CAST(doc_id AS VARCHAR) || ':shard'"
+    sid = f"{md5_long_sql(shard_expr)} % 8"
+    key = md5_long_sql("CAST(doc_id AS VARCHAR) || ':ord'")
     return f"""
 WITH keyed AS (
-  SELECT {id_col} AS id, CAST({sid} AS BIGINT) AS shard_id, {key} AS sort_key
-  FROM {table}
+  SELECT doc_id AS id, CAST({sid} AS BIGINT) AS shard_id, {key} AS sort_key
+  FROM documents
 )
 SELECT shard_id,
        CAST(row_number() OVER (PARTITION BY shard_id ORDER BY sort_key, id) - 1
@@ -250,12 +213,7 @@ FROM keyed
 """
 
 
-def domain_cap(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    cap: int = 20,
-) -> DataFrame:
+def domain_cap(docs: DataFrame, cap: int = 20) -> DataFrame:
     """Per-domain contribution cap: keep at most ``cap`` documents per
     domain, chosen as the cap smallest md5(id) within the domain -- the
     standard corpus-curation guard against a single domain dominating the
@@ -267,8 +225,8 @@ def domain_cap(
     row_number sharing that partitioning. At 100 TB prefer the same plan --
     rank-by-hash is exactly how a cluster-side domain cap is done (no
     per-group state, no sampling RNG to coordinate)."""
-    w = Window.partitionBy(domain_col).orderBy(
-        md5_long(F.col(id_col).cast("string")), F.col(id_col)
+    w = Window.partitionBy("source").orderBy(
+        md5_long(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         docs.withColumn("__rn", F.row_number().over(w))
@@ -277,28 +235,18 @@ def domain_cap(
     )
 
 
-def domain_cap_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    cap: int = 20,
-) -> str:
-    bucket = md5_long_sql(f"CAST({id_col} AS VARCHAR)")
+def domain_cap_sql(cap: int = 20) -> str:
+    bucket = md5_long_sql("CAST(doc_id AS VARCHAR)")
     return f"""
 SELECT * EXCLUDE (__rn) FROM (
-  SELECT *, row_number() OVER (PARTITION BY {domain_col}
-            ORDER BY {bucket}, {id_col}) AS __rn
-  FROM {table}
+  SELECT *, row_number() OVER (PARTITION BY source
+            ORDER BY {bucket}, doc_id) AS __rn
+  FROM documents
 ) WHERE __rn <= {cap}
 """
 
 
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-) -> None:
+def write_training_shards(docs: DataFrame, path: str, n_shards: int = 8) -> None:
     """Materialize the shuffle_shard layout as physical training shards:
     parquet partitioned by shard_id, each shard file written in the
     deterministic pseudo-random order (repartition on the shard key +
@@ -306,8 +254,8 @@ def write_training_shards(
     global sort, one shuffle, each task streams one sorted shard to disk).
     A reader consuming shard directories in pos order replays the exact
     global shuffle any engine computes from the same ids."""
-    sid = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":shard"))) % n_shards
-    sort_key = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(":ord")))
+    sid = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":shard"))) % n_shards
+    sort_key = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":ord")))
     keyed = docs.withColumn("shard_id", sid).withColumn("__sort_key", sort_key)
     (
         # shard_id leads the sort: dynamic-partition writes require rows
@@ -316,7 +264,7 @@ def write_training_shards(
         # scramble the within-shard order. Leading with shard_id satisfies
         # the writer's requirement, so the (sort_key, id) order survives.
         keyed.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("shard_id", "__sort_key", id_col)
+        .sortWithinPartitions("shard_id", "__sort_key", "doc_id")
         .drop("__sort_key")
         .write.mode("overwrite")
         .partitionBy("shard_id")
@@ -324,12 +272,7 @@ def write_training_shards(
     )
 
 
-def length_batches(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_size: int = 32,
-) -> DataFrame:
+def length_batches(docs: DataFrame) -> DataFrame:
     """Length-sorted batching with padding accounting: order documents by
     whitespace-token count (id tie-break), cut into fixed-size batches, and
     report each batch's padding overhead (every sequence pads to the batch
@@ -355,8 +298,8 @@ def length_batches(
     bit-identical to the single-window form at any partition count.
 
     Output (batch_id, n_docs, max_tokens, total_tokens, padding_frac)."""
-    ws = words(text_col)
-    base = docs.select(F.col(id_col).alias("id"), F.size(ws).alias("n_tok"))
+    ws = words("text")
+    base = docs.select(F.col("doc_id").alias("id"), F.size(ws).alias("n_tok"))
     wk = Window.partitionBy("n_tok").orderBy("id")
     hist = base.groupBy("n_tok").agg(F.count(F.lit(1)).alias("c"))
     woff = Window.orderBy("n_tok").rowsBetween(Window.unboundedPreceding, -1)
@@ -370,7 +313,7 @@ def length_batches(
         .withColumn(
             "batch_id",
             F.floor(
-                (F.col("off") + F.row_number().over(wk) - 1) / batch_size
+                (F.col("off") + F.row_number().over(wk) - 1) / 32
             ).cast("bigint"),
         )
     )
@@ -393,20 +336,15 @@ def length_batches(
     )
 
 
-def length_batches_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_size: int = 32,
-) -> str:
-    w = words_sql(text_col)
+def length_batches_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, len({w}) AS n_tok FROM {table}
+  SELECT doc_id AS id, len({w}) AS n_tok FROM documents
 ),
 batched AS (
   SELECT id, n_tok,
-         (row_number() OVER (ORDER BY n_tok, id) - 1) // {batch_size} AS batch_id
+         (row_number() OVER (ORDER BY n_tok, id) - 1) // 32 AS batch_id
   FROM base
 ),
 agg AS (
@@ -423,13 +361,11 @@ FROM agg
 """
 
 
-def contrastive_negatives(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    k: int = 4,
-    n_probes: int = 16,
-) -> DataFrame:
+CONTRASTIVE_NEGATIVES_K = 4
+CONTRASTIVE_NEGATIVES_N_PROBES = 16
+
+
+def contrastive_negatives(emb: DataFrame) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for each
     anchor vector, up to ``k`` negatives with a DIFFERENT label, chosen by
     a bounded md5 probe sequence -- the (anchor, positive, negatives)
@@ -457,9 +393,9 @@ def contrastive_negatives(
     anchor-keyed windowed shuffle shared by the lag-based dedup and the
     rank cut (both windows partition on anchor_id alone); max_id is a
     1-row broadcast."""
-    nrow = F.broadcast(emb.agg((F.max(id_col) + 1).alias("_n")))
+    nrow = F.broadcast(emb.agg((F.max("vec_id") + 1).alias("_n")))
     anchors = emb.select(
-        F.col(id_col).alias("anchor_id"), F.col(label_col).alias("a_label")
+        F.col("vec_id").alias("anchor_id"), F.col("label").alias("a_label")
     ).crossJoin(nrow)
     probes = anchors.select(
         "anchor_id",
@@ -479,13 +415,13 @@ def contrastive_negatives(
                             % F.col("_n")
                         ).alias("cand"),
                     )
-                    for j in range(n_probes)
+                    for j in range(CONTRASTIVE_NEGATIVES_N_PROBES)
                 ]
             )
         ).alias("p"),
     ).select("anchor_id", "a_label", F.col("p.j").alias("j"), F.col("p.cand").alias("cand"))
     cands = emb.select(
-        F.col(id_col).alias("cand"), F.col(label_col).alias("neg_label")
+        F.col("vec_id").alias("cand"), F.col("label").alias("neg_label")
     )
     hits = (
         probes.join(cands, "cand")
@@ -513,37 +449,31 @@ def contrastive_negatives(
             F.col("cand").alias("neg_id"),
             "neg_label",
         )
-        .where(F.col("neg_rank") <= k)
+        .where(F.col("neg_rank") <= CONTRASTIVE_NEGATIVES_K)
     )
 
-def contrastive_negatives_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    k: int = 4,
-    n_probes: int = 16,
-) -> str:
+def contrastive_negatives_sql() -> str:
     """DuckDB twin of :func:`contrastive_negatives` (same probe targets,
     same skip rules, same earliest-probe collision dedup, same rank cut;
     constant-bound generate_series -- the column-arg form is the known
     DuckDB binder trap, CLAUDE.md)."""
     h = md5_long_sql(
-        f"CAST(anchor_id AS VARCHAR) || ':neg:' || CAST(gs.j AS VARCHAR)"
+        "CAST(anchor_id AS VARCHAR) || ':neg:' || CAST(gs.j AS VARCHAR)"
     )
     return f"""
-WITH n AS (SELECT max({id_col}) + 1 AS _n FROM {table}),
+WITH n AS (SELECT max(vec_id) + 1 AS _n FROM embeddings),
 anchors AS (
-  SELECT {id_col} AS anchor_id, {label_col} AS a_label, _n
-  FROM {table} CROSS JOIN n
+  SELECT vec_id AS anchor_id, label AS a_label, _n
+  FROM embeddings CROSS JOIN n
 ),
 probes AS (
   SELECT anchor_id, a_label, gs.j AS j, ({h}) % _n AS cand
-  FROM anchors CROSS JOIN generate_series(0, {n_probes - 1}) AS gs(j)
+  FROM anchors CROSS JOIN generate_series(0, {CONTRASTIVE_NEGATIVES_N_PROBES - 1}) AS gs(j)
 ),
 hits AS (
-  SELECT p.anchor_id, p.j, p.cand, e.{label_col} AS neg_label
-  FROM probes p JOIN {table} e ON p.cand = e.{id_col}
-  WHERE e.{label_col} != p.a_label AND p.cand != p.anchor_id
+  SELECT p.anchor_id, p.j, p.cand, e.label AS neg_label
+  FROM probes p JOIN embeddings e ON p.cand = e.vec_id
+  WHERE e.label != p.a_label AND p.cand != p.anchor_id
 ),
 deduped AS (
   SELECT anchor_id, j, cand, neg_label
@@ -559,16 +489,19 @@ FROM (
          CAST(row_number() OVER (PARTITION BY anchor_id ORDER BY j) AS INT)
            AS neg_rank
   FROM deduped
-) WHERE neg_rank <= {k}
+) WHERE neg_rank <= {CONTRASTIVE_NEGATIVES_K}
 """
+
+WEIGHTED_SAMPLE_WEIGHT_UNIT = 50
+WEIGHTED_SAMPLE_MAX_WEIGHT = 40
+WEIGHTED_SAMPLE_K = 25
+
 
 def weighted_sample(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    weight_unit: int = 50,
-    max_weight: int = 40,
-    k: int = 25,
+    weight_unit: int = WEIGHTED_SAMPLE_WEIGHT_UNIT,
+    max_weight: int = WEIGHTED_SAMPLE_MAX_WEIGHT,
+    k: int = WEIGHTED_SAMPLE_K,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement by the
     unit-ticket min-hash scheme: each document buys ``w`` lottery tickets
@@ -594,10 +527,10 @@ def weighted_sample(
     from pyspark.sql import Window as W
 
     w_expr = F.least(
-        F.lit(1) + F.floor(F.col(length_col).cast("bigint") / weight_unit).cast("bigint"),
+        F.lit(1) + F.floor(F.col("n_chars").cast("bigint") / weight_unit).cast("bigint"),
         F.lit(max_weight),
     )
-    base = docs.select(F.col(id_col).alias("id"), w_expr.alias("w"))
+    base = docs.select(F.col("doc_id").alias("id"), w_expr.alias("w"))
     tickets = base.select(
         "id", "w", F.explode(F.sequence(F.lit(1), F.col("w"))).alias("t")
     )
@@ -611,30 +544,23 @@ def weighted_sample(
     rk = W.orderBy(F.asc("priority"), F.asc("id"))
     return topk.select(
         F.row_number().over(rk).cast("bigint").alias("rank"),
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("w").alias("weight"),
         "priority",
     )
 
 
-def weighted_sample_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    weight_unit: int = 50,
-    max_weight: int = 40,
-    k: int = 25,
-) -> str:
+def weighted_sample_sql() -> str:
     """DuckDB twin of :func:`weighted_sample` (FLOOR on the weight
     quotient matches Spark's bigint cast of a true division; same md5
     ticket keys)."""
     key = md5_long_sql("CAST(id AS VARCHAR) || ':' || CAST(t AS VARCHAR)")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id,
-         least(1 + CAST(floor(CAST({length_col} AS BIGINT) / {weight_unit}) AS BIGINT),
-               {max_weight}) AS w
-  FROM {table}
+  SELECT doc_id AS id,
+         least(1 + CAST(floor(CAST(n_chars AS BIGINT) / {WEIGHTED_SAMPLE_WEIGHT_UNIT}) AS BIGINT),
+               {WEIGHTED_SAMPLE_MAX_WEIGHT}) AS w
+  FROM documents
 ),
 tickets AS (
   SELECT id, w, unnest([x for x in generate_series(1, w)]) AS t FROM base
@@ -644,18 +570,17 @@ prio AS (
   FROM tickets GROUP BY 1, 2
 )
 SELECT CAST(row_number() OVER (ORDER BY priority, id) AS BIGINT) AS rank,
-       id AS {id_col}, CAST(w AS BIGINT) AS weight, priority
+       id AS doc_id, CAST(w AS BIGINT) AS weight, priority
 FROM prio
 ORDER BY priority, id
-LIMIT {k}
+LIMIT {WEIGHTED_SAMPLE_K}
 """
 
-def quota_sample(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    strata_cols: tuple[str, ...] = ("lang", "source"),
-    k: int = 3,
-) -> DataFrame:
+QUOTA_SAMPLE_STRATA_COLS = ("lang", "source")
+QUOTA_SAMPLE_K = 3
+
+
+def quota_sample(docs: DataFrame, k: int = QUOTA_SAMPLE_K) -> DataFrame:
     """QUOTA-exact stratified sampling: exactly min(k, stratum size) rows
     per stratum, chosen as the k smallest md5 priorities -- the eval-set
     construction rule ("k examples per language x source cell") that the
@@ -674,30 +599,25 @@ def quota_sample(
     the k-row-per-stratum output is quota-bounded."""
     from pyspark.sql import Window
 
-    prio = md5_long(F.col(id_col).cast("string"))
-    w = Window.partitionBy(*strata_cols).orderBy(prio.asc(), F.col(id_col).asc())
+    prio = md5_long(F.col("doc_id").cast("string"))
+    w = Window.partitionBy(*QUOTA_SAMPLE_STRATA_COLS).orderBy(prio.asc(), F.col("doc_id").asc())
     return (
-        docs.select(*strata_cols, F.col(id_col))
+        docs.select(*QUOTA_SAMPLE_STRATA_COLS, F.col("doc_id"))
         .withColumn("sample_rank", F.row_number().over(w).cast("bigint"))
         .where(F.col("sample_rank") <= k)
     )
 
 
-def quota_sample_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    strata_cols: tuple[str, ...] = ("lang", "source"),
-    k: int = 3,
-) -> str:
+def quota_sample_sql() -> str:
     """DuckDB twin of :func:`quota_sample`: same md5 priority order and
     per-stratum row_number cut."""
-    strata = ", ".join(strata_cols)
-    prio = md5_long_sql(f"CAST({id_col} AS VARCHAR)")
+    strata = ", ".join(QUOTA_SAMPLE_STRATA_COLS)
+    prio = md5_long_sql("CAST(doc_id AS VARCHAR)")
     return f"""
-SELECT {strata}, {id_col}, sample_rank FROM (
-  SELECT {strata}, {id_col},
+SELECT {strata}, doc_id, sample_rank FROM (
+  SELECT {strata}, doc_id,
          CAST(row_number() OVER (PARTITION BY {strata}
-              ORDER BY {prio}, {id_col}) AS BIGINT) AS sample_rank
-  FROM {table}
-) WHERE sample_rank <= {k}
+              ORDER BY {prio}, doc_id) AS BIGINT) AS sample_rank
+  FROM documents
+) WHERE sample_rank <= {QUOTA_SAMPLE_K}
 """

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.time import epoch_ms, ntz_as_utc_instant
+from ..functions.time import WATERMARK, epoch_ms, ntz_as_utc_instant
 
 DEFAULT_GAP_MS = 30 * 60 * 1000
 
@@ -77,27 +77,20 @@ sid AS (
 )"""
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    gap_ms: int = DEFAULT_GAP_MS,
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
     """Per-user sessions: (user_id, session_id, session_start_ms,
     session_end_ms, n_events, total_value). One shuffle on user_id; the
     cumulative-sum session id needs no second shuffle (same partitioning)."""
     with_sid = _with_session_ids(
         events,
-        user_col,
-        time_col,
-        id_col,
+        "user_id",
+        "ts",
+        "event_id",
         gap_ms,
-        {"cents": F.round(F.col(value_col) * 100).cast("bigint")},
+        {"cents": F.round(F.col("value") * 100).cast("bigint")},
     )
     return (
-        with_sid.groupBy(user_col, "session_id")
+        with_sid.groupBy("user_id", "session_id")
         .agg(
             F.min("ev_ms").alias("session_start_ms"),
             F.max("ev_ms").alias("session_end_ms"),
@@ -105,7 +98,7 @@ def sessionize(
             F.sum("cents").alias("cents"),
         )
         .select(
-            user_col,
+            "user_id",
             "session_id",
             "session_start_ms",
             "session_end_ms",
@@ -115,50 +108,38 @@ def sessionize(
     )
 
 
-def sessionize_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    gap_ms: int = DEFAULT_GAP_MS,
-) -> str:
+def sessionize_sql() -> str:
     prefix = _session_sql_prefix(
-        table,
-        user_col,
-        time_col,
-        id_col,
-        gap_ms,
-        f"CAST(round({value_col} * 100) AS BIGINT) AS cents",
+        "events",
+        "user_id",
+        "ts",
+        "event_id",
+        DEFAULT_GAP_MS,
+        "CAST(round(value * 100) AS BIGINT) AS cents",
     )
     return f"""
 WITH {prefix}
-SELECT {user_col}, CAST(session_id AS BIGINT) AS session_id,
+SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        min(ev_ms) AS session_start_ms,
        max(ev_ms) AS session_end_ms, count(*) AS n_events,
        CAST(sum(cents) AS DOUBLE) / 100 AS total_value
-FROM sid GROUP BY {user_col}, session_id
+FROM sid GROUP BY user_id, session_id
 """
 # CAST(session_id AS BIGINT): DuckDB sum(INT) yields HUGEINT, which lands in
 # pandas as float64 and could hash differently from Spark's int64.
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "60 seconds",
-) -> DataFrame:
+def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Streaming twin via native session_window (merging gap sessions)."""
-    ts = ntz_as_utc_instant(time_col).alias("ts_i")
+    ts = ntz_as_utc_instant("ts").alias("ts_i")
+    gap = f"{DEFAULT_GAP_MS // 60000} minutes"
     return (
-        events.select(ts, F.col(user_col))
-        .withWatermark("ts_i", watermark)
-        .groupBy(F.session_window("ts_i", gap).alias("w"), user_col)
+        events.select(ts, F.col("user_id"))
+        .withWatermark("ts_i", WATERMARK)
+        .groupBy(F.session_window("ts_i", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            user_col,
+            "user_id",
             F.unix_millis("w.start").alias("session_start_ms"),
             F.unix_millis("w.end").alias("session_end_ms"),
             "n_events",
@@ -171,13 +152,7 @@ def streaming_sessionize(
 # ---------------------------------------------------------------------------
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition counts over each user's event stream:
     order every user's events by (ts, seq) -- a TOTAL order, so lag() is
     deterministic -- pair each event with its predecessor's type, and count
@@ -195,11 +170,11 @@ def event_transitions(
     The probability window runs over |types| rows -- trivial."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(ts_col, seq_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = events.select(
-        F.col(user_col).alias("uid"),
-        F.lag(type_col).over(w).alias("prev_type"),
-        F.col(type_col).alias("next_type"),
+        F.col("user_id").alias("uid"),
+        F.lag("event_type").over(w).alias("prev_type"),
+        F.col("event_type").alias("next_type"),
     ).where(F.col("prev_type").isNotNull())
     counts = pairs.groupBy("prev_type", "next_type").agg(
         F.count(F.lit(1)).alias("n_transitions"),
@@ -215,21 +190,15 @@ def event_transitions(
     )
 
 
-def event_transitions_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    seq_col: str = "event_id",
-) -> str:
+def event_transitions_sql() -> str:
     """DuckDB twin of :func:`event_transitions` (same total order, same
     BIGINT/BIGINT probability division)."""
-    return f"""
+    return """
 WITH seq AS (
-  SELECT {user_col} AS uid, {type_col} AS next_type,
-         lag({type_col}) OVER (PARTITION BY {user_col}
-                               ORDER BY {ts_col}, {seq_col}) AS prev_type
-  FROM {table}
+  SELECT user_id AS uid, event_type AS next_type,
+         lag(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id) AS prev_type
+  FROM events
 ),
 t AS (
   SELECT prev_type, next_type,
@@ -256,10 +225,6 @@ SESSION_PATH_TOPK = 20
 
 def session_path_topk(
     events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
     gap_ms: int = DEFAULT_GAP_MS,
     max_events: int = SESSION_PATH_MAX_EVENTS,
     k: int = SESSION_PATH_TOPK,
@@ -286,13 +251,13 @@ def session_path_topk(
     by path length, emitting <= k rows per length (the
     frequent_tokens_topk shape)."""
     sid = _with_session_ids(
-        events, user_col, time_col, id_col, gap_ms, {"etype": F.col(type_col)}
+        events, "user_id", "ts", "event_id", gap_ms, {"etype": F.col("event_type")}
     )
-    wn = Window.partitionBy(user_col, "session_id").orderBy("ev_ms", id_col)
+    wn = Window.partitionBy("user_id", "session_id").orderBy("ev_ms", "event_id")
     truncated = sid.withColumn("rn", F.row_number().over(wn)).where(
         F.col("rn") <= max_events
     )
-    paths = truncated.groupBy(user_col, "session_id").agg(
+    paths = truncated.groupBy("user_id", "session_id").agg(
         F.concat_ws(
             ">",
             F.transform(
@@ -315,34 +280,25 @@ def session_path_topk(
     )
 
 
-def session_path_topk_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    gap_ms: int = DEFAULT_GAP_MS,
-    max_events: int = SESSION_PATH_MAX_EVENTS,
-    k: int = SESSION_PATH_TOPK,
-) -> str:
+def session_path_topk_sql() -> str:
     """DuckDB twin of :func:`session_path_topk` (string_agg ORDER BY rn ==
     the sort_array(collect_list(struct)) form)."""
     prefix = _session_sql_prefix(
-        table, user_col, time_col, id_col, gap_ms, f"{type_col} AS etype"
+        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "event_type AS etype"
     )
     return f"""
 WITH {prefix},
 tr AS (
-  SELECT {user_col}, session_id, etype,
-         row_number() OVER (PARTITION BY {user_col}, session_id
-                            ORDER BY ev_ms, {id_col}) AS rn
+  SELECT user_id, session_id, etype,
+         row_number() OVER (PARTITION BY user_id, session_id
+                            ORDER BY ev_ms, event_id) AS rn
   FROM sid
 ),
 paths AS (
-  SELECT {user_col}, session_id,
+  SELECT user_id, session_id,
          string_agg(etype, '>' ORDER BY rn) AS path,
          CAST(count(*) AS INT) AS path_len
-  FROM tr WHERE rn <= {max_events} GROUP BY {user_col}, session_id
+  FROM tr WHERE rn <= {SESSION_PATH_MAX_EVENTS} GROUP BY user_id, session_id
 ),
 counts AS (
   SELECT path, path_len, CAST(count(*) AS BIGINT) AS n_sessions
@@ -353,17 +309,12 @@ SELECT path_len, rank, path, n_sessions FROM (
          CAST(row_number() OVER (PARTITION BY path_len
                                  ORDER BY n_sessions DESC, path) AS INT) AS rank
   FROM counts
-) WHERE rank <= {k}
+) WHERE rank <= {SESSION_PATH_TOPK}
 """
 
 
 def concurrency_profile(
-    events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    gap_ms: int = DEFAULT_GAP_MS,
-    bucket_ms: int = 3600000,
+    events: DataFrame, gap_ms: int = DEFAULT_GAP_MS, bucket_ms: int = 3600000
 ) -> DataFrame:
     """Interval sweep-line concurrency profile: how many milliseconds the
     system spent at each level of concurrently-open sessions. Sessions are
@@ -392,7 +343,7 @@ def concurrency_profile(
     back to the next nonempty bucket's first boundary from the same
     summary. Levels equal the global running sum exactly, at any
     bucket_ms."""
-    sess = sessionize(events, user_col, time_col, id_col, gap_ms=gap_ms)
+    sess = sessionize(events, gap_ms=gap_ms)
     iv = sess.select(
         F.col("session_start_ms").alias("s"),
         (F.col("session_end_ms") + gap_ms).alias("e"),
@@ -463,22 +414,16 @@ def concurrency_from_intervals(
     )
 
 
-def concurrency_profile_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    gap_ms: int = DEFAULT_GAP_MS,
-) -> str:
+def concurrency_profile_sql() -> str:
     """DuckDB twin of :func:`concurrency_profile`: the plain GLOBAL
     running sum over the same collapsed boundary deltas (the bucketed
     two-phase form is plan-level only -- levels and segments are equal by
     construction, which is exactly what the differential pins)."""
     prefix = _session_sql_prefix(
-        table, user_col, time_col, id_col, gap_ms, "1 AS one"
+        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "1 AS one"
     )
     sessions_sql = f"""WITH {prefix}
-  SELECT {user_col}, session_id, min(ev_ms) AS s, max(ev_ms) + {gap_ms} AS e
+  SELECT user_id, session_id, min(ev_ms) AS s, max(ev_ms) + {DEFAULT_GAP_MS} AS e
   FROM sid GROUP BY 1, 2"""
     return concurrency_sweep_sql(sessions_sql)
 
@@ -511,15 +456,13 @@ ATTR_PPM = 1_000_000
 ATTR_END_PPM = 400_000  # U-shape: 40% first touch, 40% last, 20% middle
 
 
+ATTRIBUTION_CREDIT_CONVERSION_TYPE = "purchase"
+ATTRIBUTION_CREDIT_TOUCH_TYPES = ("view", "click")
+ATTRIBUTION_CREDIT_WINDOW_MS = 6 * 3600 * 1000
+
+
 def attribution_credit(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    conversion_type: str = "purchase",
-    touch_types: tuple = ("view", "click"),
-    window_ms: int = 6 * 3600 * 1000,
+    events: DataFrame, window_ms: int = ATTRIBUTION_CREDIT_WINDOW_MS
 ) -> DataFrame:
     """Multi-touch attribution (U-shaped / position-based): every
     conversion distributes exactly 1,000,000 ppm of credit over the same
@@ -543,15 +486,15 @@ def attribution_credit(
     |touch_types|-row aggregate with map-side partials."""
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
-    conv = events.where(F.col(type_col) == conversion_type).select(
-        F.col(user_col).alias("u"), ms.alias("c_ms"), F.col(id_col).alias("c_id")
+    ms = _epoch_ms("ts")
+    conv = events.where(F.col("event_type") == ATTRIBUTION_CREDIT_CONVERSION_TYPE).select(
+        F.col("user_id").alias("u"), ms.alias("c_ms"), F.col("event_id").alias("c_id")
     )
-    touch = events.where(F.col(type_col).isin(*touch_types)).select(
-        F.col(user_col).alias("u"),
+    touch = events.where(F.col("event_type").isin(*ATTRIBUTION_CREDIT_TOUCH_TYPES)).select(
+        F.col("user_id").alias("u"),
         ms.alias("t_ms"),
-        F.col(id_col).alias("t_id"),
-        F.col(type_col).alias("t_type"),
+        F.col("event_id").alias("t_id"),
+        F.col("event_type").alias("t_type"),
     )
     j = conv.join(touch, "u").where(
         (F.col("t_ms") <= F.col("c_ms"))
@@ -582,36 +525,27 @@ def attribution_credit(
     )
 
 
-def attribution_credit_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    conversion_type: str = "purchase",
-    touch_types: tuple = ("view", "click"),
-    window_ms: int = 6 * 3600 * 1000,
-) -> str:
+def attribution_credit_sql() -> str:
     """DuckDB twin of :func:`attribution_credit` (`//` = integer
     division; same total order, same remainder-to-last rule)."""
     end, total, mid_pool = ATTR_END_PPM, ATTR_PPM, ATTR_PPM - 2 * ATTR_END_PPM
-    tt = ", ".join(f"'{t}'" for t in touch_types)
+    tt = ", ".join(f"'{t}'" for t in ATTRIBUTION_CREDIT_TOUCH_TYPES)
     return f"""
 WITH conv AS (
-  SELECT {user_col} AS u, epoch_ms({ts_col}) AS c_ms, {id_col} AS c_id
-  FROM {table} WHERE {type_col} = '{conversion_type}'
+  SELECT user_id AS u, epoch_ms(ts) AS c_ms, event_id AS c_id
+  FROM events WHERE event_type = '{ATTRIBUTION_CREDIT_CONVERSION_TYPE}'
 ),
 touch AS (
-  SELECT {user_col} AS u, epoch_ms({ts_col}) AS t_ms, {id_col} AS t_id,
-         {type_col} AS t_type
-  FROM {table} WHERE {type_col} IN ({tt})
+  SELECT user_id AS u, epoch_ms(ts) AS t_ms, event_id AS t_id,
+         event_type AS t_type
+  FROM events WHERE event_type IN ({tt})
 ),
 ranked AS (
   SELECT t_type,
          row_number() OVER (PARTITION BY c_id ORDER BY t_ms, t_id) AS rn,
          count(*) OVER (PARTITION BY c_id) AS n
   FROM conv JOIN touch USING (u)
-  WHERE t_ms <= c_ms AND t_ms > c_ms - {window_ms}
+  WHERE t_ms <= c_ms AND t_ms > c_ms - {ATTRIBUTION_CREDIT_WINDOW_MS}
 ),
 credited AS (
   SELECT t_type,
@@ -627,11 +561,7 @@ SELECT t_type AS event_type, CAST(count(*) AS BIGINT) AS n_touches,
 FROM credited GROUP BY 1
 """
 
-def user_behavior_gini(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def user_behavior_gini(events: DataFrame) -> DataFrame:
     """Per-user behavioral diversity as GINI IMPURITY over the user's
     event-type distribution: gini = 1 - sum_t p_t^2 -- 0 for a
     single-behavior user, approaching 1 - 1/k for a uniform k-type user.
@@ -653,7 +583,7 @@ def user_behavior_gini(
     sampling the offending user's events upstream, which changes the
     answer only for the key that overflowed."""
     ct = events.groupBy(
-        F.col(user_col).alias("user_id"), F.col(type_col).alias("t")
+        F.col("user_id").alias("user_id"), F.col("event_type").alias("t")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     per = ct.groupBy("user_id").agg(
         F.sum("c").alias("n"),
@@ -670,18 +600,14 @@ def user_behavior_gini(
     )
 
 
-def user_behavior_gini_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> str:
+def user_behavior_gini_sql() -> str:
     """DuckDB twin of :func:`user_behavior_gini`: same two-level fold and
     integer ppm."""
-    return f"""
+    return """
 WITH ct AS (
-  SELECT {user_col} AS user_id, {type_col} AS t,
+  SELECT user_id AS user_id, event_type AS t,
          CAST(count(*) AS BIGINT) AS c
-  FROM {table} GROUP BY 1, 2
+  FROM events GROUP BY 1, 2
 ),
 per AS (
   SELECT user_id, CAST(sum(c) AS BIGINT) AS n,
@@ -694,14 +620,7 @@ SELECT user_id, n AS n_events, n_types,
 FROM per
 """
 
-def session_cooccurrence_lift(
-    events: DataFrame,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    gap_ms: int = DEFAULT_GAP_MS,
-) -> DataFrame:
+def session_cooccurrence_lift(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
     """Market-basket co-occurrence over sessions -- the association-rule
     screen (baskets = gap sessions, items = event types): for every
     unordered type pair, in how many sessions both occur, and the LIFT
@@ -736,14 +655,14 @@ def session_cooccurrence_lift(
     per-type counts, both self-join sides), so the sessionization
     windows run exactly once per query."""
     sid = _with_session_ids(
-        events, user_col, time_col, id_col, gap_ms,
-        {"t": F.col(type_col)},
+        events, "user_id", "ts", "event_id", gap_ms,
+        {"t": F.col("event_type")},
     )
     basket = (
-        sid.select(user_col, "session_id", "t").distinct()
+        sid.select("user_id", "session_id", "t").distinct()
         .select(
             F.concat_ws(
-                ":", F.col(user_col).cast("string"), F.col("session_id").cast("string")
+                ":", F.col("user_id").cast("string"), F.col("session_id").cast("string")
             ).alias("b"),
             "t",
         )
@@ -789,24 +708,17 @@ def session_cooccurrence_lift(
     )
 
 
-def session_cooccurrence_lift_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    gap_ms: int = DEFAULT_GAP_MS,
-) -> str:
+def session_cooccurrence_lift_sql() -> str:
     """DuckDB twin of :func:`session_cooccurrence_lift`: the shared
     session-id CTE prefix, the same basket distinct, self-join, and
     integer lift."""
     prefix = _session_sql_prefix(
-        table, user_col, time_col, id_col, gap_ms, f"{type_col} AS t"
+        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "event_type AS t"
     )
     return f"""
 WITH {prefix},
 basket AS (
-  SELECT DISTINCT CAST({user_col} AS VARCHAR) || ':' ||
+  SELECT DISTINCT CAST(user_id AS VARCHAR) || ':' ||
          CAST(session_id AS VARCHAR) AS b, t
   FROM sid
 ),
@@ -833,13 +745,7 @@ from .timeseries import DAY_MS as RFM_DAY_MS  # noqa: E402
 RFM_N_Q = 4  # quartiles -- the classic 4x4x4 RFM grid
 
 
-def rfm_segments(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    n_q: int = RFM_N_Q,
-) -> DataFrame:
+def rfm_segments(events: DataFrame) -> DataFrame:
     """RFM (recency / frequency / monetary) quantile segmentation -- the
     classic CRM / user-analytics grid (Hughes 1994): each user scored
     0..n_q-1 on days-since-last-event, event count, and total cents,
@@ -880,14 +786,14 @@ def rfm_segments(
     length_batches offset precedent) with the 1-row count broadcast
     into it, and a broadcast join back. No corpus-sized window, no
     per-user global rank, no corpus-wide scalar projection."""
-    d_col = F.floor(epoch_ms(ts_col) / F.lit(RFM_DAY_MS)).cast("bigint")
+    d_col = F.floor(epoch_ms("ts") / F.lit(RFM_DAY_MS)).cast("bigint")
     cents = F.coalesce(
-        F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint"),
+        F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint"),
         F.lit(0),
     )
     per_user = (
         events.select(
-            F.col(user_col).alias("user_id"), d_col.alias("d"), cents.alias("c")
+            F.col("user_id").alias("user_id"), d_col.alias("d"), cents.alias("c")
         )
         .groupBy("user_id")
         .agg(
@@ -921,8 +827,8 @@ def rfm_segments(
         return staged.select(
             col,
             F.least(
-                F.lit(n_q - 1).cast("bigint"),
-                F.expr(f"({n_q} * below) DIV n_users").cast("bigint"),
+                F.lit(RFM_N_Q - 1).cast("bigint"),
+                F.expr(f"({RFM_N_Q} * below) DIV n_users").cast("bigint"),
             ).alias(q_name),
         )
 
@@ -945,32 +851,26 @@ def rfm_segments(
     )
 
 
-def rfm_segments_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    n_q: int = RFM_N_Q,
-) -> str:
+def rfm_segments_sql() -> str:
     """DuckDB twin of :func:`rfm_segments` (same per-user BIGINT frame,
     same value-collapsed strictly-below quantile maps over the
     distinct-value histograms, same flooring integer division; BIGINT
     casts on sum()/count() outputs -- the HUGEINT dtype-skew rule)."""
-    qcap = n_q - 1
+    qcap = RFM_N_Q - 1
     return f"""
 WITH per_user AS (
-  SELECT {user_col} AS user_id,
-         max(epoch_ms({ts_col}) // {RFM_DAY_MS}) AS last_d,
+  SELECT user_id AS user_id,
+         max(epoch_ms(ts) // {RFM_DAY_MS}) AS last_d,
          CAST(count(*) AS BIGINT) AS f,
-         CAST(sum(COALESCE(CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT), 0))
+         CAST(sum(COALESCE(CAST(floor(value * 1e2 + 5e-1) AS BIGINT), 0))
               AS BIGINT) AS m
-  FROM {table} GROUP BY 1
+  FROM events GROUP BY 1
 ),
 n1 AS (SELECT CAST(count(*) AS BIGINT) AS n_users FROM per_user),
 rh AS (SELECT last_d, CAST(count(*) AS BIGINT) AS cnt FROM per_user GROUP BY 1),
 rq AS (
   SELECT last_d, least(CAST({qcap} AS BIGINT),
-                  CAST(({n_q} * COALESCE(CAST(sum(cnt) OVER
+                  CAST(({RFM_N_Q} * COALESCE(CAST(sum(cnt) OVER
                     (ORDER BY last_d DESC
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                     AS BIGINT), 0)) // n_users AS BIGINT)) AS r_q
@@ -979,7 +879,7 @@ rq AS (
 fh AS (SELECT f, CAST(count(*) AS BIGINT) AS cnt FROM per_user GROUP BY 1),
 fq AS (
   SELECT f, least(CAST({qcap} AS BIGINT),
-                  CAST(({n_q} * COALESCE(CAST(sum(cnt) OVER
+                  CAST(({RFM_N_Q} * COALESCE(CAST(sum(cnt) OVER
                     (ORDER BY f ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                     AS BIGINT), 0)) // n_users AS BIGINT)) AS f_q
   FROM fh, n1
@@ -987,7 +887,7 @@ fq AS (
 mh AS (SELECT m, CAST(count(*) AS BIGINT) AS cnt FROM per_user GROUP BY 1),
 mq AS (
   SELECT m, least(CAST({qcap} AS BIGINT),
-                  CAST(({n_q} * COALESCE(CAST(sum(cnt) OVER
+                  CAST(({RFM_N_Q} * COALESCE(CAST(sum(cnt) OVER
                     (ORDER BY m ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                     AS BIGINT), 0)) // n_users AS BIGINT)) AS m_q
   FROM mh, n1

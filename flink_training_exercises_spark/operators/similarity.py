@@ -72,17 +72,11 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def topk_bruteforce(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    query_filter: Column | None = None,
-) -> DataFrame:
+def topk_bruteforce(emb: DataFrame, k: int = 5, query_filter: Column | None = None) -> DataFrame:
     """Exact top-k neighbors by cosine for each query vector (default: all).
     Ties broken by neighbor id for determinism. Output
     (query_id, neighbor_id, rank, cosine)."""
-    base = _with_int_vec(emb, id_col, vec_col)
+    base = _with_int_vec(emb, "vec_id", "embedding")
     queries = base.where(query_filter) if query_filter is not None else base
     q, c = queries.alias("q"), base.alias("c")
     scored = q.crossJoin(c).where(F.col("q.id") != F.col("c.id")).select(
@@ -95,15 +89,10 @@ def topk_bruteforce(
     return rank_topk(scored, k)
 
 
-def cosine_neardup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-) -> DataFrame:
+def cosine_neardup_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold -- the embedding
     near-duplicate filter of a corpus pipeline."""
-    base = _with_int_vec(emb, id_col, vec_col)
+    base = _with_int_vec(emb, "vec_id", "embedding")
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
@@ -136,16 +125,11 @@ def lsh_bucket(vec_int: Column, dim: int = 64, planes=None) -> Column:
 
 
 def topk_lsh(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    query_filter: Column | None = None,
+    emb: DataFrame, k: int = 5, dim: int = 64, query_filter: Column | None = None
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket,
     then exact cosine ranking. Same output shape as topk_bruteforce."""
-    base = _with_int_vec(emb, id_col, vec_col).withColumn(
+    base = _with_int_vec(emb, "vec_id", "embedding").withColumn(
         "bucket", lsh_bucket(F.col("v"), dim)
     )
     queries = base.where(query_filter) if query_filter is not None else base
@@ -164,11 +148,7 @@ def topk_lsh(
 
 
 def topk_bruteforce_pandas(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    query_filter: Column | None = None,
+    emb: DataFrame, k: int = 5, query_filter: Column | None = None
 ) -> DataFrame:
     """The 100 TB-shaped brute force: only the (small, typically subsampled)
     QUERY set is collected and broadcast as a numpy block; the candidate
@@ -189,9 +169,9 @@ def topk_bruteforce_pandas(
     import numpy as np
 
     queries = emb.where(query_filter) if query_filter is not None else emb
-    qrows = queries.select(id_col, vec_col).collect()  # queries only, never the corpus
-    qi = np.array([r[id_col] for r in qrows])
-    qm = np.floor(np.array([r[vec_col] for r in qrows], dtype=np.float64) * 1e6).astype(
+    qrows = queries.select("vec_id", "embedding").collect()  # queries only, never the corpus
+    qi = np.array([r["vec_id"] for r in qrows])
+    qm = np.floor(np.array([r["embedding"] for r in qrows], dtype=np.float64) * 1e6).astype(
         np.int64
     )
     qnn = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))
@@ -203,9 +183,9 @@ def topk_bruteforce_pandas(
             if not len(pdf):
                 continue
             cand = np.floor(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64) * 1e6
+                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1e6
             ).astype(np.int64)
-            cids = pdf[id_col].to_numpy()
+            cids = pdf["vec_id"].to_numpy()
             cnorm = np.sqrt((cand * cand).sum(axis=1).astype(np.float64))
             # zero-norm guard (cosine(0-vec, .) = 0 -- same semantics as the
             # Column-expression variants)
@@ -235,7 +215,7 @@ def topk_bruteforce_pandas(
                     }
                 )
 
-    partial = emb.select(id_col, vec_col).mapInPandas(
+    partial = emb.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, neighbor_id long, cosine double"
     )
     return rank_topk(partial, k)
@@ -244,14 +224,7 @@ def topk_bruteforce_pandas(
 NEARDUP_BANDS = 2  # bands of LSH_PLANES/NEARDUP_BANDS sign bits each
 
 
-def cosine_neardup_pairs_lsh(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    dim: int = 64,
-    bands: int = NEARDUP_BANDS,
-) -> DataFrame:
+def cosine_neardup_pairs_lsh(emb: DataFrame, threshold: float = 0.4, dim: int = 64) -> DataFrame:
     """Scale path for cosine_neardup_pairs: banded sign-LSH candidate
     generation + exact integer-cosine verify -- the pattern of
     dedup.minhash_lsh_pairs applied to embeddings. Each vector gets one
@@ -262,14 +235,14 @@ def cosine_neardup_pairs_lsh(
     band-bounded (pairs differing in every band are unseen) -- the oracle
     replicates the identical banding, and the all-pairs form remains the
     small-sf exact twin."""
-    r = LSH_PLANES // bands
-    base = _with_int_vec(emb, id_col, vec_col)
+    r = LSH_PLANES // NEARDUP_BANDS
+    base = _with_int_vec(emb, "vec_id", "embedding")
     band_keys = [
         # fused key: band index in the high bits, bucket (< 2^r) in the low
         (F.lit(b * (1 << r)) + lsh_bucket(F.col("v"), dim, planes=_PLANE_PARAMS[b * r : (b + 1) * r]))
         .cast("int")
         .alias(f"k{b}")
-        for b in range(bands)
+        for b in range(NEARDUP_BANDS)
     ]
     banded = base.select("id", F.explode(F.array(*band_keys)).alias("key"))
     a, b_ = banded.alias("a"), banded.alias("b")
@@ -312,12 +285,7 @@ def _proj_params() -> list[tuple[int, int]]:
     return _PROJ_PARAMS
 
 
-def random_projection(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dims: int = PROJ_DIMS,
-) -> DataFrame:
+def random_projection(emb: DataFrame) -> DataFrame:
     """Dimensionality reduction by a deterministic +/-1 sign matrix
     (Achlioptas-style JL transform): output dim j = sum_i v[i] * s_ji with
     s_ji = 1 - 2*((i*a_j + b_j) % 2). Exact BIGINT arithmetic over the
@@ -328,7 +296,7 @@ def random_projection(
     vectors are the cheap input for downstream ANN (shorter dot products)
     or visualization; at 100 TB this is a map-only pass whose cost is
     out_dims * in_dims multiply-adds per row."""
-    base = _with_int_vec(emb, id_col, vec_col)
+    base = _with_int_vec(emb, "vec_id", "embedding")
     comps = [
         F.aggregate(
             F.transform(
@@ -338,43 +306,35 @@ def random_projection(
             F.lit(0).cast("bigint"),
             lambda acc, e: acc + e,
         )
-        for a, b in _proj_params()[:out_dims]
+        for a, b in _proj_params()[:PROJ_DIMS]
     ]
     return base.select(
-        F.col("id").alias(id_col), F.posexplode(F.array(*comps)).alias("dim", "value")
+        F.col("id").alias("vec_id"), F.posexplode(F.array(*comps)).alias("dim", "value")
     )
 
 
-def random_projection_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dims: int = PROJ_DIMS,
-    in_dims: int = 64,
-) -> str:
+def random_projection_sql() -> str:
     comps = ", ".join(
         f"list_sum([v[i + 1] * (1 - 2 * ((i * {a} + {b}) % 2)) "
-        f"for i in generate_series(0, {in_dims - 1})])"
-        for a, b in _proj_params()[:out_dims]
+        f"for i in generate_series(0, {64 - 1})])"
+        for a, b in _proj_params()[:PROJ_DIMS]
     )
     return f"""
 WITH base AS (
-  SELECT {id_col},
-         [CAST(floor(CAST(x AS DOUBLE) * {EMB_SCALE}) AS BIGINT) for x in {vec_col}] AS v
-  FROM {table}
+  SELECT vec_id,
+         [CAST(floor(CAST(x AS DOUBLE) * {EMB_SCALE}) AS BIGINT) for x in embedding] AS v
+  FROM embeddings
 ),
 proj AS (
-  SELECT {id_col}, [{comps}] AS p FROM base
+  SELECT vec_id, [{comps}] AS p FROM base
 )
-SELECT {id_col}, CAST(generate_subscripts(p, 1) - 1 AS INT) AS dim,
+SELECT vec_id, CAST(generate_subscripts(p, 1) - 1 AS INT) AS dim,
        CAST(unnest(p) AS BIGINT) AS value
 FROM proj
 """
 
 
-def quantize_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Int8 embedding quantization -- the 4x storage/bandwidth compression
     every large-scale vector pipeline applies before indexing: each vector
     is L2-normalized and its components mapped to ``floor(127 * x / ||x||)``
@@ -393,7 +353,7 @@ def quantize_int8(
     Scale shape: map-only (one projection, no shuffle, no state) --
     quantization composes with any downstream index build at scan speed.
     """
-    v = _with_int_vec(df, id_col, vec_col)
+    v = _with_int_vec(df, "vec_id", "embedding")
     sq = F.sqrt(F.col("nn").cast("double"))
     q = F.when(
         F.col("nn") > 0,
@@ -407,7 +367,7 @@ def quantize_int8(
         c, F.lit(0).cast("bigint"), lambda acc, x: acc + x
     )
     return out.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         F.col("nn").alias("norm2"),
         fold(F.col("q")).alias("q_sum"),
         fold(F.transform(F.col("q"), lambda x: F.abs(x))).alias("q_l1"),
@@ -416,28 +376,26 @@ def quantize_int8(
     )
 
 
-def quantize_int8_sql(
-    table: str = "embeddings", id_col: str = "vec_id", vec_col: str = "embedding"
-) -> str:
-    iv = f"[CAST(floor(CAST(x AS DOUBLE) * {EMB_SCALE}) AS BIGINT) for x in {vec_col}]"
+def quantize_int8_sql() -> str:
+    iv = f"[CAST(floor(CAST(x AS DOUBLE) * {EMB_SCALE}) AS BIGINT) for x in embedding]"
     return f"""
 WITH iv AS (
-  SELECT {id_col}, {iv} AS v FROM {table}
+  SELECT vec_id, {iv} AS v FROM embeddings
 ),
 n AS (
-  SELECT {id_col}, v,
+  SELECT vec_id, v,
          CAST(list_sum([x * x for x in v]) AS BIGINT) AS nn
   FROM iv
 ),
 q AS (
-  SELECT {id_col}, nn,
+  SELECT vec_id, nn,
          CASE WHEN nn > 0
               THEN [CAST(floor(127 * x / sqrt(CAST(nn AS DOUBLE))) AS BIGINT)
                     for x in v]
               ELSE [CAST(0 AS BIGINT) for x in v] END AS qv
   FROM n
 )
-SELECT {id_col}, nn AS norm2,
+SELECT vec_id, nn AS norm2,
        CAST(list_sum(qv) AS BIGINT) AS q_sum,
        CAST(list_sum([abs(x) for x in qv]) AS BIGINT) AS q_l1,
        list_min(qv) AS q_min,
@@ -445,11 +403,7 @@ SELECT {id_col}, nn AS norm2,
 FROM q
 """
 
-def embedding_centroid_drift(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def embedding_centroid_drift(emb: DataFrame) -> DataFrame:
     """Per-label embedding centroid drift against the global centroid --
     the distribution-shift audit an embedding pipeline runs per source /
     label / snapshot ("did this segment's vectors move away from the
@@ -477,8 +431,8 @@ def embedding_centroid_drift(
     second corpus pass) and broadcasts back onto the dim-bounded
     (label, dim) frame. Output is one row per label."""
     base = emb.select(
-        F.col(label_col).cast("bigint").alias("label"),
-        F.posexplode(vec_col).alias("dim", "x"),
+        F.col("label").cast("bigint").alias("label"),
+        F.posexplode("embedding").alias("dim", "x"),
     ).select(
         "label",
         "dim",
@@ -509,20 +463,16 @@ def embedding_centroid_drift(
     )
 
 
-def embedding_centroid_drift_sql(
-    table: str = "embeddings",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> str:
+def embedding_centroid_drift_sql() -> str:
     """DuckDB twin of :func:`embedding_centroid_drift`: same quantized
     integer sums and cross-multiplied mean differences (parallel
     unnest + generate_subscripts, the random_projection idiom)."""
-    return f"""
+    return """
 WITH base AS (
-  SELECT CAST({label_col} AS BIGINT) AS label,
-         CAST(generate_subscripts({vec_col}, 1) - 1 AS INT) AS dim,
-         CAST(floor(CAST(unnest({vec_col}) AS DOUBLE) * 1e6) AS BIGINT) AS qx
-  FROM {table}
+  SELECT CAST(label AS BIGINT) AS label,
+         CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS dim,
+         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1e6) AS BIGINT) AS qx
+  FROM embeddings
 ),
 ld AS (
   SELECT label, dim, CAST(sum(qx) AS BIGINT) AS s,

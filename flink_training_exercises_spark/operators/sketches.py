@@ -154,9 +154,7 @@ def hll_fold_sql(p: int = HLL_P) -> str:
     )
 
 
-def hll_distinct(
-    df: DataFrame, key_col: str, group_col: str, p: int = HLL_P
-) -> DataFrame:
+def hll_distinct(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
     """Per-group HyperLogLog distinct estimate next to the exact twin.
 
     Plan shape (the 100 TB story): the register build is ONE shuffle on
@@ -170,7 +168,7 @@ def hll_distinct(
     Fixed-size state: 512 registers * n_groups; the final fold to S is a
     512-row-per-group aggregation, negligible at any corpus size.
     """
-    cells = hll_cells(df.select(F.col(group_col).alias("grp"), key_col), key_col, "grp", p=p)
+    cells = hll_cells(df.select(F.col(group_col).alias("grp"), key_col), key_col, "grp")
     regs = cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j"))
     exact = (
         df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("k"))
@@ -179,9 +177,9 @@ def hll_distinct(
     )
     # float(hll_numerator_lit(p)) round-trips to the identical double the
     # oracle parses from the same E-notation literal
-    est = F.lit(float(hll_numerator_lit(p))) / F.col("s")
+    est = F.lit(float(hll_numerator_lit())) / F.col("s")
     return (
-        hll_fold(regs, "grp", p=p)
+        hll_fold(regs, "grp")
         .join(F.broadcast(exact), "grp")
         .select(
             F.col("grp").alias(group_col),
@@ -190,21 +188,21 @@ def hll_distinct(
             F.round(F.abs(est - F.col("n_exact")) / F.col("n_exact"), 6).alias(
                 "rel_err"
             ),
-            (F.lit(1 << p) - F.col("n_buckets")).alias("n_empty_buckets"),
+            (F.lit(1 << HLL_P) - F.col("n_buckets")).alias("n_empty_buckets"),
         )
     )
 
 
-def hll_distinct_oracle(table: str, key_col: str, group_col: str, p: int = HLL_P) -> str:
+def hll_distinct_oracle(table: str, key_col: str, group_col: str) -> str:
     """DuckDB twin of :func:`hll_distinct`, bit-for-bit (same md5 hash,
     same integer registers, same single-literal float fold)."""
-    num = hll_numerator_lit(p)
+    num = hll_numerator_lit()
     return f"""
 WITH regs AS (
   SELECT {group_col} AS grp, bucket, max(rho) AS m_j
-  FROM ({hll_cells_sql(table, key_col, group_col, p=p)}) GROUP BY 1, 2
+  FROM ({hll_cells_sql(table, key_col, group_col)}) GROUP BY 1, 2
 ), folded AS (
-  SELECT grp, {hll_fold_sql(p)} AS s, count(*) AS n_buckets
+  SELECT grp, {hll_fold_sql()} AS s, count(*) AS n_buckets
   FROM regs GROUP BY 1
 ), exact AS (
   SELECT {group_col} AS grp, count(DISTINCT {key_col}) AS n_exact
@@ -214,7 +212,7 @@ SELECT f.grp AS {group_col},
        e.n_exact,
        round({num} / s, 4) AS hll_estimate,
        round(abs({num} / s - e.n_exact) / e.n_exact, 6) AS rel_err,
-       {1 << p} - n_buckets AS n_empty_buckets
+       {1 << HLL_P} - n_buckets AS n_empty_buckets
 FROM folded f JOIN exact e USING (grp)
 """
 
@@ -259,12 +257,11 @@ def cms_cells_sql(source: str, key: str, *keep: str, width: int = CMS_WIDTH) -> 
     )
 
 
+COUNTMIN_FREQ_TOP_K = 20
+
+
 def countmin_freq(
-    counts: DataFrame,
-    key_col: str,
-    count_col: str,
-    top_k: int = 20,
-    width: int = CMS_WIDTH,
+    counts: DataFrame, key_col: str, count_col: str, top_k: int = COUNTMIN_FREQ_TOP_K
 ) -> DataFrame:
     """Count-Min frequency estimates for the ``top_k`` exact heavy hitters,
     built from a pre-aggregated (key, count) relation.
@@ -284,7 +281,7 @@ def countmin_freq(
     """
     kc = counts.select(F.col(key_col).alias("k"), F.col(count_col).alias("cnt"))
     sketch = (
-        cms_cells(kc, "k", "cnt", width=width)
+        cms_cells(kc, "k", "cnt")
         .groupBy("r", "bucket")
         .agg(F.sum("cnt").alias("cell_sum"))
     )
@@ -297,7 +294,7 @@ def countmin_freq(
         "rk", F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("k")))
     )
     est = (
-        cms_cells(probes, "k", "k", "cnt", "rk", width=width)
+        cms_cells(probes, "k", "k", "cnt", "rk")
         .join(F.broadcast(sketch), ["r", "bucket"])
         .groupBy("k", "cnt", "rk")
         .agg(F.min("cell_sum").alias("est_cnt"))
@@ -313,26 +310,20 @@ def countmin_freq(
     )
 
 
-def countmin_freq_oracle(
-    counts_cte: str,
-    key_col: str,
-    count_col: str,
-    top_k: int = 20,
-    width: int = CMS_WIDTH,
-) -> str:
+def countmin_freq_oracle(counts_cte: str, key_col: str, count_col: str) -> str:
     """DuckDB twin of :func:`countmin_freq` over a ``counts`` CTE named by
     ``counts_cte`` (must expose ``{key_col}``, ``{count_col}``)."""
     return f"""
 kc AS (
   SELECT {key_col} AS k, {count_col} AS cnt FROM {counts_cte}
 ), cells AS (
-  {cms_cells_sql("kc", "k", "k", "cnt", width=width)}
+  {cms_cells_sql("kc", "k", "k", "cnt")}
 ), sketch AS (
   SELECT r, bucket, sum(cnt) AS cell_sum FROM cells GROUP BY 1, 2
 ), probes AS (
   SELECT k, cnt, row_number() OVER (ORDER BY cnt DESC, k ASC) AS rk
   FROM kc
-  QUALIFY rk <= {top_k}
+  QUALIFY rk <= {COUNTMIN_FREQ_TOP_K}
 ), probe_cells AS (
   SELECT p.k, p.cnt, p.rk, c.r, c.bucket
   FROM probes p JOIN cells c ON c.k = p.k
@@ -384,14 +375,7 @@ def _shr_duck(e: str, n: int) -> str:
     return f"(({e}) >> {n})" if n else f"({e})"
 
 
-def zorder_layout(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> DataFrame:
+def zorder_layout(docs: DataFrame) -> DataFrame:
     """Morton z-address over (length, hash(category)) and the shard each
     document lands in under a z-range split.
 
@@ -405,16 +389,16 @@ def zorder_layout(
     RANGE partition of the z-curve -- no shuffle here at all; the write
     path repartitions by ``z_shard`` exactly like write_training_shards.
     """
-    mask = (1 << bits) - 1
-    x = f"least(CAST({length_col} AS BIGINT), {mask})"
-    y_hash = md5_long(F.col(cat_col))
+    mask = (1 << ZORDER_BITS) - 1
+    x = f"least(CAST(n_chars AS BIGINT), {mask})"
+    y_hash = md5_long(F.col("source"))
     pre = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.expr(x).alias("zx"),
         (y_hash % (mask + 1)).alias("zy"),
     )
-    z = _interleave_terms("zx", "zy", _shl_spark, _shr_spark, bits)
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
+    z = _interleave_terms("zx", "zy", _shl_spark, _shr_spark, ZORDER_BITS)
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     return pre.select(
         "doc_id",
         "zx",
@@ -429,23 +413,16 @@ def zorder_layout(
     )
 
 
-def zorder_layout_oracle(
-    table: str,
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> str:
+def zorder_layout_oracle(table: str) -> str:
     """DuckDB twin of :func:`zorder_layout`."""
-    mask = (1 << bits) - 1
-    y = md5_long_sql(cat_col)
-    z = _interleave_terms("zx", "zy", _shl_duck, _shr_duck, bits)
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
+    mask = (1 << ZORDER_BITS) - 1
+    y = md5_long_sql("source")
+    z = _interleave_terms("zx", "zy", _shl_duck, _shr_duck, ZORDER_BITS)
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     return f"""
 WITH pre AS (
-  SELECT {id_col} AS doc_id,
-         least(CAST({length_col} AS BIGINT), {mask}) AS zx,
+  SELECT doc_id AS doc_id,
+         least(CAST(n_chars AS BIGINT), {mask}) AS zx,
          ({y}) % {mask + 1} AS zy
   FROM {table}
 ), z AS (
@@ -455,12 +432,11 @@ SELECT doc_id, zx, zy, zaddr, zaddr // {1 << shard_shift} AS z_shard FROM z
 """
 
 
+HLL_MERGE_DEMO_N_SHARDS = 4
+
+
 def hll_merge_demo(
-    df: DataFrame,
-    key_col: str,
-    shard_col: str,
-    n_shards: int = 4,
-    p: int = HLL_P,
+    df: DataFrame, key_col: str, shard_col: str, n_shards: int = HLL_MERGE_DEMO_N_SHARDS
 ) -> DataFrame:
     """The merge law that makes sketches work at 100 TB, demonstrated as a
     gated single-row result: build HLL registers independently per shard
@@ -478,15 +454,14 @@ def hll_merge_demo(
         df.select((F.col(shard_col) % n_shards).alias("shard"), key_col),
         key_col,
         "shard",
-        p=p,
     )
     per_shard = cells.groupBy("shard", "bucket").agg(F.max("rho").alias("m_j"))
     merged = per_shard.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
     direct = cells.groupBy("bucket").agg(F.max("rho").alias("m_j"))
-    num = F.lit(float(hll_numerator_lit(p)))
+    num = F.lit(float(hll_numerator_lit()))
 
     def fold(regs: DataFrame, alias: str) -> DataFrame:
-        return hll_fold(regs, p=p).select(F.round(num / F.col("s"), 4).alias(alias))
+        return hll_fold(regs).select(F.round(num / F.col("s"), 4).alias(alias))
 
     exact = df.agg(F.count_distinct(F.col(key_col)).alias("n_exact"))
     return (
@@ -503,15 +478,13 @@ def hll_merge_demo(
     )
 
 
-def hll_merge_demo_oracle(
-    table: str, key_col: str, shard_col: str, n_shards: int = 4, p: int = HLL_P
-) -> str:
+def hll_merge_demo_oracle(table: str, key_col: str, shard_col: str) -> str:
     """DuckDB twin of :func:`hll_merge_demo`."""
-    fold = f"round({hll_numerator_lit(p)} / ({hll_fold_sql(p)}), 4)"
+    fold = f"round({hll_numerator_lit()} / ({hll_fold_sql()}), 4)"
     return f"""
 WITH rows_ AS (
-  SELECT {shard_col} % {n_shards} AS shard, {key_col} FROM {table}
-), rho AS ({hll_cells_sql("rows_", key_col, "shard", p=p)}
+  SELECT {shard_col} % {HLL_MERGE_DEMO_N_SHARDS} AS shard, {key_col} FROM {table}
+), rho AS ({hll_cells_sql("rows_", key_col, "shard")}
 ), per_shard AS (
   SELECT shard, bucket, max(rho) AS m_j FROM rho GROUP BY 1, 2
 ), merged AS (
@@ -521,7 +494,7 @@ WITH rows_ AS (
 ), m_est AS (SELECT {fold} AS merged_estimate FROM merged),
 d_est AS (SELECT {fold} AS direct_estimate FROM direct),
 exact AS (SELECT count(DISTINCT {key_col}) AS n_exact FROM {table})
-SELECT CAST({n_shards} AS BIGINT) AS n_shards,
+SELECT CAST({HLL_MERGE_DEMO_N_SHARDS} AS BIGINT) AS n_shards,
        merged_estimate, direct_estimate,
        merged_estimate = direct_estimate AS est_equal,
        n_exact
@@ -538,23 +511,16 @@ ZONEMAP_LEN_HI = 150
 ZONEMAP_CAT = "src3"
 
 
-def _cat_point(bits: int = ZORDER_BITS) -> int:
+def _cat_point() -> int:
     """md5-fold of the category literal, identical to the zy computation on
     both engines (same md5 -> first-15-hex-digits -> mod fold)."""
     import hashlib
 
-    mask = (1 << bits) - 1
+    mask = (1 << ZORDER_BITS) - 1
     return int(hashlib.md5(ZONEMAP_CAT.encode()).hexdigest()[:15], 16) % (mask + 1)
 
 
-def zonemap_pruning_audit(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> DataFrame:
+def zonemap_pruning_audit(docs: DataFrame) -> DataFrame:
     """Grade what a layout actually buys: per-shard zone maps (min/max of
     the raw length and category-hash dimensions -- zone maps always store
     RAW column stats, whatever the placement) under three shard
@@ -586,20 +552,20 @@ def zonemap_pruning_audit(
     form would re-evaluate the z projection once per layout. Zone maps
     are one groupBy per ~n_shards keys with map-side partials; the audit
     fold is over 3 x n_shards rows. Nothing driver-side."""
-    pt = _cat_point(bits)
-    mask = (1 << bits) - 1
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
-    z = zorder_layout(docs, id_col, length_col, cat_col, bits, n_shards)
+    pt = _cat_point()
+    mask = (1 << ZORDER_BITS) - 1
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
+    z = zorder_layout(docs)
     rng = z.agg(F.min("zx").alias("_mn"), F.max("zx").alias("_mx"))
     sxe = f"(((zx - _mn) * {mask}) div greatest(_mx - _mn, 1))"
-    sz = _interleave_terms(sxe, "zy", _shl_spark, _shr_spark, bits)
+    sz = _interleave_terms(sxe, "zy", _shl_spark, _shr_spark, ZORDER_BITS)
     lay = lambda name, shard: F.struct(
         F.lit(name).alias("layout"), shard.alias("shard")
     )
     a1 = lay("zorder", F.col("z_shard"))
     # shared md5_long helper, NOT an inlined recipe -- keeps the Spark side
     # and the oracle's md5_long_sql twin from ever desyncing
-    a2 = lay("naive", md5_long(F.col("doc_id").cast("string")) % F.lit(n_shards))
+    a2 = lay("naive", md5_long(F.col("doc_id").cast("string")) % F.lit(ZORDER_SHARDS))
     a3 = lay(
         "zorder_scaled", F.expr(f"CAST({sz} AS BIGINT) div {1 << shard_shift}")
     )
@@ -629,25 +595,18 @@ def zonemap_pruning_audit(
     )
 
 
-def zonemap_pruning_audit_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> str:
+def zonemap_pruning_audit_sql() -> str:
     """DuckDB twin of :func:`zonemap_pruning_audit` (zorder oracle as a CTE,
     same literals, same integer folds)."""
-    pt = _cat_point(bits)
+    pt = _cat_point()
     lo, hi = ZONEMAP_LEN_LO, ZONEMAP_LEN_HI
-    mask = (1 << bits) - 1
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
-    naive = f"{md5_long_sql(f'CAST({id_col} AS VARCHAR)')} % {n_shards}"
+    mask = (1 << ZORDER_BITS) - 1
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
+    naive = f"{md5_long_sql('CAST(doc_id AS VARCHAR)')} % {ZORDER_SHARDS}"
     sxe = f"(((zx - _mn) * {mask}) // greatest(_mx - _mn, 1))"
-    sz = _interleave_terms(sxe, "zy", _shl_duck, _shr_duck, bits)
+    sz = _interleave_terms(sxe, "zy", _shl_duck, _shr_duck, ZORDER_BITS)
     return f"""
-WITH zl AS ({zorder_layout_oracle(table, id_col, length_col, cat_col, bits, n_shards)}),
+WITH zl AS ({zorder_layout_oracle('documents')}),
 rng AS (SELECT min(zx) AS _mn, max(zx) AS _mx FROM zl),
 u AS (
   SELECT zx, zy, s.layout AS layout, s.shard AS shard
@@ -682,12 +641,12 @@ FROM zone GROUP BY layout
 """
 
 
+HISTOGRAM_MERGE_DEMO_N_SHARDS = 4
+HISTOGRAM_MERGE_DEMO_N_BINS = 20
+
+
 def histogram_merge_demo(
-    df: DataFrame,
-    value_col: str,
-    shard_col: str,
-    n_shards: int = 4,
-    n_bins: int = 20,
+    df: DataFrame, value_col: str, shard_col: str, n_shards: int = HISTOGRAM_MERGE_DEMO_N_SHARDS
 ) -> DataFrame:
     """The ADDITIVE merge law, companion to :func:`hll_merge_demo`'s
     max-merge: equi-width histograms over FIXED global edges merge by
@@ -728,13 +687,13 @@ def histogram_merge_demo(
         "shard",
         "n_rows",
         F.least(
-            F.expr(f"(c - lo) div ((hi - lo) div {n_bins} + 1)"),
-            F.lit(n_bins - 1),
+            F.expr(f"(c - lo) div ((hi - lo) div {HISTOGRAM_MERGE_DEMO_N_BINS} + 1)"),
+            F.lit(HISTOGRAM_MERGE_DEMO_N_BINS - 1),
         )
         .cast("int")
         .alias("bin"),
         F.col("lo"),
-        F.expr(f"(hi - lo) div {n_bins} + 1").alias("width"),
+        F.expr(f"(hi - lo) div {HISTOGRAM_MERGE_DEMO_N_BINS} + 1").alias("width"),
     )
     per_shard = binned.groupBy("shard", "bin", "lo", "width", "n_rows").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -773,7 +732,7 @@ def histogram_merge_demo(
         .crossJoin(exact)
         .select(
             F.lit(n_shards).cast("bigint").alias("n_shards"),
-            F.lit(n_bins).cast("int").alias("n_bins"),
+            F.lit(HISTOGRAM_MERGE_DEMO_N_BINS).cast("int").alias("n_bins"),
             (F.col("n_diff") == 0).alias("hist_equal"),
             F.col("est_p50_cents").cast("bigint").alias("est_p50_cents"),
             "exact_p50_cents",
@@ -781,28 +740,22 @@ def histogram_merge_demo(
     )
 
 
-def histogram_merge_demo_oracle(
-    table: str,
-    value_col: str,
-    shard_col: str,
-    n_shards: int = 4,
-    n_bins: int = 20,
-) -> str:
+def histogram_merge_demo_oracle(table: str, value_col: str, shard_col: str) -> str:
     """DuckDB twin of :func:`histogram_merge_demo` -- identical integer bin
     rule ((c - lo) div width, width = (hi - lo) div n_bins + 1, last bin
     clamped) and the same quantile walk."""
     return f"""
 WITH base AS (
   SELECT CAST(round({value_col} * 100) AS BIGINT) AS c,
-         {shard_col} % {n_shards} AS shard
+         {shard_col} % {HISTOGRAM_MERGE_DEMO_N_SHARDS} AS shard
   FROM {table}
 ),
 edges AS (
   SELECT min(c) AS lo, max(c) AS hi, CAST(count(*) AS BIGINT) AS n_rows FROM base
 ),
 binned AS (
-  SELECT shard, n_rows, lo, (hi - lo) // {n_bins} + 1 AS width,
-         CAST(least((c - lo) // ((hi - lo) // {n_bins} + 1), {n_bins - 1}) AS INT) AS bin
+  SELECT shard, n_rows, lo, (hi - lo) // {HISTOGRAM_MERGE_DEMO_N_BINS} + 1 AS width,
+         CAST(least((c - lo) // ((hi - lo) // {HISTOGRAM_MERGE_DEMO_N_BINS} + 1), {HISTOGRAM_MERGE_DEMO_N_BINS - 1}) AS INT) AS bin
   FROM base CROSS JOIN edges
 ),
 per_shard AS (
@@ -837,17 +790,13 @@ exact AS (
            AS exact_p50_cents
   FROM {table}
 )
-SELECT CAST({n_shards} AS BIGINT) AS n_shards, CAST({n_bins} AS INT) AS n_bins,
+SELECT CAST({HISTOGRAM_MERGE_DEMO_N_SHARDS} AS BIGINT) AS n_shards, CAST({HISTOGRAM_MERGE_DEMO_N_BINS} AS INT) AS n_bins,
        n_diff = 0 AS hist_equal, est_p50_cents, exact_p50_cents
 FROM eq CROSS JOIN est CROSS JOIN exact
 """
 
 
-def join_cardinality_estimate(
-    r_counts: DataFrame,
-    s_counts: DataFrame,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def join_cardinality_estimate(r_counts: DataFrame, s_counts: DataFrame) -> DataFrame:
     """Join-size estimation via the Count-Min INNER PRODUCT -- the
     optimizer-statistics question ("how many rows will R join S produce
     on this key?") answered from two 4 KiB sketches instead of the join
@@ -878,7 +827,7 @@ def join_cardinality_estimate(
 
     def sketch(counts):
         return (
-            cms_cells(counts, "k", "cnt", width=width)
+            cms_cells(counts, "k", "cnt")
             .groupBy("r", "bucket")
             .agg(F.sum("cnt").alias("cell_sum"))
         )
@@ -901,18 +850,14 @@ def join_cardinality_estimate(
     )
 
 
-def join_cardinality_estimate_sql(
-    r_sql: str,
-    s_sql: str,
-    width: int = CMS_WIDTH,
-) -> str:
+def join_cardinality_estimate_sql(r_sql: str, s_sql: str) -> str:
     """DuckDB twin of :func:`join_cardinality_estimate`; ``r_sql`` /
     ``s_sql`` must each select (k, cnt)."""
     return f"""
 WITH rc AS MATERIALIZED ({r_sql}),
 sc AS MATERIALIZED ({s_sql}),
-r_cells AS ({cms_cells_sql('rc', 'k', 'cnt', width=width)}),
-s_cells AS ({cms_cells_sql('sc', 'k', 'cnt', width=width)}),
+r_cells AS ({cms_cells_sql('rc', 'k', 'cnt')}),
+s_cells AS ({cms_cells_sql('sc', 'k', 'cnt')}),
 r_sketch AS (
   SELECT r, bucket, CAST(sum(cnt) AS BIGINT) AS ra FROM r_cells GROUP BY 1, 2
 ),
@@ -931,13 +876,16 @@ ex AS (
 SELECT n_exact, n_est, n_est - n_exact AS overcount FROM ex CROSS JOIN est
 """
 
+APPROX_TOPK_SHARD_UNION_N_SHARDS = 8
+APPROX_TOPK_SHARD_UNION_PER_SHARD = 12
+APPROX_TOPK_SHARD_UNION_K = 10
+
+
 def approx_topk_shard_union(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 8,
-    per_shard: int = 12,
-    k: int = 10,
+    n_shards: int = APPROX_TOPK_SHARD_UNION_N_SHARDS,
+    per_shard: int = APPROX_TOPK_SHARD_UNION_PER_SHARD,
+    k: int = APPROX_TOPK_SHARD_UNION_K,
 ) -> DataFrame:
     """Approximate distributed top-k via per-shard top-m union -- the
     third member of the shard-merge family (hll_merge_shards,
@@ -970,10 +918,10 @@ def approx_topk_shard_union(
     production form drops it and the bounded union is all that moves)."""
     from .textstats import _widened
 
-    shard = md5_long(F.col(id_col).cast("string")) % n_shards
+    shard = md5_long(F.col("doc_id").cast("string")) % n_shards
     toks = (
         _widened(docs)
-        .select(shard.alias("shard"), F.explode(words(text_col)).alias("w"))
+        .select(shard.alias("shard"), F.explode(words("text")).alias("w"))
         .groupBy("shard", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
@@ -1004,21 +952,14 @@ def approx_topk_shard_union(
     )
 
 
-def approx_topk_shard_union_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 8,
-    per_shard: int = 12,
-    k: int = 10,
-) -> str:
+def approx_topk_shard_union_sql() -> str:
     """DuckDB twin of :func:`approx_topk_shard_union`: same md5 shards,
     same per-shard cut, same conditional aggregate and final rank."""
-    shard = f"{md5_long_sql(f'CAST({id_col} AS VARCHAR)')} % {n_shards}"
+    shard = f"{md5_long_sql('CAST(doc_id AS VARCHAR)')} % {APPROX_TOPK_SHARD_UNION_N_SHARDS}"
     return f"""
 WITH toks AS (
   SELECT shard, w, CAST(count(*) AS BIGINT) AS cnt FROM (
-    SELECT {shard} AS shard, unnest({words_sql(text_col)}) AS w FROM {table}
+    SELECT {shard} AS shard, unnest({words_sql('text')}) AS w FROM documents
   ) GROUP BY 1, 2
 ),
 ranked AS (
@@ -1028,18 +969,18 @@ ranked AS (
 ),
 audited AS (
   SELECT w,
-         CAST(sum(CASE WHEN r <= {per_shard} THEN cnt ELSE 0 END) AS BIGINT)
+         CAST(sum(CASE WHEN r <= {APPROX_TOPK_SHARD_UNION_PER_SHARD} THEN cnt ELSE 0 END) AS BIGINT)
            AS est_count,
          CAST(sum(cnt) AS BIGINT) AS exact_count
   FROM ranked GROUP BY 1
-  HAVING sum(CASE WHEN r <= {per_shard} THEN cnt ELSE 0 END) > 0
+  HAVING sum(CASE WHEN r <= {APPROX_TOPK_SHARD_UNION_PER_SHARD} THEN cnt ELSE 0 END) > 0
 )
 SELECT rank, token, est_count, exact_count, exact_count - est_count AS undercount
 FROM (
   SELECT CAST(row_number() OVER (ORDER BY est_count DESC, w) AS BIGINT) AS rank,
          w AS token, est_count, exact_count
   FROM audited
-) WHERE rank <= {k}
+) WHERE rank <= {APPROX_TOPK_SHARD_UNION_K}
 """
 
 # ---------------------------------------------------------------------------
@@ -1130,14 +1071,7 @@ def hilbert_index_sql(
     return f"SELECT {keep}, d AS haddr FROM {cur}"
 
 
-def hilbert_pruning_audit(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> DataFrame:
+def hilbert_pruning_audit(docs: DataFrame) -> DataFrame:
     """Head-to-head file-skipping audit of the two classic space-filling
     layouts on IDENTICAL range-scaled axes: Morton (z-order, the gated
     zonemap_pruning_audit's best layout) vs Hilbert (no diagonal jumps --
@@ -1153,17 +1087,17 @@ def hilbert_pruning_audit(
     walk is a fixed bits-deep projection chain Catalyst collapses into
     the same codegen stage as the Morton interleave. Zone maps fold per
     shard with map-side partials; the audit output is 2 rows."""
-    pt = _cat_point(bits)
-    mask = (1 << bits) - 1
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
-    z = zorder_layout(docs, id_col, length_col, cat_col, bits, n_shards)
+    pt = _cat_point()
+    mask = (1 << ZORDER_BITS) - 1
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
+    z = zorder_layout(docs)
     rng = z.agg(F.min("zx").alias("_mn"), F.max("zx").alias("_mx"))
     sxe = f"(((zx - _mn) * {mask}) div greatest(_mx - _mn, 1))"
     scaled = z.crossJoin(F.broadcast(rng)).selectExpr(
         "zx", "zy", f"{sxe} AS sx"
     )
-    h = hilbert_index(scaled, "sx", "zy", bits)
-    sz = _interleave_terms("sx", "zy", _shl_spark, _shr_spark, bits)
+    h = hilbert_index(scaled, "sx", "zy")
+    sz = _interleave_terms("sx", "zy", _shl_spark, _shr_spark, ZORDER_BITS)
     lay = lambda name, shard: F.struct(
         F.lit(name).alias("layout"), shard.alias("shard")
     )
@@ -1213,28 +1147,21 @@ def hilbert_pruning_audit(
     )
 
 
-def hilbert_pruning_audit_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    length_col: str = "n_chars",
-    cat_col: str = "source",
-    bits: int = ZORDER_BITS,
-    n_shards: int = ZORDER_SHARDS,
-) -> str:
+def hilbert_pruning_audit_sql() -> str:
     """DuckDB twin of :func:`hilbert_pruning_audit`: the zorder oracle as
     a CTE, the same scaled axes, the same chained Hilbert walk."""
-    pt = _cat_point(bits)
+    pt = _cat_point()
     lo, hi = ZONEMAP_LEN_LO, ZONEMAP_LEN_HI
-    mask = (1 << bits) - 1
-    shard_shift = 2 * bits - (n_shards.bit_length() - 1)
+    mask = (1 << ZORDER_BITS) - 1
+    shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     sxe = f"(((zx - _mn) * {mask}) // greatest(_mx - _mn, 1))"
-    sz = _interleave_terms("sx", "zy", _shl_duck, _shr_duck, bits)
+    sz = _interleave_terms("sx", "zy", _shl_duck, _shr_duck, ZORDER_BITS)
     scaled = (
         f"SELECT zx, zy, {sxe} AS sx FROM zl, rng"
     )
-    hil = hilbert_index_sql(scaled, ["zx", "zy", "sx"], "sx", "zy", bits)
+    hil = hilbert_index_sql(scaled, ["zx", "zy", "sx"], "sx", "zy")
     return f"""
-WITH zl AS ({zorder_layout_oracle(table, id_col, length_col, cat_col, bits, n_shards)}),
+WITH zl AS ({zorder_layout_oracle('documents')}),
 rng AS (SELECT min(zx) AS _mn, max(zx) AS _mx FROM zl),
 hil AS ({hil}),
 u AS (
@@ -1278,13 +1205,14 @@ FROM zone GROUP BY layout
 QSKETCH_PCTS = (25, 50, 75, 90)
 
 
+QUANTILE_MERGE_SHARDS_N_SHARDS = 8
+QUANTILE_MERGE_SHARDS_M = 17
+
+
 def quantile_merge_shards(
     events: DataFrame,
-    key_col: str = "event_id",
-    value_col: str = "value",
-    n_shards: int = 8,
-    m: int = 17,
-    pcts: tuple = QSKETCH_PCTS,
+    n_shards: int = QUANTILE_MERGE_SHARDS_N_SHARDS,
+    m: int = QUANTILE_MERGE_SHARDS_M,
 ) -> DataFrame:
     """Mergeable quantile sketch audit -- the fourth shard-merge family
     member (HLL, histogram, top-k union): each shard ships only its m
@@ -1309,11 +1237,11 @@ def quantile_merge_shards(
     over DISTINCT CENTS (value-vocabulary-bounded, the
     histogram_merge_shards precedent) -- it exists because the audit
     wants ground truth; the production form ships only the sketch."""
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        (md5_long(F.col(key_col).cast("string")) % n_shards).alias("shard"),
+        (md5_long(F.col("event_id").cast("string")) % n_shards).alias("shard"),
         cents.alias("v"),
-        F.col(key_col).alias("k"),
+        F.col("event_id").alias("k"),
     )
     wr = Window.partitionBy("shard").orderBy("v", "k")
     wn = Window.partitionBy("shard")
@@ -1347,7 +1275,7 @@ def quantile_merge_shards(
     hcum = hist.select("v", F.sum("c").over(wc).alias("cc"))
     n_tot = base.agg(F.count(F.lit(1)).alias("n"))
     pct_df = events.sparkSession.createDataFrame(
-        [(int(p),) for p in pcts], "pct bigint"
+        [(int(p),) for p in QSKETCH_PCTS], "pct bigint"
     )
     est = (
         pct_df.crossJoin(F.broadcast(tot))
@@ -1372,24 +1300,17 @@ def quantile_merge_shards(
     )
 
 
-def quantile_merge_shards_sql(
-    table: str = "events",
-    key_col: str = "event_id",
-    value_col: str = "value",
-    n_shards: int = 8,
-    m: int = 17,
-    pcts: tuple = QSKETCH_PCTS,
-) -> str:
+def quantile_merge_shards_sql() -> str:
     """DuckDB twin of :func:`quantile_merge_shards`: same shards, ranks,
     pooled weights, and threshold scans (`//` = integer division)."""
-    shard = f"{md5_long_sql(f'CAST({key_col} AS VARCHAR)')} % {n_shards}"
-    pct_rows = ", ".join(f"({int(p)})" for p in pcts)
+    shard = f"{md5_long_sql('CAST(event_id AS VARCHAR)')} % {QUANTILE_MERGE_SHARDS_N_SHARDS}"
+    pct_rows = ", ".join(f"({int(p)})" for p in QSKETCH_PCTS)
     return f"""
 WITH base AS (
   SELECT {shard} AS shard,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS v,
-         {key_col} AS k
-  FROM {table}
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS v,
+         event_id AS k
+  FROM events
 ),
 ranked AS (
   SELECT shard, v,
@@ -1398,9 +1319,9 @@ ranked AS (
   FROM base
 ),
 picks AS (
-  SELECT DISTINCT shard, n_s, 1 + ((n_s - 1) * i) // {m - 1} AS rn
+  SELECT DISTINCT shard, n_s, 1 + ((n_s - 1) * i) // {QUANTILE_MERGE_SHARDS_M - 1} AS rn
   FROM (SELECT shard, max(n_s) AS n_s FROM ranked GROUP BY 1),
-       (SELECT unnest(range({m})) AS i)
+       (SELECT unnest(range({QUANTILE_MERGE_SHARDS_M})) AS i)
 ),
 pooled AS (
   SELECT r.v, p.n_s AS w FROM picks p JOIN ranked r USING (shard, rn)
@@ -1432,13 +1353,15 @@ SELECT pct, est_cents, exact_cents,
 FROM est JOIN exact USING (pct)
 """
 
+HLL_INTERSECTION_ESTIMATE_TERM_A = "spark"
+HLL_INTERSECTION_ESTIMATE_TERM_B = "window"
+HLL_INTERSECTION_ESTIMATE_P = 6
+
+
 def hll_intersection_estimate(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    term_a: str = "spark",
-    term_b: str = "window",
-    p: int = 6,
+    term_a: str = HLL_INTERSECTION_ESTIMATE_TERM_A,
+    term_b: str = HLL_INTERSECTION_ESTIMATE_TERM_B,
 ) -> DataFrame:
     """Posting-list overlap estimation from mergeable sketches -- the
     query-planner / audience-overlap primitive: HLL registers cannot
@@ -1475,10 +1398,10 @@ def hll_intersection_estimate(
     (~0.709) differs slightly from alpha_512's base -- a constant-factor
     bias tolerated BY DESIGN in this graded audit, and irrelevant to
     parity because both engines fold the identical literal."""
-    ws = words(text_col)
+    ws = words("text")
     flagged = (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.array_contains(ws, term_a).alias("in_a"),
             F.array_contains(ws, term_b).alias("in_b"),
         )
@@ -1500,7 +1423,7 @@ def hll_intersection_estimate(
         "id",
     )
     regs = (
-        hll_cells(sided, "id", "side", p=p)
+        hll_cells(sided, "id", "side", p=HLL_INTERSECTION_ESTIMATE_P)
         .groupBy("side", "bucket")
         .agg(F.max("rho").alias("m_j"))
         .localCheckpoint()  # <= 2m rows; feeds side folds + union fold
@@ -1509,7 +1432,7 @@ def hll_intersection_estimate(
 
     def fold(frame, side=None):
         f = frame if side is None else frame.where(F.col("side") == side)
-        return hll_fold(f, p=p).select("s")
+        return hll_fold(f, p=HLL_INTERSECTION_ESTIMATE_P).select("s")
 
     sa = fold(regs, "a").select(F.col("s").alias("s_a"))
     sb = fold(regs, "b").select(F.col("s").alias("s_b"))
@@ -1521,7 +1444,7 @@ def hll_intersection_estimate(
         .cast("bigint")
         .alias("n_exact_both"),
     )
-    num = F.lit(float(hll_numerator_lit(p)))
+    num = F.lit(float(hll_numerator_lit(HLL_INTERSECTION_ESTIMATE_P)))
     return (
         exact.join(F.broadcast(sa))
         .join(F.broadcast(sb))
@@ -1540,26 +1463,19 @@ def hll_intersection_estimate(
     )
 
 
-def hll_intersection_estimate_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    term_a: str = "spark",
-    term_b: str = "window",
-    p: int = 6,
-) -> str:
+def hll_intersection_estimate_sql() -> str:
     """DuckDB twin of :func:`hll_intersection_estimate`: same posting
     flags, register build, max-of-maxes union merge, single-literal
     float folds, and one-round inclusion-exclusion."""
-    num = hll_numerator_lit(p)
-    ws = words_sql(text_col)
-    s_expr = hll_fold_sql(p)
+    num = hll_numerator_lit(HLL_INTERSECTION_ESTIMATE_P)
+    ws = words_sql("text")
+    s_expr = hll_fold_sql(HLL_INTERSECTION_ESTIMATE_P)
     return f"""
 WITH flagged AS (
-  SELECT {id_col} AS id,
-         len([x for x in {ws} if x = '{term_a}']) > 0 AS in_a,
-         len([x for x in {ws} if x = '{term_b}']) > 0 AS in_b
-  FROM {table}
+  SELECT doc_id AS id,
+         len([x for x in {ws} if x = '{HLL_INTERSECTION_ESTIMATE_TERM_A}']) > 0 AS in_a,
+         len([x for x in {ws} if x = '{HLL_INTERSECTION_ESTIMATE_TERM_B}']) > 0 AS in_b
+  FROM documents
 ),
 fl AS (SELECT * FROM flagged WHERE in_a OR in_b),
 sided AS (
@@ -1570,7 +1486,7 @@ sided AS (
 ),
 regs AS (
   SELECT side, bucket, max(rho) AS m_j
-  FROM ({hll_cells_sql("sided", "id", "side", p=p)}) GROUP BY 1, 2
+  FROM ({hll_cells_sql("sided", "id", "side", p=HLL_INTERSECTION_ESTIMATE_P)}) GROUP BY 1, 2
 ),
 uregs AS (SELECT bucket, max(m_j) AS m_j FROM regs GROUP BY 1),
 sa AS (SELECT {s_expr} AS s FROM regs WHERE side = 'a'),

@@ -24,15 +24,10 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_BUCKETS = 16
 
 
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
+def salted_aggregate(df: DataFrame, keys: list[str], aggs: dict[str, str]) -> DataFrame:
     """Two-phase skew-safe aggregation. ``aggs`` maps output alias ->
     'count' | 'sum:<col>' (algebraic aggregates that re-combine exactly)."""
-    salted = df.withColumn("__salt", (F.rand(seed=7) * salt_buckets).cast("int"))
+    salted = df.withColumn("__salt", (F.rand(seed=7) * DEFAULT_SALT_BUCKETS).cast("int"))
     phase1_exprs = []
     phase2_exprs = []
     for alias, spec in aggs.items():
@@ -49,19 +44,15 @@ def salted_aggregate(
 
 
 def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
+    big: DataFrame, small: DataFrame, big_key: str, small_key: str
 ) -> DataFrame:
     """Inner join where `big` has hot keys: replicate `small` over every
     salt bucket, salt `big` uniformly, equi-join on (key, salt). The hot
     key's rows land on `salt_buckets` tasks instead of one."""
     spark = big.sparkSession
-    salts = spark.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
+    salts = spark.range(DEFAULT_SALT_BUCKETS).select(F.col("id").cast("int").alias("__salt"))
     small_rep = small.crossJoin(F.broadcast(salts))
-    big_salted = big.withColumn("__salt", (F.rand(seed=11) * salt_buckets).cast("int"))
+    big_salted = big.withColumn("__salt", (F.rand(seed=11) * DEFAULT_SALT_BUCKETS).cast("int"))
     joined = big_salted.join(
         F.broadcast(small_rep),
         (big_salted[big_key] == small_rep[small_key])
@@ -70,22 +61,7 @@ def salted_broadcast_join(
     return joined.drop("__salt")
 
 
-def top_keys(df: DataFrame, key: str, n: int = 10) -> DataFrame:
-    """Skew diagnosis: the n heaviest keys with counts and share -- run this
-    before picking a mitigation."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("share", F.col("cnt") / F.lit(float(total)))
-        .orderBy(F.desc("cnt"), F.asc(key))
-        .limit(n)
-    )
-
-def skew_profile(
-    df: DataFrame,
-    key_col: str = "user_id",
-) -> DataFrame:
+def skew_profile(df: DataFrame) -> DataFrame:
     """Key-skew diagnosis BEFORE a shuffle: the per-key row-count
     distribution summarized into the numbers a salting decision actually
     needs -- how hot is the hottest key relative to the mean and the
@@ -118,7 +94,7 @@ def skew_profile(
     # per-key groupBy runs exactly once (the multi-consumer rule), then
     # fold p50/p95 as ONE conditional aggregate instead of two
     # crossJoin-filter frames (the bloom three-scalar lesson)
-    counts = df.groupBy(F.col(key_col).alias("k")).agg(
+    counts = df.groupBy(F.col("user_id").alias("k")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     hist = (
@@ -157,16 +133,13 @@ def skew_profile(
     )
 
 
-def skew_profile_sql(
-    table: str = "events",
-    key_col: str = "user_id",
-) -> str:
+def skew_profile_sql() -> str:
     """DuckDB twin of :func:`skew_profile`: same count-of-counts walk and
     integer rationals."""
-    return f"""
+    return """
 WITH counts AS (
-  SELECT {key_col} AS k, CAST(count(*) AS BIGINT) AS c
-  FROM {table} GROUP BY 1
+  SELECT user_id AS k, CAST(count(*) AS BIGINT) AS c
+  FROM events GROUP BY 1
 ),
 hist AS (SELECT c, count(*) AS f FROM counts GROUP BY 1),
 cum AS (

@@ -85,7 +85,7 @@ def travel_time_window(rides: DataFrame) -> DataFrame:
     )
 
 
-def travel_time_stateful(rides: DataFrame, n_shards: int = 64) -> DataFrame:
+def travel_time_stateful(rides: DataFrame) -> DataFrame:
     """applyInPandas form: regression state carried across ordered rows (the
     batch twin of the streaming stateful operator).
 
@@ -126,7 +126,7 @@ def travel_time_stateful(rides: DataFrame, n_shards: int = 64) -> DataFrame:
 
     return (
         _features(rides)
-        .withColumn("shard", F.col("cell") % F.lit(n_shards))
+        .withColumn("shard", F.col("cell") % F.lit(64))
         .groupBy("shard")
         .applyInPandas(per_shard, schema="ride_id long, predicted_minutes int")
     )

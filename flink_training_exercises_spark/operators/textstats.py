@@ -38,16 +38,16 @@ def _widened(docs: DataFrame) -> DataFrame:
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f]"
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace tokens, alphabetic tokens, a BPE-ish subword estimate
     (ceil(chars/4) per token -- the standard ~4-chars-per-token estimate,
     computed exactly in integers), and a real regex pre-tokenizer count
     (letter runs / digit runs / single symbols -- the GPT-2 pattern's
     skeleton, identical semantics in Java regex and RE2)."""
     docs = _widened(docs)
-    w = words(text_col)
+    w = words("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         # bigint casts: width-align with the oracle's int64 (driver
         # tolerates width skew today; one cast removes the reliance)
         F.size(w).cast("bigint").alias("n_tokens"),
@@ -59,31 +59,31 @@ def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             F.lit(0).cast("bigint"),
             lambda acc, x: acc + F.floor((F.length(x) + 3) / F.lit(4)).cast("bigint"),
         ).alias("n_subwords_est"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_TOKEN_RE)).cast("bigint").alias(
+        F.regexp_count(F.col("text"), F.lit(BPE_TOKEN_RE)).cast("bigint").alias(
             "n_regex_tokens"
         ),
     )
 
 
-def token_count_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    w = words_sql(text_col)
+def token_count_sql() -> str:
+    w = words_sql("text")
     return f"""
-SELECT {id_col},
+SELECT doc_id,
        len(w) AS n_tokens,
        len([x for x in w if regexp_matches(x, '^[a-z]+$')]) AS n_alpha_tokens,
        CAST(list_sum([(length(x) + 3) // 4 for x in w]) AS BIGINT) AS n_subwords_est,
-       CAST(len(regexp_extract_all({text_col}, '{BPE_TOKEN_RE}')) AS BIGINT)
+       CAST(len(regexp_extract_all(text, '{BPE_TOKEN_RE}')) AS BIGINT)
          AS n_regex_tokens
-FROM (SELECT {id_col}, {text_col}, {w} AS w FROM {table})
+FROM (SELECT doc_id, text, {w} AS w FROM documents)
 """
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality components: alpha-char ratio, stopword ratio, mean
     word length (x1000, floored -- integer-exact), plus a 0-100 composite."""
     docs = _widened(docs)
-    text = F.col(text_col)
-    w = words(text_col)
+    text = F.col("text")
+    w = words("text")
     n_chars = F.length(text)
     n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
     stop_arr = F.array(*[F.lit(s) for s in dict.fromkeys(STOP_WORDS)])
@@ -99,7 +99,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         F.floor(alpha_ratio * 50) + F.floor(stop_ratio * 25) + F.least(n_words, F.lit(25))
     ).cast("int")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         alpha_ratio.alias("alpha_ratio"),
         stop_ratio.alias("stopword_ratio"),
         mean_wlen_x1000.alias("mean_word_len_x1000"),
@@ -107,27 +107,25 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def quality_score_sql(
-    table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
-) -> str:
+def quality_score_sql() -> str:
     stop_list = ", ".join(f"'{s}'" for s in dict.fromkeys(STOP_WORDS))
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col},
-         length({text_col}) AS n_chars,
-         length(regexp_replace({text_col}, '[^A-Za-z]', '', 'g')) AS n_alpha,
+  SELECT doc_id,
+         length(text) AS n_chars,
+         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
          {w} AS w
-  FROM {table}
+  FROM documents
 ),
 agg AS (
-  SELECT {id_col}, n_chars, n_alpha,
+  SELECT doc_id, n_chars, n_alpha,
          len(w) AS n_words,
          len([x for x in w if x IN ({stop_list})]) AS n_stop,
          COALESCE(CAST(list_sum([length(x) for x in w]) AS BIGINT), 0) AS sum_len
   FROM base
 )
-SELECT {id_col},
+SELECT doc_id,
        CAST(n_alpha AS DOUBLE) / greatest(n_chars, 1) AS alpha_ratio,
        CAST(n_stop AS DOUBLE) / greatest(n_words, 1) AS stopword_ratio,
        CASE WHEN n_words > 0 THEN CAST(sum_len * 1000 AS BIGINT) / n_words ELSE 0e0 END
@@ -139,13 +137,13 @@ FROM agg
 """
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word-hit language ID: predicted lang = argmax over per-language
     marker hit counts (deterministic alphabetical tie-break). A real pipeline
     swaps in fastText/CLD3 via mapInPandas; the heuristic IS the operator
     contract here so the oracle can replicate it."""
     docs = _widened(docs)
-    w = words(text_col)
+    w = words("text")
 
     def contains(markers):
         return lambda x: F.array_contains(markers, x)
@@ -154,7 +152,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     for lang in _LANGS:
         markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
         hit_cols.append(F.size(F.filter(w, contains(markers))).alias(f"hits_{lang}"))
-    scored = docs.select(F.col(id_col), *hit_cols)
+    scored = docs.select(F.col("doc_id"), *hit_cols)
     mx = F.greatest(*[F.col(f"hits_{lang}") for lang in _LANGS])
     chain = None  # first lang (alphabetical) reaching the max wins
     for lang in _LANGS:
@@ -162,12 +160,12 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         chain = F.when(cond, F.lit(lang)) if chain is None else chain.when(cond, F.lit(lang))
     # bigint cast: width-align with the oracle's int64
     return scored.select(
-        F.col(id_col), chain.alias("pred_lang"), mx.cast("bigint").alias("n_hits")
+        F.col("doc_id"), chain.alias("pred_lang"), mx.cast("bigint").alias("n_hits")
     )
 
 
-def lang_id_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    w = words_sql(text_col)
+def lang_id_sql() -> str:
+    w = words_sql("text")
     hit_exprs = ", ".join(
         "len([x for x in w if x IN ({m})]) AS hits_{lang}".format(
             m=", ".join(f"'{m}'" for m in LANG_MARKERS[lang]), lang=lang
@@ -182,10 +180,10 @@ def lang_id_sql(table: str = "documents", id_col: str = "doc_id", text_col: str 
     )
     return f"""
 WITH scored AS (
-  SELECT {id_col}, {hit_exprs}
-  FROM (SELECT {id_col}, {w} AS w FROM {table})
+  SELECT doc_id, {hit_exprs}
+  FROM (SELECT doc_id, {w} AS w FROM documents)
 )
-SELECT {id_col}, {chain} AS pred_lang, {mx} AS n_hits FROM scored
+SELECT doc_id, {chain} AS pred_lang, {mx} AS n_hits FROM scored
 """
 
 
@@ -207,7 +205,7 @@ def _gram_array(w: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1): fraction of
     the doc taken by its most frequent unigram / bigram, and the fraction of
     duplicated 5-grams. High values mark boilerplate and degenerate text.
@@ -219,10 +217,10 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     hash, so the negligible collision behavior is differential-safe); ratios
     are int/int divisions -- bit-identical cross-engine."""
     docs = _widened(docs)
-    w = words(text_col)
+    w = words("text")
     levels = [
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(n).alias("n"),
             F.explode(_gram_array(w, n)).alias("gram"),
         )
@@ -232,16 +230,16 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     for lvl in levels[1:]:
         grams = grams.unionAll(lvl)
     counts = (
-        grams.select(F.col(id_col), "n", md5_long("gram").alias("gh"))
-        .groupBy(id_col, "n", "gh")
+        grams.select(F.col("doc_id"), "n", md5_long("gram").alias("gh"))
+        .groupBy("doc_id", "n", "gh")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    per_n = counts.groupBy(id_col, "n").agg(
+    per_n = counts.groupBy("doc_id", "n").agg(
         F.max("c").alias("top_c"),
         F.sum("c").alias("tot"),
         F.count(F.lit(1)).alias("nd"),
     )
-    wide = per_n.groupBy(id_col).agg(
+    wide = per_n.groupBy("doc_id").agg(
         F.max(F.when(F.col("n") == 1, F.col("tot"))).alias("n_words"),
         F.max(F.when(F.col("n") == 1, F.col("top_c"))).alias("top1"),
         F.max(F.when(F.col("n") == 2, F.col("top_c"))).alias("top2"),
@@ -250,7 +248,7 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
         F.max(F.when(F.col("n") == 5, F.col("nd"))).alias("nd5"),
     )
     return wide.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_words"),
         (F.col("top1").cast("double") / F.col("n_words")).alias("top_unigram_frac"),
         F.when(
@@ -268,10 +266,8 @@ def repetition_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
     )
 
 
-def repetition_metrics_sql(
-    table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
-) -> str:
-    w = words_sql(text_col)
+def repetition_metrics_sql() -> str:
+    w = words_sql("text")
     gram2 = "list_transform(range(1, len(w)), i -> concat_ws(' ', w[i], w[i+1]))"
     gram5 = (
         "list_transform(range(1, len(w) - 3), "
@@ -279,24 +275,24 @@ def repetition_metrics_sql(
     )
     gh = md5_long_sql("gram")
     return f"""
-WITH words AS (SELECT {id_col}, {w} AS w FROM {table}),
+WITH words AS (SELECT doc_id, {w} AS w FROM documents),
 grams AS (
-  SELECT {id_col}, 1 AS n, unnest(w) AS gram FROM words
+  SELECT doc_id, 1 AS n, unnest(w) AS gram FROM words
   UNION ALL
-  SELECT {id_col}, 2 AS n, unnest({gram2}) AS gram FROM words
+  SELECT doc_id, 2 AS n, unnest({gram2}) AS gram FROM words
   UNION ALL
-  SELECT {id_col}, 5 AS n, unnest({gram5}) AS gram FROM words
+  SELECT doc_id, 5 AS n, unnest({gram5}) AS gram FROM words
 ),
 counts AS (
-  SELECT {id_col}, n, {gh} AS gh, count(*) AS c FROM grams GROUP BY 1, 2, 3
+  SELECT doc_id, n, {gh} AS gh, count(*) AS c FROM grams GROUP BY 1, 2, 3
 ),
 per_n AS (
-  SELECT {id_col}, n, max(c) AS top_c, CAST(sum(c) AS BIGINT) AS tot,
+  SELECT doc_id, n, max(c) AS top_c, CAST(sum(c) AS BIGINT) AS tot,
          count(*) AS nd
   FROM counts GROUP BY 1, 2
 ),
 wide AS (
-  SELECT {id_col},
+  SELECT doc_id,
          max(CASE WHEN n = 1 THEN tot END) AS n_words,
          max(CASE WHEN n = 1 THEN top_c END) AS top1,
          max(CASE WHEN n = 2 THEN top_c END) AS top2,
@@ -305,7 +301,7 @@ wide AS (
          max(CASE WHEN n = 5 THEN nd END) AS nd5
   FROM per_n GROUP BY 1
 )
-SELECT {id_col}, n_words,
+SELECT doc_id, n_words,
        CAST(top1 AS DOUBLE) / n_words AS top_unigram_frac,
        CASE WHEN n_bigrams IS NOT NULL AND n_bigrams > 0
             THEN CAST(top2 AS DOUBLE) / n_bigrams ELSE 0e0 END AS top_bigram_frac,
@@ -315,18 +311,18 @@ FROM wide
 """
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic 60-bit content fingerprint of whitespace-normalized
     lowercase text (md5-based -- same value in any engine)."""
     docs = _widened(docs)
-    normalized = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    normalized = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     fp = F.conv(F.substring(F.md5(normalized), 1, 15), 16, 10).cast("bigint")
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
+    return docs.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
-def fingerprint_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    norm = f"trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g'))"
-    return f"SELECT {id_col}, {md5_long_sql(norm)} AS fingerprint FROM {table}"
+def fingerprint_sql() -> str:
+    norm = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+    return f"SELECT doc_id, {md5_long_sql(norm)} AS fingerprint FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -334,11 +330,10 @@ def fingerprint_sql(table: str = "documents", id_col: str = "doc_id", text_col: 
 # ---------------------------------------------------------------------------
 
 
-def bpe_pair_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_weight: int = 5,
-) -> DataFrame:
+BPE_PAIR_COUNTS_MIN_WEIGHT = 5
+
+
+def bpe_pair_counts(docs: DataFrame, min_weight: int = BPE_PAIR_COUNTS_MIN_WEIGHT) -> DataFrame:
     """Adjacent-character-pair frequencies weighted by word frequency -- the
     statistic BPE training computes to pick each merge (the argmax pair IS
     the first merge). Output (pair, weight >= min_weight).
@@ -349,7 +344,7 @@ def bpe_pair_counts(
     vocab weighted by frequency, never over the corpus. This is the
     standard trick that makes BPE training corpus-size-independent after
     one counting pass."""
-    toks = _widened(docs).select(F.explode(words(text_col)).alias("word"))
+    toks = _widened(docs).select(F.explode(words("text")).alias("word"))
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
     pairs = freq.where(F.length("word") >= 2).select(
         F.explode(
@@ -367,13 +362,11 @@ def bpe_pair_counts(
     )
 
 
-def bpe_pair_counts_sql(
-    table: str = "documents", text_col: str = "text", min_weight: int = 5
-) -> str:
-    w = words_sql(text_col)
+def bpe_pair_counts_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH words AS (
-  SELECT unnest({w}) AS word FROM {table}
+  SELECT unnest({w}) AS word FROM documents
 ),
 freq AS (SELECT word, count(*) AS f FROM words GROUP BY word),
 pairs AS (
@@ -381,16 +374,15 @@ pairs AS (
   FROM freq WHERE length(word) >= 2
 )
 SELECT pair, CAST(sum(f) AS BIGINT) AS weight
-FROM pairs GROUP BY pair HAVING sum(f) >= {min_weight}
+FROM pairs GROUP BY pair HAVING sum(f) >= {BPE_PAIR_COUNTS_MIN_WEIGHT}
 """
 
 
+VOCAB_OOV_RATE_VOCAB_SIZE = 1000
+
+
 def vocab_oov_rate(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_size: int = 1000,
-    max_oov_rate: float = 0.2,
+    docs: DataFrame, vocab_size: int = VOCAB_OOV_RATE_VOCAB_SIZE, max_oov_rate: float = 0.2
 ) -> DataFrame:
     """Tokenizer-coverage audit: per-document out-of-vocabulary rate
     against the corpus' own top-``vocab_size`` token vocabulary (count
@@ -410,7 +402,7 @@ def vocab_oov_rate(
     oov_rate NULL, keep=false). Ratio = single division of exact BIGINTs
     (bit-identical across engines); no float aggregation anywhere."""
     base = _widened(docs)
-    toks = base.select(F.col(id_col), F.explode(words(text_col)).alias("token"))
+    toks = base.select(F.col("doc_id"), F.explode(words("text")).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -420,7 +412,7 @@ def vocab_oov_rate(
     )
     per = (
         toks.join(F.broadcast(vocab), "token", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(
@@ -433,10 +425,10 @@ def vocab_oov_rate(
         F.col("n_oov").cast("double") / F.col("n_tokens"),
     )
     return (
-        base.select(F.col(id_col))
-        .join(per, id_col, "left")
+        base.select(F.col("doc_id"))
+        .join(per, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_tokens"), F.lit(0).cast("bigint")).alias("n_tokens"),
             F.coalesce(F.col("n_oov"), F.lit(0).cast("bigint")).alias("n_oov"),
             rate.alias("oov_rate"),
@@ -447,50 +439,40 @@ def vocab_oov_rate(
     )
 
 
-def vocab_oov_rate_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_size: int = 1000,
-    max_oov_rate_sql: str = "2e-1",
-) -> str:
-    w = words_sql(text_col)
+def vocab_oov_rate_sql() -> str:
+    w = words_sql("text")
     return f"""
 WITH toks AS MATERIALIZED (
-  SELECT {id_col}, unnest({w}) AS token FROM {table}
+  SELECT doc_id, unnest({w}) AS token FROM documents
 ),
 vocab AS (
   SELECT token FROM (
     SELECT token, count(*) AS c FROM toks
-    GROUP BY token ORDER BY c DESC, token LIMIT {vocab_size}
+    GROUP BY token ORDER BY c DESC, token LIMIT {VOCAB_OOV_RATE_VOCAB_SIZE}
   )
 ),
 per AS (
-  SELECT t.{id_col},
+  SELECT t.doc_id,
          CAST(count(*) AS BIGINT) AS n_tokens,
          CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
   FROM toks t LEFT JOIN vocab v ON t.token = v.token
-  GROUP BY t.{id_col}
+  GROUP BY t.doc_id
 )
-SELECT d.{id_col},
+SELECT d.doc_id,
        COALESCE(p.n_tokens, 0) AS n_tokens,
        COALESCE(p.n_oov, 0) AS n_oov,
        CASE WHEN p.n_tokens > 0 THEN CAST(p.n_oov AS DOUBLE) / p.n_tokens END
          AS oov_rate,
        COALESCE(
          CASE WHEN p.n_tokens > 0
-              THEN CAST(p.n_oov AS DOUBLE) / p.n_tokens <= {max_oov_rate_sql} END,
+              THEN CAST(p.n_oov AS DOUBLE) / p.n_tokens <= 2e-1 END,
          FALSE
        ) AS keep
-FROM {table} d LEFT JOIN per p ON d.{id_col} = p.{id_col}
+FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
 """
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 3,
-) -> DataFrame:
+def bpe_train_merges(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     """ACTUAL BPE merge training (Sennrich et al. 2016), ``n_merges``
     rounds: start from character symbols over the alpha-word vocabulary,
     each round pick the max-weight adjacent symbol pair (weight desc,
@@ -515,7 +497,7 @@ def bpe_train_merges(
     collect of exactly ONE argmax row (the trained artifact, same policy
     as the IVF quantizer's bounded training collect). State lineage is
     cut per round with localCheckpoint."""
-    merges, _ = _bpe_train(docs, text_col, n_merges)
+    merges, _ = _bpe_train(docs, "text", n_merges)
     return docs.sparkSession.createDataFrame(
         merges,
         "merge_rank BIGINT, left_sym STRING, right_sym STRING, "
@@ -583,12 +565,7 @@ def _bpe_train(
     return merges, state
 
 
-def bpe_encode(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = 3,
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     """Tokenizer APPLICATION -- encode the corpus with the merges learned
     by :func:`bpe_train_merges`: per document, every alpha word is split
     to character symbols and the learned merges are replayed in rank
@@ -609,13 +586,13 @@ def bpe_encode(
     inner delimiters). The per-word token counts broadcast back onto
     the (doc, word) stream, which then collapses map-side to one row
     per doc."""
-    per = _bpe_encode_counts(docs, id_col, text_col, n_merges)
+    per = _bpe_encode_counts(docs, "doc_id", "text", n_merges)
     return (
         _widened(docs)
-        .select(F.col(id_col))
-        .join(per, id_col, "left")
+        .select(F.col("doc_id"))
+        .join(per, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_words"), F.lit(0).cast("bigint")).alias("n_words"),
             F.coalesce(F.col("n_chars").cast("bigint"), F.lit(0).cast("bigint")).alias(
                 "n_chars"
@@ -653,22 +630,17 @@ def _bpe_encode_counts(
     )
 
 
-def bpe_encode_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = 3,
-) -> str:
+def bpe_encode_sql(n_merges: int = 3) -> str:
     """DuckDB twin of :func:`bpe_encode`: the trainer's unrolled CTE chain
     (shared with bpe_train_merges_sql) replayed over the distinct word
     vocabulary via scalar-subquery literal replaces."""
-    w = words_sql(text_col)
-    train = bpe_train_merges_sql(table, text_col, n_merges)
+    w = words_sql("text")
+    train = bpe_train_merges_sql(n_merges=n_merges)
     parts = [
         f"WITH merges AS MATERIALIZED ({train})",
         f"""toksd AS MATERIALIZED (
-  SELECT {id_col}, word FROM (
-    SELECT {id_col}, unnest({w}) AS word FROM {table}
+  SELECT doc_id, word FROM (
+    SELECT doc_id, unnest({w}) AS word FROM documents
   ) WHERE regexp_matches(word, '^[a-z]+$')
 )""",
         "enc0 AS (SELECT word, '|' || regexp_replace(word, '(.)', '|\\1|', 'g')"
@@ -688,41 +660,39 @@ def bpe_encode_sql(
             f"FROM enc{r - 1})"
         )
     parts.append(
-        f"wt AS (SELECT word, CAST(len([x for x in string_split(sym, '|') "
+        "wt AS (SELECT word, CAST(len([x for x in string_split(sym, '|') "
         f"if x != '']) AS BIGINT) AS n_sym FROM enc{n_merges})"
     )
     parts.append(
-        f"""per AS (
-  SELECT t.{id_col},
+        """per AS (
+  SELECT t.doc_id,
          CAST(count(*) AS BIGINT) AS n_words,
          CAST(sum(length(t.word)) AS BIGINT) AS n_chars,
          CAST(sum(wt.n_sym) AS BIGINT) AS n_tokens
   FROM toksd t JOIN wt ON t.word = wt.word
-  GROUP BY t.{id_col}
+  GROUP BY t.doc_id
 )"""
     )
     return (
         ",\n".join(parts)
-        + f"""
-SELECT d.{id_col},
+        + """
+SELECT d.doc_id,
        COALESCE(p.n_words, 0) AS n_words,
        COALESCE(p.n_chars, 0) AS n_chars,
        COALESCE(p.n_tokens, 0) AS n_tokens
-FROM {table} d LEFT JOIN per p ON d.{id_col} = p.{id_col}
+FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
 """
     )
 
 
-def bpe_train_merges_sql(
-    table: str = "documents", text_col: str = "text", n_merges: int = 3
-) -> str:
+def bpe_train_merges_sql(n_merges: int = 3) -> str:
     """DuckDB twin of :func:`bpe_train_merges`: the full induction loop
     unrolled as CTE rounds, the argmax pair threaded through scalar
     subqueries into each round's literal replace."""
-    w = words_sql(text_col)
+    w = words_sql("text")
     parts = [
         f"""WITH words AS (
-  SELECT unnest({w}) AS word FROM {table}
+  SELECT unnest({w}) AS word FROM documents
 )""",
         "alphaw AS (SELECT word FROM words WHERE regexp_matches(word, '^[a-z]+$'))",
         "freq AS (SELECT word, count(*) AS f FROM alphaw GROUP BY word)",
@@ -769,12 +739,7 @@ def bpe_train_merges_sql(
 GOPHER_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_quality_flags(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def gopher_quality_flags(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Gopher-rule document quality flags (Rae et al. 2021 §A1.1): word-count
     bounds, mean-word-length bounds, alphabetic-word fraction, and stopword
     presence, plus the combined pass flag. The batch form of the reference's
@@ -790,7 +755,7 @@ def gopher_quality_flags(
     HOFs + comparisons). Composes with curation_pipeline as a pushed-down
     predicate."""
     docs = _widened(docs)
-    w = words(text_col)
+    w = words("text")
     n_words = F.size(w).cast("bigint")
     sum_len = F.aggregate(w, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x))
     stop_arr = F.array(*[F.lit(s) for s in GOPHER_STOP_WORDS])
@@ -802,7 +767,7 @@ def gopher_quality_flags(
     f_stop = n_stop >= 2
     as_int = lambda c: F.when(c, F.lit(1)).otherwise(F.lit(0)).cast("int")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         sum_len.alias("sum_word_chars"),
         n_stop.alias("n_stop_distinct"),
@@ -820,24 +785,22 @@ def gopher_quality_flags(
     )
 
 
-def gopher_quality_flags_sql(
-    table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
-) -> str:
+def gopher_quality_flags_sql() -> str:
     stop_list = ", ".join(f"'{s}'" for s in GOPHER_STOP_WORDS)
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col}, {w} AS w FROM {table}
+  SELECT doc_id, {w} AS w FROM documents
 ),
 agg AS (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST(len(w) AS BIGINT) AS n_words,
          COALESCE(CAST(list_sum([length(x) for x in w]) AS BIGINT), 0) AS sum_word_chars,
          CAST(len([s for s in [{stop_list}] IF list_contains(w, s)]) AS INT) AS n_stop_distinct,
          CAST(len([x for x in w IF regexp_matches(x, '^[a-z]+$')]) AS INT) AS n_alpha_words
   FROM base
 )
-SELECT {id_col}, n_words, sum_word_chars, n_stop_distinct, n_alpha_words,
+SELECT doc_id, n_words, sum_word_chars, n_stop_distinct, n_alpha_words,
        CAST(CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END AS INT)
          AS flag_word_count,
        CAST(CASE WHEN n_words > 0 AND sum_word_chars >= 3 * n_words
@@ -864,11 +827,7 @@ CHUNK_STRIDE = 24  # stride between chunk starts (8-token overlap)
 
 
 def chunk_sliding_windows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = CHUNK_WORDS,
-    stride: int = CHUNK_STRIDE,
+    docs: DataFrame, width: int = CHUNK_WORDS, stride: int = CHUNK_STRIDE
 ) -> DataFrame:
     """Cut each document into overlapping fixed-width token windows (the
     chunking step of context-window packing and RAG indexing): chunk ``k``
@@ -889,7 +848,7 @@ def chunk_sliding_windows(
             "between consecutive windows would be silently dropped"
         )
     docs = _widened(docs)
-    w = words(text_col)
+    w = words("text")
     n = F.size(w)
     n_chunks = F.when(n <= width, F.lit(1)).otherwise(
         F.floor((n - F.lit(width) + F.lit(stride - 1)) / F.lit(stride)).cast("int")
@@ -908,7 +867,7 @@ def chunk_sliding_windows(
 
     return (
         docs.where(n > 0)
-        .select(F.col(id_col).alias("doc_id"), F.explode(chunks).alias("c"))
+        .select(F.col("doc_id").alias("doc_id"), F.explode(chunks).alias("c"))
         .select(
             "doc_id",
             F.col("c.chunk_idx").alias("chunk_idx"),
@@ -919,13 +878,7 @@ def chunk_sliding_windows(
     )
 
 
-def chunk_sliding_windows_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = CHUNK_WORDS,
-    stride: int = CHUNK_STRIDE,
-) -> str:
+def chunk_sliding_windows_sql(width: int = CHUNK_WORDS, stride: int = CHUNK_STRIDE) -> str:
     from ..functions.hashing import md5_long_sql
 
     if not (0 < stride <= width):
@@ -933,10 +886,10 @@ def chunk_sliding_windows_sql(
             "chunk stride must satisfy 0 < stride <= width, or tokens "
             "between consecutive windows would be silently dropped"
         )
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH w AS (
-  SELECT {id_col} AS doc_id, {w} AS ws FROM {table}
+  SELECT doc_id AS doc_id, {w} AS ws FROM documents
 ), n AS (
   SELECT doc_id, ws, len(ws) AS nw,
          CASE WHEN len(ws) <= {width} THEN 1
@@ -962,14 +915,7 @@ SELECT doc_id, chunk_idx, start_token, n_tokens, chunk_hash FROM chunk
 """
 
 
-def source_scorecard(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-) -> DataFrame:
+def source_scorecard(docs: DataFrame) -> DataFrame:
     """Per-source ingestion scorecard -- the dashboard row a curation
     pipeline publishes per upstream feed, composing the existing
     primitives: exact-dup redundancy (docs minus distinct md5 texts),
@@ -993,14 +939,12 @@ def source_scorecard(
     # via extra_cols (the shuffle_shard passthrough rule) instead of a
     # join-back on id, which would shuffle corpus-vs-corpus and evaluate
     # the per-doc battery on both sides.
-    per_doc = gopher_quality_flags(
-        docs, id_col, text_col, extra_cols=(source_col, lang_col, len_col, text_col)
-    ).select(
-        F.col(id_col),
-        F.col(source_col).alias("source"),
-        F.col(lang_col).alias("lang"),
-        F.col(len_col).cast("bigint").alias("n_chars"),
-        md5_long(F.col(text_col)).alias("th"),
+    per_doc = gopher_quality_flags(docs, extra_cols=("source", "lang", "n_chars", "text")).select(
+        F.col("doc_id"),
+        F.col("source").alias("source"),
+        F.col("lang").alias("lang"),
+        F.col("n_chars").cast("bigint").alias("n_chars"),
+        md5_long(F.col("text")).alias("th"),
         F.col("passes_gopher"),
     )
     agg = per_doc.groupBy("source").agg(
@@ -1016,7 +960,7 @@ def source_scorecard(
     # evaluate the md5 + Gopher-battery subtree a second time (the
     # multi-consumer rule). This branch prunes to a two-column scan.
     lc = (
-        docs.select(F.col(source_col).alias("source"), F.col(lang_col).alias("lang"))
+        docs.select(F.col("source").alias("source"), F.col("lang").alias("lang"))
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1040,27 +984,20 @@ def source_scorecard(
     )
 
 
-def source_scorecard_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-) -> str:
+def source_scorecard_sql() -> str:
     """DuckDB twin of :func:`source_scorecard` (gopher flags CTE-composed;
     `//` = Spark's DIV on these nonnegative counts)."""
     from ..functions.hashing import md5_long_sql
 
-    gopher = gopher_quality_flags_sql(table, id_col, text_col)
-    th = md5_long_sql(text_col)
+    gopher = gopher_quality_flags_sql()
+    th = md5_long_sql("text")
     return f"""
 WITH gf AS ({gopher}),
 per_doc AS (
-  SELECT d.{id_col}, d.{source_col} AS source, d.{lang_col} AS lang,
-         CAST(d.{len_col} AS BIGINT) AS n_chars, {th} AS th,
+  SELECT d.doc_id, d.source AS source, d.lang AS lang,
+         CAST(d.n_chars AS BIGINT) AS n_chars, {th} AS th,
          gf.passes_gopher
-  FROM {table} d JOIN gf USING ({id_col})
+  FROM documents d JOIN gf USING (doc_id)
 ),
 agg AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1086,11 +1023,11 @@ SELECT a.source, n_docs, n_distinct_texts,
 FROM agg a JOIN top USING (source)
 """
 
+HEAPS_VOCAB_GROWTH_N_CHECKPOINTS = 10
+
+
 def heaps_vocab_growth(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_checkpoints: int = 10,
+    docs: DataFrame, n_checkpoints: int = HEAPS_VOCAB_GROWTH_N_CHECKPOINTS
 ) -> DataFrame:
     """Heaps'-law vocabulary growth curve: cumulative corpus size vs
     cumulative distinct-vocabulary size at ``n_checkpoints`` evenly-spaced
@@ -1117,7 +1054,7 @@ def heaps_vocab_growth(
     row numbering -- the checkpoint grid replaces both."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col(id_col).alias("id"), words(text_col).alias("ws"))
+    d = _widened(docs).select(F.col("doc_id").alias("id"), words("text").alias("ws"))
     # 1-row frame consumed by the broadcast under BOTH with_q consumers
     # (per_doc + firsts) -- broadcast builds re-evaluate the subtree per
     # consumer (r2 rule), so without the checkpoint the max(id) corpus
@@ -1165,23 +1102,18 @@ def heaps_vocab_growth(
     )
 
 
-def heaps_vocab_growth_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_checkpoints: int = 10,
-) -> str:
+def heaps_vocab_growth_sql() -> str:
     """DuckDB twin of :func:`heaps_vocab_growth`: same checkpoint ceil,
     same min-first-appearance aggregate, same zero-filled cumulative grid
     (`//` = integer division; range() is the literal checkpoint grid)."""
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, {words_sql(text_col)} AS ws FROM {table}
+  SELECT doc_id AS id, {words_sql('text')} AS ws FROM documents
 ),
 mx AS (SELECT max(id) AS max_id FROM d),
 wq AS (
   SELECT id, ws,
-         greatest(({n_checkpoints} * id + greatest(max_id, 1) - 1) // greatest(max_id, 1), 1) AS q
+         greatest(({HEAPS_VOCAB_GROWTH_N_CHECKPOINTS} * id + greatest(max_id, 1) - 1) // greatest(max_id, 1), 1) AS q
   FROM d, mx
 ),
 per_doc AS (
@@ -1195,7 +1127,7 @@ firsts AS (
     ) GROUP BY 1
   ) GROUP BY 1
 ),
-grid AS (SELECT CAST(range AS BIGINT) AS q FROM range(1, {n_checkpoints + 1}))
+grid AS (SELECT CAST(range AS BIGINT) AS q FROM range(1, {HEAPS_VOCAB_GROWTH_N_CHECKPOINTS + 1}))
 SELECT q AS checkpoint,
        CAST(sum(COALESCE(docs, 0)) OVER win AS BIGINT) AS docs_cum,
        CAST(sum(COALESCE(toks, 0)) OVER win AS BIGINT) AS tokens_cum,
@@ -1204,12 +1136,12 @@ FROM grid LEFT JOIN per_doc USING (q) LEFT JOIN firsts USING (q)
 WINDOW win AS (ORDER BY q ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
 
+RAKE_KEYWORDS_N_STOP = 5
+RAKE_KEYWORDS_K = 20
+
+
 def rake_keywords(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_stop: int = 5,
-    k: int = 20,
+    docs: DataFrame, n_stop: int = RAKE_KEYWORDS_N_STOP, k: int = RAKE_KEYWORDS_K
 ) -> DataFrame:
     """RAKE keyword extraction (Rose et al.) with corpus-derived
     statistical stopwords: candidate phrases are the maximal token runs
@@ -1245,7 +1177,7 @@ def rake_keywords(
     phrases -- with ranks assigned on the k-row result."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col(id_col).alias("id"), words(text_col).alias("ws"))
+    d = _widened(docs).select(F.col("doc_id").alias("id"), words("text").alias("ws"))
     toks = d.select("id", F.posexplode("ws").alias("pos", "w"))
     freq_all = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # stopword cut as a distributed TakeOrdered (orderBy().limit --
@@ -1325,18 +1257,12 @@ def rake_keywords(
     )
 
 
-def rake_keywords_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_stop: int = 5,
-    k: int = 20,
-) -> str:
+def rake_keywords_sql() -> str:
     """DuckDB twin of :func:`rake_keywords`: same statistical stopwords,
     same integer scoring, string_agg ORDER BY phrase assembly."""
     return f"""
 WITH d AS (
-  SELECT {id_col} AS id, {words_sql(text_col)} AS ws FROM {table}
+  SELECT doc_id AS id, {words_sql('text')} AS ws FROM documents
 ),
 toks AS (
   SELECT id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w FROM d
@@ -1345,7 +1271,7 @@ freq_all AS (SELECT w, count(*) AS c FROM toks GROUP BY 1),
 stops AS (
   SELECT w FROM (
     SELECT w, row_number() OVER (ORDER BY c DESC, w) AS r FROM freq_all
-  ) WHERE r <= {n_stop}
+  ) WHERE r <= {RAKE_KEYWORDS_N_STOP}
 ),
 marked AS (
   SELECT id, pos, w, (w IN (SELECT w FROM stops)) AS is_stop FROM toks
@@ -1379,16 +1305,14 @@ SELECT CAST(row_number() OVER (ORDER BY score_ppm DESC, phrase) AS BIGINT) AS ra
        phrase, n_words, score_ppm
 FROM phrases
 ORDER BY score_ppm DESC, phrase
-LIMIT {k}
+LIMIT {RAKE_KEYWORDS_K}
 """
 
-def tokenizer_fertility(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("lang", "source"),
-    n_merges: int = 3,
-) -> DataFrame:
+TOKENIZER_FERTILITY_GROUP_COLS = ("lang", "source")
+TOKENIZER_FERTILITY_N_MERGES = 3
+
+
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     """Tokenizer fertility audit: per corpus segment (lang, source), the
     tokens-per-word and tokens-per-character ratios of the trained BPE
     tokenizer -- the standard multilingual-tokenizer cost metric (a
@@ -1413,12 +1337,12 @@ def tokenizer_fertility(
     # coalesce-to-0 is row-identical and one corpus scan + one join
     # cheaper. The coalesce keeps an (unlikely) all-zero-alpha segment's
     # sums at 0 instead of NULL, exactly what the inner-join form produced.
-    per = _bpe_encode_counts(docs, id_col, text_col, n_merges)
-    seg = docs.select(F.col(id_col), *[F.col(c) for c in group_cols])
+    per = _bpe_encode_counts(docs, "doc_id", "text", TOKENIZER_FERTILITY_N_MERGES)
+    seg = docs.select(F.col("doc_id"), *[F.col(c) for c in TOKENIZER_FERTILITY_GROUP_COLS])
     z = F.lit(0).cast("bigint")
     agg = (
-        seg.join(per, id_col, "left")
-        .groupBy(*group_cols)
+        seg.join(per, "doc_id", "left")
+        .groupBy(*TOKENIZER_FERTILITY_GROUP_COLS)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.coalesce(F.col("n_words"), z)).cast("bigint").alias("n_words"),
@@ -1427,7 +1351,7 @@ def tokenizer_fertility(
         )
     )
     return agg.select(
-        *group_cols,
+        *TOKENIZER_FERTILITY_GROUP_COLS,
         "n_docs",
         "n_words",
         "n_tokens",
@@ -1448,20 +1372,14 @@ def tokenizer_fertility(
     )
 
 
-def tokenizer_fertility_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("lang", "source"),
-    n_merges: int = 3,
-) -> str:
+def tokenizer_fertility_sql() -> str:
     """DuckDB twin of :func:`tokenizer_fertility`: the full bpe_encode
     oracle nested as a CTE (DuckDB allows WITH inside CTE bodies -- the
     ann_recall_at_k / incremental_corpus precedent), joined to the
     segment columns and folded with the same guarded integer ppm."""
-    enc = bpe_encode_sql(table, id_col, text_col, n_merges)
-    grp = ", ".join(group_cols)
-    grp_d = ", ".join(f"d.{c}" for c in group_cols)
+    enc = bpe_encode_sql(n_merges=TOKENIZER_FERTILITY_N_MERGES)
+    grp = ", ".join(TOKENIZER_FERTILITY_GROUP_COLS)
+    grp_d = ", ".join(f"d.{c}" for c in TOKENIZER_FERTILITY_GROUP_COLS)
     return f"""
 WITH enc AS ({enc}),
 agg AS (
@@ -1470,7 +1388,7 @@ agg AS (
          CAST(sum(e.n_words) AS BIGINT) AS n_words,
          CAST(sum(e.n_chars) AS BIGINT) AS n_chars,
          CAST(sum(e.n_tokens) AS BIGINT) AS n_tokens
-  FROM {table} d JOIN enc e ON e.{id_col} = d.{id_col}
+  FROM documents d JOIN enc e ON e.doc_id = d.doc_id
   GROUP BY {grp_d}
 )
 SELECT {grp}, n_docs, n_words, n_tokens,
@@ -1483,10 +1401,11 @@ SELECT {grp}, n_docs, n_words, n_tokens,
 FROM agg
 """
 
+FEATURE_HASHING_PROFILE_N_BUCKETS = 16
+
+
 def feature_hashing_profile(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 16,
+    docs: DataFrame, n_buckets: int = FEATURE_HASHING_PROFILE_N_BUCKETS
 ) -> DataFrame:
     """Hashing-trick (feature hashing / HashingVectorizer) collision
     audit: every token maps to bucket = md5(token) % n_buckets with the
@@ -1508,7 +1427,7 @@ def feature_hashing_profile(
     n_buckets (16) sits below this corpus's ~31-token vocabulary ON
     PURPOSE: the audit exists to SHOW collisions and sign cancellation;
     a production dimension would be 2^18+."""
-    toks = _widened(docs).select(F.explode(words(text_col)).alias("tok"))
+    toks = _widened(docs).select(F.explode(words("text")).alias("tok"))
     h = md5_long(F.col("tok"))
     keyed = toks.select(F.col("tok"), h.alias("h")).select(
         "tok",
@@ -1529,21 +1448,17 @@ def feature_hashing_profile(
     )
 
 
-def feature_hashing_profile_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    n_buckets: int = 16,
-) -> str:
+def feature_hashing_profile_sql() -> str:
     """DuckDB twin of :func:`feature_hashing_profile`: same md5 bucket,
     sign bit, and two-level fold."""
     h = md5_long_sql("tok")
     return f"""
 WITH toks AS (
-  SELECT unnest({words_sql(text_col)}) AS tok FROM {table}
+  SELECT unnest({words_sql('text')}) AS tok FROM documents
 ),
 keyed AS (
-  SELECT tok, {h} % {n_buckets} AS bucket,
-         CASE WHEN ({h} // {n_buckets}) % 2 = 0 THEN 1 ELSE -1 END AS s
+  SELECT tok, {h} % {FEATURE_HASHING_PROFILE_N_BUCKETS} AS bucket,
+         CASE WHEN ({h} // {FEATURE_HASHING_PROFILE_N_BUCKETS}) % 2 = 0 THEN 1 ELSE -1 END AS s
   FROM toks
 ),
 per_tok AS (
@@ -1557,12 +1472,10 @@ SELECT bucket,
 FROM per_tok GROUP BY 1
 """
 
-def vocab_drift_halves(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 10,
-) -> DataFrame:
+VOCAB_DRIFT_HALVES_K = 10
+
+
+def vocab_drift_halves(docs: DataFrame, k: int = VOCAB_DRIFT_HALVES_K) -> DataFrame:
     """Crawl-order vocabulary drift: token occurrence RATES in the first
     half of the corpus (by document id, i.e. crawl order) vs the second
     half, reported for the union of the two halves' top-k tokens -- the
@@ -1583,10 +1496,10 @@ def vocab_drift_halves(
     vocab-bounded counts -- no unpartitioned window, no full sort; the
     union (<= 2k rows) broadcasts back onto the counts frame."""
     toks = _widened(docs).select(
-        F.col(id_col).alias("id"), F.explode(words(text_col)).alias("tok")
+        F.col("doc_id").alias("id"), F.explode(words("text")).alias("tok")
     )
     bounds = docs.agg(
-        F.expr(f"(min({id_col}) + max({id_col})) DIV 2").alias("mid")
+        F.expr("(min(doc_id) + max(doc_id)) DIV 2").alias("mid")
     )
     counted = (
         toks.crossJoin(F.broadcast(bounds))
@@ -1628,21 +1541,16 @@ def vocab_drift_halves(
     )
 
 
-def vocab_drift_halves_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 10,
-) -> str:
+def vocab_drift_halves_sql() -> str:
     """DuckDB twin of :func:`vocab_drift_halves`: same midpoint split,
     conditional counts, ORDER BY/LIMIT top-k unions, and guarded ppm."""
-    w = words_sql(text_col)
+    w = words_sql("text")
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS id, unnest({w}) AS tok FROM {table}
+  SELECT doc_id AS id, unnest({w}) AS tok FROM documents
 ),
 bounds AS (
-  SELECT (min({id_col}) + max({id_col})) // 2 AS mid FROM {table}
+  SELECT (min(doc_id) + max(doc_id)) // 2 AS mid FROM documents
 ),
 counted AS (
   SELECT tok,
@@ -1652,9 +1560,9 @@ counted AS (
 ),
 totals AS (SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2 FROM counted),
 sel AS (
-  SELECT tok FROM (SELECT tok FROM counted ORDER BY c1 DESC, tok LIMIT {k})
+  SELECT tok FROM (SELECT tok FROM counted ORDER BY c1 DESC, tok LIMIT {VOCAB_DRIFT_HALVES_K})
   UNION
-  SELECT tok FROM (SELECT tok FROM counted ORDER BY c2 DESC, tok LIMIT {k})
+  SELECT tok FROM (SELECT tok FROM counted ORDER BY c2 DESC, tok LIMIT {VOCAB_DRIFT_HALVES_K})
 )
 SELECT c.tok AS token, c.c1 AS cnt_first, c.c2 AS cnt_second,
        CAST(CASE WHEN n1 > 0 THEN (1000000 * c1) // n1 ELSE 0 END AS BIGINT)

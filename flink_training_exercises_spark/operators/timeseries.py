@@ -24,14 +24,7 @@ from pyspark.sql import functions as F
 HOUR_MS = 3_600_000
 
 
-def gapfill_ffill(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-    step_ms: int = HOUR_MS,
-) -> DataFrame:
+def gapfill_ffill(events: DataFrame, step_ms: int = HOUR_MS) -> DataFrame:
     """Regularize each key's event series onto a fixed ``step_ms`` grid
     spanning that key's own [min, max] bucket range, carrying the last
     observed value forward through empty buckets.
@@ -51,13 +44,13 @@ def gapfill_ffill(
     """
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
+    ms = _epoch_ms("ts")
     obs = events.select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         (ms - ms % step_ms).alias("bucket_ms"),
         ms.alias("_ms"),
-        F.col(seq_col).alias("_seq"),
-        F.col(value_col).alias("value"),
+        F.col("event_id").alias("_seq"),
+        F.col("value").alias("value"),
     )
     w_pick = Window.partitionBy("key", "bucket_ms").orderBy(
         F.desc("_ms"), F.desc("_seq")
@@ -82,7 +75,7 @@ def gapfill_ffill(
     return (
         grid.join(per_bucket, ["key", "bucket_ms"], "left")
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "bucket_ms",
             F.last("value", ignorenulls=True).over(w_fill).alias("value"),
             F.col("value").isNotNull().alias("is_observed"),
@@ -90,22 +83,15 @@ def gapfill_ffill(
     )
 
 
-def gapfill_ffill_sql(
-    table: str = "events",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-    step_ms: int = HOUR_MS,
-) -> str:
+def gapfill_ffill_sql() -> str:
     """DuckDB twin of :func:`gapfill_ffill` (generate_series grid +
     ``last_value IGNORE NULLS`` running fill)."""
     return f"""
 WITH obs AS (
-  SELECT {key_col} AS key,
-         epoch_ms({ts_col}) - epoch_ms({ts_col}) % {step_ms} AS bucket_ms,
-         epoch_ms({ts_col}) AS ms, {seq_col} AS seq, {value_col} AS value
-  FROM {table}
+  SELECT user_id AS key,
+         epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
+         epoch_ms(ts) AS ms, event_id AS seq, value AS value
+  FROM events
 ),
 per_bucket AS (
   SELECT key, bucket_ms, value FROM (
@@ -116,11 +102,11 @@ per_bucket AS (
   ) WHERE rk = 1
 ),
 grid AS (
-  SELECT key, unnest(generate_series(min(bucket_ms), max(bucket_ms), {step_ms}))
+  SELECT key, unnest(generate_series(min(bucket_ms), max(bucket_ms), {HOUR_MS}))
            AS bucket_ms
   FROM obs GROUP BY key
 )
-SELECT g.key AS {key_col},
+SELECT g.key AS user_id,
        g.bucket_ms,
        last_value(p.value IGNORE NULLS) OVER (
          PARTITION BY g.key ORDER BY g.bucket_ms
@@ -141,13 +127,7 @@ ZSCORE_MIN_N = 10  # minimum baseline rows before flagging
 ZSCORE_K = 3  # flag when |x - mean| > K * sample stddev
 
 
-def rolling_zscore_anomalies(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def rolling_zscore_anomalies(events: DataFrame) -> DataFrame:
     """Per-key rolling z-score anomaly detection with EXACT integer
     statistics: each event is compared against the mean/stddev of its own
     key's previous ``ZSCORE_LOOKBACK`` values (a trailing frame that
@@ -172,11 +152,11 @@ def rolling_zscore_anomalies(
     -- O(1) state per row, no second shuffle, no UDF."""
     from pyspark.sql import Window
 
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        F.col(seq_col).alias("event_id"),
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("_ts"),
+        F.col("event_id").alias("event_id"),
+        F.col("user_id").alias("key"),
+        F.col("ts").alias("_ts"),
         cents.alias("cents"),
     )
     w = (
@@ -208,21 +188,15 @@ def rolling_zscore_anomalies(
     )
 
 
-def rolling_zscore_anomalies_sql(
-    table: str = "events",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-) -> str:
+def rolling_zscore_anomalies_sql() -> str:
     """DuckDB twin of :func:`rolling_zscore_anomalies` (same fixed-point
     cents, same division-free BIGINT test)."""
     k2 = ZSCORE_K * ZSCORE_K
     return f"""
 WITH c AS (
-  SELECT {seq_col} AS event_id, {key_col} AS user_id, {ts_col} AS _ts,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS cents
-  FROM {table}
+  SELECT event_id AS event_id, user_id AS user_id, ts AS _ts,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
+  FROM events
 ),
 st AS (
   SELECT event_id, user_id, cents,
@@ -251,12 +225,7 @@ FROM st
 DAY_MS = 86_400_000
 
 
-def value_hour_correlation(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def value_hour_correlation(events: DataFrame) -> DataFrame:
     """Per-type Pearson correlation between the event value (integer cents)
     and the UTC hour-of-day -- the seasonality screen a metrics pipeline
     runs before modeling. ``corr()`` itself is banned under the
@@ -286,14 +255,14 @@ def value_hour_correlation(
     partials in double."""
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
+    ms = _epoch_ms("ts")
     # NULL values would desync the sufficient statistics (count(*) sees
     # the row, sum(x)/sum(x*x) skip it -- r is then not the Pearson r of
     # any sample); exclude them structurally on BOTH engines. Latent on
     # this NULL-free testdata; pushed to the scan as IsNotNull.
-    base = events.where(F.col(value_col).isNotNull()).select(
-        F.col(type_col).alias("event_type"),
-        F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("x"),
+    base = events.where(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("event_type"),
+        F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("x"),
         (ms % F.lit(DAY_MS)).alias("_msday"),
     ).selectExpr("event_type", "x", f"_msday div {HOUR_MS} AS y")
     agg = base.groupBy("event_type").agg(
@@ -318,20 +287,15 @@ def value_hour_correlation(
     )
 
 
-def value_hour_correlation_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def value_hour_correlation_sql() -> str:
     """DuckDB twin of :func:`value_hour_correlation` (same BIGINT sums,
     IDENTICAL double expression tree for the closed form)."""
     return f"""
 WITH c AS (
-  SELECT {type_col} AS event_type,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS x,
-         (epoch_ms({ts_col}) % {DAY_MS}) // {HOUR_MS} AS y
-  FROM {table} WHERE {value_col} IS NOT NULL
+  SELECT event_type AS event_type,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS x,
+         (epoch_ms(ts) % {DAY_MS}) // {HOUR_MS} AS y
+  FROM events WHERE value IS NOT NULL
 ),
 a AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -356,12 +320,7 @@ FROM d
 """
 
 
-def value_trend_ols(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def value_trend_ols(events: DataFrame) -> DataFrame:
     """Per-type ordinary-least-squares trend of the event value (integer
     cents) against the day index -- the drift screen that follows
     :func:`value_hour_correlation`'s seasonality screen, under the same
@@ -396,10 +355,10 @@ def value_trend_ols(
     # NULL values would desync n/sx/sxx (row counted, y sums skipped --
     # the slope is then not the OLS of any sample); exclude structurally
     # on BOTH engines (latent on this NULL-free testdata).
-    base = events.where(F.col(value_col).isNotNull()).select(
-        F.col(type_col).alias("event_type"),
-        F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("y"),
-        F.floor(_epoch_ms(ts_col) / F.lit(DAY_MS)).cast("bigint").alias("day"),
+    base = events.where(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("event_type"),
+        F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("y"),
+        F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("day"),
     )
     w = Window.partitionBy("event_type")
     based = base.select(
@@ -428,21 +387,16 @@ def value_trend_ols(
     )
 
 
-def value_trend_ols_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def value_trend_ols_sql() -> str:
     """DuckDB twin of :func:`value_trend_ols` (same BIGINT sums, IDENTICAL
     double expression trees; `//` = Spark's FLOOR(double div) on these
     nonnegative epoch values)."""
     return f"""
 WITH c AS (
-  SELECT {type_col} AS event_type,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS y,
-         epoch_ms({ts_col}) // {DAY_MS} AS day
-  FROM {table} WHERE {value_col} IS NOT NULL
+  SELECT event_type AS event_type,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS y,
+         epoch_ms(ts) // {DAY_MS} AS day
+  FROM events WHERE value IS NOT NULL
 ),
 r AS (
   SELECT event_type, y,
@@ -473,13 +427,7 @@ FROM d
 """
 
 
-def cusum_level_shift(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket_ms: int = HOUR_MS,
-) -> DataFrame:
+def cusum_level_shift(events: DataFrame) -> DataFrame:
     """Per-type CUSUM level-shift detection over the bucketed value series
     -- the change-point screen that complements the rolling z-score
     (z-scores catch SPIKES; CUSUM accumulates small sustained SHIFTS).
@@ -510,15 +458,15 @@ def cusum_level_shift(
     mitigation is coarser buckets or whole-unit cents."""
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
+    ms = _epoch_ms("ts")
     # an all-NULL-value bucket would yield x = NULL (sum skips NULLs) --
     # counted in n_buckets but invisible to every running sum; exclude
     # NULL values structurally on BOTH engines (latent on this NULL-free
     # testdata; mixed buckets are unaffected, sum skipped them anyway).
-    buck = events.where(F.col(value_col).isNotNull()).select(
-        F.col(type_col).alias("event_type"),
-        (ms - ms % F.lit(bucket_ms)).alias("bucket_ms"),
-        F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1))
+    buck = events.where(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("event_type"),
+        (ms - ms % F.lit(HOUR_MS)).alias("bucket_ms"),
+        F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
         .cast("bigint")
         .alias("cents"),
     ).groupBy("event_type", "bucket_ms").agg(F.sum("cents").alias("x"))
@@ -573,21 +521,15 @@ def cusum_level_shift(
     return up.join(down, "event_type")
 
 
-def cusum_level_shift_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket_ms: int = HOUR_MS,
-) -> str:
+def cusum_level_shift_sql() -> str:
     """DuckDB twin of :func:`cusum_level_shift` (same exact-integer
     windows; sum() outputs cast back to BIGINT per the HUGEINT rule)."""
     return f"""
 WITH buck AS (
-  SELECT {type_col} AS event_type,
-         epoch_ms({ts_col}) - epoch_ms({ts_col}) % {bucket_ms} AS bucket_ms,
-         CAST(sum(CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS x
-  FROM {table} WHERE {value_col} IS NOT NULL GROUP BY 1, 2
+  SELECT event_type AS event_type,
+         epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
+         CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS x
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 ),
 scaled AS (
   SELECT event_type, bucket_ms,
@@ -624,12 +566,7 @@ JOIN (SELECT * FROM ranked WHERE rd = 1) d USING (event_type)
 """
 
 
-def theil_sen_trend(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def theil_sen_trend(events: DataFrame) -> DataFrame:
     """Per-type Theil-Sen trend: the MEDIAN of all pairwise slopes of the
     daily cents series -- the robust companion to :func:`value_trend_ols`
     (one corrupted day moves OLS arbitrarily; Theil-Sen tolerates ~29%
@@ -658,11 +595,11 @@ def theil_sen_trend(
         # DuckDB-NULLS-LAST divergence class (KS lesson) -- exclude NULL
         # values structurally on BOTH engines (latent on this NULL-free
         # testdata; mixed days are unaffected, sum skipped them anyway)
-        events.where(F.col(value_col).isNotNull())
+        events.where(F.col("value").isNotNull())
         .select(
-            F.col(type_col).alias("event_type"),
-            F.floor(_epoch_ms(ts_col) / F.lit(DAY_MS)).cast("bigint").alias("d"),
-            F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1))
+            F.col("event_type").alias("event_type"),
+            F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("d"),
+            F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
             .cast("bigint")
             .alias("cents"),
         )
@@ -706,20 +643,15 @@ def theil_sen_trend(
     )
 
 
-def theil_sen_trend_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def theil_sen_trend_sql() -> str:
     """DuckDB twin of :func:`theil_sen_trend` (same daily BIGINT sums,
     same one-division slopes, same positional median)."""
     return f"""
 WITH daily AS (
-  SELECT {type_col} AS event_type,
-         epoch_ms({ts_col}) // {DAY_MS} AS d,
-         CAST(sum(CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
-  FROM {table} WHERE {value_col} IS NOT NULL GROUP BY 1, 2
+  SELECT event_type AS event_type,
+         epoch_ms(ts) // {DAY_MS} AS d,
+         CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 ),
 pairs AS (
   SELECT a.event_type,
@@ -747,14 +679,10 @@ SELECT event_type, n_days, n_pairs, slope_cents_per_day
 FROM ndays JOIN med USING (event_type)
 """
 
-def downsample_lttb(
-    events: DataFrame,
-    key_col: str = "event_type",
-    time_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    n_out: int = 20,
-) -> DataFrame:
+DOWNSAMPLE_LTTB_N_OUT = 20
+
+
+def downsample_lttb(events: DataFrame, n_out: int = DOWNSAMPLE_LTTB_N_OUT) -> DataFrame:
     """Perceptual time-series downsampling, largest-triangle-one-bucket
     (LTOB -- Steinarsson's parallel variant of LTTB): per series key,
     keep both endpoints plus, from each of ``n_out`` equal-count interior
@@ -783,12 +711,12 @@ def downsample_lttb(
     (n_out + 2) x |keys| rows."""
     from ..functions.time import epoch_ms as _epoch_ms
 
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        F.col(key_col).alias("k"),
-        _epoch_ms(time_col).alias("x"),
+        F.col("event_type").alias("k"),
+        _epoch_ms("ts").alias("x"),
         cents.alias("y"),
-        F.col(id_col).alias("id"),
+        F.col("event_id").alias("id"),
     )
     w = Window.partitionBy("k").orderBy("x", "id")
     wk = Window.partitionBy("k")
@@ -835,26 +763,19 @@ def downsample_lttb(
     )
     return (
         ends.unionByName(winners)
-        .select(F.col("k").alias(key_col), "bucket", "ts_ms", "cents")
+        .select(F.col("k").alias("event_type"), "bucket", "ts_ms", "cents")
     )
 
 
-def downsample_lttb_sql(
-    table: str = "events",
-    key_col: str = "event_type",
-    time_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    n_out: int = 20,
-) -> str:
+def downsample_lttb_sql() -> str:
     """DuckDB twin of :func:`downsample_lttb`: same (ms, id) order, same
     integer geometry, same argmax tie-break (`//` = integer division)."""
     return f"""
 WITH base AS (
-  SELECT {key_col} AS k, epoch_ms({time_col}) AS x,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS y,
-         {id_col} AS id
-  FROM {table}
+  SELECT event_type AS k, epoch_ms(ts) AS x,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS y,
+         event_id AS id
+  FROM events
 ),
 pts AS (
   SELECT k, x, y, id,
@@ -865,13 +786,13 @@ pts AS (
   FROM base WINDOW w AS (PARTITION BY k ORDER BY x, id)
 ),
 ends AS (
-  SELECT k, CAST(CASE WHEN rn = 1 THEN -1 ELSE {n_out} END AS BIGINT) AS bucket,
+  SELECT k, CAST(CASE WHEN rn = 1 THEN -1 ELSE {DOWNSAMPLE_LTTB_N_OUT} END AS BIGINT) AS bucket,
          x AS ts_ms, y AS cents
   FROM pts WHERE rn = 1 OR rn = n
 ),
 interior AS (
   SELECT k, x, y, id,
-         CAST(((rn - 2) * {n_out}) // greatest(n - 2, 1) AS BIGINT) AS bucket,
+         CAST(((rn - 2) * {DOWNSAMPLE_LTTB_N_OUT}) // greatest(n - 2, 1) AS BIGINT) AS bucket,
          abs((xp - xn) * (y - yp) - (xp - x) * (yn - yp)) AS area2
   FROM pts WHERE rn > 1 AND rn < n
 ),
@@ -884,9 +805,9 @@ winners AS (
     FROM interior
   ) WHERE pr = 1
 )
-SELECT k AS {key_col}, bucket, ts_ms, cents FROM ends
+SELECT k AS event_type, bucket, ts_ms, cents FROM ends
 UNION ALL
-SELECT k AS {key_col}, bucket, ts_ms, cents FROM winners
+SELECT k AS event_type, bucket, ts_ms, cents FROM winners
 """
 
 
@@ -912,11 +833,7 @@ BENFORD_PPM = {
 assert sum(BENFORD_PPM.values()) == 1_000_000
 
 
-def benford_value_audit(
-    events: DataFrame,
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def benford_value_audit(events: DataFrame) -> DataFrame:
     """Benford's-law first-digit audit of the cents series per type --
     the forensic data-quality screen (Nigrini): fabricated, clipped, or
     unit-mangled monetary columns drift from the log10(1+1/d) first-
@@ -955,9 +872,9 @@ def benford_value_audit(
     than the aggregate's (event_type, digit) hash, so it costs one more
     Exchange (the finer-partitionBy rule), but over a |types| x 9 frame,
     never the corpus; no second corpus pass, no join-back."""
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     d = events.select(
-        F.col(type_col).alias("event_type"), cents.alias("cents")
+        F.col("event_type").alias("event_type"), cents.alias("cents")
     ).where(F.col("cents") > 0).select(
         "event_type",
         F.substring(F.col("cents").cast("string"), 1, 1).cast("bigint").alias("digit"),
@@ -985,11 +902,7 @@ def benford_value_audit(
     )
 
 
-def benford_value_audit_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> str:
+def benford_value_audit_sql() -> str:
     """DuckDB twin of :func:`benford_value_audit` (same cents fixed
     point, same string first digit, same ppm DIV arithmetic; BIGINT
     casts on count/sum outputs -- the HUGEINT dtype-skew rule)."""
@@ -998,9 +911,9 @@ def benford_value_audit_sql(
     )
     return f"""
 WITH c AS (
-  SELECT {type_col} AS event_type,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS cents
-  FROM {table}
+  SELECT event_type AS event_type,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
+  FROM events
 ),
 d AS (
   SELECT event_type,
@@ -1021,11 +934,7 @@ FROM counts
 """
 
 
-def chi_squared_independence(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def chi_squared_independence(events: DataFrame) -> DataFrame:
     """Chi-squared independence screen (Pearson 1900) between event
     type and UTC hour-of-day -- the feature/drift screen ("does
     behavior depend on time-of-day?") every segmentation pipeline runs
@@ -1074,9 +983,9 @@ def chi_squared_independence(
 
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
+    ms = _epoch_ms("ts")
     base = events.select(
-        F.col(type_col).alias("event_type"),
+        F.col("event_type").alias("event_type"),
         (ms % F.lit(DAY_MS)).alias("_msday"),
     ).selectExpr("event_type", f"_msday div {HOUR_MS} AS hour")
     obs = base.groupBy("event_type", "hour").agg(
@@ -1134,20 +1043,16 @@ def chi_squared_independence(
     )
 
 
-def chi_squared_independence_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> str:
+def chi_squared_independence_sql() -> str:
     """DuckDB twin of :func:`chi_squared_independence` (same epoch-ms hour
     bucket, same full-grid construction, same BIGINT margins and the
     IDENTICAL left-associated double tree for the contribution; BIGINT
     casts on sum() outputs -- the HUGEINT dtype-skew rule)."""
     return f"""
 WITH base AS (
-  SELECT {type_col} AS event_type,
-         (epoch_ms({ts_col}) % {DAY_MS}) // {HOUR_MS} AS hour
-  FROM {table}
+  SELECT event_type AS event_type,
+         (epoch_ms(ts) % {DAY_MS}) // {HOUR_MS} AS hour
+  FROM events
 ),
 obs AS (
   SELECT event_type, hour, CAST(count(*) AS BIGINT) AS n
@@ -1183,12 +1088,7 @@ FROM cells
 # ---------------------------------------------------------------------------
 
 
-def ks_two_sample_drift(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def ks_two_sample_drift(events: DataFrame) -> DataFrame:
     """Kolmogorov-Smirnov two-sample screen (Kolmogorov 1933, Smirnov
     1939) of the cents series, first time-half vs second time-half per
     type -- the DISTRIBUTIONAL drift screen completing the family next
@@ -1233,21 +1133,21 @@ def ks_two_sample_drift(
 
     from ..functions.time import epoch_ms as _epoch_ms
 
-    ms = _epoch_ms(ts_col)
+    ms = _epoch_ms("ts")
     # NULL values are excluded on BOTH engines BEFORE anything else:
     # the cumulative-ECDF window orders by cents, and Spark ASC sorts
     # NULLS FIRST while DuckDB ASC sorts NULLS LAST -- an unfiltered
     # NULL cell would shift every prefix sum differently per engine
     # (the benford IsNotNull precedent; latent on this NULL-free
     # testdata, structural here)
-    events = events.where(F.col(value_col).isNotNull())
+    events = events.where(F.col("value").isNotNull())
     # 1-row midpoint broadcast (pruned ts-only scan)
     mid = events.select(ms.alias("_ms")).agg(
         F.expr("(min(_ms) + max(_ms)) DIV 2").alias("mid")
     )
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        F.col(type_col).alias("event_type"),
+        F.col("event_type").alias("event_type"),
         cents.alias("cents"),
         ms.alias("_ms"),
     )
@@ -1321,27 +1221,22 @@ def ks_two_sample_drift(
     )
 
 
-def ks_two_sample_drift_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def ks_two_sample_drift_sql() -> str:
     """DuckDB twin of :func:`ks_two_sample_drift` (same midpoint, same
     conditional cell counts, same cumulative ECDFs and scaled-gap max;
     BIGINT casts on sum() outputs -- the HUGEINT dtype-skew rule)."""
-    return f"""
+    return """
 WITH src AS (
-  SELECT * FROM {table} WHERE {value_col} IS NOT NULL
+  SELECT * FROM events WHERE value IS NOT NULL
 ),
 mid AS (
-  SELECT (min(epoch_ms({ts_col})) + max(epoch_ms({ts_col}))) // 2 AS mid
+  SELECT (min(epoch_ms(ts)) + max(epoch_ms(ts))) // 2 AS mid
   FROM src
 ),
 base AS (
-  SELECT {type_col} AS event_type,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS cents,
-         epoch_ms({ts_col}) AS ms
+  SELECT event_type AS event_type,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents,
+         epoch_ms(ts) AS ms
   FROM src
 ),
 cells AS (
@@ -1389,13 +1284,7 @@ GROUP BY 1
 ACF_MAX_LAG = 6  # lags 1..6 hours: short-horizon memory screen
 
 
-def value_acf_lags(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    max_lag: int = ACF_MAX_LAG,
-) -> DataFrame:
+def value_acf_lags(events: DataFrame) -> DataFrame:
     """Autocorrelation function screen: per event type, the Pearson
     correlation between the hourly cents-volume series and itself at
     lags 1..``max_lag`` hours -- the memory/seasonality diagnostic
@@ -1437,20 +1326,20 @@ def value_acf_lags(
 
     from ..functions.time import epoch_ms as _epoch_ms
 
-    if max_lag < 1:
+    if ACF_MAX_LAG < 1:
         # F.sequence(1, 0) would auto-step DOWN ([1, 0]: lag-0 self
         # pairs + a spurious lag) while the twin's unnest list is
         # empty -- fail loudly instead of diverging
-        raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    ms = _epoch_ms(ts_col)
-    cents = F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
+        raise ValueError(f"max_lag must be >= 1, got {ACF_MAX_LAG}")
+    ms = _epoch_ms("ts")
+    cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     b = (
         # all-NULL-value buckets excluded structurally (the theil_sen /
         # KS NULL rule: v = NULL would pair with a count but no sums,
         # desyncing the five sufficient statistics; mixed unaffected)
-        events.where(F.col(value_col).isNotNull())
+        events.where(F.col("value").isNotNull())
         .select(
-            F.col(type_col).alias("event_type"),
+            F.col("event_type").alias("event_type"),
             (ms - ms % F.lit(HOUR_MS)).alias("bucket_ms"),
             cents.alias("c"),
         )
@@ -1470,7 +1359,7 @@ def value_acf_lags(
     a = b.select(
         F.col("event_type").alias("_aet"),
         F.col("v").alias("x"),
-        F.explode(F.sequence(F.lit(1), F.lit(max_lag))).alias("lag"),
+        F.explode(F.sequence(F.lit(1), F.lit(ACF_MAX_LAG))).alias("lag"),
         F.col("bucket_ms").alias("_ab"),
     ).select(
         "_aet",
@@ -1506,26 +1395,20 @@ def value_acf_lags(
     )
 
 
-def value_acf_lags_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    max_lag: int = ACF_MAX_LAG,
-) -> str:
+def value_acf_lags_sql() -> str:
     """DuckDB twin of :func:`value_acf_lags` (same re-origined hourly
     series, same lag explode + equi-join pairing, IDENTICAL double
     expression tree for the closed form; BIGINT casts on sum() outputs
     -- the HUGEINT dtype-skew rule)."""
-    if max_lag < 1:
-        raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    lags = ", ".join(str(i) for i in range(1, max_lag + 1))
+    if ACF_MAX_LAG < 1:
+        raise ValueError(f"max_lag must be >= 1, got {ACF_MAX_LAG}")
+    lags = ", ".join(str(i) for i in range(1, ACF_MAX_LAG + 1))
     return f"""
 WITH raw AS (
-  SELECT {type_col} AS event_type,
-         epoch_ms({ts_col}) - epoch_ms({ts_col}) % {HOUR_MS} AS bucket_ms,
-         CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT) AS c
-  FROM {table} WHERE {value_col} IS NOT NULL
+  SELECT event_type AS event_type,
+         epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
+         CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS c
+  FROM events WHERE value IS NOT NULL
 ),
 bsum AS (
   SELECT event_type, bucket_ms, CAST(sum(c) AS BIGINT) AS v
@@ -1568,12 +1451,7 @@ FROM d
 """
 
 
-def mann_kendall_trend(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def mann_kendall_trend(events: DataFrame) -> DataFrame:
     """Mann-Kendall monotone-trend test per event type over the daily
     cents series -- the nonparametric significance test completing the
     trend family: value_trend_ols gives the least-squares slope,
@@ -1616,11 +1494,11 @@ def mann_kendall_trend(
         # all-NULL-value days excluded structurally (the theil_sen /
         # KS NULL rule: y = NULL would be counted in n_days and tie to
         # every pair with sign 0, deflating z; mixed days unaffected)
-        events.where(F.col(value_col).isNotNull())
+        events.where(F.col("value").isNotNull())
         .select(
-            F.col(type_col).alias("event_type"),
-            F.floor(_epoch_ms(ts_col) / F.lit(DAY_MS)).cast("bigint").alias("d"),
-            F.floor(F.col(value_col) * F.lit(1e2) + F.lit(5e-1))
+            F.col("event_type").alias("event_type"),
+            F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("d"),
+            F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
             .cast("bigint")
             .alias("cents"),
         )
@@ -1689,22 +1567,17 @@ def mann_kendall_trend(
     return j.select("event_type", "n_days", "s_stat", "var_s_x18", z.alias("z_mk"))
 
 
-def mann_kendall_trend_sql(
-    table: str = "events",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def mann_kendall_trend_sql() -> str:
     """DuckDB twin of :func:`mann_kendall_trend` (same daily BIGINT
     sums, same integer S / tie-corrected 18*Var(S), IDENTICAL double
     tree for z; BIGINT casts on sum() outputs -- the HUGEINT
     dtype-skew rule)."""
     return f"""
 WITH daily AS (
-  SELECT {type_col} AS event_type,
-         epoch_ms({ts_col}) // {DAY_MS} AS d,
-         CAST(sum(CAST(floor({value_col} * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
-  FROM {table} WHERE {value_col} IS NOT NULL GROUP BY 1, 2
+  SELECT event_type AS event_type,
+         epoch_ms(ts) // {DAY_MS} AS d,
+         CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 ),
 s AS (
   SELECT a.event_type,

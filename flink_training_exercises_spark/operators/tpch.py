@@ -16,16 +16,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Each query's parameters, read by both the Spark operator and its DuckDB
+# twin (the *_SQL text), so every value is written here once.
+Q1_CUTOFF = "1998-09-02 00:00:00"
+Q2_REGION_NAME, Q2_SIZE, Q2_TYPE, Q2_K = "ASIA", 5, "STANDARD", 10
+Q3_SEGMENT, Q3_DATE, Q3_K = "BUILDING", "1998-01-01 00:00:00", 10
+Q4_DATE_FROM, Q4_DATE_TO = "1996-01-01 00:00:00", "1996-04-01 00:00:00"
+Q5_REGION_NAME, Q5_DATE_FROM, Q5_DATE_TO = "ASIA", "1996-01-01 00:00:00", "1998-01-01 00:00:00"
+Q6_DATE_FROM = "1996-01-01 00:00:00"
+Q6_DATE_TO = "1997-01-01 00:00:00"
+Q6_DISC_LO_C = 5
+Q6_DISC_HI_C = 7
+Q6_MAX_QTY = 24
+Q7_NATION_A, Q7_NATION_B = "NATION_1", "NATION_2"
+Q8_TARGET_NATION = "NATION_7"
+Q8_REGION_NAME = "ASIA"
+Q8_PART_TYPE = "PROMO"
+Q8_DATE_FROM = "1995-01-01 00:00:00"
+Q8_DATE_TO = "1997-01-01 00:00:00"
+Q9_NAME_SUBSTR = "widget"
+Q10_DATE_FROM, Q10_DATE_TO, Q10_K = "1996-01-01 00:00:00", "1996-04-01 00:00:00", 20
+Q11_NATION_NAME, Q11_FRACTION_DENOM = "NATION_9", 1500
+Q12_DATE_FROM, Q12_DATE_TO = "1997-01-01 00:00:00", "1998-01-01 00:00:00"
+Q13_EXCLUDED_PRIORITY = "4-NOT SPECIFIED"
+Q14_PROMO_TYPE, Q14_DATE_FROM, Q14_DATE_TO = "PROMO", "1996-03-01 00:00:00", "1996-04-01 00:00:00"
+Q15_DATE_FROM, Q15_DATE_TO = "1996-01-01 00:00:00", "1996-04-01 00:00:00"
+Q16_EXCL_BRAND, Q16_EXCL_TYPE = "Brand#12", "PROMO"
+Q17_BRAND = "Brand#5"
+Q18_MIN_QTY_C, Q18_K = 15000, 100
+Q20_NATION_NAME = "NATION_9"
+Q20_NAME_PREFIX = "red"
+Q20_DATE_FROM = "1996-01-01 00:00:00"
+Q20_DATE_TO = "1997-01-01 00:00:00"
+Q21_NATION_NAME, Q21_K = "NATION_9", 20
+Q22_CODES, Q22_CUTOFF = "1, 3, 5, 7, 9", "2000-01-01 00:00:00"
+
 
 def _cents(col) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * 100).cast("bigint")
 
 
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02 00:00:00") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: per (returnflag, linestatus) pricing summary over
     lineitem rows shipped on or before the cutoff."""
-    li = lineitem.where(F.col("l_shipdate") <= F.expr(f"TIMESTAMP_NTZ '{cutoff}'")).select(
+    li = lineitem.where(F.col("l_shipdate") <= F.expr(f"TIMESTAMP_NTZ '{Q1_CUTOFF}'")).select(
         "l_returnflag",
         "l_linestatus",
         _cents("l_quantity").alias("qty_c"),
@@ -55,14 +90,14 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02 00:00:00") ->
     )
 
 
-PRICING_SUMMARY_SQL = """
+PRICING_SUMMARY_SQL = f"""
 WITH li AS (
   SELECT l_returnflag, l_linestatus,
          CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
          CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
          CAST(round(l_discount * 100) AS BIGINT) AS disc_c,
          CAST(round(l_tax * 100) AS BIGINT) AS tax_c
-  FROM lineitem WHERE l_shipdate <= TIMESTAMP '{cutoff}'
+  FROM lineitem WHERE l_shipdate <= TIMESTAMP '{Q1_CUTOFF}'
 ),
 agg AS (
   SELECT l_returnflag, l_linestatus,
@@ -84,21 +119,14 @@ FROM agg
 """
 
 
-def shipping_priority(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    segment: str = "BUILDING",
-    date: str = "1998-01-01 00:00:00",
-    k: int = 10,
-) -> DataFrame:
+def shipping_priority(customer: DataFrame, orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q3 shape: top-k open orders by revenue for one market segment.
     Dimension side (filtered customers) broadcasts; the top-k cut is a total
     ordering on exact integer revenue (orderkey tie-break) executed as
     TakeOrderedAndProject -- distributed per-partition top-k, not a
     single-partition global window."""
-    cut = F.expr(f"TIMESTAMP_NTZ '{date}'")
-    c = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
+    cut = F.expr(f"TIMESTAMP_NTZ '{Q3_DATE}'")
+    c = customer.where(F.col("c_mktsegment") == Q3_SEGMENT).select("c_custkey")
     o = orders.where(F.col("o_orderdate") < cut).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
@@ -114,7 +142,7 @@ def shipping_priority(
     )
     return (
         joined.orderBy(F.desc("rev_e4"), F.asc("l_orderkey"))
-        .limit(k)
+        .limit(Q3_K)
         .select(
             "l_orderkey",
             (F.col("rev_e4").cast("double") / 10000).alias("revenue"),
@@ -124,7 +152,7 @@ def shipping_priority(
     )
 
 
-SHIPPING_PRIORITY_SQL = """
+SHIPPING_PRIORITY_SQL = f"""
 WITH j AS (
   SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
          sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
@@ -132,15 +160,15 @@ WITH j AS (
   FROM lineitem l
   JOIN orders o ON l.l_orderkey = o.o_orderkey
   JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_mktsegment = '{segment}'
-    AND o.o_orderdate < TIMESTAMP '{date}'
-    AND l.l_shipdate > TIMESTAMP '{date}'
+  WHERE c.c_mktsegment = '{Q3_SEGMENT}'
+    AND o.o_orderdate < TIMESTAMP '{Q3_DATE}'
+    AND l.l_shipdate > TIMESTAMP '{Q3_DATE}'
   GROUP BY 1, 2, 3
 )
 SELECT l_orderkey, CAST(rev_e4 AS DOUBLE) / 10000 AS revenue,
        strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority
 FROM (SELECT *, row_number() OVER (ORDER BY rev_e4 DESC, l_orderkey) AS rn FROM j)
-WHERE rn <= {k}
+WHERE rn <= {Q3_K}
 """
 
 
@@ -151,14 +179,11 @@ def local_supplier_volume(
     supplier: DataFrame,
     orders: DataFrame,
     lineitem: DataFrame,
-    region_name: str = "ASIA",
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1998-01-01 00:00:00",
 ) -> DataFrame:
     """TPC-H Q5 shape: revenue per nation where customer and supplier share
     the nation, one region, one date range. All dimensions broadcast; the
     only big shuffle is lineitem x orders."""
-    r = region.where(F.col("r_name") == region_name).select("r_regionkey")
+    r = region.where(F.col("r_name") == Q5_REGION_NAME).select("r_regionkey")
     n = nation.join(F.broadcast(r), nation["n_regionkey"] == r["r_regionkey"]).select(
         "n_nationkey", "n_name"
     )
@@ -167,8 +192,8 @@ def local_supplier_volume(
     ).select("c_custkey", F.col("n_nationkey").alias("c_nat"), "n_name")
     s = supplier.select("s_suppkey", F.col("s_nationkey").alias("s_nat"))
     o = orders.where(
-        (F.col("o_orderdate") >= F.expr(f"TIMESTAMP_NTZ '{date_from}'"))
-        & (F.col("o_orderdate") < F.expr(f"TIMESTAMP_NTZ '{date_to}'"))
+        (F.col("o_orderdate") >= F.expr(f"TIMESTAMP_NTZ '{Q5_DATE_FROM}'"))
+        & (F.col("o_orderdate") < F.expr(f"TIMESTAMP_NTZ '{Q5_DATE_TO}'"))
     ).select("o_orderkey", "o_custkey")
     li = lineitem.select(
         "l_orderkey",
@@ -188,7 +213,7 @@ def local_supplier_volume(
     )
 
 
-LOCAL_SUPPLIER_SQL = """
+LOCAL_SUPPLIER_SQL = f"""
 SELECT n.n_name,
        CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
                 * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000
@@ -199,9 +224,9 @@ JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = '{region_name}'
-  AND o.o_orderdate >= TIMESTAMP '{date_from}'
-  AND o.o_orderdate < TIMESTAMP '{date_to}'
+WHERE r.r_name = '{Q5_REGION_NAME}'
+  AND o.o_orderdate >= TIMESTAMP '{Q5_DATE_FROM}'
+  AND o.o_orderdate < TIMESTAMP '{Q5_DATE_TO}'
 GROUP BY 1
 """
 
@@ -235,19 +260,14 @@ def _ts(lit: str) -> F.Column:
     return F.expr(f"TIMESTAMP_NTZ '{lit}'")
 
 
-def order_priority_exists(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1996-04-01 00:00:00",
-) -> DataFrame:
+def order_priority_exists(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q4 shape: per-priority count of orders in a quarter having at
     least one lineitem satisfying a predicate (returnflag='R' stands in for
     the missing commit/receipt dates). The semi-join is the point: the
     lineitem side never widens the row, so Spark plans a LeftSemi that
     early-outs per order."""
     o = orders.where(
-        (F.col("o_orderdate") >= _ts(date_from)) & (F.col("o_orderdate") < _ts(date_to))
+        (F.col("o_orderdate") >= _ts(Q4_DATE_FROM)) & (F.col("o_orderdate") < _ts(Q4_DATE_TO))
     ).select("o_orderkey", "o_orderpriority")
     flagged = lineitem.where(F.col("l_returnflag") == "R").select("l_orderkey")
     return (
@@ -257,33 +277,26 @@ def order_priority_exists(
     )
 
 
-ORDER_PRIORITY_EXISTS_SQL = """
+ORDER_PRIORITY_EXISTS_SQL = f"""
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '{date_from}'
-  AND o.o_orderdate < TIMESTAMP '{date_to}'
+WHERE o.o_orderdate >= TIMESTAMP '{Q4_DATE_FROM}'
+  AND o.o_orderdate < TIMESTAMP '{Q4_DATE_TO}'
   AND EXISTS (SELECT 1 FROM lineitem l
               WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
 GROUP BY 1
 """
 
 
-def forecast_revenue(
-    lineitem: DataFrame,
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1997-01-01 00:00:00",
-    disc_lo_c: int = 5,
-    disc_hi_c: int = 7,
-    max_qty: int = 24,
-) -> DataFrame:
+def forecast_revenue(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6: pure scan-side filter + single global sum -- every predicate
     pushes to the parquet scan; the aggregate is one map-side-combined
     shuffle of one partial per partition."""
     li = lineitem.where(
-        (F.col("l_shipdate") >= _ts(date_from))
-        & (F.col("l_shipdate") < _ts(date_to))
-        & _cents("l_discount").between(disc_lo_c, disc_hi_c)
-        & (F.col("l_quantity") < max_qty)
+        (F.col("l_shipdate") >= _ts(Q6_DATE_FROM))
+        & (F.col("l_shipdate") < _ts(Q6_DATE_TO))
+        & _cents("l_discount").between(Q6_DISC_LO_C, Q6_DISC_HI_C)
+        & (F.col("l_quantity") < Q6_MAX_QTY)
     )
     rev_e4 = F.sum(_cents("l_extendedprice") * _cents("l_discount")).alias("rev_e4")
     return li.agg(rev_e4).select(
@@ -291,13 +304,13 @@ def forecast_revenue(
     )
 
 
-FORECAST_REVENUE_SQL = """
+FORECAST_REVENUE_SQL = f"""
 SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
              * CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE) / 10000 AS revenue
 FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '{date_from}' AND l_shipdate < TIMESTAMP '{date_to}'
-  AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN {disc_lo_c} AND {disc_hi_c}
-  AND l_quantity < {max_qty}
+WHERE l_shipdate >= TIMESTAMP '{Q6_DATE_FROM}' AND l_shipdate < TIMESTAMP '{Q6_DATE_TO}'
+  AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN {Q6_DISC_LO_C} AND {Q6_DISC_HI_C}
+  AND l_quantity < {Q6_MAX_QTY}
 """
 
 
@@ -307,8 +320,6 @@ def volume_shipping(
     customer: DataFrame,
     supplier: DataFrame,
     nation: DataFrame,
-    nation_a: str = "NATION_1",
-    nation_b: str = "NATION_2",
 ) -> DataFrame:
     """TPC-H Q7: revenue flowing between two nations (both directions), per
     supplier-nation/customer-nation/ship-year. Both nation dims broadcast;
@@ -330,8 +341,8 @@ def volume_shipping(
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
         .where(
-            ((F.col("supp_nation") == nation_a) & (F.col("cust_nation") == nation_b))
-            | ((F.col("supp_nation") == nation_b) & (F.col("cust_nation") == nation_a))
+            ((F.col("supp_nation") == Q7_NATION_A) & (F.col("cust_nation") == Q7_NATION_B))
+            | ((F.col("supp_nation") == Q7_NATION_B) & (F.col("cust_nation") == Q7_NATION_A))
         )
     )
     return (
@@ -346,7 +357,7 @@ def volume_shipping(
     )
 
 
-VOLUME_SHIPPING_SQL = """
+VOLUME_SHIPPING_SQL = f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(year(l.l_shipdate) AS INT) AS l_year,
        CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
@@ -358,8 +369,8 @@ JOIN supplier s ON l.l_suppkey = s.s_suppkey
 JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
 JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE (n1.n_name = '{nation_a}' AND n2.n_name = '{nation_b}')
-   OR (n1.n_name = '{nation_b}' AND n2.n_name = '{nation_a}')
+WHERE (n1.n_name = '{Q7_NATION_A}' AND n2.n_name = '{Q7_NATION_B}')
+   OR (n1.n_name = '{Q7_NATION_B}' AND n2.n_name = '{Q7_NATION_A}')
 GROUP BY 1, 2, 3
 """
 
@@ -372,16 +383,11 @@ def national_market_share(
     nation: DataFrame,
     region: DataFrame,
     part: DataFrame,
-    target_nation: str = "NATION_7",
-    region_name: str = "ASIA",
-    part_type: str = "PROMO",
-    date_from: str = "1995-01-01 00:00:00",
-    date_to: str = "1997-01-01 00:00:00",
 ) -> DataFrame:
     """TPC-H Q8: the target nation's share of PROMO-part revenue sold into
     one region, per order year. The share is a ratio of two exact integer
     sums, so it is bit-identical regardless of partitioning."""
-    r = region.where(F.col("r_name") == region_name).select("r_regionkey")
+    r = region.where(F.col("r_name") == Q8_REGION_NAME).select("r_regionkey")
     rn = nation.join(F.broadcast(r), nation["n_regionkey"] == r["r_regionkey"]).select(
         F.col("n_nationkey").alias("c_nk")
     )
@@ -392,9 +398,9 @@ def national_market_share(
     s = supplier.join(F.broadcast(sn), supplier["s_nationkey"] == F.col("s_nk")).select(
         "s_suppkey", "supp_nation"
     )
-    p = part.where(F.col("p_type") == part_type).select("p_partkey")
+    p = part.where(F.col("p_type") == Q8_PART_TYPE).select("p_partkey")
     o = orders.where(
-        (F.col("o_orderdate") >= _ts(date_from)) & (F.col("o_orderdate") < _ts(date_to))
+        (F.col("o_orderdate") >= _ts(Q8_DATE_FROM)) & (F.col("o_orderdate") < _ts(Q8_DATE_TO))
     ).select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year"))
     li = lineitem.select(
         "l_orderkey",
@@ -409,7 +415,7 @@ def national_market_share(
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
     )
     agg = j.groupBy("o_year").agg(
-        F.sum(F.when(F.col("supp_nation") == target_nation, F.col("rev_e4")).otherwise(F.lit(0))).alias(
+        F.sum(F.when(F.col("supp_nation") == Q8_TARGET_NATION, F.col("rev_e4")).otherwise(F.lit(0))).alias(
             "nat_e4"
         ),
         F.sum("rev_e4").alias("tot_e4"),
@@ -420,7 +426,7 @@ def national_market_share(
     )
 
 
-NATIONAL_MARKET_SHARE_SQL = """
+NATIONAL_MARKET_SHARE_SQL = f"""
 WITH j AS (
   SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
          CAST(round(l.l_extendedprice * 100) AS BIGINT)
@@ -434,12 +440,12 @@ WITH j AS (
   JOIN region r ON n2.n_regionkey = r.r_regionkey
   JOIN supplier s ON l.l_suppkey = s.s_suppkey
   JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-  WHERE r.r_name = '{region_name}' AND p.p_type = '{part_type}'
-    AND o.o_orderdate >= TIMESTAMP '{date_from}'
-    AND o.o_orderdate < TIMESTAMP '{date_to}'
+  WHERE r.r_name = '{Q8_REGION_NAME}' AND p.p_type = '{Q8_PART_TYPE}'
+    AND o.o_orderdate >= TIMESTAMP '{Q8_DATE_FROM}'
+    AND o.o_orderdate < TIMESTAMP '{Q8_DATE_TO}'
 )
 SELECT o_year,
-       CAST(CAST(sum(CASE WHEN supp_nation = '{target_nation}' THEN rev_e4 ELSE 0 END)
+       CAST(CAST(sum(CASE WHEN supp_nation = '{Q8_TARGET_NATION}' THEN rev_e4 ELSE 0 END)
                  AS BIGINT) AS DOUBLE)
        / CAST(sum(rev_e4) AS BIGINT) AS mkt_share
 FROM j GROUP BY 1
@@ -447,13 +453,7 @@ FROM j GROUP BY 1
 
 
 def returned_item_reporting(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    nation: DataFrame,
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1996-04-01 00:00:00",
-    k: int = 20,
+    lineitem: DataFrame, orders: DataFrame, customer: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q10: top-k customers by revenue lost to returns in one quarter.
     Deterministic cut: total ordering (revenue desc, custkey asc) on the
@@ -461,7 +461,7 @@ def returned_item_reporting(
     distributed per-partition top-k + driver merge, NOT a single-partition
     global window (which would funnel every group through one task)."""
     o = orders.where(
-        (F.col("o_orderdate") >= _ts(date_from)) & (F.col("o_orderdate") < _ts(date_to))
+        (F.col("o_orderdate") >= _ts(Q10_DATE_FROM)) & (F.col("o_orderdate") < _ts(Q10_DATE_TO))
     ).select("o_orderkey", "o_custkey")
     li = lineitem.where(F.col("l_returnflag") == "R").select(
         "l_orderkey",
@@ -478,7 +478,7 @@ def returned_item_reporting(
     )
     return (
         agg.orderBy(F.desc("rev_e4"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(Q10_K)
         .select(
             "c_custkey",
             "c_name",
@@ -489,7 +489,7 @@ def returned_item_reporting(
     )
 
 
-RETURNED_ITEM_SQL = """
+RETURNED_ITEM_SQL = f"""
 WITH agg AS (
   SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
          sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
@@ -499,23 +499,21 @@ WITH agg AS (
   JOIN customer c ON o.o_custkey = c.c_custkey
   JOIN nation n ON c.c_nationkey = n.n_nationkey
   WHERE l.l_returnflag = 'R'
-    AND o.o_orderdate >= TIMESTAMP '{date_from}'
-    AND o.o_orderdate < TIMESTAMP '{date_to}'
+    AND o.o_orderdate >= TIMESTAMP '{Q10_DATE_FROM}'
+    AND o.o_orderdate < TIMESTAMP '{Q10_DATE_TO}'
   GROUP BY 1, 2, 3, 4
 )
 SELECT c_custkey, c_name, CAST(rev_e4 AS DOUBLE) / 10000 AS revenue, c_acctbal, n_name
 FROM (SELECT *, row_number() OVER (ORDER BY rev_e4 DESC, c_custkey) AS rn FROM agg)
-WHERE rn <= {k}
+WHERE rn <= {Q10_K}
 """
 
 
-def customer_order_distribution(
-    customer: DataFrame, orders: DataFrame, excluded_priority: str = "4-NOT SPECIFIED"
-) -> DataFrame:
+def customer_order_distribution(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q13: histogram of customers by order count (left join keeps
     zero-order customers; the excluded-priority predicate stands in for the
     comment LIKE filter the trimmed schema lacks)."""
-    o = orders.where(F.col("o_orderpriority") != excluded_priority).select(
+    o = orders.where(F.col("o_orderpriority") != Q13_EXCLUDED_PRIORITY).select(
         "o_orderkey", "o_custkey"
     )
     per_cust = (
@@ -527,30 +525,24 @@ def customer_order_distribution(
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-CUSTOMER_ORDER_DIST_SQL = """
+CUSTOMER_ORDER_DIST_SQL = f"""
 SELECT c_count, count(*) AS custdist
 FROM (
   SELECT c.c_custkey, count(o.o_orderkey) AS c_count
   FROM customer c
   LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '{excluded_priority}'
+    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '{Q13_EXCLUDED_PRIORITY}'
   GROUP BY 1
 )
 GROUP BY 1
 """
 
 
-def promo_revenue_share(
-    lineitem: DataFrame,
-    part: DataFrame,
-    promo_type: str = "PROMO",
-    date_from: str = "1996-03-01 00:00:00",
-    date_to: str = "1996-04-01 00:00:00",
-) -> DataFrame:
+def promo_revenue_share(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q14: promo parts' share of one month's revenue, x100. Part dim
     broadcasts; the ratio divides two exact integer sums."""
     li = lineitem.where(
-        (F.col("l_shipdate") >= _ts(date_from)) & (F.col("l_shipdate") < _ts(date_to))
+        (F.col("l_shipdate") >= _ts(Q14_DATE_FROM)) & (F.col("l_shipdate") < _ts(Q14_DATE_TO))
     ).select(
         "l_partkey",
         (_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias("rev_e4"),
@@ -558,7 +550,7 @@ def promo_revenue_share(
     p = part.select("p_partkey", "p_type")
     j = li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
     agg = j.agg(
-        F.sum(F.when(F.col("p_type") == promo_type, F.col("rev_e4")).otherwise(F.lit(0))).alias(
+        F.sum(F.when(F.col("p_type") == Q14_PROMO_TYPE, F.col("rev_e4")).otherwise(F.lit(0))).alias(
             "promo_e4"
         ),
         F.sum("rev_e4").alias("tot_e4"),
@@ -570,8 +562,8 @@ def promo_revenue_share(
     )
 
 
-PROMO_REVENUE_SQL = """
-SELECT 100e0 * CAST(CAST(sum(CASE WHEN p.p_type = '{promo_type}' THEN
+PROMO_REVENUE_SQL = f"""
+SELECT 100e0 * CAST(CAST(sum(CASE WHEN p.p_type = '{Q14_PROMO_TYPE}' THEN
                  CAST(round(l.l_extendedprice * 100) AS BIGINT)
                  * (100 - CAST(round(l.l_discount * 100) AS BIGINT)) ELSE 0 END)
                AS BIGINT) AS DOUBLE)
@@ -579,13 +571,11 @@ SELECT 100e0 * CAST(CAST(sum(CASE WHEN p.p_type = '{promo_type}' THEN
                   * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS BIGINT)
          AS promo_revenue_pct
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '{date_from}' AND l.l_shipdate < TIMESTAMP '{date_to}'
+WHERE l.l_shipdate >= TIMESTAMP '{Q14_DATE_FROM}' AND l.l_shipdate < TIMESTAMP '{Q14_DATE_TO}'
 """
 
 
-def small_quantity_revenue(
-    lineitem: DataFrame, part: DataFrame, brand: str = "Brand#5"
-) -> DataFrame:
+def small_quantity_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q17: average yearly revenue lost if small-quantity orders (below
     20% of the part's average quantity) were not filled. The 20%-of-average
     predicate is evaluated in integers (qty*5*count < sum) -- no float avg,
@@ -599,7 +589,7 @@ def small_quantity_revenue(
     enriched = li.withColumn("sum_qty_c", F.sum("qty_c").over(w)).withColumn(
         "cnt", F.count(F.lit(1)).over(w)
     )
-    p = part.where(F.col("p_brand") == brand).select("p_partkey")
+    p = part.where(F.col("p_brand") == Q17_BRAND).select("p_partkey")
     picked = enriched.join(F.broadcast(p), enriched["l_partkey"] == p["p_partkey"]).where(
         F.col("qty_c") * 5 * F.col("cnt") < F.col("sum_qty_c")
     )
@@ -608,7 +598,7 @@ def small_quantity_revenue(
     )
 
 
-SMALL_QUANTITY_SQL = """
+SMALL_QUANTITY_SQL = f"""
 WITH li AS (
   SELECT l_partkey,
          CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
@@ -620,16 +610,12 @@ WITH li AS (
 )
 SELECT CAST(CAST(sum(price_c) AS BIGINT) AS DOUBLE) / 100 / 7 AS avg_yearly
 FROM li JOIN part p ON li.l_partkey = p.p_partkey
-WHERE p.p_brand = '{brand}' AND qty_c * 5 * cnt < sum_qty_c
+WHERE p.p_brand = '{Q17_BRAND}' AND qty_c * 5 * cnt < sum_qty_c
 """
 
 
 def large_volume_customers(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    min_qty: float = 150.0,
-    k: int = 100,
+    lineitem: DataFrame, orders: DataFrame, customer: DataFrame
 ) -> DataFrame:
     """TPC-H Q18: orders whose total quantity exceeds the threshold, joined
     back to customer; top-k by total price with orderkey tie-break (total
@@ -638,7 +624,7 @@ def large_volume_customers(
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.sum(_cents("l_quantity")).alias("sum_qty_c"))
-        .where(F.col("sum_qty_c") > int(min_qty * 100))
+        .where(F.col("sum_qty_c") > Q18_MIN_QTY_C)
     )
     j = (
         big.join(orders, big["l_orderkey"] == orders["o_orderkey"])
@@ -649,7 +635,7 @@ def large_volume_customers(
     )
     return (
         j.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(k)
+        .limit(Q18_K)
         .select(
             "c_name",
             "c_custkey",
@@ -661,12 +647,12 @@ def large_volume_customers(
     )
 
 
-LARGE_VOLUME_SQL = """
+LARGE_VOLUME_SQL = f"""
 WITH big AS (
   SELECT l_orderkey, CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
            AS sum_qty_c
   FROM lineitem GROUP BY 1
-  HAVING sum(CAST(round(l_quantity * 100) AS BIGINT)) > {min_qty_c}
+  HAVING sum(CAST(round(l_quantity * 100) AS BIGINT)) > {Q18_MIN_QTY_C}
 ),
 j AS (
   SELECT c.c_name, c.c_custkey, o.o_orderkey,
@@ -678,7 +664,7 @@ j AS (
 )
 SELECT c_name, c_custkey, o_orderkey, orderdate, o_totalprice, sum_qty
 FROM (SELECT *, row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM j)
-WHERE rn <= {k}
+WHERE rn <= {Q18_K}
 """
 
 
@@ -776,15 +762,7 @@ partsupp AS (
 
 
 def min_cost_supplier(
-    part: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-    lineitem: DataFrame,
-    size: int = 5,
-    type_: str = "STANDARD",
-    region_name: str = "ASIA",
-    k: int = 10,
+    part: DataFrame, supplier: DataFrame, nation: DataFrame, region: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """TPC-H Q2 shape: for each part of one size+type, the region's minimum-
     cost suppliers (ties kept). The correlated MIN subquery becomes a
@@ -792,14 +770,14 @@ def min_cost_supplier(
     back on (partkey, cost) -- no correlated re-scan. Dimensions broadcast;
     the top-k cut is a total order (acctbal cents desc, nation, name,
     partkey) executed as TakeOrderedAndProject."""
-    r = region.where(F.col("r_name") == region_name).select("r_regionkey")
+    r = region.where(F.col("r_name") == Q2_REGION_NAME).select("r_regionkey")
     n = nation.join(F.broadcast(r), nation["n_regionkey"] == r["r_regionkey"]).select(
         "n_nationkey", "n_name"
     )
     s = supplier.join(F.broadcast(n), supplier["s_nationkey"] == n["n_nationkey"]).select(
         "s_suppkey", "s_name", "s_acctbal", "n_name"
     )
-    p = part.where((F.col("p_size") == size) & (F.col("p_type") == type_)).select(
+    p = part.where((F.col("p_size") == Q2_SIZE) & (F.col("p_type") == Q2_TYPE)).select(
         "p_partkey", "p_name"
     )
     cand = (
@@ -819,7 +797,7 @@ def min_cost_supplier(
         picked.orderBy(
             F.desc(_cents("s_acctbal")), F.asc("n_name"), F.asc("s_name"), F.asc("p_partkey")
         )
-        .limit(k)
+        .limit(Q2_K)
         .select(
             "s_acctbal",
             "s_name",
@@ -840,7 +818,7 @@ cand AS (
   JOIN supplier s ON ps.ps_suppkey = s.s_suppkey
   JOIN nation n ON s.s_nationkey = n.n_nationkey
   JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = '{{region_name}}' AND p.p_size = {{size}} AND p.p_type = '{{type_}}'
+  WHERE r.r_name = '{Q2_REGION_NAME}' AND p.p_size = {Q2_SIZE} AND p.p_type = '{Q2_TYPE}'
 ),
 mins AS (SELECT p_partkey, min(ps_supplycost_c) AS min_cost_c FROM cand GROUP BY 1)
 SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
@@ -852,17 +830,12 @@ FROM (
   FROM cand c JOIN mins m
     ON c.p_partkey = m.p_partkey AND c.ps_supplycost_c = m.min_cost_c
 )
-WHERE rn <= {{k}}
+WHERE rn <= {Q2_K}
 """
 
 
 def product_type_profit(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    part: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    name_substr: str = "widget",
+    lineitem: DataFrame, orders: DataFrame, part: DataFrame, supplier: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q9 shape: profit (revenue minus supply cost) per supplier
     nation per order year for parts whose name contains a substring.
@@ -871,7 +844,7 @@ def product_type_profit(
     its compound key (a real shuffle at scale -- partsupp is a fact-sized
     relation); part/supplier/nation broadcast."""
     ps = synthetic_partsupp(lineitem)
-    p = part.where(F.col("p_name").contains(name_substr)).select("p_partkey")
+    p = part.where(F.col("p_name").contains(Q9_NAME_SUBSTR)).select("p_partkey")
     li = lineitem.select(
         "l_orderkey",
         "l_partkey",
@@ -921,24 +894,18 @@ JOIN partsupp ps ON l.l_partkey = ps.ps_partkey AND l.l_suppkey = ps.ps_suppkey
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN supplier s ON l.l_suppkey = s.s_suppkey
 JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE p.p_name LIKE '%{{name_substr}}%'
+WHERE p.p_name LIKE '%{Q9_NAME_SUBSTR}%'
 GROUP BY 1, 2
 """
 
 
-def important_stock(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    nation_name: str = "NATION_9",
-    fraction_denom: int = 1500,
-) -> DataFrame:
+def important_stock(lineitem: DataFrame, supplier: DataFrame, nation: DataFrame) -> DataFrame:
     """TPC-H Q11 shape: per-part inventory value for one nation's suppliers,
     keeping parts whose value exceeds 1/fraction_denom of the nation total.
     The scalar total joins back via broadcast crossJoin (lazy, no eager
     collect) and the HAVING comparison is exact: val_c * denom > tot_c in
     bigints."""
-    n = nation.where(F.col("n_name") == nation_name).select("n_nationkey")
+    n = nation.where(F.col("n_name") == Q11_NATION_NAME).select("n_nationkey")
     s = supplier.join(F.broadcast(n), supplier["s_nationkey"] == n["n_nationkey"]).select(
         "s_suppkey"
     )
@@ -951,7 +918,7 @@ def important_stock(
     total = per_part.agg(F.sum("val_c").alias("tot_c"))
     return (
         per_part.crossJoin(F.broadcast(total))
-        .where(F.col("val_c") * fraction_denom > F.col("tot_c"))
+        .where(F.col("val_c") * Q11_FRACTION_DENOM > F.col("tot_c"))
         .select("ps_partkey", (F.col("val_c").cast("double") / 100).alias("value"))
     )
 
@@ -964,13 +931,13 @@ per_part AS (
   FROM partsupp ps
   JOIN supplier s ON ps.ps_suppkey = s.s_suppkey
   JOIN nation n ON s.s_nationkey = n.n_nationkey
-  WHERE n.n_name = '{{nation_name}}'
+  WHERE n.n_name = '{Q11_NATION_NAME}'
   GROUP BY 1
 ),
 total AS (SELECT CAST(sum(val_c) AS BIGINT) AS tot_c FROM per_part)
 SELECT ps_partkey, CAST(val_c AS DOUBLE) / 100 AS value
 FROM per_part CROSS JOIN total
-WHERE val_c * {{fraction_denom}} > tot_c
+WHERE val_c * {Q11_FRACTION_DENOM} > tot_c
 """
 
 
@@ -986,17 +953,12 @@ def _shipmode_col() -> F.Column:
     )
 
 
-def shipmode_priority(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    date_from: str = "1997-01-01 00:00:00",
-    date_to: str = "1998-01-01 00:00:00",
-) -> DataFrame:
+def shipmode_priority(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q12 shape: per ship mode, how many lines belong to critical-
     priority orders vs not (CASE-sum pivot over a fact-fact join). The
     shipdate filter pushes to the scan; counts are exact bigints."""
     li = lineitem.where(
-        (F.col("l_shipdate") >= _ts(date_from)) & (F.col("l_shipdate") < _ts(date_to))
+        (F.col("l_shipdate") >= _ts(Q12_DATE_FROM)) & (F.col("l_shipdate") < _ts(Q12_DATE_TO))
     ).select("l_orderkey", _shipmode_col().alias("ship_mode"))
     o = orders.select("o_orderkey", "o_orderpriority")
     j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -1007,7 +969,7 @@ def shipmode_priority(
     )
 
 
-SHIPMODE_PRIORITY_SQL = """
+SHIPMODE_PRIORITY_SQL = f"""
 SELECT CASE (l.l_orderkey * 31 + l.l_linenumber) % 3
          WHEN 0 THEN 'AIR' WHEN 1 THEN 'RAIL' ELSE 'SHIP' END AS ship_mode,
        CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1015,24 +977,19 @@ SELECT CASE (l.l_orderkey * 31 + l.l_linenumber) % 3
        CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                      THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '{date_from}' AND l.l_shipdate < TIMESTAMP '{date_to}'
+WHERE l.l_shipdate >= TIMESTAMP '{Q12_DATE_FROM}' AND l.l_shipdate < TIMESTAMP '{Q12_DATE_TO}'
 GROUP BY 1
 """
 
 
-def top_supplier(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1996-04-01 00:00:00",
-) -> DataFrame:
+def top_supplier(lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) with maximum revenue in a quarter
     (ties kept -- the argmax equi-joins the broadcast scalar max instead of
     a sort, so it is one aggregation + one broadcast, deterministic and
     shuffle-minimal)."""
     rev = (
         lineitem.where(
-            (F.col("l_shipdate") >= _ts(date_from)) & (F.col("l_shipdate") < _ts(date_to))
+            (F.col("l_shipdate") >= _ts(Q15_DATE_FROM)) & (F.col("l_shipdate") < _ts(Q15_DATE_TO))
         )
         .groupBy("l_suppkey")
         .agg(
@@ -1053,13 +1010,13 @@ def top_supplier(
     )
 
 
-TOP_SUPPLIER_SQL = """
+TOP_SUPPLIER_SQL = f"""
 WITH rev AS (
   SELECT l_suppkey,
          CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
                   * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_e4
   FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '{date_from}' AND l_shipdate < TIMESTAMP '{date_to}'
+  WHERE l_shipdate >= TIMESTAMP '{Q15_DATE_FROM}' AND l_shipdate < TIMESTAMP '{Q15_DATE_TO}'
   GROUP BY 1
 ),
 mx AS (SELECT max(rev_e4) AS max_e4 FROM rev)
@@ -1069,18 +1026,12 @@ WHERE r.rev_e4 = mx.max_e4
 """
 
 
-def supplier_part_counts(
-    lineitem: DataFrame,
-    part: DataFrame,
-    supplier: DataFrame,
-    excl_brand: str = "Brand#12",
-    excl_type: str = "PROMO",
-) -> DataFrame:
+def supplier_part_counts(lineitem: DataFrame, part: DataFrame, supplier: DataFrame) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier count per (brand, type, size),
     excluding one brand/type and excluding flagged suppliers (s_acctbal < 0
     stands in for the complaint comment filter) via a broadcast anti-join."""
     p = part.where(
-        (F.col("p_brand") != excl_brand) & (F.col("p_type") != excl_type)
+        (F.col("p_brand") != Q16_EXCL_BRAND) & (F.col("p_type") != Q16_EXCL_TYPE)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
     bad = supplier.where(F.col("s_acctbal") < 0).select("s_suppkey")
     cand = (
@@ -1097,31 +1048,24 @@ SUPPLIER_PART_COUNTS_SQL = f"""
 WITH {PARTSUPP_CTE}
 SELECT p.p_brand, p.p_type, p.p_size, count(DISTINCT ps.ps_suppkey) AS supplier_cnt
 FROM partsupp ps JOIN part p ON ps.ps_partkey = p.p_partkey
-WHERE p.p_brand <> '{{excl_brand}}' AND p.p_type <> '{{excl_type}}'
+WHERE p.p_brand <> '{Q16_EXCL_BRAND}' AND p.p_type <> '{Q16_EXCL_TYPE}'
   AND ps.ps_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY 1, 2, 3
 """
 
 
 def excess_inventory_suppliers(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    part: DataFrame,
-    nation_name: str = "NATION_9",
-    name_prefix: str = "red",
-    date_from: str = "1996-01-01 00:00:00",
-    date_to: str = "1997-01-01 00:00:00",
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame, part: DataFrame
 ) -> DataFrame:
     """TPC-H Q20 shape: one nation's suppliers holding excess inventory --
     availqty more than half the quantity they shipped of a prefix-named part
     during one year. The nested INs become: shipped-qty aggregation,
     equi-join to the derived partsupp, integer predicate (availqty*200 >
     qty_c), then a left-semi onto the nation's suppliers."""
-    p = part.where(F.col("p_name").startswith(name_prefix)).select("p_partkey")
+    p = part.where(F.col("p_name").startswith(Q20_NAME_PREFIX)).select("p_partkey")
     shipped = (
         lineitem.where(
-            (F.col("l_shipdate") >= _ts(date_from)) & (F.col("l_shipdate") < _ts(date_to))
+            (F.col("l_shipdate") >= _ts(Q20_DATE_FROM)) & (F.col("l_shipdate") < _ts(Q20_DATE_TO))
         )
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(_cents("l_quantity")).alias("qty_c"))
@@ -1137,7 +1081,7 @@ def excess_inventory_suppliers(
         .where(F.col("ps_availqty") * 200 > F.col("qty_c"))
         .select("ps_suppkey")
     )
-    n = nation.where(F.col("n_name") == nation_name).select("n_nationkey")
+    n = nation.where(F.col("n_name") == Q20_NATION_NAME).select("n_nationkey")
     s = supplier.join(F.broadcast(n), supplier["s_nationkey"] == n["n_nationkey"]).select(
         "s_suppkey", "s_name"
     )
@@ -1150,16 +1094,16 @@ EXCESS_INVENTORY_SQL = f"""
 WITH {PARTSUPP_CTE}
 SELECT s.s_suppkey, s.s_name
 FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE n.n_name = '{{nation_name}}'
+WHERE n.n_name = '{Q20_NATION_NAME}'
   AND s.s_suppkey IN (
     SELECT ps.ps_suppkey FROM partsupp ps
-    WHERE ps.ps_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE '{{name_prefix}}%')
+    WHERE ps.ps_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE '{Q20_NAME_PREFIX}%')
       AND ps.ps_availqty * 200 > (
         SELECT CAST(sum(CAST(round(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
         FROM lineitem l
         WHERE l.l_partkey = ps.ps_partkey AND l.l_suppkey = ps.ps_suppkey
-          AND l.l_shipdate >= TIMESTAMP '{{date_from}}'
-          AND l.l_shipdate < TIMESTAMP '{{date_to}}')
+          AND l.l_shipdate >= TIMESTAMP '{Q20_DATE_FROM}'
+          AND l.l_shipdate < TIMESTAMP '{Q20_DATE_TO}')
   )
 """
 
@@ -1169,8 +1113,7 @@ def waiting_suppliers(
     orders: DataFrame,
     supplier: DataFrame,
     nation: DataFrame,
-    nation_name: str = "NATION_9",
-    k: int = 20,
+    nation_name: str = Q21_NATION_NAME,
 ) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the SOLE failing supplier on a
     finalized multi-supplier order (l_returnflag = 'R' stands in for the
@@ -1211,12 +1154,12 @@ def waiting_suppliers(
         .groupBy("s_suppkey", "s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )
-    return agg.orderBy(F.desc("numwait"), F.asc("s_suppkey")).limit(k).select(
+    return agg.orderBy(F.desc("numwait"), F.asc("s_suppkey")).limit(Q21_K).select(
         "s_suppkey", "s_name", "numwait"
     )
 
 
-WAITING_SUPPLIERS_SQL = """
+WAITING_SUPPLIERS_SQL = f"""
 WITH l1 AS (
   SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem WHERE l_returnflag = 'R'
 ),
@@ -1225,7 +1168,7 @@ agg AS (
   FROM l1
   JOIN orders o ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
   JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_name = '{nation_name}'
+  JOIN nation n ON s.s_nationkey = n.n_nationkey AND n.n_name = '{Q21_NATION_NAME}'
   WHERE EXISTS (SELECT 1 FROM lineitem l2
                 WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
     AND NOT EXISTS (SELECT 1 FROM lineitem l3
@@ -1235,16 +1178,11 @@ agg AS (
 )
 SELECT s_suppkey, s_name, numwait
 FROM (SELECT *, row_number() OVER (ORDER BY numwait DESC, s_suppkey) AS rn FROM agg)
-WHERE rn <= {k}
+WHERE rn <= {Q21_K}
 """
 
 
-def global_sales_opportunity(
-    customer: DataFrame,
-    orders: DataFrame,
-    codes: tuple = (1, 3, 5, 7, 9),
-    cutoff: str = "2000-01-01 00:00:00",
-) -> DataFrame:
+def global_sales_opportunity(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q22 shape: per country code (nationkey % 10 stands in for the
     trimmed phone prefix), count customers with above-average positive
     balance and no recent orders. The scalar average joins back via a lazy
@@ -1255,11 +1193,11 @@ def global_sales_opportunity(
         "c_custkey",
         (F.col("c_nationkey") % 10).cast("bigint").alias("cntrycode"),
         _cents("c_acctbal").alias("bal_c"),
-    ).where(F.col("cntrycode").isin(*[F.lit(x) for x in codes]))
+    ).where(F.col("cntrycode").isin(*[F.lit(x) for x in (1, 3, 5, 7, 9)]))
     pos = c.where(F.col("bal_c") > 0).agg(
         F.sum("bal_c").alias("sum_c"), F.count(F.lit(1)).alias("cnt")
     )
-    recent = orders.where(F.col("o_orderdate") >= _ts(cutoff)).select("o_custkey")
+    recent = orders.where(F.col("o_orderdate") >= _ts(Q22_CUTOFF)).select("o_custkey")
     picked = (
         c.crossJoin(F.broadcast(pos))
         .where(F.col("bal_c") * F.col("cnt") > F.col("sum_c"))
@@ -1271,11 +1209,11 @@ def global_sales_opportunity(
     )
 
 
-GLOBAL_SALES_SQL = """
+GLOBAL_SALES_SQL = f"""
 WITH c AS (
   SELECT c_custkey, CAST(c_nationkey % 10 AS BIGINT) AS cntrycode,
          CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
-  FROM customer WHERE c_nationkey % 10 IN ({codes})
+  FROM customer WHERE c_nationkey % 10 IN ({Q22_CODES})
 ),
 pos AS (
   SELECT CAST(sum(bal_c) AS BIGINT) AS sum_c, count(*) AS cnt FROM c WHERE bal_c > 0
@@ -1286,6 +1224,6 @@ FROM c CROSS JOIN pos
 WHERE bal_c * cnt > sum_c
   AND NOT EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '{cutoff}')
+                    AND o.o_orderdate >= TIMESTAMP '{Q22_CUTOFF}')
 GROUP BY 1
 """

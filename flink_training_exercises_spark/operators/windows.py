@@ -36,7 +36,6 @@ def sliding_window_count(
     keys: list[str],
     window: str = DEFAULT_WINDOW,
     slide: str = DEFAULT_SLIDE,
-    count_alias: str = "cnt",
 ) -> DataFrame:
     """W2/A8 -- epoch-aligned sliding-window count per key.
 
@@ -46,11 +45,11 @@ def sliding_window_count(
     """
     return (
         df.groupBy(F.window(time_col, window, slide).alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias(count_alias))
+        .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             epoch_ms(F.col("w.end")).alias("window_end_ms"),
             *keys,
-            F.col(count_alias),
+            F.col("cnt"),
         )
     )
 

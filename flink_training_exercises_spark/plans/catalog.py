@@ -83,12 +83,13 @@ def oracle_sql() -> dict[str, str]:
 
 
 def release_query_state(spark: SparkSession) -> None:
-    """Drop what one query left behind before the next one runs: frames
-    cached by graph operators and -- once the caller has dropped its own
-    references -- the localCheckpoint RDDs of the driver loops and dedup's
-    signature tables (CC/kcore/SSSP/BPE/MinHash), so the ContextCleaner
-    frees them instead of letting executor memory pressure slow later
-    queries. No result depends on this call; it only returns memory."""
+    """Drop what one query left behind before the next one runs: once the
+    caller has dropped its own references, the localCheckpoint RDDs of the
+    driver loops and dedup's signature tables (CC/kcore/SSSP/BPE/MinHash)
+    are garbage, and collecting it lets the ContextCleaner free them
+    instead of letting executor memory pressure slow later queries. The
+    package caches no frame; ``clearCache`` drops any a caller cached. No
+    result depends on this call; it only returns memory."""
     spark.catalog.clearCache()
     gc.collect()
 

@@ -13,7 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.graph import RANK_SCALE
+from ..operators.graph import (
+    PAGERANK_DAMPING,
+    PAGERANK_ITERATIONS,
+    PPR_SEED_MOD,
+    RANK_SCALE,
+    TEMPORAL_REACH_ROUNDS,
+    TEMPORAL_REACH_SEED_MOD,
+)
 from .rides import register_events
 
 EDGES_SQL = """
@@ -30,10 +37,10 @@ def edges_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(EDGES_SQL.format(events=register_events(spark, sf_dir)))
 
 
-def pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
+def pagerank_oracle() -> str:
     """Exact-mode PageRank unrolled as chained CTEs (DuckDB has recursive
     CTEs, but a fixed-iteration unroll is portable and trivially correct)."""
-    d100 = int(round(damping * 100))
+    d100 = int(round(PAGERANK_DAMPING * 100))
     base = (100 - d100) * (RANK_SCALE // 100)
     edges = EDGES_SQL.format(events="events")
     parts = [
@@ -44,33 +51,31 @@ def pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
         "JOIN (SELECT src, SUM(weight) AS out_sum FROM edges GROUP BY src) o USING (src))",
         f"r0 AS (SELECT vertex, CAST({RANK_SCALE} AS BIGINT) AS r FROM verts)",
     ]
-    for i in range(iterations):
+    for i in range(PAGERANK_ITERATIONS):
         parts.append(
             f"r{i + 1} AS (SELECT v.vertex, "
             f"CAST({base} + ({d100} * COALESCE(c.s, 0)) // 100 AS BIGINT) AS r "
-            f"FROM verts v LEFT JOIN ("
-            f"SELECT t.dst AS vertex, SUM((p.r * t.w) // t.out_sum) AS s "
+            "FROM verts v LEFT JOIN ("
+            "SELECT t.dst AS vertex, SUM((p.r * t.w) // t.out_sum) AS s "
             f"FROM trans t JOIN r{i} p ON t.src = p.vertex GROUP BY t.dst"
-            f") c USING (vertex))"
+            ") c USING (vertex))"
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT vertex, CAST(r AS DOUBLE) / {RANK_SCALE:e} AS rank FROM r{iterations}"
+        + f"\nSELECT vertex, CAST(r AS DOUBLE) / {RANK_SCALE:e} AS rank FROM r{PAGERANK_ITERATIONS}"
     )
 
 
-def ppr_oracle(
-    damping: float = 0.85, iterations: int = 10, seed_mod: int = 10
-) -> str:
+def ppr_oracle() -> str:
     """Personalized-PageRank twin of :func:`pagerank_oracle`: identical
     unrolled integer recurrence, teleport mass confined to the md5 seed
     set (operators/graph.personalized_pagerank, gated since round 8)."""
     from ..functions.hashing import md5_long_sql
 
-    d100 = int(round(damping * 100))
+    d100 = int(round(PAGERANK_DAMPING * 100))
     base = (100 - d100) * (RANK_SCALE // 100)
     edges = EDGES_SQL.format(events="events")
-    seed = f"CAST({md5_long_sql('CAST(vertex AS VARCHAR)')} % {seed_mod} = 0 AS BIGINT)"
+    seed = f"CAST({md5_long_sql('CAST(vertex AS VARCHAR)')} % {PPR_SEED_MOD} = 0 AS BIGINT)"
     parts = [
         f"WITH edges AS ({edges})",
         "vraw AS (SELECT DISTINCT vertex FROM "
@@ -80,18 +85,18 @@ def ppr_oracle(
         "JOIN (SELECT src, SUM(weight) AS out_sum FROM edges GROUP BY src) o USING (src))",
         f"r0 AS (SELECT vertex, CAST(seed * {RANK_SCALE} AS BIGINT) AS r FROM verts)",
     ]
-    for i in range(iterations):
+    for i in range(PAGERANK_ITERATIONS):
         parts.append(
             f"r{i + 1} AS (SELECT v.vertex, "
             f"CAST(v.seed * {base} + ({d100} * COALESCE(c.s, 0)) // 100 AS BIGINT) AS r "
-            f"FROM verts v LEFT JOIN ("
-            f"SELECT t.dst AS vertex, SUM((p.r * t.w) // t.out_sum) AS s "
+            "FROM verts v LEFT JOIN ("
+            "SELECT t.dst AS vertex, SUM((p.r * t.w) // t.out_sum) AS s "
             f"FROM trans t JOIN r{i} p ON t.src = p.vertex GROUP BY t.dst"
-            f") c USING (vertex))"
+            ") c USING (vertex))"
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT vertex, CAST(r AS DOUBLE) / {RANK_SCALE:e} AS rank FROM r{iterations}"
+        + f"\nSELECT vertex, CAST(r AS DOUBLE) / {RANK_SCALE:e} AS rank FROM r{PAGERANK_ITERATIONS}"
     )
 
 # Timed edge list for the TEMPORAL graph family: one edge per event with
@@ -124,14 +129,14 @@ def timed_edges_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def temporal_reachability_oracle(seed_mod: int = 10, rounds: int = 4) -> str:
+def temporal_reachability_oracle() -> str:
     """DuckDB twin of :func:`~..operators.graph.temporal_reachability`:
     exactly ``rounds`` earliest-arrival relaxations unrolled as
     materialized CTEs (the sssp/pagerank unroll contract -- relaxation is
     monotone, so rounds past convergence are identity on both sides)."""
     from ..functions.hashing import md5_long_sql
 
-    seed = f"{md5_long_sql('vertex')} % {seed_mod} = 0"
+    seed = f"{md5_long_sql('vertex')} % {TEMPORAL_REACH_SEED_MOD} = 0"
     edges = TIMED_EDGES_SQL.format(events="events")
     parts = [
         # src != dst mirrors the Spark side's self-loop drop -- the
@@ -140,21 +145,21 @@ def temporal_reachability_oracle(seed_mod: int = 10, rounds: int = 4) -> str:
         f"WITH e AS MATERIALIZED (SELECT * FROM ({edges}) WHERE src != dst)",
         "verts AS (SELECT DISTINCT vertex FROM "
         "(SELECT src AS vertex FROM e UNION ALL SELECT dst FROM e))",
-        f"r0 AS (SELECT vertex, CAST(0 AS BIGINT) AS arrival_ms "
+        "r0 AS (SELECT vertex, CAST(0 AS BIGINT) AS arrival_ms "
         f"FROM verts WHERE {seed})",
     ]
-    for i in range(rounds):
+    for i in range(TEMPORAL_REACH_ROUNDS):
         parts.append(
             f"r{i + 1} AS MATERIALIZED (SELECT vertex, "
-            f"CAST(min(arrival_ms) AS BIGINT) AS arrival_ms FROM ("
+            "CAST(min(arrival_ms) AS BIGINT) AS arrival_ms FROM ("
             f"SELECT vertex, arrival_ms FROM r{i} "
-            f"UNION ALL "
-            f"SELECT e.dst AS vertex, min(e.t) AS arrival_ms "
+            "UNION ALL "
+            "SELECT e.dst AS vertex, min(e.t) AS arrival_ms "
             f"FROM r{i} a JOIN e ON e.src = a.vertex AND e.t >= a.arrival_ms "
-            f"GROUP BY e.dst"
-            f") GROUP BY vertex)"
+            "GROUP BY e.dst"
+            ") GROUP BY vertex)"
         )
-    return ",\n".join(parts) + f"\nSELECT vertex, arrival_ms FROM r{rounds}"
+    return ",\n".join(parts) + f"\nSELECT vertex, arrival_ms FROM r{TEMPORAL_REACH_ROUNDS}"
 
 
 # Truss-audit edge list: the 20-vertex EDGES_SQL graph saturates to a
@@ -179,11 +184,11 @@ SELECT a AS src, b AS dst FROM (
 """
 
 
-def truss_edges_sql(events: str = "events") -> str:
+def truss_edges_sql() -> str:
     from ..functions.hashing import md5_long_sql
 
     return TRUSS_EDGES_SQL_DUCK_TEMPLATE.format(
-        events=events, thin=md5_long_sql("a || ':' || b")
+        events="events", thin=md5_long_sql("a || ':' || b")
     )
 
 

@@ -59,6 +59,6 @@ def mails_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mails_cte(events_table: str = "events") -> str:
+def mails_cte() -> str:
     """DuckDB-side CTE body."""
-    return _MAILS_SQL.format(events=events_table, ts_fmt=_DUCK_TS_FMT)
+    return _MAILS_SQL.format(events="events", ts_fmt=_DUCK_TS_FMT)

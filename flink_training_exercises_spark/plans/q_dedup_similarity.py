@@ -40,18 +40,18 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_lsh",
-    oracle=dedup.minhash_lsh_sql(threshold=0.2),
+    oracle=dedup.minhash_lsh_sql(),
     doc="MinHash(k=32) + LSH banding (8 bands x 4 rows) + exact-Jaccard "
     "verify over char-5 shingles.",
     bench=True,
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.minhash_lsh_pairs(docs, threshold=0.2)
+    return dedup.minhash_lsh_pairs(docs)
 
 @register(
     "dedup_clusters_minhash",
-    oracle=dedup.minhash_clusters_sql(threshold=0.2),
+    oracle=dedup.minhash_clusters_sql(),
     doc="Transitive closure of the MinHash near-dup pairs: each clustered "
     "doc mapped to its component's minimum doc_id (the canonical survivor). "
     "Spark side runs alternating large-star/small-star (O(log n) rounds); "
@@ -59,19 +59,19 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2).select("id_a", "id_b")
+    pairs = dedup.minhash_lsh_pairs(docs).select("id_a", "id_b")
     return graph.connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
 @register(
     "dedup_simhash",
-    oracle=dedup.simhash_sql(max_hamming=3),
+    oracle=dedup.simhash_sql(),
     doc="32-bit SimHash near-dup pairs, 4-byte banding, Hamming <= 3.",
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.simhash_pairs(docs, max_hamming=3)
+    return dedup.simhash_pairs(docs)
 
 @register(
     "dedup_ngram_jaccard",
@@ -121,7 +121,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 )
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    return similarity.topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") % 25 == 0)
+    return similarity.topk_bruteforce(emb, query_filter=F.col("vec_id") % 25 == 0)
 
 @register(
     "ann_topk_bruteforce_pandas",
@@ -135,7 +135,7 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_bruteforce_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.topk_bruteforce_pandas(
-        emb, k=5, query_filter=F.col("vec_id") % 25 == 0
+        emb, query_filter=F.col("vec_id") % 25 == 0
     )
 
 def _lsh_bucket_sql(planes=None) -> str:
@@ -167,7 +167,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    return similarity.topk_lsh(emb, k=5, query_filter=F.col("vec_id") % 25 == 0)
+    return similarity.topk_lsh(emb, query_filter=F.col("vec_id") % 25 == 0)
 
 @register(
     "ann_topk_ivf",
@@ -188,7 +188,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "compress each 64-dim vector to 8 codes; queries score the COMPRESSED "
     "corpus via per-subspace lookup tables -- the FAISS pair's other half "
     "(IVF prunes which vectors, PQ compresses how each is scored; compose "
-    "with build_ivf_index partitions at scale). Oracle unrolls all 8 "
+    "with the IVF cid partitioning at scale). Oracle unrolls all 8 "
     "Lloyd chains as CTEs and replays the ADC sum in the same order.",
 )
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +340,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doesn't kick in under broadcast, so without this the ground truth was
     # computed twice (CLAUDE.md round-6 twice-consumed rule).
     bf = (
-        similarity.topk_bruteforce(emb, k=5, query_filter=flt)
+        similarity.topk_bruteforce(emb, query_filter=flt)
         .select("query_id", "neighbor_id")
         .localCheckpoint()
     )
@@ -352,7 +352,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf._with_int_vec(emb, "vec_id", "embedding"), ivf.TRAIN_N
     )
     approx = (
-        similarity.topk_lsh(emb, k=5, query_filter=flt)
+        similarity.topk_lsh(emb, query_filter=flt)
         .select(F.lit("lsh").alias("method"), "query_id", "neighbor_id")
         .unionByName(
             ivf.ivf_topk(emb, train_rows=train_rows).select(

@@ -13,11 +13,9 @@ from ..sources import load_table
 from .catalog import register
 from ..operators import (
     cdc,
-    contamination,
     dedup,
     graph,
     sampling,
-    similarity,
     sketches,
     textstats,
     timeseries,
@@ -80,7 +78,7 @@ def q_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sssp_event_graph",
-    oracle=graph.sssp_hops_sql(_KCORE_EDGES_SQL, source=0, max_hops=8),
+    oracle=graph.sssp_hops_sql(_KCORE_EDGES_SQL, source=0),
     doc="Single-source shortest paths (BFS hop counts, Gelly's SSSP "
     "exercise / Pregel's canonical example) from node 0 on the "
     "md5-derived directed event graph: iterative frontier expansion with "
@@ -97,11 +95,11 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         (md5_long(F.concat(F.lit("s"), F.col("event_id").cast("string"))) % n_nodes).alias("src"),
         (md5_long(F.concat(F.lit("d"), F.col("event_id").cast("string"))) % n_nodes).alias("dst"),
     )
-    return graph.sssp_hops(edges, source=0, max_hops=8)
+    return graph.sssp_hops(edges, source=0)
 
 @register(
     "label_propagation_communities",
-    oracle=graph.label_propagation_sql(_KCORE_EDGES_SQL, rounds=6),
+    oracle=graph.label_propagation_sql(_KCORE_EDGES_SQL),
     doc="Synchronous min-label propagation (deterministic LPA variant: min "
     "instead of mode, so no tie-break nondeterminism) on the undirected "
     "md5-derived event graph: 6 rounds, each node's label becomes the "
@@ -120,7 +118,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (md5_long(F.concat(F.lit("s"), F.col("event_id").cast("string"))) % n_nodes).alias("src"),
         (md5_long(F.concat(F.lit("d"), F.col("event_id").cast("string"))) % n_nodes).alias("dst"),
     )
-    return graph.label_propagation(edges, rounds=6)
+    return graph.label_propagation(edges)
 
 @register(
     "vocab_oov_rate",
@@ -259,7 +257,7 @@ def _split_case_sql(id_expr: str) -> str:
 
 def _split_leakage_oracle() -> str:
     return f"""
-WITH pairs AS ({dedup.minhash_lsh_sql(threshold=0.2)}),
+WITH pairs AS ({dedup.minhash_lsh_sql()}),
 lab AS (
   SELECT {_split_case_sql('id_a')} AS ca, {_split_case_sql('id_b')} AS cb FROM pairs
 )
@@ -285,7 +283,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
     docs = load_table(spark, "documents", sf_dir)
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2).select("id_a", "id_b")
+    pairs = dedup.minhash_lsh_pairs(docs).select("id_a", "id_b")
 
     def split_c(c):
         h = md5_long(F.concat(c.cast("string"), F.lit(":split"))) % 100
@@ -479,7 +477,7 @@ def q_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_keep_best",
     oracle=f"""
-WITH cl AS ({dedup.minhash_clusters_sql(threshold=0.2)}),
+WITH cl AS ({dedup.minhash_clusters_sql()}),
 q AS ({textstats.quality_score_sql()}),
 alldocs AS (
   SELECT d.doc_id, COALESCE(cl.cluster_id, d.doc_id) AS cluster_id
@@ -508,7 +506,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, "documents", sf_dir)
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.2).select("id_a", "id_b")
+    pairs = dedup.minhash_lsh_pairs(docs).select("id_a", "id_b")
     cl = graph.connected_components(pairs).select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cl_id")
     )
@@ -598,7 +596,7 @@ def q_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = cdc.merge_latest(snap, ins, keys=["doc_id"], seq_cols=["seq"]).drop("seq")
     sharded = sampling.shuffle_shard(
-        merged, id_col="doc_id", n_shards=8, extra_cols=["status"]
+        merged, extra_cols=["status"]
     )
     return sharded.select(
         F.col("id").alias("doc_id"), "status", "shard_id", "pos"

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from ..functions.text import STOP_WORDS
+from ..functions.time import WATERMARK_MS
 from ..sources import load_table
 from . import graphs as graphs_plan
 from . import mails as mails_plan
@@ -26,7 +27,7 @@ from ..operators import (
 # RideCleansing (SURVEY §2 P1/F1 -- RideCleansing.java:68-76)
 # ---------------------------------------------------------------------------
 
-_RIDES = rides_plan.rides_cte("events")
+_RIDES = rides_plan.rides_cte()
 
 _NYC_PRED = (
     "NOT (start_lon > -73.7e0 OR start_lon < -74.05e0) "
@@ -76,7 +77,6 @@ _PP_SIZE_MS = 6 * 3600 * 1000
 
 _PP_SLIDE_MS = 3600 * 1000
 
-_PP_K = _PP_SIZE_MS // _PP_SLIDE_MS
 
 _PP_THRESHOLD = 10
 
@@ -122,7 +122,7 @@ def q_popular_places(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH res AS ({_popular_places_oracle(_PP_SIZE_MS, _PP_SLIDE_MS, _PP_THRESHOLD)}),
 rides AS ({_RIDES}),
 mx AS (SELECT max(epoch_ms(ts)) AS m FROM rides WHERE {_NYC_PRED})
-SELECT res.* FROM res, mx WHERE res.window_end_ms <= mx.m - 60000
+SELECT res.* FROM res, mx WHERE res.window_end_ms <= mx.m - {WATERMARK_MS}
 """,
     doc="W2/W3/W7 through the real streaming engine: watermarked sliding-"
     "window count in APPEND mode (fire-once per window, availableNow "
@@ -146,7 +146,7 @@ def q_streaming_popular_places(events: DataFrame, sf_dir: str) -> DataFrame:
 # derived mails view (plans/mails.py).
 # ---------------------------------------------------------------------------
 
-_MAILS = mails_plan.mails_cte("events")
+_MAILS = mails_plan.mails_cte()
 
 _EMAIL_RE = r"<([^<>]*)>\s*$"
 
@@ -273,7 +273,7 @@ def q_mail_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pagerank_weighted",
-    oracle=graphs_plan.pagerank_oracle(damping=0.85, iterations=10),
+    oracle=graphs_plan.pagerank_oracle(),
     doc="G1-G4: fixed-iteration weighted PageRank, exact integer mode "
     "(PageRankWithEdgeWeights.java:77-104; Java semantics).",
     bench=True,
@@ -281,7 +281,7 @@ def q_mail_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = graphs_plan.edges_view(spark, sf_dir)
     return graph.weighted_pagerank(
-        edges, damping=0.85, iterations=10, exact=True, checkpoint_every=3
+        edges, exact=True, checkpoint_every=3
     )
 
 # ---------------------------------------------------------------------------

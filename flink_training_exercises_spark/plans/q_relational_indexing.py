@@ -15,11 +15,9 @@ from ..functions.text import words, words_sql
 from ..operators import (
     asof,
     cdc,
-    contamination,
     indexing,
     rangejoin,
     relational,
-    windows,
 )
 
 

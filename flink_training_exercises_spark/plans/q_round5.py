@@ -14,14 +14,11 @@ from .catalog import register
 from ..operators import (
     bloom,
     dedup,
-    indexing,
     sessions,
     sketches,
     skew,
-    stateful,
     textstats,
     timeseries,
-    windows,
 )
 
 

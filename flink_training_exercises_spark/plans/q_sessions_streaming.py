@@ -11,8 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..sources import load_table
 from .catalog import register
+from ..functions.time import WATERMARK_MS
 from ..operators import cdc as cdc_ops
 from ..streaming.queries import (
+    INTERVAL_JOIN_GAP_MS,
     bloom_window_membership,
     cms_window_estimates,
     concurrency_profile_oracle,
@@ -39,10 +41,7 @@ from ..streaming.queries import (
     windowed_topk_oracle,
 )
 from ..operators import (
-    dedup,
-    relational,
     sessions,
-    stateful,
 )
 
 
@@ -69,7 +68,7 @@ mx AS (SELECT max(epoch_ms(ts)) AS m FROM events)
 SELECT user_id, session_start_ms,
        session_end_ms + {sessions.DEFAULT_GAP_MS} AS session_end_ms, n_events
 FROM s, mx
-WHERE session_end_ms + {sessions.DEFAULT_GAP_MS} <= m - 60000
+WHERE session_end_ms + {sessions.DEFAULT_GAP_MS} <= m - {WATERMARK_MS}
 """,
     doc="Sessionization through the real streaming engine: native "
     "session_window (merging gap sessions) in append mode, availableNow "
@@ -111,14 +110,14 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_interval_join",
-    oracle="""
+    oracle=f"""
 SELECT p.event_id AS purchase_id, c.event_id AS click_id,
        p.user_id,
        epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
 FROM events p JOIN events c
   ON p.user_id = c.user_id
  AND c.ts <= p.ts
- AND c.ts >= p.ts - INTERVAL 21600000 MILLISECONDS
+ AND c.ts >= p.ts - INTERVAL {INTERVAL_JOIN_GAP_MS} MILLISECONDS
 WHERE p.event_type = 'purchase' AND c.event_type = 'click'
 """,
     doc="Stream-stream interval join through the real engine: purchases "
@@ -139,25 +138,25 @@ def q_streaming_interval_join(events: DataFrame, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_interval_join_outer",
-    oracle="""
+    oracle=f"""
 WITH c AS (SELECT event_id AS click_id, user_id, ts FROM events
            WHERE event_type = 'click'),
 p AS (SELECT event_id AS purchase_id, user_id, ts FROM events
       WHERE event_type = 'purchase'),
 wm AS (SELECT least((SELECT max(ts) FROM c), (SELECT max(ts) FROM p))
-              - INTERVAL 60000 MILLISECONDS AS w),
+              - INTERVAL {WATERMARK_MS} MILLISECONDS AS w),
 matched AS (
   SELECT c.click_id, p.purchase_id, c.user_id,
          epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
   FROM c JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts
-               AND c.ts >= p.ts - INTERVAL 21600000 MILLISECONDS
+               AND c.ts >= p.ts - INTERVAL {INTERVAL_JOIN_GAP_MS} MILLISECONDS
 )
 SELECT purchase_id, click_id, user_id, gap_us FROM matched
 UNION ALL
 SELECT CAST(NULL AS BIGINT), c.click_id, c.user_id, CAST(NULL AS BIGINT)
 FROM c, wm
 WHERE c.click_id NOT IN (SELECT click_id FROM matched)
-  AND c.ts + INTERVAL 21600000 MILLISECONDS < wm.w
+  AND c.ts + INTERVAL {INTERVAL_JOIN_GAP_MS} MILLISECONDS < wm.w
 """,
     doc="LEFT-OUTER stream-stream interval join: matched rows emit on "
     "match; an unmatched click emits its null-purchase row only when the "
@@ -179,7 +178,7 @@ def q_streaming_interval_join_outer(events: DataFrame, sf_dir: str) -> DataFrame
 
 @register(
     "streaming_distinct_users",
-    oracle="""
+    oracle=f"""
 WITH ev AS (
   SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms, event_type, user_id FROM events
 ),
@@ -188,7 +187,7 @@ SELECT hour_ms + 3600000 AS window_end_ms, event_type,
        CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users
 FROM ev, mx
 GROUP BY hour_ms, event_type, m
-HAVING hour_ms + 3600000 <= m - 60000
+HAVING hour_ms + 3600000 <= m - {WATERMARK_MS}
 """,
     doc="Windowed distinct-user counts through the real streaming engine: "
     "streaming aggregation forbids COUNT(DISTINCT), so this chains the two "

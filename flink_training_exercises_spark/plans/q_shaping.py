@@ -53,7 +53,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "length_bucket_batches",
-    oracle=sampling.length_batches_sql(batch_size=32),
+    oracle=sampling.length_batches_sql(),
     doc="Length-sorted batching with padding accounting: sort docs by "
     "token count, cut into 32-doc batches, report per-batch padding "
     "overhead (each sequence pads to the batch max) -- the statistic that "
@@ -61,11 +61,11 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "range-sort; the window and the batch aggregate share it.",
 )
 def q_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sampling.length_batches(load_table(spark, "documents", sf_dir), batch_size=32)
+    return sampling.length_batches(load_table(spark, "documents", sf_dir))
 
 @register(
     "pack_sequences_4k",
-    oracle=sampling.pack_sequences_sql(token_budget=4096),
+    oracle=sampling.pack_sequences_sql(),
     doc="Greedy token-budget sequence packing: per source shard in doc_id "
     "order, bin i holds docs whose preceding cumulative whitespace-token "
     "count lies in [i*4096, (i+1)*4096) -- the layout step before writing "
@@ -73,13 +73,13 @@ def q_length_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cumsum and bin aggregate share it.",
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sampling.pack_sequences(load_table(spark, "documents", sf_dir), token_budget=4096)
+    return sampling.pack_sequences(load_table(spark, "documents", sf_dir))
 
 _MIX_WEIGHTS = {"src0": 250, "src1": 130, "src2": 50, "src3": 0}  # centi-epochs
 
 @register(
     "mixture_expand_weighted",
-    oracle=sampling.mixture_expand_sql(weights_ce=_MIX_WEIGHTS, default_ce=100),
+    oracle=sampling.mixture_expand_sql(weights_ce=_MIX_WEIGHTS),
     doc="Source-weighted epoch mixing with fractional repetition: src0 at "
     "2.5 epochs (every doc twice, a deterministic md5-chosen half a third "
     "time), src1 1.3, src2 0.5, src3 dropped, rest 1.0. Pure map (explode "
@@ -88,11 +88,11 @@ _MIX_WEIGHTS = {"src0": 250, "src1": 130, "src2": 50, "src3": 0}  # centi-epochs
 )
 def q_mixture_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    return sampling.mixture_expand(docs, weights_ce=_MIX_WEIGHTS, default_ce=100)
+    return sampling.mixture_expand(docs, weights_ce=_MIX_WEIGHTS)
 
 @register(
     "shuffle_shard_layout",
-    oracle=sampling.shuffle_shard_sql(n_shards=8),
+    oracle=sampling.shuffle_shard_sql(),
     doc="Deterministic global training shuffle: shard = md5(doc_id||':shard') "
     "% 8, within-shard position = rank by an independent md5 key. One "
     "shuffle (per-shard window sort) == repartition + sortWithinPartitions "
@@ -100,7 +100,7 @@ def q_mixture_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "can be re-derived for any subset.",
 )
 def q_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sampling.shuffle_shard(load_table(spark, "documents", sf_dir), n_shards=8)
+    return sampling.shuffle_shard(load_table(spark, "documents", sf_dir))
 
 @register(
     "skew_salted_event_counts",

@@ -19,7 +19,6 @@ from ..operators import (
     graph,
     similarity,
     sketches,
-    skew,
     textstats,
 )
 

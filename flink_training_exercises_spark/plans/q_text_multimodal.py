@@ -16,7 +16,6 @@ from ..operators import (
     contamination,
     multimodal,
     pii,
-    sampling,
     textstats,
 )
 
@@ -71,7 +70,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pii_scrub_mails",
-    oracle="WITH mails AS ({cte})\n".format(cte=mails_plan.mails_cte("events"))
+    oracle="WITH mails AS ({cte})\n".format(cte=mails_plan.mails_cte())
     + pii.pii_scrub_sql(
         "(SELECT message_id, sender || ' | ' || subject || ' | ' || body AS raw FROM mails)",
         "message_id",
@@ -178,7 +177,7 @@ FROM r
 )
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    resized = multimodal.resize_media(multimodal.attach_binary_payload(docs), 64, 64)
+    resized = multimodal.resize_media(multimodal.attach_binary_payload(docs))
     return resized.select(
         "doc_id",
         "width",
@@ -204,7 +203,7 @@ FROM (SELECT doc_id,
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     decoded = multimodal.decode_media(multimodal.attach_binary_payload(docs))
-    return multimodal.frame_sample(decoded, every_n=2)
+    return multimodal.frame_sample(decoded)
 
 @register(
     "pii_kanonymity_profile",

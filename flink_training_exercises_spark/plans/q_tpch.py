@@ -15,23 +15,19 @@ from ..operators import (
 )
 
 
-_TPCH_CUTOFF = "1998-09-02 00:00:00"
-
-_Q3_DATE = "1998-01-01 00:00:00"
-
 @register(
     "tpch_q1_pricing_summary",
-    oracle=tpch.PRICING_SUMMARY_SQL.format(cutoff=_TPCH_CUTOFF),
+    oracle=tpch.PRICING_SUMMARY_SQL,
     doc="TPC-H Q1 shape on lineitem: 2-key group, 7 aggregates, exact "
     "integer-cents arithmetic.",
     bench=True,
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tpch.pricing_summary(load_table(spark, "lineitem", sf_dir), _TPCH_CUTOFF)
+    return tpch.pricing_summary(load_table(spark, "lineitem", sf_dir))
 
 @register(
     "tpch_q3_shipping_priority",
-    oracle=tpch.SHIPPING_PRIORITY_SQL.format(segment="BUILDING", date=_Q3_DATE, k=10),
+    oracle=tpch.SHIPPING_PRIORITY_SQL,
     doc="TPC-H Q3 shape: 3-way join, deterministic integer-revenue top-10.",
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,16 +35,11 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "customer", sf_dir),
         load_table(spark, "orders", sf_dir),
         load_table(spark, "lineitem", sf_dir),
-        segment="BUILDING",
-        date=_Q3_DATE,
-        k=10,
     )
 
 @register(
     "tpch_q5_local_supplier",
-    oracle=tpch.LOCAL_SUPPLIER_SQL.format(
-        region_name="ASIA", date_from="1996-01-01 00:00:00", date_to="1998-01-01 00:00:00"
-    ),
+    oracle=tpch.LOCAL_SUPPLIER_SQL,
     doc="TPC-H Q5 shape: 6-way join, broadcast dimensions, revenue per "
     "nation.",
     bench=True,
@@ -65,9 +56,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q4_order_priority",
-    oracle=tpch.ORDER_PRIORITY_EXISTS_SQL.format(
-        date_from="1996-01-01 00:00:00", date_to="1996-04-01 00:00:00"
-    ),
+    oracle=tpch.ORDER_PRIORITY_EXISTS_SQL,
     doc="TPC-H Q4 shape: EXISTS semi-join (returnflag stand-in for the "
     "trimmed commit/receipt dates) + per-priority count.",
 )
@@ -78,13 +67,7 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q6_forecast_revenue",
-    oracle=tpch.FORECAST_REVENUE_SQL.format(
-        date_from="1996-01-01 00:00:00",
-        date_to="1997-01-01 00:00:00",
-        disc_lo_c=5,
-        disc_hi_c=7,
-        max_qty=24,
-    ),
+    oracle=tpch.FORECAST_REVENUE_SQL,
     doc="TPC-H Q6: all predicates push to the scan, single exact global sum.",
 )
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,7 +75,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q7_volume_shipping",
-    oracle=tpch.VOLUME_SHIPPING_SQL.format(nation_a="NATION_1", nation_b="NATION_2"),
+    oracle=tpch.VOLUME_SHIPPING_SQL,
     doc="TPC-H Q7: bidirectional nation-pair trade volume per ship year; "
     "nation/supplier/customer dims broadcast.",
 )
@@ -107,13 +90,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q8_market_share",
-    oracle=tpch.NATIONAL_MARKET_SHARE_SQL.format(
-        target_nation="NATION_7",
-        region_name="ASIA",
-        part_type="PROMO",
-        date_from="1995-01-01 00:00:00",
-        date_to="1997-01-01 00:00:00",
-    ),
+    oracle=tpch.NATIONAL_MARKET_SHARE_SQL,
     doc="TPC-H Q8: target nation's market share per year -- ratio of two "
     "exact integer sums (partitioning-independent).",
 )
@@ -130,9 +107,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q10_returned_items",
-    oracle=tpch.RETURNED_ITEM_SQL.format(
-        date_from="1996-01-01 00:00:00", date_to="1996-04-01 00:00:00", k=20
-    ),
+    oracle=tpch.RETURNED_ITEM_SQL,
     doc="TPC-H Q10: top-20 customers by returned-item revenue in a quarter; "
     "deterministic row_number cut on exact integer revenue.",
 )
@@ -146,7 +121,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q13_order_distribution",
-    oracle=tpch.CUSTOMER_ORDER_DIST_SQL.format(excluded_priority="4-NOT SPECIFIED"),
+    oracle=tpch.CUSTOMER_ORDER_DIST_SQL,
     doc="TPC-H Q13: customers-per-order-count histogram; left join keeps "
     "zero-order customers (priority filter stands in for comment LIKE).",
 )
@@ -157,9 +132,7 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q14_promo_revenue",
-    oracle=tpch.PROMO_REVENUE_SQL.format(
-        promo_type="PROMO", date_from="1996-03-01 00:00:00", date_to="1996-04-01 00:00:00"
-    ),
+    oracle=tpch.PROMO_REVENUE_SQL,
     doc="TPC-H Q14: promo share of one month's revenue; ratio of exact "
     "integer sums.",
 )
@@ -170,7 +143,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q17_small_quantity",
-    oracle=tpch.SMALL_QUANTITY_SQL.format(brand="Brand#5"),
+    oracle=tpch.SMALL_QUANTITY_SQL,
     doc="TPC-H Q17: below-20%%-of-part-average quantity predicate evaluated "
     "in integers (qty*5*cnt < sum) over a per-part window -- no float avg.",
 )
@@ -181,7 +154,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q18_large_volume",
-    oracle=tpch.LARGE_VOLUME_SQL.format(min_qty_c=15000, k=100),
+    oracle=tpch.LARGE_VOLUME_SQL,
     doc="TPC-H Q18: HAVING on aggregated order quantity, joined back to "
     "customer; top-100 by total price with orderkey tie-break.",
 )
@@ -208,9 +181,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q2_min_cost_supplier",
-    oracle=tpch.MIN_COST_SUPPLIER_SQL.format(
-        region_name="ASIA", size=5, type_="STANDARD", k=10
-    ),
+    oracle=tpch.MIN_COST_SUPPLIER_SQL,
     doc="TPC-H Q2 shape: correlated-MIN rewritten as groupBy-min + equi-join "
     "back; derived partsupp; deterministic top-10 on a total order.",
 )
@@ -221,15 +192,11 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "nation", sf_dir),
         load_table(spark, "region", sf_dir),
         load_table(spark, "lineitem", sf_dir),
-        size=5,
-        type_="STANDARD",
-        region_name="ASIA",
-        k=10,
     )
 
 @register(
     "tpch_q9_product_type_profit",
-    oracle=tpch.PRODUCT_TYPE_PROFIT_SQL.format(name_substr="widget"),
+    oracle=tpch.PRODUCT_TYPE_PROFIT_SQL,
     doc="TPC-H Q9: profit decomposition over a 6-way join (lineitem ⋈ "
     "derived partsupp on the compound key is the real shuffle); exact "
     "1e-4-dollar integer arithmetic.",
@@ -241,12 +208,11 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "part", sf_dir),
         load_table(spark, "supplier", sf_dir),
         load_table(spark, "nation", sf_dir),
-        name_substr="widget",
     )
 
 @register(
     "tpch_q11_important_stock",
-    oracle=tpch.IMPORTANT_STOCK_SQL.format(nation_name="NATION_9", fraction_denom=1500),
+    oracle=tpch.IMPORTANT_STOCK_SQL,
     doc="TPC-H Q11: group-sum vs scalar-fraction HAVING, compared exactly in "
     "bigints (val_c * denom > tot_c); scalar total via lazy broadcast "
     "crossJoin.",
@@ -256,15 +222,11 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "lineitem", sf_dir),
         load_table(spark, "supplier", sf_dir),
         load_table(spark, "nation", sf_dir),
-        nation_name="NATION_9",
-        fraction_denom=1500,
     )
 
 @register(
     "tpch_q12_shipmode_priority",
-    oracle=tpch.SHIPMODE_PRIORITY_SQL.format(
-        date_from="1997-01-01 00:00:00", date_to="1998-01-01 00:00:00"
-    ),
+    oracle=tpch.SHIPMODE_PRIORITY_SQL,
     doc="TPC-H Q12: CASE-sum pivot over the orders⋈lineitem join "
     "(deterministic keyed-hash shipmode stand-in).",
 )
@@ -275,9 +237,7 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q15_top_supplier",
-    oracle=tpch.TOP_SUPPLIER_SQL.format(
-        date_from="1996-01-01 00:00:00", date_to="1996-04-01 00:00:00"
-    ),
+    oracle=tpch.TOP_SUPPLIER_SQL,
     doc="TPC-H Q15: revenue-view argmax with ties kept -- equi-join against "
     "the broadcast scalar max, no global sort.",
 )
@@ -288,7 +248,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q16_supplier_part_counts",
-    oracle=tpch.SUPPLIER_PART_COUNTS_SQL.format(excl_brand="Brand#12", excl_type="PROMO"),
+    oracle=tpch.SUPPLIER_PART_COUNTS_SQL,
     doc="TPC-H Q16: distinct-supplier count per (brand,type,size) with a "
     "broadcast anti-join excluding flagged suppliers.",
 )
@@ -301,12 +261,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q20_excess_inventory",
-    oracle=tpch.EXCESS_INVENTORY_SQL.format(
-        nation_name="NATION_9",
-        name_prefix="red",
-        date_from="1996-01-01 00:00:00",
-        date_to="1997-01-01 00:00:00",
-    ),
+    oracle=tpch.EXCESS_INVENTORY_SQL,
     doc="TPC-H Q20: nested INs become aggregation + equi-join + integer "
     "predicate + left-semi; correlated scalar subquery never re-scans.",
 )
@@ -320,7 +275,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q21_waiting_suppliers",
-    oracle=tpch.WAITING_SUPPLIERS_SQL.format(nation_name="NATION_9", k=20),
+    oracle=tpch.WAITING_SUPPLIERS_SQL,
     doc="TPC-H Q21: EXISTS/NOT-EXISTS quadruple self-reference as "
     "left-semi + left-anti on distinct (order, supplier) pairs.",
 )
@@ -334,9 +289,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q22_global_sales",
-    oracle=tpch.GLOBAL_SALES_SQL.format(
-        codes="1, 3, 5, 7, 9", cutoff="2000-01-01 00:00:00"
-    ),
+    oracle=tpch.GLOBAL_SALES_SQL,
     doc="TPC-H Q22: above-scalar-average balance (exact bal_c*cnt > sum_c "
     "bigint compare) + no-recent-orders anti-join, per country code.",
 )
@@ -344,6 +297,4 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tpch.global_sales_opportunity(
         load_table(spark, "customer", sf_dir),
         load_table(spark, "orders", sf_dir),
-        codes=(1, 3, 5, 7, 9),
-        cutoff="2000-01-01 00:00:00",
     )

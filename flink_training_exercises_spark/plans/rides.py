@@ -103,6 +103,6 @@ def rides_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_fill(register_events(spark, sf_dir), _spark_ms_to_ts))
 
 
-def rides_cte(events_table: str = "events") -> str:
+def rides_cte() -> str:
     """DuckDB-side CTE body for oracle queries."""
-    return _fill(events_table, _duck_ms_to_ts)
+    return _fill("events", _duck_ms_to_ts)

@@ -1,10 +1,8 @@
 """Schemas for the reference's record types and the driver testdata tables.
 
 Reference record types (SURVEY.md §1.2):
-  * TaxiRide POJO  -> TAXI_RIDE (TaxiRide.java:62-70; Joda UTC -> TimestampType)
   * Mail Tuple6    -> MAIL (MBoxParser.java:41-47,223; replyTo may be the
                       literal string "null" -- preserved, not NULL)
-  * Edge triple    -> EDGE (PageRankWithEdgeWeights.java:70-74)
 
 Positional Flink tuples become named columns; there is no positional access
 anywhere in this engine.
@@ -14,22 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# TaxiRide.java:62-70 -- rideId, isStart, startTime, endTime, startLon,
-# startLat, endLon, endLat, passengerCnt. Times are NTZ (UTC wall time,
-# TaxiRide.java:42-43) -- engine-wide policy, see sources/loaders.py.
-TAXI_RIDE = T.StructType(
-    [
-        T.StructField("rideId", T.LongType(), False),
-        T.StructField("isStart", T.BooleanType(), False),
-        T.StructField("startTime", T.TimestampNTZType(), True),
-        T.StructField("endTime", T.TimestampNTZType(), True),
-        T.StructField("startLon", T.FloatType(), True),
-        T.StructField("startLat", T.FloatType(), True),
-        T.StructField("endLon", T.FloatType(), True),
-        T.StructField("endLat", T.FloatType(), True),
-        T.StructField("passengerCnt", T.ShortType(), True),
-    ]
-)
 
 # MBoxParser.java:41-47 -- six string fields; time is the *string*
 # 'yyyy-MM-dd-HH:mm:ss' (month key = substring), matching the reference.
@@ -44,45 +26,6 @@ MAIL = T.StructType(
     ]
 )
 
-# PageRankWithEdgeWeights.java:70-74 -- tab-separated (src, dst, weight).
-EDGE = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-    ]
-)
-
-# Driver testdata tables (TESTDATA.md) -- declared so streaming readers and
-# tests never rely on runtime schema inference.
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
 
 TESTDATA_TABLES = (
     "region",

@@ -1,9 +1,7 @@
 from .loaders import (  # noqa: F401
     load_table,
-    load_tables,
     read_edge_list,
     read_mail_records,
     read_taxi_rides_csv,
-    taxi_ride_to_csv_line,
     widen_scan,
 )

@@ -1,55 +1,11 @@
-"""Bucketed-table utilities: pre-shuffle once at write time, join forever
-without an Exchange.
-
-At 100 TB the dominant recurring cost of fact-to-fact joins (e.g.
-lineitem x orders) is the shuffle. Bucketing both tables by the join key at
-ingest amortizes that shuffle into the write: Spark's scan reports the
-bucket distribution, Catalyst drops both Exchanges, and the sort-merge join
-runs entirely map-side. These helpers wrap the write/read pattern; the test
-asserts the Exchange-free plan.
+"""Write-time layout for the dpp_partition_pruning query: a
+directory-partitioned fact, joined on its partition column so Catalyst
+prunes whole directories (static and dynamic partition pruning).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key -- no shuffle."""
-    return spark.table(left_table).join(spark.table(right_table), key)
-
-
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle Exchange (excluding AQE
-    wrappers) -- the property bucketing removes."""
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    return any(
-        line.strip().split(" ", 2)[-1].startswith("Exchange")
-        for line in plan.splitlines()
-        if "Exchange" in line and "ReusedExchange" not in line
-    )
 
 
 def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
@@ -87,9 +43,3 @@ def dpp_join_agg(
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
         )
     )
-
-
-def plan_has_dynamic_pruning(df: DataFrame) -> bool:
-    """True if the executed plan contains a DPP runtime filter on a scan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "dynamicpruning" in plan

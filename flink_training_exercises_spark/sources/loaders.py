@@ -2,8 +2,8 @@
 
 S1 (file half)  read_taxi_rides_csv -- the reference's gzipped CSV TaxiRide
                 format (TaxiRide.java:92-130): Spark decompresses .gz
-                transparently; the *replay pacing* half of S1 lives in
-                streaming/replay.py.
+                transparently; the *replay pacing* half of S1 is
+                streaming/sources.paced_feed.
 S3/S5           read_mail_records -- multi-char record delimiter '##//##' and
                 field delimiter '#|#' (MBoxParser.java:56-57) via the Hadoop
                 textinputformat.record.delimiter conf; a scan this exotic is
@@ -11,7 +11,7 @@ S3/S5           read_mail_records -- multi-char record delimiter '##//##' and
                 DataFrame immediately.
 S4              read_edge_list -- tab-separated (src, dst, weight)
                 (PageRankWithEdgeWeights.java:70-74).
-Testdata        load_table / load_tables over /root/testdata parquet.
+Testdata        load_table over /root/testdata parquet.
 
 The file loaders (taxi CSV, mail records, edge lists) declare explicit
 schemas -- no runtime inference. ``load_table`` passes no schema: parquet
@@ -57,14 +57,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-def load_tables(spark: SparkSession, names, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
-
-
 _WIDEN_MEMO: dict[tuple[str, int, int], bool] = {}
 
 
-def widen_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def widen_scan(df: DataFrame) -> DataFrame:
     """Raise partition count before CPU-heavy per-row work (minhash
     signatures, all-pairs cosine, shingling): a small local parquet file
     arrives as ONE split (< maxPartitionBytes), serializing e.g. the 32-pass
@@ -84,7 +80,7 @@ def widen_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     collision could only mis-skip/mis-add the widening shuffle, which is
     performance-neutral to results (row-level ops are partitioning-
     independent)."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), target)
     narrow = _WIDEN_MEMO.get(key)
     if narrow is None:
@@ -116,25 +112,6 @@ def read_taxi_rides_csv(spark: SparkSession, path: str) -> DataFrame:
     return _ride_columns(raw)
 
 
-def parse_taxi_ride_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Deserialize TaxiRide CSV lines carried in a string column (the Kafka
-    payload format, TaxiRideSchema.java:40-44) -- works on batch AND
-    streaming DataFrames (e.g. kafka `value` after CAST AS STRING)."""
-    parts = F.split(F.col(value_col), ",")
-    named = lines.select(
-        parts.getItem(0).cast("long").alias("rideId"),
-        parts.getItem(1).alias("kind"),
-        parts.getItem(2).alias("t1"),
-        parts.getItem(3).alias("t2"),
-        parts.getItem(4).alias("lon1"),
-        parts.getItem(5).alias("lat1"),
-        parts.getItem(6).alias("lon2"),
-        parts.getItem(7).alias("lat2"),
-        parts.getItem(8).cast("short").alias("passengerCnt"),
-    )
-    return _ride_columns(named)
-
-
 def _ride_columns(raw: DataFrame) -> DataFrame:
     is_start = F.col("kind") == F.lit("START")
     # NTZ: the wire format is UTC wall time (TaxiRide.java:42-43); parsing to
@@ -161,30 +138,6 @@ def _ride_columns(raw: DataFrame) -> DataFrame:
         coord("lon2").alias("endLon"),
         coord("lat2").alias("endLat"),
         F.col("passengerCnt"),
-    )
-
-
-def taxi_ride_to_csv_line(df: DataFrame) -> DataFrame:
-    """Inverse of read_taxi_rides_csv: one STRING column ``value`` per ride,
-    the exact TaxiRide.toString() wire format (TaxiRide.java:72-90) used by
-    the Kafka ser/deser pair (TaxiRideSchema.java:28-49)."""
-    fmt = "yyyy-MM-dd HH:mm:ss"
-    is_start = F.col("isStart")
-    t_first = F.when(is_start, F.col("startTime")).otherwise(F.col("endTime"))
-    t_second = F.when(is_start, F.col("endTime")).otherwise(F.col("startTime"))
-    return df.select(
-        F.concat_ws(
-            ",",
-            F.col("rideId").cast("string"),
-            F.when(is_start, F.lit("START")).otherwise(F.lit("END")),
-            F.date_format(t_first, fmt),
-            F.date_format(t_second, fmt),
-            F.col("startLon").cast("string"),
-            F.col("startLat").cast("string"),
-            F.col("endLon").cast("string"),
-            F.col("endLat").cast("string"),
-            F.col("passengerCnt").cast("string"),
-        ).alias("value")
     )
 
 

@@ -69,13 +69,13 @@ def _parse_one_mail(raw: str) -> tuple | None:
     return fields
 
 
-def parse_mbox_mails(raw_mails: DataFrame, text_col: str = "value") -> DataFrame:
+def parse_mbox_mails(raw_mails: DataFrame) -> DataFrame:
     """P11 -- raw mail strings -> mail records (invalid mails dropped)."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in MAIL.fields]
         for pdf in batches:
-            parsed = [p for p in (_parse_one_mail(t) for t in pdf[text_col]) if p]
+            parsed = [p for p in (_parse_one_mail(t) for t in pdf["value"]) if p]
             yield pd.DataFrame(parsed, columns=cols) if parsed else pd.DataFrame(
                 {c: pd.Series(dtype="object") for c in cols}
             )

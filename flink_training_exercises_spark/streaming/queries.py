@@ -17,12 +17,8 @@ from pyspark.sql import functions as F
 
 from ..functions import geo
 from ..scratch import mkscratch
-from ..functions.time import ntz_as_utc_instant
+from ..functions.time import WATERMARK, WATERMARK_MS, ntz_as_utc_instant
 from ..operators.windows import DEFAULT_SLIDE, DEFAULT_THRESHOLD, DEFAULT_WINDOW
-
-DEFAULT_WATERMARK = "60 seconds"  # = maxEventDelay (RideCleansing.java:45)
-# the oracles' fire horizon (window end <= max instant - delay), in ms
-_WATERMARK_MS = int(DEFAULT_WATERMARK.removesuffix(" seconds")) * 1000
 
 # ONE source of truth for the windowed sketches' window: the streaming
 # fold's duration string and the batch stages' / oracles' epoch-ms width
@@ -33,20 +29,21 @@ SKETCH_WINDOW_MS = 6 * 3600 * 1000
 SKETCH_WINDOW = f"{SKETCH_WINDOW_MS // (3600 * 1000)} hours"
 assert SKETCH_WINDOW_MS % (3600 * 1000) == 0  # the derivation above is hour-exact
 
+# Parameters each read by a streaming query and by its oracle.
+INTERVAL_JOIN_GAP_MS = 6 * 3600 * 1000  # a purchase joins clicks up to 6 h before it
+WINDOWED_TOPK_K = 3
+HISTOGRAM_BIN_CENTS = 1000  # fixed bin width of the windowed histogram and quantile
+WINDOWED_QUANTILE_PCTS = (25, 50, 75, 90)
 
-def streaming_exact_dedup(
-    events: DataFrame,
-    keys: list[str],
-    time_col: str = "ts",
-    watermark: str = "60 seconds",
-) -> DataFrame:
+
+def streaming_exact_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
     """Streaming twin of operators/dedup.exact_dedup: first-seen-wins key
     dedup with watermark-bounded state (`dropDuplicatesWithinWatermark` --
     duplicates arriving within the watermark horizon are suppressed, state
     for expired keys is evicted, so memory is bounded at any corpus size)."""
     return events.withColumn(
-        "__ts_i", ntz_as_utc_instant(time_col)
-    ).withWatermark("__ts_i", watermark).dropDuplicatesWithinWatermark(keys).drop("__ts_i")
+        "__ts_i", ntz_as_utc_instant("ts")
+    ).withWatermark("__ts_i", WATERMARK).dropDuplicatesWithinWatermark(keys).drop("__ts_i")
 
 
 def streaming_ride_cleansing(rides: DataFrame) -> DataFrame:
@@ -57,7 +54,7 @@ def streaming_ride_cleansing(rides: DataFrame) -> DataFrame:
 
 def streaming_popular_places(
     rides: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
+    watermark: str = WATERMARK,
     window: str = DEFAULT_WINDOW,
     slide: str = DEFAULT_SLIDE,
     threshold: int = DEFAULT_THRESHOLD,
@@ -201,11 +198,7 @@ def fold_availablenow(
             shutil.rmtree(root, ignore_errors=True)
 
 
-def streaming_distinct_users(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "60 seconds",
-) -> DataFrame:
+def streaming_distinct_users(events: DataFrame) -> DataFrame:
     """Per-window distinct-user counts through the real streaming engine.
 
     Streaming aggregation forbids COUNT(DISTINCT), so this composes the two
@@ -226,11 +219,11 @@ def streaming_distinct_users(
     ev = events.select(
         F.timestamp_millis(em - em % 3600000).alias("hour"), "event_type", "user_id"
     )
-    deduped = ev.withWatermark("hour", watermark).dropDuplicates(
+    deduped = ev.withWatermark("hour", WATERMARK).dropDuplicates(
         ["hour", "event_type", "user_id"]
     )
     return (
-        deduped.groupBy(F.window("hour", window).alias("w"), "event_type")
+        deduped.groupBy(F.window("hour", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("distinct_users"))
         .select(
             F.unix_millis(F.col("w.end")).alias("window_end_ms"),
@@ -241,11 +234,7 @@ def streaming_distinct_users(
 
 
 def streaming_interval_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_gap_ms: int = 21_600_000,
-    watermark: str = "60 seconds",
-    how: str = "inner",
+    clicks: DataFrame, purchases: DataFrame, how: str = "inner"
 ) -> DataFrame:
     """Stream-stream interval join: purchases matched to any same-user click
     in the preceding ``max_gap_ms`` (default 6 h) -- Structured Streaming's
@@ -262,23 +251,21 @@ def streaming_interval_join(
     emits a null-purchase row once the JOIN watermark -- the MIN of the two
     sides' watermarks -- passes ts_click + max_gap (state eviction proves no
     future match is possible). The oracle mirrors exactly that horizon."""
-    from ..functions.time import ntz_as_utc_instant
-
     c = clicks.select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user"),
         ntz_as_utc_instant("ts").alias("ts_c"),
-    ).withWatermark("ts_c", watermark)
+    ).withWatermark("ts_c", WATERMARK)
     p = purchases.select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
         ntz_as_utc_instant("ts").alias("ts_p"),
-    ).withWatermark("ts_p", watermark)
+    ).withWatermark("ts_p", WATERMARK)
     joined = c.join(
         p,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("ts_c") <= F.col("ts_p"))
-        & (F.col("ts_c") >= F.col("ts_p") - F.expr(f"INTERVAL {max_gap_ms} MILLISECONDS")),
+        & (F.col("ts_c") >= F.col("ts_p") - F.expr(f"INTERVAL {INTERVAL_JOIN_GAP_MS} MILLISECONDS")),
         how,
     )
     # gap in MICROseconds: the native precision, exact on both engines
@@ -394,7 +381,6 @@ def run_cdc_merge_availablenow(
     keys: list[str],
     seq_cols: list[str],
     query_name: str,
-    delete_col: str = "is_delete",
     root: str | None = None,
 ) -> DataFrame:
     """Streaming MERGE (the foreachBatch upsert-sink pattern, the
@@ -431,7 +417,7 @@ def run_cdc_merge_availablenow(
         )
 
     final = fold_availablenow(changes, fold, query_name, root)
-    return final.where(~F.col(delete_col)).drop(delete_col)
+    return final.where(~F.col("is_delete")).drop("is_delete")
 
 
 def run_snapshot_diff_availablenow(
@@ -553,7 +539,7 @@ def _sketch_windows(
 ) -> DataFrame:
     """The one window frame of the windowed sketches -- the reference's
     fire-once-at-watermark window: the instant ``ts`` next to ``cols``,
-    watermarked by DEFAULT_WATERMARK, mapped to the sketch's rows by
+    watermarked by WATERMARK, mapped to the sketch's rows by
     ``cells`` (a frame function that keeps ``ts``), grouped by the
     SKETCH_WINDOW tumbling window plus ``keys`` and folded by ``aggs``.
     Output (window_end_ms, keys..., aggs...); a (window, keys) row is
@@ -561,7 +547,7 @@ def _sketch_windows(
     popular_places contract), and its state is evicted then.
     :func:`_window_ctes` is the oracles' twin of this frame."""
     ev = events.select(ntz_as_utc_instant("ts").alias("ts"), *cols).withWatermark(
-        "ts", DEFAULT_WATERMARK
+        "ts", WATERMARK
     )
     if cells is not None:
         ev = cells(ev)
@@ -576,7 +562,7 @@ def _window_ctes(**cols: str) -> str:
     of a windowed-sketch oracle: ``ev`` (ms, cols...) over events, its
     final instant ``mx``, ``evw`` (each event's epoch-aligned
     SKETCH_WINDOW end next to cols...) and ``wins``, the windows the final
-    watermark has fired (end <= max - the DEFAULT_WATERMARK delay). An
+    watermark has fired (end <= max - the WATERMARK delay). An
     oracle folds ``evw JOIN wins USING (window_end_ms)``."""
     w = SKETCH_WINDOW_MS
     exprs = ", ".join(f"{e} AS {name}" for name, e in cols.items())
@@ -586,7 +572,7 @@ mx AS (SELECT max(ms) AS m FROM ev),
 evw AS (SELECT ms - ms % {w} + {w} AS window_end_ms, {names} FROM ev),
 wins AS (
   SELECT DISTINCT window_end_ms FROM evw, mx
-  WHERE window_end_ms <= m - {_WATERMARK_MS}
+  WHERE window_end_ms <= m - {WATERMARK_MS}
 )"""
 
 
@@ -611,7 +597,7 @@ def streaming_windowed_topk(events: DataFrame) -> DataFrame:
     )
 
 
-def rank_topk_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
+def rank_topk_per_window(counts: DataFrame) -> DataFrame:
     """Batch ranking stage for :func:`streaming_windowed_topk`'s drained
     aggregate: top-k event types per window (count desc, type asc)."""
     from pyspark.sql import Window as W
@@ -619,7 +605,7 @@ def rank_topk_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
     w = W.partitionBy("window_end_ms").orderBy(F.desc("cnt"), F.asc("event_type"))
     return (
         counts.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= WINDOWED_TOPK_K)
         .select("window_end_ms", "rank", "event_type", "cnt")
     )
 
@@ -671,7 +657,7 @@ def hll_estimate_per_window(regs: DataFrame) -> DataFrame:
     )
 
 
-def windowed_topk_oracle(k: int = 3) -> str:
+def windowed_topk_oracle() -> str:
     """DuckDB oracle for the streaming_windowed_topk catalog entry: the
     fired windows' event-type counts, top-k per window (count desc, type
     asc)."""
@@ -687,7 +673,7 @@ SELECT window_end_ms, rank, event_type, cnt FROM (
          CAST(row_number() OVER (PARTITION BY window_end_ms
                                  ORDER BY cnt DESC, event_type) AS INT) AS rank
   FROM counts
-) WHERE rank <= {k}
+) WHERE rank <= {WINDOWED_TOPK_K}
 """
 
 
@@ -725,10 +711,10 @@ def concurrency_profile_oracle() -> str:
 mx AS (SELECT max(epoch_ms(ts)) AS m FROM events)
 SELECT session_start_ms AS s, session_end_ms + {DEFAULT_GAP_MS} AS e
 FROM s, mx
-WHERE session_end_ms + {DEFAULT_GAP_MS} <= m - {_WATERMARK_MS}"""
+WHERE session_end_ms + {DEFAULT_GAP_MS} <= m - {WATERMARK_MS}"""
     return concurrency_sweep_sql(sessions_sql)
 
-def streaming_windowed_histogram(events: DataFrame, bin_cents: int = 1000) -> DataFrame:
+def streaming_windowed_histogram(events: DataFrame) -> DataFrame:
     """Fixed-width value histogram ON the stream: per event-time window,
     counts per bin_cents-wide value bucket -- the streaming twin of the
     batch histogram family (value_histogram / histogram_merge_shards)
@@ -756,16 +742,16 @@ def streaming_windowed_histogram(events: DataFrame, bin_cents: int = 1000) -> Da
         ["bin"],
         [F.count(F.lit(1)).alias("cnt")],
         cells=lambda ev: ev.select("ts", cents.alias("c")).select(
-            "ts", F.expr(f"c div {bin_cents}").alias("bin")
+            "ts", F.expr(f"c div {HISTOGRAM_BIN_CENTS}").alias("bin")
         ),
     )
 
 
-def windowed_histogram_oracle(bin_cents: int = 1000) -> str:
+def windowed_histogram_oracle() -> str:
     """DuckDB oracle for the streaming_windowed_histogram catalog entry:
     per fired window, the fixed-width bin counts."""
     return f"""
-{_window_ctes(bin=f"CAST(floor(value * 1e2 + 5e-1) AS BIGINT) // {bin_cents}")}
+{_window_ctes(bin=f"CAST(floor(value * 1e2 + 5e-1) AS BIGINT) // {HISTOGRAM_BIN_CENTS}")}
 SELECT window_end_ms, bin, CAST(count(*) AS BIGINT) AS cnt
 FROM evw JOIN wins USING (window_end_ms)
 GROUP BY window_end_ms, bin
@@ -860,8 +846,8 @@ def run_scd2_maintenance_availablenow(events: DataFrame, query_name: str) -> Dat
 
 def quantile_from_binned(
     bins: DataFrame,
-    pcts: tuple = (25, 50, 75, 90),
-    bin_cents: int = 1000,
+    pcts: tuple = WINDOWED_QUANTILE_PCTS,
+    bin_cents: int = HISTOGRAM_BIN_CENTS,
 ) -> DataFrame:
     """Bounded batch stage for the gated streaming windowed quantile:
     exact discrete quantiles OVER THE BINNED VALUES from a per-window
@@ -910,18 +896,15 @@ def quantile_from_binned(
     )
 
 
-def windowed_quantile_oracle(
-    bin_cents: int = 1000,
-    pcts: tuple = (25, 50, 75, 90),
-) -> str:
+def windowed_quantile_oracle() -> str:
     """DuckDB oracle for the streaming_windowed_quantile catalog entry: the
     windowed-histogram oracle as a CTE (nested WITH -- the
     ann_recall_at_k precedent), the same integer cross-multiplied
     cumulative walk, BIGINT casts on the DuckDB sum() outputs (HUGEINT
     -> float64 dtype skew otherwise)."""
-    vals = ", ".join(f"({x})" for x in pcts)
+    vals = ", ".join(f"({x})" for x in WINDOWED_QUANTILE_PCTS)
     return f"""
-WITH h AS ({windowed_histogram_oracle(bin_cents)}),
+WITH h AS ({windowed_histogram_oracle()}),
 c AS (
   SELECT window_end_ms, bin, cnt,
          sum(cnt) OVER (PARTITION BY window_end_ms ORDER BY bin
@@ -932,7 +915,7 @@ c AS (
 pcts(pct) AS (VALUES {vals})
 SELECT CAST(window_end_ms AS BIGINT) AS window_end_ms,
        CAST(pct AS BIGINT) AS pct,
-       CAST(bin * {bin_cents} AS BIGINT) AS est_floor_cents,
+       CAST(bin * {HISTOGRAM_BIN_CENTS} AS BIGINT) AS est_floor_cents,
        CAST(n AS BIGINT) AS n_values
 FROM c, pcts
 WHERE 100 * (cum - cnt) < pct * n AND 100 * cum >= pct * n
@@ -1002,11 +985,7 @@ def _panel_window_events(events: DataFrame, key_col: str, panel: DataFrame) -> D
     ).join(panel, "k")
 
 
-def streaming_windowed_cms(
-    events: DataFrame,
-    key_col: str = "user_id",
-    width: int = CMS_STREAM_WIDTH,
-) -> DataFrame:
+def streaming_windowed_cms(events: DataFrame) -> DataFrame:
     """Count-Min sketch ON the stream: per event-time window, the d x w
     cell counts of a CMS over ``key_col`` -- the FOURTH mergeable sketch
     riding the watermarked windowed aggregation, after top-k counts
@@ -1030,18 +1009,15 @@ def streaming_windowed_cms(
 
     return _sketch_windows(
         events,
-        [F.col(key_col).cast("string").alias("k")],
+        [F.col("user_id").cast("string").alias("k")],
         ["r", "bucket"],
         [F.count(F.lit(1)).alias("cell_sum")],
-        cells=lambda ev: cms_cells(ev, "k", "ts", width=width),
+        cells=lambda ev: cms_cells(ev, "k", "ts", width=CMS_STREAM_WIDTH),
     )
 
 
 def cms_window_estimates(
-    cells: DataFrame,
-    events: DataFrame,
-    key_col: str = "user_id",
-    width: int = CMS_STREAM_WIDTH,
+    cells: DataFrame, events: DataFrame, width: int = CMS_STREAM_WIDTH
 ) -> DataFrame:
     """Bounded batch stage over the DRAINED cells (the windowed_topk /
     quantile composition pattern): estimate each fired window's activity
@@ -1068,7 +1044,7 @@ def cms_window_estimates(
     # also breaks the self-join attribute ambiguity of rejoining the
     # memory-sink relation against its own projection)
     cells = cells.localCheckpoint()
-    panel = _md5_panel(events, key_col)
+    panel = _md5_panel(events, "user_id")
     probe_cells = cms_cells(panel, "k", "k", width=width)
     wins = cells.select("window_end_ms").distinct()
     est = (
@@ -1078,7 +1054,7 @@ def cms_window_estimates(
         .agg(F.min(F.coalesce(F.col("cell_sum"), F.lit(0))).alias("est_cnt"))
     )
     exact = (
-        _panel_window_events(events, key_col, panel)
+        _panel_window_events(events, "user_id", panel)
         .groupBy("window_end_ms", "k")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
@@ -1086,7 +1062,7 @@ def cms_window_estimates(
         est.join(exact, ["window_end_ms", "k"], "left")
         .select(
             F.col("window_end_ms").cast("bigint").alias("window_end_ms"),
-            F.col("k").cast("bigint").alias(key_col),
+            F.col("k").cast("bigint").alias("user_id"),
             F.coalesce(F.col("exact_cnt"), F.lit(0)).cast("bigint").alias("exact_cnt"),
             F.col("est_cnt").cast("bigint").alias("est_cnt"),
             (F.col("est_cnt") - F.coalesce(F.col("exact_cnt"), F.lit(0)))
@@ -1096,7 +1072,7 @@ def cms_window_estimates(
     )
 
 
-def windowed_cms_oracle(width: int = CMS_STREAM_WIDTH) -> str:
+def windowed_cms_oracle() -> str:
     """DuckDB oracle for the streaming_windowed_cms catalog entry: the
     cell kernel's SQL twin folded per (window, r, bucket) over the fired
     windows, the same md5-panel probe, min-over-rows estimate with absent
@@ -1106,7 +1082,7 @@ def windowed_cms_oracle(width: int = CMS_STREAM_WIDTH) -> str:
     from ..operators.sketches import cms_cells_sql
 
     cells = cms_cells_sql(
-        "evw JOIN wins USING (window_end_ms)", "k", "window_end_ms", width=width
+        "evw JOIN wins USING (window_end_ms)", "k", "window_end_ms", width=CMS_STREAM_WIDTH
     )
     return f"""
 {_window_ctes(k="CAST(user_id AS VARCHAR)")},
@@ -1117,7 +1093,7 @@ cells AS (
 panel AS (
   {_panel_sql()}
 ),
-probe_cells AS ({cms_cells_sql("panel", "k", "k", width=width)}),
+probe_cells AS ({cms_cells_sql("panel", "k", "k", width=CMS_STREAM_WIDTH)}),
 est AS (
   SELECT w.window_end_ms, p.k,
          CAST(min(coalesce(c.cell_sum, 0)) AS BIGINT) AS est_cnt
@@ -1150,11 +1126,7 @@ MH_STREAM_K = 16  # permutations: estimator granularity 1/16 = 62500 ppm,
 #                   rule) while the per-window state stays 16 BIGINTs
 
 
-def streaming_windowed_minhash(
-    events: DataFrame,
-    key_col: str = "user_id",
-    k: int = MH_STREAM_K,
-) -> DataFrame:
+def streaming_windowed_minhash(events: DataFrame, k: int = MH_STREAM_K) -> DataFrame:
     """MinHash signatures ON the stream: per event-time window, the
     k-permutation signature (min of each permuted md5 over the window's
     keys) -- the FIFTH mergeable sketch riding the watermarked windowed
@@ -1195,7 +1167,7 @@ def streaming_windowed_minhash(
         F.min(permuted_hash(base, a, b).cast("bigint")).alias(f"h{r}")
         for r, (a, b) in enumerate(_MINHASH_PARAMS[:k])
     ]
-    agg = _sketch_windows(events, [F.col(key_col).cast("string").alias("k")], [], mins)
+    agg = _sketch_windows(events, [F.col("user_id").cast("string").alias("k")], [], mins)
     cells = F.array(
         *[
             F.struct(
@@ -1213,11 +1185,7 @@ def streaming_windowed_minhash(
 
 
 def minhash_window_similarity(
-    sigs: DataFrame,
-    events: DataFrame,
-    key_col: str = "user_id",
-    k: int = MH_STREAM_K,
-    window_ms: int = SKETCH_WINDOW_MS,
+    sigs: DataFrame, events: DataFrame, k: int = MH_STREAM_K, window_ms: int = SKETCH_WINDOW_MS
 ) -> DataFrame:
     """Bounded batch stage over the DRAINED signatures (the windowed
     topk/quantile/CMS composition pattern): estimate the Jaccard
@@ -1263,7 +1231,7 @@ def minhash_window_similarity(
     du = (
         events.select(
             _window_end_expr(window_ms).alias("window_end_ms"),
-            F.col(key_col).cast("string").alias("u"),
+            F.col("user_id").cast("string").alias("u"),
         )
         .join(wins, "window_end_ms")
         .distinct()
@@ -1381,11 +1349,7 @@ BLOOM_STREAM_WORDS = 8  # 63 bits/word = 504 bits; sized so the one-sided
 #                         gate, not the sf0.001 pytest fixture)
 
 
-def streaming_windowed_bloom(
-    events: DataFrame,
-    key_col: str = "user_id",
-    n_words: int = BLOOM_STREAM_WORDS,
-) -> DataFrame:
+def streaming_windowed_bloom(events: DataFrame) -> DataFrame:
     """Bloom filter ON the stream: per event-time window, the bit_or-folded
     word vector of a Bloom filter over ``key_col`` -- the SIXTH mergeable
     sketch riding the watermarked windowed aggregation, after top-k / HLL
@@ -1411,24 +1375,19 @@ def streaming_windowed_bloom(
 
     def cells(ev: DataFrame) -> DataFrame:
         return ev.select(
-            "ts", F.explode(F.array(*_cells(F.col("k"), n_words))).alias("c")
+            "ts", F.explode(F.array(*_cells(F.col("k"), BLOOM_STREAM_WORDS))).alias("c")
         ).select("ts", F.col("c.word").alias("word"), F.col("c.bit").alias("bit"))
 
     return _sketch_windows(
         events,
-        [F.col(key_col).cast("string").alias("k")],
+        [F.col("user_id").cast("string").alias("k")],
         ["word"],
         [F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))")).alias("bits")],
         cells=cells,
     )
 
 
-def bloom_window_membership(
-    words: DataFrame,
-    events: DataFrame,
-    key_col: str = "user_id",
-    n_words: int = BLOOM_STREAM_WORDS,
-) -> DataFrame:
+def bloom_window_membership(words: DataFrame, events: DataFrame) -> DataFrame:
     """Bounded batch stage over the DRAINED per-window Bloom words (the
     cms_window_estimates composition): probe every fired window's filter
     with the deterministic md5-chosen key panel and grade membership
@@ -1452,9 +1411,9 @@ def bloom_window_membership(
     # -- localCheckpoint once (multi-consumer rule; also breaks the
     # memory-sink self-join attribute ambiguity)
     words = words.localCheckpoint()
-    panel = _md5_panel(events, key_col)
+    panel = _md5_panel(events, "user_id")
     probe_cells = panel.select(
-        "k", F.explode(F.array(*_cells(F.col("k"), n_words))).alias("c")
+        "k", F.explode(F.array(*_cells(F.col("k"), BLOOM_STREAM_WORDS))).alias("c")
     ).select(
         "k",
         F.col("c.word").alias("word"),
@@ -1476,7 +1435,7 @@ def bloom_window_membership(
         )
     )
     exact = (
-        _panel_window_events(events, key_col, panel)
+        _panel_window_events(events, "user_id", panel)
         .groupBy("window_end_ms", "k")
         .agg(F.lit(1).alias("present"))
     )
@@ -1484,7 +1443,7 @@ def bloom_window_membership(
         probed.join(exact, ["window_end_ms", "k"], "left")
         .select(
             F.col("window_end_ms").cast("bigint").alias("window_end_ms"),
-            F.col("k").cast("bigint").alias(key_col),
+            F.col("k").cast("bigint").alias("user_id"),
             F.coalesce(F.col("present"), F.lit(0)).cast("bigint").alias("present"),
             F.col("bloom_hit").cast("bigint").alias("bloom_hit"),
             (
@@ -1497,7 +1456,7 @@ def bloom_window_membership(
     )
 
 
-def windowed_bloom_oracle(n_words: int = BLOOM_STREAM_WORDS) -> str:
+def windowed_bloom_oracle() -> str:
     """DuckDB oracle for the streaming_windowed_bloom catalog entry: the same
     per-(window, word) bit_or fold over the fired windows, the same
     md5-panel probe cells, min-over-cells membership with absent words
@@ -1507,7 +1466,7 @@ def windowed_bloom_oracle(n_words: int = BLOOM_STREAM_WORDS) -> str:
     from ..operators.bloom import _BLOOM_PARAMS
 
     base = md5_long_sql("CAST(k AS VARCHAR)")
-    m_bits = 63 * n_words
+    m_bits = 63 * BLOOM_STREAM_WORDS
     # pos computed ONCE per hash param, word/bit derived from it -- the
     # batch Bloom oracles' established pos-first form (bloom.py
     # bloom_semijoin_audit_sql / bloom_skipping_audit_sql)

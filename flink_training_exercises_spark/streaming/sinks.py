@@ -1,70 +1,12 @@
-"""Streaming sinks and connector adapters (SURVEY.md §2.1 S6-S10).
+"""The Elasticsearch sink's request shape (SURVEY.md §2.1 S8).
 
-Kafka and Elasticsearch are OPTIONAL adapters, excluded from the correctness
-gate (SURVEY.md §7 phase 4): the container has neither the kafka connector
-jar nor an ES endpoint. The builders below construct the correct writer
-configuration and fail with a clear message if the integration isn't
-available, so they're exercisable the moment the environment provides it.
+The transport is out of scope (no ES endpoint or ``requests`` here), so
+only the document and bulk-payload shape of PopularPlacesToES is kept.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable
-
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter
-
-from ..sources.loaders import taxi_ride_to_csv_line
-
-
-def memory_sink(df: DataFrame, name: str, output_mode: str = "append") -> DataStreamWriter:
-    """Test/debug sink: results queryable as table `name` (S9 analogue)."""
-    return df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-
-
-def console_sink(df: DataFrame, output_mode: str = "append") -> DataStreamWriter:
-    """S9 -- the reference's .print()."""
-    return df.writeStream.format("console").outputMode(output_mode)
-
-
-def csv_file_sink(df: DataFrame, path: str, checkpoint: str, sep: str = "\t") -> DataStreamWriter:
-    """S10 -- writeAsCsv twin (append-only file sink with checkpointed
-    exactly-once semantics, which the reference's CSV sink lacked)."""
-    return (
-        df.writeStream.format("csv")
-        .option("path", path)
-        .option("sep", sep)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-
-
-def kafka_ride_sink(
-    rides: DataFrame, brokers: str, topic: str = "cleansedRides"
-) -> DataStreamWriter:
-    """S6 -- RideCleansingToKafka: rides serialized as TaxiRide.toString()
-    CSV lines (TaxiRideSchema.java:28-49) into a topic. Requires the
-    spark-sql-kafka package on the classpath (not in this image)."""
-    payload = taxi_ride_to_csv_line(rides)
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-    )
-
-
-def kafka_ride_source(spark, brokers: str, topic: str):
-    """S7 -- PopularPlacesFromKafka's consumer: earliest offsets, CSV-line
-    payload parsed back to ride rows, 60s bounded out-of-orderness
-    (PopularPlacesFromKafka.java:65-82). Parse with
-    sources.read_taxi_rides_csv's column logic applied to `value`."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-    )
 
 
 def es_bulk_payloads(rows, index: str, bulk_size: int = 10):
@@ -97,37 +39,3 @@ def es_bulk_payloads(rows, index: str, bulk_size: int = 10):
             lines.clear()
     if lines:
         yield "\n".join(lines) + "\n"
-
-
-def elasticsearch_foreach_batch(
-    index: str = "nyc-places", endpoint: str = "http://localhost:9200", bulk_size: int = 10
-) -> Callable[[DataFrame, int], None]:
-    """S8 -- PopularPlacesToES as a foreachBatch upsert: documents
-    bulk-indexed `bulk_size` at a time via :func:`es_bulk_payloads`.
-    Network calls only happen if `requests` is importable and the
-    endpoint answers; otherwise raises NotImplementedError (optional
-    adapter, outside the correctness gate)."""
-
-    def send_partition(rows) -> None:
-        # runs ON THE EXECUTOR: builds and ships ndjson bulk requests for
-        # its partition only -- the 100 TB shape (no driver collect; each
-        # of N partitions posts independently, so indexing throughput
-        # scales with the cluster, bounded by the ES bulk endpoint)
-        import requests  # re-import executor-side
-
-        for payload in es_bulk_payloads(rows, index, bulk_size):
-            requests.post(
-                f"{endpoint}/_bulk",
-                data=payload,
-                headers={"Content-Type": "application/x-ndjson"},
-                timeout=30,
-            )
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        try:
-            import requests  # noqa: F401 -- fail fast on the driver
-        except ImportError as exc:
-            raise NotImplementedError("elasticsearch adapter requires `requests`") from exc
-        batch_df.foreachPartition(send_partition)
-
-    return write_batch

@@ -9,14 +9,12 @@ splits those concerns idiomatically:
     chronological chunks; ``maxFilesPerTrigger=1`` replays them in order;
     ``availableNow`` drains everything for tests). Wall-clock pacing is a
     demo concern, not a semantics concern -- event time lives in the data.
-  * disorder         -> ``with_disorder`` perturbs event times with a
-    seeded uniform-bounded jitter (deterministic per row id, like the
-    seeded Random(7452) in TaxiRideSource.java:127) so watermark handling
-    can be exercised.
+  * disorder         -> not injected: the replay is chronological, and
+    the watermark delay bounds the disorder a source may carry.
   * watermarks       -> ``withWatermark`` on the event-time column; the
     reference's three generation strategies (periodic t-maxDelay-1,
-    per-event t-1, bounded-out-of-orderness 60s) all collapse to the
-    delay parameter (SURVEY.md §2.6 W3).
+    per-event t-1, bounded-out-of-orderness 60s) all collapse to one
+    delay, ``functions/time.WATERMARK`` (SURVEY.md §2.6 W3).
   * checkpoint/restore (S2) -> the source's offset log +
     ``checkpointLocation``; no manual emitted-count snapshot needed
     (CheckpointedTaxiRideSource.java:161-169 is subsumed by the WAL).
@@ -214,18 +212,3 @@ def paced_feed(
     t = threading.Thread(target=run, daemon=True)
     t.start()
     return t
-
-
-def with_disorder(
-    df: DataFrame, time_col: str, id_col: str, max_delay_s: int = 60
-) -> DataFrame:
-    """Deterministic bounded event-time jitter: delay in [0, max_delay_s)
-    seconds derived from the row id (stands in for the reference's seeded
-    Gaussian, TaxiRideSource.java:231-238; determinism beats distribution
-    shape for tests)."""
-    # reduce mod m BEFORE the multiply: same value ((id*k) % m == ((id%m)*k) % m)
-    # but the product stays < 2^47, so ANSI mode can't overflow at any id scale
-    delay_ms = (F.col(id_col) % F.lit(max_delay_s * 1000) * 48271 % F.lit(max_delay_s * 1000)).cast(
-        "bigint"
-    )
-    return df.withColumn(time_col, F.timestamp_add("MILLISECOND", delay_ms, F.col(time_col)))

@@ -3,18 +3,32 @@ force."""
 
 from pyspark.sql import functions as F
 
-from flink_training_exercises_spark.operators.ivf import ivf_topk, kmeans_assignments
+from flink_training_exercises_spark.operators.ivf import (
+    K_CENTROIDS,
+    KMEANS_ITERS,
+    TRAIN_N,
+    _assign,
+    _train_quantizer,
+    ivf_topk,
+)
+from flink_training_exercises_spark.operators.similarity import _with_int_vec
 from flink_training_exercises_spark.operators.similarity import topk_bruteforce
 from flink_training_exercises_spark.sources import load_table
 
 
+def _kmeans(emb):
+    """The quantizer ivf_topk trains and the corpus assignment it probes:
+    (assigned (id, v, nn, cid), centroid rows [(cid, c)])."""
+    base = _with_int_vec(emb, "vec_id", "embedding")
+    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N)
+    return _assign(base, cents), cents
+
+
 def test_kmeans_is_deterministic(spark, sf_small):
     emb = load_table(spark, "embeddings", sf_small)
-    a1, c1 = kmeans_assignments(emb)
-    a2, c2 = kmeans_assignments(emb)
-    assert {(r["cid"], tuple(r["c"])) for r in c1.collect()} == {
-        (r["cid"], tuple(r["c"])) for r in c2.collect()
-    }
+    a1, c1 = _kmeans(emb)
+    a2, c2 = _kmeans(emb)
+    assert {(cid, tuple(c)) for cid, c in c1} == {(cid, tuple(c)) for cid, c in c2}
     assert {(r["id"], r["cid"]) for r in a1.collect()} == {
         (r["id"], r["cid"]) for r in a2.collect()
     }
@@ -22,11 +36,11 @@ def test_kmeans_is_deterministic(spark, sf_small):
 
 def test_kmeans_partitions_corpus(spark, sf_small):
     emb = load_table(spark, "embeddings", sf_small)
-    assigned, cents = kmeans_assignments(emb)
+    assigned, cents = _kmeans(emb)
     n = emb.count()
     assert assigned.count() == n  # every vector in exactly one bucket
     assert assigned.select("cid").distinct().count() <= 8
-    assert cents.count() == 8
+    assert len(cents) == 8
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_small):
@@ -45,44 +59,6 @@ def test_ivf_recall_vs_bruteforce(spark, sf_small):
     assert 0 < len(approx) <= len(exact)
     recall = len(exact & approx) / len(exact)
     assert recall > 0.1, f"recall collapsed: {recall}"
-
-
-def test_index_search_prunes_partitions(spark, sf_small, tmp_path):
-    """Persisted IVF index: search results equal the in-memory ivf_topk, and
-    the candidate scan partition-prunes to the probed cids (file listing
-    shows cid=N directories only for probed buckets)."""
-    from flink_training_exercises_spark.operators.ivf import (
-        NPROBE,
-        _with_int_vec,
-        build_ivf_index,
-        search_ivf_index,
-    )
-
-    emb = load_table(spark, "embeddings", sf_small)
-    path = str(tmp_path / "ivf_index")
-    cents = build_ivf_index(emb, path)
-
-    base = _with_int_vec(emb, "vec_id", "embedding")
-    queries = base.where(F.col("id") % 25 == 0).select(
-        F.col("id").alias("qid"), F.col("v").alias("qv"), F.col("nn").alias("qnn")
-    )
-    got = search_ivf_index(spark, path, cents, queries)
-    expect = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in __import__(
-            "flink_training_exercises_spark.operators.ivf", fromlist=["ivf_topk"]
-        ).ivf_topk(emb).collect()
-    }
-    assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()} == expect
-
-    # pruning evidence on the SEARCH PATH itself: the static probed-cid
-    # isin filter must reach the index scan's PartitionFilters (pruned at
-    # file listing, not post-scan -- ADVICE r3: the old test only checked a
-    # hand-written cid==0 predicate, not the join path)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    scan_filters = plan.split("PartitionFilters", 1)
-    assert len(scan_filters) == 2 and "cid" in scan_filters[1][:300]
-    assert "cid IN" in plan or "cid#" in scan_filters[1][:300]
 
 
 def test_pq_recall_and_determinism(spark, sf_small):

@@ -1,24 +1,7 @@
-"""Prep tooling (P11 mbox parse, S11 trip conversion), F7/F8 geo extras,
-and the SQL frontend parity."""
+"""Prep tooling (P11 mbox parse, S11 trip conversion)."""
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
-from flink_training_exercises_spark.functions.geo import (
-    grid_cell,
-    grid_cells_on_way,
-    random_nyc_point,
-    is_in_nyc,
-)
-from flink_training_exercises_spark.operators.relational import member_of_the_month
-from flink_training_exercises_spark.operators.tpch import pricing_summary
-from flink_training_exercises_spark.plans.mails import mails_view
-from flink_training_exercises_spark.plans.sql_frontend import (
-    member_otm_via_sql,
-    pricing_summary_via_sql,
-)
-from flink_training_exercises_spark.sources import load_table
 from flink_training_exercises_spark.sources.prep import parse_mbox_mails, trips_to_events
 
 RAW_MAIL = """Message-ID: <abc@x>
@@ -83,24 +66,6 @@ def test_trips_to_events(spark):
     assert out[3]["ts"] == out[3]["end_time"]
 
 
-def test_grid_cells_on_way(spark):
-    row = (
-        spark.range(1)
-        .select(
-            grid_cells_on_way(
-                F.lit(-74.0), F.lit(40.75), F.lit(-74.0 + 5 * 0.0014), F.lit(40.75)
-            ).alias("cells"),
-            grid_cell(F.lit(-74.0), F.lit(40.75)).alias("a"),
-            grid_cell(F.lit(-74.0 + 5 * 0.0014), F.lit(40.75)).alias("b"),
-        )
-        .first()
-    )
-    # horizontal path 5 cells east: endpoint cells included, contiguous
-    assert row["cells"][0] == row["a"]
-    assert row["cells"][-1] == row["b"]
-    assert len(row["cells"]) == 6
-
-
 def _reference_cells_on_way(lon1, lat1, lon2, lat2):
     """Python port of the reference walk (GeoUtils.java:106-161), including
     its asymmetric negative-slope branch (corner case falls through to a
@@ -147,56 +112,3 @@ def _reference_cells_on_way(lon1, lat1, lon2, lat2):
                 cy -= 1
         cells.append(cx + cy * NUMBER_OF_GRID_X)
     return cells
-
-
-def test_grid_cells_on_way_matches_reference_walk(spark):
-    """Exact parity with the reference edge walk over a deterministic sweep
-    of NYC segment geometries (all slope signs, verticals, horizontals,
-    corner-touch diagonals, same-cell)."""
-    pts = []
-    for i in range(40):
-        lon1 = -74.04 + (i * 7 % 23) * 0.0141
-        lat1 = 40.52 + (i * 11 % 19) * 0.0247
-        lon2 = -74.04 + (i * 13 % 23) * 0.0141
-        lat2 = 40.52 + (i * 17 % 19) * 0.0247
-        pts.append((i, lon1, lat1, lon2, lat2))
-    # degenerate + exact-diagonal cases
-    pts += [
-        (100, -74.0, 40.75, -74.0, 40.75),          # same point
-        (101, -74.0, 40.75, -74.0, 40.80),          # vertical
-        (102, -74.0, 40.75, -73.95, 40.75),         # horizontal
-        (103, -74.0, 40.75, -74.0 + 10 * 0.0014, 40.75 - 10 * 0.00125),  # diag down
-        (104, -74.0, 40.75, -74.0 + 10 * 0.0014, 40.75 + 10 * 0.00125),  # diag up
-    ]
-    df = spark.createDataFrame(
-        pts, "id long, lon1 double, lat1 double, lon2 double, lat2 double"
-    )
-    got = {
-        r["id"]: list(r["cells"])
-        for r in df.select(
-            "id", grid_cells_on_way("lon1", "lat1", "lon2", "lat2").alias("cells")
-        ).collect()
-    }
-    for i, lon1, lat1, lon2, lat2 in pts:
-        assert got[i] == _reference_cells_on_way(lon1, lat1, lon2, lat2), i
-
-
-def test_random_nyc_point_in_bbox(spark):
-    lon, lat = random_nyc_point(seed=7)
-    df = spark.range(200).select(lon.alias("lon"), lat.alias("lat"))
-    assert df.where(~is_in_nyc("lon", "lat")).count() == 0
-
-
-def test_sql_frontend_matches_dataframe(spark, sf_small):
-    sql_rows = {
-        tuple(r) for r in pricing_summary_via_sql(spark, sf_small).collect()
-    }
-    df_rows = {
-        tuple(r)
-        for r in pricing_summary(load_table(spark, "lineitem", sf_small)).collect()
-    }
-    assert sql_rows == df_rows and len(df_rows) > 0
-
-    sql_m = {tuple(r) for r in member_otm_via_sql(spark, sf_small).collect()}
-    df_m = {tuple(r) for r in member_of_the_month(mails_view(spark, sf_small)).collect()}
-    assert sql_m == df_m and len(df_m) > 0

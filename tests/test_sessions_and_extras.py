@@ -1,5 +1,4 @@
-"""Sessionization (batch + streaming), kafka payload codec, approx
-aggregates."""
+"""Sessionization (batch + streaming), approx aggregates."""
 
 import uuid
 from datetime import datetime
@@ -11,10 +10,6 @@ from flink_training_exercises_spark.operators.sessions import (
     streaming_sessionize,
 )
 from flink_training_exercises_spark.sources import load_table
-from flink_training_exercises_spark.sources.loaders import (
-    parse_taxi_ride_lines,
-    taxi_ride_to_csv_line,
-)
 
 EV = "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
 
@@ -73,23 +68,6 @@ def test_streaming_sessionize_matches_batch_shape(spark, sf_small):
             r["session_start_ms"],
             False,
         ) in b
-
-
-def test_kafka_payload_roundtrip(spark):
-    rows = [
-        (7, False, datetime(2013, 1, 1, 12, 0), datetime(2013, 1, 1, 12, 30),
-         -74.0, 40.75, -73.9, 40.8, 3),
-    ]
-    rides = spark.createDataFrame(
-        rows,
-        "rideId long, isStart boolean, startTime timestamp_ntz, endTime timestamp_ntz, "
-        "startLon float, startLat float, endLon float, endLat float, passengerCnt short",
-    )
-    lines = taxi_ride_to_csv_line(rides)
-    back = parse_taxi_ride_lines(lines).first()
-    assert back["rideId"] == 7 and back["isStart"] is False
-    assert back["startTime"] == rows[0][2] and back["endTime"] == rows[0][3]
-    assert abs(back["startLon"] - -74.0) < 1e-6
 
 
 def test_approx_count_distinct_accuracy(spark, sf_small):

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 from flink_training_exercises_spark.operators.skew import (
     salted_aggregate,
     salted_broadcast_join,
-    top_keys,
 )
 
 
@@ -41,11 +40,6 @@ def test_salted_broadcast_join_matches_direct(spark):
     salted = salted_broadcast_join(big, small, "k", "k2").count()
     assert salted == direct == 9000 + 20 + 20
 
-
-def test_top_keys_diagnosis(spark):
-    out = top_keys(_skewed(spark), "k", n=1).first()
-    assert out["k"] == "hot"
-    assert out["share"] == 0.9
 
 def test_skew_profile_hand_computed(spark):
     from flink_training_exercises_spark.operators.skew import skew_profile

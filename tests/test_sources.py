@@ -5,7 +5,6 @@ from flink_training_exercises_spark.sources import (
     read_edge_list,
     read_mail_records,
     read_taxi_rides_csv,
-    taxi_ride_to_csv_line,
 )
 
 
@@ -26,15 +25,6 @@ def test_taxi_csv_end_time_swap_and_blank_coords(spark, tmp_path):
     assert start["startTime"].minute == 0 and start["endTime"].minute == 5
     blank = rows[(2, True)]
     assert blank["startLon"] == 0.0 and blank["endLat"] == 0.0
-
-
-def test_taxi_csv_roundtrip(spark, tmp_path):
-    p = tmp_path / "rides.csv"
-    line = "7,END,2013-01-01 12:30:00,2013-01-01 12:00:00,-74.0,40.75,-73.9,40.8,3"
-    p.write_text(line + "\n")
-    df = read_taxi_rides_csv(spark, str(p))
-    back = taxi_ride_to_csv_line(df).first()["value"]
-    assert back == line
 
 
 def test_mail_records_multichar_delimiters(spark, tmp_path):
