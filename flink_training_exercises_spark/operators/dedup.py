@@ -694,7 +694,7 @@ def repeated_ngram_coverage(docs: DataFrame, n: int = REPEAT_NGRAM_N) -> DataFra
     grams = (
         widen_scan(docs)
         .select(
-            F.col("doc_id").alias("doc_id"),
+            "doc_id",
             F.explode(_gram_strings(words("text"), n)).alias("gram"),
         )
         .select("doc_id", _md5_long_c(F.col("gram")).alias("gh"))
@@ -730,7 +730,7 @@ def repeated_ngram_coverage_sql() -> str:
     slots = ", ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(REPEAT_NGRAM_N))
     return f"""
 WITH w AS (
-  SELECT doc_id AS doc_id, {w} AS ws FROM documents
+  SELECT doc_id, {w} AS ws FROM documents
 ), grams AS (
   SELECT doc_id,
          {md5_long_sql('g')} AS gh
@@ -872,7 +872,7 @@ def segment_dedup_keepfirst(docs: DataFrame) -> DataFrame:
     )
     exploded = (
         docs.where(F.size(w) > 0)
-        .select(F.col("doc_id").alias("doc_id"), F.explode(segs).alias("s"))
+        .select("doc_id", F.explode(segs).alias("s"))
         .select(
             "doc_id",
             F.col("s.seg_idx").alias("seg_idx"),
@@ -910,7 +910,7 @@ def segment_dedup_keepfirst_sql() -> str:
     n = SEGMENT_WORDS
     return f"""
 WITH w AS (
-  SELECT doc_id AS doc_id, {w} AS ws FROM documents
+  SELECT doc_id, {w} AS ws FROM documents
 ), seg AS (
   SELECT doc_id, s.seg_idx AS seg_idx, s.nw AS nw,
          {md5_long_sql('s.seg')} AS gh
@@ -1438,7 +1438,7 @@ walk(id, comp) AS (
 ),
 cmap AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
 ent AS (
-  SELECT d.doc_id AS doc_id,
+  SELECT d.doc_id,
          CAST(COALESCE(c.comp, d.doc_id) AS BIGINT) AS entity_id
   FROM documents d LEFT JOIN cmap c ON c.id = d.doc_id
 ),

@@ -418,7 +418,7 @@ def sssp_hops(edges: DataFrame, source: int, max_hops: int = SSSP_MAX_HOPS) -> D
     drives the exit. The edge list is deduplicated once up front --
     parallel edges change nothing in BFS but multiply the join fan-out."""
     e = (
-        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
@@ -504,7 +504,7 @@ def label_propagation(edges: DataFrame, rounds: int = 6) -> DataFrame:
     front; label state is ~|V| rows regardless of round. The early-exit
     probe is one isEmpty() on the changed-label diff per round."""
     e = (
-        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
     )
     und = (
@@ -1113,8 +1113,8 @@ def temporal_reachability(tedges: DataFrame, rounds: int = TEMPORAL_REACH_ROUNDS
 
     e = (
         tedges.select(
-            F.col("src").alias("src"),
-            F.col("dst").alias("dst"),
+            "src",
+            "dst",
             F.col("t").cast("bigint").alias("t"),
         )
         .where(F.col("src") != F.col("dst"))

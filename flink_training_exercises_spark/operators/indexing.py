@@ -47,7 +47,7 @@ def inverted_index(docs: DataFrame, max_postings: int = INVERTED_INDEX_MAX_POSTI
     filter: a skewed token like 'the' emits max_postings rows, never its
     full chain."""
     tokens = _widened(docs).select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         F.explode(F.array_distinct(words("text"))).alias("token"),
     )
     w_rank = Window.partitionBy("token").orderBy(F.asc("doc_id"))
@@ -73,7 +73,7 @@ def inverted_index_sql() -> str:
     w = words_sql("text")
     return f"""
 WITH tokens AS (
-  SELECT DISTINCT doc_id AS doc_id, unnest({w}) AS token FROM documents
+  SELECT DISTINCT doc_id, unnest({w}) AS token FROM documents
 ),
 ranked AS (
   SELECT token, doc_id,
@@ -116,7 +116,7 @@ def doc_typicality(docs: DataFrame, min_count: int = DOC_TYPICALITY_MIN_COUNT) -
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-    doc_grams = base.select(F.col("doc_id").alias("doc_id"), F.explode(grams).alias("bigram"))
+    doc_grams = base.select("doc_id", F.explode(grams).alias("bigram"))
     counts = (
         doc_grams.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -147,7 +147,7 @@ def doc_typicality_sql() -> str:
     w = words_sql("text")
     return f"""
 WITH ws AS (
-  SELECT doc_id AS doc_id, {w} AS ws FROM documents
+  SELECT doc_id, {w} AS ws FROM documents
 ),
 doc_grams AS (
   SELECT DISTINCT doc_id, bigram FROM (
@@ -272,7 +272,7 @@ def bm25_topk(
     terms = sorted({t for _, t1, t2 in qs for t in (t1, t2)})
     spark = docs.sparkSession
     base = _widened(docs).select(
-        F.col("doc_id").alias("doc_id"), words("text").alias("ws")
+        "doc_id", words("text").alias("ws")
     )
     totals = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -351,7 +351,7 @@ def bm25_topk_sql() -> str:
     w = words_sql("text")
     return f"""
 WITH base AS (
-  SELECT doc_id AS doc_id, {w} AS ws FROM documents
+  SELECT doc_id, {w} AS ws FROM documents
 ),
 tot AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs,

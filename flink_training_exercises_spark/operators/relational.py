@@ -169,7 +169,7 @@ def props_json_profile(events: DataFrame) -> DataFrame:
     vs = F.expr(f"get_json_object(props, '{PROPS_JSON_PROFILE_PATH}')")
     v = F.when(vs.rlike(r"\A[+-]?[0-9]+\z"), vs.try_cast("bigint"))
     return (
-        events.select(F.col("event_type").alias("event_type"), v.alias("v"))
+        events.select("event_type", v.alias("v"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -195,7 +195,7 @@ def props_json_profile_sql() -> str:
     Spark's try_cast instead of erroring."""
     return f"""
 WITH raw AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          CASE WHEN json_valid(props)
               THEN json_extract_string(props, '{PROPS_JSON_PROFILE_PATH}')
          END AS vs

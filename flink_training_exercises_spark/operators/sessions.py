@@ -583,7 +583,7 @@ def user_behavior_gini(events: DataFrame) -> DataFrame:
     sampling the offending user's events upstream, which changes the
     answer only for the key that overflowed."""
     ct = events.groupBy(
-        F.col("user_id").alias("user_id"), F.col("event_type").alias("t")
+        "user_id", F.col("event_type").alias("t")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     per = ct.groupBy("user_id").agg(
         F.sum("c").alias("n"),
@@ -605,7 +605,7 @@ def user_behavior_gini_sql() -> str:
     integer ppm."""
     return """
 WITH ct AS (
-  SELECT user_id AS user_id, event_type AS t,
+  SELECT user_id, event_type AS t,
          CAST(count(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2
 ),
@@ -793,7 +793,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     )
     per_user = (
         events.select(
-            F.col("user_id").alias("user_id"), d_col.alias("d"), cents.alias("c")
+            "user_id", d_col.alias("d"), cents.alias("c")
         )
         .groupBy("user_id")
         .agg(
@@ -859,7 +859,7 @@ def rfm_segments_sql() -> str:
     qcap = RFM_N_Q - 1
     return f"""
 WITH per_user AS (
-  SELECT user_id AS user_id,
+  SELECT user_id,
          max(epoch_ms(ts) // {RFM_DAY_MS}) AS last_d,
          CAST(count(*) AS BIGINT) AS f,
          CAST(sum(COALESCE(CAST(floor(value * 1e2 + 5e-1) AS BIGINT), 0))

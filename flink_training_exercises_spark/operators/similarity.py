@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash_params
+
 EMB_SCALE = "1e6"
 LSH_PLANES = 8
 # (A, B) per hyperplane: component d of plane p is (1 - 2*((d*A + B) % 2))
@@ -274,15 +276,7 @@ PROJ_DIMS = 16
 # one (a, b) pair per output dimension; sign of input dim i for output dim j
 # is 1 - 2*((i*a_j + b_j) % 2) -- the formula-literal idiom of _PLANE_PARAMS,
 # drawn once from the seeded PRNG and embedded identically in the SQL twin
-_PROJ_PARAMS: list[tuple[int, int]] = []
-
-
-def _proj_params() -> list[tuple[int, int]]:
-    if not _PROJ_PARAMS:
-        from ..functions.hashing import hash_params
-
-        _PROJ_PARAMS.extend(hash_params(PROJ_DIMS, seed=0xBEEF))
-    return _PROJ_PARAMS
+_PROJ_PARAMS = hash_params(PROJ_DIMS, seed=0xBEEF)
 
 
 def random_projection(emb: DataFrame) -> DataFrame:
@@ -306,7 +300,7 @@ def random_projection(emb: DataFrame) -> DataFrame:
             F.lit(0).cast("bigint"),
             lambda acc, e: acc + e,
         )
-        for a, b in _proj_params()[:PROJ_DIMS]
+        for a, b in _PROJ_PARAMS
     ]
     return base.select(
         F.col("id").alias("vec_id"), F.posexplode(F.array(*comps)).alias("dim", "value")
@@ -317,7 +311,7 @@ def random_projection_sql() -> str:
     comps = ", ".join(
         f"list_sum([v[i + 1] * (1 - 2 * ((i * {a} + {b}) % 2)) "
         f"for i in generate_series(0, {64 - 1})])"
-        for a, b in _proj_params()[:PROJ_DIMS]
+        for a, b in _PROJ_PARAMS
     )
     return f"""
 WITH base AS (

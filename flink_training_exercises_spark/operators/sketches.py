@@ -393,7 +393,7 @@ def zorder_layout(docs: DataFrame) -> DataFrame:
     x = f"least(CAST(n_chars AS BIGINT), {mask})"
     y_hash = md5_long(F.col("source"))
     pre = docs.select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         F.expr(x).alias("zx"),
         (y_hash % (mask + 1)).alias("zy"),
     )
@@ -421,7 +421,7 @@ def zorder_layout_oracle(table: str) -> str:
     shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     return f"""
 WITH pre AS (
-  SELECT doc_id AS doc_id,
+  SELECT doc_id,
          least(CAST(n_chars AS BIGINT), {mask}) AS zx,
          ({y}) % {mask + 1} AS zy
   FROM {table}

@@ -14,9 +14,10 @@ Two implementations with IDENTICAL results:
     window frame ``ROWS UNBOUNDED PRECEDING .. 1 PRECEDING`` summing only
     END rows -- Catalyst-visible, codegen'd, no Python. This is the form a
     Spark engine should prefer for the batch/backfill path.
-  * ``travel_time_stateful``: per-key ``applyInPandas`` carrying regression
-    state across ordered rows -- the shape that generalizes to
-    ``applyInPandasWithState`` in streaming (streaming/stateful.py).
+  * ``travel_time_stateful``: ``travel_time_fold`` carrying regression
+    state across ordered rows, run per key group by ``applyInPandas``; the
+    streaming twin (streaming/stateful.py) runs the same fold under
+    ``applyInPandasWithState``.
 
 Exactness: the regression sufficient statistics are accumulated as INTEGERS
 (distance floored to 1e-3 units, travel time in whole ms), so Sxx/Sxy are
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,6 +41,10 @@ from ..functions.time import epoch_ms
 # milli-units per distance unit: floor(km * 1e3)
 _DIST_SCALE = "1e3"
 _MS_PER_MIN = "6e4"
+# Python keyed state (this module's applyInPandas twin and both streaming
+# folds in streaming/stateful.py) is grouped by key % KEY_GROUPS, not per key
+KEY_GROUPS = 64
+TRAVEL_TIME_SCHEMA = "ride_id long, predicted_minutes int"
 
 
 def _features(rides: DataFrame) -> DataFrame:
@@ -85,48 +91,47 @@ def travel_time_window(rides: DataFrame) -> DataFrame:
     )
 
 
+def travel_time_fold(state: dict, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Fold one key group's ``_features`` rows into ``state`` and return
+    (ride_id, predicted_minutes) per START event.
+
+    ``state`` maps cell * 16 + bucket (buckets run -1..7, so cells never
+    share a slot) to [sxx, sxy]. Rows are taken in the stable (ev_ms,
+    ride_id, is_start) order; ``np.lexsort``'s last key is the primary."""
+    col = {c: pdf[c].to_numpy() for c in pdf.columns}
+    order = np.lexsort((col["is_start"], col["ride_id"], col["ev_ms"]))
+    slot = col["cell"] * 16 + col["bucket"]
+    out_ids, out_preds = [], []
+    for ride_id, is_start, key, x, y in zip(
+        *(a[order].tolist() for a in (col["ride_id"], col["is_start"], slot, col["x_m"], col["y_ms"]))
+    ):
+        sxx, sxy = state.get(key, (0, 0))
+        if not is_start:
+            state[key] = [sxx + x * x, sxy + x * y]
+            continue
+        out_ids.append(ride_id)
+        # float() each stat first: Python int/int division is correctly
+        # rounded on the *exact* integers, but the SQL engines round each
+        # BIGINT to double before dividing -- they differ once stats
+        # exceed 2^53.
+        out_preds.append(-1 if sxx == 0 else math.floor(float(sxy) / float(sxx) * x / 60000.0))
+    return pd.DataFrame({"ride_id": out_ids, "predicted_minutes": out_preds})
+
+
 def travel_time_stateful(rides: DataFrame) -> DataFrame:
-    """applyInPandas form: regression state carried across ordered rows (the
-    batch twin of the streaming stateful operator).
+    """applyInPandas form: ``travel_time_fold`` over each of the KEY_GROUPS
+    groups of destination cells, from an empty state (the batch twin of the
+    streaming stateful operator).
 
-    Keys are SHARDED, not per-cell: per-(cell, bucket) state is independent,
-    so grouping by ``cell % n_shards`` and keying the state dict on
-    (cell, bucket) gives bit-identical results while cutting the number of
-    pandas group invocations from |cells| (thousands of tiny frames, ~5 ms
-    fixed cost each -- measured 38x slower than the window twin at sf0.1)
-    to n_shards. One mergesort per shard preserves each cell's event-time
-    order. Scale knob: raise n_shards with corpus size so a shard's rows
-    fit executor memory (per-cell grouping is the n_shards -> inf limit)."""
-
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ev_ms", "ride_id", "is_start"], kind="mergesort")
-        out_ids, out_preds = [], []
-        state: dict[tuple[int, int], tuple[int, int]] = {}  # (cell,bucket) -> (sxx,sxy)
-        for ride_id, is_start, cell, bucket, x_m, y_ms in zip(
-            pdf["ride_id"], pdf["is_start"], pdf["cell"], pdf["bucket"], pdf["x_m"], pdf["y_ms"]
-        ):
-            x = int(x_m)
-            key = (int(cell), int(bucket))
-            if is_start:
-                sxx, sxy = state.get(key, (0, 0))
-                if sxx == 0:
-                    pred = -1
-                else:
-                    # float() each stat first: Python int/int division is
-                    # correctly rounded on the *exact* integers, but the SQL
-                    # engines round each BIGINT to double before dividing --
-                    # they differ once stats exceed 2^53.
-                    pred = math.floor((float(sxy) / float(sxx)) * x / 60000.0)
-                out_ids.append(int(ride_id))
-                out_preds.append(pred)
-            else:
-                sxx, sxy = state.get(key, (0, 0))
-                state[key] = (sxx + x * x, sxy + x * int(y_ms))
-        return pd.DataFrame({"ride_id": out_ids, "predicted_minutes": out_preds})
-
+    Per-(cell, bucket) state is independent, so grouping by
+    ``cell % KEY_GROUPS`` gives bit-identical results while cutting the
+    number of pandas group invocations from |cells| (thousands of tiny
+    frames, ~5 ms fixed cost each -- measured 38x slower than the window
+    twin at sf0.1) to KEY_GROUPS. A group holds ~1/KEY_GROUPS of the
+    rides, all in one pandas frame."""
     return (
         _features(rides)
-        .withColumn("shard", F.col("cell") % F.lit(64))
-        .groupBy("shard")
-        .applyInPandas(per_shard, schema="ride_id long, predicted_minutes int")
+        .withColumn("key_group", F.col("cell") % KEY_GROUPS)
+        .groupBy("key_group")
+        .applyInPandas(lambda pdf: travel_time_fold({}, pdf), schema=TRAVEL_TIME_SCHEMA)
     )

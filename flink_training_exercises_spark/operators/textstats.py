@@ -867,7 +867,7 @@ def chunk_sliding_windows(
 
     return (
         docs.where(n > 0)
-        .select(F.col("doc_id").alias("doc_id"), F.explode(chunks).alias("c"))
+        .select("doc_id", F.explode(chunks).alias("c"))
         .select(
             "doc_id",
             F.col("c.chunk_idx").alias("chunk_idx"),
@@ -889,7 +889,7 @@ def chunk_sliding_windows_sql(width: int = CHUNK_WORDS, stride: int = CHUNK_STRI
     w = words_sql("text")
     return f"""
 WITH w AS (
-  SELECT doc_id AS doc_id, {w} AS ws FROM documents
+  SELECT doc_id, {w} AS ws FROM documents
 ), n AS (
   SELECT doc_id, ws, len(ws) AS nw,
          CASE WHEN len(ws) <= {width} THEN 1
@@ -941,8 +941,8 @@ def source_scorecard(docs: DataFrame) -> DataFrame:
     # the per-doc battery on both sides.
     per_doc = gopher_quality_flags(docs, extra_cols=("source", "lang", "n_chars", "text")).select(
         F.col("doc_id"),
-        F.col("source").alias("source"),
-        F.col("lang").alias("lang"),
+        "source",
+        "lang",
         F.col("n_chars").cast("bigint").alias("n_chars"),
         md5_long(F.col("text")).alias("th"),
         F.col("passes_gopher"),
@@ -960,7 +960,7 @@ def source_scorecard(docs: DataFrame) -> DataFrame:
     # evaluate the md5 + Gopher-battery subtree a second time (the
     # multi-consumer rule). This branch prunes to a two-column scan.
     lc = (
-        docs.select(F.col("source").alias("source"), F.col("lang").alias("lang"))
+        docs.select("source", "lang")
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -994,7 +994,7 @@ def source_scorecard_sql() -> str:
     return f"""
 WITH gf AS ({gopher}),
 per_doc AS (
-  SELECT d.doc_id, d.source AS source, d.lang AS lang,
+  SELECT d.doc_id, d.source, d.lang,
          CAST(d.n_chars AS BIGINT) AS n_chars, {th} AS th,
          gf.passes_gopher
   FROM documents d JOIN gf USING (doc_id)

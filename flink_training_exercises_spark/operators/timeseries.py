@@ -50,7 +50,7 @@ def gapfill_ffill(events: DataFrame, step_ms: int = HOUR_MS) -> DataFrame:
         (ms - ms % step_ms).alias("bucket_ms"),
         ms.alias("_ms"),
         F.col("event_id").alias("_seq"),
-        F.col("value").alias("value"),
+        "value",
     )
     w_pick = Window.partitionBy("key", "bucket_ms").orderBy(
         F.desc("_ms"), F.desc("_seq")
@@ -90,7 +90,7 @@ def gapfill_ffill_sql() -> str:
 WITH obs AS (
   SELECT user_id AS key,
          epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
-         epoch_ms(ts) AS ms, event_id AS seq, value AS value
+         epoch_ms(ts) AS ms, event_id AS seq, value
   FROM events
 ),
 per_bucket AS (
@@ -154,7 +154,7 @@ def rolling_zscore_anomalies(events: DataFrame) -> DataFrame:
 
     cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        F.col("event_id").alias("event_id"),
+        "event_id",
         F.col("user_id").alias("key"),
         F.col("ts").alias("_ts"),
         cents.alias("cents"),
@@ -194,7 +194,7 @@ def rolling_zscore_anomalies_sql() -> str:
     k2 = ZSCORE_K * ZSCORE_K
     return f"""
 WITH c AS (
-  SELECT event_id AS event_id, user_id AS user_id, ts AS _ts,
+  SELECT event_id, user_id, ts AS _ts,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
   FROM events
 ),
@@ -261,7 +261,7 @@ def value_hour_correlation(events: DataFrame) -> DataFrame:
     # any sample); exclude them structurally on BOTH engines. Latent on
     # this NULL-free testdata; pushed to the scan as IsNotNull.
     base = events.where(F.col("value").isNotNull()).select(
-        F.col("event_type").alias("event_type"),
+        "event_type",
         F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("x"),
         (ms % F.lit(DAY_MS)).alias("_msday"),
     ).selectExpr("event_type", "x", f"_msday div {HOUR_MS} AS y")
@@ -292,7 +292,7 @@ def value_hour_correlation_sql() -> str:
     IDENTICAL double expression tree for the closed form)."""
     return f"""
 WITH c AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS x,
          (epoch_ms(ts) % {DAY_MS}) // {HOUR_MS} AS y
   FROM events WHERE value IS NOT NULL
@@ -356,7 +356,7 @@ def value_trend_ols(events: DataFrame) -> DataFrame:
     # the slope is then not the OLS of any sample); exclude structurally
     # on BOTH engines (latent on this NULL-free testdata).
     base = events.where(F.col("value").isNotNull()).select(
-        F.col("event_type").alias("event_type"),
+        "event_type",
         F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint").alias("y"),
         F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("day"),
     )
@@ -393,7 +393,7 @@ def value_trend_ols_sql() -> str:
     nonnegative epoch values)."""
     return f"""
 WITH c AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS y,
          epoch_ms(ts) // {DAY_MS} AS day
   FROM events WHERE value IS NOT NULL
@@ -464,7 +464,7 @@ def cusum_level_shift(events: DataFrame) -> DataFrame:
     # NULL values structurally on BOTH engines (latent on this NULL-free
     # testdata; mixed buckets are unaffected, sum skipped them anyway).
     buck = events.where(F.col("value").isNotNull()).select(
-        F.col("event_type").alias("event_type"),
+        "event_type",
         (ms - ms % F.lit(HOUR_MS)).alias("bucket_ms"),
         F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
         .cast("bigint")
@@ -526,7 +526,7 @@ def cusum_level_shift_sql() -> str:
     windows; sum() outputs cast back to BIGINT per the HUGEINT rule)."""
     return f"""
 WITH buck AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
          CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS x
   FROM events WHERE value IS NOT NULL GROUP BY 1, 2
@@ -597,7 +597,7 @@ def theil_sen_trend(events: DataFrame) -> DataFrame:
         # testdata; mixed days are unaffected, sum skipped them anyway)
         events.where(F.col("value").isNotNull())
         .select(
-            F.col("event_type").alias("event_type"),
+            "event_type",
             F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("d"),
             F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
             .cast("bigint")
@@ -648,7 +648,7 @@ def theil_sen_trend_sql() -> str:
     same one-division slopes, same positional median)."""
     return f"""
 WITH daily AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          epoch_ms(ts) // {DAY_MS} AS d,
          CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
   FROM events WHERE value IS NOT NULL GROUP BY 1, 2
@@ -874,7 +874,7 @@ def benford_value_audit(events: DataFrame) -> DataFrame:
     never the corpus; no second corpus pass, no join-back."""
     cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     d = events.select(
-        F.col("event_type").alias("event_type"), cents.alias("cents")
+        "event_type", cents.alias("cents")
     ).where(F.col("cents") > 0).select(
         "event_type",
         F.substring(F.col("cents").cast("string"), 1, 1).cast("bigint").alias("digit"),
@@ -911,7 +911,7 @@ def benford_value_audit_sql() -> str:
     )
     return f"""
 WITH c AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents
   FROM events
 ),
@@ -985,7 +985,7 @@ def chi_squared_independence(events: DataFrame) -> DataFrame:
 
     ms = _epoch_ms("ts")
     base = events.select(
-        F.col("event_type").alias("event_type"),
+        "event_type",
         (ms % F.lit(DAY_MS)).alias("_msday"),
     ).selectExpr("event_type", f"_msday div {HOUR_MS} AS hour")
     obs = base.groupBy("event_type", "hour").agg(
@@ -1050,7 +1050,7 @@ def chi_squared_independence_sql() -> str:
     casts on sum() outputs -- the HUGEINT dtype-skew rule)."""
     return f"""
 WITH base AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          (epoch_ms(ts) % {DAY_MS}) // {HOUR_MS} AS hour
   FROM events
 ),
@@ -1147,7 +1147,7 @@ def ks_two_sample_drift(events: DataFrame) -> DataFrame:
     )
     cents = F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1)).cast("bigint")
     base = events.select(
-        F.col("event_type").alias("event_type"),
+        "event_type",
         cents.alias("cents"),
         ms.alias("_ms"),
     )
@@ -1234,7 +1234,7 @@ mid AS (
   FROM src
 ),
 base AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS cents,
          epoch_ms(ts) AS ms
   FROM src
@@ -1339,7 +1339,7 @@ def value_acf_lags(events: DataFrame) -> DataFrame:
         # desyncing the five sufficient statistics; mixed unaffected)
         events.where(F.col("value").isNotNull())
         .select(
-            F.col("event_type").alias("event_type"),
+            "event_type",
             (ms - ms % F.lit(HOUR_MS)).alias("bucket_ms"),
             cents.alias("c"),
         )
@@ -1405,7 +1405,7 @@ def value_acf_lags_sql() -> str:
     lags = ", ".join(str(i) for i in range(1, ACF_MAX_LAG + 1))
     return f"""
 WITH raw AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          epoch_ms(ts) - epoch_ms(ts) % {HOUR_MS} AS bucket_ms,
          CAST(floor(value * 1e2 + 5e-1) AS BIGINT) AS c
   FROM events WHERE value IS NOT NULL
@@ -1496,7 +1496,7 @@ def mann_kendall_trend(events: DataFrame) -> DataFrame:
         # every pair with sign 0, deflating z; mixed days unaffected)
         events.where(F.col("value").isNotNull())
         .select(
-            F.col("event_type").alias("event_type"),
+            "event_type",
             F.floor(_epoch_ms("ts") / F.lit(DAY_MS)).cast("bigint").alias("d"),
             F.floor(F.col("value") * F.lit(1e2) + F.lit(5e-1))
             .cast("bigint")
@@ -1574,7 +1574,7 @@ def mann_kendall_trend_sql() -> str:
     dtype-skew rule)."""
     return f"""
 WITH daily AS (
-  SELECT event_type AS event_type,
+  SELECT event_type,
          epoch_ms(ts) // {DAY_MS} AS d,
          CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT) AS y
   FROM events WHERE value IS NOT NULL GROUP BY 1, 2

@@ -130,14 +130,13 @@ SELECT res.* FROM res, mx WHERE res.window_end_ms <= mx.m - {WATERMARK_MS}
     "the final watermark (max event ts - 60 s), mirroring Spark's "
     "window.end <= watermark emission (PopularPlaces.java:71-97 event-time "
     "fire-once contract).",
-    source="events",
+    source="rides",
 )
-def q_streaming_popular_places(events: DataFrame, sf_dir: str) -> DataFrame:
+def q_streaming_popular_places(rides: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import drain_availablenow, streaming_popular_places
-    from ..streaming.sources import rides_stream
 
     places = streaming_popular_places(
-        rides_stream(events), window="6 hours", slide="1 hour", threshold=_PP_THRESHOLD
+        rides, window="6 hours", slide="1 hour", threshold=_PP_THRESHOLD
     )
     return drain_availablenow(places, "streaming_popular_places_gate")
 
@@ -332,8 +331,8 @@ def q_travel_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "travel_time_prediction_stateful",
     oracle=_TT_ORACLE,
-    doc="W5: same semantics via per-key applyInPandas state (the batch twin "
-    "of the streaming stateful operator).",
+    doc="W5: same semantics via travel_time_fold under applyInPandas per "
+    "key group of cells (the batch twin of the streaming stateful operator).",
 )
 def q_travel_time_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stateful.travel_time_stateful(rides_plan.rides_view(spark, sf_dir))
@@ -341,20 +340,17 @@ def q_travel_time_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_travel_time_stateful",
     oracle=_TT_ORACLE,
-    doc="W5 through the REAL streaming engine: applyInPandasWithState keyed "
-    "per destination cell (the reference's RichFlatMapFunction+ValueState, "
-    "TravelTimePrediction.java:120-164), append mode, availableNow drain. "
-    "The single-file source makes one micro-batch, the handler orders "
-    "events by time within each key exactly like the batch twin, so the "
-    "emission set equals the batch result and the SAME oracle applies -- "
-    "the stateful streaming path is driver-gated, not just pytest'd.",
-    source="events",
+    doc="W5 through the REAL streaming engine: applyInPandasWithState over "
+    "destination-cell key groups (the reference's RichFlatMapFunction+"
+    "ValueState per cell, TravelTimePrediction.java:120-164), append mode, "
+    "availableNow drain. The fold orders each micro-batch's rides by time "
+    "exactly like the batch twin, and the rides source arrives in ride-time "
+    "order, so the emission set equals the batch result and the SAME oracle "
+    "applies -- the stateful streaming path is driver-gated, not just pytest'd.",
+    source="rides",
 )
-def q_streaming_travel_time(events: DataFrame, sf_dir: str) -> DataFrame:
+def q_streaming_travel_time(rides: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import drain_availablenow
-    from ..streaming.sources import rides_stream
     from ..streaming.stateful import streaming_travel_time
 
-    return drain_availablenow(
-        streaming_travel_time(rides_stream(events)), "streaming_travel_time_gate"
-    )
+    return drain_availablenow(streaming_travel_time(rides), "streaming_travel_time_gate")

@@ -36,6 +36,13 @@ STREAM_SCHEMAS = {
         "value DOUBLE, props STRING"
     ),
     "documents": "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
+    # plans.rides.rides_view: replayed in ride-time (``ts``) order, as the
+    # reference's TaxiRideSource emits rides
+    "rides": (
+        "ride_id LONG, is_start BOOLEAN, ts TIMESTAMP_NTZ, start_time TIMESTAMP_NTZ, "
+        "end_time TIMESTAMP_NTZ, start_lon DOUBLE, start_lat DOUBLE, end_lon DOUBLE, "
+        "end_lat DOUBLE, passenger_cnt INT"
+    ),
 }
 
 
@@ -43,7 +50,10 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """``table`` (a key of STREAM_SCHEMAS) as a file-source stream. Each
     table is a single parquet FILE; the file stream source needs a
     directory basePath, so the glob filter picks the file within the sf
-    dir."""
+    dir. ``rides`` has no file of its own: it is the ride view over the
+    events stream."""
+    if table == "rides":
+        return rides_stream(table_stream(spark, sf_dir, "events"))
     return (
         spark.readStream.schema(STREAM_SCHEMAS[table])
         .option("pathGlobFilter", f"{table}.parquet")

@@ -169,14 +169,14 @@ def test_random_projection_matches_python_reference(spark, vec):
     import math
 
     from flink_training_exercises_spark.operators.similarity import (
-        _proj_params,
+        _PROJ_PARAMS,
         random_projection,
     )
 
     emb = spark.createDataFrame([(1, vec)], "vec_id long, embedding array<float>")
     got = {r["dim"]: r["value"] for r in random_projection(emb).collect()}
     iv = [math.floor(float(__import__("numpy").float32(x)) * 1e6) for x in vec]
-    for j, (a, b) in enumerate(_proj_params()[:16]):
+    for j, (a, b) in enumerate(_PROJ_PARAMS):
         expect = sum(x * (1 - 2 * ((i * a + b) % 2)) for i, x in enumerate(iv))
         assert got[j] == expect, j
 

@@ -1,7 +1,14 @@
 """Source/format tests: TaxiRide CSV quirks, mbox-style multi-char record
-delimiter, edge lists."""
+delimiter, edge lists, nanosecond testdata timestamps."""
+
+import os
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from flink_training_exercises_spark.sources import (
+    load_table,
     read_edge_list,
     read_mail_records,
     read_taxi_rides_csv,
@@ -46,3 +53,20 @@ def test_edge_list(spark, tmp_path):
     p.write_text("a\tb\t1.5\nb\tc\t2.0\n")
     got = {(r["src"], r["dst"]): r["weight"] for r in read_edge_list(spark, str(p)).collect()}
     assert got == {("a", "b"): 1.5, ("b", "c"): 2.0}
+
+
+def test_load_table_truncates_nanosecond_timestamps(spark, sf_small, tmp_path):
+    """An events file whose ``ts`` is parquet timestamp[ns] loads as
+    TIMESTAMP_NTZ with the microsecond file's values, the sub-microsecond
+    part truncated (what DuckDB does reading nanos)."""
+    micros = pq.read_table(os.path.join(sf_small, "events.parquet"))
+    ns = pc.add(pc.multiply(micros["ts"].cast(pa.int64()), 1000), 999).cast(pa.timestamp("ns"))
+    nanos = micros.set_column(micros.schema.get_field_index("ts"), "ts", ns)
+    pq.write_table(nanos, str(tmp_path / "events.parquet"))
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+
+    got = load_table(spark, "events", str(tmp_path))
+    want = load_table(spark, "events", sf_small)
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    rows = lambda df: df.select("event_id", "ts").orderBy("event_id").collect()  # noqa: E731
+    assert rows(got) == rows(want)

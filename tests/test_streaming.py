@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_training_exercises_spark.operators.stateful import travel_time_window
+from flink_training_exercises_spark.operators.timeseries import rolling_zscore_anomalies
 from flink_training_exercises_spark.operators.windows import popular_places
 from flink_training_exercises_spark.plans.catalog import CATALOG, release_query_state
 from flink_training_exercises_spark.plans.differential import compare
@@ -29,7 +30,10 @@ from flink_training_exercises_spark.streaming.sources import (
     replay_to_files,
     rides_stream,
 )
-from flink_training_exercises_spark.streaming.stateful import streaming_travel_time
+from flink_training_exercises_spark.streaming.stateful import (
+    streaming_travel_time,
+    streaming_zscore,
+)
 
 _EVENTS_SCHEMA = STREAM_SCHEMAS["events"]
 
@@ -62,7 +66,12 @@ def _with_own_scratch(run):
 
 
 # The column each source's replay chunks are chronological in.
-_REPLAY_ORDER = {"events": "ts", "documents": "doc_id"}
+_REPLAY_ORDER = {"events": "ts", "documents": "doc_id", "rides": "ts"}
+
+
+def _source_table(spark, source, sf_dir):
+    """The batch table a replay of ``source`` stages."""
+    return rides_view(spark, sf_dir) if source == "rides" else load_table(spark, source, sf_dir)
 
 
 class ReplayRuns:
@@ -80,7 +89,7 @@ class ReplayRuns:
         if source not in self._chunks:
             runs = self.catalog_runs
             d = os.path.join(self.root, source)
-            table = load_table(runs.spark, source, runs.sf_dir)
+            table = _source_table(runs.spark, source, runs.sf_dir)
             replay_to_files(table, _REPLAY_ORDER[source], d, n_chunks=4)
             self._chunks[source] = d
         return _chunked_stream(self.catalog_runs.spark, self._chunks[source], STREAM_SCHEMAS[source])
@@ -108,20 +117,9 @@ def replay_runs(catalog_runs, tmp_path_factory):
 
 
 REPLAYED = sorted(n for n, spec in CATALOG.items() if spec.source)
-# A ride's END event sits next to its START in events.ts order but is
-# stamped 1-60 min later, so a chronological replay of events delivers
-# rides out of ride-time order, and the keyed model state of the travel
-# time predictor is folded in a different order than the one-batch drain.
-_REPLAY_XFAIL = {
-    "streaming_travel_time_stateful": pytest.mark.xfail(
-        strict=True, reason="events replay is not in ride-time order"
-    ),
-}
 
 
-@pytest.mark.parametrize(
-    "name", [pytest.param(n, marks=_REPLAY_XFAIL.get(n, ())) for n in REPLAYED]
-)
+@pytest.mark.parametrize("name", REPLAYED)
 def test_streaming_query_replays_to_oracle(replay_runs, name):
     """Chunked == single-batch for every streaming entry that declares a
     source: fed 4 chronological micro-batches instead of one, with the
@@ -648,54 +646,66 @@ def test_streaming_zscore_invariant_under_chunked_replay(replay_runs):
     assert len(replay_runs.query("streaming_anomaly_zscore")) > 500
 
 
-def test_streaming_zscore_invariant_under_tiny_arrow_chunks(spark, sf_small):
-    """A key's micro-batch rows arriving as MANY Arrow chunks (tiny
-    maxRecordsPerBatch) must not break event-time ordering: the handler
-    concatenates chunks before its single sort, so emissions still equal
-    the batch operator exactly."""
-    import uuid as _uuid
+# Each Python keyed-state operator: (stream function, source table, the
+# batch operator its emissions equal, the fewest rows that batch must have).
+_KEYED_STATE = {
+    "zscore": (
+        streaming_zscore,
+        "events",
+        lambda spark, sf_dir: rolling_zscore_anomalies(load_table(spark, "events", sf_dir)),
+        500,
+    ),
+    "travel_time": (
+        streaming_travel_time,
+        "rides",
+        lambda spark, sf_dir: travel_time_window(rides_view(spark, sf_dir)),
+        100,
+    ),
+}
 
-    from flink_training_exercises_spark.operators.timeseries import (
-        rolling_zscore_anomalies,
+
+@pytest.mark.parametrize("op", sorted(_KEYED_STATE))
+def test_keyed_state_invariant_under_tiny_arrow_chunks(spark, sf_small, tmp_path, op):
+    """A key group's micro-batch rows arriving in reverse time order as
+    MANY Arrow chunks (tiny maxRecordsPerBatch) must not change the
+    emissions: the handler concatenates the chunks before the fold's
+    single sort, so they still equal the batch operator exactly."""
+    fn, source, batch, min_rows = _KEYED_STATE[op]
+    reversed_dir = str(tmp_path / "reversed")
+    (
+        _source_table(spark, source, sf_small)
+        .repartition(1)
+        .sortWithinPartitions(F.col(_REPLAY_ORDER[source]).desc())
+        .write.parquet(reversed_dir)
     )
-    from flink_training_exercises_spark.sources import load_table
-    from flink_training_exercises_spark.streaming.sources import events_stream
-    from flink_training_exercises_spark.streaming.stateful import streaming_zscore
-
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, None)
     spark.conf.set(key, "7")
     try:
-        name = f"ztiny_{_uuid.uuid4().hex[:8]}"
-        got = {
-            tuple(r)
-            for r in drain_availablenow(
-                streaming_zscore(events_stream(spark, sf_small)), name
-            ).collect()
-        }
+        stream = fn(_chunked_stream(spark, reversed_dir, STREAM_SCHEMAS[source]))
+        name = f"tiny_{op}_{uuid.uuid4().hex[:8]}"
+        got = {tuple(r) for r in drain_availablenow(stream, name).collect()}
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    want = {tuple(r) for r in rolling_zscore_anomalies(load_table(spark, "events", sf_small)).collect()}
-    assert len(want) > 500
+    want = {tuple(r) for r in batch(spark, sf_small).collect()}
+    assert len(want) > min_rows
     assert got == want
 
 
-def test_streaming_zscore_checkpoint_resume(spark, sf_small, tmp_path):
-    """W6 for the stateful z-score: drain the first half of the stream to a
-    checkpointed file sink, 'crash', then resume with the SAME checkpoint
-    after the rest arrives -- the state store restores every user's
-    trailing-cents tail, so the union of emissions equals the batch
-    operator exactly once (no gaps, no duplicates)."""
-    from flink_training_exercises_spark.operators.timeseries import (
-        rolling_zscore_anomalies,
-    )
-    from flink_training_exercises_spark.streaming.stateful import streaming_zscore
-
-    ev = load_table(spark, "events", sf_small)
-    chunks = replay_to_files(ev, "ts", str(tmp_path / "staged"), n_chunks=4)
+@pytest.mark.parametrize("op", sorted(_KEYED_STATE))
+def test_keyed_state_checkpoint_resume(spark, sf_small, tmp_path, op):
+    """W6 for the Python keyed state: drain the first half of the replay to
+    a checkpointed file sink, 'crash', then resume with the SAME checkpoint
+    after the rest arrives -- the state store restores every key group's
+    dict (each user's trailing-cents tail, each cell's regression stats),
+    so the union of emissions equals the batch operator exactly once (no
+    gaps, no duplicates)."""
+    fn, source, batch, _ = _KEYED_STATE[op]
+    table = _source_table(spark, source, sf_small)
+    chunks = replay_to_files(table, _REPLAY_ORDER[source], str(tmp_path / "staged"), n_chunks=4)
     live = str(tmp_path / "live")
     os.makedirs(live)
 
@@ -704,7 +714,7 @@ def test_streaming_zscore_checkpoint_resume(spark, sf_small, tmp_path):
 
     def drain_once():
         q = (
-            streaming_zscore(_chunked_stream(spark, live))
+            fn(_chunked_stream(spark, live, STREAM_SCHEMAS[source]))
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)
@@ -714,16 +724,16 @@ def test_streaming_zscore_checkpoint_resume(spark, sf_small, tmp_path):
         )
         q.awaitTermination(300)
 
+    want = sorted(tuple(r) for r in batch(spark, sf_small).collect())
     _arrive(chunks[:2], live)
     drain_once()
     n_partial = spark.read.parquet(sink).count()
-    assert 0 < n_partial < ev.count()
+    assert 0 < n_partial < len(want)
     _arrive(chunks[2:], live)
     drain_once()
 
     got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    want = sorted(tuple(r) for r in rolling_zscore_anomalies(ev).collect())
-    assert got == want  # exactly-once AND state-tail continuity across the crash
+    assert got == want  # exactly-once AND state continuity across the crash
 
 
 def test_streaming_pit_enrichment_matches_batch(spark, sf_small):
