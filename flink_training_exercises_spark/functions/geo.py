@@ -75,13 +75,14 @@ def euclidean_distance_km(lon1, lat1, lon2, lat2) -> Column:
 
 def direction_angle(dest_lon, dest_lat, start_lon, start_lat) -> Column:
     """F6 -- GeoUtils.getDirectionAngle (GeoUtils.java:241-249):
-    floor(degrees(atan2(destLat-startLat, (destLon-startLon)*cos(startLat))))
-    + 179."""
+    (int) degrees(atan2(destLat-startLat, (destLon-startLon)*cos(startLat)))
+    + 179, in 0..359. Java's (int) cast truncates toward zero, so degrees
+    in (-180, -179) give angle 0, not -1 as a floor would."""
     dest_lon, dest_lat = _c(dest_lon), _c(dest_lat)
     start_lon, start_lat = _c(start_lon), _c(start_lat)
     x = dest_lat - start_lat
     y = (dest_lon - start_lon) * F.cos(start_lat)
-    return (F.floor(F.degrees(F.atan2(x, y))) + F.lit(179)).cast("int")
+    return F.degrees(F.atan2(x, y)).cast("int") + F.lit(179)
 
 
 def direction_bucket(angle) -> Column:

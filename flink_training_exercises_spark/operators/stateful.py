@@ -95,12 +95,12 @@ def travel_time_fold(state: dict, pdf: pd.DataFrame) -> pd.DataFrame:
     """Fold one key group's ``_features`` rows into ``state`` and return
     (ride_id, predicted_minutes) per START event.
 
-    ``state`` maps cell * 16 + bucket (buckets run -1..7, so cells never
+    ``state`` maps cell * 8 + bucket (buckets run 0..7, so cells never
     share a slot) to [sxx, sxy]. Rows are taken in the stable (ev_ms,
     ride_id, is_start) order; ``np.lexsort``'s last key is the primary."""
     col = {c: pdf[c].to_numpy() for c in pdf.columns}
     order = np.lexsort((col["is_start"], col["ride_id"], col["ev_ms"]))
-    slot = col["cell"] * 16 + col["bucket"]
+    slot = col["cell"] * 8 + col["bucket"]
     out_ids, out_preds = [], []
     for ride_id, is_start, key, x, y in zip(
         *(a[order].tolist() for a in (col["ride_id"], col["is_start"], slot, col["x_m"], col["y_ms"]))

@@ -294,8 +294,8 @@ feat AS (
   SELECT ride_id, is_start, epoch_ms(ts) AS ev_ms,
          CAST(FLOOR((74.05e0 - abs(end_lon)) / 1.4e-3) AS INT)
            + CAST(FLOOR((41.0e0 - end_lat) / 1.25e-3) AS INT) * 250 AS cell,
-         CAST(FLOOR((FLOOR(DEGREES(ATAN2(end_lat - start_lat,
-              (end_lon - start_lon) * COS(start_lat)))) + 179) / 45) AS INT) AS bucket,
+         CAST(FLOOR((CAST(TRUNC(DEGREES(ATAN2(end_lat - start_lat,
+              (end_lon - start_lon) * COS(start_lat)))) AS INT) + 179) / 45) AS INT) AS bucket,
          CAST(FLOOR(110.25e0 * SQRT((start_lat - end_lat) * (start_lat - end_lat)
               + ((start_lon - end_lon) * COS(end_lat)) * ((start_lon - end_lon) * COS(end_lat)))
               * 1e3) AS BIGINT) AS x_m,

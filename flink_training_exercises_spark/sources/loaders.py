@@ -14,13 +14,18 @@ S4              read_edge_list -- tab-separated (src, dst, weight)
 Testdata        load_table over /root/testdata parquet.
 
 The file loaders (taxi CSV, mail records, edge lists) declare explicit
-schemas -- no runtime inference. ``load_table`` passes no schema: parquet
-carries its own, so every call lists the file and reads its footer.
+schemas -- no runtime inference. ``load_table`` takes its schema from the
+parquet footer, but resolves each file once per session: Spark's own
+inference (a job that reads the footer) runs on the first read of a file
+identity (path, mtime, size) in a session, and later reads pass the stored
+schema. A file rewritten at the same path, or a second session, resolves
+afresh. Only schemas and plan properties are stored, never a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +49,22 @@ _NANO_TS_COLS = {
 NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
 
+# One store per session: (path, st_mtime_ns, st_size) -> the inferred
+# StructType, and (semanticHash, target) -> widen_scan's "narrower than
+# target". Weak keys: an entry lives exactly as long as its session object.
+_RESOLVED: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """One driver testdata table (TESTDATA.md)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    resolved = _RESOLVED.setdefault(spark, {})
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in resolved:
+        resolved[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(resolved[key]).parquet(path)
     for c in _NANO_TS_COLS.get(name, ()):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             # integer div -- double division would lose precision at 1e18 ns
@@ -55,9 +72,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
                 c, F.timestamp_add("MICROSECOND", F.expr(f"{c} div 1000"), F.expr(NTZ_EPOCH))
             )
     return df
-
-
-_WIDEN_MEMO: dict[tuple[str, int, int], bool] = {}
 
 
 def widen_scan(df: DataFrame) -> DataFrame:
@@ -71,22 +85,20 @@ def widen_scan(df: DataFrame) -> DataFrame:
     independent, so results are identical either way.
 
     The split-count probe (``df.rdd.getNumPartitions()``) runs a full
-    physical-planning pass (~110 ms even on a trivial scan), and the ~40
-    widened catalog queries re-probe the SAME few plans every bench run --
-    so the probe's boolean is memoized per (application, semanticHash,
-    target) (r13 optimization). semanticHash is ~1 ms on an analyzed
-    plan. This memoizes a PLAN property (split count of a read-only
-    input), never data or results; a (vanishingly unlikely) 32-bit hash
-    collision could only mis-skip/mis-add the widening shuffle, which is
-    performance-neutral to results (row-level ops are partitioning-
-    independent)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), target)
-    narrow = _WIDEN_MEMO.get(key)
-    if narrow is None:
-        narrow = df.rdd.getNumPartitions() < target
-        _WIDEN_MEMO[key] = narrow
-    if narrow:
+    physical-planning pass (~110 ms even on a trivial scan), and builders
+    re-probe the same few plans on every build, so its answer is kept in
+    the session's store under (semanticHash, target) and looked up before
+    probing. semanticHash is ~1 ms on an analyzed plan. The store holds a
+    plan property of a read-only input, never data or results; a
+    (vanishingly unlikely) 32-bit hash collision could only mis-skip or
+    mis-add the widening shuffle, which leaves results unchanged."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    resolved = _RESOLVED.setdefault(spark, {})
+    key = (df.semanticHash(), target)
+    if key not in resolved:
+        resolved[key] = df.rdd.getNumPartitions() < target
+    if resolved[key]:
         return df.repartition(target)
     return df
 

@@ -68,17 +68,32 @@ def test_euclidean_distance_quirk(spark):
 
 
 def test_direction_angle_and_bucket(spark):
-    # GeoUtils.java:241-249: floor(degrees(atan2)) + 179 in [0, 359].
+    # GeoUtils.java:241-249: (int) degrees(atan2) + 179 in [0, 359]; the
+    # Java cast truncates toward zero.
     a = _one(
         spark,
         direction_angle(F.lit(-73.9), F.lit(40.8), F.lit(-74.0), F.lit(40.75)),
     )
     x = 40.8 - 40.75
     y = (-73.9 - -74.0) * math.cos(40.75)
-    assert a == math.floor(math.degrees(math.atan2(x, y))) + 179
+    assert a == math.trunc(math.degrees(math.atan2(x, y))) + 179
     b = _one(spark, direction_bucket(F.lit(a)))
     assert b == a // 45
     assert 0 <= b <= 7
+
+
+def test_direction_angle_truncates_toward_zero(spark):
+    # degrees(atan2) = -179.94 here: the (int) cast gives -179, so the angle
+    # is 0 and the bucket 0 (a floor would give -1 and -1)
+    x = -1e-4
+    y = (-73.9 - -74.0) * math.cos(40.75)
+    assert -180 < math.degrees(math.atan2(x, y)) < -179
+    a = _one(
+        spark,
+        direction_angle(F.lit(-73.9), F.lit(40.75 + x), F.lit(-74.0), F.lit(40.75)),
+    )
+    assert a == 0
+    assert _one(spark, direction_bucket(F.lit(a))) == 0
 
 
 def test_month_key_and_email(spark):

@@ -1,7 +1,9 @@
 """Source/format tests: TaxiRide CSV quirks, mbox-style multi-char record
-delimiter, edge lists, nanosecond testdata timestamps."""
+delimiter, edge lists, nanosecond testdata timestamps, per-session schema
+resolution."""
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -55,18 +57,57 @@ def test_edge_list(spark, tmp_path):
     assert got == {("a", "b"): 1.5, ("b", "c"): 2.0}
 
 
+def _write_nanos_events(sf_dir, out_dir):
+    """sf_dir's events with ``ts`` as parquet timestamp[ns] (999 ns past
+    each microsecond), written to out_dir/events.parquet."""
+    micros = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    ns = pc.add(pc.multiply(micros["ts"].cast(pa.int64()), 1000), 999).cast(pa.timestamp("ns"))
+    nanos = micros.set_column(micros.schema.get_field_index("ts"), "ts", ns)
+    pq.write_table(nanos, str(out_dir / "events.parquet"))
+    assert pq.read_schema(str(out_dir / "events.parquet")).field("ts").type == pa.timestamp("ns")
+
+
 def test_load_table_truncates_nanosecond_timestamps(spark, sf_small, tmp_path):
     """An events file whose ``ts`` is parquet timestamp[ns] loads as
     TIMESTAMP_NTZ with the microsecond file's values, the sub-microsecond
     part truncated (what DuckDB does reading nanos)."""
-    micros = pq.read_table(os.path.join(sf_small, "events.parquet"))
-    ns = pc.add(pc.multiply(micros["ts"].cast(pa.int64()), 1000), 999).cast(pa.timestamp("ns"))
-    nanos = micros.set_column(micros.schema.get_field_index("ts"), "ts", ns)
-    pq.write_table(nanos, str(tmp_path / "events.parquet"))
-    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+    _write_nanos_events(sf_small, tmp_path)
 
     got = load_table(spark, "events", str(tmp_path))
     want = load_table(spark, "events", sf_small)
     assert dict(got.dtypes)["ts"] == "timestamp_ntz"
     rows = lambda df: df.select("event_id", "ts").orderBy("event_id").collect()  # noqa: E731
     assert rows(got) == rows(want)
+
+
+def test_load_table_resolves_each_file_once_per_session(spark, sf_small, tmp_path):
+    """The first ``load_table`` of a file in a session runs one
+    schema-inference job and a repeat runs none. A file rewritten at the
+    same path (same size, ``ts`` now timestamp[ns]) resolves again and
+    loads correct TIMESTAMP_NTZ values, and a second session resolves
+    afresh."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def jobs(session, group):
+        sc = session.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(session, "events", str(tmp_path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    shutil.copy(os.path.join(sf_small, "events.parquet"), tmp_path)
+    assert jobs(spark, "resolve_first")[1] == 1
+    assert jobs(spark, "resolve_repeat")[1] == 0
+
+    _write_nanos_events(sf_small, tmp_path)
+    got, n = jobs(spark, "resolve_rewritten")
+    assert n == 1
+    want = load_table(spark, "events", sf_small)
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    rows = lambda df: df.select("event_id", "ts").orderBy("event_id").collect()  # noqa: E731
+    assert rows(got) == rows(want)
+
+    assert jobs(spark.newSession(), "resolve_new_session")[1] == 1
