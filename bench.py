@@ -39,13 +39,13 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_training_exercises_spark.plans.catalog import (  # noqa: E402
     CATALOG,
-    release_query_state,
+    timed_run,
+    warm_up,
 )
 from flink_training_exercises_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
@@ -55,35 +55,16 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark("bench")
 
-    # Untimed warmup (VERDICT r5 #7) so JVM/codegen/Arrow cold-start isn't
-    # billed to whatever query happens to run first (doc_typicality measured
-    # 8.5 s cold vs 1.1 s warm on identical code). Three legs:
-    #   1. tiny JVM expression eval (session + codegen bootstrap),
-    #   2. a real parquet scan + hash agg on lineitem (vectorized reader,
-    #      whole-stage codegen, shuffle machinery),
-    #   3. a one-row mapInPandas round-trip (Python worker pool + Arrow
-    #      serialization path used by the pandas-UDF operators).
-    # Headline basket and per-query timings are unchanged -- this runs
-    # before the first timed query and is never recorded.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).groupBy(
-        "l_returnflag"
-    ).count().collect()
-    spark.range(8).mapInPandas(lambda it: it, "id long").collect()
+    warm_up(spark, sf_dir)  # untimed, never recorded
 
     timings: dict[str, float] = {}
     headline_total = 0.0
     for name, spec in CATALOG.items():
         if name.startswith("canary_"):
             continue
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
+        timings[name] = round(timed_run(spark, name, sf_dir), 3)
         if spec.bench:
             headline_total += timings[name]
-        df = None
-        release_query_state(spark)
 
     full = {
         "metric": "headline_queries_total_wall",

@@ -17,35 +17,31 @@ STOP_WORDS = (
 )
 
 
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-def month_key(time_col) -> Column:
+def month_key() -> Column:
     """P6 -- month = time.substring(0, 7) (MailCount.java:75); works for both
     'yyyy-MM-dd...' strings and timestamp columns."""
-    return F.substring(_c(time_col).cast("string"), 1, 7)
+    return F.substring(F.col("time").cast("string"), 1, 7)
 
 
-def email_address(sender) -> Column:
-    """P6/P7 -- bare address between the last '<' and trailing '>'
+def email_address() -> Column:
+    """P6/P7 -- bare sender address between the last '<' and trailing '>'
     (MailCount.java:77, ReplyGraph.java:78-85); rows without brackets pass
     through unchanged (the reference would throw; our inputs are clean)."""
-    s = _c(sender)
+    s = F.col("sender")
     extracted = F.regexp_extract(s, r"<([^<>]*)>\s*$", 1)
     return F.when(extracted != "", extracted).otherwise(s)
 
 
-def words(text) -> Column:
-    """The engine's plain tokenizer: lowercase, split on whitespace runs,
-    drop empty tokens (a leading/trailing run splits off one ''). The
-    DuckDB twin is :func:`words_sql`."""
-    return F.filter(F.split(F.lower(_c(text)), r"\s+"), lambda w: w != "")
+def words() -> Column:
+    """The engine's plain tokenizer over the ``text`` column: lowercase,
+    split on whitespace runs, drop empty tokens (a leading/trailing run
+    splits off one ''). The DuckDB twin is :func:`words_sql`."""
+    return F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != "")
 
 
-def words_sql(text_expr: str) -> str:
-    """DuckDB twin of :func:`words`."""
-    return f"[x for x in string_split_regex(lower({text_expr}), '\\s+') if x != '']"
+def words_sql() -> str:
+    """DuckDB twin of :func:`words` over the ``text`` column."""
+    return "[x for x in string_split_regex(lower(text), '\\s+') if x != '']"
 
 
 def tokenize_words(body, *, distinct: bool = False) -> Column:
@@ -54,7 +50,7 @@ def tokenize_words(body, *, distinct: bool = False) -> Column:
     ``distinct=True`` gives the unique-words variant used for document
     frequency. Entirely JVM-side: split + filter + array_distinct.
     """
-    words = F.split(F.lower(_c(body)), r"\s+")
+    words = F.split(F.lower(F.col(body)), r"\s+")
     stop_arr = F.array(*[F.lit(w) for w in dict.fromkeys(STOP_WORDS)])
     kept = F.filter(
         words,

@@ -28,21 +28,22 @@ def epoch_ms(ts) -> Column:
     return F.timestamp_diff("MILLISECOND", ntz_epoch(), _c(ts))
 
 
-def epoch_us(ts) -> Column:
-    """Epoch MICROseconds of a TIMESTAMP_NTZ column -- the full resolution
-    of the testdata's timestamp[us]; bit-identical to DuckDB's
+def epoch_us() -> Column:
+    """Epoch MICROseconds of the TIMESTAMP_NTZ ``ts`` column -- the full
+    resolution of the testdata's timestamp[us]; bit-identical to DuckDB's
     ``epoch_us(ts)`` on naive timestamps and session-TZ independent. Use it
     as the ORDERING key wherever the oracle orders by raw ``ts``:
     millisecond-truncated epoch_ms ties where full timestamps do not (the
     streaming-SCD2 review catch), the same latent-divergence class as the
     r3 per-side-truncation fact."""
-    return F.timestamp_diff("MICROSECOND", ntz_epoch(), _c(ts))
+    return F.timestamp_diff("MICROSECOND", ntz_epoch(), F.col("ts"))
 
 
-def ntz_as_utc_instant(ts) -> Column:
-    """TIMESTAMP_NTZ -> TIMESTAMP (LTZ) carrying the same wall-clock read as
-    a UTC instant, via pure epoch arithmetic -- independent of the session
-    timezone (a plain cast would shift by the session offset). Needed because
-    ``withWatermark`` only accepts TIMESTAMP event-time columns."""
-    return F.timestamp_micros(F.timestamp_diff("MICROSECOND", ntz_epoch(), _c(ts)))
+def ntz_as_utc_instant() -> Column:
+    """The TIMESTAMP_NTZ ``ts`` column as a TIMESTAMP (LTZ) carrying the same
+    wall-clock read as a UTC instant, via pure epoch arithmetic --
+    independent of the session timezone (a plain cast would shift by the
+    session offset). Needed because ``withWatermark`` only accepts
+    TIMESTAMP event-time columns."""
+    return F.timestamp_micros(F.timestamp_diff("MICROSECOND", ntz_epoch(), F.col("ts")))
 

@@ -19,40 +19,33 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_time: str,
-    right_time: str,
-    left_id: str,
-    right_id: str,
-) -> DataFrame:
-    """For every left row: the right row with the greatest right_time <=
-    left_time for the same key (NULL if none). Output: all left columns'
-    ids plus (matched_id, match_gap_ms)."""
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """For every left row: the right row of the same ``user_id`` with the
+    greatest ``ts`` <= the left row's (NULL if none); both sides are
+    events-shaped (user_id, ts, event_id). Output: (user_id, event_id,
+    matched_id, match_gap_ms)."""
     # null placeholders carry each side's ACTUAL id dtype (string ids etc.
     # would otherwise fail the union or silently widen)
-    l_id_type = dict(left.dtypes)[left_id]
-    r_id_type = dict(right.dtypes)[right_id]
+    l_id_type = dict(left.dtypes)["event_id"]
+    r_id_type = dict(right.dtypes)["event_id"]
     l_tag = left.select(
-        F.col(key).alias("k"),
-        F.col(left_time).alias("t"),
-        F.col(left_id).alias("lid"),
+        F.col("user_id").alias("k"),
+        F.col("ts").alias("t"),
+        F.col("event_id").alias("lid"),
         F.lit(None).cast(r_id_type).alias("rid"),
         F.lit(1).alias("side"),  # left sorts after right at equal t
     )
     r_tag = right.select(
-        F.col(key).alias("k"),
-        F.col(right_time).alias("t"),
+        F.col("user_id").alias("k"),
+        F.col("ts").alias("t"),
         F.lit(None).cast(l_id_type).alias("lid"),
-        F.col(right_id).alias("rid"),
+        F.col("event_id").alias("rid"),
         F.lit(0).alias("side"),
     )
-    return _asof_from_tagged(l_tag.unionByName(r_tag), key, left_id)
+    return _asof_from_tagged(l_tag.unionByName(r_tag))
 
 
-def _asof_from_tagged(unioned: DataFrame, key: str, left_id: str) -> DataFrame:
+def _asof_from_tagged(unioned: DataFrame) -> DataFrame:
     """Carry-forward core over a pre-tagged union (k, t, lid, rid, side)."""
     w = (
         Window.partitionBy("k")
@@ -74,8 +67,8 @@ def _asof_from_tagged(unioned: DataFrame, key: str, left_id: str) -> DataFrame:
     # timestamp_diff, which truncates the microsecond *difference* and can
     # disagree by 1ms with engines that floor each epoch first)
     return carried.where(F.col("lid").isNotNull()).select(
-        F.col("k").alias(key),
-        F.col("lid").alias(left_id),
+        F.col("k").alias("user_id"),
+        F.col("lid").alias("event_id"),
         "matched_id",
         (epoch_ms("t") - epoch_ms("matched_t")).alias("match_gap_ms"),
     )
@@ -96,7 +89,7 @@ def purchase_click_attribution(events: DataFrame) -> DataFrame:
         F.when(is_c, F.col("event_id")).alias("rid"),
         F.when(is_p, F.lit(1)).otherwise(F.lit(0)).alias("side"),
     )
-    return _asof_from_tagged(tagged, key="user_id", left_id="event_id")
+    return _asof_from_tagged(tagged)
 
 
 PURCHASE_CLICK_SQL = """

@@ -59,7 +59,7 @@ def ngram_contamination(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
     g = widen_scan(docs).select(
         F.col("doc_id"),
         (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
-        F.explode(_gram_strings(words("text"), n)).alias("gs"),
+        F.explode(_gram_strings(words(), n)).alias("gs"),
     ).select("doc_id", "is_bench", md5_long("gs").alias("gh"))
     corpus = g.where(~F.col("is_bench")).select("doc_id", "gh")
     bench = (
@@ -83,24 +83,23 @@ def ngram_contamination(docs: DataFrame, n: int = NGRAM_N) -> DataFrame:
     )
 
 
-def _grams_sql(
-    table: str, id_col: str, text_col: str, n: int, bench_mod: int
-) -> str:
-    """Shared gram-pipeline SQL (tokenize -> per-doc distinct n-gram
-    strings -> md5 hashes, bench flag) under ngram_contamination_sql AND
+def _grams_sql() -> str:
+    """Shared gram-pipeline SQL over ``documents`` (tokenize -> per-doc
+    distinct NGRAM_N-gram strings -> md5 hashes, bench flag) under
+    ngram_contamination_sql AND
     bloom_contamination_screen_sql -- one source of truth so the
     documented \\x0B tokenizer contingency (CLAUDE.md) edits exactly one
     SQL site next to the shared Spark-side words/_gram_strings."""
-    w = words_sql(text_col)
-    slots = ", ".join("w[i]" if j == 0 else f"w[i+{j}]" for j in range(n))
+    w = words_sql()
+    slots = ", ".join("w[i]" if j == 0 else f"w[i+{j}]" for j in range(NGRAM_N))
     gram = f"concat_ws(' ', {slots})"
     gram_list = (
-        f"list_transform(list_distinct(list_transform(range(1, len(w) - {n - 2}), "
+        f"list_transform(list_distinct(list_transform(range(1, len(w) - {NGRAM_N - 2}), "
         f"i -> {gram})), g -> {md5_long_sql('g')})"
     )
     return (
-        f"SELECT {id_col}, {id_col} % {bench_mod} = 0 AS is_bench, {gram_list} AS g "
-        f"FROM (SELECT {id_col}, {w} AS w FROM {table})"
+        f"SELECT doc_id, doc_id % {BENCH_MOD} = 0 AS is_bench, {gram_list} AS g "
+        f"FROM (SELECT doc_id, {w} AS w FROM documents)"
     )
 
 
@@ -110,7 +109,7 @@ def ngram_contamination_sql() -> str:
     # pipeline itself is the shared _grams_sql fragment
     return f"""
 WITH grams AS (
-  {_grams_sql('documents', 'doc_id', 'text', NGRAM_N, BENCH_MOD)}
+  {_grams_sql()}
 ),
 corpus AS (SELECT doc_id, unnest(g) AS gh FROM grams WHERE NOT is_bench),
 bench AS (SELECT DISTINCT unnest(g) AS gh FROM grams WHERE is_bench),
@@ -154,7 +153,7 @@ def bloom_contamination_screen(docs: DataFrame) -> DataFrame:
 
     g = widen_scan(docs).select(
         (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
-        F.explode(_gram_strings(words("text"), NGRAM_N)).alias("gs"),
+        F.explode(_gram_strings(words(), NGRAM_N)).alias("gs"),
     ).select("is_bench", md5_long("gs").alias("gh"))
     bench = (
         g.where(F.col("is_bench")).select("gh").distinct().localCheckpoint()
@@ -169,7 +168,7 @@ def bloom_contamination_screen_sql() -> str:
     build/probe slots (each must select one column named ``k``)."""
     from .bloom import bloom_semijoin_audit_sql
 
-    grams = f"({_grams_sql('documents', 'doc_id', 'text', NGRAM_N, BENCH_MOD)})"
+    grams = f"({_grams_sql()})"
     build_sql = f"SELECT unnest(g) AS k FROM {grams} WHERE is_bench"
     probe_sql = f"SELECT unnest(g) AS k FROM {grams} WHERE NOT is_bench"
     return bloom_semijoin_audit_sql(build_sql, probe_sql)

@@ -57,29 +57,27 @@ def _jaccard_c() -> Column:
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
-    """Keep one deterministic survivor (min id) per exact key; reports group
-    size so callers can split survivors/victims. A hash-partitioned groupBy:
-    one shuffle on the key, map-side combined."""
+def exact_dedup(df: DataFrame, key: Column) -> DataFrame:
+    """Keep one deterministic survivor (min doc_id) per exact key; reports
+    group size so callers can split survivors/victims. A hash-partitioned
+    groupBy: one shuffle on the key, map-side combined."""
     return (
-        df.select(key.alias("dedup_key"), F.col(id_col))
+        df.select(key.alias("dedup_key"), F.col("doc_id"))
         .groupBy("dedup_key")
-        .agg(F.min(id_col).alias("survivor_id"), F.count(F.lit(1)).alias("group_size"))
+        .agg(F.min("doc_id").alias("survivor_id"), F.count(F.lit(1)).alias("group_size"))
     )
 
 
 NORMALIZED_PREFIX_KEY_N_WORDS = 5
 
 
-def normalized_prefix_key(text_col: str, n_words: int = NORMALIZED_PREFIX_KEY_N_WORDS) -> Column:
+def normalized_prefix_key(n_words: int = NORMALIZED_PREFIX_KEY_N_WORDS) -> Column:
     """Normalization key: first n words of lower/whitespace-collapsed text."""
-    return F.concat_ws(" ", F.slice(words(text_col), 1, n_words))
+    return F.concat_ws(" ", F.slice(words(), 1, n_words))
 
 
-def normalized_prefix_key_sql(text_expr: str) -> str:
-    return (
-        f"array_to_string(({words_sql(text_expr)})[1:{NORMALIZED_PREFIX_KEY_N_WORDS}], ' ')"
-    )
+def normalized_prefix_key_sql() -> str:
+    return f"array_to_string(({words_sql()})[1:{NORMALIZED_PREFIX_KEY_N_WORDS}], ' ')"
 
 
 # ---------------------------------------------------------------------------
@@ -87,23 +85,23 @@ def normalized_prefix_key_sql(text_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def char_shingles(text_col: str) -> Column:
-    """Distinct character w-grams of a text column, as an array -- computed
-    per row, no explosion."""
-    text = F.col(text_col)
+def char_shingles() -> Column:
+    """Distinct character w-grams of the ``text`` column, as an array --
+    computed per row, no explosion."""
+    text = F.col("text")
     positions = F.sequence(F.lit(1), F.greatest(F.length(text) - (SHINGLE_WIDTH - 1), F.lit(1)))
     return F.array_distinct(F.transform(positions, lambda i: text.substr(i, F.lit(SHINGLE_WIDTH))))
 
 
-def char_shingles_sql(text_expr: str) -> str:
+def char_shingles_sql() -> str:
     return (
-        f"list_distinct([substr({text_expr}, i, {SHINGLE_WIDTH}) "
-        f"for i in generate_series(1, greatest(length({text_expr}) - {SHINGLE_WIDTH - 1}, 1))])"
+        f"list_distinct([substr(text, i, {SHINGLE_WIDTH}) "
+        f"for i in generate_series(1, greatest(length(text) - {SHINGLE_WIDTH - 1}, 1))])"
     )
 
 
-def shingle_hashes_df(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, hs): distinct md5 shingle hashes per doc -- the shared input of
+def shingle_hashes_df(docs: DataFrame) -> DataFrame:
+    """(id, hs): distinct md5 shingle hashes per doc_id -- the shared input of
     both the signature pass and the exact-Jaccard verify. hs (60-bit
     bigints), not shingle strings: bigint set intersection is much cheaper
     and Jaccard is identical (md5 collisions deterministic & negligible).
@@ -114,14 +112,14 @@ def shingle_hashes_df(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     docs = widen_scan(docs)
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.array_distinct(
-            F.transform(char_shingles(text_col), _md5_long_c)
+            F.transform(char_shingles(), _md5_long_c)
         ).alias("hs"),
     )
 
 
-def persisted_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def persisted_signatures(docs: DataFrame) -> DataFrame:
     """(id, hs, s0..s{k-1}) signature table, materialized per call with an
     eager localCheckpoint so banding and both verify probes read one copy
     instead of re-hashing the corpus. Nothing is memoized: the copy lives
@@ -130,9 +128,7 @@ def persisted_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFra
     input on every call. At cluster scale this is the standard
     'materialize signatures once' table a 100 TB dedup writes before
     banding."""
-    return signatures_from_hashes(
-        shingle_hashes_df(docs, id_col, text_col)
-    ).localCheckpoint()
+    return signatures_from_hashes(shingle_hashes_df(docs)).localCheckpoint()
 
 
 def signatures_from_hashes(hs_df: DataFrame) -> DataFrame:
@@ -209,7 +205,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     signature materialization, the idiom a 100 TB dedup would use anyway.
     """
     r = MINHASH_K // MINHASH_BANDS
-    sig_df = persisted_signatures(docs, "doc_id", "text")
+    sig_df = persisted_signatures(docs)
     hs_tbl = sig_df.select("id", "hs")
     band_keys = [
         _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(MINHASH_BANDS)
@@ -257,12 +253,12 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
 
 def minhash_lsh_sql(threshold: float = 0.2) -> str:
     r = MINHASH_K // MINHASH_BANDS
-    sigs = minhash_signature_sql(char_shingles_sql("text"))
+    sigs = minhash_signature_sql(char_shingles_sql())
     sig_cols = ", ".join(f"{s} AS s{i}" for i, s in enumerate(sigs))
     band_keys = ", ".join(
         _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(MINHASH_BANDS)
     )
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql()}])"
     return f"""
 WITH shingled AS (
   SELECT doc_id AS id, {hs} AS sh FROM documents
@@ -310,7 +306,7 @@ def incremental_minhash_matches(
     band keys, and Jaccard verify are shared with minhash_lsh_pairs
     (materialized once per call via persisted_signatures)."""
     r = MINHASH_K // MINHASH_BANDS
-    sig_df = persisted_signatures(docs, "doc_id", "text")
+    sig_df = persisted_signatures(docs)
     is_new = _md5_long_c(F.col("id").cast("string")) % 10000 < batch_bp
     band_keys = [
         _band_key_fold([F.col(f"s{b * r + j}") for j in range(r)], b) for b in range(MINHASH_BANDS)
@@ -343,12 +339,12 @@ def incremental_minhash_matches(
 
 def incremental_minhash_sql() -> str:
     r = MINHASH_K // MINHASH_BANDS
-    sigs = minhash_signature_sql(char_shingles_sql("text"))
+    sigs = minhash_signature_sql(char_shingles_sql())
     sig_cols = ", ".join(f"{s} AS s{i}" for i, s in enumerate(sigs))
     band_keys = ", ".join(
         _band_key_fold_sql([f"s{b * r + j}" for j in range(r)], b) for b in range(MINHASH_BANDS)
     )
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql()}])"
     is_new_n = f"{md5_long_sql('CAST(n.id AS VARCHAR)')} % 10000 < {INCREMENTAL_BATCH_BP}"
     is_new_c = f"{md5_long_sql('CAST(c.id AS VARCHAR)')} % 10000 < {INCREMENTAL_BATCH_BP}"
     return f"""
@@ -392,7 +388,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     docs = widen_scan(docs)
     toks = docs.select(
         F.col("doc_id").alias("id"),
-        F.explode(words("text")).alias("w"),
+        F.explode(words()).alias("w"),
     ).select("id", _md5_long_c(F.col("w")).alias("h"))
     bit_sums = toks.groupBy("id").agg(
         *[
@@ -458,7 +454,7 @@ def simhash_sql() -> str:
     )
     return f"""
 WITH words AS (
-  SELECT doc_id AS id, unnest({words_sql('text')}) AS w
+  SELECT doc_id AS id, unnest({words_sql()}) AS w
   FROM documents
 ),
 bit_sums AS (SELECT id, {bit_sum_cols} FROM words GROUP BY id),
@@ -495,7 +491,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    ws = words("text")
+    ws = words()
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(ws) - (WORD_NGRAM_N - 1), F.lit(1))),
@@ -532,7 +528,7 @@ WITH g AS (
     SELECT doc_id AS id, source AS part,
            list_distinct([array_to_string(w[i:i+{WORD_NGRAM_N - 1}], ' ')
                           for i in generate_series(1, greatest(len(w) - {WORD_NGRAM_N - 1}, 1))]) AS gs
-    FROM (SELECT doc_id, source, {words_sql('text')} AS w FROM documents)
+    FROM (SELECT doc_id, source, {words_sql()} AS w FROM documents)
   )
 ),
 pairs AS (
@@ -597,7 +593,7 @@ def minhash_lsh_recall(docs: DataFrame) -> DataFrame:
     # (a bare self-join evaluates the expensive shingling subtree once
     # per side -- the CLAUDE.md round-2 rule); the materialization is
     # sample-bounded by design
-    hs = shingle_hashes_df(docs, "doc_id", "text").where(in_sample).localCheckpoint()
+    hs = shingle_hashes_df(docs).where(in_sample).localCheckpoint()
     a = hs.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a"))
     b = hs.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b"))
     exact = (
@@ -635,7 +631,7 @@ def minhash_lsh_recall(docs: DataFrame) -> DataFrame:
 
 def minhash_lsh_recall_sql() -> str:
     lsh_sql = minhash_lsh_sql(threshold=MINHASH_LSH_RECALL_THRESHOLD)
-    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql('text')}])"
+    hs = f"list_distinct([{md5_long_sql('s')} for s in {char_shingles_sql()}])"
     in_a = f"{md5_long_sql('CAST(id_a AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
     in_b = f"{md5_long_sql('CAST(id_b AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
     in_s = f"{md5_long_sql('CAST(doc_id AS VARCHAR)')} % 10000 < {MINHASH_LSH_RECALL_SAMPLE_BP}"
@@ -695,7 +691,7 @@ def repeated_ngram_coverage(docs: DataFrame, n: int = REPEAT_NGRAM_N) -> DataFra
         widen_scan(docs)
         .select(
             "doc_id",
-            F.explode(_gram_strings(words("text"), n)).alias("gram"),
+            F.explode(_gram_strings(words(), n)).alias("gram"),
         )
         .select("doc_id", _md5_long_c(F.col("gram")).alias("gh"))
     )
@@ -726,7 +722,7 @@ def repeated_ngram_coverage(docs: DataFrame, n: int = REPEAT_NGRAM_N) -> DataFra
 def repeated_ngram_coverage_sql() -> str:
     """DuckDB twin of :func:`repeated_ngram_coverage` (same tokenizer, same
     string-level distinct, same post-explode md5 fold)."""
-    w = words_sql("text")
+    w = words_sql()
     slots = ", ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(REPEAT_NGRAM_N))
     return f"""
 WITH w AS (
@@ -856,7 +852,7 @@ def segment_dedup_keepfirst(docs: DataFrame) -> DataFrame:
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(docs)
-    w = words("text")
+    w = words()
     n_seg = F.floor((F.size(w) - F.lit(1)) / F.lit(SEGMENT_WORDS)).cast("int") + F.lit(1)
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - F.lit(1)),
@@ -906,7 +902,7 @@ def segment_dedup_keepfirst(docs: DataFrame) -> DataFrame:
 def segment_dedup_keepfirst_sql() -> str:
     """DuckDB twin of :func:`segment_dedup_keepfirst` (same tokenizer, same
     fixed-width grid, same packed-min keep-first rule)."""
-    w = words_sql("text")
+    w = words_sql()
     n = SEGMENT_WORDS
     return f"""
 WITH w AS (
@@ -1099,7 +1095,7 @@ def prefix_filter_jaccard_pairs(
     from ..sources.loaders import widen_scan
 
     tn, td = threshold_num, threshold_den
-    ws = words("text")
+    ws = words()
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(ws) - (WORD_NGRAM_N - 1), F.lit(1))),
@@ -1170,7 +1166,7 @@ WITH sh AS MATERIALIZED (
     SELECT doc_id AS id,
            list_distinct([array_to_string(w[i:i+{WORD_NGRAM_N - 1}], ' ')
                           for i in generate_series(1, greatest(len(w) - {WORD_NGRAM_N - 1}, 1))]) AS gs
-    FROM (SELECT doc_id, {words_sql('text')} AS w FROM documents)
+    FROM (SELECT doc_id, {words_sql()} AS w FROM documents)
   )
 ),
 expl AS (
@@ -1238,7 +1234,7 @@ def fs_pair_scores(docs: DataFrame, block_cols: tuple[str, ...] = ("lang", "sour
             F.col("doc_id").alias("id"),
             F.col("n_chars").cast("bigint").alias("len"),
             F.lower(F.substring(F.col("text"), 1, plen)).alias("pfx"),
-            F.size(words("text")).cast("bigint").alias("ntok"),
+            F.size(words()).cast("bigint").alias("ntok"),
         )
         .localCheckpoint()
     )
@@ -1305,15 +1301,9 @@ def record_linkage_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fs_sql_parts(
-    table: str,
-    id_col: str,
-    text_col: str,
-    length_col: str,
-    block_cols: tuple[str, ...],
-) -> dict:
-    """Shared SQL fragments under the two Fellegi-Sunter oracles
-    (record_linkage_scores_sql, entity_resolution_clusters_sql) -- the
+def _fs_sql_parts(block_cols: tuple[str, ...]) -> dict:
+    """Shared SQL fragments over ``documents`` under the two Fellegi-Sunter
+    oracles (record_linkage_scores_sql, entity_resolution_clusters_sql) -- the
     oracle-side single source of truth mirroring :func:`fs_pair_scores`
     on the Spark side: the feats CTE body, the integer score expression
     over aliases a/b, and the blocked join condition."""
@@ -1321,10 +1311,10 @@ def _fs_sql_parts(
     pa, pd_, plen = FS_WEIGHTS["prefix"]
     ta, td, ttol = FS_WEIGHTS["tokens"]
     blk = ", ".join(block_cols)
-    feats = f"""SELECT {blk}, {id_col} AS id, CAST({length_col} AS BIGINT) AS len,
-         lower(substr({text_col}, 1, {plen})) AS pfx,
-         CAST(len({words_sql(text_col)}) AS BIGINT) AS ntok
-  FROM {table}"""
+    feats = f"""SELECT {blk}, doc_id AS id, CAST(n_chars AS BIGINT) AS len,
+         lower(substr(text, 1, {plen})) AS pfx,
+         CAST(len({words_sql()}) AS BIGINT) AS ntok
+  FROM documents"""
     score = f"""CAST(CASE WHEN abs(a.len - b.len) <= {ltol} THEN {la} ELSE {ld} END
             + CASE WHEN a.pfx = b.pfx THEN {pa} ELSE {pd_} END
             + CASE WHEN abs(a.ntok - b.ntok) <= {ttol} THEN {ta} ELSE {td} END
@@ -1337,9 +1327,7 @@ def record_linkage_scores_sql() -> str:
     """DuckDB twin of :func:`record_linkage_scores`: same blocked
     self-join, same integer weights and thresholds (shared fragments:
     :func:`_fs_sql_parts`)."""
-    parts = _fs_sql_parts(
-        "documents", "doc_id", "text", "n_chars", RECORD_LINKAGE_SCORES_BLOCK_COLS
-    )
+    parts = _fs_sql_parts(RECORD_LINKAGE_SCORES_BLOCK_COLS)
     blk = ", ".join(RECORD_LINKAGE_SCORES_BLOCK_COLS)
     blk_a = ", ".join(f"a.{c} AS {c}" for c in RECORD_LINKAGE_SCORES_BLOCK_COLS)
     return f"""
@@ -1414,9 +1402,7 @@ def entity_resolution_clusters_sql() -> str:
     links at the same threshold, recursive-CTE closure (the
     minhash_clusters_sql precedent), same min-id canonicalization and
     singleton attach."""
-    parts = _fs_sql_parts(
-        "documents", "doc_id", "text", "n_chars", ENTITY_RESOLUTION_CLUSTERS_BLOCK_COLS
-    )
+    parts = _fs_sql_parts(ENTITY_RESOLUTION_CLUSTERS_BLOCK_COLS)
     return f"""
 WITH RECURSIVE feats AS (
   {parts["feats"]}

@@ -455,17 +455,17 @@ def sssp_hops(edges: DataFrame, source: int, max_hops: int = SSSP_MAX_HOPS) -> D
     return dist
 
 
-def sssp_hops_sql(edges_sql: str, source: int) -> str:
-    """DuckDB twin of :func:`sssp_hops`: exactly ``max_hops`` BFS rounds
-    unrolled as materialized CTEs. Each round re-expands the WHOLE settled
-    set (not just the frontier) and re-minimizes -- algebraically equal to
+def sssp_hops_sql(edges_sql: str) -> str:
+    """DuckDB twin of :func:`sssp_hops` from node 0: exactly SSSP_MAX_HOPS
+    BFS rounds unrolled as materialized CTEs. Each round re-expands the
+    WHOLE settled set (not just the frontier) and re-minimizes -- algebraically equal to
     the frontier form because settled hop counts are already minimal, and
     bounded per round by |edges| join rows (no path enumeration; a
     WITH RECURSIVE walk would enumerate all bounded walks instead)."""
     parts = [
         f"WITH edges AS MATERIALIZED ({edges_sql})",
         "e AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges WHERE src != dst)",
-        f"r0 AS MATERIALIZED (SELECT CAST({source} AS BIGINT) AS node, "
+        "r0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS node, "
         "CAST(0 AS BIGINT) AS hops)",
     ]
     for i in range(SSSP_MAX_HOPS):

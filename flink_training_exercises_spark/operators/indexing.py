@@ -48,7 +48,7 @@ def inverted_index(docs: DataFrame, max_postings: int = INVERTED_INDEX_MAX_POSTI
     full chain."""
     tokens = _widened(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(words("text"))).alias("token"),
+        F.explode(F.array_distinct(words())).alias("token"),
     )
     w_rank = Window.partitionBy("token").orderBy(F.asc("doc_id"))
     w_all = Window.partitionBy("token")
@@ -70,7 +70,7 @@ def inverted_index(docs: DataFrame, max_postings: int = INVERTED_INDEX_MAX_POSTI
 
 
 def inverted_index_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH tokens AS (
   SELECT DISTINCT doc_id, unnest({w}) AS token FROM documents
@@ -104,7 +104,7 @@ def doc_typicality(docs: DataFrame, min_count: int = DOC_TYPICALITY_MIN_COUNT) -
     both sides shuffle on the same key; no driver-side state. Empty docs
     guard the division explicitly (ANSI)."""
     base = _widened(docs)
-    ws = words("text")
+    ws = words()
     grams = F.when(
         F.size(ws) >= 2,
         F.array_distinct(
@@ -144,7 +144,7 @@ def doc_typicality(docs: DataFrame, min_count: int = DOC_TYPICALITY_MIN_COUNT) -
 
 
 def doc_typicality_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH ws AS (
   SELECT doc_id, {w} AS ws FROM documents
@@ -188,7 +188,7 @@ def frequent_tokens_topk(docs: DataFrame, k: int = FREQUENT_TOKENS_TOPK_K) -> Da
     (group, token) counts -- already |vocab|-bounded, orders of magnitude
     smaller than the corpus -- and every group emits exactly <= k rows."""
     toks = _widened(docs).select(
-        F.col("lang").alias("grp"), F.explode(words("text")).alias("token")
+        F.col("lang").alias("grp"), F.explode(words()).alias("token")
     )
     counts = toks.groupBy("grp", "token").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("grp").orderBy(F.desc("cnt"), F.asc("token"))
@@ -200,7 +200,7 @@ def frequent_tokens_topk(docs: DataFrame, k: int = FREQUENT_TOKENS_TOPK_K) -> Da
 
 
 def frequent_tokens_topk_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH toks AS (
   SELECT lang AS grp, unnest({w}) AS token FROM documents
@@ -272,7 +272,7 @@ def bm25_topk(
     terms = sorted({t for _, t1, t2 in qs for t in (t1, t2)})
     spark = docs.sparkSession
     base = _widened(docs).select(
-        "doc_id", words("text").alias("ws")
+        "doc_id", words().alias("ws")
     )
     totals = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -348,7 +348,7 @@ def bm25_topk_sql() -> str:
         for qid, t1, t2 in BM25_QUERIES
         for pos, t in ((1, t1), (2, t2))
     )
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH base AS (
   SELECT doc_id, {w} AS ws FROM documents
@@ -435,7 +435,7 @@ def collocation_pmi_topk(
     heap per partition, k rows to the driver plan -- never a
     single-partition sort of the vocab-bounded pair table); the final
     row_number window runs over exactly k rows by construction."""
-    base = _widened(docs).select(words("text").alias("ws"))
+    base = _widened(docs).select(words().alias("ws"))
     pairs = base.select(
         F.explode(
             F.when(
@@ -509,7 +509,7 @@ def collocation_pmi_topk(
 def collocation_pmi_topk_sql() -> str:
     """DuckDB twin of :func:`collocation_pmi_topk` -- identical BIGINT
     counts and an identical scalar-by-scalar double expression tree."""
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH base AS (
   SELECT {w} AS ws FROM documents

@@ -85,9 +85,9 @@ def _argmin_cid(v: str, cent_rows: list[tuple[int, list[float]]]) -> Column:
     return F.expr(f"array_min({_dist_structs_sql(v, cent_rows)}).cid")
 
 
-def _probe_structs(v: str, cent_rows: list[tuple[int, list[float]]], nprobe: int) -> Column:
-    """The nprobe nearest (d, cid) structs, ascending -- one F.expr parse."""
-    return F.expr(f"slice(array_sort({_dist_structs_sql(v, cent_rows)}), 1, {nprobe})")
+def _probe_structs(cent_rows: list[tuple[int, list[float]]]) -> Column:
+    """The NPROBE nearest (d, cid) structs of ``qv``, ascending -- one F.expr parse."""
+    return F.expr(f"slice(array_sort({_dist_structs_sql('qv', cent_rows)}), 1, {NPROBE})")
 
 
 def _assign(base: DataFrame, cent_rows: list[tuple[int, list[float]]]) -> DataFrame:
@@ -142,25 +142,24 @@ def _lloyd(train_rows, k: int, iters: int) -> list[tuple[int, list[float]]]:
     return cents
 
 
-def _collect_train(base: DataFrame, train_n: int) -> list:
+def _collect_train(base: DataFrame) -> list:
     """The md5-deterministic bounded training sample (TakeOrdered), collected
     once -- coarse quantizer and PQ codebooks share the same rows."""
     return (
         base.withColumn("bucket", md5_long(F.col("id").cast("string")))
         .orderBy("bucket", "id")
-        .limit(train_n)
+        .limit(TRAIN_N)
         .select("id", "v")
         .collect()
     )
 
 
-def _train_quantizer(
-    base: DataFrame, n_centroids: int, iters: int, train_n: int, train_rows=None
-) -> list[tuple[int, list[float]]]:
-    """md5-deterministic bounded sample (TakeOrdered) -> driver-side Lloyd."""
+def _train_quantizer(base: DataFrame, train_rows=None) -> list[tuple[int, list[float]]]:
+    """md5-deterministic bounded sample (TakeOrdered) -> driver-side Lloyd
+    (K_CENTROIDS centroids, KMEANS_ITERS rounds)."""
     if train_rows is None:
-        train_rows = _collect_train(base, train_n)
-    return _lloyd(train_rows, n_centroids, iters)
+        train_rows = _collect_train(base)
+    return _lloyd(train_rows, K_CENTROIDS, KMEANS_ITERS)
 
 
 def ivf_topk(emb: DataFrame, topk: int = 5, query_mod: int = 25, train_rows=None) -> DataFrame:
@@ -174,8 +173,8 @@ def ivf_topk(emb: DataFrame, topk: int = 5, query_mod: int = 25, train_rows=None
     and the candidate join BROADCASTS the probed queries against the
     assigned corpus on centroid id, so the corpus is never shuffled: one
     map-only assignment scan, one broadcast-join scan."""
-    base = _with_int_vec(emb, "vec_id", "embedding")
-    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N, train_rows)
+    base = _with_int_vec(emb)
+    cents = _train_quantizer(base, train_rows)
     assigned = _assign(base, cents)
     queries = base.where(F.col("id") % query_mod == 0).select(
         F.col("id").alias("qid"), F.col("v").alias("qv"), F.col("nn").alias("qnn")
@@ -184,7 +183,7 @@ def ivf_topk(emb: DataFrame, topk: int = 5, query_mod: int = 25, train_rows=None
         "qid",
         "qv",
         "qnn",
-        F.explode(_probe_structs("qv", cents, NPROBE)).alias("p"),
+        F.explode(_probe_structs(cents)).alias("p"),
     ).select("qid", "qv", "qnn", F.col("p.cid").alias("cid"))
     cand = assigned.join(F.broadcast(probes), "cid").where(F.col("id") != F.col("qid"))
     scored = cand.select(
@@ -199,15 +198,15 @@ def ivf_topk(emb: DataFrame, topk: int = 5, query_mod: int = 25, train_rows=None
 # DuckDB oracle: the same algorithm unrolled as chained CTEs.
 # ---------------------------------------------------------------------------
 
-def _dist_sql(v: str, c: str, dim: int) -> str:
+def _dist_sql(v: str) -> str:
     return (
-        f"list_sum([(({v}[d + 1] - {c}[d + 1]) * ({v}[d + 1] - {c}[d + 1])) "
-        f"for d in generate_series(0, {dim - 1})])"
+        f"list_sum([(({v}[d + 1] - c.c[d + 1]) * ({v}[d + 1] - c.c[d + 1])) "
+        f"for d in generate_series(0, {DIM - 1})])"
     )
 
 
 def ivf_topk_oracle(topk: int = 5, query_mod: int = 25, train_where: str = "") -> str:
-    dist_bc = _dist_sql("b.v", "c.c", DIM)
+    dist_bc = _dist_sql("b.v")
     # train_where restricts only the QUANTIZER SAMPLE (the staleness
     # audit trains on the standing corpus while searching the merged
     # one); empty = sample from the full base, the gated-oracle behavior
@@ -265,7 +264,7 @@ def ivf_topk_oracle(topk: int = 5, query_mod: int = 25, train_where: str = "") -
 ), afin_nn AS (
   SELECT a.id, a.v, a.cid, n.nn FROM afin a JOIN basenn n USING (id)
 )"""
-    dist_qc = _dist_sql("q.qv", "c.c", DIM)
+    dist_qc = _dist_sql("q.qv")
     dot_qa = f"list_sum([q.qv[i] * a.v[i] for i in generate_series(1, {DIM})])"
     search = f"""probes AS (
   SELECT qid, qv, qnn, cid FROM (
@@ -315,7 +314,7 @@ def pq_codebooks(base: DataFrame, train_rows=None) -> list[list[tuple[int, list[
     m times over d-dim slices of the same collected rows)."""
     d = DIM // PQ_M
     if train_rows is None:
-        train_rows = _collect_train(base, TRAIN_N)
+        train_rows = _collect_train(base)
     books = []
     for j in range(PQ_M):
         sub_rows = [{"id": r["id"], "v": list(r["v"])[j * d : (j + 1) * d]} for r in train_rows]
@@ -359,13 +358,13 @@ def _adc_lut(qv: list[int], books: list[list[tuple[int, list[float]]]], d: int) 
     return lut
 
 
-def _adc_score(lut_col: Column, m: int, k_cent: int) -> Column:
-    """Fixed-order m-term ADC sum over a flat LUT column: term_j =
-    lut[j*k + c_j] (1-based element_at). Same j order as the oracle's
+def _adc_score(lut_col: Column) -> Column:
+    """Fixed-order PQ_M-term ADC sum over a flat LUT column: term_j =
+    lut[j*PQ_K + c_j] (1-based element_at). Same j order as the oracle's
     score_terms concatenation."""
     score = None
-    for j in range(m):
-        term = F.element_at(lut_col, F.col(f"c{j}") + (j * k_cent + 1))
+    for j in range(PQ_M):
+        term = F.element_at(lut_col, F.col(f"c{j}") + (j * PQ_K + 1))
         score = term if score is None else score + term
     return score
 
@@ -404,7 +403,7 @@ def pq_topk(emb: DataFrame, train_rows=None) -> DataFrame:
     DuckDB-replayable (driver LUT values are bit-identical to the oracle's
     per-row subspace sums: same sequential dimension-order double folds)."""
     d = DIM // PQ_M
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     books = pq_codebooks(base, train_rows=train_rows)
     codes = pq_encode(base, books)
     q_rows = _collect_queries(base, PQ_TOPK_QUERY_MOD)
@@ -413,7 +412,7 @@ def pq_topk(emb: DataFrame, train_rows=None) -> DataFrame:
         schema="qid BIGINT, lut ARRAY<DOUBLE>",
     )
     pairs = codes.join(F.broadcast(lut_df), F.col("id") != F.col("qid"))
-    score = _adc_score(F.col("lut"), PQ_M, PQ_K)
+    score = _adc_score(F.col("lut"))
     scored = pairs.select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
@@ -536,9 +535,9 @@ def ivf_pq_topk(emb: DataFrame) -> DataFrame:
     scale: one sample extraction + one combined assignment/encode scan +
     one broadcast-join scan of the probed fraction."""
     d = DIM // PQ_M
-    base = _with_int_vec(emb, "vec_id", "embedding")
-    train_rows = _collect_train(base, TRAIN_N)
-    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N, train_rows)
+    base = _with_int_vec(emb)
+    train_rows = _collect_train(base)
+    cents = _train_quantizer(base, train_rows)
     books = pq_codebooks(base, train_rows=train_rows)
     code_cols = [
         _argmin_cid(f"slice(v, {j * d + 1}, {d})", books[j]).alias(f"c{j}")
@@ -559,7 +558,7 @@ def ivf_pq_topk(emb: DataFrame) -> DataFrame:
         probe_rows, schema="qid BIGINT, bucket INT, lut ARRAY<DOUBLE>"
     )
     cand = index.join(F.broadcast(probes), "bucket").where(F.col("id") != F.col("qid"))
-    score = _adc_score(F.col("lut"), PQ_M, PQ_K)
+    score = _adc_score(F.col("lut"))
     scored = cand.select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
@@ -733,11 +732,11 @@ def index_staleness_audit(emb: DataFrame) -> DataFrame:
     from ..functions.hashing import md5_long
     from .similarity import topk_bruteforce
 
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     is_new = md5_long(F.col("vec_id").cast("string")) % 10000 < INDEX_STALENESS_AUDIT_NEW_BP
-    standing = _with_int_vec(emb.where(~is_new), "vec_id", "embedding")
-    stale_rows = _collect_train(standing, TRAIN_N)
-    fresh_rows = _collect_train(base, TRAIN_N)
+    standing = _with_int_vec(emb.where(~is_new))
+    stale_rows = _collect_train(standing)
+    fresh_rows = _collect_train(base)
     flt = F.col("vec_id") % INDEX_STALENESS_AUDIT_QUERY_MOD == 0
     bf = (
         topk_bruteforce(emb, k=INDEX_STALENESS_AUDIT_TOPK, query_filter=flt)

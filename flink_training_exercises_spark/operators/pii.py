@@ -55,19 +55,19 @@ def pii_scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def pii_scrub_sql(table_expr: str, id_col: str, text_expr: str) -> str:
-    """DuckDB twin. ``table_expr`` is a table name or parenthesized subquery;
-    ``text_expr`` a SQL expression for the text. DuckDB regexp_replace needs
-    the explicit 'g' flag (Spark replaces globally by default)."""
-    no_email = f"regexp_replace({text_expr}, '{EMAIL_RE}', '{EMAIL_TAG}', 'g')"
+def pii_scrub_sql() -> str:
+    """DuckDB twin over the ``mails`` view's ``sender | subject | body``
+    text. DuckDB regexp_replace needs the explicit 'g' flag (Spark replaces
+    globally by default)."""
+    no_email = f"regexp_replace(raw, '{EMAIL_RE}', '{EMAIL_TAG}', 'g')"
     clean = f"regexp_replace({no_email}, '{DIGITS_RE}', '{NUM_TAG}', 'g')"
     return f"""
-SELECT {id_col},
-       len(regexp_extract_all({text_expr}, '{EMAIL_RE}')) AS n_emails,
+SELECT message_id,
+       len(regexp_extract_all(raw, '{EMAIL_RE}')) AS n_emails,
        len(regexp_extract_all({no_email}, '{DIGITS_RE}')) AS n_id_runs,
        length({clean}) AS redacted_len,
        {md5_long_sql(clean)} AS redacted_fp
-FROM {table_expr}
+FROM (SELECT message_id, sender || ' | ' || subject || ' | ' || body AS raw FROM mails)
 """
 
 

@@ -22,8 +22,8 @@ def mail_count(mails: DataFrame) -> DataFrame:
     """A1/P6 -- mails per (month, email address) (MailCount.java:49-107)."""
     return (
         mails.select(
-            month_key("time").alias("month"),
-            email_address("sender").alias("email"),
+            month_key().alias("month"),
+            email_address().alias("email"),
         )
         .groupBy("month", "email")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -42,8 +42,8 @@ def member_of_the_month(mails: DataFrame, strategy: str = "window") -> DataFrame
     """
     counts = (
         mails.select(
-            month_key("time").alias("month"),
-            email_address("sender").alias("sender"),
+            month_key().alias("month"),
+            email_address().alias("sender"),
         )
         .where(~F.col("sender").isin(*BOT_ADDRESSES))
         .groupBy("month", "sender")
@@ -73,9 +73,9 @@ def reply_graph(mails: DataFrame) -> DataFrame:
     """
     addressed = mails.select(
         F.col("message_id"),
-        email_address("sender").alias("sender"),
+        email_address().alias("sender"),
         F.col("reply_to"),
-    ).where(~email_address("sender").isin(*BOT_ADDRESSES))
+    ).where(~email_address().isin(*BOT_ADDRESSES))
     replies = addressed.alias("r")
     originals = addressed.alias("o")
     return (

@@ -56,7 +56,7 @@ def pack_sequences(docs: DataFrame, token_budget: int = 4096) -> DataFrame:
     whose PRECEDING cumulative token count is in [i*budget, (i+1)*budget).
     Output one row per bin: (shard, bin_id, n_docs, total_tokens,
     first_doc_id, last_doc_id)."""
-    ws = words("text")
+    ws = words()
     run = (
         Window.partitionBy("shard")
         .orderBy("id")
@@ -89,7 +89,7 @@ def pack_sequences_sql() -> str:
     return f"""
 WITH base AS (
   SELECT source AS shard, doc_id AS id,
-         CAST(len({words_sql('text')}) AS BIGINT) AS n_tokens
+         CAST(len({words_sql()}) AS BIGINT) AS n_tokens
   FROM documents
 ),
 binned AS (
@@ -298,7 +298,7 @@ def length_batches(docs: DataFrame) -> DataFrame:
     bit-identical to the single-window form at any partition count.
 
     Output (batch_id, n_docs, max_tokens, total_tokens, padding_frac)."""
-    ws = words("text")
+    ws = words()
     base = docs.select(F.col("doc_id").alias("id"), F.size(ws).alias("n_tok"))
     wk = Window.partitionBy("n_tok").orderBy("id")
     hist = base.groupBy("n_tok").agg(F.count(F.lit(1)).alias("c"))
@@ -337,7 +337,7 @@ def length_batches(docs: DataFrame) -> DataFrame:
 
 
 def length_batches_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH base AS (
   SELECT doc_id AS id, len({w}) AS n_tok FROM documents

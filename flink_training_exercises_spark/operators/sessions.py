@@ -21,26 +21,19 @@ from ..functions.time import WATERMARK, epoch_ms, ntz_as_utc_instant
 DEFAULT_GAP_MS = 30 * 60 * 1000
 
 
-def _with_session_ids(
-    events: DataFrame,
-    user_col: str,
-    time_col: str,
-    id_col: str,
-    gap_ms: int,
-    payload: dict,
-) -> DataFrame:
-    """Shared session-id assignment (lag-gap mark + running cumsum over the
-    (ev_ms, id) total order). The gap rule -- strictly-greater-than
-    ``gap_ms`` starts a new session -- is gate-critical and must stay
+def _with_session_ids(events: DataFrame, gap_ms: int, payload: dict) -> DataFrame:
+    """Shared session-id assignment per user_id (lag-gap mark + running
+    cumsum over the (ev_ms, event_id) total order). The gap rule --
+    strictly-greater-than ``gap_ms`` starts a new session -- is gate-critical and must stay
     identical between :func:`sessionize` and :func:`session_path_topk`;
     it lives ONLY here, with :func:`_session_sql_prefix` as its one SQL
     twin. ``payload`` maps extra output names to Column expressions."""
-    w = Window.partitionBy(user_col).orderBy("ev_ms", id_col)
+    w = Window.partitionBy("user_id").orderBy("ev_ms", "event_id")
     run = w.rowsBetween(Window.unboundedPreceding, 0)
     base = events.select(
-        F.col(user_col),
-        F.col(id_col),
-        epoch_ms(time_col).alias("ev_ms"),
+        F.col("user_id"),
+        F.col("event_id"),
+        epoch_ms("ts").alias("ev_ms"),
         *[expr.alias(name) for name, expr in payload.items()],
     )
     gap = F.col("ev_ms") - F.lag("ev_ms").over(w)
@@ -49,29 +42,22 @@ def _with_session_ids(
     ).withColumn("session_id", F.sum("is_new").over(run))
 
 
-def _session_sql_prefix(
-    table: str,
-    user_col: str,
-    time_col: str,
-    id_col: str,
-    gap_ms: int,
-    payload_sql: str,
-) -> str:
-    """DuckDB twin of :func:`_with_session_ids`: the base/marked/sid CTE
-    prefix (terminates with the ``sid`` relation) shared by every
-    session-keyed oracle."""
+def _session_sql_prefix(payload_sql: str) -> str:
+    """DuckDB twin of :func:`_with_session_ids` over ``events`` at
+    DEFAULT_GAP_MS: the base/marked/sid CTE prefix (terminates with the
+    ``sid`` relation) shared by every session-keyed oracle."""
     return f"""base AS (
-  SELECT {user_col}, {id_col}, epoch_ms({time_col}) AS ev_ms, {payload_sql}
-  FROM {table}
+  SELECT user_id, event_id, epoch_ms(ts) AS ev_ms, {payload_sql}
+  FROM events
 ),
 marked AS (
   SELECT *, CASE WHEN ev_ms - lag(ev_ms) OVER w IS NULL
-                   OR ev_ms - lag(ev_ms) OVER w > {gap_ms} THEN 1 ELSE 0 END AS is_new
+                   OR ev_ms - lag(ev_ms) OVER w > {DEFAULT_GAP_MS} THEN 1 ELSE 0 END AS is_new
   FROM base
-  WINDOW w AS (PARTITION BY {user_col} ORDER BY ev_ms, {id_col})
+  WINDOW w AS (PARTITION BY user_id ORDER BY ev_ms, event_id)
 ),
 sid AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY {user_col} ORDER BY ev_ms, {id_col}
+  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ev_ms, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
   FROM marked
 )"""
@@ -82,12 +68,7 @@ def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
     session_end_ms, n_events, total_value). One shuffle on user_id; the
     cumulative-sum session id needs no second shuffle (same partitioning)."""
     with_sid = _with_session_ids(
-        events,
-        "user_id",
-        "ts",
-        "event_id",
-        gap_ms,
-        {"cents": F.round(F.col("value") * 100).cast("bigint")},
+        events, gap_ms, {"cents": F.round(F.col("value") * 100).cast("bigint")}
     )
     return (
         with_sid.groupBy("user_id", "session_id")
@@ -109,14 +90,7 @@ def sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
 
 
 def sessionize_sql() -> str:
-    prefix = _session_sql_prefix(
-        "events",
-        "user_id",
-        "ts",
-        "event_id",
-        DEFAULT_GAP_MS,
-        "CAST(round(value * 100) AS BIGINT) AS cents",
-    )
+    prefix = _session_sql_prefix("CAST(round(value * 100) AS BIGINT) AS cents")
     return f"""
 WITH {prefix}
 SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
@@ -131,7 +105,7 @@ FROM sid GROUP BY user_id, session_id
 
 def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Streaming twin via native session_window (merging gap sessions)."""
-    ts = ntz_as_utc_instant("ts").alias("ts_i")
+    ts = ntz_as_utc_instant().alias("ts_i")
     gap = f"{DEFAULT_GAP_MS // 60000} minutes"
     return (
         events.select(ts, F.col("user_id"))
@@ -250,9 +224,7 @@ def session_path_topk(
     paths, orders of magnitude smaller than the event log -- partitioned
     by path length, emitting <= k rows per length (the
     frequent_tokens_topk shape)."""
-    sid = _with_session_ids(
-        events, "user_id", "ts", "event_id", gap_ms, {"etype": F.col("event_type")}
-    )
+    sid = _with_session_ids(events, gap_ms, {"etype": F.col("event_type")})
     wn = Window.partitionBy("user_id", "session_id").orderBy("ev_ms", "event_id")
     truncated = sid.withColumn("rn", F.row_number().over(wn)).where(
         F.col("rn") <= max_events
@@ -283,9 +255,7 @@ def session_path_topk(
 def session_path_topk_sql() -> str:
     """DuckDB twin of :func:`session_path_topk` (string_agg ORDER BY rn ==
     the sort_array(collect_list(struct)) form)."""
-    prefix = _session_sql_prefix(
-        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "event_type AS etype"
-    )
+    prefix = _session_sql_prefix("event_type AS etype")
     return f"""
 WITH {prefix},
 tr AS (
@@ -419,9 +389,7 @@ def concurrency_profile_sql() -> str:
     running sum over the same collapsed boundary deltas (the bucketed
     two-phase form is plan-level only -- levels and segments are equal by
     construction, which is exactly what the differential pins)."""
-    prefix = _session_sql_prefix(
-        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "1 AS one"
-    )
+    prefix = _session_sql_prefix("1 AS one")
     sessions_sql = f"""WITH {prefix}
   SELECT user_id, session_id, min(ev_ms) AS s, max(ev_ms) + {DEFAULT_GAP_MS} AS e
   FROM sid GROUP BY 1, 2"""
@@ -654,10 +622,7 @@ def session_cooccurrence_lift(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -
     localCheckpoint'd once for its four consumers (session total,
     per-type counts, both self-join sides), so the sessionization
     windows run exactly once per query."""
-    sid = _with_session_ids(
-        events, "user_id", "ts", "event_id", gap_ms,
-        {"t": F.col("event_type")},
-    )
+    sid = _with_session_ids(events, gap_ms, {"t": F.col("event_type")})
     basket = (
         sid.select("user_id", "session_id", "t").distinct()
         .select(
@@ -712,9 +677,7 @@ def session_cooccurrence_lift_sql() -> str:
     """DuckDB twin of :func:`session_cooccurrence_lift`: the shared
     session-id CTE prefix, the same basket distinct, self-join, and
     integer lift."""
-    prefix = _session_sql_prefix(
-        "events", "user_id", "ts", "event_id", DEFAULT_GAP_MS, "event_type AS t"
-    )
+    prefix = _session_sql_prefix("event_type AS t")
     return f"""
 WITH {prefix},
 basket AS (

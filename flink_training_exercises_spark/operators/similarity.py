@@ -33,24 +33,21 @@ LSH_PLANES = 8
 _PLANE_PARAMS = [(3, 0), (5, 1), (7, 0), (11, 1), (13, 0), (17, 1), (19, 0), (23, 1)]
 
 
-def int_embedding(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: F.floor(x.cast("double") * F.expr(EMB_SCALE)).cast("bigint"))
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, v: acc + v
     )
 
 
-def _with_int_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _with_int_vec(df: DataFrame) -> DataFrame:
+    """(id, v, nn): vec_id, int64 floor(embedding * EMB_SCALE), its norm."""
     # widen_scan: a small local parquet arrives as ONE split, which would
     # serialize every vector-arithmetic stage (and the nested-loop probe
     # side of the brute-force twin) onto one core; no-op at cluster scale
     from ..sources.loaders import widen_scan
 
-    v = widen_scan(df).select(F.col(id_col).alias("id"), int_embedding(vec_col).alias("v"))
+    q = lambda x: F.floor(x.cast("double") * F.expr(EMB_SCALE)).cast("bigint")  # noqa: E731
+    v = widen_scan(df).select(F.col("vec_id").alias("id"), F.transform("embedding", q).alias("v"))
     return v.withColumn("nn", _dot(F.col("v"), F.col("v")))
 
 
@@ -78,7 +75,7 @@ def topk_bruteforce(emb: DataFrame, k: int = 5, query_filter: Column | None = No
     """Exact top-k neighbors by cosine for each query vector (default: all).
     Ties broken by neighbor id for determinism. Output
     (query_id, neighbor_id, rank, cosine)."""
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     queries = base.where(query_filter) if query_filter is not None else base
     q, c = queries.alias("q"), base.alias("c")
     scored = q.crossJoin(c).where(F.col("q.id") != F.col("c.id")).select(
@@ -94,7 +91,7 @@ def topk_bruteforce(emb: DataFrame, k: int = 5, query_filter: Column | None = No
 def cosine_neardup_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold -- the embedding
     near-duplicate filter of a corpus pipeline."""
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, F.col("a.id") < F.col("b.id"))
@@ -131,7 +128,7 @@ def topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket,
     then exact cosine ranking. Same output shape as topk_bruteforce."""
-    base = _with_int_vec(emb, "vec_id", "embedding").withColumn(
+    base = _with_int_vec(emb).withColumn(
         "bucket", lsh_bucket(F.col("v"), dim)
     )
     queries = base.where(query_filter) if query_filter is not None else base
@@ -162,7 +159,7 @@ def topk_bruteforce_pandas(
 
     BIT-IDENTICAL to the Column-expression brute force (and thus shares its
     SQL oracle in the gate): vectors are quantized exactly like
-    ``int_embedding`` (floor(x*1e6) -> int64; the int64 matmul is exact --
+    ``_with_int_vec`` (floor(x*1e6) -> int64; the int64 matmul is exact --
     64 dims x 1e12 << 2^63) and the cosine is the same IEEE expression
     double(dot) / (sqrt(double(nn_q)) * sqrt(double(nn_c))). Per-batch
     top-k uses the same total order (cosine DESC, id ASC) as the global
@@ -238,7 +235,7 @@ def cosine_neardup_pairs_lsh(emb: DataFrame, threshold: float = 0.4, dim: int = 
     replicates the identical banding, and the all-pairs form remains the
     small-sf exact twin."""
     r = LSH_PLANES // NEARDUP_BANDS
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     band_keys = [
         # fused key: band index in the high bits, bucket (< 2^r) in the low
         (F.lit(b * (1 << r)) + lsh_bucket(F.col("v"), dim, planes=_PLANE_PARAMS[b * r : (b + 1) * r]))
@@ -290,7 +287,7 @@ def random_projection(emb: DataFrame) -> DataFrame:
     vectors are the cheap input for downstream ANN (shorter dot products)
     or visualization; at 100 TB this is a map-only pass whose cost is
     out_dims * in_dims multiply-adds per row."""
-    base = _with_int_vec(emb, "vec_id", "embedding")
+    base = _with_int_vec(emb)
     comps = [
         F.aggregate(
             F.transform(
@@ -347,7 +344,7 @@ def quantize_int8(df: DataFrame) -> DataFrame:
     Scale shape: map-only (one projection, no shuffle, no state) --
     quantization composes with any downstream index build at scan speed.
     """
-    v = _with_int_vec(df, "vec_id", "embedding")
+    v = _with_int_vec(df)
     sq = F.sqrt(F.col("nn").cast("double"))
     q = F.when(
         F.col("nn") > 0,

@@ -154,8 +154,8 @@ def hll_fold_sql(p: int = HLL_P) -> str:
     )
 
 
-def hll_distinct(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
-    """Per-group HyperLogLog distinct estimate next to the exact twin.
+def hll_distinct(df: DataFrame) -> DataFrame:
+    """Per-event_type HyperLogLog distinct user_id estimate next to the exact twin.
 
     Plan shape (the 100 TB story): the register build is ONE shuffle on
     (group, bucket) with map-side combine -- each mapper's partial state is
@@ -168,10 +168,10 @@ def hll_distinct(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
     Fixed-size state: 512 registers * n_groups; the final fold to S is a
     512-row-per-group aggregation, negligible at any corpus size.
     """
-    cells = hll_cells(df.select(F.col(group_col).alias("grp"), key_col), key_col, "grp")
+    cells = hll_cells(df.select(F.col("event_type").alias("grp"), "user_id"), "user_id", "grp")
     regs = cells.groupBy("grp", "bucket").agg(F.max("rho").alias("m_j"))
     exact = (
-        df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("k"))
+        df.select(F.col("event_type").alias("grp"), F.col("user_id").alias("k"))
         .groupBy("grp")
         .agg(F.count_distinct("k").alias("n_exact"))
     )
@@ -182,7 +182,7 @@ def hll_distinct(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
         hll_fold(regs, "grp")
         .join(F.broadcast(exact), "grp")
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("event_type"),
             "n_exact",
             F.round(est, 4).alias("hll_estimate"),
             F.round(F.abs(est - F.col("n_exact")) / F.col("n_exact"), 6).alias(
@@ -193,22 +193,22 @@ def hll_distinct(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
     )
 
 
-def hll_distinct_oracle(table: str, key_col: str, group_col: str) -> str:
+def hll_distinct_oracle() -> str:
     """DuckDB twin of :func:`hll_distinct`, bit-for-bit (same md5 hash,
     same integer registers, same single-literal float fold)."""
     num = hll_numerator_lit()
     return f"""
 WITH regs AS (
-  SELECT {group_col} AS grp, bucket, max(rho) AS m_j
-  FROM ({hll_cells_sql(table, key_col, group_col)}) GROUP BY 1, 2
+  SELECT event_type AS grp, bucket, max(rho) AS m_j
+  FROM ({hll_cells_sql("events", "user_id", "event_type")}) GROUP BY 1, 2
 ), folded AS (
   SELECT grp, {hll_fold_sql()} AS s, count(*) AS n_buckets
   FROM regs GROUP BY 1
 ), exact AS (
-  SELECT {group_col} AS grp, count(DISTINCT {key_col}) AS n_exact
-  FROM {table} GROUP BY 1
+  SELECT event_type AS grp, count(DISTINCT user_id) AS n_exact
+  FROM events GROUP BY 1
 )
-SELECT f.grp AS {group_col},
+SELECT f.grp AS event_type,
        e.n_exact,
        round({num} / s, 4) AS hll_estimate,
        round(abs({num} / s - e.n_exact) / e.n_exact, 6) AS rel_err,
@@ -226,12 +226,12 @@ CMS_WIDTH = 1024
 _CMS_PARAMS = hash_params(CMS_DEPTH, seed=0xC0FFEE)
 
 
-def cms_cells(df: DataFrame, key: str, *keep: str, width: int = CMS_WIDTH) -> DataFrame:
+def cms_cells(df: DataFrame, *keep: str, width: int = CMS_WIDTH) -> DataFrame:
     """The Count-Min cells of every row: one (keep..., r, bucket) row per
-    hash row r of ``_CMS_PARAMS``, bucket = permuted md5(key) mod width.
+    hash row r of ``_CMS_PARAMS``, bucket = permuted md5(k) mod width.
     A cell's count is the sum over the rows landing in it;
     :func:`cms_cells_sql` is the DuckDB twin."""
-    base = md5_long(F.col(key).cast("string"))
+    base = md5_long(F.col("k").cast("string"))
     cells = F.array(
         *[
             F.struct(
@@ -246,9 +246,9 @@ def cms_cells(df: DataFrame, key: str, *keep: str, width: int = CMS_WIDTH) -> Da
     )
 
 
-def cms_cells_sql(source: str, key: str, *keep: str, width: int = CMS_WIDTH) -> str:
+def cms_cells_sql(source: str, *keep: str, width: int = CMS_WIDTH) -> str:
     """DuckDB twin of :func:`cms_cells` over the relation ``source``."""
-    base = md5_long_sql(f"CAST({key} AS VARCHAR)")
+    base = md5_long_sql("CAST(k AS VARCHAR)")
     cols = "".join(f"{c}, " for c in keep)
     return " UNION ALL ".join(
         f"SELECT {cols}CAST({r} AS BIGINT) AS r, "
@@ -260,11 +260,9 @@ def cms_cells_sql(source: str, key: str, *keep: str, width: int = CMS_WIDTH) -> 
 COUNTMIN_FREQ_TOP_K = 20
 
 
-def countmin_freq(
-    counts: DataFrame, key_col: str, count_col: str, top_k: int = COUNTMIN_FREQ_TOP_K
-) -> DataFrame:
+def countmin_freq(counts: DataFrame, top_k: int = COUNTMIN_FREQ_TOP_K) -> DataFrame:
     """Count-Min frequency estimates for the ``top_k`` exact heavy hitters,
-    built from a pre-aggregated (key, count) relation.
+    built from a pre-aggregated (token, cnt) relation.
 
     Building from the AGGREGATED vocabulary -- not the raw token stream --
     is the classic CMS-from-partials identity (the sketch of a sum is the
@@ -279,9 +277,9 @@ def countmin_freq(
     map-side-combined shuffle (the corpus scan), and everything after is
     constant-size. The exact top-k probe set is the audit twin.
     """
-    kc = counts.select(F.col(key_col).alias("k"), F.col(count_col).alias("cnt"))
+    kc = counts.select(F.col("token").alias("k"), "cnt")
     sketch = (
-        cms_cells(kc, "k", "cnt")
+        cms_cells(kc, "cnt")
         .groupBy("r", "bucket")
         .agg(F.sum("cnt").alias("cell_sum"))
     )
@@ -294,13 +292,13 @@ def countmin_freq(
         "rk", F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("k")))
     )
     est = (
-        cms_cells(probes, "k", "k", "cnt", "rk")
+        cms_cells(probes, "k", "cnt", "rk")
         .join(F.broadcast(sketch), ["r", "bucket"])
         .groupBy("k", "cnt", "rk")
         .agg(F.min("cell_sum").alias("est_cnt"))
     )
     return est.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("token"),
         F.col("cnt").alias("exact_cnt"),
         "est_cnt",
         (F.col("est_cnt") - F.col("cnt")).alias("overcount"),
@@ -310,14 +308,14 @@ def countmin_freq(
     )
 
 
-def countmin_freq_oracle(counts_cte: str, key_col: str, count_col: str) -> str:
-    """DuckDB twin of :func:`countmin_freq` over a ``counts`` CTE named by
-    ``counts_cte`` (must expose ``{key_col}``, ``{count_col}``)."""
+def countmin_freq_oracle() -> str:
+    """DuckDB twin of :func:`countmin_freq` over a ``counts`` CTE of
+    (token, cnt)."""
     return f"""
 kc AS (
-  SELECT {key_col} AS k, {count_col} AS cnt FROM {counts_cte}
+  SELECT token AS k, cnt AS cnt FROM counts
 ), cells AS (
-  {cms_cells_sql("kc", "k", "k", "cnt")}
+  {cms_cells_sql("kc", "k", "cnt")}
 ), sketch AS (
   SELECT r, bucket, sum(cnt) AS cell_sum FROM cells GROUP BY 1, 2
 ), probes AS (
@@ -334,7 +332,7 @@ kc AS (
   FROM probe_cells pc JOIN sketch s USING (r, bucket)
   GROUP BY 1, 2, 3
 )
-SELECT k AS {key_col}, cnt AS exact_cnt, est_cnt,
+SELECT k AS token, cnt AS exact_cnt, est_cnt,
        est_cnt - cnt AS overcount, rk AS rank
 FROM est
 """
@@ -348,14 +346,14 @@ ZORDER_BITS = 16
 ZORDER_SHARDS = 64
 
 
-def _interleave_terms(x_expr: str, y_expr: str, shl, shr, bits: int) -> str:
-    """The 2*bits-term Morton interleave, generated from ONE loop so the
-    Spark and DuckDB forms can never drift; ``shl``/``shr`` format the
-    engine's shift syntax."""
+def _interleave_terms(x_expr: str, shl, shr) -> str:
+    """The 2*ZORDER_BITS-term Morton interleave of ``x_expr`` and ``zy``,
+    generated from ONE loop so the Spark and DuckDB forms can never drift;
+    ``shl``/``shr`` format the engine's shift syntax."""
     terms = []
-    for k in range(bits):
+    for k in range(ZORDER_BITS):
         terms.append(shl(f"({shr(x_expr, k)} & 1)", 2 * k))
-        terms.append(shl(f"({shr(y_expr, k)} & 1)", 2 * k + 1))
+        terms.append(shl(f"({shr('zy', k)} & 1)", 2 * k + 1))
     return " + ".join(terms)
 
 
@@ -397,7 +395,7 @@ def zorder_layout(docs: DataFrame) -> DataFrame:
         F.expr(x).alias("zx"),
         (y_hash % (mask + 1)).alias("zy"),
     )
-    z = _interleave_terms("zx", "zy", _shl_spark, _shr_spark, ZORDER_BITS)
+    z = _interleave_terms("zx", _shl_spark, _shr_spark)
     shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     return pre.select(
         "doc_id",
@@ -413,18 +411,18 @@ def zorder_layout(docs: DataFrame) -> DataFrame:
     )
 
 
-def zorder_layout_oracle(table: str) -> str:
+def zorder_layout_oracle() -> str:
     """DuckDB twin of :func:`zorder_layout`."""
     mask = (1 << ZORDER_BITS) - 1
     y = md5_long_sql("source")
-    z = _interleave_terms("zx", "zy", _shl_duck, _shr_duck, ZORDER_BITS)
+    z = _interleave_terms("zx", _shl_duck, _shr_duck)
     shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     return f"""
 WITH pre AS (
   SELECT doc_id,
          least(CAST(n_chars AS BIGINT), {mask}) AS zx,
          ({y}) % {mask + 1} AS zy
-  FROM {table}
+  FROM documents
 ), z AS (
   SELECT doc_id, zx, zy, CAST({z} AS BIGINT) AS zaddr FROM pre
 )
@@ -478,13 +476,13 @@ def hll_merge_demo(
     )
 
 
-def hll_merge_demo_oracle(table: str, key_col: str, shard_col: str) -> str:
-    """DuckDB twin of :func:`hll_merge_demo`."""
+def hll_merge_demo_oracle() -> str:
+    """DuckDB twin of :func:`hll_merge_demo` over events."""
     fold = f"round({hll_numerator_lit()} / ({hll_fold_sql()}), 4)"
     return f"""
 WITH rows_ AS (
-  SELECT {shard_col} % {HLL_MERGE_DEMO_N_SHARDS} AS shard, {key_col} FROM {table}
-), rho AS ({hll_cells_sql("rows_", key_col, "shard")}
+  SELECT event_id % {HLL_MERGE_DEMO_N_SHARDS} AS shard, user_id FROM events
+), rho AS ({hll_cells_sql("rows_", "user_id", "shard")}
 ), per_shard AS (
   SELECT shard, bucket, max(rho) AS m_j FROM rho GROUP BY 1, 2
 ), merged AS (
@@ -493,7 +491,7 @@ WITH rows_ AS (
   SELECT bucket, max(rho) AS m_j FROM rho GROUP BY 1
 ), m_est AS (SELECT {fold} AS merged_estimate FROM merged),
 d_est AS (SELECT {fold} AS direct_estimate FROM direct),
-exact AS (SELECT count(DISTINCT {key_col}) AS n_exact FROM {table})
+exact AS (SELECT count(DISTINCT user_id) AS n_exact FROM events)
 SELECT CAST({HLL_MERGE_DEMO_N_SHARDS} AS BIGINT) AS n_shards,
        merged_estimate, direct_estimate,
        merged_estimate = direct_estimate AS est_equal,
@@ -558,7 +556,7 @@ def zonemap_pruning_audit(docs: DataFrame) -> DataFrame:
     z = zorder_layout(docs)
     rng = z.agg(F.min("zx").alias("_mn"), F.max("zx").alias("_mx"))
     sxe = f"(((zx - _mn) * {mask}) div greatest(_mx - _mn, 1))"
-    sz = _interleave_terms(sxe, "zy", _shl_spark, _shr_spark, ZORDER_BITS)
+    sz = _interleave_terms(sxe, _shl_spark, _shr_spark)
     lay = lambda name, shard: F.struct(
         F.lit(name).alias("layout"), shard.alias("shard")
     )
@@ -604,9 +602,9 @@ def zonemap_pruning_audit_sql() -> str:
     shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     naive = f"{md5_long_sql('CAST(doc_id AS VARCHAR)')} % {ZORDER_SHARDS}"
     sxe = f"(((zx - _mn) * {mask}) // greatest(_mx - _mn, 1))"
-    sz = _interleave_terms(sxe, "zy", _shl_duck, _shr_duck, ZORDER_BITS)
+    sz = _interleave_terms(sxe, _shl_duck, _shr_duck)
     return f"""
-WITH zl AS ({zorder_layout_oracle('documents')}),
+WITH zl AS ({zorder_layout_oracle()}),
 rng AS (SELECT min(zx) AS _mn, max(zx) AS _mx FROM zl),
 u AS (
   SELECT zx, zy, s.layout AS layout, s.shard AS shard
@@ -645,13 +643,12 @@ HISTOGRAM_MERGE_DEMO_N_SHARDS = 4
 HISTOGRAM_MERGE_DEMO_N_BINS = 20
 
 
-def histogram_merge_demo(
-    df: DataFrame, value_col: str, shard_col: str, n_shards: int = HISTOGRAM_MERGE_DEMO_N_SHARDS
-) -> DataFrame:
-    """The ADDITIVE merge law, companion to :func:`hll_merge_demo`'s
-    max-merge: equi-width histograms over FIXED global edges merge by
-    per-bin count addition, so per-shard histograms summed must equal the
-    histogram built directly over all rows -- exactly, not approximately.
+def histogram_merge_demo(df: DataFrame, n_shards: int = HISTOGRAM_MERGE_DEMO_N_SHARDS) -> DataFrame:
+    """The ADDITIVE merge law over events' value sharded by event_id,
+    companion to :func:`hll_merge_demo`'s max-merge: equi-width histograms
+    over FIXED global edges merge by per-bin count addition, so per-shard
+    histograms summed must equal the histogram built directly over all
+    rows -- exactly, not approximately.
     This is what lets a 1000-executor profile job (or a per-day series)
     combine kilobyte bin vectors instead of re-shuffling raw values, and
     it is the law ``value_histogram``'s production use depends on.
@@ -676,8 +673,8 @@ def histogram_merge_demo(
     <= n_bins-row merged table is materialized once for its two consumers
     (equality check + quantile walk), and the exact median is one more
     pass. Four corpus passes total, every shuffle vocabulary-bounded."""
-    cents = F.round(F.col(value_col) * 100).cast("bigint")
-    base = df.select(cents.alias("c"), (F.col(shard_col) % n_shards).alias("shard"))
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    base = df.select(cents.alias("c"), (F.col("event_id") % n_shards).alias("shard"))
     edges = base.agg(
         F.min("c").alias("lo"),
         F.max("c").alias("hi"),
@@ -724,7 +721,7 @@ def histogram_merge_demo(
     )
     exact = df.agg(
         F.expr(
-            f"percentile(CAST(round({value_col} * 100) AS BIGINT), 0.5e0)"
+            "percentile(CAST(round(value * 100) AS BIGINT), 0.5e0)"
         ).alias("exact_p50_cents")
     )
     return (
@@ -740,15 +737,15 @@ def histogram_merge_demo(
     )
 
 
-def histogram_merge_demo_oracle(table: str, value_col: str, shard_col: str) -> str:
+def histogram_merge_demo_oracle() -> str:
     """DuckDB twin of :func:`histogram_merge_demo` -- identical integer bin
     rule ((c - lo) div width, width = (hi - lo) div n_bins + 1, last bin
     clamped) and the same quantile walk."""
     return f"""
 WITH base AS (
-  SELECT CAST(round({value_col} * 100) AS BIGINT) AS c,
-         {shard_col} % {HISTOGRAM_MERGE_DEMO_N_SHARDS} AS shard
-  FROM {table}
+  SELECT CAST(round(value * 100) AS BIGINT) AS c,
+         event_id % {HISTOGRAM_MERGE_DEMO_N_SHARDS} AS shard
+  FROM events
 ),
 edges AS (
   SELECT min(c) AS lo, max(c) AS hi, CAST(count(*) AS BIGINT) AS n_rows FROM base
@@ -786,9 +783,9 @@ est AS (
   FROM cum WHERE cum * 2 >= n_rows
 ),
 exact AS (
-  SELECT quantile_cont(CAST(round({value_col} * 100) AS BIGINT), 0.5e0)
+  SELECT quantile_cont(CAST(round(value * 100) AS BIGINT), 0.5e0)
            AS exact_p50_cents
-  FROM {table}
+  FROM events
 )
 SELECT CAST({HISTOGRAM_MERGE_DEMO_N_SHARDS} AS BIGINT) AS n_shards, CAST({HISTOGRAM_MERGE_DEMO_N_BINS} AS INT) AS n_bins,
        n_diff = 0 AS hist_equal, est_p50_cents, exact_p50_cents
@@ -827,7 +824,7 @@ def join_cardinality_estimate(r_counts: DataFrame, s_counts: DataFrame) -> DataF
 
     def sketch(counts):
         return (
-            cms_cells(counts, "k", "cnt")
+            cms_cells(counts, "cnt")
             .groupBy("r", "bucket")
             .agg(F.sum("cnt").alias("cell_sum"))
         )
@@ -850,14 +847,14 @@ def join_cardinality_estimate(r_counts: DataFrame, s_counts: DataFrame) -> DataF
     )
 
 
-def join_cardinality_estimate_sql(r_sql: str, s_sql: str) -> str:
-    """DuckDB twin of :func:`join_cardinality_estimate`; ``r_sql`` /
-    ``s_sql`` must each select (k, cnt)."""
+def join_cardinality_estimate_sql() -> str:
+    """DuckDB twin of :func:`join_cardinality_estimate` over the view-user x
+    click-user join of events."""
     return f"""
-WITH rc AS MATERIALIZED ({r_sql}),
-sc AS MATERIALIZED ({s_sql}),
-r_cells AS ({cms_cells_sql('rc', 'k', 'cnt')}),
-s_cells AS ({cms_cells_sql('sc', 'k', 'cnt')}),
+WITH rc AS MATERIALIZED (SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt FROM events WHERE event_type = 'view' GROUP BY 1),
+sc AS MATERIALIZED (SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt FROM events WHERE event_type = 'click' GROUP BY 1),
+r_cells AS ({cms_cells_sql('rc', 'cnt')}),
+s_cells AS ({cms_cells_sql('sc', 'cnt')}),
 r_sketch AS (
   SELECT r, bucket, CAST(sum(cnt) AS BIGINT) AS ra FROM r_cells GROUP BY 1, 2
 ),
@@ -921,7 +918,7 @@ def approx_topk_shard_union(
     shard = md5_long(F.col("doc_id").cast("string")) % n_shards
     toks = (
         _widened(docs)
-        .select(shard.alias("shard"), F.explode(words("text")).alias("w"))
+        .select(shard.alias("shard"), F.explode(words()).alias("w"))
         .groupBy("shard", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
@@ -959,7 +956,7 @@ def approx_topk_shard_union_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT shard, w, CAST(count(*) AS BIGINT) AS cnt FROM (
-    SELECT {shard} AS shard, unnest({words_sql('text')}) AS w FROM documents
+    SELECT {shard} AS shard, unnest({words_sql()}) AS w FROM documents
   ) GROUP BY 1, 2
 ),
 ranked AS (
@@ -1097,7 +1094,7 @@ def hilbert_pruning_audit(docs: DataFrame) -> DataFrame:
         "zx", "zy", f"{sxe} AS sx"
     )
     h = hilbert_index(scaled, "sx", "zy")
-    sz = _interleave_terms("sx", "zy", _shl_spark, _shr_spark, ZORDER_BITS)
+    sz = _interleave_terms("sx", _shl_spark, _shr_spark)
     lay = lambda name, shard: F.struct(
         F.lit(name).alias("layout"), shard.alias("shard")
     )
@@ -1155,13 +1152,13 @@ def hilbert_pruning_audit_sql() -> str:
     mask = (1 << ZORDER_BITS) - 1
     shard_shift = 2 * ZORDER_BITS - (ZORDER_SHARDS.bit_length() - 1)
     sxe = f"(((zx - _mn) * {mask}) // greatest(_mx - _mn, 1))"
-    sz = _interleave_terms("sx", "zy", _shl_duck, _shr_duck, ZORDER_BITS)
+    sz = _interleave_terms("sx", _shl_duck, _shr_duck)
     scaled = (
         f"SELECT zx, zy, {sxe} AS sx FROM zl, rng"
     )
     hil = hilbert_index_sql(scaled, ["zx", "zy", "sx"], "sx", "zy")
     return f"""
-WITH zl AS ({zorder_layout_oracle('documents')}),
+WITH zl AS ({zorder_layout_oracle()}),
 rng AS (SELECT min(zx) AS _mn, max(zx) AS _mx FROM zl),
 hil AS ({hil}),
 u AS (
@@ -1398,7 +1395,7 @@ def hll_intersection_estimate(
     (~0.709) differs slightly from alpha_512's base -- a constant-factor
     bias tolerated BY DESIGN in this graded audit, and irrelevant to
     parity because both engines fold the identical literal."""
-    ws = words("text")
+    ws = words()
     flagged = (
         docs.select(
             F.col("doc_id").alias("id"),
@@ -1468,7 +1465,7 @@ def hll_intersection_estimate_sql() -> str:
     flags, register build, max-of-maxes union merge, single-literal
     float folds, and one-round inclusion-exclusion."""
     num = hll_numerator_lit(HLL_INTERSECTION_ESTIMATE_P)
-    ws = words_sql("text")
+    ws = words_sql()
     s_expr = hll_fold_sql(HLL_INTERSECTION_ESTIMATE_P)
     return f"""
 WITH flagged AS (

@@ -45,7 +45,7 @@ def token_count(docs: DataFrame) -> DataFrame:
     (letter runs / digit runs / single symbols -- the GPT-2 pattern's
     skeleton, identical semantics in Java regex and RE2)."""
     docs = _widened(docs)
-    w = words("text")
+    w = words()
     return docs.select(
         F.col("doc_id"),
         # bigint casts: width-align with the oracle's int64 (driver
@@ -66,7 +66,7 @@ def token_count(docs: DataFrame) -> DataFrame:
 
 
 def token_count_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 SELECT doc_id,
        len(w) AS n_tokens,
@@ -83,7 +83,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     word length (x1000, floored -- integer-exact), plus a 0-100 composite."""
     docs = _widened(docs)
     text = F.col("text")
-    w = words("text")
+    w = words()
     n_chars = F.length(text)
     n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
     stop_arr = F.array(*[F.lit(s) for s in dict.fromkeys(STOP_WORDS)])
@@ -109,7 +109,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
 
 def quality_score_sql() -> str:
     stop_list = ", ".join(f"'{s}'" for s in dict.fromkeys(STOP_WORDS))
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH base AS (
   SELECT doc_id,
@@ -143,7 +143,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
     swaps in fastText/CLD3 via mapInPandas; the heuristic IS the operator
     contract here so the oracle can replicate it."""
     docs = _widened(docs)
-    w = words("text")
+    w = words()
 
     def contains(markers):
         return lambda x: F.array_contains(markers, x)
@@ -165,7 +165,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 
 def lang_id_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     hit_exprs = ", ".join(
         "len([x for x in w if x IN ({m})]) AS hits_{lang}".format(
             m=", ".join(f"'{m}'" for m in LANG_MARKERS[lang]), lang=lang
@@ -217,7 +217,7 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     hash, so the negligible collision behavior is differential-safe); ratios
     are int/int divisions -- bit-identical cross-engine."""
     docs = _widened(docs)
-    w = words("text")
+    w = words()
     levels = [
         docs.select(
             F.col("doc_id"),
@@ -267,7 +267,7 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
 
 
 def repetition_metrics_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     gram2 = "list_transform(range(1, len(w)), i -> concat_ws(' ', w[i], w[i+1]))"
     gram5 = (
         "list_transform(range(1, len(w) - 3), "
@@ -344,7 +344,7 @@ def bpe_pair_counts(docs: DataFrame, min_weight: int = BPE_PAIR_COUNTS_MIN_WEIGH
     vocab weighted by frequency, never over the corpus. This is the
     standard trick that makes BPE training corpus-size-independent after
     one counting pass."""
-    toks = _widened(docs).select(F.explode(words("text")).alias("word"))
+    toks = _widened(docs).select(F.explode(words()).alias("word"))
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
     pairs = freq.where(F.length("word") >= 2).select(
         F.explode(
@@ -363,7 +363,7 @@ def bpe_pair_counts(docs: DataFrame, min_weight: int = BPE_PAIR_COUNTS_MIN_WEIGH
 
 
 def bpe_pair_counts_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH words AS (
   SELECT unnest({w}) AS word FROM documents
@@ -402,7 +402,7 @@ def vocab_oov_rate(
     oov_rate NULL, keep=false). Ratio = single division of exact BIGINTs
     (bit-identical across engines); no float aggregation anywhere."""
     base = _widened(docs)
-    toks = base.select(F.col("doc_id"), F.explode(words("text")).alias("token"))
+    toks = base.select(F.col("doc_id"), F.explode(words()).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -440,7 +440,7 @@ def vocab_oov_rate(
 
 
 def vocab_oov_rate_sql() -> str:
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH toks AS MATERIALIZED (
   SELECT doc_id, unnest({w}) AS token FROM documents
@@ -497,7 +497,7 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     collect of exactly ONE argmax row (the trained artifact, same policy
     as the IVF quantizer's bounded training collect). State lineage is
     cut per round with localCheckpoint."""
-    merges, _ = _bpe_train(docs, "text", n_merges)
+    merges, _ = _bpe_train(docs, n_merges)
     return docs.sparkSession.createDataFrame(
         merges,
         "merge_rank BIGINT, left_sym STRING, right_sym STRING, "
@@ -505,13 +505,11 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     )
 
 
-def _bpe_train(
-    docs: DataFrame, text_col: str, n_merges: int
-) -> tuple[list[tuple], DataFrame]:
-    """The BPE induction loop shared by trainer and encoder: returns the
-    learned merges AND the final vocabulary state -- (sym, f) rows, one
-    per distinct alpha word, sym the fully-merged double-delimited symbol
-    sequence, localCheckpoint'd (vocabulary-bounded).
+def _bpe_train(docs: DataFrame, n_merges: int) -> tuple[list[tuple], DataFrame]:
+    """The BPE induction loop over ``text`` shared by trainer and encoder:
+    returns the learned merges AND the final vocabulary state -- (sym, f)
+    rows, one per distinct alpha word, sym the fully-merged double-delimited
+    symbol sequence, localCheckpoint'd (vocabulary-bounded).
 
     The final state is exactly the encode replay's result over the same
     vocabulary: state_0 is the char split of every distinct word and each
@@ -520,7 +518,7 @@ def _bpe_train(
     encoder's second corpus explode + distinct (the vocab rebuild) and its
     n_merges replay projections (r14 optimization, guide §2.4: the vocab
     frame was computed twice -- once by the trainer, once by the encoder)."""
-    toks = _widened(docs).select(F.explode(words(text_col)).alias("word"))
+    toks = _widened(docs).select(F.explode(words()).alias("word"))
     toks = toks.where(F.col("word").rlike("^[a-z]+$"))
     freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("f"))
     state = freq.select(
@@ -586,7 +584,7 @@ def bpe_encode(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     inner delimiters). The per-word token counts broadcast back onto
     the (doc, word) stream, which then collapses map-side to one row
     per doc."""
-    per = _bpe_encode_counts(docs, "doc_id", "text", n_merges)
+    per = _bpe_encode_counts(docs, n_merges)
     return (
         _widened(docs)
         .select(F.col("doc_id"))
@@ -602,16 +600,15 @@ def bpe_encode(docs: DataFrame, n_merges: int = 3) -> DataFrame:
     )
 
 
-def _bpe_encode_counts(
-    docs: DataFrame, id_col: str, text_col: str, n_merges: int
-) -> DataFrame:
-    """Per-doc encode counts (id, n_words, n_chars, n_tokens) for docs with
-    at least one alpha word (docs without one have NO row here -- consumers
-    re-attach them: bpe_encode left-joins its id frame, tokenizer_fertility
-    left-joins its segment frame and coalesces, saving a corpus scan)."""
-    _, state = _bpe_train(docs, text_col, n_merges)
+def _bpe_encode_counts(docs: DataFrame, n_merges: int) -> DataFrame:
+    """Per-doc encode counts (doc_id, n_words, n_chars, n_tokens) for docs
+    with at least one alpha word (docs without one have NO row here --
+    consumers re-attach them: bpe_encode left-joins its id frame,
+    tokenizer_fertility left-joins its segment frame and coalesces, saving a
+    corpus scan)."""
+    _, state = _bpe_train(docs, n_merges)
     base = _widened(docs)
-    toks = base.select(F.col(id_col), F.explode(words(text_col)).alias("word"))
+    toks = base.select(F.col("doc_id"), F.explode(words()).alias("word"))
     alpha = toks.where(F.col("word").rlike("^[a-z]+$"))
     word_tokens = state.select(
         F.replace(F.col("sym"), F.lit("|"), F.lit("")).alias("word"),
@@ -621,7 +618,7 @@ def _bpe_encode_counts(
     )
     return (
         alpha.join(F.broadcast(word_tokens), "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum(F.length("word")).alias("n_chars"),
@@ -634,7 +631,7 @@ def bpe_encode_sql(n_merges: int = 3) -> str:
     """DuckDB twin of :func:`bpe_encode`: the trainer's unrolled CTE chain
     (shared with bpe_train_merges_sql) replayed over the distinct word
     vocabulary via scalar-subquery literal replaces."""
-    w = words_sql("text")
+    w = words_sql()
     train = bpe_train_merges_sql(n_merges=n_merges)
     parts = [
         f"WITH merges AS MATERIALIZED ({train})",
@@ -689,7 +686,7 @@ def bpe_train_merges_sql(n_merges: int = 3) -> str:
     """DuckDB twin of :func:`bpe_train_merges`: the full induction loop
     unrolled as CTE rounds, the argmax pair threaded through scalar
     subqueries into each round's literal replace."""
-    w = words_sql("text")
+    w = words_sql()
     parts = [
         f"""WITH words AS (
   SELECT unnest({w}) AS word FROM documents
@@ -755,7 +752,7 @@ def gopher_quality_flags(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> D
     HOFs + comparisons). Composes with curation_pipeline as a pushed-down
     predicate."""
     docs = _widened(docs)
-    w = words("text")
+    w = words()
     n_words = F.size(w).cast("bigint")
     sum_len = F.aggregate(w, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x))
     stop_arr = F.array(*[F.lit(s) for s in GOPHER_STOP_WORDS])
@@ -787,7 +784,7 @@ def gopher_quality_flags(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> D
 
 def gopher_quality_flags_sql() -> str:
     stop_list = ", ".join(f"'{s}'" for s in GOPHER_STOP_WORDS)
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH base AS (
   SELECT doc_id, {w} AS w FROM documents
@@ -848,7 +845,7 @@ def chunk_sliding_windows(
             "between consecutive windows would be silently dropped"
         )
     docs = _widened(docs)
-    w = words("text")
+    w = words()
     n = F.size(w)
     n_chunks = F.when(n <= width, F.lit(1)).otherwise(
         F.floor((n - F.lit(width) + F.lit(stride - 1)) / F.lit(stride)).cast("int")
@@ -886,7 +883,7 @@ def chunk_sliding_windows_sql(width: int = CHUNK_WORDS, stride: int = CHUNK_STRI
             "chunk stride must satisfy 0 < stride <= width, or tokens "
             "between consecutive windows would be silently dropped"
         )
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH w AS (
   SELECT doc_id, {w} AS ws FROM documents
@@ -1054,7 +1051,7 @@ def heaps_vocab_growth(
     row numbering -- the checkpoint grid replaces both."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col("doc_id").alias("id"), words("text").alias("ws"))
+    d = _widened(docs).select(F.col("doc_id").alias("id"), words().alias("ws"))
     # 1-row frame consumed by the broadcast under BOTH with_q consumers
     # (per_doc + firsts) -- broadcast builds re-evaluate the subtree per
     # consumer (r2 rule), so without the checkpoint the max(id) corpus
@@ -1108,7 +1105,7 @@ def heaps_vocab_growth_sql() -> str:
     (`//` = integer division; range() is the literal checkpoint grid)."""
     return f"""
 WITH d AS (
-  SELECT doc_id AS id, {words_sql('text')} AS ws FROM documents
+  SELECT doc_id AS id, {words_sql()} AS ws FROM documents
 ),
 mx AS (SELECT max(id) AS max_id FROM d),
 wq AS (
@@ -1177,7 +1174,7 @@ def rake_keywords(
     phrases -- with ranks assigned on the k-row result."""
     from pyspark.sql import Window
 
-    d = _widened(docs).select(F.col("doc_id").alias("id"), words("text").alias("ws"))
+    d = _widened(docs).select(F.col("doc_id").alias("id"), words().alias("ws"))
     toks = d.select("id", F.posexplode("ws").alias("pos", "w"))
     freq_all = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     # stopword cut as a distributed TakeOrdered (orderBy().limit --
@@ -1262,7 +1259,7 @@ def rake_keywords_sql() -> str:
     same integer scoring, string_agg ORDER BY phrase assembly."""
     return f"""
 WITH d AS (
-  SELECT doc_id AS id, {words_sql('text')} AS ws FROM documents
+  SELECT doc_id AS id, {words_sql()} AS ws FROM documents
 ),
 toks AS (
   SELECT id, generate_subscripts(ws, 1) AS pos, unnest(ws) AS w FROM d
@@ -1337,7 +1334,7 @@ def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     # coalesce-to-0 is row-identical and one corpus scan + one join
     # cheaper. The coalesce keeps an (unlikely) all-zero-alpha segment's
     # sums at 0 instead of NULL, exactly what the inner-join form produced.
-    per = _bpe_encode_counts(docs, "doc_id", "text", TOKENIZER_FERTILITY_N_MERGES)
+    per = _bpe_encode_counts(docs, TOKENIZER_FERTILITY_N_MERGES)
     seg = docs.select(F.col("doc_id"), *[F.col(c) for c in TOKENIZER_FERTILITY_GROUP_COLS])
     z = F.lit(0).cast("bigint")
     agg = (
@@ -1427,7 +1424,7 @@ def feature_hashing_profile(
     n_buckets (16) sits below this corpus's ~31-token vocabulary ON
     PURPOSE: the audit exists to SHOW collisions and sign cancellation;
     a production dimension would be 2^18+."""
-    toks = _widened(docs).select(F.explode(words("text")).alias("tok"))
+    toks = _widened(docs).select(F.explode(words()).alias("tok"))
     h = md5_long(F.col("tok"))
     keyed = toks.select(F.col("tok"), h.alias("h")).select(
         "tok",
@@ -1454,7 +1451,7 @@ def feature_hashing_profile_sql() -> str:
     h = md5_long_sql("tok")
     return f"""
 WITH toks AS (
-  SELECT unnest({words_sql('text')}) AS tok FROM documents
+  SELECT unnest({words_sql()}) AS tok FROM documents
 ),
 keyed AS (
   SELECT tok, {h} % {FEATURE_HASHING_PROFILE_N_BUCKETS} AS bucket,
@@ -1496,7 +1493,7 @@ def vocab_drift_halves(docs: DataFrame, k: int = VOCAB_DRIFT_HALVES_K) -> DataFr
     vocab-bounded counts -- no unpartitioned window, no full sort; the
     union (<= 2k rows) broadcasts back onto the counts frame."""
     toks = _widened(docs).select(
-        F.col("doc_id").alias("id"), F.explode(words("text")).alias("tok")
+        F.col("doc_id").alias("id"), F.explode(words()).alias("tok")
     )
     bounds = docs.agg(
         F.expr("(min(doc_id) + max(doc_id)) DIV 2").alias("mid")
@@ -1544,7 +1541,7 @@ def vocab_drift_halves(docs: DataFrame, k: int = VOCAB_DRIFT_HALVES_K) -> DataFr
 def vocab_drift_halves_sql() -> str:
     """DuckDB twin of :func:`vocab_drift_halves`: same midpoint split,
     conditional counts, ORDER BY/LIMIT top-k unions, and guarded ppm."""
-    w = words_sql("text")
+    w = words_sql()
     return f"""
 WITH toks AS (
   SELECT doc_id AS id, unnest({w}) AS tok FROM documents

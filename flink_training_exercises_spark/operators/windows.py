@@ -32,19 +32,18 @@ DEFAULT_THRESHOLD = 20
 
 def sliding_window_count(
     df: DataFrame,
-    time_col: str,
     keys: list[str],
     window: str = DEFAULT_WINDOW,
     slide: str = DEFAULT_SLIDE,
 ) -> DataFrame:
-    """W2/A8 -- epoch-aligned sliding-window count per key.
+    """W2/A8 -- epoch-aligned sliding-window count per key over ``ts``.
 
     Works identically on batch DataFrames and on streaming DataFrames that
     already carry a watermark (append mode reproduces Flink's
     fire-once-per-window semantics -- SURVEY.md §7).
     """
     return (
-        df.groupBy(F.window(time_col, window, slide).alias("w"), *keys)
+        df.groupBy(F.window("ts", window, slide).alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             epoch_ms(F.col("w.end")).alias("window_end_ms"),
@@ -76,7 +75,7 @@ def popular_places(
         F.col("is_start"),
         geo.grid_cell(loc_lon, loc_lat).alias("cell"),
     )
-    counted = sliding_window_count(cells, "ts", ["cell", "is_start"], window, slide)
+    counted = sliding_window_count(cells, ["cell", "is_start"], window, slide)
     return counted.where(F.col("cnt") >= threshold).select(
         geo.grid_cell_center_lon("cell").alias("center_lon"),
         geo.grid_cell_center_lat("cell").alias("center_lat"),

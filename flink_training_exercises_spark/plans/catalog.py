@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import functools
 import gc
+import os
+import time
 from dataclasses import dataclass
 from typing import Callable
 
@@ -92,6 +94,27 @@ def release_query_state(spark: SparkSession) -> None:
     result depends on this call; it only returns memory."""
     spark.catalog.clearCache()
     gc.collect()
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Untimed warm-up, so the first timed query is not billed the JVM,
+    codegen, parquet/shuffle and Python-worker/Arrow cold start."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).groupBy(
+        "l_returnflag"
+    ).count().collect()
+    spark.range(8).mapInPandas(lambda it: it, "id long").collect()
+
+
+def timed_run(spark: SparkSession, name: str, sf_dir: str) -> float:
+    """Wall seconds to build entry ``name`` and write it to the noop sink (a
+    bare ``count`` would let Catalyst prune computed columns); its state is
+    released afterwards, untimed."""
+    t0 = time.perf_counter()
+    CATALOG[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    release_query_state(spark)
+    return wall
 
 
 # Family registration modules -- imported for their @register side effects.

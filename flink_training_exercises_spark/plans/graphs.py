@@ -21,7 +21,7 @@ from ..operators.graph import (
     TEMPORAL_REACH_ROUNDS,
     TEMPORAL_REACH_SEED_MOD,
 )
-from .rides import register_events
+from .rides import load_events
 
 EDGES_SQL = """
 SELECT src, dst, SUM(w) AS weight FROM (
@@ -34,7 +34,7 @@ SELECT src, dst, SUM(w) AS weight FROM (
 
 
 def edges_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(EDGES_SQL.format(events=register_events(spark, sf_dir)))
+    return spark.sql(EDGES_SQL, events=load_events(spark, sf_dir))
 
 
 def pagerank_oracle() -> str:

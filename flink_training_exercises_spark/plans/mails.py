@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .rides import register_events
+from .rides import load_events
 
 # Sender pool: user_id % 19 == 0/1/2 are the three bot addresses the
 # reference filters; everyone else is 'User<u> <user<u>@host<u%7>.example>'.
@@ -54,9 +54,9 @@ _DUCK_TS_FMT = "strftime(ts, '%H:%M:%S')"
 
 
 def mails_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        _MAILS_SQL.format(events=register_events(spark, sf_dir), ts_fmt=_SPARK_TS_FMT)
-    )
+    # {events} stays a hole that spark.sql binds to the frame
+    text = _MAILS_SQL.format(events="{events}", ts_fmt=_SPARK_TS_FMT)
+    return spark.sql(text, events=load_events(spark, sf_dir))
 
 
 def mails_cte() -> str:

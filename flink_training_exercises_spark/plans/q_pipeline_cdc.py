@@ -78,7 +78,7 @@ def q_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sssp_event_graph",
-    oracle=graph.sssp_hops_sql(_KCORE_EDGES_SQL, source=0),
+    oracle=graph.sssp_hops_sql(_KCORE_EDGES_SQL),
     doc="Single-source shortest paths (BFS hop counts, Gelly's SSSP "
     "exercise / Pregel's canonical example) from node 0 on the "
     "md5-derived directed event graph: iterative frontier expansion with "
@@ -152,7 +152,7 @@ def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_merge_shards",
-    oracle=sketches.hll_merge_demo_oracle("events", "user_id", "event_id"),
+    oracle=sketches.hll_merge_demo_oracle(),
     doc="The sketch merge law gated as a single-row result: HLL registers "
     "built independently per shard (event_id % 4 -- stand-in for "
     "executors/days), merged by per-bucket register max, must estimate "
@@ -246,7 +246,7 @@ FROM events GROUP BY 1
 def q_streaming_incremental_rollup(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_rollup_merge_availablenow
 
-    return run_rollup_merge_availablenow(events, "streaming_incremental_rollup_gate")
+    return run_rollup_merge_availablenow(events)
 
 def _split_case_sql(id_expr: str) -> str:
     """80/10/10 deterministic split label for a doc-id expression."""
@@ -457,9 +457,7 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
 def q_streaming_enrich_static(events: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_enrich_static_availablenow
 
-    return run_enrich_static_availablenow(
-        events, sf_dir, "streaming_enrich_static_gate"
-    )
+    return run_enrich_static_availablenow(events, sf_dir)
 
 @register(
     "dedup_editdistance_blocked",

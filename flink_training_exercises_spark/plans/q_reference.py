@@ -80,8 +80,8 @@ _PP_SLIDE_MS = 3600 * 1000
 
 _PP_THRESHOLD = 10
 
-def _popular_places_oracle(size_ms: int, slide_ms: int, threshold: int) -> str:
-    k = size_ms // slide_ms
+def _popular_places_oracle() -> str:
+    k = _PP_SIZE_MS // _PP_SLIDE_MS
     return f"""
 WITH rides AS ({_RIDES}),
 nyc AS (
@@ -94,7 +94,7 @@ nyc AS (
 ),
 counted AS (
   SELECT cell, is_start,
-         ((epoch_ms(ts) // {slide_ms}) - t.k) * {slide_ms} + {size_ms} AS window_end_ms,
+         ((epoch_ms(ts) // {_PP_SLIDE_MS}) - t.k) * {_PP_SLIDE_MS} + {_PP_SIZE_MS} AS window_end_ms,
          count(*) AS cnt
   FROM nyc CROSS JOIN (SELECT range AS k FROM range({k})) t
   GROUP BY 1, 2, 3
@@ -102,12 +102,12 @@ counted AS (
 SELECT (74.05e0 - (cell % 250) * 1.4e-3 - 7e-4) * -1.0e0 AS center_lon,
        41.0e0 - (cell // 250) * 1.25e-3 - 6.25e-4 AS center_lat,
        window_end_ms, is_start, cnt
-FROM counted WHERE cnt >= {threshold}
+FROM counted WHERE cnt >= {_PP_THRESHOLD}
 """
 
 @register(
     "popular_places",
-    oracle=_popular_places_oracle(_PP_SIZE_MS, _PP_SLIDE_MS, _PP_THRESHOLD),
+    oracle=_popular_places_oracle(),
     doc="W2/A8/P2/P4/P5: NYC filter -> grid cell -> sliding window count -> "
     "threshold -> cell centers (PopularPlaces.java:71-97).",
     bench=True,
@@ -119,7 +119,7 @@ def q_popular_places(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_popular_places",
     oracle=f"""
-WITH res AS ({_popular_places_oracle(_PP_SIZE_MS, _PP_SLIDE_MS, _PP_THRESHOLD)}),
+WITH res AS ({_popular_places_oracle()}),
 rides AS ({_RIDES}),
 mx AS (SELECT max(epoch_ms(ts)) AS m FROM rides WHERE {_NYC_PRED})
 SELECT res.* FROM res, mx WHERE res.window_end_ms <= mx.m - {WATERMARK_MS}

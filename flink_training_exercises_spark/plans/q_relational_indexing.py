@@ -155,7 +155,7 @@ def q_inactive_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_bigram_counts",
     oracle=f"""
 WITH w AS (
-  SELECT doc_id, {words_sql("text")} AS ws
+  SELECT doc_id, {words_sql()} AS ws
   FROM documents
 ),
 grams AS (
@@ -173,7 +173,7 @@ def q_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.loaders import widen_scan
 
     docs = widen_scan(load_table(spark, "documents", sf_dir))
-    ws = words("text")
+    ws = words()
     # guard: F.sequence(1, 0) DESCENDS in Spark (DuckDB's generate_series is
     # empty) -- single-word docs must yield no bigrams, not an index error
     grams = F.when(

@@ -369,9 +369,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_snapshot_diff(documents: DataFrame, sf_dir: str) -> DataFrame:
     from ..streaming.queries import run_snapshot_diff_availablenow
 
-    return run_snapshot_diff_availablenow(
-        documents, sf_dir, "streaming_snapshot_diff_gate"
-    )
+    return run_snapshot_diff_availablenow(documents, sf_dir)
 
 _SALTED_JOIN_DIM = [(t, len(t)) for t in ("click", "error", "purchase", "signup", "view")]
 

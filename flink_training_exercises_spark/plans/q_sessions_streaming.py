@@ -103,9 +103,7 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.queries import streaming_exact_dedup
     from ..streaming.sources import events_stream
 
-    deduped = streaming_exact_dedup(
-        events_stream(spark, sf_dir), ["user_id", "event_type"]
-    ).select("user_id", "event_type")
+    deduped = streaming_exact_dedup(events_stream(spark, sf_dir)).select("user_id", "event_type")
     return drain_availablenow(deduped, "streaming_exact_dedup_gate")
 
 @register(

@@ -179,7 +179,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_distinct_users",
-    oracle=sketches.hll_distinct_oracle("events", "user_id", "event_type"),
+    oracle=sketches.hll_distinct_oracle(),
     doc="HyperLogLog (p=9, 512 registers) distinct users per event_type "
     "next to the exact count(DISTINCT) twin and rounded relative error. "
     "Registers are exact integers on both engines (md5 sub-hash, "
@@ -187,11 +187,11 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    return sketches.hll_distinct(ev, "user_id", "event_type")
+    return sketches.hll_distinct(ev)
 
 @register(
     "histogram_merge_shards",
-    oracle=sketches.histogram_merge_demo_oracle("events", "value", "event_id"),
+    oracle=sketches.histogram_merge_demo_oracle(),
     doc="The ADDITIVE sketch merge law gated as a single-row result "
     "(companion to hll_merge_shards' max-merge): equi-width histograms "
     "over fixed global edges built independently per shard (event_id % 4) "
@@ -204,7 +204,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    return sketches.histogram_merge_demo(ev, "value", "event_id")
+    return sketches.histogram_merge_demo(ev)
 
 _CMS_COUNTS_SQL = """
   SELECT token, count(*) AS cnt FROM (
@@ -217,7 +217,7 @@ _CMS_COUNTS_SQL = """
     "countmin_token_freq",
     oracle=(
         "WITH counts AS (" + _CMS_COUNTS_SQL + "), "
-        + sketches.countmin_freq_oracle("counts", "token", "cnt")
+        + sketches.countmin_freq_oracle()
     ),
     doc="Count-Min sketch (4x1024 integer cells) frequency estimates for "
     "the top-20 corpus tokens vs their exact counts; overcount >= 0 is the "
@@ -226,15 +226,15 @@ _CMS_COUNTS_SQL = """
 def q_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     counts = (
-        docs.select(F.explode(words("text")).alias("token"))
+        docs.select(F.explode(words()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return sketches.countmin_freq(counts, "token", "cnt")
+    return sketches.countmin_freq(counts)
 
 @register(
     "zorder_layout_documents",
-    oracle=sketches.zorder_layout_oracle("documents"),
+    oracle=sketches.zorder_layout_oracle(),
     doc="Morton z-address over (n_chars, md5(source)) with the 64-way "
     "z-range shard assignment -- the multi-column file-skipping layout; "
     "map-only 32-term integer interleave generated from one shared loop.",
@@ -277,15 +277,13 @@ def q_dpp_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = mkscratch(prefix="fte_dpp_")
     try:
         path = root + "/events_part"
-        bucketing.write_partitioned(ev, path, "event_type")
+        bucketing.write_partitioned(ev, path)
         dim = spark.createDataFrame(
             _DPP_DIM, "d_type string, type_weight int"
         ).where(F.length("d_type") <= 5)
         # the aggregate is one row per surviving event type: pin it so the
         # partitioned copy can go
-        return bucketing.dpp_join_agg(
-            spark, path, dim, "event_type", "d_type"
-        ).localCheckpoint()
+        return bucketing.dpp_join_agg(spark, path, dim).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -532,7 +530,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH q AS ({textstats.quality_score_sql()}),
 l AS ({textstats.lang_id_sql()}),
-f AS (SELECT doc_id, {dedup.normalized_prefix_key_sql("text")} AS dedup_key FROM documents),
+f AS (SELECT doc_id, {dedup.normalized_prefix_key_sql()} AS dedup_key FROM documents),
 passed AS (
   SELECT d.doc_id, d.source, f.dedup_key
   FROM documents d JOIN q USING (doc_id) JOIN l USING (doc_id) JOIN f USING (doc_id)
@@ -564,7 +562,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     q = textstats.quality_score(docs).select("doc_id", "quality_score")
     lang = textstats.lang_id(docs).select("doc_id", "pred_lang")
-    fp = docs.select("doc_id", dedup.normalized_prefix_key("text").alias("dedup_key"))
+    fp = docs.select("doc_id", dedup.normalized_prefix_key().alias("dedup_key"))
     # passed is consumed TWICE (the survivor aggregation and the flags
     # left join) -- without the cut the whole quality-battery + lang-id
     # + fingerprint join tree evaluates once per consumer (the
@@ -773,12 +771,7 @@ def q_k_truss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_cardinality_estimate",
-    oracle=sketches.join_cardinality_estimate_sql(
-        "SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt "
-        "FROM events WHERE event_type = 'view' GROUP BY 1",
-        "SELECT user_id AS k, CAST(count(*) AS BIGINT) AS cnt "
-        "FROM events WHERE event_type = 'click' GROUP BY 1",
-    ),
+    oracle=sketches.join_cardinality_estimate_sql(),
     doc="Join-size estimation via the Count-Min INNER PRODUCT (Cormode "
     "& Muthukrishnan's a.b estimator) -- the optimizer-statistics "
     "question answered from two 4 KiB sketches instead of the join: "

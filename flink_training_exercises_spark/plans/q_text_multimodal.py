@@ -71,11 +71,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pii_scrub_mails",
     oracle="WITH mails AS ({cte})\n".format(cte=mails_plan.mails_cte())
-    + pii.pii_scrub_sql(
-        "(SELECT message_id, sender || ' | ' || subject || ' | ' || body AS raw FROM mails)",
-        "message_id",
-        "raw",
-    ),
+    + pii.pii_scrub_sql(),
     doc="PII redaction over the mail fixture: emails then digit runs, with "
     "redacted-text fingerprints proving byte-identical scrubbing. Pure "
     "codegen'd regexp Column work -- no shuffle.",

@@ -82,25 +82,24 @@ def _duck_ms_to_ts(ms: str) -> str:
     return f"epoch_ms({ms})"
 
 
-def register_events(spark: SparkSession, sf_dir: str) -> str:
-    """Register the events parquet as a temp view; returns the view name
-    (scoped by sf_dir so interleaved runs at different scale factors on one
-    session can never read each other's view)."""
-    import hashlib
-
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events the derived views read, widened: a single-split local
+    parquet would run every view expression on one core."""
     from ..sources import load_table, widen_scan
 
-    name = f"__fte_events_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    # widen_scan: the single-split local parquet would otherwise run every
-    # derived-view expression (trig, regex, parsing) on one core; no-op on a
-    # cluster where the scan already has many splits
-    widen_scan(load_table(spark, "events", sf_dir)).createOrReplaceTempView(name)
-    return name
+    return widen_scan(load_table(spark, "events", sf_dir))
+
+
+def rides_of(events: DataFrame) -> DataFrame:
+    """The ride SQL over an events frame, batch or streaming; ``spark.sql``
+    binds the frame to a view it drops after analysis, and would quote a
+    string argument as a literal, so the other holes are filled first."""
+    return events.sparkSession.sql(_fill("{events}", _spark_ms_to_ts), events=events)
 
 
 def rides_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ride view as a DataFrame (runs the shared SQL through Catalyst)."""
-    return spark.sql(_fill(register_events(spark, sf_dir), _spark_ms_to_ts))
+    return rides_of(load_events(spark, sf_dir))
 
 
 def rides_cte() -> str:

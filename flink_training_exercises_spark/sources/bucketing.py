@@ -8,25 +8,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
-    """Persist with directory partitioning on ``partition_col`` -- the
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """Persist events with directory partitioning on ``event_type`` -- the
     layout that turns partition-key predicates (static or runtime) into
     skipped directories instead of scanned-and-filtered rows."""
-    df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+    df.write.partitionBy("event_type").mode("overwrite").parquet(path)
 
 
-def dpp_join_agg(
-    spark: SparkSession,
-    fact_path: str,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-) -> DataFrame:
+def dpp_join_agg(spark: SparkSession, fact_path: str, dim: DataFrame) -> DataFrame:
     """Join a directory-partitioned fact against a filtered dimension on
-    the partition column and aggregate per key -- the star-schema shape
-    Dynamic Partition Pruning exists for: Catalyst plans the dim's filter
-    as BOTH an inferred static PartitionFilter and a
-    ``dynamicpruningexpression`` (the broadcast's key set reused as a
+    the partition column (event_type = d_type) and aggregate per key --
+    the star-schema shape Dynamic Partition Pruning exists for: Catalyst
+    plans the dim's filter as BOTH an inferred static PartitionFilter and
+    a ``dynamicpruningexpression`` (the broadcast's key set reused as a
     runtime IN filter on the fact scan), so the fact side reads ONLY the
     surviving partition directories. At 100 TB this is the difference
     between scanning 5 TB and 100 TB for a 5%-selective dim filter --
@@ -36,8 +30,8 @@ def dpp_join_agg(
 
     fact = spark.read.parquet(fact_path)
     return (
-        fact.join(dim, fact[fact_key] == dim[dim_key])
-        .groupBy(fact_key)
+        fact.join(dim, fact["event_type"] == dim["d_type"])
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),

@@ -36,13 +36,15 @@ HISTOGRAM_BIN_CENTS = 1000  # fixed bin width of the windowed histogram and quan
 WINDOWED_QUANTILE_PCTS = (25, 50, 75, 90)
 
 
-def streaming_exact_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
-    """Streaming twin of operators/dedup.exact_dedup: first-seen-wins key
-    dedup with watermark-bounded state (`dropDuplicatesWithinWatermark` --
-    duplicates arriving within the watermark horizon are suppressed, state
-    for expired keys is evicted, so memory is bounded at any corpus size)."""
+def streaming_exact_dedup(events: DataFrame) -> DataFrame:
+    """Streaming twin of operators/dedup.exact_dedup: first-seen-wins
+    (user_id, event_type) dedup with watermark-bounded state
+    (`dropDuplicatesWithinWatermark` -- duplicates arriving within the
+    watermark horizon are suppressed, state for expired keys is evicted, so
+    memory is bounded at any corpus size)."""
+    keys = ["user_id", "event_type"]
     return events.withColumn(
-        "__ts_i", ntz_as_utc_instant("ts")
+        "__ts_i", ntz_as_utc_instant()
     ).withWatermark("__ts_i", WATERMARK).dropDuplicatesWithinWatermark(keys).drop("__ts_i")
 
 
@@ -71,7 +73,7 @@ def streaming_popular_places(
         .select(
             # watermarks require TIMESTAMP; convert NTZ via epoch math so the
             # instant (and window alignment) is session-TZ independent
-            ntz_as_utc_instant("ts").alias("ts"),
+            ntz_as_utc_instant().alias("ts"),
             F.col("is_start"),
             geo.grid_cell(loc_lon, loc_lat).alias("cell"),
         )
@@ -254,12 +256,12 @@ def streaming_interval_join(
     c = clicks.select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user"),
-        ntz_as_utc_instant("ts").alias("ts_c"),
+        ntz_as_utc_instant().alias("ts_c"),
     ).withWatermark("ts_c", WATERMARK)
     p = purchases.select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
-        ntz_as_utc_instant("ts").alias("ts_p"),
+        ntz_as_utc_instant().alias("ts_p"),
     ).withWatermark("ts_p", WATERMARK)
     joined = c.join(
         p,
@@ -281,9 +283,7 @@ def streaming_interval_join(
     )
 
 
-def run_enrich_static_availablenow(
-    events: DataFrame, sf_dir: str, query_name: str
-) -> DataFrame:
+def run_enrich_static_availablenow(events: DataFrame, sf_dir: str) -> DataFrame:
     """Stream-static dimension enrichment -- the canonical Structured
     Streaming join shape a real event pipeline runs on every record:
     the event stream inner-joined to a BROADCAST dimension graph
@@ -319,7 +319,7 @@ def run_enrich_static_availablenow(
         "segment",
         "nation",
     )
-    return drain_availablenow(joined, query_name)
+    return drain_availablenow(joined, "streaming_enrich_static_gate")
 
 
 def run_pit_enrichment_availablenow(
@@ -420,9 +420,7 @@ def run_cdc_merge_availablenow(
     return final.where(~F.col("is_delete")).drop("is_delete")
 
 
-def run_snapshot_diff_availablenow(
-    documents: DataFrame, sf_dir: str, query_name: str
-) -> DataFrame:
+def run_snapshot_diff_availablenow(documents: DataFrame, sf_dir: str) -> DataFrame:
     """Streaming snapshot diff (the incremental twin of the batch
     snapshot_diff_documents query): snapshot A is the standing corpus
     (batch-built, static); snapshot B ARRIVES as the ``documents`` stream.
@@ -473,7 +471,7 @@ def run_snapshot_diff_availablenow(
         "old_hash",
         "new_hash",
     )
-    drained = drain_availablenow(classified, query_name)
+    drained = drain_availablenow(classified, "streaming_snapshot_diff_gate")
     removed = snap_a.join(
         drained, snap_a["a_id"] == drained["doc_id"], "left_anti"
     ).select(
@@ -485,7 +483,7 @@ def run_snapshot_diff_availablenow(
     return drained.where(F.col("status") != "unchanged").unionByName(removed)
 
 
-def run_rollup_merge_availablenow(events: DataFrame, query_name: str) -> DataFrame:
+def run_rollup_merge_availablenow(events: DataFrame) -> DataFrame:
     """Streaming incremental ROLLUP -- materialized-view maintenance, the
     most common production streaming job: each micro-batch is reduced to
     per-user partial aggregates (count, integer-cents sum, max event ms --
@@ -531,7 +529,7 @@ def run_rollup_merge_availablenow(events: DataFrame, query_name: str) -> DataFra
             )
         )
 
-    return fold_availablenow(rows, fold, query_name)
+    return fold_availablenow(rows, fold, "streaming_incremental_rollup_gate")
 
 
 def _sketch_windows(
@@ -546,7 +544,7 @@ def _sketch_windows(
     emitted once, when the watermark passes the window end (the
     popular_places contract), and its state is evicted then.
     :func:`_window_ctes` is the oracles' twin of this frame."""
-    ev = events.select(ntz_as_utc_instant("ts").alias("ts"), *cols).withWatermark(
+    ev = events.select(ntz_as_utc_instant().alias("ts"), *cols).withWatermark(
         "ts", WATERMARK
     )
     if cells is not None:
@@ -813,7 +811,7 @@ def run_scd2_maintenance_availablenow(events: DataFrame, query_name: str) -> Dat
         "user_id",
         "event_id",
         epoch_ms("ts").alias("ms"),
-        epoch_us("ts").alias("us"),
+        epoch_us().alias("us"),
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
 
@@ -939,14 +937,14 @@ CMS_PANEL_MOD = 7
 CMS_STREAM_WIDTH = 64
 
 
-def _md5_panel(events: DataFrame, key_col: str) -> DataFrame:
-    """The deterministic md5 audit-key panel (md5(key) % CMS_PANEL_MOD
+def _md5_panel(events: DataFrame) -> DataFrame:
+    """The deterministic md5 audit-key panel (md5(user_id) % CMS_PANEL_MOD
     == 0) shared by the CMS and Bloom est-vs-truth batch stages -- ONE
     definition so the two audits cannot drift."""
     from ..functions.hashing import md5_long
 
     return (
-        events.select(F.col(key_col).cast("string").alias("k"))
+        events.select(F.col("user_id").cast("string").alias("k"))
         .distinct()
         .where(md5_long(F.col("k")) % CMS_PANEL_MOD == 0)
     )
@@ -976,12 +974,12 @@ def _window_end_expr(window_ms: int = SKETCH_WINDOW_MS):
     return em - em % window_ms + window_ms
 
 
-def _panel_window_events(events: DataFrame, key_col: str, panel: DataFrame) -> DataFrame:
-    """Exact-side (window_end_ms, k) rows of panel keys for the CMS and
-    Bloom est-vs-truth stages."""
+def _panel_window_events(events: DataFrame, panel: DataFrame) -> DataFrame:
+    """Exact-side (window_end_ms, k = user_id) rows of panel keys for the
+    CMS and Bloom est-vs-truth stages."""
     return events.select(
         _window_end_expr().alias("window_end_ms"),
-        F.col(key_col).cast("string").alias("k"),
+        F.col("user_id").cast("string").alias("k"),
     ).join(panel, "k")
 
 
@@ -1012,7 +1010,7 @@ def streaming_windowed_cms(events: DataFrame) -> DataFrame:
         [F.col("user_id").cast("string").alias("k")],
         ["r", "bucket"],
         [F.count(F.lit(1)).alias("cell_sum")],
-        cells=lambda ev: cms_cells(ev, "k", "ts", width=CMS_STREAM_WIDTH),
+        cells=lambda ev: cms_cells(ev, "ts", width=CMS_STREAM_WIDTH),
     )
 
 
@@ -1044,8 +1042,8 @@ def cms_window_estimates(
     # also breaks the self-join attribute ambiguity of rejoining the
     # memory-sink relation against its own projection)
     cells = cells.localCheckpoint()
-    panel = _md5_panel(events, "user_id")
-    probe_cells = cms_cells(panel, "k", "k", width=width)
+    panel = _md5_panel(events)
+    probe_cells = cms_cells(panel, "k", width=width)
     wins = cells.select("window_end_ms").distinct()
     est = (
         wins.crossJoin(probe_cells)
@@ -1054,7 +1052,7 @@ def cms_window_estimates(
         .agg(F.min(F.coalesce(F.col("cell_sum"), F.lit(0))).alias("est_cnt"))
     )
     exact = (
-        _panel_window_events(events, "user_id", panel)
+        _panel_window_events(events, panel)
         .groupBy("window_end_ms", "k")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
@@ -1082,7 +1080,7 @@ def windowed_cms_oracle() -> str:
     from ..operators.sketches import cms_cells_sql
 
     cells = cms_cells_sql(
-        "evw JOIN wins USING (window_end_ms)", "k", "window_end_ms", width=CMS_STREAM_WIDTH
+        "evw JOIN wins USING (window_end_ms)", "window_end_ms", width=CMS_STREAM_WIDTH
     )
     return f"""
 {_window_ctes(k="CAST(user_id AS VARCHAR)")},
@@ -1093,7 +1091,7 @@ cells AS (
 panel AS (
   {_panel_sql()}
 ),
-probe_cells AS ({cms_cells_sql("panel", "k", "k", width=CMS_STREAM_WIDTH)}),
+probe_cells AS ({cms_cells_sql("panel", "k", width=CMS_STREAM_WIDTH)}),
 est AS (
   SELECT w.window_end_ms, p.k,
          CAST(min(coalesce(c.cell_sum, 0)) AS BIGINT) AS est_cnt
@@ -1411,7 +1409,7 @@ def bloom_window_membership(words: DataFrame, events: DataFrame) -> DataFrame:
     # -- localCheckpoint once (multi-consumer rule; also breaks the
     # memory-sink self-join attribute ambiguity)
     words = words.localCheckpoint()
-    panel = _md5_panel(events, "user_id")
+    panel = _md5_panel(events)
     probe_cells = panel.select(
         "k", F.explode(F.array(*_cells(F.col("k"), BLOOM_STREAM_WORDS))).alias("c")
     ).select(
@@ -1435,7 +1433,7 @@ def bloom_window_membership(words: DataFrame, events: DataFrame) -> DataFrame:
         )
     )
     exact = (
-        _panel_window_events(events, "user_id", panel)
+        _panel_window_events(events, panel)
         .groupBy("window_end_ms", "k")
         .agg(F.lit(1).alias("present"))
     )

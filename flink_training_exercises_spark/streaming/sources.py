@@ -53,7 +53,9 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     dir. ``rides`` has no file of its own: it is the ride view over the
     events stream."""
     if table == "rides":
-        return rides_stream(table_stream(spark, sf_dir, "events"))
+        from ..plans.rides import rides_of
+
+        return rides_of(table_stream(spark, sf_dir, "events"))
     return (
         spark.readStream.schema(STREAM_SCHEMAS[table])
         .option("pathGlobFilter", f"{table}.parquet")
@@ -73,16 +75,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     session rows. tests/test_streaming.py::test_stream_batch_ts_parity pins
     stream == batch max(ts) so any unit drift fails fast.)"""
     return table_stream(spark, sf_dir, "events")
-
-
-def rides_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of plans.rides.rides_view: the same shared SQL
-    applied to an events stream (Catalyst treats a streaming relation
-    identically)."""
-    from ..plans.rides import _fill, _spark_ms_to_ts
-
-    events.createOrReplaceTempView("__fte_events_stream")
-    return events.sparkSession.sql(_fill("__fte_events_stream", _spark_ms_to_ts))
 
 
 def _stage_chunks(df: DataFrame, time_col: str, n_chunks: int) -> tuple[str, list[str]]:
@@ -161,13 +153,12 @@ def replay_to_files(
 
 def paced_feed(
     df: DataFrame,
-    time_col: str,
     out_dir: str,
     serving_speed_factor: float = 600.0,
     n_chunks: int = 10,
 ) -> "threading.Thread":
-    """S1's wall-clock half: replay chunks proportionally to EVENT time at
-    ``serving_speed_factor`` x (TaxiRideSource.java:217-220 -- the reference
+    """S1's wall-clock half: replay chunks proportionally to EVENT time
+    (``ts``) at ``serving_speed_factor`` x (TaxiRideSource.java:217-220 -- the reference
     default 600x plays 10 minutes of events per second). Runs in a daemon
     thread releasing chronological chunk files; a file-source stream on
     ``out_dir`` consumes them live. Returns the feeder thread (join() it or
@@ -184,7 +175,7 @@ def paced_feed(
     import time as _time
 
     spark = df.sparkSession
-    stage, parts = _stage_chunks(df, time_col, n_chunks)
+    stage, parts = _stage_chunks(df, "ts", n_chunks)
     if not parts:
         raise ValueError("nothing to replay")
     # per-chunk pacing instants: one tiny agg over the staged files (the
@@ -193,7 +184,7 @@ def paced_feed(
         r["__chunk"]: r["t0"]
         for r in spark.read.parquet(stage)
         .groupBy("__chunk")
-        .agg(F.min(time_col).alias("t0"))
+        .agg(F.min("ts").alias("t0"))
         .collect()
     }
     chunk_t0s = [mins[int(p.split("__chunk=")[-1].split(os.sep)[0])] for p in parts]

@@ -25,9 +25,7 @@ def test_asof_basic_and_edges(spark):
     ])
     out = {
         r["event_id"]: (r["matched_id"], r["match_gap_ms"])
-        for r in asof_join(
-            left, right, "user_id", "ts", "ts", "event_id", "event_id"
-        ).collect()
+        for r in asof_join(left, right).collect()
     }
     assert out[100] == (3, 5000)   # latest click, tie resolved to id 3
     assert out[101] == (1, 2000)

@@ -150,12 +150,12 @@ def test_dpp_partitioned_join_prunes_partitions(spark, sf_small, tmp_path):
 
     ev = load_table(spark, "events", sf_small)
     path = str(tmp_path / "events_part")
-    write_partitioned(ev, path, "event_type")
+    write_partitioned(ev, path)
     dim = spark.createDataFrame(
         [(t, len(t)) for t in ("click", "error", "purchase", "signup", "view")],
         "d_type string, type_weight int",
     ).where(F.length("d_type") <= 5)
-    agg = dpp_join_agg(spark, path, dim, "event_type", "d_type")
+    agg = dpp_join_agg(spark, path, dim)
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "dynamicpruningexpression" in plan
     got = {tuple(r) for r in agg.collect()}

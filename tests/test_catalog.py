@@ -14,6 +14,8 @@ from flink_training_exercises_spark.plans.catalog import (
     entry_query,
     oracle_sql,
     queries,
+    timed_run,
+    warm_up,
 )
 
 # Empty on both engines at sf0.001 (too few rows to pass their filters);
@@ -49,6 +51,12 @@ def test_oracle_is_valid_duckdb(catalog_runs, name):
 @pytest.mark.parametrize("name", sorted(CATALOG))
 def test_query_matches_oracle(catalog_runs, name):
     assert catalog_runs.problems(name) == []
+
+
+def test_harness_timing_loop(spark, sf_small):
+    """bench.py's and tools/profile_query.py's warm-up and timed run."""
+    warm_up(spark, sf_small)
+    assert timed_run(spark, "popular_places", sf_small) > 0
 
 
 def test_queries_follow_registration_order():

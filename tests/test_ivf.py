@@ -3,14 +3,7 @@ force."""
 
 from pyspark.sql import functions as F
 
-from flink_training_exercises_spark.operators.ivf import (
-    K_CENTROIDS,
-    KMEANS_ITERS,
-    TRAIN_N,
-    _assign,
-    _train_quantizer,
-    ivf_topk,
-)
+from flink_training_exercises_spark.operators.ivf import _assign, _train_quantizer, ivf_topk
 from flink_training_exercises_spark.operators.similarity import _with_int_vec
 from flink_training_exercises_spark.operators.similarity import topk_bruteforce
 from flink_training_exercises_spark.sources import load_table
@@ -19,8 +12,8 @@ from flink_training_exercises_spark.sources import load_table
 def _kmeans(emb):
     """The quantizer ivf_topk trains and the corpus assignment it probes:
     (assigned (id, v, nn, cid), centroid rows [(cid, c)])."""
-    base = _with_int_vec(emb, "vec_id", "embedding")
-    cents = _train_quantizer(base, K_CENTROIDS, KMEANS_ITERS, TRAIN_N)
+    base = _with_int_vec(emb)
+    cents = _train_quantizer(base)
     return _assign(base, cents), cents
 
 

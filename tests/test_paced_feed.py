@@ -13,7 +13,7 @@ def test_paced_feed_replays_proportionally(spark, tmp_path):
     df = spark.createDataFrame(rows, "id long, ts timestamp_ntz")
     d = str(tmp_path / "feed")
     t0 = time.monotonic()
-    feeder = paced_feed(df, "ts", d, serving_speed_factor=20.0, n_chunks=4)
+    feeder = paced_feed(df, d, serving_speed_factor=20.0, n_chunks=4)
     feeder.join(60)
     elapsed = time.monotonic() - t0
     # 30s event span / 20x = 1.5s minimum pacing (plus write overhead)

@@ -31,9 +31,7 @@ def docs(spark):
 def test_exact_dedup_normalized(spark, docs):
     out = {
         r["dedup_key"]: (r["survivor_id"], r["group_size"])
-        for r in dedup.exact_dedup(
-            docs, dedup.normalized_prefix_key("text", 9), "doc_id"
-        ).collect()
+        for r in dedup.exact_dedup(docs, dedup.normalized_prefix_key(9)).collect()
     }
     # doc 5 normalizes to doc 1's key -> min-id survivor 1, group of 2
     assert out["the quick brown fox jumps over the lazy dog"] == (1, 2)
@@ -73,8 +71,8 @@ def test_persisted_signatures_memoized_and_releasable(spark, docs):
     calls stack nothing and nothing needs releasing."""
     from pyspark.storagelevel import StorageLevel
 
-    a = dedup.persisted_signatures(docs, "doc_id", "text")
-    b = dedup.persisted_signatures(docs, "doc_id", "text")
+    a = dedup.persisted_signatures(docs)
+    b = dedup.persisted_signatures(docs)
     assert sorted(a.collect()) == sorted(b.collect())
     assert a.storageLevel == StorageLevel.NONE
     assert b.storageLevel == StorageLevel.NONE
@@ -2461,7 +2459,7 @@ def test_bloom_contamination_screen_contracts(spark, sf_small):
 
     g = docs.select(
         (F.col("doc_id") % BENCH_MOD == 0).alias("is_bench"),
-        F.explode(_gram_strings(words("text"), NGRAM_N)).alias("gs"),
+        F.explode(_gram_strings(words(), NGRAM_N)).alias("gs"),
     ).select("is_bench", md5_long("gs").alias("gh"))
     bench = {x["gh"] for x in g.where("is_bench").select("gh").distinct().collect()}
     corpus = {x["gh"] for x in g.where("NOT is_bench").select("gh").distinct().collect()}

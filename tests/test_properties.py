@@ -405,7 +405,7 @@ def test_histogram_merge_law_on_random_values(spark, rows):
     df = spark.createDataFrame(
         [(eid, c / 100.0) for eid, c in rows], "event_id long, value double"
     )
-    r = histogram_merge_demo(df, "value", "event_id", n_shards=3).first()
+    r = histogram_merge_demo(df, n_shards=3).first()
     assert r["hist_equal"] is True
     # the walk returns the lower edge of the bin holding the LOWER discrete
     # median element -- so it brackets that element within one bin width

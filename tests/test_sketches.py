@@ -43,7 +43,7 @@ def test_hll_matches_reference_estimator(spark):
     df = spark.createDataFrame(
         [(k, "g") for k in keys], "user_id long, event_type string"
     )
-    row = sketches.hll_distinct(df, "user_id", "event_type").collect()[0]
+    row = sketches.hll_distinct(df).collect()[0]
     expect_est, expect_empty = _hll_reference(keys)
     assert row["n_exact"] == 400
     assert row["hll_estimate"] == pytest.approx(round(expect_est, 4), abs=1e-9)
@@ -64,8 +64,8 @@ def test_hll_is_insensitive_to_duplication(spark):
         [(k, "g") for k in keys for _ in range(7)],
         "user_id long, event_type string",
     )
-    r1 = sketches.hll_distinct(once, "user_id", "event_type").collect()[0]
-    r7 = sketches.hll_distinct(many, "user_id", "event_type").collect()[0]
+    r1 = sketches.hll_distinct(once).collect()[0]
+    r7 = sketches.hll_distinct(many).collect()[0]
     assert r1["hll_estimate"] == r7["hll_estimate"]
     assert r1["n_empty_buckets"] == r7["n_empty_buckets"]
 
@@ -79,7 +79,7 @@ def test_countmin_overcount_is_one_sided_and_exact_when_sparse(spark):
     counts = spark.createDataFrame(
         [(f"tok{i}", 100 - i) for i in range(30)], "token string, cnt long"
     )
-    out = sketches.countmin_freq(counts, "token", "cnt", top_k=10).collect()
+    out = sketches.countmin_freq(counts, top_k=10).collect()
     assert len(out) == 10
     by_rank = sorted(out, key=lambda r: r["rank"])
     # top-10 by count desc = tok0..tok9
@@ -100,7 +100,7 @@ def test_countmin_estimate_equals_reference_min(spark):
     counts = spark.createDataFrame(counts_rows, "token string, cnt long")
     out = {
         r["token"]: r["est_cnt"]
-        for r in sketches.countmin_freq(counts, "token", "cnt", top_k=50).collect()
+        for r in sketches.countmin_freq(counts, top_k=50).collect()
     }
     # rebuild the sketch in python with the same params
     P = (1 << 31) - 1
@@ -233,7 +233,7 @@ def test_histogram_merge_law_and_median_walk(spark):
     # -> lower edge 46); exact interpolated median = 50.5 cents
     rows = [(i, i / 100.0) for i in range(1, 101)]
     df = spark.createDataFrame(rows, "event_id long, value double")
-    r = sketches.histogram_merge_demo(df, "value", "event_id").first()
+    r = sketches.histogram_merge_demo(df).first()
     assert r["hist_equal"] is True
     assert r["n_shards"] == 4 and r["n_bins"] == 20
     assert r["est_p50_cents"] == 46
@@ -243,8 +243,8 @@ def test_histogram_merge_law_and_median_walk(spark):
 def test_histogram_merge_invariant_to_shard_count(spark):
     rows = [(i, (i * 37 % 211) / 100.0) for i in range(500)]
     df = spark.createDataFrame(rows, "event_id long, value double")
-    a = sketches.histogram_merge_demo(df, "value", "event_id", n_shards=2).first()
-    b = sketches.histogram_merge_demo(df, "value", "event_id", n_shards=13).first()
+    a = sketches.histogram_merge_demo(df, n_shards=2).first()
+    b = sketches.histogram_merge_demo(df, n_shards=13).first()
     assert a["hist_equal"] and b["hist_equal"]
     assert a["est_p50_cents"] == b["est_p50_cents"]
     assert a["exact_p50_cents"] == b["exact_p50_cents"]

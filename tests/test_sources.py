@@ -111,3 +111,24 @@ def test_load_table_resolves_each_file_once_per_session(spark, sf_small, tmp_pat
     assert rows(got) == rows(want)
 
     assert jobs(spark.newSession(), "resolve_new_session")[1] == 1
+
+
+def test_derived_views_leave_no_temp_view(spark, sf_small):
+    """The ride, mail and edge views bind their events frame for one
+    analysis only: no view of theirs stays in the catalog, and rides built
+    at two sf dirs in one session each count their own dir's rides."""
+    from flink_training_exercises_spark.plans import graphs, mails, rides
+    from flink_training_exercises_spark.plans.differential import duck_con
+    from flink_training_exercises_spark.streaming.sources import events_stream
+
+    sf_dirs = (sf_small, os.path.join(os.path.dirname(sf_small), "sf0.01"))
+    frames = [rides.rides_view(spark, sf_dir) for sf_dir in sf_dirs]
+    assert rides.rides_of(events_stream(spark, sf_small)).isStreaming
+    mails.mails_view(spark, sf_small)
+    graphs.edges_view(spark, sf_small)
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith(("__fte_events", "_pyspark_"))]
+    counts = [frame.count() for frame in frames]
+    ride_sql = f"SELECT count(*) FROM ({rides.rides_cte()})"
+    assert counts == [duck_con(d).execute(ride_sql).fetchone()[0] for d in sf_dirs]
+    assert counts[0] < counts[1]

@@ -16,7 +16,7 @@ from flink_training_exercises_spark.operators.timeseries import rolling_zscore_a
 from flink_training_exercises_spark.operators.windows import popular_places
 from flink_training_exercises_spark.plans.catalog import CATALOG, release_query_state
 from flink_training_exercises_spark.plans.differential import compare
-from flink_training_exercises_spark.plans.rides import rides_view
+from flink_training_exercises_spark.plans.rides import rides_of, rides_view
 from flink_training_exercises_spark.scratch import scratch_root
 from flink_training_exercises_spark.sources import load_table
 from flink_training_exercises_spark.streaming.queries import (
@@ -28,7 +28,6 @@ from flink_training_exercises_spark.streaming.sources import (
     STREAM_SCHEMAS,
     events_stream,
     replay_to_files,
-    rides_stream,
 )
 from flink_training_exercises_spark.streaming.stateful import (
     streaming_travel_time,
@@ -155,7 +154,7 @@ def test_stream_batch_parity_popular_places(spark, sf_small):
     horizon is unflushed by design -- Flink would equally still be waiting)."""
     name = f"pp_{uuid.uuid4().hex[:8]}"
     stream = streaming_popular_places(
-        rides_stream(events_stream(spark, sf_small)), watermark="60 seconds",
+        rides_of(events_stream(spark, sf_small)), watermark="60 seconds",
         window="1 day", slide="6 hours", threshold=2,
     )
     got = drain_availablenow(stream, name)
@@ -179,7 +178,7 @@ def test_run_availablenow_is_exact_horizon_cut(spark, sf_small):
     name = f"ppgate_{uuid.uuid4().hex[:8]}"
     got = drain_availablenow(
         streaming_popular_places(
-            rides_stream(events_stream(spark, sf_small)),
+            rides_of(events_stream(spark, sf_small)),
             window="1 day", slide="6 hours", threshold=2,
         ),
         name,
@@ -207,7 +206,7 @@ def test_run_availablenow_is_exact_horizon_cut(spark, sf_small):
 
 def test_streaming_ride_cleansing_stateless_parity(spark, sf_small):
     name = f"rc_{uuid.uuid4().hex[:8]}"
-    got = drain_availablenow(streaming_ride_cleansing(rides_stream(events_stream(spark, sf_small))), name)
+    got = drain_availablenow(streaming_ride_cleansing(rides_of(events_stream(spark, sf_small))), name)
     batch_n = streaming_ride_cleansing(rides_view(spark, sf_small)).count()
     assert got.count() == batch_n > 0
 
@@ -304,7 +303,7 @@ def test_streaming_stateful_travel_time_matches_batch(spark, sf_small):
     """W5 streaming (applyInPandasWithState) == batch window form when the
     full history arrives chronologically."""
     name = f"tt_{uuid.uuid4().hex[:8]}"
-    got = drain_availablenow(streaming_travel_time(rides_stream(events_stream(spark, sf_small))), name)
+    got = drain_availablenow(streaming_travel_time(rides_of(events_stream(spark, sf_small))), name)
     s = {(r["ride_id"], r["predicted_minutes"]) for r in got.collect()}
     b = {
         (r["ride_id"], r["predicted_minutes"])
@@ -321,7 +320,7 @@ def test_streaming_exact_dedup(spark, sf_small):
 
     name = f"dd_{uuid.uuid4().hex[:8]}"
     got = drain_availablenow(
-        streaming_exact_dedup(events_stream(spark, sf_small), ["user_id", "event_type"]),
+        streaming_exact_dedup(events_stream(spark, sf_small)),
         name,
     )
     rows = got.collect()

@@ -1,6 +1,6 @@
 """The package carries no surface that nothing uses.
 
-Two rules, checked by a name-matched AST scan of the package and of every
+Three rules, checked by a name-matched AST scan of the package and of every
 caller of it (``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py``):
 
@@ -10,7 +10,12 @@ caller of it (``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` and
 * every defaulted parameter of a package function is set by some call of a
   function of that name, by keyword or by position -- otherwise its default
   is the only value in use and belongs in the body as a literal or module
-  constant.
+  constant;
+* no required parameter of a package function takes one value at every call
+  -- one literal, or one constant of the function's own module; that value
+  belongs in the body. A name defined twice in the package and a value
+  hidden by ``*args``/``**kwargs`` are skipped, so a collision can hide a
+  finding but never invent one.
 
 Run as a script (``python tests/test_surface.py``) to list what fails.
 """
@@ -18,6 +23,7 @@ Run as a script (``python tests/test_surface.py``) to list what fails.
 import ast
 import pathlib
 import sys
+from collections import Counter
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "flink_training_exercises_spark"
@@ -45,11 +51,10 @@ def _called_name(func):
 
 
 def _calls(trees):
-    """Function name -> (positional count or None for *args, keyword names
-    or None for **kwargs) for each call in ``trees``. A call through an
-    ``import ... as`` alias counts under the imported name, and
-    ``functools.partial(f, ...)`` as a call of ``f`` with the bound
-    arguments."""
+    """Function name -> (path, positional args, keywords) for each call in
+    ``trees``. A call through an ``import ... as`` alias counts under the
+    imported name, and ``functools.partial(f, ...)`` as a call of ``f`` with
+    the bound arguments."""
     aliases = {
         alias.asname: alias.name
         for tree in trees.values()
@@ -59,23 +64,15 @@ def _calls(trees):
         if alias.asname
     }
     calls = {}
-    for tree in trees.values():
+    for path, tree in trees.items():
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
             name, args = _called_name(node.func), node.args
             if name == "partial" and args:
                 name, args = _called_name(args[0]), args[1:]
-            if name is None:
-                continue
-            name = aliases.get(name, name)
-            n_pos = None if any(isinstance(a, ast.Starred) for a in args) else len(args)
-            kws = (
-                None
-                if any(k.arg is None for k in node.keywords)
-                else {k.arg for k in node.keywords}
-            )
-            calls.setdefault(name, []).append((n_pos, kws))
+            if name is not None:
+                calls.setdefault(aliases.get(name, name), []).append((path, args, node.keywords))
     return calls
 
 
@@ -97,32 +94,92 @@ def _functions(tree):
     return out
 
 
+def _parameters(pkg):
+    """(module, function, (position or None, name, has default)) for each
+    parameter a caller fills; a method's first one is its receiver."""
+    for path, tree in pkg.items():
+        for name, args, is_method in _functions(tree):
+            positional = args.posonlyargs + args.args
+            offset = 1 if is_method and positional else 0
+            n_required = len(positional) - len(args.defaults)
+            for i, a in enumerate(positional[offset:], offset):
+                yield path, name, (i - offset, a.arg, i >= n_required)
+            for a, d in zip(args.kwonlyargs, args.kw_defaults):
+                yield path, name, (None, a.arg, d is not None)
+
+
+def _argument(param, args, keywords):
+    """The expression a call passes for ``param``, ``...`` when the call
+    leaves it to its default, or None when ``*args``/``**kwargs`` hide it."""
+    i, name, _ = param
+    for k in keywords:
+        if k.arg == name:
+            return k.value
+    starred = [j for j, a in enumerate(args) if isinstance(a, ast.Starred)]
+    if i is not None and i < min(starred + [len(args)]):
+        return args[i]
+    hidden = (i is not None and starred) or any(k.arg is None for k in keywords)
+    return None if hidden else ...
+
+
 def unset_parameters(pkg=None, callers=None):
     """``module:function(param)`` for every defaulted package parameter that
     no call sets."""
     if pkg is None:
         pkg, callers = _trees()
     calls = _calls({**pkg, **callers})
-    unset = []
-    for path, tree in pkg.items():
-        for name, args, is_method in _functions(tree):
-            positional = args.posonlyargs + args.args
-            offset = 1 if is_method and positional else 0
-            defaulted = [
-                (i, a.arg)
-                for i, a in enumerate(positional)
-                if i >= len(positional) - len(args.defaults)
-            ] + [(None, a.arg) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d]
-            for i, arg in defaulted:
-                if not any(
-                    kws is None
-                    or arg in kws
-                    or (i is not None and (n_pos is None or i - offset < n_pos))
-                    for n_pos, kws in calls.get(name, [])
-                ):
-                    rel = path.relative_to(ROOT)
-                    unset.append(f"{rel}:{name}({arg})")
-    return unset
+    return [
+        f"{path.relative_to(ROOT)}:{name}({param[1]})"
+        for path, name, param in _parameters(pkg)
+        if param[2] and all(_argument(param, a, k) is ... for _, a, k in calls.get(name, []))
+    ]
+
+
+def _constants(pkg, callers):
+    """(path, name) -> (defining module, constant) for each name a file
+    reads as a package module constant: its own or a ``from`` import."""
+    defined = {
+        path: {n for n, node in _top_level_names(tree) if isinstance(node, (ast.Assign, ast.AnnAssign))}
+        for path, tree in pkg.items()
+    }
+    out = {(path, n): (path, n) for path, names in defined.items() for n in names}
+    dotted = {".".join(path.relative_to(ROOT).with_suffix("").parts) for path in pkg}
+    for path, tree in {**pkg, **callers}.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.level or node.module in dotted):
+                base = path.parents[node.level - 1] if node.level else ROOT
+                module = base.joinpath(*(node.module or "").split(".")).with_suffix(".py")
+                for alias in node.names:
+                    if alias.name in defined.get(module, ()):
+                        out[(path, alias.asname or alias.name)] = (module, alias.name)
+    return out
+
+
+def constant_parameters(pkg=None, callers=None):
+    """``module:function(param)`` for every required package parameter that
+    every call fills with one literal or one constant of the function's own
+    module."""
+    if pkg is None:
+        pkg, callers = _trees()
+    calls = _calls({**pkg, **callers})
+    constants = _constants(pkg, callers)
+    n_defs = Counter(name for tree in pkg.values() for name, _, _ in _functions(tree))
+
+    def value(path, caller, arg):
+        if isinstance(arg, ast.Constant):
+            return type(arg.value), repr(arg.value)
+        if isinstance(arg, ast.Name) and constants.get((caller, arg.id), (None,))[0] == path:
+            return constants[(caller, arg.id)]
+        return None
+
+    found = []
+    for path, name, param in _parameters(pkg):
+        if param[2] or n_defs[name] > 1 or name not in calls:
+            continue
+        values = {value(path, caller, _argument(param, a, k)) for caller, a, k in calls[name]}
+        if len(values) == 1 and None not in values:
+            found.append(f"{path.relative_to(ROOT)}:{name}({param[1]})")
+    return found
 
 
 def _top_level_names(tree):
@@ -178,15 +235,17 @@ def test_every_defaulted_parameter_is_set_by_a_caller():
     assert unset_parameters() == []
 
 
+def test_no_required_parameter_takes_one_value_at_every_call():
+    assert constant_parameters() == []
+
+
 if __name__ == "__main__":
     pkg, callers = _trees()
-    params = unset_parameters(pkg, callers)
-    defs = unreferenced_definitions(pkg, callers)
-    print("\n".join(params + defs))
-    fns = {p.rsplit("(", 1)[0] for p in params}
-    print(
-        f"{len(params)} unset parameters in {len(fns)} functions, "
-        f"{len(defs)} unreferenced definitions",
-        file=sys.stderr,
-    )
-    sys.exit(1 if params or defs else 0)
+    rules = {
+        "unset parameters": unset_parameters(pkg, callers),
+        "one-value parameters": constant_parameters(pkg, callers),
+        "unreferenced definitions": unreferenced_definitions(pkg, callers),
+    }
+    print("\n".join(sum(rules.values(), [])))
+    print(", ".join(f"{len(found)} {rule}" for rule, found in rules.items()), file=sys.stderr)
+    sys.exit(1 if any(rules.values()) else 0)

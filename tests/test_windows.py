@@ -13,7 +13,7 @@ def test_epoch_aligned_sliding_windows(spark):
     )
     got = sorted(
         r["window_end_ms"]
-        for r in sliding_window_count(df, "ts", ["key"]).collect()
+        for r in sliding_window_count(df, ["key"]).collect()
     )
     base = 1704067200000  # 2024-01-01 00:00:00 UTC
     assert got == [base + 10 * 60000, base + 15 * 60000, base + 20 * 60000]
@@ -27,7 +27,7 @@ def test_window_boundary_inclusivity(spark):
     )
     ends = sorted(
         r["window_end_ms"]
-        for r in sliding_window_count(df, "ts", ["key"]).collect()
+        for r in sliding_window_count(df, ["key"]).collect()
     )
     base = 1704067200000
     assert ends == [base + 15 * 60000, base + 20 * 60000, base + 25 * 60000]
@@ -40,7 +40,7 @@ def test_counts_per_key(spark):
     df = spark.createDataFrame(rows, "ts timestamp_ntz, key string")
     out = {
         (r["key"], r["window_end_ms"]): r["cnt"]
-        for r in sliding_window_count(df, "ts", ["key"]).collect()
+        for r in sliding_window_count(df, ["key"]).collect()
     }
     base = 1704067200000
     assert out[("a", base + 5 * 60000)] == 4

@@ -1,10 +1,11 @@
 """Per-query profiling harness for the optimization rounds.
 
-Times individual catalog queries through the same methodology as bench.py
-(noop sink, catalog.release_query_state between reps, which returns
-cached and checkpointed memory; no operator memoizes across reps) and can
-dump `.explain("formatted")` plans for the before/after evidence the
-optimization judge checks.
+Times individual catalog queries with the same warm-up and timed run as
+bench.py (catalog.warm_up, then catalog.timed_run per rep: noop sink,
+catalog.release_query_state between reps, which returns cached and
+checkpointed memory; no operator memoizes across reps) and can dump
+`.explain("formatted")` plans (explain_audit.plan_text) for before/after
+evidence.
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--reps N] [--plan OUTDIR] \
@@ -20,18 +21,18 @@ experiments; the session is fresh per invocation, not per conf).
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from explain_audit import plan_text  # noqa: E402  (this script's own dir)
 from flink_training_exercises_spark.plans.catalog import (  # noqa: E402
     CATALOG,
     release_query_state,
+    timed_run,
+    warm_up,
 )
 from flink_training_exercises_spark.session import get_spark  # noqa: E402
 
@@ -52,35 +53,17 @@ def main() -> None:
         os.makedirs(args.plan, exist_ok=True)
         for name in args.queries:
             df = CATALOG[name].spark(spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
             path = os.path.join(args.plan, f"{name}.txt")
             with open(path, "w") as f:
-                f.write(buf.getvalue())
+                f.write(plan_text(df))
             print(f"wrote {path}")
             df = None
             release_query_state(spark)
         return
 
-    # same untimed warmup as bench.py so rep 1 isn't billed the cold-start
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).groupBy(
-        "l_returnflag"
-    ).count().collect()
-    spark.range(8).mapInPandas(lambda it: it, "id long").collect()
-
+    warm_up(spark, args.sf)  # so rep 1 isn't billed the cold start
     for name in args.queries:
-        walls = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            df = CATALOG[name].spark(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            walls.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-            df = None
-            release_query_state(spark)
+        walls = [round(timed_run(spark, name, args.sf), 3) for _ in range(args.reps)]
         print(f"{name}: reps={walls} median={statistics.median(walls)}")
 
 
